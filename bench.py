@@ -183,13 +183,8 @@ HEADLINE = [
     # the knob-from-budget wedge audit that prices the join before running
     "cooccurrence_capped_triangles",
     "cooccurrence_budget_audit",
-    # r5: the benched family row is the df-cut production form — the
-    # full-volume tfidf_cosine_pairs stays the correctness baseline in
-    # the oracle suite, but its sf0.1 wall time has a documented 5.6-12 s
-    # tenancy band (flat synthetic df defeats the 0.2 cut), too wide for
-    # the 2x regression gate to mean anything. r6: the cut is now
-    # BUDGET-DERIVED (ceiling from the df histogram under Σdf² ≤ 500k —
-    # SCALE.md wave-4), slightly harsher than the old 0.05 frac at sf0.1.
+    # TF-IDF pairs with a BUDGET-DERIVED df ceiling (from the df histogram
+    # under Σdf² ≤ 500k — SCALE.md wave-4)
     "tfidf_cosine_pairs_cut",
     "stream_unattributed_clicks",
     "part_link_prediction_aa",
@@ -217,19 +212,11 @@ HEADLINE = [
     "coverage_exemplar_docs",
     "coverage_exemplar_stochastic",  # r5: the n·ln(1/eps) production form
     "trend_mann_kendall",
-    # dbscan_embedding_clusters is registry-tested but not benched: like
-    # knn_pagerank, its wall time is hash-min component rounds (each a
-    # tiny join + localCheckpoint + convergence count), i.e. scheduler
-    # overhead at fixture scale, not scan volume; the oracle row keeps
-    # the full construction correctness-checked every round
-    # knn_pagerank is registry-tested but not benched: power iteration is
-    # ~2 tiny jobs per round, so fixture-scale wall time is scheduler
-    # overhead (~17 s), not data volume — not a steady-state query number.
-    # copurchase_ktruss likewise: the iterative peel is 4-6 full triangle
-    # passes whose fixture-scale time is round-trip scheduling, not scan
-    # volume; its per-round shuffle budget is pinned structurally
-    # (tests/test_knn_graph.py) and the oracle row keeps it correctness-
-    # checked every round
+    # copurchase_ktruss is registry-tested but not benched: the iterative
+    # peel is 4-6 full triangle passes whose fixture-scale time is
+    # round-trip scheduling, not scan volume; its per-round shuffle budget
+    # is pinned structurally (tests/test_knn_graph.py) and the oracle row
+    # keeps it correctness-checked every round
 ]
 
 # entries with a PERF.md-documented wide band get a third sample — their
@@ -364,8 +351,8 @@ def main() -> None:
     # window/projection-heavy rows under-measure in ABSOLUTE terms — the
     # scale-curve scripts, whose purpose is detecting super-linear WORK,
     # use the full-evaluation agg(count, sum(hash(*cols))) consumer
-    # instead (scripts/scale_wave12.run, protocol note in SCALE.md
-    # wave-14). Changing bench's consumer would invalidate every
+    # instead (``run`` in scripts/scale_wave12.py, deleted after commit
+    # 53d3f02 — see git history; protocol note in SCALE.md wave-14). Changing bench's consumer would invalidate every
     # cross-round band in PERF.md; don't, unless the baseline is re-run.
     run_list = args.names if selective else HEADLINE
     timings: dict[str, float] = {}

@@ -49,11 +49,11 @@ ID_STRIDE = 10_000_000
 # time, restricted to ones whose input actually scales here)
 QUERIES = [
     "coverage_exemplar_docs",     # documents: k full greedy passes
-    "tfidf_cosine_pairs",         # documents: Σ df² posting join
+    "tfidf_cosine_pairs_cut",     # documents: Σ df² posting join
     "near_dup_jaccard",           # documents: MinHash+LSH
     "dedup_retain_best",          # documents: LSH + connected components
     "heavy_hitter_tokens",        # documents: Misra-Gries two-pass
-    "embedding_near_dup",         # embeddings: hyperplane-LSH blocking
+    "embedding_decontaminate_blocked",  # embeddings: hyperplane-LSH blocking
     "knn_exact_batch",            # embeddings: fixed queries x 10x corpus
     "stream_unattributed_clicks", # events: stream-stream outer join
 ]

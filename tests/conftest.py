@@ -15,7 +15,7 @@ SF_CORRECTNESS = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.0
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", cpus=8)
+    spark = get_spark("tests")
     yield spark
     from vector_db_spark.caching import release_caches
 

@@ -1,11 +1,11 @@
 """Unit + plan-shape tests for the corpus-curation and hybrid-retrieval
-operators (operators/curation.py, operators/hybrid.py, radius_search).
+operators (operators/curation.py, operators/hybrid.py).
 
 Value-level correctness against DuckDB is covered by the registered oracle
 queries (tests/test_queries_oracle.py); here we pin (a) the hand-checkable
 semantics on tiny literal fixtures and (b) the physical-plan properties the
 100 TB posture claims (map-only repetition stats, broadcast decontamination
-probe, no corpus shuffle in radius search).
+probe).
 """
 
 from __future__ import annotations
@@ -20,12 +20,10 @@ from vector_db_spark.operators.curation import (
     bigram_doc_scores,
     boilerplate_stats,
     decontaminate_ngrams,
-    mixture_resample,
     pii_scrub,
     repetition_stats,
 )
 from vector_db_spark.operators.hybrid import bm25_topk, idf_weights, rrf_fuse
-from vector_db_spark.operators.similarity import radius_search
 
 
 @pytest.fixture(scope="module")
@@ -160,19 +158,6 @@ def test_pii_scrub_counts_and_redacts(spark, docs):
     assert got[5]["redacted_fp"] != raw5
 
 
-def test_mixture_resample_rates_and_determinism(spark):
-    rows = [(i, "web" if i % 2 == 0 else "books") for i in range(2000)]
-    docs = spark.createDataFrame(rows, "doc_id long, source string")
-    kept = mixture_resample(docs, {"web": 0.25})
-    counts = {r["source"]: r["cnt"] for r in kept.groupBy("source").agg(F.count("*").alias("cnt")).collect()}
-    assert counts["books"] == 1000  # weight 1.0 keeps everything
-    assert 150 <= counts["web"] <= 350  # ~25% of 1000, hash-binomial spread
-    # deterministic: identical keep-set on re-evaluation and under repartition
-    ids1 = {r["doc_id"] for r in kept.collect()}
-    ids2 = {r["doc_id"] for r in mixture_resample(docs.repartition(7), {"web": 0.25}).collect()}
-    assert ids1 == ids2
-
-
 def test_bm25_math_matches_reference_formula(spark):
     docs = spark.createDataFrame(
         [
@@ -199,27 +184,6 @@ def test_rrf_fusion_handles_disjoint_lists(spark):
     assert got[2]["fused_rank"] == 1  # in both lists → highest fused score
     assert got[1]["vec_rank"] == 0 and got[3]["kw_rank"] == 0  # absent → 0
     assert math.isclose(got[2]["rrf_score"], round(1 / 62 + 1 / 61, 6), abs_tol=1e-6)
-
-
-def test_radius_search_no_corpus_shuffle(spark, sf_smoke):
-    """Range query is map-only: broadcast queries onto the corpus scan, no
-    Exchange of the corpus at any radius (a k-NN needs one; ε-search not)."""
-    from vector_db_spark.io import load_table
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    q = emb.limit(3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    df = radius_search(q, emb, 1.5)
-    plan = plan_of(df)
-    assert "BroadcastNestedLoopJoin" in plan
-    # the only exchange allowed is the broadcast of the 3-row query side
-    assert "Exchange hashpartitioning" not in plan
-    # self-match: every query finds itself at distance 0
-    selfhits = df.filter(
-        (F.col("query_id") == F.col("neighbor_id")) & (F.col("dist") == 0.0)
-    ).count()
-    assert selfhits == 3
 
 
 def test_bigram_lm_hand_checked(spark):
@@ -562,7 +526,6 @@ def test_stochastic_greedy_materialized_matches_cached(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PartitionFilters: [" in plan and "__b" in plan.split("PartitionFilters")[1][:80]
-
 
 
 def test_stochastic_sample_size_rejects_eps_underflow():

@@ -176,8 +176,15 @@ def _ref_pagerank(edges, nodes, damping=0.85, n_iter=15):
     return rank
 
 
+def _global_pagerank(edges, nodes, **kw):
+    """Global PageRank as personalized PageRank whose restart set is every
+    node: uniform teleport and uniform dangling redistribution."""
+    from vector_db_spark.operators.knn_graph import personalized_pagerank
+
+    return personalized_pagerank(edges, nodes.select("id"), nodes=nodes, **kw)
+
+
 def test_pagerank_matches_reference(spark):
-    from vector_db_spark.operators.knn_graph import pagerank_from_edges
 
     # a graph with a hub, a chain, and a dangling node (4 has no out-edges)
     edges = [(0, 1), (1, 2), (2, 0), (3, 0), (0, 4), (2, 4)]
@@ -186,7 +193,7 @@ def test_pagerank_matches_reference(spark):
     nd = spark.createDataFrame([(v,) for v in nodes], "id long")
     got = {
         r["id"]: r["rank"]
-        for r in pagerank_from_edges(df, nodes=nd, n_iter=15).collect()
+        for r in _global_pagerank(df, nd, n_iter=15).collect()
     }
     want = _ref_pagerank(edges, nodes, n_iter=15)
     assert set(got) == set(want)
@@ -198,8 +205,6 @@ def test_pagerank_matches_reference(spark):
 def test_pagerank_random_graph_and_partition_invariance(spark):
     import random
 
-    from vector_db_spark.operators.knn_graph import pagerank_from_edges
-
     rng = random.Random(3)
     nodes = list(range(40))
     edges = list({(rng.randrange(40), rng.randrange(40)) for _ in range(160)})
@@ -208,9 +213,7 @@ def test_pagerank_random_graph_and_partition_invariance(spark):
     nd = spark.createDataFrame([(v,) for v in nodes], "id long")
     got = {
         r["id"]: r["rank"]
-        for r in pagerank_from_edges(
-            df.repartition(9), nodes=nd, n_iter=12
-        ).collect()
+        for r in _global_pagerank(df.repartition(9), nd, n_iter=12).collect()
     }
     want = _ref_pagerank(edges, nodes, n_iter=12)
     for v in nodes:
@@ -755,10 +758,7 @@ def test_personalized_pagerank_matches_numpy_reference(spark):
 
 
 def test_personalized_pagerank_concentrates_near_sources(spark):
-    from vector_db_spark.operators.knn_graph import (
-        pagerank_from_edges,
-        personalized_pagerank,
-    )
+    from vector_db_spark.operators.knn_graph import personalized_pagerank
 
     # two loosely-connected cliques; personalize on clique A
     a = [(i, j) for i in range(5) for j in range(5) if i != j]
@@ -767,7 +767,8 @@ def test_personalized_pagerank_concentrates_near_sources(spark):
     edges = spark.createDataFrame(a + b + bridge, "src long, dst long")
     sources = spark.createDataFrame([(0,), (1,)], "s long")
     ppr = {r.id: r.rank for r in personalized_pagerank(edges, sources, n_iter=20).collect()}
-    gpr = {r.id: r.rank for r in pagerank_from_edges(edges, n_iter=20).collect()}
+    nodes = spark.createDataFrame([(v,) for v in range(5)] + [(v,) for v in range(10, 15)], "id long")
+    gpr = {r.id: r.rank for r in _global_pagerank(edges, nodes, n_iter=20).collect()}
     mass_a_ppr = sum(v for k, v in ppr.items() if k < 10)
     mass_a_gpr = sum(v for k, v in gpr.items() if k < 10)
     assert mass_a_ppr > 0.85 and mass_a_ppr > mass_a_gpr + 0.3  # concentrated vs ~0.5 global

@@ -7,7 +7,6 @@ tie-breaks and decimal-exact aggregation exist to prevent)."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -45,23 +44,6 @@ def test_knn_batch_kernel_partition_invariant(spark, emb):
     assert _rows(a) == _rows(b)
 
 
-def test_repeated_spans_partition_invariant(spark, docs):
-    from vector_db_spark.operators.dedup import repeated_ngram_spans
-
-    a = repeated_ngram_spans(docs.repartition(1), n=8)
-    b = repeated_ngram_spans(docs.repartition(13), n=8)
-    assert _rows(a) == _rows(b)
-
-
-def test_semdedup_partition_invariant(spark, emb):
-    from vector_db_spark.operators.dedup import semantic_dedup
-
-    assigned = emb.select("vec_id", "embedding", F.col("label").alias("cluster_id"))
-    a = semantic_dedup(assigned.repartition(1), threshold=0.9)
-    b = semantic_dedup(assigned.repartition(13), threshold=0.9)
-    assert _rows(a) == _rows(b)
-
-
 def test_mmr_partition_invariant(spark, emb):
     from vector_db_spark.operators.knn import knn_join
     from vector_db_spark.operators.rerank import mmr_rerank
@@ -90,23 +72,6 @@ def test_minhash_partition_invariant(spark, docs):
     assert sorted((r.doc_id, tuple(r.sig)) for r in a.collect()) == sorted(
         (r.doc_id, tuple(r.sig)) for r in b.collect()
     )
-
-
-def test_dbscan_partition_invariant(spark, emb):
-    """Density labels are a pure function of the data: pair generation
-    (rounded distances), degree cut, min-id components, and border
-    tie-breaks must all be layout-independent — the iterative component
-    joins are the riskiest surface, so pin end to end."""
-    from vector_db_spark.operators.density import (
-        dbscan_from_pairs,
-        epsilon_pairs_brute,
-    )
-
-    sub = emb.filter(F.col("vec_id") < 150).select("vec_id", "embedding")
-    def run(df):
-        return dbscan_from_pairs(df, epsilon_pairs_brute(df, 1.16), 4)
-
-    assert _rows(run(sub.repartition(1))) == _rows(run(sub.repartition(13)))
 
 
 def test_centroid_stats_partition_invariant(spark, emb):

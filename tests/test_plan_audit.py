@@ -50,7 +50,7 @@ def test_audit_flags_unpartitioned_window_but_not_grouped(spark, sf_smoke):
 
 def test_registered_scale_paths_have_no_errors(spark, sf_smoke):
     """The headline scale-path queries audit clean: batch knn (Arrow, not
-    row-Python) and radius search (deliberate bounded nested-loop)."""
+    row-Python) and SQL knn (deliberate bounded nested-loop)."""
     from vector_db_spark.queries import all_queries
 
     Q = all_queries()
@@ -58,15 +58,10 @@ def test_registered_scale_paths_have_no_errors(spark, sf_smoke):
         "knn_exact_batch",
         "doc_repetition",
         "near_dup_jaccard",
-        # round-3 additions: repeated spans / SemDeDup are corpus-scale
-        # cleaning passes — no cartesian, no row-Python allowed
-        "repeated_spans",
-        "semdedup_prune",
         "chunk_manifest",
     ):
         assert_scales(Q[name](spark, sf_smoke))
-    radius = Q["radius_search"](spark, sf_smoke)
-    fs = audit_plan(radius)
+    fs = audit_plan(Q["knn_exact_sql"](spark, sf_smoke))
     assert not [f for f in fs if f.severity == "error"]
     assert "nested-loop-join" in codes(fs)  # present, but warn-grade
 
@@ -118,13 +113,6 @@ def test_adaptive_filtered_knn_picks_the_right_regime(spark, sf_smoke, tmp_path)
 
 # --- registry-wide sweep -------------------------------------------------------
 
-# deliberate exceptions, each argued at the definition site:
-#   embedding_near_dup_brute — the O(n²) recall oracle, never a pipeline path
-_AUDIT_ALLOW = {
-    "embedding_near_dup_brute": ("cartesian-product", "nested-loop-join"),
-}
-
-
 @pytest.fixture(scope="module")
 def registry_findings(spark, sf_smoke):
     """ONE build+audit pass over the full registry, shared by the error-
@@ -134,8 +122,7 @@ def registry_findings(spark, sf_smoke):
     from vector_db_spark.queries import all_queries
 
     return {
-        name: audit_plan(fn(spark, sf_smoke), allow=_AUDIT_ALLOW.get(name, ()))
-        for name, fn in all_queries().items()
+        name: audit_plan(fn(spark, sf_smoke)) for name, fn in all_queries().items()
     }
 
 
@@ -151,7 +138,7 @@ def test_no_scale_errors_in_any_registered_query(registry_findings):
     assert not bad, bad
 
 
-# Warn-grade snapshot of the whole 200-query registry (sweep at sf0.001):
+# Warn-grade snapshot of the whole registry (sweep at sf0.001):
 # every entry is a deliberate bounded shape — "nested-loop-join" is a
 # broadcast of an O(1)/O(k) query/centroid/sketch side, "single-partition-
 # exchange" is a final scalar/top-N collapse after partial aggregation,
@@ -161,7 +148,6 @@ def test_no_scale_errors_in_any_registered_query(registry_findings):
 # query) that introduces one of these shapes fails the subset check below
 # until it is consciously allow-listed.
 _WARN_ALLOW: dict[str, set[str]] = {
-    "approx_stats": {"single-partition-exchange"},
     "bigram_lm_score": {"nested-loop-join", "single-partition-exchange"},
     "bpe_tokenize_audit": {"single-partition-exchange"},
     "bq_hamming_search": {"nested-loop-join"},
@@ -179,7 +165,6 @@ _WARN_ALLOW: dict[str, set[str]] = {
     # then the per-series windows collapse through a scalar-span exchange
     "cusum_level_shifts": {"nested-loop-join", "single-partition-exchange"},
     # broadcast of the O(k) deterministic-centroid side (argmin routing)
-    "dbscan_embedding_clusters": {"nested-loop-join"},
     "ivf_incremental_update": {"nested-loop-join"},
     # crossJoin of two ONE-ROW aggregates + scalar finish
     "rendezvous_shard_stability": {"nested-loop-join", "single-partition-exchange"},
@@ -190,11 +175,9 @@ _WARN_ALLOW: dict[str, set[str]] = {
     # budget-priced as the sum) and cross-scores the corpus map-side
     "embedding_decontaminate_multi": {"nested-loop-join"},
     "embedding_isotropy": {"nested-loop-join", "single-partition-exchange"},
-    "embedding_near_dup_brute": {"nested-loop-join"},
     "event_key_skew": {"nested-loop-join", "single-partition-exchange"},
     "frequent_event_paths": {"unpartitioned-window"},
     "fuzzy_typo_pairs": {"nested-loop-join"},
-    "hard_negative_mining": {"nested-loop-join"},
     "hybrid_search": {
         "nested-loop-join", "single-partition-exchange", "unpartitioned-window"
     },
@@ -202,12 +185,9 @@ _WARN_ALLOW: dict[str, set[str]] = {
         "single-partition-exchange", "unpartitioned-window"
     },
     "inverted_bm25_search": {"unpartitioned-window"},
-    "ivf_assign_det": {"nested-loop-join"},
-    "ivf_lloyd_step_det": {"nested-loop-join"},
     "ivf_search_cosine_det": {"nested-loop-join"},
     "ivf_search_det": {"nested-loop-join"},
     "ivf_search_kmeans": {"nested-loop-join"},
-    "ivf_stats_kmeans": {"single-partition-exchange"},
     "ivfpq_search_kmeans": {"nested-loop-join", "single-partition-exchange"},
     "jl_projection_audit": {"single-partition-exchange"},
     "join_size_preflight": {"nested-loop-join", "single-partition-exchange"},
@@ -215,8 +195,6 @@ _WARN_ALLOW: dict[str, set[str]] = {
     "kmv_orderkey_overlap": {"nested-loop-join", "single-partition-exchange"},
     "knn_exact_sql": {"nested-loop-join"},
     "knn_graph_export": {"nested-loop-join"},
-    "knn_pagerank": {"single-partition-exchange"},
-    "knn_personalized_pagerank": {"single-partition-exchange"},
     "late_interaction_search": {"nested-loop-join"},
     "opq_adc_recall": {"nested-loop-join", "single-partition-exchange"},
     # the two co-occurrence triangle counters end in a 3-way crossJoin of
@@ -233,16 +211,11 @@ _WARN_ALLOW: dict[str, set[str]] = {
     # corpus vocabulary
     "percolate_scaled_subscriptions": {"unpartitioned-window"},
     "pq_adc_kmeans": {"nested-loop-join", "single-partition-exchange"},
-    "qty_price_corr": {"single-partition-exchange"},
     "quality_dup_auc": {"single-partition-exchange", "unpartitioned-window"},
-    "radius_search": {"nested-loop-join"},
     "recall_bytes_frontier": {"nested-loop-join", "single-partition-exchange"},
     "semantic_search_docs": {"nested-loop-join"},
-    "sq8_search": {"nested-loop-join"},
     "table_expectations": {"single-partition-exchange"},
     "token_collocations_pmi": {"unpartitioned-window"},
-    "training_data_manifest": {"single-partition-exchange"},
-    "unigram_lm_score": {"nested-loop-join", "single-partition-exchange"},
     # exact-percentile scalar finish; shape appears only under some input
     # partitionings (AQE), so the subset check needs it listed
     "winsorized_value_stats": {"single-partition-exchange"},
@@ -255,6 +228,7 @@ def test_registry_warn_shapes_are_allow_listed(registry_findings):
     warn-free). Catches plan-shape regressions — a pushdown that stopped
     working, a window that lost its PARTITION BY — on queries that audit
     clean today, without failing when a warn legitimately disappears."""
+    assert sorted(set(_WARN_ALLOW) - set(registry_findings)) == []
     bad = {}
     for name, fs in registry_findings.items():
         warns = {f.code for f in fs if f.severity == "warn"}

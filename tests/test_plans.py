@@ -25,11 +25,11 @@ def optimized_of(df) -> str:
 
 
 def test_filter_pushdown_to_parquet_scan(spark, sf_smoke):
-    """doc_filter_eq's predicates appear as PushedFilters on the scan."""
-    df = QUERIES["doc_filter_eq"](spark, sf_smoke)
+    """point_lookup's id predicate appears as a PushedFilter on the scan."""
+    df = QUERIES["point_lookup"](spark, sf_smoke)
     plan = plan_of(df)
     assert "PushedFilters:" in plan
-    assert "EqualTo(source,src3)" in plan and "EqualTo(lang,en)" in plan
+    assert "EqualTo(doc_id,42)" in plan
 
 
 def test_column_pruning_projection_only_reads_needed(spark, sf_smoke):
@@ -74,7 +74,7 @@ def test_aggregation_has_partial_phase(spark, sf_smoke):
 def test_global_topk_is_take_ordered(spark, sf_smoke):
     """ORDER BY + LIMIT plans as TakeOrderedAndProject (per-partition
     partial top-k, the argpartition trick built into the operator)."""
-    plan = plan_of(QUERIES["top_events_global"](spark, sf_smoke))
+    plan = plan_of(QUERIES["top_revenue_orders"](spark, sf_smoke))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -136,17 +136,6 @@ def test_lsh_search_single_corpus_scan(spark, sf_smoke):
     # vectors (both query scans pruned to the 10 query rows). The old
     # per-table union shape cost N_TABLES corpus scans (7 total here).
     assert plan.count("Scan parquet") <= 4
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_smoke):
-    """bucketed_order_revenue: co-bucketed SortMergeJoin plus keyed
-    aggregation, end to end with ZERO Exchange — the physical contract
-    bucketing exists to buy. Scans must show the bucketed layout."""
-    plan = plan_of(QUERIES["bucketed_order_revenue"](spark, sf_smoke))
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan
-    assert "Bucketed: true" in plan
-    assert "SelectedBucketsCount: 8 out of 8" in plan
 
 
 # --- round-3 surfaces: time-series, sketches, SimHash banding ----------------

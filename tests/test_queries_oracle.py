@@ -1,16 +1,17 @@
-"""The t2 gate, locally: every registered query with an oracle (driver tier
-AND extra tier) must hash-match DuckDB on sf0.01, the driver's correctness
-scale factor. The driver itself only sees the ≤50 ``QUERIES``; the extra
-tier keeps alternate strategies under the same oracle discipline here."""
+"""The t2 gate, locally: every registered query (driver tier AND extra tier)
+must hash-match its DuckDB oracle on sf0.01, the driver's correctness scale
+factor. The driver itself only sees the ≤50 ``QUERIES``; the extra tier is
+the rest of ``bench.py``'s headline rows, under the same oracle discipline."""
 
 from __future__ import annotations
 
 import pytest
 
+from bench import HEADLINE
 from tests.oracle_utils import assert_parity, duckdb_con
 from vector_db_spark.queries import (
     DRIVER_QUERY_BUDGET,
-    ORACLES,
+    EXTRA_QUERIES,
     QUERIES,
     all_oracles,
     all_queries,
@@ -29,46 +30,24 @@ def con(sf_correctness):
 
 def test_driver_tier_within_budget_and_fully_oracled():
     assert 0 < len(QUERIES) <= DRIVER_QUERY_BUDGET
-    # every driver-tier query must carry an oracle: no rows-only entries
-    # spending driver budget without hash verification
-    assert sorted(set(QUERIES) - set(ORACLES)) == []
+    # every query in both tiers carries an oracle: no rows-only entries
+    assert sorted(set(ALL_QUERIES) - set(ALL_ORACLES)) == []
 
 
-# r10 (VERDICT r9 item 2): the EXTRA-tier half of the full-registry sweep
-# carries the ``oracle_full`` marker and is deselected by the default
-# invocation (pytest.ini addopts), so `python -m pytest tests/ -x -q`
-# finishes inside the driver's window. Every DRIVER-tier query stays
-# oracle-checked in the default run. The full sweep is one opt-in away:
-#     python -m pytest tests/ -q -m ""
-# and the builder runs + logs it once per round (OPTIMIZATION_r10.md).
-@pytest.mark.parametrize(
-    "name",
-    [
-        pytest.param(n, marks=[] if n in QUERIES else [pytest.mark.oracle_full])
-        for n in sorted(ALL_ORACLES)
-    ],
-)
+def test_extra_tier_is_benched():
+    # a query outside the driver contract ships only as a bench.py headline row
+    assert sorted(set(EXTRA_QUERIES) - set(HEADLINE)) == []
+
+
+@pytest.mark.parametrize("name", sorted(ALL_ORACLES))
 def test_oracle_parity(spark, sf_correctness, con, name):
     df = ALL_QUERIES[name](spark, sf_correctness)
     assert_parity(df, con, ALL_ORACLES[name], name)
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        pytest.param(n, marks=[] if n in QUERIES else [pytest.mark.oracle_full])
-        for n in sorted(set(ALL_QUERIES) - set(ALL_ORACLES))
-    ],
-)
-def test_rows_only_queries_run(spark, sf_correctness, name):
-    df = ALL_QUERIES[name](spark, sf_correctness)
-    assert df.count() >= 0
-
-
 def test_driver_outputs_are_scalar_typed(spark, sf_correctness):
     """The driver canonicalizer sorts rows by every column — array/struct
-    cells are unhashable (the round-1 approx_stats failure). Guard every
-    driver-tier output schema."""
+    cells are unhashable. Guard every driver-tier output schema."""
     for name, fn in QUERIES.items():
         for field in fn(spark, sf_correctness).schema.fields:
             assert field.dataType.typeName() not in ("array", "struct", "map"), (

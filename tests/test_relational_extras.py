@@ -1,31 +1,9 @@
-"""Tests for the approximate-aggregate surface and the remote-embed client
-shape (E3) with an injected transport."""
+"""Tests for the remote-embed client shape (E3) with an injected transport
+and for the planted-violation expectations check."""
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import functions as F
-
 from vector_db_spark.functions.embedding import remote_embed
-from vector_db_spark.io import load_table
-from vector_db_spark.queries import QUERIES, all_queries
-
-
-def test_approx_aggregates_near_exact(spark, sf_smoke):
-    li = load_table(spark, sf_smoke, "lineitem")
-    exact_parts = li.select("l_partkey").distinct().count()
-    exact_orders = li.select("l_orderkey").distinct().count()
-    row = all_queries()["approx_stats"](spark, sf_smoke).collect()[0]
-    # the query itself carries the sketch-accuracy invariants as booleans
-    assert row.exact_parts == exact_parts
-    assert row.exact_orders == exact_orders
-    assert row.parts_ok and row.orders_ok and row.median_ok and row.quartiles_ok
-    # raw sketches, independently of the query's tolerance choices
-    approx = li.agg(
-        F.percentile_approx("l_quantity", F.array(F.lit(0.25), F.lit(0.75))).alias("q")
-    ).collect()[0]
-    q25, q75 = approx.q
-    assert q25 <= q75
 
 
 def test_remote_embed_with_injected_transport(spark):

@@ -143,23 +143,6 @@ def test_lsh_bucket_scale_knobs(spark, sf_smoke):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, expr_rows))
 
 
-def test_embedding_near_dup_blocked_higher_h_is_subset_structure(spark, sf_smoke):
-    """Higher h can only REMOVE candidate pairs (fewer collisions), never
-    invent them: every pair found at h=8 within the same L that also
-    collides at h=4 must carry the identical verified cosine."""
-    from vector_db_spark.io import load_table
-    from vector_db_spark.operators.dedup import embedding_near_dup_blocked
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    lo = {(r.id_a, r.id_b): r.cos_sim
-          for r in embedding_near_dup_blocked(emb, threshold=0.45).collect()}
-    hi = {(r.id_a, r.id_b): r.cos_sim
-          for r in embedding_near_dup_blocked(
-              emb, threshold=0.45, n_bits=8).collect()}
-    shared = set(lo) & set(hi)
-    assert all(lo[p] == hi[p] for p in shared)
-
-
 def test_derive_lsh_geometry_laws():
     """The corpus-derived geometry rule (SCALE.md round-5): h tracks
     log2(n/target) so expected bucket size is scale-free; L grows with h
@@ -226,28 +209,32 @@ def test_derive_lsh_geometry_laws():
 
 
 def test_embedding_near_dup_auto_geometry_recall_floor(spark, sf_smoke):
-    """Default (no-knobs) embedding_near_dup_blocked derives geometry from
-    the corpus count. At fixture scale that is the pinned (4,4) path, and
-    recall vs the exact brute-force baseline at the true-near-dup
-    threshold stays >= 0.9 (the floor the auto-rule is built to hold)."""
+    """Default (no-knobs) blocked decontamination derives geometry from
+    the corpus count. At fixture scale, recall of the flagged set vs the
+    exact broadcast-scored form at the true-near-dup threshold stays
+    >= 0.9 (the floor the auto-rule is built to hold)."""
     from vector_db_spark.io import load_table
     from vector_db_spark.operators.dedup import (
-        embedding_near_dup_blocked,
-        embedding_near_dup_pairs,
+        embedding_decontaminate,
+        embedding_decontaminate_blocked,
     )
 
-    emb = load_table(spark, sf_smoke, "embeddings")
-    exact = {(r.id_a, r.id_b) for r in
-             embedding_near_dup_pairs(emb, threshold=0.9).collect()}
-    auto = {(r.id_a, r.id_b) for r in
-            embedding_near_dup_blocked(emb, threshold=0.9).collect()}
-    assert auto <= exact  # blocking never invents pairs
+    emb = load_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
+    corpus = emb.filter(F.col("vec_id") % 37 != 0)
+    bench = emb.filter(F.col("vec_id") % 37 == 0)
+
+    def flagged(df):
+        return {r.vec_id for r in df.collect() if r.contaminated}
+
+    exact = flagged(embedding_decontaminate(corpus, bench, threshold=0.9))
+    auto = flagged(embedding_decontaminate_blocked(corpus, bench, threshold=0.9))
+    assert auto <= exact  # blocking never invents hits
     if exact:
-        assert len(auto & exact) / len(exact) >= 0.9
+        assert len(auto) / len(exact) >= 0.9
     # corpus_count passthrough derives the same geometry without a count job
-    auto2 = {(r.id_a, r.id_b) for r in
-             embedding_near_dup_blocked(
-                 emb, threshold=0.9, corpus_count=500).collect()}
+    auto2 = flagged(embedding_decontaminate_blocked(
+        corpus, bench, threshold=0.9, corpus_count=corpus.count()
+    ))
     assert auto2 == auto
 
 
@@ -340,25 +327,23 @@ def test_derive_lsh_geometry_strict_and_multiprobe():
 def test_embedding_near_dup_auto_multiprobe(spark, sf_smoke):
     """When the derived base geometry cannot hold the recall floor within
     the table budget (forced here via corpus_count=5M, where strict base
-    derivation raises — see test above), the default dedup path must
+    derivation raises — see test above), blocked decontamination must
     auto-escalate to multiprobe rather than warn-and-clamp: the call
-    succeeds, the probe-expanded join still finds a planted exact
-    duplicate (cos=1 shares every bucket), and nothing is invented."""
+    succeeds, the probe-expanded join still flags a planted exact
+    benchmark copy (cos=1 shares every bucket), and nothing is invented."""
     from vector_db_spark.io import load_table
-    from vector_db_spark.operators.dedup import embedding_near_dup_blocked
+    from vector_db_spark.operators.dedup import embedding_decontaminate_blocked
 
     emb = load_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
     base = emb.orderBy("vec_id").limit(50)
     planted = base.orderBy("vec_id").limit(1)
-    dup = planted.selectExpr("vec_id + 1000000 as vec_id", "embedding")
-    corpus = base.unionByName(dup)
+    bench = planted.selectExpr("vec_id + 1000000 as vec_id", "embedding")
     first_id = planted.first().vec_id
-    out = embedding_near_dup_blocked(
-        corpus, threshold=0.9, corpus_count=5_000_000
-    )
-    pairs = {(r.id_a, r.id_b) for r in out.collect()}
-    assert (first_id, first_id + 1_000_000) in pairs
-    # verification is exact within candidates: every emitted pair really
-    # clears the threshold (checked by construction of cos_sim filter),
-    # and ids never pair with themselves
-    assert all(a < b for a, b in pairs)
+    out = embedding_decontaminate_blocked(
+        base, bench, threshold=0.9, corpus_count=5_000_000
+    ).collect()
+    flagged = {r.vec_id for r in out if r.contaminated}
+    assert first_id in flagged
+    # verification is exact within candidates: every flagged row really
+    # clears the threshold
+    assert all(r.max_benchmark_sim >= 0.9 for r in out if r.contaminated)

@@ -1,5 +1,5 @@
 """Structured Streaming tests: micro-batch ingest with checkpoint resume,
-cross-batch stateful dedup, session-gap semantics, watermark late-data
+cross-batch stateful dedup, watermark late-data
 handling (SURVEY.md §2.8)."""
 
 from __future__ import annotations
@@ -11,11 +11,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from vector_db_spark.streaming.ingest import (
-    first_seen_filter_stream,
+    first_seen_stream,
     hourly_counts_stream,
     ingest_stream,
     run_to_memory,
-    session_windows_stream,
 )
 
 EV_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -38,39 +37,16 @@ def _stream_events(spark, path, max_files=None):
     return reader.parquet(path)
 
 
-def test_session_window_gap_semantics(spark, tmp_path):
-    """Two events 30min apart share a session; a 2h-later event opens a new
-    one. Session end = last event + gap (1h)."""
-    src = str(tmp_path / "src")
-    _write_file(
-        spark,
-        src,
-        [
-            _ev(1, "2024-01-01 10:00:00"),
-            _ev(2, "2024-01-01 10:30:00"),
-            _ev(3, "2024-01-01 13:00:00"),
-        ],
-    )
-    out = run_to_memory(
-        session_windows_stream(_stream_events(spark, src)), output_mode="complete"
-    ).orderBy("session_start").collect()
-    assert len(out) == 2
-    assert out[0].n_events == 2
-    assert out[0].session_end.isoformat() == "2024-01-01T11:30:00"
-    assert out[1].n_events == 1
-    assert out[1].session_end.isoformat() == "2024-01-01T14:00:00"
-
-
 def test_first_seen_state_survives_across_batches(spark, tmp_path):
     """File 1 processes first (one file per trigger); when file 2 arrives
     with another event for the same key, state says 'seen' and nothing new
-    is emitted — cross-micro-batch GroupState."""
+    is emitted — cross-micro-batch state-store state."""
     src = str(tmp_path / "src")
     _write_file(spark, src, [_ev(1, "2024-01-01 10:00:00"), _ev(2, "2024-01-01 11:00:00", user=2)])
     time.sleep(1.1)  # distinct modTime → deterministic file order
     _write_file(spark, src, [_ev(3, "2024-01-01 09:00:00")])  # same key as event 1
     out = run_to_memory(
-        first_seen_filter_stream(_stream_events(spark, src, max_files=1)),
+        first_seen_stream(_stream_events(spark, src, max_files=1)),
         output_mode="append",
     ).collect()
     got = {(r.user_id, r.event_type): r.event_id for r in out}
@@ -137,40 +113,9 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert by_window.get("2024-01-01T10:00:00") == 1
 
 
-def test_stream_stream_join_cross_batch_state(spark, tmp_path):
-    """Click arrives in micro-batch 1, its purchase in batch 2: the match
-    must still be emitted (buffered join state survives the trigger
-    boundary). Purchases with no in-window click produce nothing."""
-    from vector_db_spark.streaming.ingest import click_attribution_join_stream
-
-    src = str(tmp_path / "src")
-    _write_file(spark, src, [_ev(1, "2024-01-01 10:00:00", user=7, etype="click")])
-    _write_file(
-        spark,
-        src,
-        [
-            _ev(2, "2024-01-01 10:30:00", user=7, etype="purchase"),
-            _ev(3, "2024-01-01 09:30:00", user=8, etype="purchase"),  # no click
-            _ev(4, "2024-01-01 12:30:00", user=7, etype="purchase"),  # outside 1h
-        ],
-    )
-    purchases = _stream_events(spark, src, max_files=1).filter(
-        F.col("event_type") == "purchase"
-    )
-    clicks = _stream_events(spark, src, max_files=1).filter(
-        F.col("event_type") == "click"
-    )
-    out = run_to_memory(
-        click_attribution_join_stream(purchases, clicks), output_mode="append"
-    ).collect()
-    assert [(r.purchase_id, r.click_id) for r in out] == [(2, 1)]
-
-
 def test_dedup_stream_drops_redelivery_across_batches(spark, tmp_path):
     """dropDuplicatesWithinWatermark: a record re-delivered in a LATER
     micro-batch is dropped (bounded state, not per-batch distinct)."""
-    from vector_db_spark.streaming.ingest import dedup_stream
-
     src = str(tmp_path / "src")
     batch = [
         _ev(1, "2024-01-01 10:00:00"),
@@ -179,7 +124,8 @@ def test_dedup_stream_drops_redelivery_across_batches(spark, tmp_path):
     _write_file(spark, src, batch)  # delivery 1
     _write_file(spark, src, batch + [_ev(3, "2024-01-01 10:06:00")])  # redelivery + new
     out = run_to_memory(
-        dedup_stream(_stream_events(spark, src, max_files=1)), output_mode="append"
+        first_seen_stream(_stream_events(spark, src, max_files=1), ["event_id"]),
+        output_mode="append",
     ).collect()
     assert sorted(r.event_id for r in out) == [1, 2, 3]
 

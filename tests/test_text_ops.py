@@ -8,13 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vector_db_spark.functions.embedding import embed_column, stub_embedder
-from vector_db_spark.functions.text import (
-    bpe_ish_tokens,
-    shingles,
-    simhash64,
-    tokens,
-    winnow_fingerprints,
-)
+from vector_db_spark.functions.text import shingles, tokens, winnow_fingerprints
 from vector_db_spark.io import load_table
 from vector_db_spark.operators.dedup import (
     dedup_retain_best,
@@ -25,12 +19,7 @@ from vector_db_spark.operators.dedup import (
 )
 from vector_db_spark.operators.knn import knn_join
 from vector_db_spark.operators.knn_graph import components_from_edges
-from vector_db_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    decode_image_features,
-    resize_images,
-    sample_video_frames,
-)
+from vector_db_spark.operators.multimodal import MEDIA_SCHEMA, decode_image_features
 from vector_db_spark.operators.similarity import lsh_search
 
 
@@ -50,25 +39,6 @@ def test_tokens_and_shingles(spark):
     assert rows[0].t == ["the", "quick", "brown", "fox"]
     assert rows[0].s == ["the quick brown", "quick brown fox"]
     assert rows[1].s == []  # shorter than n → empty, not null
-
-
-def test_bpe_ish_tokens(spark):
-    df = _docs(spark, ["Hello, world! x2"])
-    toks = df.select(bpe_ish_tokens("text").alias("t")).collect()[0].t
-    assert toks == ["hello", ",", "world", "!", "x", "2"]
-
-
-def test_simhash_locality(spark):
-    """Near-identical token streams → small Hamming distance; unrelated
-    ones → larger (locality property, not exact values)."""
-    base = "spark query engine join filter aggregate window shuffle " * 4
-    near = base + "extra"
-    far = "completely different words about cooking pasta dinner tonight " * 4
-    df = _docs(spark, [base, near, far])
-    h = [r.sh for r in df.select(simhash64(tokens("text")).alias("sh")).collect()]
-    ham = lambda a, b: bin(a ^ b).count("1")
-    assert ham(h[0], h[1]) <= ham(h[0], h[2])
-    assert ham(h[0], h[1]) <= 4
 
 
 # --- dedup --------------------------------------------------------------------
@@ -203,28 +173,6 @@ def test_winnow_candidate_pairs_finds_planted_copy(spark):
     assert all(p == (0, 1) for p in found)
 
 
-def test_clean_corpus_stage_semantics(spark):
-    from vector_db_spark.operators.pipeline import clean_corpus
-
-    body = "a genuinely varied sentence with many distinct informative words " \
-           "covering spark catalyst tungsten arrow parquet shuffle broadcast topics"
-    rows = [
-        (0, "en", body + " unique tail zero"),
-        (1, "en", body + " unique tail zero"),      # exact dup of 0 → dropped (min id kept)
-        (2, "en", body + " unique tail zero okay"), # near-dup of 0 → greater id dropped
-        (3, "de", body + " german labelled row"),   # wrong lang → dropped
-        (4, "en", "too short"),                      # min_tokens → dropped
-        (5, "en", "word " * 30),                     # low diversity → quality floor drops it
-        (6, "en", "an entirely different survivor document about parquet row "
-                  "group statistics predicate pushdown and adaptive execution plans"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    out = clean_corpus(
-        df, lang="en", min_tokens=5, quality_floor=0.4, jaccard_threshold=0.5
-    )
-    assert {r.doc_id for r in out.collect()} == {0, 6}
-
-
 def test_stub_embedder_deterministic_and_unit(spark):
     df = _docs(spark, ["hello world", "hello world", "other text"])
     out = embed_column(df, "text", dim=32).collect()
@@ -267,18 +215,6 @@ def test_get_device_resolution():
     assert get_device("auto", old) == "cpu"
     # no torch importable at all → cpu (torch isn't in this environment)
     assert get_device("auto") == "cpu"
-
-
-def test_semantic_dedup_via_stub_embeddings(spark):
-    """Pipeline: embed texts → cosine near-dup finds the exact-dup pair."""
-    df = _docs(spark, ["aaa bbb ccc", "totally different", "aaa bbb ccc"])
-    emb = embed_column(df, "text", dim=32).select(
-        F.col("doc_id").alias("vec_id"), "embedding"
-    )
-    from vector_db_spark.operators.dedup import embedding_near_dup_pairs
-
-    pairs = embedding_near_dup_pairs(emb, threshold=0.99).collect()
-    assert len(pairs) == 1 and {pairs[0].id_a, pairs[0].id_b} == {0, 2}
 
 
 # --- LSH ANN ------------------------------------------------------------------
@@ -330,8 +266,6 @@ def test_image_features_fake_decoder(spark, media):
 def test_strict_decoder_raises(media):
     with pytest.raises(NotImplementedError, match="PIL"):
         decode_image_features(media, decoder="strict")
-    with pytest.raises(NotImplementedError, match="ffmpeg"):
-        sample_video_frames(media, decoder="strict")
 
 
 def test_real_decoder_import_gated(media):
@@ -350,37 +284,6 @@ def test_real_decoder_import_gated(media):
     # dim guard fires before the import gate
     with pytest.raises(ValueError, match="divide 256"):
         decode_image_features(media, decoder="real", dim=7)
-
-
-def test_resize_and_frame_sampling_fake(spark, media):
-    resized = resize_images(media, 32, 32, decoder="fake").collect()
-    assert all(len(r.payload) == 32 * 32 // 64 for r in resized)
-    frames = sample_video_frames(media, every_ms=1000, decoder="fake").collect()
-    assert [r.frame_idx for r in frames] == [0, 1, 2]  # 3500ms → 3 frames
-    assert frames[1].ts_ms == 1000
-
-
-def test_audio_windows_and_resample_fake(spark, media):
-    from vector_db_spark.operators.multimodal import (
-        extract_audio_windows,
-        resample_audio,
-    )
-
-    wins = extract_audio_windows(media, window_ms=1000, decoder="fake").collect()
-    # media_id 3: 2500ms → 2 windows at 0ms and 1000ms
-    assert [r.window_idx for r in wins] == [0, 1]
-    assert wins[1].ts_ms == 1000
-    assert all(len(r.features) == 8 for r in wins)
-
-    out = resample_audio(media, 8000, decoder="fake").collect()
-    assert len(out) == 1 and out[0].media_id == 3
-    assert len(out[0].payload) == len(b"RIFF fake") * 8000 // 16000
-    assert out[0].sample_rate == 8000 and out[0].duration_ms == 2500
-
-    with pytest.raises(NotImplementedError, match="librosa"):
-        extract_audio_windows(media, decoder="strict")
-    with pytest.raises(NotImplementedError, match="librosa"):
-        resample_audio(media, 8000, decoder="strict")
 
 
 # --- incremental (batch-vs-corpus) dedup --------------------------------------

@@ -34,15 +34,6 @@ def tokens(col: Column | str) -> Column:
     return F.split(F.lower(F.trim(c)), r"\s+")
 
 
-def bpe_ish_tokens(col: Column | str) -> Column:
-    """A BPE-ish regex split: words, numbers, and single punctuation marks
-    as separate tokens (the GPT-2 pre-tokenizer shape, minus byte tricks)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract_all(
-        F.lower(c), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0
-    )
-
-
 def token_count(col: Column | str) -> Column:
     t = tokens(col)
     return F.when(F.length(F.trim(F.col(col) if isinstance(col, str) else col)) == 0, F.lit(0)).otherwise(F.size(t))
@@ -155,41 +146,3 @@ def winnow_fingerprints(col: Column | str, k: int = 8, w: int = 4) -> Column:
     return F.when(F.length(s) >= k + w - 1, F.array_distinct(wins)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def simhash64(tokens_col: Column) -> Column:
-    """16-bit SimHash from the first 16 nibbles of each token's md5: bit p
-    is set when the mean nibble value at position p is >= 7.5 (integer
-    compare ``2*sum >= 15*count`` — no float drift). Near-identical token
-    multisets land within small Hamming distance.
-
-    The per-token md5 digests are LET-BOUND once (the O(L²)-class trap
-    documented at :func:`winnow_fingerprints`): the 16 per-nibble
-    aggregates reference the bound digest array instead of re-tokenizing
-    and re-hashing the document per bit position — 1 md5 per token
-    instead of 16."""
-
-    def nib_adder(p: int):
-        return lambda acc, h: (
-            acc + F.instr(F.lit("0123456789abcdef"), F.substring(h, p + 1, 1)) - 1
-        )
-
-    def body(hexes: Column) -> Column:
-        nibble_bits = []
-        for p in range(16):
-            nib = F.aggregate(
-                hexes,
-                F.lit(0).cast("long"),
-                nib_adder(p),
-            )
-            bit = F.when(
-                (F.lit(2) * nib) >= (F.lit(15) * F.size(hexes)), F.lit(1).cast("long")
-            ).otherwise(F.lit(0).cast("long"))
-            nibble_bits.append(F.shiftleft(bit, p))
-        out = nibble_bits[0]
-        for b in nibble_bits[1:]:
-            out = out + b
-        return out
-
-    digests = F.transform(tokens_col, lambda tok: F.md5(tok))
-    return F.element_at(F.transform(F.array(digests), body), 1)

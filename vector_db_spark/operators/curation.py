@@ -326,76 +326,9 @@ def pii_scrub(
 # ---------------------------------------------------------------------------
 
 
-def mixture_resample(
-    docs: DataFrame,
-    weights: dict[str, float],
-    *,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "mix",
-    default: float = 1.0,
-) -> DataFrame:
-    """Deterministic per-source downsampling to target mixture weights —
-    the domain-reweighting step of a pretraining data recipe (keep x% of
-    CommonCrawl, all of books/code, ...).
-
-    Membership is decided by content hash, not ``df.sample``: a row is
-    kept iff its md5 bucket (first two hex digits → 0..255) falls under
-    ``weight × 256``. Hash membership is reproducible across reruns,
-    across engines, and under repartitioning — seeded ``sample()`` is
-    none of those. Map-side only; the weights enter the plan as a literal
-    CASE chain (broadcastable to any cluster size).
-    """
-    h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
-    bucket = (F.instr(F.lit("0123456789abcdef"), F.substring(h, 1, 1)) - 1) * 16 + (
-        F.instr(F.lit("0123456789abcdef"), F.substring(h, 2, 1)) - 1
-    )
-    thresh: Column = F.lit(int(default * 256))
-    for src, w in weights.items():
-        thresh = F.when(F.col(source_col) == src, F.lit(int(w * 256))).otherwise(thresh)
-    return docs.filter(bucket < thresh)
-
-
 # ---------------------------------------------------------------------------
 # corpus-LM token statistics
 # ---------------------------------------------------------------------------
-
-
-def unigram_doc_scores(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document unigram-LM statistics against the corpus's own token
-    distribution: mean corpus frequency of the document's tokens (exact,
-    integer-summed) and the mean per-token surprisal ``-log2 p(tok)`` in
-    bits (the cheap perplexity proxy used for quality filtering).
-
-    Two aggregations: corpus vocabulary (token → count; partial map-side
-    combine), then a broadcast join of the vocabulary onto the exploded
-    token stream (a natural-language vocabulary is millions of rows —
-    broadcastable — while the corpus is billions). ``lm_bits`` is rounded
-    to 2 decimals: the cross-engine contract must not depend on
-    float-summation order.
-    """
-    toks = ensure_parallelism(docs).select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("tok")
-    )
-    vocab = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
-    total = vocab.agg(F.sum("cnt").alias("total"))
-    scored = toks.join(F.broadcast(vocab), "tok").crossJoin(F.broadcast(total))
-    return (
-        scored.groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum("cnt").alias("sum_cnt"),
-            F.avg(-F.log2(F.col("cnt") / F.col("total"))).alias("bits"),
-        )
-        .select(
-            id_col,
-            F.col("n_tokens").cast("long"),
-            F.round(F.col("sum_cnt") / F.col("n_tokens"), 6).alias("avg_tok_freq"),
-            F.round(F.col("bits"), 2).alias("lm_bits"),
-        )
-    )
 
 
 def bigram_doc_scores(
@@ -406,7 +339,7 @@ def bigram_doc_scores(
 ) -> DataFrame:
     """Per-document bigram-LM surprisal (add-k smoothed) against the
     corpus's own bigram distribution — the CCNet-style quality signal one
-    LM order above :func:`unigram_doc_scores`: documents whose token
+    LM order above unigram scoring: documents whose token
     *transitions* are unusual for the corpus (boilerplate tables, token
     soup, wrong-language spans) score high even when their unigram mix
     looks normal.
@@ -742,4 +675,3 @@ def group_safe_split(
         labels[-1]
     )
     return df.withColumn(out_col, expr)
-

@@ -20,7 +20,7 @@ oracle queries in queries/text.py hash-match DuckDB end-to-end.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vector_db_spark.caching import tracked_cache
@@ -28,7 +28,6 @@ from vector_db_spark.functions.distance import cosine_similarity
 from vector_db_spark.functions.text import (
     doc_fingerprint,
     shingles,
-    token_count,
     tokens,
     winnow_fingerprints,
 )
@@ -114,17 +113,6 @@ def minhash_wide(
             F.col(id_col),
             F.array(*[F.col(f"__mh_{i}") for i in range(n_hashes)]).alias("sig"),
         )
-    )
-
-
-def minhash_signatures(
-    sh: DataFrame, id_col: str = "doc_id", n_hashes: int = 8
-) -> DataFrame:
-    """Long form (id, hash_idx, minhash) of :func:`minhash_wide` — the
-    interchange layout (one row per signature cell)."""
-    return minhash_wide(sh, id_col, n_hashes).select(
-        F.col(id_col),
-        F.posexplode("sig").alias("hash_idx", "minhash"),
     )
 
 
@@ -513,90 +501,6 @@ def winnow_candidate_pairs(
     )
 
 
-def embedding_near_dup_blocked(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    *,
-    n_tables: int | None = None,
-    n_bits: int | None = None,
-    corpus_count: int | None = None,
-) -> DataFrame:
-    """Cosine near-dup pairs with hyperplane-LSH blocking — the 100 TB
-    path. Candidate pairs are ids sharing a bucket in any of the L seeded
-    hyperplane tables (an equi-join on (table_idx, bucket), volume
-    Σ bucket_size² — never n²); cosine is verified only within candidates.
-    Approximate by construction: recall for a pair at cosine s is
-    1-(1-p(s)^h)^L with p(s)=1-acos(s)/π — near-1 for true near-dups
-    (s ≥ 0.9), deliberately lossy for weak similarities. The exact
-    ``embedding_near_dup_pairs`` below is the recall baseline.
-
-    GEOMETRY FOLLOWS THE CORPUS by default: when neither ``n_tables``
-    nor ``n_bits`` is passed, both are derived from the corpus count via
-    :func:`similarity.derive_lsh_geometry` (h ≈ log₂(n/target_bucket),
-    L grown to hold the near-dup recall floor) — one cheap count()
-    (pass ``corpus_count`` to skip it). The round-5 scale campaign
-    measured why static defaults are a trap: fixed h=4 was 11.5× wall at
-    10× data and "unusable by construction" at 200 k vectors. The derived
-    geometry GROWS with the corpus (already (5, 5) at n=2000), so callers
-    that must stay bit-identical to a pinned oracle (the registered
-    ``embedding_near_dup`` query) pass ``n_tables``/``n_bits`` explicitly
-    — passing either knob pins that knob and derives nothing.
-
-    The recall floor is NOT silently tradable on this default path:
-    geometry derivation runs strict. When the floor needs more tables
-    than the budget allows (past ~300 k vectors at floor 0.9), the
-    blocker AUTO-ESCALATES to multi-probe — one join side expands to
-    every Hamming-distance-1 bucket (``expand_probe_buckets``), the
-    geometry re-derives against the multiprobe collision probability
-    P(d≤1) = p^h + h·p^(h−1)(1−p), and if even that cannot hold the
-    floor the call RAISES instead of quietly missing near-dups."""
-    from vector_db_spark.operators import similarity as _sim
-    from vector_db_spark.operators.similarity import (
-        derive_strict_geometry,
-        expand_probe_buckets,
-        hyperplane_lsh_buckets,
-    )
-
-    use_multiprobe = False
-    if n_tables is None and n_bits is None:
-        n = corpus_count if corpus_count is not None else df.count()
-        n_tables, n_bits, use_multiprobe = derive_strict_geometry(
-            n, threshold=threshold
-        )
-    buckets = hyperplane_lsh_buckets(
-        df,
-        vec_col,
-        id_col,
-        n_tables=n_tables if n_tables is not None else _sim.N_TABLES,
-        n_bits=n_bits if n_bits is not None else _sim.N_BITS,
-    )
-    a = buckets.select(F.col(id_col).alias("id_a"), "table_idx", "bucket")
-    b = buckets.select(F.col(id_col).alias("id_b"), "table_idx", "bucket")
-    if use_multiprobe:
-        # one side only: probing is symmetric at d≤1 (y ∈ probes(x) ⟺
-        # x ∈ probes(y)), so expanding A alone finds every unordered
-        # pair the analytic recall accounts for, at (1+h)× — not
-        # (1+h)² — candidate volume.
-        a = expand_probe_buckets(a, n_bits if n_bits is not None else _sim.N_BITS)
-    cand = (
-        a.join(b, ["table_idx", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()  # a pair can collide in several tables
-    )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cos_sim", F.round(cosine_similarity("va", "vb"), 6))
-        .filter(F.col("cos_sim") > threshold)
-        .select("id_a", "id_b", "cos_sim")
-    )
-
-
 def embedding_decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -804,9 +708,10 @@ def embedding_decontaminate_blocked(
     Approximate by construction with the SAME recall analytics as
     near-dup blocking (decontamination anchors at s ≥ threshold, the
     easy regime for hyperplane LSH); geometry defaults derive from the
-    corpus count STRICT with auto-multiprobe escalation, exactly like
-    :func:`embedding_near_dup_blocked` — a floor the table budget cannot
-    hold raises rather than silently missing leaks."""
+    corpus count STRICT with auto-multiprobe escalation
+    (:func:`~vector_db_spark.operators.similarity.derive_strict_geometry`)
+    — a floor the table budget cannot hold raises rather than silently
+    missing leaks."""
     from vector_db_spark.operators import similarity as _sim
     from vector_db_spark.operators.similarity import (
         derive_strict_geometry,
@@ -859,200 +764,6 @@ def embedding_decontaminate_blocked(
             F.coalesce(
                 F.col("max_benchmark_sim") >= threshold, F.lit(False)
             ).alias("contaminated"),
-        )
-    )
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Cosine near-dup pairs by brute self-join — exact, O(n²) scored but
-    nothing materialized beyond the passing pairs. The recall baseline for
-    ``embedding_near_dup_blocked``; never register this shape against a
-    corpus-sized table pair."""
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", F.round(cosine_similarity("va", "vb"), 6))
-        .filter(F.col("cos_sim") > threshold)
-        .select("id_a", "id_b", "cos_sim")
-    )
-
-
-def ngram_position_table(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 8
-) -> DataFrame:
-    """(id, pos, gram): every token-position n-gram digest, map-side.
-
-    The positional twin of :func:`shingle_table` — positions are KEPT (no
-    ``array_distinct``) because span detection needs to know *where* a
-    repeated n-gram occurs, not just that it occurs. Output rows ≈ total
-    corpus tokens; the explode is a pure projection."""
-    # tokens(...) let-bound via the outer transform so the tokenizer regex
-    # runs once per row, not once per gram position (the O(L²) trap
-    # documented at functions/text.winnow_fingerprints)
-    grams = F.element_at(
-        F.transform(
-            F.array(tokens(text_col)),
-            lambda t: F.when(
-                F.size(t) >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(t) - n),  # size-n+1 starts
-                    lambda p: F.md5(F.concat_ws(" ", F.slice(t, p + 1, n))),
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        ),
-        1,
-    )
-    return df.select(
-        F.col(id_col), F.posexplode(grams).alias("pos", "gram")
-    )
-
-
-def repeated_ngram_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    n: int = 8,
-    min_docs: int = 2,
-) -> DataFrame:
-    """Cross-document repeated-span detection — the Spark-idiomatic
-    equivalent of exact substring deduplication (Lee et al., "Deduplicating
-    Training Data Makes Language Models Better": suffix-array repeated
-    sequences; here fixed-width token n-grams hash-grouped across the
-    corpus — what a suffix array finds at every length ≥ n, the n-gram
-    grid finds as runs of flagged starts).
-
-    A position is flagged when the n-gram STARTING there appears in
-    ≥ ``min_docs`` distinct documents; overlapping flagged windows merge
-    into spans (gaps-and-islands over start positions, window-local).
-    One row per doc:
-
-        (id, n_tokens, n_rep_starts, n_spans, rep_token_frac)
-
-    where ``rep_token_frac`` is the fraction of the doc's tokens covered
-    by repeated spans — the quantity a cleaning pipeline thresholds on.
-
-    Scale posture: the explode is rows ≈ corpus tokens (the same budget
-    the shingle/MinHash stage already pays); repeated-gram detection is
-    ONE aggregation on the gram digest with a distinct-doc count
-    (map-side partial), and the flag join is an equi-join on the digest.
-    The islands pass shuffles only flagged positions (a small fraction of
-    the corpus by construction) keyed by doc. No suffix array, no global
-    sort, no driver state."""
-    pos_tab = ngram_position_table(df, text_col, id_col, n)
-    repeated = (
-        pos_tab.groupBy("gram")
-        .agg(F.count_distinct(id_col).alias("__df"))
-        .filter(F.col("__df") >= min_docs)
-        .select("gram")
-    )
-    flagged = pos_tab.join(repeated, "gram").select(id_col, "pos")
-    w = Window.partitionBy(id_col).orderBy("pos")
-    islands = (
-        flagged.withColumn("__prev", F.lag("pos").over(w))
-        .withColumn(
-            "__new_island",
-            (F.col("__prev").isNull() | (F.col("pos") > F.col("__prev") + n - 1)).cast(
-                "int"
-            ),
-        )
-        .withColumn("__island", F.sum("__new_island").over(w))
-        .groupBy(id_col, "__island")
-        .agg((F.max("pos") - F.min("pos") + n).alias("__covered"))
-    )
-    per_doc = islands.groupBy(id_col).agg(
-        F.sum("__covered").alias("__rep_tokens"),
-        F.count("*").alias("n_spans"),
-    )
-    starts = flagged.groupBy(id_col).agg(F.count("*").alias("n_rep_starts"))
-    return (
-        # token_count, not size(tokens(...)): blank text must report 0
-        # tokens here, consistent with the accounting packing uses —
-        # size(split('')) is 1 and would skew rep_token_frac denominators
-        df.select(F.col(id_col), token_count(text_col).cast("long").alias("n_tokens"))
-        .join(starts, id_col, "left")
-        .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            "n_tokens",
-            F.coalesce("n_rep_starts", F.lit(0)).cast("long").alias("n_rep_starts"),
-            F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
-            # n_tokens == 0 (blank/whitespace-only text) must yield 0.0,
-            # matching the oracle's CASE — the raw division is NULL on
-            # non-ANSI (which F.least SKIPS, misreporting 1.0) and raises
-            # DIVIDE_BY_ZERO under Spark 4's ANSI default.
-            F.when(F.col("n_tokens") == 0, F.lit(0.0))
-            .otherwise(
-                F.round(
-                    F.least(
-                        F.coalesce("__rep_tokens", F.lit(0)) / F.col("n_tokens"),
-                        F.lit(1.0),
-                    ),
-                    6,
-                )
-            )
-            .alias("rep_token_frac"),
-        )
-    )
-
-
-def semantic_dedup(
-    assigned: DataFrame,
-    *,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cluster_col: str = "cluster_id",
-) -> DataFrame:
-    """SemDeDup (Abbas et al.): cluster-then-dedup over embeddings. Input
-    rows carry a cluster assignment (any clustering — IVF/k-means here);
-    within each cluster, a row is PRUNED when a lower-id cluster-mate has
-    cosine similarity ≥ ``threshold`` (keep-first-by-id — deterministic,
-    engine-reproducible). One row per input vector:
-
-        (id, cluster_id, max_sim_lower, pruned)
-
-    Scale posture: the pairwise compare is BLOCKED by the cluster — the
-    self-join is an equi-join on ``cluster_col`` (Σ cluster² pair volume,
-    the SemDeDup design point: clusters are small relative to the corpus,
-    so this never approaches n²). Mega-cluster skew shares the IVF
-    answer: AQE skew-join split, or re-cluster with larger k."""
-    a = assigned.select(
-        F.col(cluster_col),
-        F.col(id_col).alias("__ida"),
-        F.col(vec_col).alias("__va"),
-    )
-    b = assigned.select(
-        F.col(cluster_col),
-        F.col(id_col).alias("__idb"),
-        F.col(vec_col).alias("__vb"),
-    )
-    sims = (
-        a.join(b, cluster_col)
-        .filter(F.col("__idb") < F.col("__ida"))
-        .select(
-            cluster_col,
-            F.col("__ida").alias(id_col),
-            F.round(cosine_similarity("__va", "__vb"), 6).alias("__sim"),
-        )
-        .groupBy(cluster_col, id_col)
-        .agg(F.max("__sim").alias("max_sim_lower"))
-    )
-    return (
-        assigned.select(id_col, cluster_col)
-        .join(sims, [id_col, cluster_col], "left")
-        .select(
-            id_col,
-            cluster_col,
-            F.coalesce("max_sim_lower", F.lit(-1.0)).alias("max_sim_lower"),
-            (F.coalesce("max_sim_lower", F.lit(-1.0)) >= threshold).alias("pruned"),
         )
     )
 

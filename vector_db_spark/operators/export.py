@@ -42,8 +42,8 @@ SEP = "\x1f"
 
 def hex_value(h: Column, start: int, nibbles: int) -> Column:
     """Integer value of ``nibbles`` hex digits of ``h`` starting at 1-based
-    ``start`` — instr arithmetic, reproducible in any SQL engine (the same
-    idiom as ``functions.text.simhash64``). ≤ 15 nibbles fits a bigint."""
+    ``start`` — instr arithmetic, reproducible in any SQL engine.
+    ≤ 15 nibbles fits a bigint."""
     assert 1 <= nibbles <= 15
     val: Column = F.lit(0)
     for i in range(nibbles):

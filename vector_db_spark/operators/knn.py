@@ -27,7 +27,6 @@ the result set deterministic and engine-independent.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import numpy as np
@@ -290,58 +289,4 @@ def adaptive_filtered_knn(
         )
     return index.search(
         queries, k, n_probe, metric=metric, allowed_ids=allowed_ids
-    )
-
-
-def hard_negatives(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 10,
-    *,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    query_label_col: str = "query_label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Hard-negative mining for contrastive/embedding training: per query,
-    the k nearest corpus vectors whose label DIFFERS from the query's —
-    the near-but-wrong examples a bi-encoder trains against.
-
-    Same physical shape as ``knn_join(impl="sql")`` with the label
-    disequality folded into the broadcast join condition: the corpus
-    streams map-side against broadcast queries, the mismatch filter runs
-    inside codegen before any distance math, and only per-query top-k
-    rows reach the window. At deployment scale the corpus side is the
-    IVF/LSH candidate set rather than the full scan — the mining rule
-    (filter ≠ label, then top-k) is identical.
-
-    Returns ``(query_id, neighbor_id, neighbor_label, dist, rank)``.
-    """
-    if metric not in METRICS:
-        raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("__qv"),
-            F.col(query_label_col).alias("__ql"),
-        )
-    )
-    scored = (
-        corpus.crossJoin(q)
-        .filter(F.col(label_col) != F.col("__ql"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.col(label_col).alias("neighbor_label"),
-            METRICS[metric](F.col("__qv"), F.col(vec_col)).alias("dist"),
-        )
-    )
-    if round_to is not None:
-        scored = scored.withColumn("dist", F.round("dist", round_to))
-    return top_k_per_group(
-        scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
     )

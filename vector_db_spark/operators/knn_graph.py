@@ -287,91 +287,6 @@ def graph_connectivity(graph: DataFrame, id_col: str = "vec_id") -> float:
     return len(seen & nodes) / len(nodes)
 
 
-def pagerank_from_edges(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    *,
-    nodes: DataFrame | None = None,
-    damping: float = 0.85,
-    n_iter: int = 15,
-) -> DataFrame:
-    """(id, rank): power-iteration PageRank over a directed edge list —
-    the centrality companion to :func:`components_from_edges` (e.g. rank
-    documents by their k-NN-graph centrality to pick diverse/central
-    exemplars for curation).
-
-    Spark shape per iteration: one equi-join of the (degree-annotated)
-    edge list against the rank vector + one partial-aggregated
-    ``groupBy(dst)`` — the standard Pregel message pattern. Dangling mass
-    (nodes with no out-edges) is a one-scalar aggregate redistributed
-    uniformly, so ranks sum to 1 every iteration. ``localCheckpoint``
-    keeps lineage O(1). Float summation order varies with partitioning,
-    so downstream consumers must round before any cross-run comparison
-    (tests pin agreement with a single-node reference to 1e-9)."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-    )
-    if nodes is None:
-        node_df = e.select("src").union(e.select(F.col("dst").alias("src"))).distinct()
-    else:
-        c = nodes.columns[0]
-        node_df = nodes.select(F.col(c).alias("src")).distinct()
-    deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
-    # dangling flag resolved ONCE into the (checkpointed) node table off
-    # the materialized edge set — the pre-r9 per-iteration anti-join
-    # against the UNPINNED deg recomputed the full edge build every round
-    # (measured: the dominant term of copurchase_ppr_expansion at sf0.1)
-    node_df = (
-        node_df.join(
-            ed.select("src").distinct().withColumn("__has_out", F.lit(True)),
-            "src",
-            "left",
-        )
-        .select("src", F.coalesce("__has_out", F.lit(False)).alias("__has_out"))
-        .localCheckpoint(eager=True)
-    )
-    n = node_df.count()
-    if n == 0:
-        return node_df.select(F.col("src").alias("id"), F.lit(0.0).alias("rank"))
-    ranks = node_df.select("src", "__has_out", F.lit(1.0 / n).alias("rank"))
-    for it in range(n_iter):
-        contrib = (
-            ed.join(ranks.select("src", "rank"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("c"))
-            .withColumnRenamed("dst", "src")
-        )
-        # dangling mass as a broadcast one-row aggregate, so the whole
-        # iteration (contrib + dangling + update) materializes as ONE job
-        # at the checkpoint — no separate driver collect per round. The
-        # filter on the precomputed flag replaces the old anti-join (same
-        # node set: nodes absent from the degree table).
-        dang = ranks.filter(~F.col("__has_out")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang")
-        )
-        ranks = (
-            node_df.join(contrib, "src", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "src",
-                "__has_out",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce("c", F.lit(0.0)) + F.col("dang") / n)
-                ).alias("rank"),
-            )
-        )
-        # checkpoint every 3rd round: bounded lineage (≤3 join layers)
-        # without paying a materialization job per iteration
-        if it % 3 == 2 or it == n_iter - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(F.col("src").alias("id"), "rank")
-
-
 def _undirected_edges(
     edges: DataFrame, src_col: str, dst_col: str, *, assume_canonical: bool = False
 ) -> DataFrame:
@@ -1566,10 +1481,9 @@ def personalized_pagerank(
     (local community detection), where global PageRank answers a
     different question entirely.
 
-    Same per-iteration budget as :func:`pagerank_from_edges` (one
-    degree-annotated edge join + one partial-aggregated groupBy, O(1)
-    lineage via localCheckpoint); the restart vector is a broadcast flag
-    column. Ranks sum to 1 every iteration."""
+    Per iteration: one degree-annotated edge join + one partial-aggregated
+    groupBy, O(1) lineage via localCheckpoint; the restart vector is a
+    broadcast flag column. Ranks sum to 1 every iteration."""
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()

@@ -99,7 +99,7 @@ def merge_agg_delta(
     result equals a full recompute over (base ∪ batch) — without touching
     the base data. sum/count/min/max merge by construction (distributive);
     avg derives as sum/count downstream; non-distributive aggregates
-    (distinct, median) need sketches (see `distinct_users_sketch`).
+    (distinct, median) need sketches (see ``operators/sketches.py``).
 
     One union + one keyed aggregation over |prev ∪ delta| GROUP ROWS (the
     aggregate cardinality, not the corpus) — at 100 TB the whole point:

@@ -10,7 +10,7 @@ pipeline is the idiomatic distributed one:
   punctuation ratio, mean token length) — computed inside whole-stage
   codegen during the scan, never a Python featurizer.
 * **The train/test split is content-hash membership** (md5 bucket, the
-  same idiom as ``curation.mixture_resample``) — reproducible across
+  same idiom as ``curation.group_safe_split``) — reproducible across
   engines and partitionings, unlike ``randomSplit`` whose assignment
   depends on partition layout.
 * **Training is pyspark.ml LogisticRegression** — a distributed LBFGS

@@ -140,160 +140,6 @@ def decode_image_features(
     )
 
 
-def resize_images(df: DataFrame, width: int, height: int, *, decoder: str = "strict") -> DataFrame:
-    """(media_id, payload, meta): re-encode at target size. Fake decoder
-    truncates/pads bytes deterministically and rewrites meta — exercising
-    the payload-out path (binary → binary)."""
-    if decoder == "strict":
-        raise NotImplementedError(
-            "image resize requires PIL, not installed; use decoder='fake'"
-        )
-
-    target_len = width * height // 64
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = [
-                (p or b"").ljust(target_len, b"\0")[:target_len] for p in pdf["payload"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["media_id"].values, "payload": out,
-                                "width": width, "height": height})
-
-    return df.filter(F.col("kind") == "image").select("media_id", "payload").mapInPandas(
-        kernel, "media_id long, payload binary, width int, height int"
-    )
-
-
-def extract_audio_windows(
-    df: DataFrame, window_ms: int = 1000, *, dim: int = 8, decoder: str = "strict"
-) -> DataFrame:
-    """One row per fixed-length audio window (media_id, window_idx, ts_ms,
-    features) — the audio twin of :func:`sample_video_frames` (MFCC-style
-    frame features for audio training pipelines). Window count is exact
-    arithmetic on ``meta.duration_ms``; fake features are md5-seeded from
-    (payload, window_idx).
-
-    Real implementation point: librosa.load(io.BytesIO(payload)) →
-    per-window mfcc/fbank. Same explode-shaped kernel either way."""
-    if decoder == "strict":
-        raise NotImplementedError(
-            "audio decoding requires librosa/soundfile, not installed; "
-            "use decoder='fake'"
-        )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                n = max(1, int((r["duration_ms"] or 0) // window_ms))
-                for i in range(n):
-                    rows.append(
-                        (
-                            r["media_id"],
-                            i,
-                            i * window_ms,
-                            _fake_features((r["payload"] or b"") + i.to_bytes(4, "big"), dim),
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["media_id", "window_idx", "ts_ms", "features"]
-                )
-
-    return (
-        df.filter(F.col("kind") == "audio")
-        .select("media_id", "payload", F.col("meta.duration_ms").alias("duration_ms"))
-        .mapInPandas(
-            kernel, "media_id long, window_idx int, ts_ms int, features array<float>"
-        )
-    )
-
-
-def resample_audio(
-    df: DataFrame, target_rate: int, *, decoder: str = "strict"
-) -> DataFrame:
-    """(media_id, payload, sample_rate, duration_ms): re-encode audio at a
-    target sample rate — the binary-in → binary-out audio kernel (the
-    16 kHz-normalization step every speech pipeline runs). The fake decoder
-    rescales the byte length by ``target_rate / meta.sample_rate``
-    (truncate or zero-pad), so output payload size is exact arithmetic;
-    duration is preserved."""
-    if decoder == "strict":
-        raise NotImplementedError(
-            "audio resampling requires librosa/soxr, not installed; "
-            "use decoder='fake'"
-        )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            outs = []
-            for _, r in pdf.iterrows():
-                p = r["payload"] or b""
-                rate = int(r["sample_rate"] or target_rate)
-                n = max(1, int(len(p) * target_rate // max(rate, 1)))
-                outs.append((r["media_id"], p.ljust(n, b"\0")[:n], target_rate,
-                             r["duration_ms"]))
-            yield pd.DataFrame(
-                outs, columns=["media_id", "payload", "sample_rate", "duration_ms"]
-            )
-
-    return (
-        df.filter(F.col("kind") == "audio")
-        .select(
-            "media_id",
-            "payload",
-            F.col("meta.sample_rate").alias("sample_rate"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        )
-        .mapInPandas(
-            kernel, "media_id long, payload binary, sample_rate int, duration_ms int"
-        )
-    )
-
-
-def sample_video_frames(
-    df: DataFrame, every_ms: int = 1000, *, decoder: str = "strict"
-) -> DataFrame:
-    """One row per sampled frame (media_id, frame_idx, ts_ms, features) —
-    the explode-shaped kernel (1 video → N frames) that frame-level
-    training pipelines need. Fake decoder derives frame count from
-    meta.duration_ms."""
-    if decoder == "strict":
-        raise NotImplementedError(
-            "video decoding requires ffmpeg bindings, not installed; "
-            "use decoder='fake'"
-        )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                n = max(1, int((r["duration_ms"] or 0) // every_ms))
-                for i in range(n):
-                    rows.append(
-                        (
-                            r["media_id"],
-                            i,
-                            i * every_ms,
-                            _fake_features((r["payload"] or b"") + i.to_bytes(4, "big"), 8),
-                        )
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["media_id", "frame_idx", "ts_ms", "features"]
-                )
-
-    return (
-        df.filter(F.col("kind") == "video")
-        .select("media_id", "payload", F.col("meta.duration_ms").alias("duration_ms"))
-        .mapInPandas(kernel, "media_id long, frame_idx int, ts_ms int, features array<float>")
-    )
-
-
 def media_hash60(
     df: DataFrame, *, decoder: str = "strict", hash_col: str = "phash"
 ) -> DataFrame:

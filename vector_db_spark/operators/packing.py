@@ -5,7 +5,7 @@ pipeline runs between "cleaned corpus" and "batched examples".
 North-star extension (the reference has no training-data surface). The
 strategy is the standard one: documents are hash-sharded (shards =
 parallel writers; membership is content-hash-deterministic, so reruns and
-engines agree — the same argument as ``stratified_sample_det``), laid out
+engines agree), laid out
 in id order within their shard, and every ``budget`` tokens starts a new
 pack. A document belongs to the pack containing its first token.
 

@@ -1,14 +1,10 @@
 """Similarity search beyond exact brute force: LSH-bucketed ANN.
 
-Two interchangeable blockers:
-
-- ``hyperplane_lsh_buckets`` — sign-of-dot-product random hyperplanes.
-  The hyperplanes are module-level constants from a seeded RNG and are
-  embedded as array literals into both the Spark plan and the DuckDB
-  oracle SQL, so the whole ANN pipeline is *exactly* reproducible (unlike
-  pyspark.ml's LSH, whose model state is opaque).
-- ``brp_lsh_similarity_join`` — pyspark.ml BucketedRandomProjectionLSH
-  ``approxSimilarityJoin``, the built-in cross-check (rows-only).
+The blocker is ``hyperplane_lsh_buckets`` — sign-of-dot-product random
+hyperplanes. The hyperplanes are module-level constants from a seeded RNG
+and are embedded as array literals into both the Spark plan and the DuckDB
+oracle SQL, so the whole ANN pipeline is *exactly* reproducible (unlike
+pyspark.ml's LSH, whose model state is opaque).
 
 Search = bucket queries with the same hyperplanes → equi-join on
 (table_idx, bucket) → exact distance → per-query top-k. With L tables of
@@ -366,86 +362,10 @@ def lsh_search(
     )
 
 
-def brp_lsh_similarity_join(
-    df: DataFrame,
-    threshold: float,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Built-in cross-check: pyspark.ml BucketedRandomProjectionLSH
-    approxSimilarityJoin on euclidean distance (rows-only; model state is
-    not engine-reproducible)."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(
-        F.col(id_col), array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    ).fit(feat)
-    joined = model.approxSimilarityJoin(feat, feat, threshold, distCol="dist")
-    return (
-        joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.round("dist", 6).alias("dist"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-
-
 def oracle_hyperplane_literal_sql(table_idx: int, bit_idx: int) -> str:
     """The same hyperplane as a DuckDB array literal (oracle SQL builder)."""
     vals = ", ".join(repr(x) for x in HYPERPLANES[table_idx][bit_idx])
     return f"[{vals}]::DOUBLE[]"
-
-
-def radius_search(
-    queries: DataFrame,
-    corpus: DataFrame,
-    radius: float,
-    *,
-    metric: str = "euclidean",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Range query: every corpus vector within ``radius`` of each query
-    (the reference's k-NN surface, ivf.py:138-199, answers "closest k";
-    range search answers "all within ε" — the other half of a similarity
-    API, and the primitive under ε-near-duplicate sweeps).
-
-    Exact form: the query table is broadcast and the corpus is scanned
-    once map-side — distance + filter inside codegen, NO corpus shuffle
-    at any radius (a k-NN needs a top-k exchange; a range query does
-    not). Scales to arbitrary corpus size; for many queries compose with
-    the LSH/IVF blockers above to make the per-query candidate set
-    sublinear first.
-    """
-    dist_fn = METRICS[metric]
-    q = queries.select(
-        F.col(query_id_col).alias("__qid"), F.col(query_vec_col).alias("__qv")
-    )
-    dist = F.round(dist_fn(F.col(vec_col), F.col("__qv")), 6)
-    return (
-        corpus.crossJoin(F.broadcast(q))
-        .select(
-            F.col("__qid").alias(query_id_col),
-            F.col(id_col).alias("neighbor_id"),
-            dist.alias("dist"),
-        )
-        .filter(F.col("dist") <= radius)
-    )
 
 
 def sparse_cosine_pairs(

@@ -30,11 +30,9 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def audit_plan(df: DataFrame, *, allow: tuple[str, ...] = ()) -> list[Finding]:
+def audit_plan(df: DataFrame) -> list[Finding]:
     """Scan a DataFrame's physical plan for patterns that do not survive
-    scale-up. Returns findings ordered most-severe first; ``allow`` mutes
-    specific codes (e.g. ``allow=("nested-loop-join",)`` for a deliberate
-    broadcast-everything radius search).
+    scale-up. Returns findings ordered most-severe first.
 
     | code | severity | meaning |
     |---|---|---|
@@ -49,8 +47,7 @@ def audit_plan(df: DataFrame, *, allow: tuple[str, ...] = ()) -> list[Finding]:
     findings: list[Finding] = []
 
     def add(sev: str, code: str, detail: str) -> None:
-        if code not in allow:
-            findings.append(Finding(sev, code, detail))
+        findings.append(Finding(sev, code, detail))
 
     if "CartesianProduct" in plan:
         add("error", "cartesian-product", "CartesianProduct join: O(n·m) row pairing with no broadcast bound")
@@ -83,10 +80,10 @@ def audit_plan(df: DataFrame, *, allow: tuple[str, ...] = ()) -> list[Finding]:
     return findings
 
 
-def assert_scales(df: DataFrame, *, allow: tuple[str, ...] = ()) -> None:
+def assert_scales(df: DataFrame) -> None:
     """Raise ``AssertionError`` listing every error-severity finding —
     the one-liner for test suites and pipeline pre-flight checks."""
-    errors = [f for f in audit_plan(df, allow=allow) if f.severity == "error"]
+    errors = [f for f in audit_plan(df) if f.severity == "error"]
     if errors:
         raise AssertionError(
             "plan does not scale: " + "; ".join(f"[{f.code}] {f.detail}" for f in errors)

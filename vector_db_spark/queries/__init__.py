@@ -1,22 +1,20 @@
-"""Registry of driver-checkable queries.
+"""Registry of oracle-checked queries.
+
+Every query registers with DuckDB oracle SQL over the same fixture tables.
+Deterministic operators are hash-checked value by value; model-derived
+operators (k-means ANN, stub embeddings) register an *invariant projection*
+— the query runs the full operator pipeline, then emits exactly-checkable
+facts (self-hit rank, recall ≥ floor, arity, norms) that the oracle
+reproduces.
 
 Two tiers:
 
-- ``QUERIES``/``ORACLES`` — the **driver contract** (exposed through
-  ``__spark_entry__``). The correctness driver verifies at most 50 queries
-  per round (r01 recorded rows for exactly the first 50 registry entries),
-  so this tier is capped at 50 entries chosen to cover every operator
-  family in SURVEY.md §2 plus the LLM-pipeline extensions. Every entry has
-  a DuckDB oracle: deterministic operators are hash-checked value-by-value;
-  model-derived operators (k-means ANN, stub embeddings) register an
-  *invariant projection* — the query runs the full operator pipeline, then
-  emits exactly-checkable facts (self-hit rank, recall ≥ floor, arity,
-  norms) that the oracle reproduces, which is strictly stronger than a
-  rows-only check.
-- ``EXTRA_QUERIES``/``EXTRA_ORACLES`` — additional variants (alternate
-  physical strategies, redundant relational demos, superseded shapes) kept
-  oracle-tested locally in ``tests/test_queries_oracle.py`` and available
-  to ``bench.py``, but not spent against the driver's 50-row budget.
+- ``QUERIES``/``ORACLES`` — the **driver contract**, exposed through
+  ``__spark_entry__`` and capped at ``DRIVER_QUERY_BUDGET`` entries.
+- ``EXTRA_QUERIES``/``EXTRA_ORACLES`` — the remaining ``bench.py`` headline
+  rows (``extra=True`` at the ``@register`` site). ``tests/test_queries_oracle.py``
+  oracle-checks both tiers and requires every extra-tier query to be a
+  headline row.
 
 Column-name discipline: every computed column is aliased identically in the
 Spark code and the oracle SQL (the driver hash compares columns by name).
@@ -39,124 +37,14 @@ EXTRA_ORACLES: dict[str, str] = {}
 
 DRIVER_QUERY_BUDGET = 50
 
-# --- Driver-tier rotation ledger (COVERAGE.md "Driver-tier rotation
-# policy"). The driver tier is a rotating 50-slot window: every operator
-# family spends at least one round with a hard driver row, then may yield
-# its slot to a family that has none. Rotation is recorded HERE, not by
-# editing every @register site: names in DRIVER_PROMOTED take a driver
-# slot regardless of their registration's extra=True; names in
-# DRIVER_DEMOTED move to the extra tier (still oracle-tested in
-# tests/test_queries_oracle.py under the identical value-hash discipline,
-# and still available to bench.py).
-#
-# Round 8: promote the four r7-new registrations (VERDICT r7 item 1 /
-# COVERAGE.md r8 rotation plan) — embedding_decontaminate (the one FAMILY
-# with no driver row, leading), its blocked scale twin, and the two
-# scale-safe artifact twins whose families have older driver rows but
-# whose driver-checked artifact should be the scale-safe form
-# (hnsw_export_derived_k, stream_first_seen_native). Four r7 promotions
-# yield slots, preferring rows whose family keeps other driver coverage:
-# cooccurrence_budget_audit (family keeps cooccurrence_capped_triangles),
-# udaf_event_median / udtf_token_positions (single-purpose surface pins,
-# green in CORRECTNESS_r07), sq8_search (hands back to the PQ/OPQ/BQ
-# quantization-ladder driver rows). All rotate cleanly: every one of the
-# eight registers extra=True statically, so membership here is the whole
-# edit. The 16 remaining r7 promotions keep their slots (green r07).
-#
-# Round 9: promote the two r8-new registrations (VERDICT r8 item 1 /
-# COVERAGE.md r9 rotation plan) — incremental_dedup_indexed (shares
-# incremental_dedup's oracle SQL, so its driver hash is an
-# index-vs-rederive equivalence proof for the persisted DedupIndex) and
-# percolate_scaled_subscriptions (the matching-volume curve as a hard
-# driver row; percolation's older percolate_alerts row is r0x-era). Two
-# r8 promotions yield slots, each family keeping other r08-green driver
-# coverage: embedding_decontaminate_blocked (family keeps the exact
-# form's row with its pair_budget audit facts) and
-# stream_first_seen_native (streaming keeps stream_hourly_counts and
-# stream_ingest_cluster_counts).
-DRIVER_PROMOTED = frozenset(
-    {
-        # the four r6-new families
-        "record_linkage_customers",
-        "decayed_event_type_scores",
-        "cooccurrence_capped_triangles",
-        # never-driver-seen operator families (r7 wave, staying)
-        "ann_lsh_multiprobe",
-        "asof_nearest_order",
-        "incremental_dedup",
-        "winnow_dup_candidates",
-        "prefix_filter_jaccard",
-        "association_rules",
-        "cusum_level_shifts",
-        "ewma_purchase_values",
-        "jl_projection_audit",
-        "node2vec_biased_walks",
-        "graph_skipgram_pairs",
-        "copurchase_ktruss",
-        "corpus_drift_js",
-        # r8 wave: r7-new registrations still holding slots
-        "embedding_decontaminate",
-        "hnsw_export_derived_k",
-        # r9 wave: the two r8-new registrations
-        "incremental_dedup_indexed",
-        "percolate_scaled_subscriptions",
-    }
-)
-DRIVER_DEMOTED = frozenset(
-    {
-        # statically-driver rows rotated out in r5/r6 (stay demoted)
-        "frequent_event_itemsets",
-        "sequential_event_patterns",
-        "coverage_exemplar_stochastic",
-        "trend_mann_kendall",
-        "knn_pagerank",
-        "opq_adc_recall",
-        "bpe_merges",
-        "heavy_hitter_tokens",
-        "versioned_layout_audit",
-        "copurchase_als_recs",
-        "stream_query_serving",
-        "repeated_spans",
-        "semdedup_prune",
-        "kmv_orderkey_overlap",
-        "cms_token_freq",
-        "mixture_resample",
-        # r7: four more multi-round-green rows yield slots (see above)
-        "asof_last_order",
-        "ann_lsh_search",
-        "near_dup_jaccard",
-        "events_json_filter",
-        # r8: four r7 promotions rotate back after going green in r07
-        # (they register extra=True statically — listed here for the
-        # ledger record; removal from PROMOTED is what rotates them)
-        "cooccurrence_budget_audit",
-        "udaf_event_median",
-        "udtf_token_positions",
-        "sq8_search",
-        # r9: two r8 promotions rotate back after going green in r08
-        # (extra=True statically; removal from PROMOTED is the rotation)
-        "embedding_decontaminate_blocked",
-        "stream_first_seen_native",
-    }
-)
-assert not (DRIVER_PROMOTED & DRIVER_DEMOTED)
 
-
-def register(
-    name: str, oracle: str | None = None, *, extra: bool = False
-) -> Callable[[QueryFn], QueryFn]:
-    if name in DRIVER_PROMOTED:
-        extra = False
-    elif name in DRIVER_DEMOTED:
-        extra = True
-
+def register(name: str, oracle: str, *, extra: bool = False) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES or name in EXTRA_QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         queries, oracles = (EXTRA_QUERIES, EXTRA_ORACLES) if extra else (QUERIES, ORACLES)
         queries[name] = fn
-        if oracle is not None:
-            oracles[name] = oracle
+        oracles[name] = oracle
         return fn
 
     return deco
@@ -190,12 +78,4 @@ from vector_db_spark.queries import pysource  # noqa: E402,F401  isort: skip
 assert len(QUERIES) <= DRIVER_QUERY_BUDGET, (
     f"{len(QUERIES)} driver queries registered, budget is {DRIVER_QUERY_BUDGET}; "
     "move variants to extra=True"
-)
-
-# rotation names must resolve: a typo'd ledger entry would otherwise no-op
-# silently and leave the intended query in the wrong tier — the same
-# fail-loudly policy as the unconditional module imports above
-_unknown_rotation = (DRIVER_PROMOTED | DRIVER_DEMOTED) - QUERIES.keys() - EXTRA_QUERIES.keys()
-assert not _unknown_rotation, (
-    f"rotation ledger names not in the registry: {sorted(_unknown_rotation)}"
 )

@@ -32,7 +32,7 @@ CHUNK_TOP_K = 5
 
 @register(
     "chunk_manifest",
-    extra=True,  # demoted r4 closing: chunking family keeps chunk_semantic_search as its driver row
+    extra=True,
     oracle=f"WITH c AS ({_BASE}) "
     "SELECT doc_id, chunk_idx::BIGINT AS chunk_idx, "
     "chunk_start::BIGINT AS chunk_start, "

@@ -21,13 +21,10 @@ from vector_db_spark.operators.curation import (
     bigram_doc_scores,
     boilerplate_stats,
     decontaminate_ngrams,
-    mixture_resample,
     pii_scrub,
     repetition_stats,
-    unigram_doc_scores,
 )
 from vector_db_spark.operators.hybrid import bm25_topk, cosine_topk, rrf_fuse
-from vector_db_spark.operators.similarity import radius_search
 from vector_db_spark.queries import register
 
 _TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
@@ -51,7 +48,7 @@ def _grams_sql(n: int, src: str = "documents", distinct: bool = False) -> str:
 
 @register(
     "doc_repetition",
-    extra=True,  # demoted r4: green r02+r03 driver record; text-quality family keeps doc_quality/lang_id rows
+    extra=True,
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS t FROM documents),
 c2 AS (SELECT doc_id, max(c) AS top2_cnt, sum(c) AS n2
@@ -80,7 +77,7 @@ _BP_MIN_DF = 3
 
 @register(
     "boilerplate_frac",
-    extra=True,  # demoted r4: green r03 driver record; same family coverage
+    extra=True,
     oracle=f"""
 WITH sh AS ({_grams_sql(4, distinct=True)}),
 df AS (SELECT g, count(*) AS df FROM sh GROUP BY g)
@@ -178,7 +175,6 @@ _EDECON_PAIR_BUDGET = 50_000_000
 
 @register(
     "embedding_decontaminate",
-    extra=True,
     oracle=f"""
 WITH b AS (SELECT embedding FROM embeddings WHERE vec_id % {_TEST_MOD} = 0),
 c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % {_TEST_MOD} <> 0),
@@ -323,50 +319,7 @@ def pii_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pii_scrub(load_table(spark, sf_dir, "documents"), denylist=_DENY)
 
 
-# --- mixture resampling ------------------------------------------------------
-
-# downweight the even-numbered sources to 25% — a stand-in for "keep a
-# quarter of the web crawl, all of the curated sources"
-_MIX_WEIGHTS = {f"src{i}": 0.25 for i in range(0, 20, 2)}
-_MIX_IN = ", ".join(f"'{s}'" for s in _MIX_WEIGHTS)
-
-@register(
-    "mixture_resample",
-    oracle=f"""
-SELECT doc_id, source, lang FROM (
-  SELECT doc_id, source, lang,
-    (strpos('0123456789abcdef', substring(md5(doc_id::VARCHAR || ':mix'), 1, 1)) - 1) * 16
-  + (strpos('0123456789abcdef', substring(md5(doc_id::VARCHAR || ':mix'), 2, 1)) - 1)
-    AS bucket
-  FROM documents)
-WHERE bucket < CASE WHEN source IN ({_MIX_IN}) THEN 64 ELSE 256 END
-""",
-)
-def mixture_resample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mixture_resample(
-        load_table(spark, sf_dir, "documents"), _MIX_WEIGHTS
-    ).select("doc_id", "source", "lang")
-
-
-# --- unigram-LM scoring (extra tier: lm_bits is float-sum-order sensitive
-# below the 2-decimal rounding, so it stays under local-pytest discipline) ----
-
-@register(
-    "unigram_lm_score",
-    extra=True,
-    oracle=f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
-vocab AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY tok),
-total AS (SELECT sum(cnt) AS total FROM vocab)
-SELECT doc_id, count(*)::BIGINT AS n_tokens,
-       round(sum(cnt) / count(*), 6) AS avg_tok_freq,
-       round(avg(-log2(cnt / total)), 2) AS lm_bits
-FROM toks JOIN vocab USING (tok) CROSS JOIN total
-GROUP BY doc_id
-""",
-)
-def unigram_lm_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return unigram_doc_scores(load_table(spark, sf_dir, "documents"))
+# --- bigram-LM scoring --------------------------------------------------------
 
 
 @register(
@@ -477,139 +430,6 @@ def hybrid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rrf_score",
         F.col("fused_rank").cast("long").alias("fused_rank"),
     )
-
-
-# --- radius (range) vector search --------------------------------------------
-
-_RADIUS = 1.2
-_R_QUERIES = 5
-
-@register(
-    "radius_search",
-    # demoted to extra in r4 to free a driver-tier slot for
-    # node_table_crud_audit (the knn family stays driver-covered by
-    # knn_exact_batch/knn_filtered/semantic_search_docs); still
-    # oracle-tested locally + benched
-    extra=True,
-    oracle=f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-  FROM embeddings WHERE vec_id < {_R_QUERIES}
-)
-SELECT q.query_id, c.vec_id AS neighbor_id,
-       round(list_distance(q.qv, c.embedding::DOUBLE[]), 6) AS dist
-FROM q CROSS JOIN embeddings c
-WHERE round(list_distance(q.qv, c.embedding::DOUBLE[]), 6) <= {_RADIUS}
-""",
-)
-def radius_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All corpus vectors within ε of each query — map-only, no corpus
-    shuffle at any scale (operators/similarity.py:radius_search)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _R_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return radius_search(queries, emb, _RADIUS)
-
-
-# --- cross-doc repeated spans (exact substring-dedup analog) ------------------
-
-_SPAN_N = 8
-
-_REPEATED_SPANS_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-pos AS (
-  SELECT doc_id, p - 1 AS pos,
-         md5(array_to_string(list_slice(t, p, p + {_SPAN_N} - 1), ' ')) AS gram
-  FROM toks, LATERAL (
-    SELECT unnest(range(1, greatest(len(t) - {_SPAN_N} + 2, 1))) AS p
-  )
-),
-rep AS (SELECT gram FROM pos GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2),
-flag AS (SELECT doc_id, pos FROM pos JOIN rep USING (gram)),
-isl AS (
-  SELECT doc_id, pos,
-         CASE WHEN lag(pos) OVER w IS NULL
-                   OR pos > lag(pos) OVER w + {_SPAN_N - 1}
-              THEN 1 ELSE 0 END AS ni
-  FROM flag WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-isl2 AS (
-  SELECT doc_id, pos,
-         SUM(ni) OVER (PARTITION BY doc_id ORDER BY pos) AS island
-  FROM isl
-),
-cov AS (
-  SELECT doc_id, island, MAX(pos) - MIN(pos) + {_SPAN_N} AS covered
-  FROM isl2 GROUP BY doc_id, island
-),
-per AS (
-  SELECT doc_id, SUM(covered) AS rep_tokens, COUNT(*) AS n_spans
-  FROM cov GROUP BY doc_id
-),
-st AS (SELECT doc_id, COUNT(*) AS n_rep_starts FROM flag GROUP BY doc_id)
-SELECT tk.doc_id,
-       (CASE WHEN len(trim(d.text)) = 0 THEN 0 ELSE len(tk.t) END)::BIGINT
-         AS n_tokens,
-       COALESCE(st.n_rep_starts, 0)::BIGINT AS n_rep_starts,
-       COALESCE(per.n_spans, 0)::BIGINT AS n_spans,
-       round(least(COALESCE(per.rep_tokens, 0) * 1.0 / len(tk.t), 1.0), 6)
-         AS rep_token_frac
-FROM toks tk JOIN documents d USING (doc_id)
-LEFT JOIN st USING (doc_id) LEFT JOIN per USING (doc_id)
-"""
-
-
-@register("repeated_spans", oracle=_REPEATED_SPANS_ORACLE)
-def repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document repeated token spans (operators/dedup.py
-    repeated_ngram_spans): the Spark-shaped equivalent of suffix-array
-    exact substring dedup — positional n-gram digests, one distinct-doc
-    aggregation on the digest, gaps-and-islands span merge keyed by doc.
-    Emits the per-doc repeated-token fraction a cleaning pipeline
-    thresholds on."""
-    from vector_db_spark.operators.dedup import repeated_ngram_spans
-
-    docs = load_table(spark, sf_dir, "documents")
-    return repeated_ngram_spans(docs, n=_SPAN_N, min_docs=2)
-
-
-# --- SemDeDup: cluster-then-dedup over embeddings -----------------------------
-
-_SEM_TAU = 0.9
-
-_SEMDEDUP_ORACLE = f"""
-WITH a AS (
-  SELECT label AS cluster_id, vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
-s AS (
-  SELECT x.cluster_id, x.vec_id,
-         MAX(round(list_cosine_similarity(x.v, y.v), 6)) AS max_sim_lower
-  FROM a x JOIN a y
-    ON x.cluster_id = y.cluster_id AND y.vec_id < x.vec_id
-  GROUP BY x.cluster_id, x.vec_id
-)
-SELECT a.vec_id, a.cluster_id,
-       COALESCE(s.max_sim_lower, -1.0) AS max_sim_lower,
-       COALESCE(s.max_sim_lower, -1.0) >= {_SEM_TAU} AS pruned
-FROM a LEFT JOIN s
-  ON a.vec_id = s.vec_id AND a.cluster_id = s.cluster_id
-"""
-
-
-@register("semdedup_prune", oracle=_SEMDEDUP_ORACLE)
-def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (operators/dedup.py semantic_dedup): embedding-level
-    near-duplicate pruning BLOCKED by a cluster assignment — the pairwise
-    cosine compare is an equi-join on the cluster, never a corpus
-    crossJoin. Keep-first-by-id survivor rule, deterministic in any
-    engine. The fixture clustering is the corpus ``label`` column (any
-    clustering slots in — IVF assignment at deployment)."""
-    from vector_db_spark.operators.dedup import semantic_dedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned = emb.select("vec_id", "embedding", F.col("label").alias("cluster_id"))
-    return semantic_dedup(assigned, threshold=_SEM_TAU)
 
 
 # --- ML quality/language classifier audit -------------------------------------
@@ -857,7 +677,6 @@ _PERC_SCALE_MIN_SUBS = 8
 
 @register(
     "percolate_scaled_subscriptions",
-    extra=True,
     oracle=f"""
 WITH dt AS (SELECT DISTINCT doc_id, unnest({_TOKS}) AS tok FROM documents),
 nd AS (SELECT greatest({_PERC_SCALE_MIN_SUBS},
@@ -1071,7 +890,6 @@ SELECT na::BIGINT AS n_tokens_a, nb::BIGINT AS n_tokens_b, v::BIGINT AS vocab_un
        round(CAST(sum(contrib) AS DOUBLE), 6) AS js_divergence
 FROM c GROUP BY 1, 2, 3
 """,
-    extra=True,
 )
 def corpus_drift_js(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crawl-over-crawl drift alarm (curation.token_distribution_drift):

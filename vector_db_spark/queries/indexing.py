@@ -114,13 +114,6 @@ def ivf_centroids_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _centroids_flat(spark, sf_dir)
 
 
-# --- V11 assignment -----------------------------------------------------------
-
-@register("ivf_assign_det", extra=True, oracle=_ASSIGN_SQL)  # demoted r4: assignment exercised inside both driver IVF searches
-def ivf_assign_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _assign(spark, sf_dir)
-
-
 # --- V13 n_probe search (+V8 top-k), fully deterministic ------------------------
 
 def ivf_det_search(
@@ -204,44 +197,6 @@ def ivf_search_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- A3: k-means itself as aggregation — one deterministic Lloyd step ---------
-
-@register(
-    "ivf_lloyd_step_det",
-    extra=True,
-    oracle=f"""
-WITH assign AS ({_ASSIGN_SQL})
-SELECT a.cluster_id, i::INTEGER AS dim_idx,
-       CAST(SUM(CAST(v AS DECIMAL(18,9))) AS DOUBLE) / COUNT(*) AS centroid_val
-FROM assign a JOIN (
-  SELECT vec_id, unnest(embedding::DOUBLE[]) AS v, unnest(range(0, {DIM})) AS i
-  FROM embeddings
-) e ON e.vec_id = a.vec_id
-GROUP BY a.cluster_id, i
-""",
-)
-def ivf_lloyd_step_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One Lloyd iteration (reference A3: centroid = mean of assigned
-    vectors, inside scipy.kmeans2 at ivf.py:75): re-aggregate the
-    assignment into new centroids. k-means as a groupBy — the heart of the
-    distributed KMeans fit, decimal-exact."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    assign = _assign(spark, sf_dir)
-    exploded = emb.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim_idx", "v"),
-    )
-    return (
-        assign.join(exploded, "vec_id")
-        .groupBy("cluster_id", "dim_idx")
-        .agg(
-            (
-                F.sum(F.expr("CAST(v AS DECIMAL(18,9))")).cast("double") / F.count("*")
-            ).alias("centroid_val")
-        )
-    )
-
-
 # --- k-means variants, oracle-checked by invariant projection -----------------
 # No SQL oracle can reproduce a k-means fit, but the *contract* of an ANN
 # search is exactly checkable: k results per query, and recall@k against the
@@ -314,39 +269,6 @@ def ivf_search_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = knn_join(queries, emb, TOP_K, impl="batch")
     return _recall_per_query(ann, exact, TOP_K).select(
         "query_id", "n_results", (F.col("recall") >= IVF_RECALL_FLOOR).alias("recall_ok")
-    )
-
-
-@register(
-    "ivf_stats_kmeans",
-    extra=True,
-    oracle="""
-SELECT count(*)::BIGINT AS total_vectors, TRUE AS n_clusters_ok,
-       TRUE AS nonempty_ok, TRUE AS avg_consistent
-FROM embeddings
-""",
-)
-def ivf_stats_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster statistics over the k-means build (reference A1,
-    ivf.py:207-215), as an invariant projection (the k-means partition
-    itself is model-derived; the deterministic stats surface is
-    driver-checked via ``cluster_stats``): conservation (sizes sum to the
-    corpus count — exact), 1 ≤ n_clusters ≤ k, every stored cluster
-    non-empty, and avg == total/n_clusters."""
-    stats = _kmeans_index(spark, sf_dir).stats()
-    return stats.select(
-        F.col("total_vectors"),
-        ((F.col("n_clusters") >= 1) & (F.col("n_clusters") <= 10)).alias(
-            "n_clusters_ok"
-        ),
-        (F.col("min_size") >= 1).alias("nonempty_ok"),
-        (
-            F.abs(
-                F.col("avg_size")
-                - F.col("total_vectors") / F.col("n_clusters")
-            )
-            < 1e-9
-        ).alias("avg_consistent"),
     )
 
 
@@ -470,33 +392,6 @@ def semantic_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "knn_pagerank",
-    oracle="SELECT count(*)::BIGINT AS n_nodes, true AS rank_sum_ok, "
-    "true AS positive_ok FROM embeddings",
-)
-def knn_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank centrality over the exported k-NN graph
-    (operators/knn_graph.py pagerank_from_edges) — invariant projection:
-    the stochastic-vector contract (ranks sum to 1 after dangling-mass
-    redistribution, every rank positive) plus exact node count. Exact
-    rank values are float-sum-order sensitive; tests pin them to 1e-9
-    against a single-node reference instead."""
-    from vector_db_spark.operators.knn_graph import knn_graph, pagerank_from_edges
-
-    idx = _kmeans_index(spark, sf_dir)
-    graph = knn_graph(idx.corpus(), m=GRAPH_M, centroids=idx.centroids())
-    edges = graph.select(
-        F.col("vec_id").alias("src"), F.explode("neighbors").alias("dst")
-    )
-    pr = pagerank_from_edges(edges, nodes=graph.select("vec_id"), n_iter=10)
-    return pr.agg(
-        F.count("*").cast("long").alias("n_nodes"),
-        (F.abs(F.sum("rank") - 1.0) < 1e-9).alias("rank_sum_ok"),
-        (F.min("rank") > 0).alias("positive_ok"),
-    )
-
-
 _SWEEP_PROBES = (1, 2, 4, 10)  # 10 = every cluster → exhaustive
 
 
@@ -589,8 +484,8 @@ WHERE term_rank <= {_TOPIC_TOP_TERMS}
 )
 def cluster_topic_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BERTopic-style topic keywords: documents → deterministic centroid
-    assignment (the literal seeded centroids of ivf_assign_det, so the
-    whole pipeline is engine-reproducible) → per-cluster c-TF-IDF
+    assignment (literal seeded centroids, so the whole pipeline is
+    engine-reproducible) → per-cluster c-TF-IDF
     (``tf · ln(1 + n_clusters/cluster_df)``) → top terms per cluster.
     Embedding clustering and keyword extraction in one verified plan —
     two aggregations over the exploded token stream, windowed top-k."""
@@ -708,7 +603,6 @@ def hnsw_export_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "hnsw_export_derived_k",
-    extra=True,
     oracle=f"""
 WITH nk AS (
   SELECT GREATEST(1, LEAST(count(*) // {MIN_POINTS_PER_CLUSTER},
@@ -872,79 +766,6 @@ def ivf_search_cosine_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_det_search(queries, cents, assign, nemb)
 
 
-# --- density clustering (DBSCAN over the blocked ε-graph) --------------------
-
-_DBSCAN_EPS = 1.16
-_DBSCAN_MIN_PTS = 4
-_DBSCAN_N_PROBE = 2
-
-
-@register(
-    "dbscan_embedding_clusters",
-    extra=True,
-    # promoted r4 closing: first driver row for the density-clustering family
-    oracle=f"""
-WITH RECURSIVE
-cent AS ({_CENT_LIST_SQL}),
-member AS (
-  SELECT vec_id, embedding, cluster_id FROM (
-    SELECT e.vec_id, e.embedding, c.cluster_id,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY round(list_distance(e.embedding::DOUBLE[], c.centroid), 6),
-                      c.cluster_id) AS rn
-    FROM embeddings e CROSS JOIN cent c) WHERE rn <= {_DBSCAN_N_PROBE}),
-pairs AS (
-  SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
-  FROM member a JOIN member b ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
-  WHERE round(list_distance(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6)
-        <= {_DBSCAN_EPS}),
-und AS (SELECT va s, vb t FROM pairs UNION ALL SELECT vb, va FROM pairs),
-deg AS (SELECT s, count(*) n FROM und GROUP BY s),
-core AS (SELECT s FROM deg WHERE n + 1 >= {_DBSCAN_MIN_PTS}),
-cce AS (SELECT u.s, u.t FROM und u
-        JOIN core c1 ON u.s = c1.s JOIN core c2 ON u.t = c2.s),
-reach(s, r) AS (SELECT s, s FROM core
-                UNION SELECT c.s, r.r FROM cce c JOIN reach r ON c.t = r.s),
-lab AS (SELECT s, min(r) AS cluster_label FROM reach GROUP BY s),
-border AS (
-  SELECT u.s, min(l.cluster_label) AS cluster_label
-  FROM und u JOIN lab l ON u.t = l.s
-  WHERE u.s NOT IN (SELECT s FROM core) GROUP BY u.s),
-allpts AS (
-  SELECT s, cluster_label, 'core' AS role FROM lab
-  UNION ALL SELECT s, cluster_label, 'border' FROM border
-  UNION ALL SELECT e.vec_id, -1, 'noise' FROM embeddings e
-    WHERE e.vec_id NOT IN (SELECT s FROM lab)
-      AND e.vec_id NOT IN (SELECT s FROM border))
-SELECT cluster_label, count(*)::BIGINT AS size,
-       sum(CASE WHEN role = 'core' THEN 1 ELSE 0 END)::BIGINT AS n_core,
-       sum(CASE WHEN role = 'border' THEN 1 ELSE 0 END)::BIGINT AS n_border
-FROM allpts GROUP BY cluster_label
-""",
-)
-def dbscan_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DBSCAN over the blocked ε-graph (operators/density.py): candidate
-    pairs from deterministic-centroid multi-assignment (n_probe=2 —
-    the Σ cluster² SemDeDup/IVF bound, never n²), exact 6dp-rounded
-    euclidean verify, core/border/noise semantics, components labelled
-    by min member id. The oracle reproduces the ENTIRE construction —
-    blocking, degrees, component closure, border tie-break — value-exact
-    per cluster (label, size, core/border split)."""
-    from vector_db_spark.operators.density import (
-        dbscan_cluster_stats,
-        dbscan_from_pairs,
-        epsilon_pairs_blocked,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = _centroids_arrays(spark, sf_dir)
-    pairs = epsilon_pairs_blocked(
-        emb, cents, _DBSCAN_EPS, n_probe=_DBSCAN_N_PROBE
-    )
-    assignment = dbscan_from_pairs(emb, pairs, _DBSCAN_MIN_PTS)
-    return dbscan_cluster_stats(assignment)
-
-
 # --- incremental centroid maintenance (sufficient statistics) ----------------
 
 @register(
@@ -1047,6 +868,7 @@ def _als_model(spark: SparkSession, sf_dir: str):
 
 @register(
     "copurchase_als_recs",
+    extra=True,
     oracle="""
 SELECT (SELECT count(DISTINCT o_custkey)
         FROM orders JOIN lineitem ON l_orderkey = o_orderkey)::BIGINT AS n_users,

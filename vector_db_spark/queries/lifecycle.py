@@ -131,6 +131,7 @@ def versioned_lifecycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "versioned_layout_audit",
+    extra=True,
     oracle="""
 SELECT (SELECT count(*) FROM customer)::BIGINT AS rows_total,
        (SELECT count(*) FROM customer WHERE c_custkey = 42)::BIGINT AS point_rows,

@@ -24,11 +24,7 @@ from pyspark.sql import functions as F
 from vector_db_spark.io import load_table
 from vector_db_spark.operators.multimodal import (
     decode_image_features,
-    extract_audio_windows,
     media_near_dup_pairs,
-    resample_audio,
-    resize_images,
-    sample_video_frames,
 )
 from vector_db_spark.queries import register
 
@@ -87,112 +83,6 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("meta.width").alias("width"),
             F.col("meta.height").alias("height"),
         )
-    )
-
-
-@register(
-    "multimodal_video_frames",
-    extra=True,
-    oracle="""
-WITH frames AS (
-  SELECT doc_id AS media_id,
-         unnest(range(0, GREATEST(1, (n_chars * 10) // 500))) AS f
-  FROM documents
-  WHERE doc_id % 3 = 2
-)
-SELECT media_id,
-       CAST(f AS INTEGER) AS frame_idx,
-       CAST(f * 500 AS INTEGER) AS ts_ms,
-       8 AS feat_dim
-FROM frames
-""",
-)
-def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling: 1 video → N frame rows (explode-shaped kernel),
-    N = duration_ms // every_ms. frame_idx/ts_ms/feat_dim are exact."""
-    media = media_table(spark, sf_dir)
-    frames = sample_video_frames(media, every_ms=500, decoder="fake")
-    return frames.select(
-        "media_id", "frame_idx", "ts_ms", F.size("features").alias("feat_dim")
-    )
-
-
-@register(
-    "multimodal_audio_windows",
-    extra=True,
-    oracle="""
-WITH wins AS (
-  SELECT doc_id AS media_id,
-         unnest(range(0, GREATEST(1, (n_chars * 10) // 400))) AS w
-  FROM documents
-  WHERE doc_id % 3 = 1
-)
-SELECT media_id,
-       CAST(w AS INTEGER) AS window_idx,
-       CAST(w * 400 AS INTEGER) AS ts_ms,
-       8 AS feat_dim
-FROM wins
-""",
-)
-def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio windowing: 1 clip → N fixed-length windows (the audio twin of
-    frame sampling), N = duration_ms // window_ms. window_idx/ts_ms/feat_dim
-    are exact; feature values are the fake decoder's."""
-    media = media_table(spark, sf_dir)
-    wins = extract_audio_windows(media, window_ms=400, decoder="fake")
-    return wins.select(
-        "media_id", "window_idx", "ts_ms", F.size("features").alias("feat_dim")
-    )
-
-
-@register(
-    "multimodal_audio_resample",
-    extra=True,
-    oracle="""
-SELECT doc_id AS media_id,
-       CAST(GREATEST(1, octet_length(encode(text)) * 8000 // 16000) AS INTEGER)
-         AS payload_bytes,
-       8000 AS sample_rate,
-       CAST(n_chars * 10 AS INTEGER) AS duration_ms
-FROM documents
-WHERE doc_id % 3 = 1
-""",
-)
-def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-rate normalization (16 kHz → 8 kHz): binary-in → binary-out
-    audio kernel; the fake re-encoder halves the byte length exactly, so
-    output payload size is oracle arithmetic; duration is preserved."""
-    media = media_table(spark, sf_dir)
-    out = resample_audio(media, 8000, decoder="fake")
-    return out.select(
-        "media_id",
-        F.octet_length("payload").cast("int").alias("payload_bytes"),
-        "sample_rate",
-        "duration_ms",
-    )
-
-
-@register(
-    "multimodal_resize_audit",
-    extra=True,
-    oracle="""
-SELECT doc_id AS media_id,
-       CAST(64 * 64 // 64 AS INTEGER) AS payload_bytes,
-       64 AS width, 64 AS height
-FROM documents
-WHERE doc_id % 3 = 0
-""",
-)
-def multimodal_resize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize (binary-in → binary-out kernel): the fake re-encoder emits
-    exactly width*height/64 bytes, so output payload size is exact."""
-    media = media_table(spark, sf_dir)
-    resized = resize_images(media, 64, 64, decoder="fake")
-    return resized.select(
-        "media_id",
-        F.octet_length("payload").cast("int").alias("payload_bytes"),
-        "width",
-        "height",
     )
 
 

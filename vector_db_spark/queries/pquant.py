@@ -241,6 +241,7 @@ def _opq_model(spark: SparkSession, sf_dir: str) -> tuple:
 
 @register(
     "opq_adc_recall",
+    extra=True,
     oracle=f"""
 SELECT COUNT(*)::BIGINT AS n_queries, TRUE AS norm_ok, TRUE AS recall_ok
 FROM embeddings WHERE vec_id < {N_QUERIES}

@@ -73,7 +73,6 @@ def pyds_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pyds_stream_replay",
     extra=True,
-    # promoted r4 closing: first driver row for the Python-DataSource connector family
     oracle="""
 SELECT event_type,
        count(*)::BIGINT AS n_events,

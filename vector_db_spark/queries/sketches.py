@@ -105,6 +105,7 @@ def digest_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "kmv_orderkey_overlap",
+    extra=True,
     oracle="""
 WITH h AS (
   SELECT DISTINCT l_returnflag,
@@ -276,7 +277,7 @@ FROM est e JOIN exact x USING (item) CROSS JOIN n
 """
 
 
-@register("cms_token_freq", oracle=_cms_oracle())
+@register("cms_token_freq", extra=True, oracle=_cms_oracle())
 def cms_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token frequencies answered from a Count-Min sketch (depth 4, width
     1024 — 4 KiB of counters for any corpus size), probed for known-hot

@@ -20,16 +20,11 @@ from vector_db_spark.operators.ivf import assign_to_centroids
 from vector_db_spark.queries import register
 from vector_db_spark.queries.indexing import _centroids_arrays
 from vector_db_spark.streaming.ingest import (
-    click_attribution_join_stream,
-    dedup_stream,
-    first_seen_filter_stream,
     first_seen_stream,
     hourly_counts_stream,
     ingest_stream,
     read_events_stream,
     run_to_memory,
-    session_windows_stream,
-    sliding_counts_stream,
     unattributed_clicks_stream,
 )
 
@@ -53,77 +48,6 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "stream_sliding_counts",
-    extra=True,
-    oracle="""
-WITH offsets AS (SELECT unnest([0, 1]) AS off)
-SELECT date_trunc('hour', ts) - (off || ' hours')::INTERVAL AS window_start,
-       date_trunc('hour', ts) - (off || ' hours')::INTERVAL + INTERVAL 2 HOUR AS window_end,
-       event_type, COUNT(*)::BIGINT AS n_events
-FROM events CROSS JOIN offsets
-GROUP BY 1, 2, 3
-""",
-)
-def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding windows (2h / 1h): every event contributes to two windows —
-    the oracle materializes the same two-window expansion."""
-    events = read_events_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    return run_to_memory(sliding_counts_stream(events), output_mode="complete")
-
-
-@register(
-    "stream_session_windows",
-    extra=True,  # demoted r4 closing: streaming keeps 4 driver rows (hourly/ingest/serving/outer-join)
-    oracle="""
-WITH e AS (
-  SELECT user_id, ts, event_id, epoch_us(ts) AS us,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM events
-),
-s AS (
-  SELECT user_id, ts,
-         SUM(CASE WHEN prev IS NULL OR us - prev > 3600000000 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM e
-)
-SELECT user_id, MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL 1 HOUR AS session_end,
-       COUNT(*)::BIGINT AS n_events
-FROM s GROUP BY user_id, sid
-""",
-)
-def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap session windows per user: streaming session_window == the batch
-    lag/cumsum sessionization (session ends 1 gap after its last event)."""
-    events = read_events_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    return run_to_memory(session_windows_stream(events), output_mode="complete")
-
-
-@register(
-    "stream_first_seen",
-    extra=True,
-    oracle="""
-SELECT user_id, event_type, event_id, ts FROM (
-  SELECT user_id, event_type, event_id, ts,
-         row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn
-  FROM events
-) WHERE rn = 1
-""",
-)
-def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom-state SEAM DEMO (applyInPandasWithState): first event per
-    (user, event_type), exact event-time argmin. Kept registered to pin
-    the custom-state machinery; the DEFAULT first-seen path is the
-    native ``first_seen_stream`` (``stream_first_seen_native`` below) —
-    SCALE.md wave-7/13 measured this Python form at 110 s vs the native
-    form's ~2 s at 100×. Single bounded batch → equals the global argmin
-    oracle; cross-batch state is exercised in tests/test_streaming.py."""
-    events = read_events_stream(spark, os.path.join(sf_dir, "events.parquet"))
-    return run_to_memory(first_seen_filter_stream(events), output_mode="append")
-
-
-@register(
     "stream_first_seen_native",
     extra=True,
     oracle="SELECT DISTINCT user_id, event_type FROM events",
@@ -134,57 +58,10 @@ def stream_first_seen_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     state exchange; the wave-7 110 s Python floor retired). The
     surviving ROW per key is arrival-order-dependent, so the
     engine-checkable projection is the KEY SET — exactly one survivor
-    per (user_id, event_type), which the oracle reproduces as DISTINCT.
-    Cross-batch dedup of the same machinery is pinned row-exactly by
-    ``stream_dedup_replay``."""
+    per (user_id, event_type), which the oracle reproduces as DISTINCT."""
     events = read_events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     out = run_to_memory(first_seen_stream(events), output_mode="append")
     return out.select("user_id", "event_type")
-
-
-@register(
-    "stream_click_attribution",
-    extra=True,
-    oracle="""
-SELECT a.event_id AS purchase_id, a.user_id, a.ts AS purchase_ts,
-       b.event_id AS click_id, b.ts AS click_ts
-FROM events a JOIN events b
-  ON a.user_id = b.user_id
- AND a.event_type = 'purchase' AND b.event_type = 'click'
- AND b.ts BETWEEN a.ts - INTERVAL 1 HOUR AND a.ts
-""",
-)
-def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream join: purchases × same-user clicks within the
-    preceding hour, two independent watermarked file streams joined with
-    an event-time range predicate (bounded state). Cross-micro-batch
-    buffering is exercised in tests/test_streaming.py."""
-    src = os.path.join(sf_dir, "events.parquet")
-    purchases = read_events_stream(spark, src).filter(F.col("event_type") == "purchase")
-    clicks = read_events_stream(spark, src).filter(F.col("event_type") == "click")
-    return run_to_memory(
-        click_attribution_join_stream(purchases, clicks), output_mode="append"
-    )
-
-
-@register(
-    "stream_dedup_replay",
-    extra=True,
-    oracle="SELECT event_id, user_id, event_type, ts FROM events",
-)
-def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """At-least-once re-delivery survival: the events file is staged TWICE
-    and streamed one file per micro-batch, so every record arrives again in
-    batch 2; ``dropDuplicatesWithinWatermark`` (bounded state) must emit
-    each event exactly once — the output equals the plain table."""
-    src = os.path.join(sf_dir, "events.parquet")
-    staged = tempfile.mkdtemp(prefix="events_replay_")
-    os.symlink(src, os.path.join(staged, "delivery1.parquet"))
-    os.symlink(src, os.path.join(staged, "delivery2.parquet"))
-    events = read_events_stream(spark, staged, max_files_per_trigger=1)
-    return run_to_memory(dedup_stream(events), output_mode="append").select(
-        "event_id", "user_id", "event_type", "ts"
-    )
 
 
 @register(
@@ -298,7 +175,7 @@ SELECT query_id, neighbor_id, dist, rank::INTEGER AS rank FROM (
 """
 
 
-@register("stream_query_serving", oracle=_SERVE_ORACLE)
+@register("stream_query_serving", extra=True, oracle=_SERVE_ORACLE)
 def stream_query_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's read path as micro-batch SERVING: query vectors
     arrive as a bounded file stream (2 files → 2 triggers), each batch is
@@ -600,7 +477,7 @@ def stream_hourly_top_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "stream_unattributed_clicks",  # promoted r4 (green), rotated to extra r5
+    "stream_unattributed_clicks",
     extra=True,
     oracle="""
 WITH c AS (SELECT event_id AS click_id, user_id, ts AS click_ts

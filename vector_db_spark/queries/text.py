@@ -18,20 +18,13 @@ from vector_db_spark.functions.text import (
     doc_fingerprint,
     quality_score,
     shingles,
-    simhash64,
     tokens,
 )
-from vector_db_spark.caching import tracked_cache
 from vector_db_spark.io import load_table
 from vector_db_spark.operators.dedup import (
     dedup_retain_best,
-    embedding_near_dup_blocked,
-    embedding_near_dup_pairs,
     exact_dedup,
     incremental_dedup,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    minhash_wide,
     near_dup_pairs_minhash,
     shingle_table,
     winnow_candidate_pairs,
@@ -43,7 +36,6 @@ from vector_db_spark.operators.similarity import (
     HYPERPLANES,
     N_BITS,
     N_TABLES,
-    brp_lsh_similarity_join,
     lsh_search,
     sparse_cosine_pairs,
 )
@@ -61,89 +53,6 @@ _QUALITY_SQL = (
     f" ELSE round(0.5 * least(len({_TOKS}) / 100.0, 1.0)"
     f" + 0.5 * (CAST(len(list_distinct({_TOKS})) AS DOUBLE) / len({_TOKS})), 6) END)"
 )
-
-# --- text statistics ---------------------------------------------------------
-
-@register(
-    "text_stats",
-    extra=True,
-    oracle=f"""
-SELECT doc_id, lang,
-       len({_TOKS})::BIGINT AS n_tokens,
-       CAST(list_sum(list_transform({_TOKS}, x -> length(x))) AS DOUBLE)
-         / len({_TOKS}) AS avg_token_len,
-       CAST(len(list_distinct({_TOKS})) AS DOUBLE) / len({_TOKS}) AS distinct_ratio
-FROM documents
-""",
-)
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    t = tokens("text")
-    return docs.select(
-        "doc_id",
-        "lang",
-        F.size(t).cast("long").alias("n_tokens"),
-        (
-            F.aggregate(t, F.lit(0).cast("long"), lambda a, x: a + F.length(x)).cast("double")
-            / F.size(t)
-        ).alias("avg_token_len"),
-        (F.size(F.array_distinct(t)).cast("double") / F.size(t)).alias("distinct_ratio"),
-    )
-
-
-@register(
-    "token_histogram",
-    extra=True,
-    oracle=f"""
-SELECT tok, COUNT(*)::BIGINT AS cnt FROM (
-  SELECT unnest({_TOKS}) AS tok FROM documents
-) GROUP BY tok ORDER BY cnt DESC, tok LIMIT 20
-""",
-)
-def token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus token frequencies, global top-20 (TakeOrderedAndProject over
-    the exploded stream — the vocabulary-building primitive)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(F.explode(tokens("text")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), "tok")
-        .limit(20)
-    )
-
-
-# --- BPE-ish token accounting -------------------------------------------------
-
-@register(
-    "token_budget_audit",
-    extra=True,
-    oracle=f"""
-SELECT doc_id,
-       len({_TOKS})::BIGINT AS ws_tokens,
-       len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))::BIGINT
-         AS bpe_tokens,
-       round(length(text) * 1.0
-             / len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')), 6)
-         AS chars_per_tok
-FROM documents
-""",
-)
-def token_budget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token accounting both ways — whitespace vs BPE-ish pre-tokenizer
-    counts plus the chars/token ratio (the budgeting statistic a training
-    pipeline sizes packs and costs with). Pure map-side regex."""
-    from vector_db_spark.functions.text import bpe_ish_tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    bpe = F.size(bpe_ish_tokens("text"))
-    return docs.select(
-        "doc_id",
-        F.size(tokens("text")).cast("long").alias("ws_tokens"),
-        bpe.cast("long").alias("bpe_tokens"),
-        F.round(F.length("text") / bpe, 6).alias("chars_per_tok"),
-    )
-
 
 # --- language identification (stopword-vote heuristic) -----------------------
 
@@ -232,30 +141,7 @@ def dedup_exact_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "simhash_fingerprints",
-    extra=True,
-    oracle=f"""
-WITH nib AS (
-  SELECT doc_id, p,
-         SUM(strpos('0123456789abcdef', substring(md5(tok), p + 1, 1)) - 1) AS nibsum,
-         COUNT(*) AS n
-  FROM (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents)
-  CROSS JOIN (SELECT unnest(range(0, 16)) AS p)
-  GROUP BY doc_id, p
-)
-SELECT doc_id,
-       SUM(CASE WHEN 2 * nibsum >= 15 * n THEN 1::BIGINT << p ELSE 0 END)::BIGINT AS simhash
-FROM nib GROUP BY doc_id
-""",
-)
-def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", simhash64(tokens("text")).alias("simhash"))
-
-
-@register(
     "winnow_dup_candidates",
-    extra=True,
     oracle="""
 WITH norm AS (
   SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS s
@@ -340,7 +226,6 @@ def doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "prefix_filter_jaccard",
-    extra=True,
     oracle="""
 WITH t AS (
   SELECT doc_id,
@@ -380,10 +265,9 @@ def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- MinHash + LSH near-dup pipeline ------------------------------------------
-
 # MinHash SQL fragments are parameterized on the source relation so the
-# cleaning pipeline's oracle can run the identical math over a filtered
-# subset; the plain constants keep the full-corpus queries unchanged.
+# incremental-dedup oracle can run the identical math over each side of
+# the batch split; the plain constants serve the full-corpus queries.
 
 def _shingles_sql(src: str = "documents") -> str:
     return f"""
@@ -421,26 +305,12 @@ def _cand_sql(src: str = "documents") -> str:
 
 
 _SHINGLES_SQL = _shingles_sql()
-_MINHASH_SQL = _minhash_sql()
-_BANDS_SQL = _bands_sql()
 _CAND_SQL = _cand_sql()
-
-
-@register("minhash_signatures", extra=True, oracle=_MINHASH_SQL)  # demoted r4: the full pipeline (near_dup_jaccard) stays driver-tier
-def minhash_signatures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return minhash_signatures(shingle_table(docs), n_hashes=8)
-
-
-@register("lsh_candidates", extra=True, oracle=_CAND_SQL)
-def lsh_candidates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    wide = minhash_wide(shingle_table(docs), n_hashes=8)
-    return lsh_candidate_pairs(wide, n_bands=4)
 
 
 @register(
     "near_dup_jaccard",
+    extra=True,
     oracle=f"""
 WITH sh AS ({_SHINGLES_SQL}),
 sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
@@ -522,7 +392,7 @@ LEFT JOIN near_best nb USING (doc_id)
 """
 
 
-@register("incremental_dedup", extra=True, oracle=_INC_DEDUP_ORACLE)
+@register("incremental_dedup", oracle=_INC_DEDUP_ORACLE)
 def incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incoming-batch-vs-corpus dedup (the corpus-maintenance shape): the
     ``doc_id % 5 == 0`` slice plays the fresh crawl, the rest the indexed
@@ -557,7 +427,7 @@ def _dedup_index(spark: SparkSession, sf_dir: str):
     return _DEDUP_INDEX_CACHE[sf_dir]
 
 
-@register("incremental_dedup_indexed", extra=True, oracle=_INC_DEDUP_ORACLE)
+@register("incremental_dedup_indexed", oracle=_INC_DEDUP_ORACLE)
 def incremental_dedup_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME batch-vs-corpus dedup served from the PERSISTED signature
     index (operators/dedup_index.py DedupIndex) — the production shape
@@ -775,55 +645,6 @@ def dedup_retain_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_retain_best(docs, threshold=0.5)
 
 
-@register(
-    "corpus_clean_pipeline",
-    extra=True,
-    oracle=f"""
-WITH stage1 AS (
-  SELECT doc_id, text FROM documents
-  WHERE lang = 'en' AND len({_TOKS}) >= 25
-    AND {_QUALITY_SQL} >= 0.48
-),
-fp AS (SELECT doc_id, text, md5(array_to_string({_TOKS}, ' ')) AS f FROM stage1),
-keep AS (SELECT f, MIN(doc_id) AS kid FROM fp GROUP BY f),
-stage2 AS (SELECT fp.doc_id, fp.text FROM fp JOIN keep ON fp.f = keep.f AND fp.doc_id = keep.kid),
-sh AS ({_shingles_sql("stage2")}),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-cands AS ({_cand_sql("stage2")}),
-common AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-  FROM cands c JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY c.doc_a, c.doc_b
-),
-losers AS (
-  SELECT DISTINCT doc_b
-  FROM common JOIN sizes x ON x.doc_id = doc_a JOIN sizes y ON y.doc_id = doc_b
-  WHERE round(n_common * 1.0 / (x.n_sh + y.n_sh - n_common), 6) >= 0.5
-)
-SELECT doc_id, len({_TOKS})::BIGINT AS n_tokens,
-       {_QUALITY_SQL} AS quality
-FROM stage2 WHERE doc_id NOT IN (SELECT doc_b FROM losers)
-""",
-)
-def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full training-data prep pipeline (operators/pipeline.py):
-    lang='en' → ≥25 tokens → quality ≥0.48 → exact dedup (min-id survivor)
-    → MinHash near-dup cut (Jaccard ≥0.5, greater id dropped). One lazy
-    plan; every stage's math hash-matched end-to-end."""
-    from vector_db_spark.operators.pipeline import clean_corpus
-
-    docs = load_table(spark, sf_dir, "documents")
-    cleaned = clean_corpus(
-        docs, lang="en", min_tokens=25, quality_floor=0.48, jaccard_threshold=0.5
-    )
-    return cleaned.select(
-        "doc_id",
-        F.size(tokens("text")).cast("long").alias("n_tokens"),
-        quality_score("text").alias("quality"),
-    )
-
-
 # --- LSH bucket SQL (shared by the blocked near-dup and the ANN search) --------
 
 def _bucket_sql(table_idx: int) -> str:
@@ -912,6 +733,7 @@ _HH_FRAC = 0.004
 
 @register(
     "heavy_hitter_tokens",
+    extra=True,
     oracle=f"""
 WITH toks AS (SELECT unnest({_TOKS}) AS item FROM documents)
 SELECT item, count(*)::BIGINT AS cnt
@@ -943,6 +765,7 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_merges",
+    extra=True,
     oracle="""
 WITH words AS (
   SELECT word, count(*) AS freq FROM (
@@ -1082,84 +905,13 @@ def export_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shard_manifest(shard_plan(docs, n_shards=16))
 
 
-# --- quality-weighted curriculum sampling -------------------------------------
-
-@register(
-    "curriculum_sample",
-    extra=True,
-    oracle=f"""
-SELECT doc_id, quality, bucket FROM (
-  SELECT doc_id,
-         {_QUALITY_SQL} AS quality,
-         ((strpos('0123456789abcdef', substring(md5(doc_id::VARCHAR || ':cur'), 1, 1)) - 1) * 16
-        + (strpos('0123456789abcdef', substring(md5(doc_id::VARCHAR || ':cur'), 2, 1)) - 1))::INTEGER AS bucket
-  FROM documents
-) WHERE bucket < floor(256 * least(quality, 1.0))
-""",
-)
-def curriculum_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-weighted sampling: keep each document with probability ≈ its
-    quality score, via the deterministic hash-membership idiom (first md5
-    byte under a per-doc quality-scaled threshold). The
-    curriculum/up-weighting step of a training-data mix — reruns and
-    engines agree on exact membership, unlike seeded ``df.sample``.
-    Map-side only: no shuffle at any scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":cur")))
-    bucket = (
-        (F.instr(F.lit("0123456789abcdef"), F.substring(h, 1, 1)) - 1) * 16
-        + (F.instr(F.lit("0123456789abcdef"), F.substring(h, 2, 1)) - 1)
-    ).cast("int")
-    return (
-        docs.select(
-            "doc_id",
-            quality_score("text").alias("quality"),
-            bucket.alias("bucket"),
-        )
-        .filter(F.col("bucket") < F.floor(256 * F.least(F.col("quality"), F.lit(1.0))))
-    )
-
-
-# --- embedding-cosine near-dup -------------------------------------------------
-# The registered (driver) variant blocks candidate pairs through the seeded
-# hyperplane-LSH buckets first and verifies cosine only within buckets — the
-# plan has NO corpus×corpus crossJoin, so it survives 100× scale (candidate
-# volume ~ Σ bucket_size², not n²). LSH blocking is inherently approximate
-# for weak similarities; the oracle reproduces the *same* seeded blocking in
-# SQL, so the approximation itself is hash-checked. The exact O(n²) variant
-# stays registered as an extra (the recall baseline, fine at fixture scale).
-
-@register(
-    "embedding_near_dup",
-    extra=True,
-    oracle=f"""
-WITH buckets AS ({_LSH_BUCKETS_SQL}),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM buckets a JOIN buckets b
-    ON a.table_idx = b.table_idx AND a.bucket = b.bucket AND a.vec_id < b.vec_id
-)
-SELECT c.id_a, c.id_b,
-       round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 6) AS cos_sim
-FROM cand c
-JOIN embeddings x ON x.vec_id = c.id_a
-JOIN embeddings y ON y.vec_id = c.id_b
-WHERE round(list_cosine_similarity(x.embedding::DOUBLE[], y.embedding::DOUBLE[]), 6) > 0.45
-""",
-)
-def embedding_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Knobs PINNED to the oracle's plane literals: the no-knob default
-    derives geometry from the corpus count (the production path), which
-    diverges from _LSH_BUCKETS_SQL's hardcoded (N_TABLES, N_BITS) tables
-    as soon as the corpus outgrows the derivation's fixture anchor
-    (derive_lsh_geometry(2000) is already (5, 5) at sf0.1) — an oracle
-    query must stay bit-identical to its SQL at EVERY sf."""
-    from vector_db_spark.operators.similarity import N_BITS, N_TABLES
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup_blocked(
-        emb, threshold=0.45, n_tables=N_TABLES, n_bits=N_BITS
-    )
+# --- LSH-blocked embedding decontamination ------------------------------------
+# Candidate pairs come from the seeded hyperplane-LSH buckets and cosine is
+# verified only within buckets — the plan has NO corpus×corpus crossJoin, so
+# it survives 100× scale (candidate volume ~ Σ bucket_size², not n²). LSH
+# blocking is inherently approximate for weak similarities; the oracle
+# reproduces the *same* seeded blocking in SQL, so the approximation itself
+# is hash-checked.
 
 
 @register(
@@ -1187,9 +939,8 @@ def embedding_decontaminate_blocked_q(spark: SparkSession, sf_dir: str) -> DataF
     ``embedding_decontaminate`` for benchmark suites too big to
     broadcast): both sides bucketed by the oracle-pinned hyperplanes,
     cosine verified only within bucket collisions. Knobs pinned to the
-    plane literals for the same reason as ``embedding_near_dup``; the
-    production no-knob path derives geometry strictly with
-    auto-multiprobe."""
+    plane literals the oracle reproduces; the production no-knob path
+    derives geometry strictly with auto-multiprobe."""
     from vector_db_spark.operators.dedup import embedding_decontaminate_blocked
     from vector_db_spark.operators.similarity import N_BITS, N_TABLES
 
@@ -1203,26 +954,11 @@ def embedding_decontaminate_blocked_q(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-@register(
-    "embedding_near_dup_brute",
-    extra=True,
-    oracle="""
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cos_sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) > 0.45
-""",
-)
-def embedding_near_dup_brute_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact O(n²) recall baseline for the blocked variant above."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup_pairs(emb, threshold=0.45)
-
-
 # --- hyperplane-LSH ANN search --------------------------------------------------
 
 @register(
     "ann_lsh_search",
+    extra=True,
     oracle=f"""
 WITH buckets AS ({_LSH_BUCKETS_SQL}),
 q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 10),
@@ -1282,140 +1018,6 @@ def embed_stub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("embedding").alias("dim"),
         (F.abs(norm - 1.0) < 1e-3).alias("unit_norm"),
     )
-
-
-@register(
-    "near_dup_brp_lsh",
-    extra=True,
-    oracle="""
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_distance(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS dist
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE list_distance(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) <= 1.0
-""",
-)
-def near_dup_brp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pyspark.ml BucketedRandomProjectionLSH approxSimilarityJoin — the
-    built-in ANN cross-check. approxSimilarityJoin filters on *exact*
-    distance after bucketing, so its result is a subset of the exact
-    within-threshold pairs; on the fixtures (seeded model, one planted pair
-    well inside a bucket) it finds exactly that set, which the oracle
-    computes exactly. Recall behavior is asserted in tests/test_text_ops.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return brp_lsh_similarity_join(emb, threshold=1.0)
-
-
-# --- end-to-end training-data manifest: clean → chunk → embed -----------------
-
-_TDP_CHUNK, _TDP_OVERLAP = 120, 30
-
-_TDP_ORACLE = f"""
-WITH stage1 AS (
-  SELECT doc_id, text FROM documents
-  WHERE lang = 'en' AND len({_TOKS}) >= 25
-    AND {_QUALITY_SQL} >= 0.48
-),
-fp AS (SELECT doc_id, text, md5(array_to_string({_TOKS}, ' ')) AS f FROM stage1),
-keep AS (SELECT f, MIN(doc_id) AS kid FROM fp GROUP BY f),
-stage2 AS (SELECT fp.doc_id, fp.text FROM fp JOIN keep ON fp.f = keep.f AND fp.doc_id = keep.kid),
-sh AS ({_shingles_sql("stage2")}),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-cands AS ({_cand_sql("stage2")}),
-common AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-  FROM cands c JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY c.doc_a, c.doc_b
-),
-losers AS (
-  SELECT DISTINCT doc_b
-  FROM common JOIN sizes x ON x.doc_id = doc_a JOIN sizes y ON y.doc_id = doc_b
-  WHERE round(n_common * 1.0 / (x.n_sh + y.n_sh - n_common), 6) >= 0.5
-),
-cleaned AS (SELECT * FROM stage2 WHERE doc_id NOT IN (SELECT doc_b FROM losers)),
-chunks AS (
-  SELECT doc_id, substr(text, s.i * {_TDP_CHUNK - _TDP_OVERLAP} + 1, {_TDP_CHUNK}) AS chunk_text
-  FROM cleaned, LATERAL (
-    SELECT unnest(range(0, greatest(length(text), 1), {_TDP_CHUNK - _TDP_OVERLAP}))
-      // {_TDP_CHUNK - _TDP_OVERLAP} AS i
-  ) s
-)
-SELECT 'raw' AS stage, COUNT(*)::BIGINT AS n_rows,
-       CAST(SUM(n_chars) AS DOUBLE) AS checksum FROM documents
-UNION ALL
-SELECT 'cleaned', COUNT(*)::BIGINT,
-       CAST(SUM(len({_TOKS})) AS DOUBLE) FROM cleaned
-UNION ALL
-SELECT 'chunks', COUNT(*)::BIGINT,
-       CAST(SUM(length(chunk_text)) AS DOUBLE) FROM chunks
-UNION ALL
-SELECT 'embedded', COUNT(*)::BIGINT, COUNT(*)::DOUBLE FROM chunks
-"""
-
-
-@register("training_data_manifest", extra=True, oracle=_TDP_ORACLE)
-def training_data_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The whole training-data prep story as ONE composition — clean
-    (lang → token floor → quality floor → exact dedup → near-dup cut) →
-    chunk (overlapping windows) → embed (stub UDF) — emitting a per-stage
-    manifest (stage, n_rows, checksum): raw/cleaned checksums are
-    token-mass sums, the chunk checksum is char mass, and the embedded
-    checksum counts unit-norm vectors (every stub embedding L2-normalizes,
-    so it must equal the chunk count — the UDF runs for real and the
-    invariant is exact). The cleaned stage is cached: three stage
-    aggregates reuse it (a deployment materializes stage outputs anyway —
-    this is the audit query over that materialization)."""
-    from vector_db_spark.functions.embedding import embed_column
-    from vector_db_spark.operators.chunking import chunk_documents
-    from vector_db_spark.operators.pipeline import clean_corpus
-
-    docs = load_table(spark, sf_dir, "documents")
-    cleaned = tracked_cache(
-        clean_corpus(
-            docs, lang="en", min_tokens=25, quality_floor=0.48, jaccard_threshold=0.5
-        ),
-        "q.text.pipeline.cleaned",
-    )
-    chunks = chunk_documents(cleaned, size=_TDP_CHUNK, overlap=_TDP_OVERLAP)
-    embedded = embed_column(chunks, "chunk_text", dim=64)
-
-    def stage(name, df, n_expr, checksum_expr):
-        return df.agg(
-            F.lit(name).alias("stage"),
-            n_expr.alias("n_rows"),
-            checksum_expr.alias("checksum"),
-        )
-
-    raw = stage(
-        "raw", docs, F.count("*"), F.sum("n_chars").cast("double")
-    )
-    clean_row = stage(
-        "cleaned",
-        cleaned,
-        F.count("*"),
-        F.sum(F.size(tokens("text"))).cast("double"),
-    )
-    chunk_row = stage(
-        "chunks", chunks, F.count("*"), F.sum(F.length("chunk_text")).cast("double")
-    )
-    emb_row = stage(
-        "embedded",
-        embedded.select(
-            F.round(
-                F.sqrt(
-                    F.aggregate(
-                        F.col("embedding").cast("array<double>"),
-                        F.lit(0.0),
-                        lambda a, x: a + x * x,
-                    )
-                ),
-                6,
-            ).alias("norm")
-        ),
-        F.count("*"),
-        F.sum(F.when(F.col("norm") == 1.0, 1).otherwise(0)).cast("double"),
-    )
-    return raw.unionByName(clean_row).unionByName(chunk_row).unionByName(emb_row)
 
 
 # --- length-bucketed batch manifest -------------------------------------------
@@ -1556,7 +1158,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- round-4 closing additions: containment / multi-probe / sparse cosine ------
 
 @register(
-    "containment_near_dup",  # promoted r4 (green), rotated to extra r5
+    "containment_near_dup",
     extra=True,
     oracle="""
 WITH t AS (
@@ -1588,7 +1190,6 @@ def containment_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_lsh_multiprobe",
-    extra=True,
     oracle=f"""
 WITH buckets AS ({_LSH_BUCKETS_SQL}),
 probes AS (
@@ -1631,56 +1232,6 @@ def ann_lsh_multiprobe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     ).filter(F.col("query_id") < 10)
     return lsh_search(queries, emb, 5, multiprobe=True)
-
-
-@register(
-    "tfidf_cosine_pairs",  # promoted r4 (green), rotated to extra r5
-    extra=True,
-    oracle=f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
-big AS (
-  SELECT doc_id, tk[i] || ' ' || tk[i + 1] AS tok
-  FROM (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i FROM t)),
-tf AS (SELECT doc_id, tok, count(*) AS tf FROM big GROUP BY 1, 2),
-n AS (SELECT count(DISTINCT doc_id) AS nd FROM tf),
-df AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok),
-w AS (
-  SELECT tf.doc_id, tf.tok,
-         round(tf.tf * ln((1.0 + nd) / (1.0 + df.df)), 6) AS w
-  FROM tf JOIN df USING (tok) CROSS JOIN n
-  WHERE df.df <= 0.2 * nd),
-norms AS (
-  SELECT doc_id,
-         sqrt(SUM(CAST(round(w * w * 1e12) AS BIGINT))::DOUBLE / 1e12) AS norm
-  FROM w GROUP BY doc_id),
-dots AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         SUM(CAST(round(a.w * b.w * 1e12) AS BIGINT)) AS dot
-  FROM w a JOIN w b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2)
-SELECT doc_a, doc_b, cos_sim FROM (
-  SELECT doc_a, doc_b,
-         round((dot::DOUBLE / 1e12) / (x.norm * y.norm), 6) AS cos_sim
-  FROM dots JOIN norms x ON x.doc_id = doc_a JOIN norms y ON y.doc_id = doc_b)
-WHERE cos_sim >= 0.6
-""",
-)
-def tfidf_cosine_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs TF-IDF cosine ≥ 0.6 via the inverted-index join
-    (operators/similarity.sparse_cosine_pairs) — document similarity in
-    the sparse term space, no embeddings. Terms are word BIGRAMS: this
-    corpus's unigram vocabulary is ~31 words (every one a near-stopword),
-    so bigrams are the informative unit — exactly the df-aware term
-    choice a real corpus profile drives. One postings self-join on
-    df ≤ 0.2·N terms; decimal-summed contributions keep scores
-    engine-exact at any parallelism; the df cut is the join-volume
-    throttle (Σ df² over kept terms)."""
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(shingles(tokens("text"), 2)).alias("term")
-    )
-    return sparse_cosine_pairs(toks, threshold=0.6, max_df_frac=0.2)
 
 
 # Posting-join volume budget (rows) for the benched df-cut variant: the
@@ -1728,7 +1279,7 @@ WHERE cos_sim >= 0.6
 """,
 )
 def tfidf_cosine_pairs_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION-tuned form of tfidf_cosine_pairs: the df ceiling is
+    """Production-tuned TF-IDF bigram cosine pairs: the df ceiling is
     DERIVED from the measured df distribution under a fixed posting-join
     volume budget (Σ df² ≤ 500k rows) instead of a relative fraction —
     the round-5 scale lesson wired into the default: a fixed
@@ -1752,7 +1303,7 @@ def tfidf_cosine_pairs_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "quality_dup_auc",  # promoted r4 (green), rotated to extra r5
+    "quality_dup_auc",
     extra=True,
     oracle=f"""
 WITH s AS (
@@ -2128,6 +1679,7 @@ _COVERAGE_SALT = "sg-v1"
 
 @register(
     "coverage_exemplar_stochastic",
+    extra=True,
     oracle=_coverage_stochastic_oracle(_COVERAGE_K, _COVERAGE_EPS, _COVERAGE_SALT),
 )
 def coverage_exemplar_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2153,4 +1705,3 @@ def coverage_exemplar_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
         inc, _COVERAGE_K, eps=_COVERAGE_EPS, salt=_COVERAGE_SALT
     )
     return spark.createDataFrame(picks, "rank int, doc_id long, new_cov long")
-

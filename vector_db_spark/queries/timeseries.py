@@ -122,7 +122,6 @@ SELECT user_id, ts, event_id, value,
 FROM events WHERE event_type = 'purchase'
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """,
-    extra=True,
 )
 def ewma_purchase_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA-smoothed purchase values per user (α=0.5, 8-term truncation —
@@ -369,7 +368,6 @@ def click_purchase_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cusum_level_shifts",
-    extra=True,
     oracle="""
 WITH grid AS (
   SELECT s.event_type, g.t
@@ -416,6 +414,7 @@ def cusum_level_shifts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "trend_mann_kendall",
+    extra=True,
     oracle="""
 WITH cnt AS (
   SELECT event_type, date_trunc('hour', ts) AS t, count(*) AS x
@@ -459,7 +458,6 @@ def trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "decayed_event_type_scores",
-    extra=True,
     oracle="""
 WITH mx AS (SELECT max(ts) AS tmax FROM events),
 pb AS (

@@ -111,59 +111,6 @@ def knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_self(emb, TOP_K, n_queries=N_QUERIES, metric="cosine", impl="batch")
 
 
-_SQ8_N_QUERIES = 10
-
-# the SQ8 pipeline end-to-end in SQL: per-dim affine ranges, uint8 encode,
-# asymmetric decode-in-the-distance search — deterministic double math, so
-# the whole compression+search path hash-matches, not just its output shape
-_SQ8_ORACLE = f"""
-WITH stats AS (
-  SELECT i, MIN(CAST(embedding[i] AS DOUBLE)) AS mn,
-            MAX(CAST(embedding[i] AS DOUBLE)) AS mx
-  FROM embeddings, range(1, 65) t(i)
-  GROUP BY i
-), q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-  FROM embeddings WHERE vec_id < {_SQ8_N_QUERIES}
-), d AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id,
-         round(sqrt(SUM(pow(
-           q.qv[s.i] - (s.mn + floor(
-             CASE WHEN s.mx > s.mn THEN
-               LEAST(GREATEST((CAST(c.embedding[s.i] AS DOUBLE) - s.mn)
-                              / (s.mx - s.mn), 0.0), 1.0)
-             ELSE 0.0 END * 255.0 + 0.5
-           ) * (s.mx - s.mn) / 255.0), 2))), 6) AS dist
-  FROM q CROSS JOIN embeddings c CROSS JOIN stats s
-  GROUP BY q.query_id, c.vec_id
-), r AS (
-  SELECT query_id, neighbor_id, dist,
-         row_number() OVER (PARTITION BY query_id ORDER BY dist, neighbor_id) AS rank
-  FROM d
-)
-SELECT query_id, neighbor_id, dist, rank::INTEGER AS rank
-FROM r WHERE rank <= {TOP_K}
-"""
-
-
-@register("sq8_search", extra=True, oracle=_SQ8_ORACLE)
-def sq8_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQ8 scalar-quantized search (operators/squant.py): train per-dim
-    ranges (one dim-row aggregation), encode the corpus to uint8 codes (4×
-    smaller scan), search asymmetrically with the decode fused into the
-    codegen'd distance. The quantization error this introduces vs exact
-    k-NN is bounded in tests/test_squant.py."""
-    from vector_db_spark.operators.squant import sq_encode, sq_search, sq_train
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    model = sq_train(emb)
-    codes = sq_encode(emb, model)
-    queries = emb.filter(F.col("vec_id") < _SQ8_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return sq_search(codes, queries, model, TOP_K)
-
-
 # --- binary quantization: Hamming first pass + exact re-rank ------------------
 
 _BQ_N_QUERIES = 10
@@ -261,46 +208,6 @@ def mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count_distinct("neighbor_id") == F.count("*")).alias("picks_distinct"),
         F.every(F.coalesce("is_cand", F.lit(False))).alias("picks_in_candidates"),
     )
-
-
-# --- hard-negative mining (contrastive training data) -------------------------
-
-_HN_N_QUERIES = 10
-_HN_K = 5
-
-_HN_ORACLE = f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv, label AS ql
-  FROM embeddings WHERE vec_id < {_HN_N_QUERIES}
-), d AS (
-  SELECT q.query_id, c.vec_id AS neighbor_id, c.label AS neighbor_label,
-         round(1.0 - list_cosine_similarity(q.qv, c.embedding::DOUBLE[]), 6) AS dist
-  FROM q JOIN embeddings c ON c.label <> q.ql
-), r AS (
-  SELECT query_id, neighbor_id, neighbor_label, dist,
-         row_number() OVER (PARTITION BY query_id ORDER BY dist, neighbor_id) AS rank
-  FROM d
-)
-SELECT query_id, neighbor_id, neighbor_label, dist, rank::INTEGER AS rank
-FROM r WHERE rank <= {_HN_K}
-"""
-
-
-@register("hard_negative_mining", extra=True, oracle=_HN_ORACLE)
-def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive hard negatives (operators/knn.py hard_negatives): per
-    query, nearest cosine neighbors with a DIFFERENT label — the
-    near-but-wrong training examples. Label disequality folds into the
-    broadcast join before distance math."""
-    from vector_db_spark.operators.knn import hard_negatives
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _HN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-        F.col("label").alias("query_label"),
-    )
-    return hard_negatives(queries, emb, _HN_K)
 
 
 # --- distributed PCA audit ----------------------------------------------------
@@ -724,7 +631,6 @@ SELECT CAST(count(*) / 2 AS BIGINT) AS n_pairs,
        TRUE AS mean_distortion_ok, TRUE AS max_distortion_ok
 FROM embeddings
 """,
-    extra=True,
 )
 def jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss projection 64→16 dims (operators/pca.py
@@ -851,7 +757,6 @@ def _skipgram_oracle() -> str:
 @register(
     "graph_skipgram_pairs",
     oracle=_skipgram_oracle(),
-    extra=True,
 )
 def graph_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skip-gram (center, context) training pairs extracted from the
@@ -1023,7 +928,7 @@ SELECT start, step, node FROM ({selects})
 """
 
 
-@register("node2vec_biased_walks", oracle=_n2v_oracle(), extra=True)
+@register("node2vec_biased_walks", oracle=_n2v_oracle())
 def node2vec_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """node2vec second-order walks (p=0.5 return-biased, q=2 locality-
     biased) over the exact 5-NN subgraph — the tunable walk corpus,
@@ -1041,42 +946,3 @@ def node2vec_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     starts = emb.filter(F.col("vec_id") < 100).select(F.col("vec_id").alias("start"))
     return node2vec_walks(edges, starts, length=4, p=0.5, q=2.0, salt="n2v")
-
-
-@register(
-    "knn_personalized_pagerank",
-    oracle="""
-SELECT 500::BIGINT AS n_nodes, true AS rank_sum_ok, true AS concentrated_ok
-""",
-    extra=True,
-)
-def knn_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank seeded on 10 vectors over the exact 5-NN
-    subgraph (operators/knn_graph.personalized_pagerank) — the
-    "related items for THESE items" primitive. Invariant projection:
-    stochastic-vector contract plus concentration (the seed set must hold
-    far more mass than its uniform 10/500 share — teleport locality is
-    the operator's whole point). Exact ranks are float-order sensitive;
-    tests pin 1e-9 agreement with a numpy reference."""
-    from vector_db_spark.operators.knn_graph import personalized_pagerank
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 500)
-    sub_q = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    knn = knn_join(sub_q, emb, 6, impl="batch")
-    edges = knn.filter(F.col("neighbor_id") != F.col("query_id")).select(
-        F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
-    )
-    seeds = emb.filter(F.col("vec_id") < 10).select(F.col("vec_id").alias("s"))
-    ppr = personalized_pagerank(
-        edges, seeds, nodes=emb.select("vec_id"), n_iter=10
-    )
-    seed_mass = (
-        ppr.join(seeds, ppr.id == seeds.s).agg(F.sum("rank")).collect()[0][0]
-    )
-    return ppr.agg(
-        F.count("*").cast("long").alias("n_nodes"),
-        (F.abs(F.sum("rank") - 1.0) < 1e-9).alias("rank_sum_ok"),
-        F.lit(seed_mass > 5 * 10.0 / 500).alias("concentrated_ok"),
-    )

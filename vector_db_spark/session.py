@@ -36,17 +36,6 @@ def get_spark(app_name: str = "spark-vector-engine", cpus: int | None = None) ->
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # r10 config A/B knobs (guide §3.1/§9), parameterised so the bench
-        # can pair-test them and a cluster deployment can flip them without
-        # code edits; defaults are Spark's own
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "0"),
-        )
         # typed filter pushdown into Python data sources (sources/jsonl.py)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.warehouse.dir", os.path.join(tempfile.gettempdir(), "spark-warehouse"))

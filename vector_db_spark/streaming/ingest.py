@@ -37,7 +37,6 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -97,79 +96,6 @@ def hourly_counts_stream(events: DataFrame, watermark: str = "1 day") -> DataFra
     )
 
 
-def sliding_counts_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
-    """Sliding windows: 2h length, 1h slide — each event lands in 2 windows."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
-def session_windows_stream(events: DataFrame, gap: str = "1 hour", watermark: str = "30 days") -> DataFrame:
-    """Gap-based session windows per user (the streaming form of the batch
-    ``user_sessions`` query): a session spans [first_event, last_event+gap)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def click_attribution_join_stream(
-    purchases: DataFrame,
-    clicks: DataFrame,
-    *,
-    lookback: str = "1 hour",
-    watermark: str = "30 days",
-) -> DataFrame:
-    """Stream-stream inner join with an event-time range constraint: each
-    purchase matched to the same user's clicks in the preceding
-    ``lookback``. Both sides are watermarked and the join predicate bounds
-    event-time distance, so the join STATE is bounded: a buffered click
-    older than (watermark + lookback) behind the purchase-side watermark
-    can never match and is evicted — the property that keeps a perpetual
-    stream-stream join from accumulating unbounded state. Inner join over
-    a bounded source emits exactly the batch-join rows, so the result
-    hash-matches a batch SQL oracle."""
-    p = (
-        purchases.withWatermark("ts", watermark)
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    c = (
-        clicks.withWatermark("ts", watermark)
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    return p.join(
-        c,
-        F.expr(
-            f"user_id = click_user AND click_ts <= purchase_ts "
-            f"AND click_ts >= purchase_ts - INTERVAL {lookback}"
-        ),
-        "inner",
-    ).select("purchase_id", "user_id", "purchase_ts", "click_id", "click_ts")
-
-
 def unattributed_clicks_stream(
     clicks: DataFrame,
     purchases: DataFrame,
@@ -214,27 +140,6 @@ def unattributed_clicks_stream(
     ).select("click_id", "user_id", "click_ts", "purchase_id", "purchase_ts")
 
 
-def dedup_stream(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    *,
-    watermark: str = "1 day",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming exact dedup with **bounded state**:
-    ``dropDuplicatesWithinWatermark`` keeps a key's state only until the
-    watermark passes it, so a perpetual ingest stream can drop re-delivered
-    records (at-least-once sources re-deliver by design) without
-    accumulating state forever — the streaming twin of batch
-    ``dropDuplicates`` and the idempotent-insert guarantee (reference
-    L4, hnsw.py:152-155) expressed over a stream. Duplicates arriving
-    within ``watermark`` of first sight are dropped, including across
-    micro-batches (pinned in tests)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
-    )
-
-
 def first_seen_stream(
     events: DataFrame,
     keys: list[str] | None = None,
@@ -248,74 +153,20 @@ def first_seen_stream(
     exchange) and is evicted once the watermark passes a key's last
     sighting, so state is bounded on a perpetual stream.
 
-    Why this is the default and :func:`first_seen_filter_stream` is not:
-    the round-6 100× campaign (SCALE.md wave-7) measured the Python
-    stateful form at 110 s for 10 M events / 750 k keys — ~90 k
-    row-visits/s through the Arrow state boundary, unchanged under the
-    RocksDB provider — while this native form does the same first-seen
-    filtering inside the JVM (wave-13 measured it at the
-    stream_hourly_counts cost class, not the Python-state class).
+    Why native and not ``applyInPandasWithState``: a 100× run (SCALE.md
+    wave-7) measured the Python stateful form at 110 s for 10 M events /
+    750 k keys — ~90 k row-visits/s through the Arrow state boundary,
+    unchanged under the RocksDB provider — while this native form does
+    the same first-seen filtering inside the JVM (wave-13 measured it at
+    the stream_hourly_counts cost class, not the Python-state class).
 
     Semantics note: the surviving row per key is the first to ARRIVE
     (arrival order == event-time order only when the source replays in
     order); a key recurring after its watermark expiry re-emits. When you
     need the event-time argmin row exactly, or richer per-key state than
-    seen/not-seen, use the custom-state seam
-    (:func:`first_seen_filter_stream`)."""
+    seen/not-seen, use a custom-state ``applyInPandasWithState``."""
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         keys or ["user_id", "event_type"]
-    )
-
-
-def first_seen_filter_stream(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: emit only the
-    FIRST event per (user_id, event_type) across the whole stream,
-    picking the exact event-time argmin (ts, event_id) within the
-    arriving batch.
-
-    **This is the custom-state SEAM DEMO, not the default first-seen
-    path** — use :func:`first_seen_stream`
-    (``dropDuplicatesWithinWatermark``, JVM-native state) unless you
-    need per-key state Spark's built-ins can't express. The cost of
-    this form is structural: every present key's state crosses the
-    Python/Arrow boundary each micro-batch (~90 k row-visits/s measured
-    at 100×, SCALE.md wave-7 — state-store provider irrelevant). Keep it
-    for genuinely custom state machines; first-seen itself is not one."""
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("seen", T.BooleanType())])
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            return
-        first = None
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            cand = pdf.sort_values(["ts", "event_id"]).iloc[0]
-            if first is None or (cand.ts, cand.event_id) < (first.ts, first.event_id):
-                first = cand
-        if first is not None:
-            state.update((True,))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "event_type": [key[1]],
-                    "event_id": [first.event_id],
-                    "ts": [first.ts],
-                }
-            )
-
-    return events.groupBy("user_id", "event_type").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
