@@ -165,3 +165,28 @@ def test_insert_documents_preserves_evolved_columns(spark, service):
     assert rows["Red Apple"].ingest_tag is None
     # ids stayed dense max+1
     assert sorted(r.id for r in rows.values()) == [1, 2, 3, 4, 5]
+
+
+def test_unreadable_index_raises_instead_of_going_exact(spark, service):
+    """A present but unreadable index is not an absent one: search and
+    insert raise rather than silently running exact search or leaving the
+    new documents out of the index."""
+    import glob
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    service.build_index(k=2)
+    parts = glob.glob(os.path.join(service.index_path, "centroids", "part-*"))
+    assert parts
+    for p in parts:
+        with open(p, "wb") as f:
+            f.write(b"this is not a parquet file")
+    with pytest.raises(Py4JJavaError, match="parquet"):
+        service.search(["Red Apple"], top_k=2).collect()
+    more = spark.createDataFrame(
+        [("Yellow Banana", {"kind": "fruit"})],
+        "content string, metadata map<string,string>",
+    )
+    with pytest.raises(Py4JJavaError, match="parquet"):
+        service.insert_documents(more)

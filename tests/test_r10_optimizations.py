@@ -105,3 +105,27 @@ def test_overlap_map_propagates_exceptions():
 
     with pytest.raises(ValueError):
         overlap_map(boom, [1, 2, 3], max_workers=2)
+
+
+def test_overlap_map_warns_once_when_inheritance_fails(spark, monkeypatch):
+    """A failure to wrap with inheritable_thread_target (other than having no
+    session) still runs the jobs, but says so: one warning per process."""
+    import warnings
+
+    import pyspark
+
+    from vector_db_spark import parallel
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("no inheritance today")
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", broken)
+    monkeypatch.setattr(parallel, "_warned_fallback", False)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert overlap_map(lambda x: x * 2, [1, 2, 3], max_workers=2) == [2, 4, 6]
+        assert overlap_map(lambda x: x + 1, [1, 2], max_workers=2) == [2, 3]
+    fallback = [w for w in caught if "overlap_map" in str(w.message)]
+    assert len(fallback) == 1
+    assert issubclass(fallback[0].category, RuntimeWarning)
+    assert "no inheritance today" in str(fallback[0].message)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_db_spark.functions.embedding import stub_embedder
+from vector_db_spark.io import has_data_files
 from vector_db_spark.operators.ivf import IVFIndex
 from vector_db_spark.operators.knn import knn_join
 from vector_db_spark.storage import NODE_SCHEMA, NodeTable
@@ -57,16 +58,16 @@ class VectorDBService:
         to read (e.g. incompatible evolved-column types) must RAISE on
         the next operation — swallowing the error here would route the
         next insert to init() and silently overwrite the whole corpus.
-        Delegates to NodeTable.exists(), the single owner of that check."""
+        Delegates to NodeTable.exists(), i.e. io.has_data_files."""
         return self.nodes.exists()
 
     def _index(self) -> IVFIndex | None:
+        """The IVF index iff its centroid table holds data files — the same
+        filesystem check as :meth:`_has_corpus`, so a present but unreadable
+        index raises on its next read instead of turning search exact and
+        leaving inserts out of the index."""
         idx = IVFIndex(self.spark, self.index_path, id_col="id", vec_col="embedding")
-        try:
-            idx.centroids().limit(1).collect()
-            return idx
-        except Exception:
-            return None
+        return idx if has_data_files(idx.centroids_path) else None
 
     # -- write path (POST /embed) ---------------------------------------------
 

@@ -60,6 +60,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def has_data_files(path: str) -> bool:
+    """Filesystem-level presence of data files under ``path``, with no read
+    attempt: a present-but-unreadable table must raise on its next read, not
+    look absent."""
+    if not os.path.isdir(path):
+        return False
+    return any(
+        f.endswith(".parquet") or f.startswith("part-")
+        for f in os.listdir(path)
+    )
+
+
 def write_small_parquet(path: str, table) -> None:
     """Overwrite ``path`` with one Parquet file holding a driver-side
     pyarrow Table — for index state that is small by definition (k×dim

@@ -17,6 +17,7 @@ matching JVM thread state is cleaned up when the Python thread exits
 
 from __future__ import annotations
 
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Iterable, List, TypeVar
 
@@ -41,20 +42,41 @@ def overlap_map(
     items = list(items)
     if max_workers <= 1 or len(items) <= 1:
         return [fn(x) for x in items]
-    try:
-        from pyspark import inheritable_thread_target
-        from pyspark.sql import SparkSession
+    with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:
+        return list(pool.map(_inheriting(fn), items))
 
-        session = SparkSession.getActiveSession()
+
+_warned_fallback = False
+
+
+def _inheriting(fn: Callable[[T], R]) -> Callable[[T], R]:
+    """``fn`` wrapped to inherit the submitting thread's Spark properties.
+    Plain ``fn`` when there is nothing to inherit (pyspark not importable, no
+    active session or context); any other failure to wrap also falls back to
+    plain ``fn``, with one warning per process."""
+    global _warned_fallback
+    try:
+        from pyspark import SparkContext, inheritable_thread_target
+        from pyspark.sql import SparkSession
+    except ImportError:
+        return fn
+    session = SparkSession.getActiveSession()
+    if session is None and SparkContext._active_spark_context is None:
+        return fn
+    try:
         # with the session, tags AND local properties are inherited (and the
         # "Tags will not be inherited" warning is avoided); without one the
         # plain-callable form still inherits local properties
-        wrapped = (
-            inheritable_thread_target(session)(fn)
-            if session is not None
-            else inheritable_thread_target(fn)
-        )
-    except Exception:  # no active classic session (e.g. unit-testing the map)
-        wrapped = fn
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:
-        return list(pool.map(wrapped, items))
+        if session is not None:
+            return inheritable_thread_target(session)(fn)
+        return inheritable_thread_target(fn)
+    except Exception as e:
+        if not _warned_fallback:
+            _warned_fallback = True
+            warnings.warn(
+                f"overlap_map: jobs run without inherited Spark properties "
+                f"(inheritable_thread_target failed: {type(e).__name__}: {e})",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+        return fn

@@ -14,6 +14,10 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package, put on the Python workers' path so the
+# worker daemon below imports from the same checkout as the driver
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "spark-vector-engine", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -39,6 +43,10 @@ def get_spark(app_name: str = "spark-vector-engine", cpus: int | None = None) ->
         # typed filter pushdown into Python data sources (sources/jsonl.py)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.warehouse.dir", os.path.join(tempfile.gettempdir(), "spark-warehouse"))
+        # Python workers run under pyworker.py's daemon, which stops every
+        # task from re-reading pyspark.zip (see that module)
+        .config("spark.python.daemon.module", "vector_db_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -25,11 +25,11 @@ metadata map<string,string>``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vector_db_spark.io import has_data_files
 
 NODE_SCHEMA = T.StructType(
     [
@@ -73,14 +73,7 @@ class NodeTable:
         return out
 
     def exists(self) -> bool:
-        """Filesystem-level presence of data files (no read attempt — a
-        present-but-unreadable table must raise, not look absent)."""
-        if not os.path.isdir(self.path):
-            return False
-        return any(
-            f.endswith(".parquet") or f.startswith("part-")
-            for f in os.listdir(self.path)
-        )
+        return has_data_files(self.path)
 
     def get(self, node_id: int) -> DataFrame:
         """Point lookup (reference storage.py:232-252)."""
