@@ -189,49 +189,6 @@ def test_refresh_drift_reassign(spark, sf_smoke, tmp_path):
     assert mismatches == 0
 
 
-def test_split_cluster_conserves_and_preserves_search(spark, sf_smoke, tmp_path):
-    emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFIndex.build(spark, emb, 5, str(tmp_path / "split-idx"))
-    total = idx.corpus().count()
-    sizes = {r.cluster_id: r.cluster_size for r in idx.cluster_sizes().collect()}
-    hot = max(sizes, key=sizes.get)
-
-    q = _queries(spark, sf_smoke, 20)
-    before = sorted(
-        (r.query_id, r.neighbor_id, r.dist)
-        for r in idx.search(q, k=5, n_probe=len(sizes)).collect()
-    )
-
-    info = idx.split_cluster(hot, 3)
-    assert info["retired"] == hot and len(info["new_clusters"]) == 3
-
-    new_sizes = {r.cluster_id: r.cluster_size for r in idx.cluster_sizes().collect()}
-    assert hot not in new_sizes  # retired partition removed
-    assert idx.corpus().count() == total  # conservation
-    split_sizes = [new_sizes.get(c, 0) for c in info["new_clusters"]]
-    assert sum(split_sizes) == sizes[hot]
-    assert max(split_sizes) < sizes[hot]  # the hot partition actually shrank
-
-    cids = {r.cluster_id for r in idx.centroids().collect()}
-    assert hot not in cids and set(info["new_clusters"]) <= cids
-
-    # exhaustive probing is brute force before AND after the split
-    after = sorted(
-        (r.query_id, r.neighbor_id, r.dist)
-        for r in idx.search(q, k=5, n_probe=len(cids)).collect()
-    )
-    assert before == after
-
-
-def test_split_cluster_rejects_bad_args(spark, sf_smoke, tmp_path):
-    emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFIndex.build(spark, emb, 4, str(tmp_path / "split-bad"))
-    with pytest.raises(ValueError, match="n_sub"):
-        idx.split_cluster(0, 1)
-    with pytest.raises(ValueError, match="unknown cluster_id"):
-        idx.split_cluster(999, 2)
-
-
 def test_ivf_search_big_query_side_drops_broadcast_hint(spark, sf_smoke, tmp_path):
     """Past max_broadcast_queries the probe join must carry no forced
     broadcast hint (Catalyst decides from real stats); results at a tiny

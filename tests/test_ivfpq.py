@@ -303,3 +303,25 @@ def test_recover_completes_legacy_committed_unexecuted_codes_swap(
     assert idx.codes().filter(F.col("vec_id").isin(victim)).count() == 0
     assert idx.codes().count() == n0 - 1
     assert not os.path.exists(tmp)
+
+
+def test_add_encodes_like_build(spark, sf_smoke, tmp_path):
+    """build encodes from the in-memory model and add from the persisted
+    tables: a copy added under a new id must land in its original's
+    cluster with its original's codes."""
+    emb = load_table(spark, sf_smoke, "embeddings")
+    idx = IVFPQIndex.build(
+        spark, emb, str(tmp_path / "idx"), k_coarse=4, n_chunks=8, k_codes=16
+    )
+    offset = 1_000_000
+    idx.add(
+        emb.filter(F.col("vec_id") < 20).select(
+            (F.col("vec_id") + offset).alias("vec_id"), "embedding"
+        )
+    )
+    rows = idx.codes().collect()
+    by_id = {r.vec_id: (r.cluster_id, list(r.codes)) for r in rows}
+    copies = {i - offset: v for i, v in by_id.items() if i >= offset}
+    assert sorted(copies) == list(range(20))
+    for orig, got in copies.items():
+        assert got == by_id[orig], orig

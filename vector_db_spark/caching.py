@@ -57,7 +57,3 @@ def release_caches() -> None:
         except Exception:
             pass
 
-
-def tracked_count() -> int:
-    """Number of live tracked blocks (for tests)."""
-    return len(_TRACKED)

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_db_spark.functions.distance import METRICS
-from vector_db_spark.operators.topk import top_k_per_group
+from vector_db_spark.operators.topk import nearest_k, top_k_per_group
 
 WORD_BITS = 32  # 32-bit words: overflow-free in every engine's BIGINT math
 
@@ -158,9 +158,7 @@ def bq_search(
             "hamming",
         )
     )
-    return top_k_per_group(
-        exact, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-    )
+    return nearest_k(exact, k)
 
 
 class BQIndex:
@@ -271,6 +269,4 @@ class BQIndex:
                 "hamming",
             )
         )
-        return top_k_per_group(
-            exact, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-        )
+        return nearest_k(exact, k)

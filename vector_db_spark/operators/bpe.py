@@ -31,7 +31,7 @@ Python reference BPE on real corpus samples.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vector_db_spark.functions.text import tokens
@@ -116,15 +116,6 @@ def learn_bpe(
         if step % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
             words = words.localCheckpoint()
     return merges
-
-
-def bpe_merge_table(
-    spark: SparkSession, docs: DataFrame, **kw
-) -> DataFrame:
-    return spark.createDataFrame(
-        learn_bpe(docs, **kw),
-        "step int, left string, right string, merged string, pair_count long",
-    )
 
 
 def apply_bpe(

@@ -5,7 +5,7 @@ indexing/ivf.py``) Spark-first:
 
 | reference                                   | here |
 |---------------------------------------------|------|
-| ``build_index``: scipy ``kmeans2`` + Python inverted lists (ivf.py:49-85) | bounded-sample k-means++/Lloyd (operators.kmeans; ``trainer="ml"`` for a fully-distributed ``pyspark.ml`` fit) + distributed broadcast-argmin assignment; "inverted list" = the corpus written ``partitionBy("cluster_id")`` — probing a cluster IS partition pruning |
+| ``build_index``: scipy ``kmeans2`` + Python inverted lists (ivf.py:49-85) | bounded-sample k-means++/Lloyd (operators.kmeans) + distributed broadcast-argmin assignment; "inverted list" = the corpus written ``partitionBy("cluster_id")`` — probing a cluster IS partition pruning |
 | ``add``: argmin over centroids, append to list (ivf.py:87-117) | broadcast-centroid argmin join → append to the partitioned table |
 | ``delete``: remove id from all lists (ivf.py:119-136) | dynamic partition overwrite of only the affected clusters |
 | ``search``: rank centroids, scan n_probe lists, exact top-k (ivf.py:138-199) | probe ranking via broadcast centroid join → semi-join on ``cluster_id`` (partition pruning) → exact distance → windowed top-k |
@@ -21,14 +21,25 @@ as a data-parallel plan.
 
 from __future__ import annotations
 
+import math
 import os
+from collections.abc import Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vector_db_spark.functions.distance import METRICS, euclidean
-from vector_db_spark.io import write_clustered  # noqa: F401  (re-export: index writers use it)
-from vector_db_spark.operators.topk import top_k_per_group
+from vector_db_spark.io import write_clustered, write_small_parquet
+from vector_db_spark.operators.kmeans import DEFAULT_SAMPLE_CAP, train_centroids
+from vector_db_spark.operators.staging import (
+    assert_no_pending_swap,
+    execute_swap,
+    recover_staged,
+    write_swap_plan,
+)
+from vector_db_spark.operators.topk import nearest_k, top_k_per_group
 
 # k-means needs ~this many training points per centroid to place it on
 # signal rather than noise — shared by derive_k's floor and build()'s
@@ -124,6 +135,11 @@ class IVFIndex:
     def centroids(self) -> DataFrame:
         return self.spark.read.parquet(self.centroids_path)
 
+    def centroid_matrix(self) -> np.ndarray:
+        """(k, dim) float64; row i is cluster i (k×dim — small by definition)."""
+        rows = sorted(self.centroids().collect(), key=lambda r: r.cluster_id)
+        return np.array([r.centroid for r in rows], dtype=np.float64)
+
     def corpus(self) -> DataFrame:
         # a committed-but-unfinished maintenance swap can have clusters
         # missing from the live layout; reading through it would be
@@ -134,21 +150,19 @@ class IVFIndex:
     # -- build (reference ivf.py:49-85) ---------------------------------------
 
     @staticmethod
-    def derive_k(n: int, *, min_points_per_cluster: int = MIN_POINTS_PER_CLUSTER, sqrt_factor: float = 4.0) -> int:
+    def derive_k(n: int) -> int:
         """Corpus-derived cluster count — the IVF twin of
         ``similarity.derive_lsh_geometry`` (round-6 self-deriving-knob
         policy): ``k ≈ 4·√n`` (the FAISS IVF guidance: per-probe scan
         volume n/k then shrinks as √n while the broadcast centroid table
         stays k×dim ≈ kilobytes), floored so every centroid keeps at
-        least ~``min_points_per_cluster`` training points (below that
+        least ~``MIN_POINTS_PER_CLUSTER`` training points (below that
         k-means places centroids on noise). Pure scalar math; callers
         that need the oracle-pinned fixture geometry keep passing k
         explicitly."""
-        import math
-
         if n <= 0:
             return 1
-        return max(1, min(n // min_points_per_cluster, int(round(sqrt_factor * math.sqrt(n)))))
+        return max(1, min(n // MIN_POINTS_PER_CLUSTER, int(round(4.0 * math.sqrt(n)))))
 
     @classmethod
     def build(
@@ -162,7 +176,6 @@ class IVFIndex:
         vec_col: str = "embedding",
         max_iter: int = 20,
         seed: int = 42,
-        trainer: str = "sample",
     ) -> "IVFIndex":
         """Quantizer fit → distributed assign → write corpus partitioned by
         cluster, plus the centroid table.
@@ -171,52 +184,24 @@ class IVFIndex:
         :meth:`derive_k` — geometry follows the corpus, like the LSH
         near-dup path.
 
-        ``trainer="sample"`` (default): k-means++/Lloyd on a bounded random
-        sample (operators.kmeans) — the FAISS-style scale design; only the
-        capped sample and the k×dim centers ever land on the driver, and
+        The quantizer is k-means++/Lloyd on a bounded random sample
+        (operators.kmeans) — the FAISS-style scale design; only the capped
+        sample and the k×dim centers ever land on the driver, and
         assignment is a broadcast-argmin over the full corpus.
-        ``trainer="ml"``: fully-distributed ``pyspark.ml`` KMeans for when
-        training must see more rows than the driver can sample.
         """
         if k is None:
             k = cls.derive_k(corpus.count())
-        if trainer == "sample":
-            from vector_db_spark.operators.kmeans import (
-                DEFAULT_SAMPLE_CAP,
-                train_centroids,
-            )
-
-            # the sample must keep ~39 training points per centroid (the
-            # derive_k floor) or large-k fits place centroids on noise —
-            # grow the cap with k; driver cost stays k·39·dim doubles
-            cents = train_centroids(
-                corpus, vec_col, k, max_iter=max_iter, seed=seed,
-                sample_cap=max(DEFAULT_SAMPLE_CAP, MIN_POINTS_PER_CLUSTER * k),
-            )
-            centers = [(int(i), c) for i, c in enumerate(cents)]
-            assigned = assign_to_centroids(
-                corpus.select(id_col, vec_col), centers,
-                id_col=id_col, vec_col=vec_col,
-            )
-        elif trainer == "ml":
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.functions import array_to_vector
-
-            feat = corpus.select(
-                F.col(id_col),
-                F.col(vec_col),
-                array_to_vector(F.col(vec_col).cast("array<double>")).alias("__features"),
-            )
-            model = KMeans(k=k, maxIter=max_iter, seed=seed, featuresCol="__features").fit(feat)
-            assigned = (
-                model.transform(feat)
-                .select(id_col, vec_col, F.col("prediction").alias("cluster_id"))
-            )
-            centers = [
-                (int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-            ]
-        else:
-            raise ValueError(f"unknown trainer {trainer!r} (use 'sample' or 'ml')")
+        # the sample must keep ~39 training points per centroid (the
+        # derive_k floor) or large-k fits place centroids on noise —
+        # grow the cap with k; driver cost stays k·39·dim doubles
+        centers = train_centroids(
+            corpus, vec_col, k, max_iter=max_iter, seed=seed,
+            sample_cap=max(DEFAULT_SAMPLE_CAP, MIN_POINTS_PER_CLUSTER * k),
+        )
+        assigned = assign_to_centroids(
+            corpus.select(id_col, vec_col), list(enumerate(centers)),
+            id_col=id_col, vec_col=vec_col,
+        )
         # O(k) files, not tasks × k — see write_clustered; parallelism
         # scales with k so a derived-k build keeps its writers busy
         n_shuffle = max(
@@ -226,20 +211,25 @@ class IVFIndex:
         write_clustered(
             assigned, os.path.join(path, "corpus"), num_partitions=n_shuffle
         )
-        import pyarrow as pa
+        index = cls(spark, path, id_col=id_col, vec_col=vec_col)
+        index.write_centroids(centers)
+        return index
 
-        from vector_db_spark.io import write_small_parquet
-
+    def write_centroids(self, centers: Sequence[Sequence[float]]) -> None:
+        """The centroid table's one writer; row i is cluster i. Index
+        writers call it last: its data files are the commit point
+        ``VectorDBService._index()`` checks."""
         write_small_parquet(
-            os.path.join(path, "centroids"),
+            self.centroids_path,
             pa.table(
                 {
-                    "cluster_id": pa.array([c for c, _ in centers], pa.int32()),
-                    "centroid": pa.array([v for _, v in centers], pa.list_(pa.float64())),
+                    "cluster_id": pa.array(range(len(centers)), pa.int32()),
+                    "centroid": pa.array(
+                        np.asarray(centers, dtype=np.float64).tolist(), pa.list_(pa.float64())
+                    ),
                 }
             ),
         )
-        return cls(spark, path, id_col=id_col, vec_col=vec_col)
 
     # -- incremental add (reference ivf.py:87-117) -----------------------------
 
@@ -269,14 +259,11 @@ class IVFIndex:
         RAISES while a planned swap is pending — a crashed swap can leave
         clusters missing from the live layout, and a read that silently
         skipped them would be wrong, not slow. Idempotent; safe anytime."""
-        from vector_db_spark.operators.staging import recover_staged
-
         return recover_staged(self.spark, self.corpus_path, self._SWAP_TMPS)
 
-    def _assert_no_pending_swap(self) -> None:
-        from vector_db_spark.operators.staging import assert_no_pending_swap
-
-        assert_no_pending_swap(self.spark, self.corpus_path, self._SWAP_TMPS)
+    def _assert_no_pending_swap(self, table: str | None = None) -> None:
+        """Raise while ``table`` (default: the corpus) has a planned swap."""
+        assert_no_pending_swap(self.spark, table or self.corpus_path, self._SWAP_TMPS)
 
     def delete(self, ids: list[int]) -> None:
         """Rewrite only the partitions that contain the deleted ids — never
@@ -305,8 +292,6 @@ class IVFIndex:
         )
         tmp = self.corpus_path.rstrip("/") + ".tmp-delete"
         write_clustered(remaining, tmp)
-        from vector_db_spark.operators.staging import execute_swap, write_swap_plan
-
         write_swap_plan(self.spark, tmp, clusters, [])
         execute_swap(self.spark, self.corpus_path, tmp)
 
@@ -334,12 +319,9 @@ class IVFIndex:
         else's drift, a second-order effect); a full Lloyd pass is
         ``build`` again. Returns ``{"max_shift", "drifted", "moved"}``.
         """
-        import numpy as np
-
         self.recover()
-        cent_rows = self.centroids().select("cluster_id", "centroid").collect()
-        old = {int(r.cluster_id): np.asarray(r.centroid, dtype=np.float64) for r in cent_rows}
-        dim = len(next(iter(old.values())))
+        old = self.centroid_matrix()
+        dim = old.shape[1]
 
         corpus = self.corpus()
         mean_rows = (
@@ -347,30 +329,16 @@ class IVFIndex:
             .agg(*[F.avg(F.col(self.vec_col)[i]).alias(f"m{i}") for i in range(dim)])
             .collect()
         )  # k×dim only
-        new = dict(old)
+        new = old.copy()
         for r in mean_rows:
-            new[int(r.cluster_id)] = np.array([r[f"m{i}"] for i in range(dim)])
-        shifts = {c: float(np.linalg.norm(new[c] - old[c])) for c in old}
-        max_shift = max(shifts.values(), default=0.0)
-
-        import pyarrow as pa
-
-        from vector_db_spark.io import write_small_parquet
-
-        centers = sorted((c, [float(x) for x in v]) for c, v in new.items())
-        write_small_parquet(
-            self.centroids_path,
-            pa.table(
-                {
-                    "cluster_id": pa.array([c for c, _ in centers], pa.int32()),
-                    "centroid": pa.array([v for _, v in centers], pa.list_(pa.float64())),
-                }
-            ),
-        )
+            new[int(r.cluster_id)] = [r[f"m{i}"] for i in range(dim)]
+        shifts = [float(np.linalg.norm(n - o)) for n, o in zip(new, old)]
+        max_shift = max(shifts, default=0.0)
+        self.write_centroids(new)
 
         moved = 0
         drifted = (
-            sorted(c for c, s in shifts.items() if s > reassign_threshold)
+            [c for c, s in enumerate(shifts) if s > reassign_threshold]
             if reassign_threshold is not None
             else []
         )
@@ -382,7 +350,7 @@ class IVFIndex:
             )
             reassigned = assign_to_centroids(
                 affected.drop("cluster_id"),
-                centers,
+                list(enumerate(new)),
                 id_col=self.id_col,
                 vec_col=self.vec_col,
             ).localCheckpoint(eager=True)  # assignments must not recompute
@@ -409,120 +377,9 @@ class IVFIndex:
                 .filter(~F.col("cluster_id").isin(drifted))
                 .collect()
             ]
-            from vector_db_spark.operators.staging import (
-                execute_swap,
-                write_swap_plan,
-            )
-
             write_swap_plan(self.spark, tmp, drifted, mover_clusters)
             execute_swap(self.spark, self.corpus_path, tmp)
         return {"max_shift": max_shift, "drifted": drifted, "moved": moved}
-
-    # -- maintenance: hot-cluster split ------------------------------------------
-
-    def split_cluster(self, cluster_id: int, n_sub: int = 2, *, max_iter: int = 10, seed: int = 42) -> dict:
-        """Mega-cluster mitigation as a first-class operator (SCALE.md
-        "what would break first" #1): re-cluster ONE oversized cluster into
-        ``n_sub`` sub-clusters, touching nothing else.
-
-        Natural k-means skew concentrates mass in a few clusters; every
-        downstream per-cluster kernel (knn_graph, hnsw_export, SemDeDup)
-        and every probe of the hot partition pays for it. AQE splits the
-        *join tasks* at read time, but the partition itself stays fat on
-        disk. This fixes the layout:
-
-        1. scan only the hot partition (partition-pruned read);
-        2. fit ``n_sub`` sub-centroids on a bounded sample of its members
-           (operators.kmeans — driver sees ≤ capped-sample rows);
-        3. broadcast-argmin assignment to FRESH cluster ids (old max+1…),
-           so stale references to the retired id can never alias a
-           half-rewritten partition;
-        4. stage the sub-partitions to a tmp dir and swap via the
-           FileSystem API (same protocol as :meth:`delete`), removing the
-           retired partition dir;
-        5. rewrite the centroid table: retired row out, ``n_sub`` rows in.
-
-        Search semantics are preserved exactly under exhaustive probing
-        (probe-all ≡ brute force before and after — pinned in
-        tests/test_ivf.py); at fixed ``n_probe`` the finer quantizer can
-        only tighten the probed region around the split.
-
-        Returns ``{"retired", "new_clusters", "sizes"}``."""
-        if n_sub < 2:
-            raise ValueError("n_sub must be >= 2")
-        from vector_db_spark.operators.kmeans import train_centroids
-
-        cent_rows = self.centroids().select("cluster_id", "centroid").collect()
-        if cluster_id not in {int(r.cluster_id) for r in cent_rows}:
-            raise ValueError(f"unknown cluster_id {cluster_id}")
-        next_id = max(int(r.cluster_id) for r in cent_rows) + 1
-        members = self.corpus().filter(F.col("cluster_id") == cluster_id)
-        n_members = members.count()
-        if n_members < n_sub:
-            raise ValueError(
-                f"cluster {cluster_id} has {n_members} members, cannot split into {n_sub}"
-            )
-
-        subs = train_centroids(
-            members.select(self.vec_col), self.vec_col, n_sub, max_iter=max_iter, seed=seed
-        )
-        centers = [(next_id + i, list(c)) for i, c in enumerate(subs)]
-        assigned = assign_to_centroids(
-            members.select(self.id_col, self.vec_col).drop("cluster_id"),
-            centers,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-        )
-
-        tmp = self.corpus_path.rstrip("/") + ".tmp-split"
-        write_clustered(
-            assigned.select(self.id_col, self.vec_col, "cluster_id"), tmp
-        )
-        jpath = self.spark._jvm.org.apache.hadoop.fs.Path
-        fs = jpath(self.corpus_path).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        # crash-safety ordering: rename the NEW partitions in first (fresh
-        # ids cannot collide with existing dirs), then rewrite the centroid
-        # table, and delete the retired partition LAST — every intermediate
-        # state is readable (worst case the retired cluster's vectors are
-        # briefly duplicated under old+new ids, never missing; a crash
-        # before the centroid rewrite leaves the old index fully intact)
-        for c, _ in centers:
-            src = jpath(os.path.join(tmp, f"cluster_id={c}"))
-            if fs.exists(src):  # a sub-centroid can end up empty on tiny clusters
-                fs.rename(src, jpath(os.path.join(self.corpus_path, f"cluster_id={c}")))
-
-        import pyarrow as pa
-
-        from vector_db_spark.io import write_small_parquet
-
-        kept = [
-            (int(r.cluster_id), [float(x) for x in r.centroid])
-            for r in cent_rows
-            if int(r.cluster_id) != cluster_id
-        ]
-        all_centers = sorted(kept + [(c, [float(x) for x in v]) for c, v in centers])
-        write_small_parquet(
-            self.centroids_path,
-            pa.table(
-                {
-                    "cluster_id": pa.array([c for c, _ in all_centers], pa.int32()),
-                    "centroid": pa.array([v for _, v in all_centers], pa.list_(pa.float64())),
-                }
-            ),
-        )
-        fs.delete(jpath(os.path.join(self.corpus_path, f"cluster_id={cluster_id}")), True)
-        fs.delete(jpath(tmp), True)
-        sizes = {
-            int(r.cluster_id): int(r.cluster_size)
-            for r in self.cluster_sizes()
-            .filter(F.col("cluster_id").isin([c for c, _ in centers]))
-            .collect()
-        }
-        return {
-            "retired": cluster_id,
-            "new_clusters": [c for c, _ in centers],
-            "sizes": sizes,
-        }
 
     # -- search (reference ivf.py:138-199) --------------------------------------
 
@@ -558,15 +415,48 @@ class IVFIndex:
         instead of shipping a corpus-shaped probe table to every task."""
         if metric not in METRICS:
             raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
-        # probe ranking uses the SAME metric as final scoring: a euclidean
-        # probe under metric="dot" would aim at the L2-nearest centroids
-        # while the max-inner-product neighbors live in large-norm clusters
-        # far away in L2 — deterministically missing the true top-k
-        # whenever n_probe < n_clusters (for "cosine" the registered path
-        # normalizes first, where the two orders coincide; this guards the
-        # direct-API caller on raw vectors). Ranking ascending by
-        # METRICS[metric] is nearest-under-that-metric by construction
-        # (dot is registered negated).
+        corpus = self.corpus()
+        if allowed_ids is not None:
+            corpus = corpus.join(allowed_ids, self.id_col, "left_semi")
+        cand = self.probe_join(
+            queries, corpus, n_probe, metric=metric, query_id_col=query_id_col,
+            query_vec_col=query_vec_col, max_broadcast_queries=max_broadcast_queries,
+        )
+        scored = cand.select(
+            F.col(query_id_col).alias("query_id"),
+            F.col(self.id_col).alias("neighbor_id"),
+            METRICS[metric](F.col(query_vec_col), F.col(self.vec_col)).alias("dist"),
+        )
+        return nearest_k(scored, k, round_to)
+
+    def probe_join(
+        self,
+        queries: DataFrame,
+        table: DataFrame,
+        n_probe: int,
+        *,
+        metric: str = "euclidean",
+        query_id_col: str = "query_id",
+        query_vec_col: str = "query_vec",
+        max_broadcast_queries: int = 10_000,
+    ) -> DataFrame:
+        """Each query's ``n_probe`` nearest clusters (ivf.py:170-171's
+        argsort as a windowed top-n_probe over the broadcast centroid join),
+        joined to the cluster-partitioned ``table`` on ``cluster_id`` — the
+        scan reads only the probed partitions.
+
+        Probe ranking uses the SAME metric as final scoring: a euclidean
+        probe under metric="dot" would aim at the L2-nearest centroids
+        while the max-inner-product neighbors live in large-norm clusters
+        far away in L2 — deterministically missing the true top-k
+        whenever n_probe < n_clusters (for "cosine" the registered path
+        normalizes first, where the two orders coincide; this guards the
+        direct-API caller on raw vectors). Ranking ascending by
+        METRICS[metric] is nearest-under-that-metric by construction
+        (dot is registered negated).
+
+        The probe side is broadcast only up to ``max_broadcast_queries``
+        query rows (one bounded count); past that the join runs un-hinted."""
         probes = top_k_per_group(
             queries.crossJoin(F.broadcast(self.centroids())).withColumn(
                 "__cdist", METRICS[metric](F.col(query_vec_col), F.col("centroid"))
@@ -575,24 +465,10 @@ class IVFIndex:
             [F.col("__cdist").asc(), F.col("cluster_id").asc()],
             n_probe,
         ).select(query_id_col, query_vec_col, "cluster_id")
-
-        corpus = self.corpus()
-        if allowed_ids is not None:
-            corpus = corpus.join(allowed_ids, self.id_col, "left_semi")
         small = (
             queries.limit(max_broadcast_queries + 1).count() <= max_broadcast_queries
         )
-        cand = (F.broadcast(probes) if small else probes).join(corpus, "cluster_id")
-        scored = cand.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(self.id_col).alias("neighbor_id"),
-            METRICS[metric](F.col(query_vec_col), F.col(self.vec_col)).alias("dist"),
-        )
-        if round_to is not None:
-            scored = scored.withColumn("dist", F.round("dist", round_to))
-        return top_k_per_group(
-            scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-        )
+        return (F.broadcast(probes) if small else probes).join(table, "cluster_id")
 
     # -- stats (reference ivf.py:201-215) ----------------------------------------
 

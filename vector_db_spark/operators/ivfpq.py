@@ -2,32 +2,41 @@
 
 The reference ships IVF (``/root/reference/src/vector_db/indexing/ivf.py``)
 and PQ (``/root/reference/src/vector_db/inference/pq.py``) as *separate*
-components and never composes them. This module delivers the composition
-those two components exist for — the FAISS-style IVFADC pipeline that is
-the standard way to search billions of vectors:
+components and never composes them. This module composes the two
+(the FAISS-style IVFADC pipeline, the standard way to search billions of
+vectors) and owns only what the composition adds.
 
-1. **build**: coarse k-means (bounded-sample trainer, operators.kmeans) →
-   distributed nearest-centroid assignment → per-vector **residual**
-   ``x − centroid(x)`` → per-subspace codebooks trained on residual samples
-   → one Arrow pass encodes every vector to ``m`` byte-ish codes → codes
-   written ``partitionBy(cluster_id)``.
-2. **search**: rank centroids per query (broadcast k×dim join) → probe the
-   ``n_probe`` nearest partitions (dynamic partition pruning — the scan
-   reads only probed clusters, and only the ids+codes columns: m×4 bytes
-   per vector instead of dim×4) → per-(query, cluster) ADC lookup table
-   over the *residual* query → partial top-k inside each Arrow batch →
-   global exact top-k → optional **re-rank**: join the top ``refine×k``
-   candidates back to the raw corpus for exact distances.
+Reused, not copied:
 
-Why residuals: within a probed cluster, vectors share their centroid, so
-quantizing ``x − c`` spends the whole codebook budget on the local
-neighborhood — the precision trick from Jégou et al., "Product Quantization
-for Nearest Neighbor Search" (TPAMI 2011), §IV.A (IVFADC).
+- **coarse layer** — an :class:`~vector_db_spark.operators.ivf.IVFIndex`
+  over the same ``<path>``: its ``centroids/`` and ``corpus/`` readers
+  (with the pending-swap guard), ``assign``, the probe ranking
+  (``probe_join``), the one centroid-table writer and the cluster
+  statistics (``index.ivf.stats()``);
+- **codec** — a :class:`~vector_db_spark.operators.pq.PQModel` over the
+  same ``<path>``: the one codebook writer and tensor reader, and the one
+  PQ encode kernel :func:`~vector_db_spark.operators.pq.encode_chunks`.
+
+Added here:
+
+- the ``codes/`` table (``vec_id``, ``codes`` partitioned by
+  ``cluster_id``) — the compressed corpus, the only thing ADC scans —
+  with its add/delete kept in step with ``corpus/`` (a paired staged swap);
+- the **residual** step: codebooks are trained on, and vectors encoded as,
+  ``x − centroid(x)``. Within a probed cluster vectors share their
+  centroid, so quantizing the residual spends the whole codebook budget on
+  the local neighborhood — Jégou et al., "Product Quantization for Nearest
+  Neighbor Search" (TPAMI 2011), §IV.A (IVFADC);
+- the per-(query, cluster) **ADC kernel**: one lookup table over the
+  residual query ``q − c`` per probed cluster, a partial top-k inside each
+  Arrow batch, then a global exact top-k and an optional exact re-rank of
+  ``refine × k`` candidates against the raw corpus.
 
 At 100 TB: the only driver-side state is (k×dim centroids) + (m×k×sub
 codebooks); training samples are capped; encode/search are single Arrow
-passes over partition-pruned scans; the re-rank join touches refine×k rows
-per query.
+passes over partition-pruned scans (the ADC scan reads only the ids+codes
+columns: m×4 bytes per vector instead of dim×4); the re-rank join touches
+refine×k rows per query.
 """
 
 from __future__ import annotations
@@ -37,31 +46,33 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vector_db_spark.functions.distance import euclidean
-from vector_db_spark.io import write_clustered, write_small_parquet
-from vector_db_spark.operators.ivf import assign_to_centroids
+from vector_db_spark.io import write_clustered
+from vector_db_spark.operators.ivf import IVFIndex, assign_to_centroids
 from vector_db_spark.operators.kmeans import (
     DEFAULT_SAMPLE_CAP,
     collect_sample,
     kmeans_fit,
 )
-from vector_db_spark.operators.topk import top_k_per_group
+from vector_db_spark.operators.pq import PQModel, encode_chunks
+from vector_db_spark.operators.topk import nearest_k
 
 
 class IVFPQIndex:
     """Persisted layout under ``path``:
 
-    - ``centroids/``  (cluster_id int, centroid array<double>) — coarse.
+    - ``centroids/``  (cluster_id int, centroid array<double>) — coarse,
+      the :class:`IVFIndex` table.
     - ``codebooks/``  (chunk_idx int, code int, centroid array<double>) —
-      residual-space, ``m × k_codes`` rows.
+      residual-space, ``m × k_codes`` rows, the :class:`PQModel` table.
     - ``codes/``      (vec_id long, codes array<int>) partitioned by
       ``cluster_id`` — the compressed corpus, the only thing ADC scans.
     - ``corpus/``     (vec_id long, embedding, cluster_id) partitioned by
-      ``cluster_id`` — raw vectors, touched only by the re-rank join.
+      ``cluster_id`` — raw vectors (the :class:`IVFIndex` corpus), touched
+      only by the re-rank join.
     """
 
     def __init__(
@@ -76,95 +87,61 @@ class IVFPQIndex:
         self.path = path
         self.id_col = id_col
         self.vec_col = vec_col
+        self.ivf = IVFIndex(spark, path, id_col=id_col, vec_col=vec_col)
+        self.pq = PQModel(spark, path, id_col=id_col, vec_col=vec_col)
 
-    def centroids(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "centroids"))
-
-    def codebooks(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "codebooks"))
+    @property
+    def codes_path(self) -> str:
+        return os.path.join(self.path, "codes")
 
     def codes(self) -> DataFrame:
-        self._assert_no_pending_swap("codes")
-        return self.spark.read.parquet(os.path.join(self.path, "codes"))
+        self.ivf._assert_no_pending_swap(self.codes_path)
+        return self.spark.read.parquet(self.codes_path)
 
     def corpus(self) -> DataFrame:
-        self._assert_no_pending_swap("corpus")
-        return self.spark.read.parquet(os.path.join(self.path, "corpus"))
+        return self.ivf.corpus()
 
-    def _assert_no_pending_swap(self, sub: str) -> None:
-        # a committed-but-unfinished delete swap can have clusters missing
-        # from the live layout; reading through it would be silently wrong
-        from vector_db_spark.operators.staging import assert_no_pending_swap
-
-        assert_no_pending_swap(
-            self.spark, os.path.join(self.path, sub), self._SWAP_TMPS
-        )
-
-    # -- driver-side model tensors (k×dim + m×k×sub — small by definition) ----
-
-    def _centroid_matrix(self) -> np.ndarray:
-        rows = sorted(self.centroids().collect(), key=lambda r: r.cluster_id)
-        return np.array([r.centroid for r in rows], dtype=np.float64)
-
-    def _codebook_tensor(self) -> np.ndarray:
-        rows = self.codebooks().collect()
-        m = max(r.chunk_idx for r in rows) + 1
-        k = max(r.code for r in rows) + 1
-        t = np.zeros((m, k, len(rows[0].centroid)), dtype=np.float64)
-        for r in rows:
-            t[r.chunk_idx, r.code] = r.centroid
-        return t
-
-    # -- lifecycle: incremental add / partition-targeted delete ----------------
-
-    def _encode(self, assigned: DataFrame) -> DataFrame:
-        """(id, vec, cluster_id) → (id, codes, cluster_id): residual-encode
-        against the persisted model in one Arrow pass (the same kernel the
-        build uses; broadcast state is k×dim + m×k×sub)."""
-        bc = self.spark.sparkContext.broadcast(
-            (self._centroid_matrix(), self._codebook_tensor())
-        )
+    def _encode(
+        self, assigned: DataFrame, centroids: np.ndarray, tensor: np.ndarray
+    ) -> DataFrame:
+        """(id, vec, cluster_id) → (id, codes, cluster_id): the residual
+        ``x − centroids[cluster_id]`` through the PQ encode kernel, in one
+        Arrow pass (broadcast state is k×dim + m×k×sub)."""
+        bc = self.spark.sparkContext.broadcast((centroids, tensor))
         id_col, vec_col = self.id_col, self.vec_col
 
         def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             cents, t = bc.value
-            m, _, s = t.shape
             for pdf in batches:
                 if pdf.empty:
                     continue
                 v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
                 cid = pdf["cluster_id"].to_numpy(dtype=np.int64)
-                r = (v - cents[cid]).reshape(len(pdf), m, s)
-                codes = (
-                    ((r[:, :, None, :] - t[None, :, :, :]) ** 2)
-                    .sum(axis=3)
-                    .argmin(axis=2)
-                    .astype(np.int32)
-                )
+                codes = encode_chunks(v - cents[cid], t)
                 yield pd.DataFrame(
                     {id_col: pdf[id_col].values, "codes": list(codes), "cluster_id": cid}
                 )
 
         return assigned.mapInPandas(enc, f"{id_col} long, codes array<int>, cluster_id int")
 
+    # -- lifecycle: incremental add / partition-targeted delete ----------------
+
     def add(self, new_vectors: DataFrame) -> None:
         """Incremental add (mirrors ``IVFIndex.add``; reference
         ivf.py:87-117): coarse-assign, append to the partitioned corpus,
-        residual-encode the same rows, append to the codes table. Cold
-        partitions are never touched; the codebooks are NOT retrained
-        (FAISS semantics — retrain by rebuilding when drift matters)."""
-
-        assigned = assign_to_centroids(
-            new_vectors.select(self.id_col, self.vec_col),
-            self.centroids().select("cluster_id", "centroid"),
-            id_col=self.id_col,
-            vec_col=self.vec_col,
+        residual-encode the same rows against the persisted model, append
+        to the codes table. Cold partitions are never touched; the
+        codebooks are NOT retrained (FAISS semantics — retrain by
+        rebuilding when drift matters)."""
+        assigned = self.ivf.assign(
+            new_vectors.select(self.id_col, self.vec_col)
         ).select(self.id_col, self.vec_col, "cluster_id")
         assigned = assigned.cache()  # feeds both writes; tiny (one add batch)
-        write_clustered(assigned, os.path.join(self.path, "corpus"), mode="append")
-        write_clustered(
-            self._encode(assigned), os.path.join(self.path, "codes"), mode="append"
+        write_clustered(assigned, self.ivf.corpus_path, mode="append")
+        codes = self._encode(
+            assigned, self.ivf.centroid_matrix(), self.pq.codebook_tensor()
         )
+        write_clustered(codes, self.codes_path, mode="append")
         assigned.unpersist()
 
     _SWAP_TMPS = (".tmp-delete",)
@@ -283,16 +260,16 @@ class IVFPQIndex:
         vec_col: str = "embedding",
         max_iter: int = 20,
         seed: int = 42,
-        sample_cap: int = DEFAULT_SAMPLE_CAP,
     ) -> "IVFPQIndex":
-
+        """Coarse quantizer and residual codebooks from one bounded sample,
+        then corpus, codes and — last — the two model tables."""
         dim = len(corpus.select(vec_col).first()[0])
         if dim % n_chunks != 0:
             raise ValueError(f"dim {dim} not divisible into {n_chunks} chunks")
         sub = dim // n_chunks
 
         # 1. coarse quantizer on a bounded sample (one collect, capped)
-        x = collect_sample(corpus, vec_col, sample_cap, seed)
+        x = collect_sample(corpus, vec_col, DEFAULT_SAMPLE_CAP, seed)
         centers = kmeans_fit(x, k_coarse, max_iter=max_iter, seed=seed)
 
         # 2. residual codebooks: the SAME sample re-used — assign each
@@ -321,76 +298,23 @@ class IVFPQIndex:
         )  # (m, k_codes, sub)
 
         # 3. distributed assign + write raw corpus partitioned by cluster
-        centroid_rows = [(int(i), [float(v) for v in c]) for i, c in enumerate(centers)]
+        index = cls(spark, path, id_col=id_col, vec_col=vec_col)
         assigned = assign_to_centroids(
-            corpus.select(id_col, vec_col), centroid_rows, id_col=id_col, vec_col=vec_col
+            corpus.select(id_col, vec_col), list(enumerate(centers)),
+            id_col=id_col, vec_col=vec_col,
         )
-        write_clustered(assigned, os.path.join(path, "corpus"))
+        write_clustered(assigned, index.ivf.corpus_path)
 
         # 4. residual-encode in ONE Arrow pass over the just-written corpus
         #    (reading it back avoids recomputing the assignment lineage)
-        bc = spark.sparkContext.broadcast((centers, tensor))
-        raw = spark.read.parquet(os.path.join(path, "corpus"))
-
-        def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cents, t = bc.value
-            m, k, s = t.shape
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                cid = pdf["cluster_id"].to_numpy(dtype=np.int64)
-                r = (v - cents[cid]).reshape(len(pdf), m, s)  # residual chunks
-                codes = (
-                    ((r[:, :, None, :] - t[None, :, :, :]) ** 2)
-                    .sum(axis=3)
-                    .argmin(axis=2)
-                    .astype(np.int32)
-                )
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col].values, "codes": list(codes), "cluster_id": cid}
-                )
-
-        write_clustered(
-            raw.mapInPandas(enc, f"{id_col} long, codes array<int>, cluster_id int"),
-            os.path.join(path, "codes"),
-        )
+        codes = index._encode(index.corpus(), centers, tensor)
+        write_clustered(codes, index.codes_path)
 
         # 5. model state as engine-readable Parquet (no pickle — reference
         #    pickles at ivf.py:217-229 / implicit in pq)
-        write_small_parquet(
-            os.path.join(path, "centroids"),
-            pa.table(
-                {
-                    "cluster_id": pa.array(range(len(centers)), pa.int32()),
-                    "centroid": pa.array(
-                        [[float(v) for v in c] for c in centers], pa.list_(pa.float64())
-                    ),
-                }
-            ),
-        )
-        write_small_parquet(
-            os.path.join(path, "codebooks"),
-            pa.table(
-                {
-                    "chunk_idx": pa.array(
-                        [c for c in range(n_chunks) for _ in range(k_codes)], pa.int32()
-                    ),
-                    "code": pa.array(
-                        [i for _ in range(n_chunks) for i in range(k_codes)], pa.int32()
-                    ),
-                    "centroid": pa.array(
-                        [
-                            [float(v) for v in tensor[c, i]]
-                            for c in range(n_chunks)
-                            for i in range(k_codes)
-                        ],
-                        pa.list_(pa.float64()),
-                    ),
-                }
-            ),
-        )
-        return cls(spark, path, id_col=id_col, vec_col=vec_col)
+        index.ivf.write_centroids(centers)
+        index.pq.write_codebooks(tensor)
+        return index
 
     # -- search ---------------------------------------------------------------
 
@@ -417,27 +341,16 @@ class IVFPQIndex:
         the global top-k), so a corpus-shaped query table degrades to a
         shuffle join instead of a broadcast blow-up."""
         fetch = k * refine if refine else k
-        probes = top_k_per_group(
-            queries.crossJoin(F.broadcast(self.centroids())).withColumn(
-                "__cdist", euclidean(query_vec_col, "centroid")
-            ),
-            [query_id_col],
-            [F.col("__cdist").asc(), F.col("cluster_id").asc()],
-            n_probe,
-        ).select(query_id_col, query_vec_col, "cluster_id")
-
+        # the (tiny) probe table is broadcast into every codes partition —
+        # no shuffle of the codes side; DPP prunes unprobed clusters
+        cand = self.ivf.probe_join(
+            queries, self.codes(), n_probe, query_id_col=query_id_col,
+            query_vec_col=query_vec_col, max_broadcast_queries=max_broadcast_queries,
+        )
         bc = self.spark.sparkContext.broadcast(
-            (self._centroid_matrix(), self._codebook_tensor())
+            (self.ivf.centroid_matrix(), self.pq.codebook_tensor())
         )
         id_col, qid, qvec, kk = self.id_col, query_id_col, query_vec_col, fetch
-
-        # broadcast the (tiny) probe table into every codes partition —
-        # no shuffle of the codes side; DPP prunes unprobed clusters.
-        # Guarded: a corpus-shaped query table joins un-hinted instead.
-        small = (
-            queries.limit(max_broadcast_queries + 1).count() <= max_broadcast_queries
-        )
-        cand = (F.broadcast(probes) if small else probes).join(self.codes(), "cluster_id")
 
         def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             cents, t = bc.value
@@ -464,17 +377,9 @@ class IVFPQIndex:
                     )
 
         scored = cand.mapInPandas(score, "query_id long, neighbor_id long, dist double")
-        adc_top = top_k_per_group(
-            scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], fetch
-        ).drop("rank")
-
+        adc_top = nearest_k(scored, fetch).drop("rank")
         if not refine:
-            out = adc_top
-            if round_to is not None:
-                out = out.withColumn("dist", F.round("dist", round_to))
-            return top_k_per_group(
-                out, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-            )
+            return nearest_k(adc_top, k, round_to)
 
         # exact re-rank: refine×k candidate rows per query — broadcast the
         # (tiny) candidate list so the raw corpus is streamed, never
@@ -493,8 +398,4 @@ class IVFPQIndex:
                 euclidean("__qv", self.vec_col).alias("dist"),
             )
         )
-        if round_to is not None:
-            exact = exact.withColumn("dist", F.round("dist", round_to))
-        return top_k_per_group(
-            exact, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-        )
+        return nearest_k(exact, k, round_to)

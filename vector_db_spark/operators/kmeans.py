@@ -16,10 +16,7 @@ distributively. That is exactly the split here:
 - **assign / search** (operators.ivf / operators.pq): broadcast the k×dim
   centers, argmin per vector — fully distributed, no collect.
 
-A fully-distributed ``pyspark.ml.clustering.KMeans`` path remains available
-(``trainer="ml"``) for the case where the sample cap must exceed driver
-memory; the default is the sample trainer because a capped sample is the
-scale-correct *and* low-latency choice.
+A capped sample is the scale-correct *and* low-latency choice.
 """
 
 from __future__ import annotations

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vector_db_spark.functions.distance import METRICS
-from vector_db_spark.operators.topk import top_k_per_group
+from vector_db_spark.operators.topk import nearest_k
 
 _BATCH_SCHEMA = "query_id long, neighbor_id long, dist double"
 
@@ -135,13 +135,9 @@ def knn_join(
             id_col=id_col, vec_col=vec_col, round_to=round_to,
         )
 
-    if round_to is not None:
-        # no-op for impl="batch" (kernel already rounds before selecting),
-        # kept so both impls share one output expression
-        scored = scored.withColumn("dist", F.round("dist", round_to))
-    return top_k_per_group(
-        scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-    )
+    # for impl="batch" the rounding is a no-op (the kernel already rounds
+    # before selecting), kept so both impls share one output expression
+    return nearest_k(scored, k, round_to)
 
 
 def _partial_topk(

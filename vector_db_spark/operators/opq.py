@@ -139,7 +139,6 @@ class OPQModel:
             vec_col=vec_col,
             max_iter=max_iter,
             seed=seed,
-            trainer="sample",
         )
         return model
 

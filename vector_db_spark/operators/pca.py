@@ -45,10 +45,6 @@ class PCAModel:
     explained_var: np.ndarray  # (m,) eigenvalues, descending
     total_var: float  # trace of the covariance
 
-    @property
-    def explained_var_ratio(self) -> np.ndarray:
-        return self.explained_var / self.total_var
-
     def transform(
         self, df: DataFrame, vec_col: str = "embedding", out_col: str = "reduced"
     ) -> DataFrame:

@@ -6,8 +6,8 @@ inference/pq.py``) Spark-first:
 | reference | here |
 |---|---|
 | ``_chunk_embeddings``: reshape (N,D)→(m,N,D/m) (pq.py:48-62) | ``slice(embedding, c*sub+1, sub)`` column expressions — no data movement |
-| ``_compute_centroids``: per-chunk k-means, ProcessPoolExecutor (pq.py:64-75) | bounded-sample numpy fits per subspace over ONE collected sample (operators.kmeans), or ``trainer="ml"``: one ``pyspark.ml`` KMeans fit per subspace from a driver thread pool — each fit cluster-parallel |
-| ``_find_nearest_centroid`` / ``_compress_embedding``: argmin encode (pq.py:77-89) | Arrow-batched pandas UDF over a broadcast (m,k,sub) codebook tensor — one vectorized pass, no shuffle |
+| ``_compute_centroids``: per-chunk k-means, ProcessPoolExecutor (pq.py:64-75) | bounded-sample numpy fits per subspace over ONE collected sample (operators.kmeans) |
+| ``_find_nearest_centroid`` / ``_compress_embedding``: argmin encode (pq.py:77-89) | :func:`encode_chunks` in an Arrow-batched pandas UDF over a broadcast (m,k,sub) codebook tensor — one vectorized pass, no shuffle (IVFPQ encodes its residuals with the same kernel) |
 | codes ``int64[N, chunks]`` (pq.py:82-89) | ``codes array<int>`` column |
 | codebook list of (k,sub) arrays (pq.py:37, 98-100) | Parquet table (chunk_idx, code, centroid) — broadcastable, engine-readable |
 
@@ -26,11 +26,25 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from vector_db_spark.operators.topk import top_k_per_group
+from vector_db_spark.io import write_small_parquet
+from vector_db_spark.operators.kmeans import collect_sample, kmeans_fit
+from vector_db_spark.operators.topk import nearest_k
+
+
+def encode_chunks(x: np.ndarray, tensor: np.ndarray) -> np.ndarray:
+    """The PQ encode kernel: (n, m·sub) vectors → (n, m) int32 codes, each
+    the nearest of the k code words of its subspace in the (m, k, sub)
+    ``tensor`` (squared L2, ties to the lowest code)."""
+    m, _, sub = tensor.shape
+    chunks = x.reshape(x.shape[0], m, sub)  # (n, m, sub)
+    # (n, m, k) squared distances per subspace, then argmin
+    d2 = ((chunks[:, :, None, :] - tensor[None, :, :, :]) ** 2).sum(axis=3)
+    return d2.argmin(axis=2).astype(np.int32)
 
 
 class PQModel:
@@ -49,7 +63,7 @@ class PQModel:
     def codebooks(self) -> DataFrame:
         return self.spark.read.parquet(self.codebooks_path)
 
-    def _codebook_tensor(self) -> np.ndarray:
+    def codebook_tensor(self) -> np.ndarray:
         """(m, k, sub) float64 tensor — the only thing ever collected."""
         rows = self.codebooks().collect()
         m = max(r.chunk_idx for r in rows) + 1
@@ -59,6 +73,23 @@ class PQModel:
         for r in rows:
             t[r.chunk_idx, r.code] = r.centroid
         return t
+
+    def write_codebooks(self, tensor: np.ndarray) -> None:
+        """The codebook table's one writer: one (chunk_idx, code, centroid)
+        row per code word of the (m, k, sub) ``tensor``."""
+        m, k, sub = tensor.shape
+        write_small_parquet(
+            self.codebooks_path,
+            pa.table(
+                {
+                    "chunk_idx": pa.array(np.repeat(np.arange(m), k), pa.int32()),
+                    "code": pa.array(np.tile(np.arange(k), m), pa.int32()),
+                    "centroid": pa.array(
+                        tensor.reshape(m * k, sub).tolist(), pa.list_(pa.float64())
+                    ),
+                }
+            ),
+        )
 
     # -- train (reference pq.py:64-75, 91-108) --------------------------------
 
@@ -75,7 +106,6 @@ class PQModel:
         vec_col: str = "embedding",
         max_iter: int = 20,
         seed: int = 42,
-        trainer: str = "sample",
     ) -> "PQModel":
         dim = len(corpus.select(vec_col).first()[0])
         if dim % n_chunks != 0:
@@ -83,88 +113,35 @@ class PQModel:
                 f"embedding dim {dim} not divisible into {n_chunks} chunks"
             )
         sub = dim // n_chunks
-        if trainer == "sample":
-            # one bounded sample collect feeds every subspace fit (the
-            # reference's ProcessPoolExecutor parallelism collapses into
-            # m in-driver numpy fits on slices of the same array); encode /
-            # search stay fully distributed against the broadcast tensor
-            from vector_db_spark.operators.kmeans import collect_sample, kmeans_fit
-
-            x = collect_sample(corpus, vec_col, seed=seed)
-            all_rows = [
-                (c, int(code), [float(v) for v in center])
+        # one bounded sample collect feeds every subspace fit (the
+        # reference's ProcessPoolExecutor parallelism collapses into
+        # m in-driver numpy fits on slices of the same array); encode /
+        # search stay fully distributed against the broadcast tensor
+        x = collect_sample(corpus, vec_col, seed=seed)
+        tensor = np.stack(
+            [
+                kmeans_fit(x[:, c * sub : (c + 1) * sub], k, max_iter=max_iter, seed=seed + c)
                 for c in range(n_chunks)
-                for code, center in enumerate(
-                    kmeans_fit(x[:, c * sub : (c + 1) * sub], k, max_iter=max_iter, seed=seed + c)
-                )
             ]
-        elif trainer == "ml":
-            from pyspark.ml.clustering import KMeans
-            from pyspark.ml.functions import array_to_vector
-
-            vecs = corpus.select(F.col(vec_col).cast("array<double>").alias("v")).cache()
-            vecs.count()
-
-            def fit_chunk(c: int) -> list[tuple[int, int, list[float]]]:
-                feat = vecs.select(
-                    array_to_vector(F.slice("v", c * sub + 1, sub)).alias("__features")
-                )
-                model = KMeans(k=k, maxIter=max_iter, seed=seed + c, featuresCol="__features").fit(feat)
-                return [
-                    (c, int(code), [float(x) for x in center])
-                    for code, center in enumerate(model.clusterCenters())
-                ]
-
-            # the reference's process-parallel codebook training (pq.py:64-75):
-            # concurrent Spark jobs from driver threads, each fit cluster-parallel
-            # (overlap_map: pinned-thread-safe property inheritance, ADVICE r9)
-            from vector_db_spark.parallel import overlap_map
-
-            all_rows = [
-                row
-                for rows in overlap_map(fit_chunk, range(n_chunks), max_workers=4)
-                for row in rows
-            ]
-            vecs.unpersist()
-        else:
-            raise ValueError(f"unknown trainer {trainer!r} (use 'sample' or 'ml')")
-        import pyarrow as pa
-
-        from vector_db_spark.io import write_small_parquet
-
-        write_small_parquet(
-            os.path.join(path, "codebooks"),
-            pa.table(
-                {
-                    "chunk_idx": pa.array([r[0] for r in all_rows], pa.int32()),
-                    "code": pa.array([r[1] for r in all_rows], pa.int32()),
-                    "centroid": pa.array([r[2] for r in all_rows], pa.list_(pa.float64())),
-                }
-            ),
-        )
-        return cls(spark, path, id_col=id_col, vec_col=vec_col)
+        )  # (m, k, sub)
+        model = cls(spark, path, id_col=id_col, vec_col=vec_col)
+        model.write_codebooks(tensor)
+        return model
 
     # -- encode (reference pq.py:77-89) ---------------------------------------
 
     def encode(self, df: DataFrame) -> DataFrame:
         """Add a ``codes array<int>`` column: per-chunk nearest-centroid.
         One Arrow pass with the broadcast codebook tensor; no shuffle."""
-        tensor = self._codebook_tensor()
-        m, k, sub = tensor.shape
-        bc = self.spark.sparkContext.broadcast(tensor)
+        bc = self.spark.sparkContext.broadcast(self.codebook_tensor())
         id_col, vec_col = self.id_col, self.vec_col
 
         def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            t = bc.value  # (m, k, sub)
             for pdf in batches:
                 if pdf.empty:
                     continue
                 x = np.array(pdf[vec_col].tolist(), dtype=np.float64)  # (n, d)
-                n = x.shape[0]
-                chunks = x.reshape(n, t.shape[0], t.shape[2])  # (n, m, sub)
-                # (n, m, k) squared distances per subspace, then argmin
-                d2 = ((chunks[:, :, None, :] - t[None, :, :, :]) ** 2).sum(axis=3)
-                codes = d2.argmin(axis=2).astype(np.int32)  # (n, m)
+                codes = encode_chunks(x, bc.value)  # (n, m)
                 yield pd.DataFrame({id_col: pdf[id_col].values, "codes": list(codes)})
 
         return df.select(id_col, vec_col).mapInPandas(
@@ -175,7 +152,7 @@ class PQModel:
 
     def decode(self, codes_df: DataFrame) -> DataFrame:
         """Reconstruct the quantized vector (codebook lookup + concat)."""
-        tensor = self._codebook_tensor()
+        tensor = self.codebook_tensor()
         bc = self.spark.sparkContext.broadcast(tensor)
         id_col = self.id_col
 
@@ -235,7 +212,7 @@ class PQModel:
             return codes_df.sparkSession.createDataFrame(
                 [], "query_id long, neighbor_id long, dist double"
             )
-        tensor = self._codebook_tensor()
+        tensor = self.codebook_tensor()
         m, k, sub = tensor.shape
         qids = np.array([r[0] for r in qrows], dtype=np.int64)
         qmat = np.array([r[1] for r in qrows], dtype=np.float64).reshape(-1, m, sub)
@@ -274,11 +251,7 @@ class PQModel:
         scored = codes_df.select(id_col, "codes").mapInPandas(
             score, "query_id long, neighbor_id long, dist double"
         )
-        if round_to is not None:
-            scored = scored.withColumn("dist", F.round("dist", round_to))
-        return top_k_per_group(
-            scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], top_k
-        )
+        return nearest_k(scored, top_k, round_to)
 
     def _adc_search_join(
         self,
@@ -298,7 +271,7 @@ class PQModel:
         broadcast hint, so Catalyst/AQE pick the physical strategy — this
         is the big-query-side shape the collected-LUT fast path cannot
         serve."""
-        tensor = self._codebook_tensor()
+        tensor = self.codebook_tensor()
         m, k, sub = tensor.shape
         bc = self.spark.sparkContext.broadcast(tensor)
 
@@ -326,8 +299,4 @@ class PQModel:
             .crossJoin(qside)
             .select("query_id", "neighbor_id", F.sqrt(dist2).alias("dist"))
         )
-        if round_to is not None:
-            scored = scored.withColumn("dist", F.round("dist", round_to))
-        return top_k_per_group(
-            scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], top_k
-        )
+        return nearest_k(scored, top_k, round_to)

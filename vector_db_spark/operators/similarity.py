@@ -22,7 +22,7 @@ from pyspark.sql.types import ArrayType, StringType
 
 from vector_db_spark.caching import tracked_cache
 from vector_db_spark.functions.distance import METRICS, dot_product
-from vector_db_spark.operators.topk import top_k_per_group
+from vector_db_spark.operators.topk import nearest_k
 
 DIM = 64
 N_TABLES = 4
@@ -355,17 +355,7 @@ def lsh_search(
         "neighbor_id",
         METRICS[metric](F.col(query_vec_col), F.col(vec_col)).alias("dist"),
     )
-    if round_to is not None:
-        scored = scored.withColumn("dist", F.round("dist", round_to))
-    return top_k_per_group(
-        scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-    )
-
-
-def oracle_hyperplane_literal_sql(table_idx: int, bit_idx: int) -> str:
-    """The same hyperplane as a DuckDB array literal (oracle SQL builder)."""
-    vals = ", ".join(repr(x) for x in HYPERPLANES[table_idx][bit_idx])
-    return f"[{vals}]::DOUBLE[]"
+    return nearest_k(scored, k, round_to)
 
 
 def sparse_cosine_pairs(

@@ -1,12 +1,9 @@
 """Top-k selection.
 
 Reference: sort-and-slice at ivf.py:191-195 / hnsw.py:365-369 and the O(n)
-``argpartition`` helper (util/math.py:3-5). Spark equivalents:
-
-- global top-k: ``ORDER BY ... LIMIT k`` plans as ``TakeOrderedAndProject``
-  (already O(n) with per-partition partial top-k — the argpartition trick is
-  built into the physical operator).
-- per-group top-k (one k-NN result list per query): window ``row_number``.
+``argpartition`` helper (util/math.py:3-5). Spark equivalent: per-group
+top-k (one k-NN result list per query) as a window ``row_number``;
+:func:`nearest_k` is that top-k under the k-NN result order.
 """
 
 from __future__ import annotations
@@ -37,6 +34,15 @@ def top_k_per_group(
     )
 
 
-def top_k_global(df: DataFrame, order_by: Sequence[str | Column], k: int) -> DataFrame:
-    """Global top-k: planner emits TakeOrderedAndProject (no full sort)."""
-    return df.orderBy(*order_by).limit(k)
+def nearest_k(scored: DataFrame, k: int, round_to: int | None = None) -> DataFrame:
+    """The k nearest ``neighbor_id`` per ``query_id`` of a scored
+    (query_id, neighbor_id, dist) table, ordered by (``dist``,
+    ``neighbor_id``) — the one tie-break policy every k-NN result shares.
+    With ``round_to``, ``dist`` is rounded first, so near-equal distances
+    tie and fall to the id order (results then match across kernels and
+    against the SQL oracles)."""
+    if round_to is not None:
+        scored = scored.withColumn("dist", F.round("dist", round_to))
+    return top_k_per_group(
+        scored, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
+    )

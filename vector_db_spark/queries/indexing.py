@@ -6,10 +6,8 @@
   assign / n_probe search: explode→aggregate→rebuild, broadcast argmin
   assignment, probe-pruned candidate join, exact top-k.
 - **k-means variants** (invariant-projection oracles + recall tests in
-  tests/test_ivf.py): the default trainer is the bounded-sample
-  k-means++/Lloyd fit (operators.kmeans, ``trainer="sample"``; a
-  fully-distributed pyspark.ml fit stays behind ``trainer="ml"``). Either
-  way no SQL oracle can reproduce the centroids (SURVEY.md §7 risk 2), so
+  tests/test_ivf.py): the trainer is the bounded-sample k-means++/Lloyd
+  fit (operators.kmeans). No SQL oracle can reproduce the centroids (SURVEY.md §7 risk 2), so
   these queries emit exactly-checkable contract facts (k results/query,
   recall ≥ floor vs brute force) instead of raw neighbor lists.
 """
@@ -26,7 +24,7 @@ from vector_db_spark.functions.text import tokens
 from vector_db_spark.caching import tracked_cache
 from vector_db_spark.io import load_table
 from vector_db_spark.operators.ivf import MIN_POINTS_PER_CLUSTER, IVFIndex
-from vector_db_spark.operators.topk import top_k_per_group
+from vector_db_spark.operators.topk import nearest_k, top_k_per_group
 from vector_db_spark.queries import register
 
 DIM = 64
@@ -149,9 +147,7 @@ def ivf_det_search(
             F.round(euclidean("query_vec", "embedding"), 6).alias("dist"),
         )
     )
-    return top_k_per_group(
-        cand, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], top_k
-    )
+    return nearest_k(cand, top_k)
 
 
 @register(
@@ -253,8 +249,7 @@ def _recall_per_query(ann: DataFrame, exact: DataFrame, k: int) -> DataFrame:
 )
 def ivf_search_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-trained k-means IVF (operators.kmeans k-means++/Lloyd on a
-    bounded sample — the FAISS-style scale split; ``trainer="ml"`` swaps in
-    the fully-distributed pyspark.ml fit): build (V10) + n_probe search
+    bounded sample — the FAISS-style scale split): build (V10) + n_probe search
     (V13), checked against brute force per query. Exact recall values are
     pinned in tests/test_ivf.py (recall@5 ≥ 0.7 vs brute force,
     conservation, self-match)."""

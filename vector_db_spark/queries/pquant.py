@@ -18,7 +18,7 @@ from vector_db_spark.functions.distance import euclidean
 from vector_db_spark.io import load_table
 from vector_db_spark.operators.knn import knn_join
 from vector_db_spark.operators.pq import PQModel
-from vector_db_spark.operators.topk import top_k_per_group
+from vector_db_spark.operators.topk import nearest_k
 from vector_db_spark.queries import register
 
 M_CHUNKS = 8
@@ -150,9 +150,7 @@ def pq_adc_search_det(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sqrt(F.sum(F.expr("CAST(sqd AS DECIMAL(18,9))")).cast("double")), 6
         ).alias("dist")
     )
-    return top_k_per_group(
-        dists, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], TOP_K
-    )
+    return nearest_k(dists, TOP_K)
 
 
 # --- real KMeans-trained PQ (rows-only; quality tests in tests/test_pq.py;
