@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import logging
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -30,3 +32,32 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correctness() -> str:
     return SF_CORRECTNESS
+
+
+@pytest.fixture(scope="session")
+def force_large():
+    """``route.force_large(*sites)`` that also proves the pin took: on a
+    clean exit every named site (with no names, at least one site) must
+    have logged a route decision with choice "large" inside the block."""
+    from vector_db_spark import route
+
+    @contextmanager
+    def pin(*sites):
+        records: list[logging.LogRecord] = []
+        handler = logging.Handler(logging.DEBUG)
+        handler.emit = records.append
+        log = route.log
+        old_level = log.level
+        log.setLevel(logging.DEBUG)
+        log.addHandler(handler)
+        try:
+            with route.force_large(*sites):
+                yield
+        finally:
+            log.removeHandler(handler)
+            log.setLevel(old_level)
+        large = {r.args[0] for r in records if r.args[3] == "large"}
+        missing = set(sites) - large if sites else not large
+        assert not missing, f"no large-branch route decision for {missing}"
+
+    return pin

@@ -146,6 +146,30 @@ def test_decontaminate_probe_is_broadcast(spark, sf_smoke):
     assert "BroadcastHashJoin" in plan_of(df)
 
 
+def test_decontaminate_large_routes_match_default(spark, sf_smoke, force_large):
+    """Both decontamination routers' un-hinted large branch returns the
+    default route's rows."""
+    from vector_db_spark.io import load_table
+    from vector_db_spark.operators.curation import decontaminate_ngrams_multi
+
+    docs = load_table(spark, sf_smoke, "documents")
+    train = docs.filter(F.col("doc_id") % 37 != 0)
+    test = docs.filter(F.col("doc_id") % 37 == 0)
+    suites = {"a": test, "b": docs.filter(F.col("doc_id") % 41 == 0)}
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    want = rows(decontaminate_ngrams(train, test, n=4))
+    want_multi = rows(decontaminate_ngrams_multi(train, suites, n=4))
+    with force_large("curation.decontaminate"):
+        got = decontaminate_ngrams(train, test, n=4)
+    assert rows(got) == want and any(r[2] for r in want)
+    with force_large("curation.decontaminate_multi"):
+        got_multi = decontaminate_ngrams_multi(train, suites, n=4)
+    assert rows(got_multi) == want_multi and len(want_multi) > 0
+
+
 def test_pii_scrub_counts_and_redacts(spark, docs):
     got = {r["doc_id"]: r.asDict() for r in pii_scrub(docs).collect()}
     assert got[5]["email_cnt"] == 1
@@ -272,8 +296,8 @@ def test_percolate_conjunction_semantics(spark):
     assert got == {(1, "q1"), (1, "q2"), (2, "q2")}
 
 
-def test_percolate_routed_vocab_parity(spark, sf_smoke):
-    """A subscription vocabulary past max_literal_vocab skips the plan
+def test_percolate_routed_vocab_parity(spark, sf_smoke, force_large):
+    """A subscription vocabulary on the large branch skips the plan
     literal + driver collect and routes through un-hinted joins — same
     rows either way (the guard added for the wave-14b scaled shape)."""
     from tests.test_plans import plan_of
@@ -287,7 +311,8 @@ def test_percolate_routed_vocab_parity(spark, sf_smoke):
         "query_id string, terms array<string>",
     )
     lit_df = percolate(docs, stored)
-    routed_df = percolate(docs, stored, max_literal_vocab=0)
+    with force_large("hybrid.vocab"):
+        routed_df = percolate(docs, stored)
     assert "array_intersect" in plan_of(lit_df)
     assert "array_intersect" not in plan_of(routed_df)
     lit = sorted(map(tuple, lit_df.collect()))

@@ -189,10 +189,12 @@ def test_refresh_drift_reassign(spark, sf_smoke, tmp_path):
     assert mismatches == 0
 
 
-def test_ivf_search_big_query_side_drops_broadcast_hint(spark, sf_smoke, tmp_path):
-    """Past max_broadcast_queries the probe join must carry no forced
-    broadcast hint (Catalyst decides from real stats); results at a tiny
-    threshold match the hinted fast path exactly."""
+def test_ivf_search_big_query_side_drops_broadcast_hint(
+    spark, sf_smoke, tmp_path, force_large
+):
+    """On its large branch the probe join must carry no forced broadcast
+    hint (Catalyst decides from real stats); results on the forced route
+    match the hinted fast path exactly."""
     from pyspark.sql import functions as F
 
     from vector_db_spark.io import load_table
@@ -204,7 +206,8 @@ def test_ivf_search_big_query_side_drops_broadcast_hint(spark, sf_smoke, tmp_pat
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     ).filter(F.col("query_id") < 6)
     fast = idx.search(queries, k=5, n_probe=3)
-    routed = idx.search(queries, k=5, n_probe=3, max_broadcast_queries=2)
+    with force_large("ivf.probe"):
+        routed = idx.search(queries, k=5, n_probe=3)
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, routed.collect()))
     # the centroid-side broadcast (O(k x dim), intentional) remains; the
     # PROBE-side hint must be gone — one hint in the routed plan, two in

@@ -96,6 +96,19 @@ def test_adc_only_path(spark, sf_smoke, index):
     assert self_hits >= 4  # ADC is approximate; allow one quantization miss
 
 
+@pytest.mark.parametrize("refine", [4, None])
+def test_search_unhinted_probe_join_matches_default(
+    spark, sf_smoke, index, force_large, refine
+):
+    """IVF-PQ search over the probe join's un-hinted large branch returns
+    the default (broadcast-hinted) route's rows."""
+    qs = _queries(spark, sf_smoke, 6)
+    want = sorted(map(tuple, index.search(qs, k=5, n_probe=3, refine=refine).collect()))
+    with force_large("ivf.probe"):
+        got = index.search(qs, k=5, n_probe=3, refine=refine)
+    assert sorted(map(tuple, got.collect())) == want and len(want) == 30
+
+
 def test_persistence_reopen(spark, sf_smoke, index):
     """Index state is plain Parquet — a new handle on the same path serves
     searches (reference pickle round-trip, ivf.py:217-241)."""

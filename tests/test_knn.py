@@ -140,8 +140,8 @@ def test_isotropy_identity_matches_brute_pairs(spark):
     assert abs(got["mean_norm_sq"] - round(float(np.trace(G) / n), 4)) <= 1e-4
 
 
-def test_big_query_side_routes_to_join_path(spark):
-    """A query table past max_batch_queries must NOT be collected: the
+def test_big_query_side_routes_to_join_path(spark, caplog):
+    """A query table past the batch bound must NOT be collected: the
     plan is the distributed join (no Python map stage, no broadcast of
     the corpus-shaped side). Plan-pinned; never executed at this size."""
     rng = np.random.default_rng(11)
@@ -153,7 +153,9 @@ def test_big_query_side_routes_to_join_path(spark):
             F.array(*[F.rand(seed=s) for s in range(8)]).alias("query_vec"),
         )
     )
-    res = knn_join(big_queries, corpus, 3, impl="batch", max_batch_queries=10_000)
+    with caplog.at_level("DEBUG", logger="vector_db_spark.route"):
+        res = knn_join(big_queries, corpus, 3, impl="batch")
+    assert ("knn.queries", 10_001, 10_000, "large") in [r.args for r in caplog.records]
     plan = res._jdf.queryExecution().executedPlan().toString()
     # not collected: no Python scoring stage anywhere in the plan
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
@@ -165,8 +167,8 @@ def test_big_query_side_routes_to_join_path(spark):
     assert "hints=" not in logical or "strategy=broadcast" not in logical
 
 
-def test_batch_fallback_matches_batch_results(spark):
-    """With a tiny threshold the auto-fallback (join path, no broadcast
+def test_batch_fallback_matches_batch_results(spark, force_large):
+    """Forced onto the large branch, the fallback (join path, no broadcast
     hint) returns the identical result set as the collected-batch path."""
     rng = np.random.default_rng(13)
     corpus = _vec_df(spark, [(i, rng.standard_normal(12)) for i in range(120)])
@@ -174,5 +176,6 @@ def test_batch_fallback_matches_batch_results(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     ).filter(F.col("query_id") < 8)
     fast = knn_join(queries, corpus, 5, impl="batch")
-    routed = knn_join(queries, corpus, 5, impl="batch", max_batch_queries=3)
+    with force_large("knn.queries"):
+        routed = knn_join(queries, corpus, 5, impl="batch")
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, routed.collect()))

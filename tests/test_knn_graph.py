@@ -568,6 +568,26 @@ def test_adamic_adar_known_graph(spark):
     assert got[(1, 2)]["aa_score"] > got[(1, 4)]["aa_score"]
 
 
+@pytest.mark.parametrize("scorer", ["jaccard", "adamic_adar"])
+def test_link_prediction_large_routes_match_default(spark, force_large, scorer):
+    """The un-hinted degree join, and with ``sources`` the un-hinted wedge
+    side, return the default route's rows."""
+    from vector_db_spark.operators import knn_graph
+
+    fn = getattr(knn_graph, f"link_prediction_{scorer}")
+    edges = [(0, 1), (0, 2), (0, 4), (3, 1), (3, 2), (0, 3), (4, 5)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    src = spark.createDataFrame([(1,), (4,)], "id long")
+    for sources, sites in (
+        (None, ("knn_graph.degree",)),
+        (src, ("knn_graph.degree", "knn_graph.wedge_side")),
+    ):
+        want = sorted(map(tuple, fn(df, top_n=10, sources=sources).collect()))
+        with force_large(*sites):
+            got = fn(df, top_n=10, sources=sources)
+        assert sorted(map(tuple, got.collect())) == want and want
+
+
 def test_core_numbers_match_reference(spark):
     import random
     from collections import defaultdict

@@ -66,7 +66,9 @@ def test_registered_scale_paths_have_no_errors(spark, sf_smoke):
     assert "nested-loop-join" in codes(fs)  # present, but warn-grade
 
 
-def test_adaptive_filtered_knn_picks_the_right_regime(spark, sf_smoke, tmp_path):
+def test_adaptive_filtered_knn_picks_the_right_regime(
+    spark, sf_smoke, tmp_path, force_large
+):
     """Selective filter: probe-pruned IVF is a recall trap (survivors live
     outside the probed clusters → empty/short results); the adaptive
     strategy must fall back to exact search over the survivors. Broad
@@ -99,12 +101,13 @@ def test_adaptive_filtered_knn_picks_the_right_regime(spark, sf_smoke, tmp_path)
         tuple(r) for r in want.orderBy("rank").collect()
     ]
 
-    # broad regime: threshold forces the IVF branch; results match a
-    # direct index search with the same filter
+    # broad regime: forcing the route takes the IVF branch; results
+    # match a direct index search with the same filter
     all_ids = corpus.select("vec_id")
-    via_adaptive = adaptive_filtered_knn(
-        q, idx, 5, allowed_ids=all_ids, n_probe=4, exact_threshold=1
-    )
+    with force_large("knn.filtered_exact"):
+        via_adaptive = adaptive_filtered_knn(
+            q, idx, 5, allowed_ids=all_ids, n_probe=4
+        )
     via_index = idx.search(q, k=5, n_probe=4, allowed_ids=all_ids)
     assert [tuple(r) for r in via_adaptive.orderBy("rank").collect()] == [
         tuple(r) for r in via_index.orderBy("rank").collect()

@@ -91,8 +91,8 @@ def test_adc_recall_vs_exact(spark, sf_smoke, model):
     assert sum(recalls) / len(recalls) >= 0.3, recalls
 
 
-def test_adc_big_query_side_routes_to_join_path(spark, sf_smoke, model):
-    """A query table past max_batch_queries is never collected: the ADC
+def test_adc_big_query_side_routes_to_join_path(spark, sf_smoke, model, caplog):
+    """A query table past the batch bound is never collected: the ADC
     falls back to the distributed LUT-join (the only Python stage is the
     per-QUERY-row LUT UDF; the corpus scan gathers JVM-side)."""
     emb = load_table(spark, sf_smoke, "embeddings")
@@ -101,7 +101,9 @@ def test_adc_big_query_side_routes_to_join_path(spark, sf_smoke, model):
         F.col("id").alias("query_id"),
         F.array(*[F.rand(seed=s) for s in range(64)]).alias("query_vec"),
     )
-    res = model.adc_search(big_queries, codes, 3, max_batch_queries=10_000)
+    with caplog.at_level("DEBUG", logger="vector_db_spark.route"):
+        res = model.adc_search(big_queries, codes, 3)
+    assert ("pq.queries", 10_001, 10_000, "large") in [r.args for r in caplog.records]
     plan = res._jdf.queryExecution().executedPlan().toString()
     # the collected-LUT kernel ("score") must be absent; the only Python
     # stages are the upstream encoder and the per-query-row LUT UDF
@@ -110,14 +112,16 @@ def test_adc_big_query_side_routes_to_join_path(spark, sf_smoke, model):
     assert "Join" in plan or "CartesianProduct" in plan
 
 
-def test_adc_join_fallback_matches_batch_results(spark, sf_smoke, model):
-    """With a tiny threshold the distributed LUT-join returns the exact
-    same (query, neighbor, dist, rank) rows as the collected fast path."""
+def test_adc_join_fallback_matches_batch_results(spark, sf_smoke, model, force_large):
+    """Forced onto the large branch, the distributed LUT-join returns the
+    exact same (query, neighbor, dist, rank) rows as the collected fast
+    path."""
     emb = load_table(spark, sf_smoke, "embeddings")
     codes = model.encode(emb)
     queries = emb.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     ).filter(F.col("query_id") < 6)
     fast = model.adc_search(queries, codes, 5)
-    routed = model.adc_search(queries, codes, 5, max_batch_queries=2)
+    with force_large("pq.queries"):
+        routed = model.adc_search(queries, codes, 5)
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, routed.collect()))

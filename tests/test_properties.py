@@ -545,11 +545,13 @@ def test_prefix_filter_jaccard_complete_on_random_sets(sets, threshold):
     ),
     force_routed=st.booleans(),
 )
-def test_percolate_conjunctions_match_python(docs, subs, force_routed):
+def test_percolate_conjunctions_match_python(force_large, docs, subs, force_routed):
     """Percolation vs plain-Python conjunction matching on random token
     streams — duplicate tokens inside a document count once, a query
     matches iff EVERY term appears, and the literal-vocab and routed
-    plans (max_literal_vocab=0) emit identical rows."""
+    plans (force_large("hybrid.vocab")) emit identical rows."""
+    from contextlib import nullcontext
+
     from vector_db_spark.operators.hybrid import percolate
 
     spark = _get_spark()
@@ -561,8 +563,9 @@ def test_percolate_conjunctions_match_python(docs, subs, force_routed):
         [(f"q{i}", [f"w{t}" for t in terms]) for i, terms in enumerate(subs)],
         "query_id string, terms array<string>",
     )
-    kwargs = {"max_literal_vocab": 0} if force_routed else {}
-    got = {(r.doc_id, r.query_id) for r in percolate(ddf, sdf, **kwargs).collect()}
+    with force_large("hybrid.vocab") if force_routed else nullcontext():
+        out = percolate(ddf, sdf)
+    got = {(r.doc_id, r.query_id) for r in out.collect()}
     want = set()
     for i, toks in enumerate(docs):
         # tokens() splits lower(trim(text)) on \s+ — an empty doc still
@@ -582,12 +585,13 @@ def test_percolate_conjunctions_match_python(docs, subs, force_routed):
         max_size=24,
     ),
 )
-def test_dedup_index_probe_equals_rederive_on_random_corpora(docs):
+def test_dedup_index_probe_equals_rederive_on_random_corpora(force_large, docs):
     """Index-vs-rederive equivalence on RANDOM corpora (the planted-case
     tests pin known shapes; this pins the contract itself): for any doc
     set split corpus/batch, the persisted-index probe — with bucket
-    pruning FORCED on (min_prune_bytes=0), exercising the saturation
-    guard and the bucket collections against arbitrary key sets — emits
+    pruning FORCED on (the store-size gate pinned large), exercising the
+    saturation guard and the bucket collections against arbitrary key
+    sets — emits
     exactly incremental_dedup's rows. Tiny vocab (12 tokens) forces
     exact dups, near dups, and band collisions to actually occur."""
     import tempfile
@@ -610,6 +614,8 @@ def test_dedup_index_probe_equals_rederive_on_random_corpora(docs):
     )
     path = tempfile.mkdtemp(prefix="didx_prop_") + "/index"
     DedupIndex.build(spark, corpus, path, n_buckets=8)
-    idx = DedupIndex(spark, path, min_prune_bytes=0)
-    got = sorted(map(tuple, idx.probe(batch, threshold=0.5).collect()))
+    idx = DedupIndex(spark, path)
+    with force_large("dedup_index.prune"):
+        probe = idx.probe(batch, threshold=0.5)
+    got = sorted(map(tuple, probe.collect()))
     assert got == want

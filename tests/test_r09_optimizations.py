@@ -37,36 +37,31 @@ _PAIRS = [
 ]
 
 
-def test_close_triangles_intersect_equals_wedge_semi(spark):
-    """Both closing-stage routes count identical triangles — forced onto
-    each path by the n_edges argument around the routing bound."""
+def test_close_triangles_intersect_equals_wedge_semi(spark, force_large):
+    """Both closing-stage routes count identical triangles — the default
+    route takes the intersect, the forced route the wedge + semi close."""
     from vector_db_spark.operators.knn_graph import (
         _checkpoint_oriented,
         _close_triangles,
-        _INTERSECT_MAX_EDGES,
     )
 
     e = _checkpoint_oriented(_edges_df(spark, _PAIRS), "src", "dst", "degree")
-    small = _close_triangles(e, 1).collect()[0]["n_triangles"]  # intersect
-    big = _close_triangles(e, _INTERSECT_MAX_EDGES + 1).collect()[0][
-        "n_triangles"
-    ]  # wedge + semi
+    n_edges = e.count()
+    small = _close_triangles(e, n_edges).collect()[0]["n_triangles"]  # intersect
+    with force_large("knn_graph.triangle_close"):
+        big = _close_triangles(e, n_edges).collect()[0]["n_triangles"]  # wedge + semi
     assert small == big == 2
 
 
-def test_triangle_count_matches_pre_r9_wedge_shape(spark):
+def test_triangle_count_matches_pre_r9_wedge_shape(spark, force_large):
     """triangle_count's full output row is identical on both closing
     routes (the big-regime shape is the pre-r9 plan)."""
     import vector_db_spark.operators.knn_graph as kg
 
     df = _edges_df(spark, _PAIRS)
     routed = kg.triangle_count(df).collect()[0]
-    orig = kg._INTERSECT_MAX_EDGES
-    try:
-        kg._INTERSECT_MAX_EDGES = 0  # force the wedge+semi close
+    with force_large("knn_graph.triangle_close"):
         wedge = kg.triangle_count(df).collect()[0]
-    finally:
-        kg._INTERSECT_MAX_EDGES = orig
     assert routed == wedge
     assert (routed["n_nodes"], routed["n_edges"], routed["n_triangles"]) == (
         7,

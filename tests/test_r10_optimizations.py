@@ -8,11 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vector_db_spark.operators.knn_graph import (
-    _SUPPORT_INTERSECT_MAX_EDGES,
-    edge_support,
-    k_truss,
-)
+from vector_db_spark.operators.knn_graph import edge_support, k_truss
 from vector_db_spark.parallel import overlap_map
 
 
@@ -34,24 +30,24 @@ def _support_map(df):
     return {(r.a, r.b): r.support for r in df.collect()}
 
 
-def test_edge_support_intersect_route_matches_wedge_route(spark):
+def test_edge_support_intersect_route_matches_wedge_route(spark, force_large):
     g = _triangle_graph(spark)
     # small graph: default routing takes the broadcast-intersect close;
-    # forcing n_edges past the bound takes the wedge shape — identical table
+    # forcing the route takes the wedge shape — identical table
     fast = _support_map(edge_support(g))
-    slow = _support_map(
-        edge_support(g, n_edges=_SUPPORT_INTERSECT_MAX_EDGES + 1)
-    )
+    with force_large("knn_graph.edge_support"):
+        slow = _support_map(edge_support(g))
     assert fast == slow
     assert fast == {
         (1, 2): 1, (2, 3): 2, (1, 3): 1, (2, 4): 1, (3, 4): 1, (4, 5): 0,
     }
 
 
-def test_edge_support_schema_identical_across_routes(spark):
+def test_edge_support_schema_identical_across_routes(spark, force_large):
     g = _triangle_graph(spark)
     fast = edge_support(g)
-    slow = edge_support(g, n_edges=_SUPPORT_INTERSECT_MAX_EDGES + 1)
+    with force_large("knn_graph.edge_support"):
+        slow = edge_support(g)
     assert fast.schema == slow.schema
 
 

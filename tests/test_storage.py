@@ -170,19 +170,17 @@ def test_exists_is_a_filesystem_check(spark, tmp_path):
     assert t.exists()
 
 
-def test_append_with_ids_large_batch_routes_distributed(spark, table, monkeypatch):
-    """Past LARGE_ID_BATCH rows the id assignment goes through the
+def test_append_with_ids_large_batch_routes_distributed(spark, table, force_large):
+    """On the large branch the id assignment goes through the
     range-repartitioned global_row_number — no single-task global window
     — and value parity holds: the id block is max+1..max+n and every row
     survives."""
-    from vector_db_spark.storage import NodeTable
-
-    monkeypatch.setattr(NodeTable, "LARGE_ID_BATCH", 10)
     batch = _nodes(
         spark,
         [(-1, [float(i), 1.0, 0.0, 0.0], f"doc {i}", {"i": str(i)}) for i in range(25)],
     ).drop("id")
-    table.append_with_ids(batch)
+    with force_large("storage.id_batch"):
+        table.append_with_ids(batch)
     rows = table.df().collect()
     assert len(rows) == 3 + 25
     new = [r for r in rows if r.id > 3]

@@ -52,7 +52,7 @@ def test_exact_dedup_survivors(spark):
     assert by_id[0].group_size == 2
 
 
-def test_minhash_near_dup_finds_planted_pair(spark):
+def test_minhash_near_dup_finds_planted_pair(spark, force_large):
     words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
     rng = np.random.default_rng(5)
     texts = [" ".join(rng.choice(words, 40)) for _ in range(20)]
@@ -62,11 +62,11 @@ def test_minhash_near_dup_finds_planted_pair(spark):
     assert any({p.doc_a, p.doc_b} == {3, 20} for p in pairs), pairs
     for p in pairs:
         assert p.jaccard >= 0.5
-    # candidate sets past max_broadcast_pairs route to shuffle verify
-    # joins (same guard family as incremental_dedup) — identical pairs
-    routed = near_dup_pairs_minhash(
-        df, threshold=0.5, max_broadcast_pairs=0
-    ).collect()
+    # candidate sets on the large branch route to shuffle verify joins
+    # (same router as incremental_dedup) — identical pairs
+    with force_large("dedup.pairs"):
+        routed_df = near_dup_pairs_minhash(df, threshold=0.5)
+    routed = routed_df.collect()
     assert sorted(map(tuple, routed)) == sorted(map(tuple, pairs))
 
 
@@ -332,8 +332,8 @@ def test_incremental_dedup_broadcasts_batch_side(spark, sf_smoke):
     assert plan_of(df).count("BroadcastHashJoin") >= 2
 
 
-def test_incremental_dedup_routes_oversized_batch(spark, sf_smoke):
-    """A batch past max_broadcast_batch must NOT ride any broadcast hint
+def test_incremental_dedup_routes_oversized_batch(spark, sf_smoke, force_large):
+    """A batch on the large branch must NOT ride any broadcast hint
     (VERDICT r7 item 2 — the knn_join guard pattern): with the auto-
     broadcast estimator disabled, the routed plan is hint-free (pure
     shuffle joins), while the small-batch plan keeps its hinted
@@ -345,7 +345,8 @@ def test_incremental_dedup_routes_oversized_batch(spark, sf_smoke):
     docs = load_table(spark, sf_smoke, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
-    routed_df = incremental_dedup(corpus, batch, max_broadcast_batch=0)
+    with force_large("dedup.batch"):
+        routed_df = incremental_dedup(corpus, batch)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -398,7 +399,7 @@ def test_dedup_index_probe_matches_rederive_and_appends(spark, sf_smoke, tmp_pat
 
 
 def test_dedup_index_bucketed_layout_prunes_and_legacy_reopens(
-    spark, sf_smoke, tmp_path
+    spark, sf_smoke, tmp_path, force_large
 ):
     """r9 bucketed layout (VERDICT r8 weak #1): (a) stores land as
     O(n_buckets) hash-clustered partition dirs; (b) the probe pushes
@@ -430,10 +431,11 @@ def test_dedup_index_bucketed_layout_prunes_and_legacy_reopens(
             if d.startswith("__bucket=")
         ]
         assert 0 < len(dirs) <= 16, (store, dirs)
-    # min_prune_bytes=0 forces pruning on a fixture-sized store (the
-    # default 1 GiB size gate would rightly skip it as overhead)
-    idx = DedupIndex(spark, str(tmp_path / "idx"), min_prune_bytes=0)
-    probe = idx.probe(batch, threshold=0.5)
+    # forcing the store-size gate prunes a fixture-sized store (the
+    # 1 GiB gate would rightly skip it as overhead)
+    idx = DedupIndex(spark, str(tmp_path / "idx"))
+    with force_large("dedup_index.prune"):
+        probe = idx.probe(batch, threshold=0.5)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [__bucket" in plan.replace(
         "PartitionFilters: [ __bucket", "PartitionFilters: [__bucket"

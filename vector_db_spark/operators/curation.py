@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vector_db_spark import route
 from vector_db_spark.caching import tracked_cache
 from vector_db_spark.functions.text import shingles, tokens
 from vector_db_spark.io import ensure_parallelism
@@ -165,6 +166,9 @@ def boilerplate_stats(
 # train/test decontamination
 # ---------------------------------------------------------------------------
 
+# past this many test-side shingles the contamination join runs un-hinted
+_MAX_BROADCAST_SHINGLES = 5_000_000
+
 
 def decontaminate_ngrams(
     train: DataFrame,
@@ -173,7 +177,6 @@ def decontaminate_ngrams(
     text_col: str = "text",
     *,
     n: int = 4,
-    max_broadcast_shingles: int = 5_000_000,
 ) -> DataFrame:
     """Benchmark decontamination: flag every training document sharing at
     least one ``n``-gram with the held-out/test corpus (the GPT-3/PaLM
@@ -182,17 +185,12 @@ def decontaminate_ngrams(
 
     The test-side shingle set is *usually* tiny relative to the corpus,
     so it is deduplicated and **broadcast**, and the training shingle
-    stream is probed map-side — no corpus-sized shuffle at all. Like
-    ``incremental_dedup``/``embedding_decontaminate``, that smallness is
-    probed rather than trusted (a benchmark suite that grows with the
-    corpus is exactly the wave-14c trap): a ``limit(max+1)`` count on the
-    deduplicated test shingles — which are CACHED first, so the probe
-    materializes the explode+distinct once and the contamination join
-    reuses it (the distinct must scan the full test side before the
-    limit applies, so an uncached probe would pay that shuffle twice) —
-    drops the broadcast hint past ``max_broadcast_shingles`` so
-    an oversized suite degrades to a shuffle equi-join under
-    Catalyst/AQE instead of hitting the broadcast ceiling. Returns every
+    stream is probed map-side — no corpus-sized shuffle at all. That
+    smallness is size-routed (``vector_db_spark.route``; a suite that
+    grows with the corpus is the wave-14c trap): past
+    ``_MAX_BROADCAST_SHINGLES`` the join runs un-hinted. The test
+    shingles are CACHED first, so the probe materializes the
+    explode+distinct once and the join reuses it. Returns every
     train doc with its hit count and a ``contaminated`` flag (hit count
     0 = clean), so the output is a stable full-corpus audit table.
     """
@@ -205,9 +203,7 @@ def decontaminate_ngrams(
         ).distinct(),
         "curation.decontaminate.test_sh",
     )
-    small = (
-        test_sh.limit(max_broadcast_shingles + 1).count() <= max_broadcast_shingles
-    )
+    small = route.fits(test_sh, _MAX_BROADCAST_SHINGLES, "curation.decontaminate")
     hits = (
         train_sh.join(F.broadcast(test_sh) if small else test_sh, "shingle")
         .groupBy(id_col)
@@ -231,7 +227,6 @@ def decontaminate_ngrams_multi(
     text_col: str = "text",
     *,
     n: int = 4,
-    max_broadcast_shingles: int = 5_000_000,
 ) -> DataFrame:
     """Decontaminate against MANY benchmark suites in one corpus pass,
     with per-suite attribution — the production shape: a training run
@@ -244,9 +239,8 @@ def decontaminate_ngrams_multi(
     corpus-sized training shingle stream is joined ONCE no matter how
     many suites ride along — per-suite hit counts fall out of the
     (doc, suite) aggregation, never a per-suite corpus re-scan. The
-    combined tagged set inherits :func:`decontaminate_ngrams`'s probed
-    broadcast guard (cached, limit-probed, hint dropped past the
-    threshold), now naturally sized as the SUM of the suites.
+    combined tagged set, sized as the SUM of the suites, is cached and
+    size-routed like :func:`decontaminate_ngrams`'s test shingles.
 
     Returns the tall hit table ``(id, suite, n_hit_shingles)`` — one
     row per contaminated (doc, suite) pair; clean docs are the
@@ -266,9 +260,7 @@ def decontaminate_ngrams_multi(
         ).distinct()
         tagged = one if tagged is None else tagged.unionByName(one)
     tagged = tracked_cache(tagged, "curation.decontaminate_multi.tagged")
-    small = (
-        tagged.limit(max_broadcast_shingles + 1).count() <= max_broadcast_shingles
-    )
+    small = route.fits(tagged, _MAX_BROADCAST_SHINGLES, "curation.decontaminate_multi")
     return (
         train_sh.join(F.broadcast(tagged) if small else tagged, "shingle")
         .groupBy(id_col, "suite")

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vector_db_spark import route
 from vector_db_spark.caching import tracked_cache
 from vector_db_spark.functions.distance import cosine_similarity
 from vector_db_spark.functions.text import (
@@ -32,6 +33,12 @@ from vector_db_spark.functions.text import (
     winnow_fingerprints,
 )
 from vector_db_spark.io import ensure_parallelism
+
+# past this many candidate pairs the Jaccard verify joins run un-hinted
+_MAX_BROADCAST_PAIRS = 100_000
+# past this many incoming rows every batch-side broadcast hint drops
+# (incremental_dedup and DedupIndex.probe)
+MAX_BROADCAST_BATCH = 100_000
 
 
 def _t_lo(threshold: float) -> int:
@@ -188,13 +195,9 @@ def jaccard_verify(
     aggregation shuffle. Per-doc arrays are bounded by document length,
     the same bound the exploded form already carried per group.
 
-    ``broadcast`` picks the physical strategy for the candidate-pair
-    joins: True hints the pair/doc-cut tables onto the broadcast side
-    (candidate pairs are tiny in the self-dedup shape), False leaves
-    them un-hinted so Catalyst/AQE route a corpus-shaped candidate set
-    through plain shuffle equi-joins instead of dying on the 8 GB
-    broadcast ceiling — callers with a size probe (``incremental_dedup``)
-    pass the probe's verdict through."""
+    ``broadcast`` hints the pair/doc-cut tables onto the broadcast side;
+    False leaves the joins to Catalyst/AQE. Callers pass their size
+    route's verdict through (``vector_db_spark.route``)."""
     hint = F.broadcast if broadcast else (lambda d: d)
     cand_docs = (
         pairs.select(F.col("doc_a").alias(id_col))
@@ -234,7 +237,6 @@ def near_dup_pairs_minhash(
     n_hashes: int = 8,
     n_bands: int = 4,
     threshold: float = 0.5,
-    max_broadcast_pairs: int = 100_000,
 ) -> DataFrame:
     """The full MinHash+LSH near-dup pipeline: shingle → sign → band →
     candidate join → exact Jaccard verify. Never enumerates O(n²) pairs.
@@ -246,20 +248,16 @@ def near_dup_pairs_minhash(
     The verify-stage broadcasts assume the candidate-pair set is small
     (Σ bucket² keeps it so on healthy corpora) — but a degenerate corpus
     (boilerplate-heavy, near-identical shards) concentrates one bucket
-    and the pair set grows toward n². Same guard as ``incremental_dedup``:
-    a ``limit(max+1)`` probe on the (cached) candidate table — O(probe),
-    and the verify re-reads the cache it warmed — drops the broadcast
-    hints past ``max_broadcast_pairs`` so the verify degrades to shuffle
-    equi-joins instead of broadcasting an n²-shaped pair table."""
+    and the pair set grows toward n². So the (cached) candidate table is
+    size-routed (``vector_db_spark.route``): past ``_MAX_BROADCAST_PAIRS``
+    the verify runs shuffle equi-joins."""
     sh = tracked_cache(shingle_table(df, text_col, id_col, n), "dedup.neardup.sh")
     wide = minhash_wide(sh, id_col, n_hashes)
     # candidates are consumed twice by the verify (doc cut + pair join)
     cands = tracked_cache(
         lsh_candidate_pairs(wide, id_col, n_bands), "dedup.neardup.cands"
     )
-    small = (
-        cands.limit(max_broadcast_pairs + 1).count() <= max_broadcast_pairs
-    )
+    small = route.fits(cands, _MAX_BROADCAST_PAIRS, "dedup.pairs")
     return jaccard_verify(sh, cands, id_col, threshold, broadcast=small)
 
 
@@ -342,7 +340,6 @@ def incremental_dedup(
     n_bands: int = 4,
     threshold: float = 0.5,
     prefix_tokens: int | None = None,
-    max_broadcast_batch: int = 100_000,
 ) -> DataFrame:
     """Dedup an **incoming batch against an already-indexed corpus** — the
     production shape of corpus maintenance (a daily crawl landing on a
@@ -363,23 +360,17 @@ def incremental_dedup(
     fingerprints probe a broadcast batch-fp table; band keys are derived
     map-side on the corpus stream and probe broadcast batch band keys;
     Jaccard verification touches only candidate docs (semi-join cut, as
-    in :func:`jaccard_verify`). That smallness is ENFORCED, not trusted
-    (the knn_join guard pattern, operators/knn.py): the batch row count
-    is probed with a ``limit(max+1).count()`` — O(threshold), never a
-    full count of an unbounded input — and past ``max_broadcast_batch``
-    rows (a backfill, a merged crawl) every batch-side hint is dropped so
-    the fp/band/verify joins run as plain shuffle equi-joins under
-    Catalyst/AQE instead of dying on the 8 GB broadcast ceiling with an
-    opaque OOM. Both routes produce identical rows (parity-tested); the
+    in :func:`jaccard_verify`). That smallness is size-routed
+    (``vector_db_spark.route``): past ``MAX_BROADCAST_BATCH`` rows (a
+    backfill, a merged crawl) every batch-side hint is dropped so the
+    fp/band/verify joins run as plain shuffle equi-joins under
+    Catalyst/AQE. Both routes produce identical rows (parity-tested); the
     routed form costs the shuffles the broadcast form avoided — measured
     at a corpus-shaped batch in SCALE.md wave-15. At cluster scale the
     corpus signature/band table would be a *persisted* incremental index
     (written once per batch append, exactly like the IVF corpus) — the
     plan shape here is identical, minus the re-derivation."""
-    small = (
-        incoming.select(id_col).limit(max_broadcast_batch + 1).count()
-        <= max_broadcast_batch
-    )
+    small = route.fits(incoming.select(id_col), MAX_BROADCAST_BATCH, "dedup.batch")
     hint = F.broadcast if small else (lambda d: d)
     fp = doc_fingerprint(text_col, prefix_tokens)
     ex_fp = existing.select(F.col(id_col).alias("__ex_id"), fp.alias("fingerprint"))

@@ -54,7 +54,7 @@ Hence (1) ``n_buckets`` derives from the corpus size at build
 (saturation guard in ``_read``) and takes the plain scan — the
 corpus-shaped batch costs what the unbucketed layout cost, instead of
 paying collection jobs for an IN list that filters nothing — and
-(3) stores under ``min_prune_bytes`` (default 1 GiB; a driver-side
+(3) stores under 1 GiB (``_FULL_SCAN_MAX_BYTES``; a driver-side
 file-size sum, no Spark job) skip pruning outright: below that, the
 full scan is cheaper than the pruning machinery's own scheduling, so
 pruning is a big-store mechanism by construction and can never regress
@@ -85,9 +85,8 @@ mixing partition depths would break Spark's partition discovery — so
 
 Probe semantics are IDENTICAL to ``incremental_dedup`` (same oracle SQL
 verifies both registered queries) — the index only removes the
-re-derivation. The batch side keeps the r8 probed-broadcast guard:
-past ``max_broadcast_batch`` incoming rows every batch-side hint drops
-and the joins shuffle under Catalyst/AQE.
+re-derivation. The batch side is size-routed (``vector_db_spark.route``)
+like ``incremental_dedup``'s.
 """
 
 from __future__ import annotations
@@ -98,32 +97,27 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from vector_db_spark import route
 from vector_db_spark.caching import tracked_cache
 from vector_db_spark.functions.text import doc_fingerprint
 from vector_db_spark.operators.dedup import (
+    MAX_BROADCAST_BATCH,
     band_keys,
     jaccard_verify,
     minhash_wide,
     shingle_table,
 )
 
+# stores below 1 GiB skip bucket pruning (rule 3 of the module docstring)
+_FULL_SCAN_MAX_BYTES = (1 << 30) - 1
+
 
 class DedupIndex:
     """Reopen-from-path handle over a persisted dedup signature index."""
 
-    def __init__(
-        self, spark: SparkSession, path: str, *, min_prune_bytes: int = 1 << 30
-    ):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # bucket pruning pays a few driver-side jobs (saturation probe +
-        # bucket collection per store); below this store size the full
-        # scan is cheaper than the overhead, so probes skip straight to
-        # it. 1 GiB default: pruning is a big-store mechanism by
-        # construction (wave-16 measured the always-prune form LOSING at
-        # x100 fixture scale — job scheduling beat the 1-2 s scan it
-        # saved). Tests force 0 to pin the pruned plan shape.
-        self.min_prune_bytes = min_prune_bytes
         self._store_bytes: dict[str, int] = {}
         with open(os.path.join(path, "params.json")) as f:
             p = json.load(f)
@@ -415,22 +409,18 @@ class DedupIndex:
             self.n_buckets is not None
             and probe_keys is not None
             and "__bucket" in df.columns
-            # size gate: pruning's fixed overhead (a saturation probe +
-            # a bucket collection, each a driver-scheduled job) only
-            # pays against a store whose full scan costs more — a
-            # driver-side file-size sum, no Spark job
-            and self._size_of(path) >= self.min_prune_bytes
+            # size gate (module docstring rule 3): a large store prunes
+            and not route.small(
+                self._size_of(path), _FULL_SCAN_MAX_BYTES, "dedup_index.prune"
+            )
             # saturation guard: with K probe keys over B buckets the
             # expected hit fraction is 1 - e^(-K/B), so past K ≈ 2B
             # (~86% hit) the filter cannot pay for its own collection
             # job — skip it and take the plain scan, which is exactly
-            # the unbucketed cost. The limit-probe is O(B) rows of
-            # map-side work, the same bounded pattern as the repo's
-            # probed broadcasts. (Row count over-approximates distinct
+            # the unbucketed cost. (Row count over-approximates distinct
             # keys, which only ever errs toward skipping — never toward
             # a uselessly huge IN list.)
-            and probe_keys.limit(2 * self.n_buckets + 1).count()
-            <= 2 * self.n_buckets
+            and route.fits(probe_keys, 2 * self.n_buckets, "dedup_index.saturation")
         ):
             key_col = probe_keys.columns[0]
             buckets = [
@@ -463,7 +453,6 @@ class DedupIndex:
         incoming: DataFrame,
         *,
         threshold: float = 0.5,
-        max_broadcast_batch: int = 100_000,
     ) -> DataFrame:
         """``incremental_dedup`` against the PERSISTED corpus tables —
         one row per incoming document: ``(id, dup_exact_of, dup_near_of,
@@ -479,9 +468,8 @@ class DedupIndex:
         ``in_bands``, ``cand``) are cached so the collection warms the
         cache the join reuses."""
         id_col = self.id_col
-        small = (
-            incoming.select(id_col).limit(max_broadcast_batch + 1).count()
-            <= max_broadcast_batch
+        small = route.fits(
+            incoming.select(id_col), MAX_BROADCAST_BATCH, "dedup_index.batch"
         )
         hint = F.broadcast if small else (lambda d: d)
         fp = doc_fingerprint(self.text_col, self.prefix_tokens)

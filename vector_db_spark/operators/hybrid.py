@@ -30,9 +30,12 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from vector_db_spark import route
 from vector_db_spark.functions.text import tokens
 
 RRF_K = 60
+# past this many distinct subscription terms percolate skips the literal
+_MAX_LITERAL_VOCAB = 10_000
 
 
 def bm25_topk(
@@ -236,7 +239,6 @@ def percolate(
     text_col: str = "text",
     query_id_col: str = "query_id",
     terms_col: str = "terms",
-    max_literal_vocab: int = 10_000,
 ) -> DataFrame:
     """(doc_id, query_id): which stored conjunctive term queries match each
     document — search INVERTED: the queries are the persisted table and
@@ -244,7 +246,7 @@ def percolate(
     ``foreachBatch`` and each micro-batch of new docs triggers its
     matching subscriptions).
 
-    Plan, small-vocabulary regime (≤ ``max_literal_vocab`` distinct
+    Plan, small-vocabulary regime (≤ ``_MAX_LITERAL_VOCAB`` distinct
     subscription terms): the stored-query term table broadcasts and its
     union'd term set rides the plan as a literal; each doc intersects its
     distinct tokens with that term set MAP-SIDE, so only matching terms
@@ -253,25 +255,24 @@ def percolate(
     (doc, query) compared to the query's term arity — a match means
     EVERY term hit. No crossJoin, no regex over queries×docs.
 
-    The smallness is probed, not trusted (the knn_join guard pattern):
-    the distinct-term probe is a ``limit(max+1)`` whose collect IS the
-    vocabulary fetch when it fits. Past the threshold — multi-tenant
+    The distinct-term set is size-routed (``vector_db_spark.route``; the
+    probe IS the vocabulary fetch). Past the bound — multi-tenant
     subscription tables growing with the corpus (SCALE.md wave-14b's
-    true matching-volume shape) — the literal/collect path is skipped
-    entirely: doc tokens explode distinct and the term/arity joins run
-    un-hinted, so Catalyst/AQE broadcast the subscription side while it
-    fits and shuffle past that, instead of building a plan literal of
-    unbounded width on the driver. Both regimes emit identical rows."""
+    true matching-volume shape) — doc tokens explode distinct and the
+    term/arity joins run un-hinted, so Catalyst/AQE broadcast the
+    subscription side while it fits and shuffle past that, instead of
+    building a plan literal of unbounded width on the driver. Both
+    regimes emit identical rows."""
     q_terms = stored.select(
         query_id_col, F.explode(terms_col).alias("tok")
     )
     q_arity = stored.select(
         query_id_col, F.size(terms_col).alias("__need")
     )
-    # probe IS the fetch in the small regime: at most max+1 distinct terms
-    # ever reach the driver, never an unbounded subscription vocabulary
-    probe = q_terms.select("tok").distinct().limit(max_literal_vocab + 1).collect()
-    small = len(probe) <= max_literal_vocab
+    probe = route.fetch(
+        q_terms.select("tok").distinct(), _MAX_LITERAL_VOCAB, "hybrid.vocab"
+    )
+    small = probe is not None
     if small:
         vocab = sorted({r["tok"] for r in probe})
         matched = docs.select(

@@ -30,6 +30,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from vector_db_spark import route
 from vector_db_spark.functions.distance import METRICS, euclidean
 from vector_db_spark.io import write_clustered, write_small_parquet
 from vector_db_spark.operators.kmeans import DEFAULT_SAMPLE_CAP, train_centroids
@@ -45,6 +46,8 @@ from vector_db_spark.operators.topk import nearest_k, top_k_per_group
 # signal rather than noise — shared by derive_k's floor and build()'s
 # sample-cap guard so the two can never drift apart
 MIN_POINTS_PER_CLUSTER = 39
+# past this many query rows the probe table is joined un-hinted
+_MAX_BROADCAST_QUERIES = 10_000
 
 
 def assign_to_centroids(
@@ -394,7 +397,6 @@ class IVFIndex:
         query_vec_col: str = "query_vec",
         round_to: int | None = 6,
         allowed_ids: DataFrame | None = None,
-        max_broadcast_queries: int = 10_000,
     ) -> DataFrame:
         """n_probe search: rank centroids per query (ivf.py:170-171's argsort
         as a windowed top-n_probe over the broadcast centroid join), then an
@@ -406,13 +408,7 @@ class IVFIndex:
         ``allowed_ids`` (one column named like ``id_col``) pre-filters the
         candidate set — metadata-filtered search (reference F2,
         app.py:184-199) as a semi-join BEFORE distances and top-k, so a
-        filtered search still returns k results when k matches exist.
-
-        The probe-side broadcast hint is guarded like the batch-kNN
-        collect: past ``max_broadcast_queries`` query rows the probe join
-        runs un-hinted (shuffle on ``cluster_id``, the standard
-        co-partition exchange against the cluster-partitioned corpus)
-        instead of shipping a corpus-shaped probe table to every task."""
+        filtered search still returns k results when k matches exist."""
         if metric not in METRICS:
             raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
         corpus = self.corpus()
@@ -420,7 +416,7 @@ class IVFIndex:
             corpus = corpus.join(allowed_ids, self.id_col, "left_semi")
         cand = self.probe_join(
             queries, corpus, n_probe, metric=metric, query_id_col=query_id_col,
-            query_vec_col=query_vec_col, max_broadcast_queries=max_broadcast_queries,
+            query_vec_col=query_vec_col,
         )
         scored = cand.select(
             F.col(query_id_col).alias("query_id"),
@@ -438,7 +434,6 @@ class IVFIndex:
         metric: str = "euclidean",
         query_id_col: str = "query_id",
         query_vec_col: str = "query_vec",
-        max_broadcast_queries: int = 10_000,
     ) -> DataFrame:
         """Each query's ``n_probe`` nearest clusters (ivf.py:170-171's
         argsort as a windowed top-n_probe over the broadcast centroid join),
@@ -455,8 +450,9 @@ class IVFIndex:
         METRICS[metric] is nearest-under-that-metric by construction
         (dot is registered negated).
 
-        The probe side is broadcast only up to ``max_broadcast_queries``
-        query rows (one bounded count); past that the join runs un-hinted."""
+        The probe side is size-routed (``vector_db_spark.route``): past
+        ``_MAX_BROADCAST_QUERIES`` query rows the join runs un-hinted (a
+        shuffle on ``cluster_id`` against the cluster-partitioned table)."""
         probes = top_k_per_group(
             queries.crossJoin(F.broadcast(self.centroids())).withColumn(
                 "__cdist", METRICS[metric](F.col(query_vec_col), F.col("centroid"))
@@ -465,9 +461,7 @@ class IVFIndex:
             [F.col("__cdist").asc(), F.col("cluster_id").asc()],
             n_probe,
         ).select(query_id_col, query_vec_col, "cluster_id")
-        small = (
-            queries.limit(max_broadcast_queries + 1).count() <= max_broadcast_queries
-        )
+        small = route.fits(queries, _MAX_BROADCAST_QUERIES, "ivf.probe")
         return (F.broadcast(probes) if small else probes).join(table, "cluster_id")
 
     # -- stats (reference ivf.py:201-215) ----------------------------------------

@@ -328,24 +328,20 @@ class IVFPQIndex:
         query_id_col: str = "query_id",
         query_vec_col: str = "query_vec",
         round_to: int | None = 6,
-        max_broadcast_queries: int = 10_000,
     ) -> DataFrame:
         """ADC n_probe search; with ``refine`` set, the ADC pass returns
         ``refine × k`` candidates per query and a raw-vector join re-ranks
         them exactly (distances then match brute force on the recalled set).
 
-        The probe-side broadcast hint is guarded: past
-        ``max_broadcast_queries`` query rows the probe join runs un-hinted
-        (the per-batch (query, cluster) grouping in the ADC kernel is
-        partition-layout-independent — partial per-batch cuts are fixed by
-        the global top-k), so a corpus-shaped query table degrades to a
-        shuffle join instead of a broadcast blow-up."""
+        The probe join is size-routed like ``IVFIndex.probe_join``; its
+        un-hinted large branch is safe here because the ADC kernel's
+        per-batch (query, cluster) cuts are fixed by the global top-k."""
         fetch = k * refine if refine else k
         # the (tiny) probe table is broadcast into every codes partition —
         # no shuffle of the codes side; DPP prunes unprobed clusters
         cand = self.ivf.probe_join(
             queries, self.codes(), n_probe, query_id_col=query_id_col,
-            query_vec_col=query_vec_col, max_broadcast_queries=max_broadcast_queries,
+            query_vec_col=query_vec_col,
         )
         bc = self.spark.sparkContext.broadcast(
             (self.ivf.centroid_matrix(), self.pq.codebook_tensor())

@@ -34,10 +34,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vector_db_spark import route
 from vector_db_spark.functions.distance import METRICS
 from vector_db_spark.operators.topk import nearest_k
 
 _BATCH_SCHEMA = "query_id long, neighbor_id long, dist double"
+# past this many query rows the query side is neither collected nor hinted
+_MAX_BATCH_QUERIES = 10_000
+# filtered search brute-forces the survivors up to this many allowed ids
+_EXACT_MAX_ALLOWED = 100_000
 
 
 def _numpy_distances(metric: str, corpus: np.ndarray, queries: np.ndarray) -> np.ndarray:
@@ -76,45 +81,34 @@ def knn_join(
     vec_col: str = "embedding",
     impl: str = "batch",
     round_to: int | None = 6,
-    max_batch_queries: int = 10_000,
 ) -> DataFrame:
     """Exact k nearest corpus rows per query row.
 
     Returns columns ``(query_id, neighbor_id, dist, rank)``. The corpus
     side is never collected and may be arbitrarily large. The query side
-    is *expected* to be the small (serving-shaped) side, but that
-    assumption is enforced, not trusted: ``impl="batch"`` first counts
-    the query table and, past ``max_batch_queries`` rows, routes to the
-    distributed join path WITHOUT a broadcast hint (Catalyst/AQE pick
-    the strategy) — a corpus-shaped query side degrades to a longer
-    distributed job instead of silently OOMing the driver collect.
+    is size-routed (``vector_db_spark.route``): past ``_MAX_BATCH_QUERIES``
+    rows either impl runs the distributed join WITHOUT a broadcast hint
+    (Catalyst/AQE pick the strategy).
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
     if impl not in ("batch", "sql"):
         raise ValueError(f"unknown impl {impl!r}")
-    # Guard probe, shaped per impl: the batch path needs the rows anyway,
-    # so its probe IS the fetch (collect at most max+1 rows — no second
-    # evaluation of the query-side lineage). The sql path never needs the
-    # vectors on the driver, so it probes with a limit(max+1).count() —
-    # the same trick ivf/ivfpq use — instead of shipping full embeddings
-    # it would immediately discard. Oversized query tables route to the
-    # un-hinted distributed join for EITHER impl (the sql path's broadcast
-    # hint is just as much a blow-up as the collect).
+    # the batch path needs the rows anyway, so its probe is the fetch; the
+    # sql path only counts ids instead of shipping vectors it would discard
     if impl == "batch":
-        qrows = (
-            queries.select(query_id_col, query_vec_col)
-            .limit(max_batch_queries + 1)
-            .collect()
+        qrows = route.fetch(
+            queries.select(query_id_col, query_vec_col),
+            _MAX_BATCH_QUERIES,
+            "knn.queries",
         )
-        small = len(qrows) <= max_batch_queries
+        small = qrows is not None
         if not small:
             impl = "sql"  # query side too big to collect: stay distributed
     else:
         qrows = None
-        small = (
-            queries.select(query_id_col).limit(max_batch_queries + 1).count()
-            <= max_batch_queries
+        small = route.fits(
+            queries.select(query_id_col), _MAX_BATCH_QUERIES, "knn.queries"
         )
     if impl == "sql":
         qside = queries.select(
@@ -240,7 +234,6 @@ def adaptive_filtered_knn(
     *,
     allowed_ids: DataFrame,
     n_probe: int = 10,
-    exact_threshold: int = 100_000,
     metric: str = "euclidean",
 ) -> DataFrame:
     """Selectivity-adaptive filtered search — the pre-filter/post-filter
@@ -261,19 +254,15 @@ def adaptive_filtered_knn(
 
     The regime is picked from the actual survivor count — one cheap
     aggregate over the (already narrow) id column, the same runtime
-    statistic AQE re-plans on. ``exact_threshold`` is per-cluster-budget
-    shaped: survivors ≤ threshold cost one bounded batch-kernel pass.
+    statistic AQE re-plans on. ``_EXACT_MAX_ALLOWED`` is per-cluster-budget
+    shaped: survivors within it cost one bounded batch-kernel pass.
     Both branches emit identical schemas with rounded-distance/id-tiebreak
     determinism, so the choice never changes *what* is returned for the
     selective regime, only how.
     """
     n_allowed = allowed_ids.count()  # narrow column, cheap aggregate
-    if n_allowed <= exact_threshold:
-        corpus = index.corpus().join(
-            F.broadcast(allowed_ids) if n_allowed <= 1_000_000 else allowed_ids,
-            index.id_col,
-            "left_semi",
-        )
+    if route.small(n_allowed, _EXACT_MAX_ALLOWED, "knn.filtered_exact"):
+        corpus = index.corpus().join(F.broadcast(allowed_ids), index.id_col, "left_semi")
         return knn_join(
             queries,
             corpus,

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vector_db_spark import route
 from vector_db_spark.caching import tracked_cache
 from vector_db_spark.functions.distance import euclidean
 
@@ -653,7 +654,9 @@ def _close_triangles(e: DataFrame, n_edges: int) -> DataFrame:
     types (r10, ADVICE r9): the ~16 B/entry broadcast estimate behind
     ``_INTERSECT_MAX_EDGES`` holds for fixed-width ids only — string ids
     can be arbitrarily wide, so they take the wedge shape at any count."""
-    if n_edges <= _INTERSECT_MAX_EDGES and _integral_ids(e, ("a", "b")):
+    if _integral_ids(e, ("a", "b")) and route.small(
+        n_edges, _INTERSECT_MAX_EDGES, "knn_graph.triangle_close"
+    ):
         adj = e.groupBy(F.col("a").alias("__v")).agg(
             F.collect_list("b").alias("__nb")
         )
@@ -909,24 +912,18 @@ def label_propagation(
 
 
 # past this many nodes the per-node degree table stops riding broadcast
-# hints in the link predictors (same guard family as knn.py's 1M-row
-# allowed_ids bound): a billion-node graph must shuffle its degree join,
-# not replicate a node-sized table to every executor
+# hints in the link predictors: a billion-node graph must shuffle its
+# degree join, not replicate a node-sized table to every executor
 _MAX_BROADCAST_NODES = 1_000_000
 
 
 def _deg_hint(deg: DataFrame):
-    """Cache the degree table, probe its node count (limit-probe), and
-    return ``(hint, cached_deg)``. The cache makes the probe pay for
-    itself: deg is consumed again by each scoring join branch, and
-    without it the limit-probe would run the degree aggregation one
-    extra time (the limit cannot short-circuit the groupBy shuffle
-    behind it) and each branch would re-shuffle it once more. Callers
-    MUST join the returned frame, not the one they passed in."""
+    """Cache the degree table, size-route its node count, and return
+    ``(hint, cached_deg)``. The cache makes the probe pay for itself: the
+    scoring joins reuse it instead of re-running the degree aggregation.
+    Callers MUST join the returned frame, not the one they passed in."""
     deg = tracked_cache(deg, "knn_graph.linkpred.deg")
-    small = (
-        deg.limit(_MAX_BROADCAST_NODES + 1).count() <= _MAX_BROADCAST_NODES
-    )
+    small = route.fits(deg, _MAX_BROADCAST_NODES, "knn_graph.degree")
     return (F.broadcast if small else (lambda d: d)), deg
 
 
@@ -958,18 +955,13 @@ _MAX_BROADCAST_WEDGE_SIDE = 1_000_000
 
 
 def _wedge_side_hint(a_side: DataFrame) -> DataFrame:
-    """Probed broadcast of the target-restricted wedge side: ``a_side`` is
-    the adjacency of the source set (Σ_{a∈S} deg(a) rows — |S| is an
+    """Size-routed broadcast of the target-restricted wedge side: ``a_side``
+    is the adjacency of the source set (Σ_{a∈S} deg(a) rows — |S| is an
     application-bounded page/batch in practice, but NOT bounded by
-    construction, so the hint is limit-probed like every other broadcast
-    in this repo). Broadcast keeps the wedge join from shuffling the full
+    construction). Broadcast keeps the wedge join from shuffling the full
     edge table by the midpoint; past the bound the plain shuffle join
-    runs. The probe is a narrow limit over the checkpointed edge scan —
-    O(threshold)."""
-    small = (
-        a_side.limit(_MAX_BROADCAST_WEDGE_SIDE + 1).count()
-        <= _MAX_BROADCAST_WEDGE_SIDE
-    )
+    runs."""
+    small = route.fits(a_side, _MAX_BROADCAST_WEDGE_SIDE, "knn_graph.wedge_side")
     return F.broadcast(a_side) if small else a_side
 
 
@@ -988,12 +980,9 @@ def link_prediction_jaccard(
     Spark shape: candidate pairs come from the wedge join (two nodes can
     only share a neighbor if a path of length 2 connects them — never
     nodes²); existing edges are removed with one anti-join; degrees
-    broadcast while the node count stays under 1 M (the degree table is
-    cached, the probe materializes it, and the scoring joins reuse the
-    cache — one degree aggregation total; un-hinted past the bound, so
-    a billion-node graph shuffles its degree join instead of
-    replicating a node-sized table to every executor). Ties break
-    (jaccard desc, a, b) for a deterministic top-n.
+    broadcast while the node count is within ``_MAX_BROADCAST_NODES``
+    (see :func:`_deg_hint`). Ties break (jaccard desc, a, b) for a
+    deterministic top-n.
 
     **Scale knob — ``sources``.** The all-pairs wedge volume is Σ deg²
     (~300 M at sf0.1's dense co-purchase graph: 68 s measured, and
@@ -1612,7 +1601,9 @@ def edge_support(
         )
     if n_edges is None:
         n_edges = e.count()
-    if n_edges <= _SUPPORT_INTERSECT_MAX_EDGES and _integral_ids(e, ("a", "b")):
+    if _integral_ids(e, ("a", "b")) and route.small(
+        n_edges, _SUPPORT_INTERSECT_MAX_EDGES, "knn_graph.edge_support"
+    ):
         und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         adj = und.groupBy(F.col("a").alias("__v")).agg(
             F.collect_list("b").alias("__nb")

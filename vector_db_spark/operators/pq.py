@@ -31,9 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from vector_db_spark import route
 from vector_db_spark.io import write_small_parquet
 from vector_db_spark.operators.kmeans import collect_sample, kmeans_fit
 from vector_db_spark.operators.topk import nearest_k
+
+# past this many query rows ADC search builds its LUTs distributed
+_MAX_BATCH_QUERIES = 10_000
 
 
 def encode_chunks(x: np.ndarray, tensor: np.ndarray) -> np.ndarray:
@@ -179,27 +183,23 @@ class PQModel:
         query_id_col: str = "query_id",
         query_vec_col: str = "query_vec",
         round_to: int | None = 6,
-        max_batch_queries: int = 10_000,
     ) -> DataFrame:
         """Asymmetric-distance k-NN over PQ codes: per query an (m,k) LUT of
         subspace squared distances, then each corpus row costs m gathers —
         the scan touches only ids+codes (m*4 bytes/vector instead of dim*4),
         which is the point of PQ at 100 TB.
 
-        The query side is expected serving-shaped (it is collected and its
-        LUTs broadcast), and that assumption is enforced: the collect is
-        bounded at ``max_batch_queries + 1`` rows (one probe job, reused
-        as the fast path's fetch); past the bound the search routes to
-        :meth:`_adc_search_join` — LUTs computed distributed per query
-        row, distances via a JVM-side gather join — so a corpus-shaped
-        query table degrades to a longer distributed job instead of
-        OOMing the driver."""
-        qrows = (
-            queries.select(query_id_col, query_vec_col)
-            .limit(max_batch_queries + 1)
-            .collect()
+        The query side is collected and its LUTs broadcast while it is
+        within ``_MAX_BATCH_QUERIES`` rows (``vector_db_spark.route``);
+        past that the search routes to :meth:`_adc_search_join` — LUTs
+        computed distributed per query row, distances via a JVM-side
+        gather join."""
+        qrows = route.fetch(
+            queries.select(query_id_col, query_vec_col),
+            _MAX_BATCH_QUERIES,
+            "pq.queries",
         )
-        if len(qrows) > max_batch_queries:
+        if qrows is None:
             return self._adc_search_join(
                 queries,
                 codes_df,

@@ -704,7 +704,7 @@ def percolate_scaled_subscriptions(spark: SparkSession, sf_dir: str) -> DataFram
     the match volume grow ×k when the corpus grows ×k — the multi-tenant
     alerting deployment shape. The subscription derivation is pure
     DataFrame ops (df-rank → TakeOrdered cut → pair-up), and
-    ``percolate``'s probed vocabulary guard picks the physical plan:
+    ``percolate``'s size-routed vocabulary picks the physical plan:
     literal map-side intersect at this geometry, un-hinted joins once a
     blown-up corpus pushes the derived vocabulary past the literal
     threshold (measured in SCALE.md wave-15: ×100 corpus ⇒ ×100

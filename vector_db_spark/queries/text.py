@@ -396,9 +396,8 @@ LEFT JOIN near_best nb USING (doc_id)
 def incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incoming-batch-vs-corpus dedup (the corpus-maintenance shape): the
     ``doc_id % 5 == 0`` slice plays the fresh crawl, the rest the indexed
-    corpus. Batch smallness is probed (r8): small batches broadcast and
-    the corpus never shuffles; corpus-shaped batches route to shuffle
-    joins (operators/dedup.py:incremental_dedup)."""
+    corpus. The batch is size-routed: small batches broadcast and the
+    corpus never shuffles (operators/dedup.py:incremental_dedup)."""
     docs = load_table(spark, sf_dir, "documents")
     return incremental_dedup(
         docs.filter(F.col("doc_id") % _INC_MOD != 0),

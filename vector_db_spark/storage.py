@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vector_db_spark import route
 from vector_db_spark.io import has_data_files
 
 NODE_SCHEMA = T.StructType(
@@ -39,6 +40,10 @@ NODE_SCHEMA = T.StructType(
         T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
+
+# past this many id-less rows the numbering runs distributed
+# (operators/packing.global_row_number) instead of one single-task window
+_MAX_WINDOW_ID_BATCH = 100_000
 
 
 class NodeTable:
@@ -150,37 +155,29 @@ class NodeTable:
         self._validate(nodes).write.mode("append").parquet(self.path)
         self._schema_cache = None
 
-    # Past this many id-less rows the numbering routes through the
-    # distributed row-number (operators/packing.global_row_number) instead
-    # of a single-task global window — same guard pattern as knn/pq: one
-    # limit(threshold+1).count() probe, never a full count.
-    LARGE_ID_BATCH = 100_000
-
     def append_with_ids(self, nodes: DataFrame, *, batch_count: int | None = None) -> None:
         """Assign ids ``max(existing)+row_number`` to id-less rows — the
         distributed form of get_next_id (storage.py:276-280).
 
-        Ingest-shaped batches (≤ LARGE_ID_BATCH rows) take one global
-        window over the NEW BATCH only — a single task, fine at that
-        size. Larger batches route through ``global_row_number`` (range
-        repartition + per-partition offsets), so a corpus-sized id-less
-        load never funnels through one task; the order key is a content
-        digest (ties only between identical rows, whose numbering is
-        interchangeable — the id block is ``start..start+n-1`` either
-        way). ``batch_count``: callers that already counted the batch
-        (insert_documents counts it to report n inserted) pass it here so
-        the size probe doesn't re-evaluate the batch lineage — which can
-        embed every document a second time."""
+        Ingest-shaped batches (size-routed, ``vector_db_spark.route``)
+        take one global window over the NEW BATCH only — a single task,
+        fine at that size. Larger batches route through
+        ``global_row_number`` (range repartition + per-partition offsets),
+        so a corpus-sized id-less load never funnels through one task;
+        the order key is a content digest (ties only between identical
+        rows, whose numbering is interchangeable — the id block is
+        ``start..start+n-1`` either way). ``batch_count``: callers that
+        already counted the batch (insert_documents counts it to report n
+        inserted) pass it here so the size probe doesn't re-evaluate the
+        batch lineage — which can embed every document a second time."""
         max_id = self.df().agg(F.max("id")).collect()[0][0]
         # explicit None test: `or -1` would misread a legitimate max id of
         # 0 as "empty table" and hand out a duplicate id 0
         start = (max_id if max_id is not None else -1) + 1
         if batch_count is not None:
-            small = batch_count <= self.LARGE_ID_BATCH
+            small = route.small(batch_count, _MAX_WINDOW_ID_BATCH, "storage.id_batch")
         else:
-            small = (
-                nodes.limit(self.LARGE_ID_BATCH + 1).count() <= self.LARGE_ID_BATCH
-            )
+            small = route.fits(nodes, _MAX_WINDOW_ID_BATCH, "storage.id_batch")
         if small:
             w = Window.orderBy(F.monotonically_increasing_id())
             withids = nodes.withColumn(
