@@ -2,7 +2,7 @@
 on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
-CLI (round-8, VERDICT r7 item 4):
+CLI:
 
     python bench.py                        # full sweep (the driver's call):
                                            # builds + canary + every headline
@@ -16,7 +16,7 @@ CLI (round-8, VERDICT r7 item 4):
                                            # per-process model caches)
 
 Unknown names fail fast listing near-misses, so a typo'd re-check can't
-silently run the 5-minute sweep (the old behavior for ANY argv).
+silently run the 5-minute sweep. Protocol and current numbers: PERF.md.
 """
 
 from __future__ import annotations
@@ -55,30 +55,30 @@ HEADLINE = [
     "ann_lsh_search",
     "stream_hourly_counts",
     "stream_ingest_cluster_counts",
-    # round-3 surface: curation / hybrid / incremental dedup
+    # curation / hybrid / incremental dedup
     "doc_repetition",
     "boilerplate_frac",
     "decontaminate_ngrams",
-    # round-9: per-suite attribution forms (one corpus pass, N suites)
+    # per-suite attribution forms (one corpus pass, N suites)
     "decontaminate_ngrams_multi",
     "embedding_decontaminate_multi",
     "embedding_decontaminate",
     "hybrid_search",
     "incremental_dedup",
-    # round-8: the persisted-signature-index probe (build amortized like
+    # the persisted-signature-index probe (build amortized like
     # the other *_build caches; the row times the steady-state probe)
     "incremental_dedup_indexed",
-    # round-9: the end-to-end maintenance composition; the cycle itself
+    # the end-to-end maintenance composition; the cycle itself
     # is one-shot (corpus_maintenance_cycle in the builds section), the
     # row re-reads the measured facts
     "corpus_maintenance_audit",
-    # round-3 additions: RAG chunking, binary quantization, MMR rerank
+    # RAG chunking, binary quantization, MMR rerank
     "chunk_manifest",
     "chunk_semantic_search",
     "bq_hamming_search",
     "mmr_diversified",
     "stream_query_serving",
-    # round-3 additions: LM scoring, export, PCA, BPE, classifier, graphs
+    # LM scoring, export, PCA, BPE, classifier, graphs
     "bigram_lm_score",
     "export_shard_manifest",
     "heavy_hitter_tokens",
@@ -99,8 +99,8 @@ HEADLINE = [
     "incremental_hourly_counts",
     "weighted_sample_quality",
     "percolate_alerts",
-    # round-8: the subscription-scaled percolation form (wave-14b's true
-    # matching-volume curve, registered)
+    # the subscription-scaled percolation form (the true matching-volume
+    # curve, registered)
     "percolate_scaled_subscriptions",
     "table_expectations",
     "cluster_topic_terms",
@@ -111,7 +111,7 @@ HEADLINE = [
     "frequent_event_paths",
     "embedding_isotropy",
     "winsorized_value_stats",
-    # round-4 additions: sketches, profiling, adaptive cuts, OPQ
+    # sketches, profiling, adaptive cuts, OPQ
     "hll_rollup_users",
     "digest_price_quantiles",
     "event_key_skew",
@@ -125,15 +125,15 @@ HEADLINE = [
     "interleave_training_order",
     "corpus_governance_report",
     "hnsw_export_stats",
-    # round-7: the scale-safe derived-k export + the native first-seen
-    # path that retires the Python-state floor
+    # the scale-safe derived-k export + the native first-seen path (no
+    # Python-state floor)
     "hnsw_export_derived_k",
     "stream_first_seen_native",
     "recall_bytes_frontier",
     "ivf_search_cosine_det",
     "asof_next_order",
     "asof_nearest_order",
-    # round-3 (this session): time-series rollups + KMV theta sketches
+    # time-series rollups + KMV theta sketches
     "ohlc_daily_bars",
     "resample_ffill_purchases",
     "ewma_purchase_values",
@@ -157,12 +157,12 @@ HEADLINE = [
     "value_percentile_ranks",
     "cms_join_size",
     "node2vec_biased_walks",
-    # round-4 additions: driver-visible lifecycle audits + co-purchase PPR
+    # driver-visible lifecycle audits + co-purchase PPR
     "versioned_lifecycle_audit",
     "node_table_crud_audit",
     "copurchase_ppr_expansion",
     "purchase_window_events",
-    # round-6: interval range join took a driver slot — bench its row too
+    # the interval range join (a driver-tier query) benched too
     "range_join_user_activity",
     "versioned_layout_audit",
     "inverted_bm25_search",
@@ -173,18 +173,18 @@ HEADLINE = [
     "doc_novelty",
     "association_rules",
     "image_phash_near_dup",
-    # round-6 additions: decayed hot-keys, record linkage
+    # decayed hot-keys, record linkage
     "decayed_event_type_scores",
     "record_linkage_customers",
-    # round-4 closing additions
+    # containment and multi-probe LSH
     "containment_near_dup",
     "ann_lsh_multiprobe",
-    # round-6: wave-10/11 mitigation — capped co-occurrence triangles +
-    # the knob-from-budget wedge audit that prices the join before running
+    # the wedge-volume mitigation — capped co-occurrence triangles + the
+    # knob-from-budget wedge audit that prices the join before running
     "cooccurrence_capped_triangles",
     "cooccurrence_budget_audit",
     # TF-IDF pairs with a BUDGET-DERIVED df ceiling (from the df histogram
-    # under Σdf² ≤ 500k — SCALE.md wave-4)
+    # under Σdf² ≤ 500k — SCALE.md, Guards and bounds)
     "tfidf_cosine_pairs_cut",
     "stream_unattributed_clicks",
     "part_link_prediction_aa",
@@ -195,10 +195,10 @@ HEADLINE = [
     "quality_weighted_draw",
     "udaf_event_median",
     "udtf_token_positions",
-    # round-8: the blocked decontamination scale twin took a driver slot —
-    # bench its row alongside the exact (priced) form
+    # the blocked decontamination scale twin (a driver-tier query), benched
+    # alongside the exact (priced) form
     "embedding_decontaminate_blocked",
-    # round-4: Python DataSource connectors + VARIANT metadata
+    # Python DataSource connectors + VARIANT metadata
     "pyds_jsonl_roundtrip",
     "pyds_stream_replay",
     "events_variant_stats",
@@ -210,17 +210,17 @@ HEADLINE = [
     "sequential_event_patterns",
     "cusum_level_shifts",
     "coverage_exemplar_docs",
-    "coverage_exemplar_stochastic",  # r5: the n·ln(1/eps) production form
+    "coverage_exemplar_stochastic",  # the n·ln(1/eps) production form
     "trend_mann_kendall",
     # copurchase_ktruss is registry-tested but not benched: the iterative
     # peel is 4-6 full triangle passes whose fixture-scale time is
     # round-trip scheduling, not scan volume; its per-round shuffle budget
     # is pinned structurally (tests/test_knn_graph.py) and the oracle row
-    # keeps it correctness-checked every round
+    # keeps it correctness-checked
 ]
 
-# entries with a PERF.md-documented wide band get a third sample — their
-# min-of-2 still spanned >1.5× across passes (see main() for the rationale)
+# rows whose min-of-2 still spanned >1.5× across same-code passes get a
+# third sample (PERF.md, Wide-band rows)
 MIN3 = {
     "tfidf_cosine_pairs_cut", "coverage_exemplar_docs",
     "coverage_exemplar_stochastic", "copurchase_ppr_expansion",
@@ -229,7 +229,7 @@ MIN3 = {
 
 
 def _canary_sample() -> float:
-    """One sample of the tenancy canary (VERDICT r7 item 5): a fixed,
+    """One sample of the tenancy canary (PERF.md, Tenancy canary): a fixed,
     seeded, CPU-bound matmul of constant size (~17 GFLOP through the
     BLAS threadpool). Samples are taken at the sweep start AND
     interleaved every ``_CANARY_EVERY`` queries — a single start-of-run
@@ -237,7 +237,7 @@ def _canary_sample() -> float:
     series measures the tenancy of THIS run's span. BENCH_DETAIL records
     the full series (``canary_samples``) plus the min
     (``canary_matmul_sec``, the top-level scalar the compact stdout line
-    echoes — idle reference ~0.10 s, PERF.md round-8). Never in the
+    echoes — idle reference ~0.10 s on a 32-core box). Never in the
     query map or the headline total."""
     import numpy as np
 
@@ -258,14 +258,14 @@ def _time_builds(spark, builds: dict[str, float]) -> None:
     gate tracks steady-state search (the *_kmeans query numbers run against
     the warm per-process caches these calls populate).
 
-    HIGH-VARIANCE by construction (VERDICT r7 item 6): each build runs
+    HIGH-VARIANCE by construction (PERF.md, Builds): each build runs
     exactly ONCE per process — a second sample would hit the per-process
     model cache and time nothing — so these are single cold samples with
-    no min-of protection, and PERF.md round-7 measured ivfpq_build swinging
-    3.8→20.3 s under co-tenant load. They are therefore recorded in a
-    separate ``builds`` section of BENCH_DETAIL, EXCLUDED from the headline
-    total and from gate ratios; read them against the canary, not against
-    each other across rounds."""
+    no min-of protection, and ivfpq_build measured swinging 3.8→20.3 s
+    under co-tenant load. They are therefore recorded in a separate
+    ``builds`` section of BENCH_DETAIL, EXCLUDED from the headline total
+    and from gate ratios; read them against the canary, not against each
+    other across runs. scripts/bench_builds_cold.py gives cold bands."""
     from vector_db_spark.queries.curation import _inverted_index
     from vector_db_spark.queries.indexing import _als_model, _ivfpq_index, _kmeans_index
     from vector_db_spark.queries.pquant import _opq_model, _pq_model
@@ -342,18 +342,17 @@ def main() -> None:
     # two timed runs per query, min reported: the machine shares CPU with
     # other tenants and a single sample regularly inflates 1.5-3×; min-of-2
     # is the steady-state number the regression gate should track.
-    # Entries with a PERF.md-documented wide band get a third sample —
-    # their min-of-2 still spanned >1.5× across passes (MIN3 above).
+    # The MIN3 rows get a third sample (PERF.md, Wide-band rows).
     # Consumer choice, deliberate: .count() — the SAME consumer the frozen
     # r01/r02 baseline rows were measured with, so the 2x regression gate
     # compares like with like. A bare count lets Catalyst prune unread
     # expression-only work (an unused Window/projection vanishes), so
-    # window/projection-heavy rows under-measure in ABSOLUTE terms — the
-    # scale-curve scripts, whose purpose is detecting super-linear WORK,
-    # use the full-evaluation agg(count, sum(hash(*cols))) consumer
-    # instead (``run`` in scripts/scale_wave12.py, deleted after commit
-    # 53d3f02 — see git history; protocol note in SCALE.md wave-14). Changing bench's consumer would invalidate every
-    # cross-round band in PERF.md; don't, unless the baseline is re-run.
+    # window/projection-heavy rows under-measure in ABSOLUTE terms — a
+    # check whose purpose is detecting super-linear WORK needs a
+    # full-evaluation agg(count, sum(hash(*cols))) consumer
+    # instead (PERF.md, bench.py protocol). Changing bench's consumer would
+    # invalidate every ratio against the baseline; don't, unless the
+    # baseline is re-run.
     run_list = args.names if selective else HEADLINE
     timings: dict[str, float] = {}
     n_timed = 0
@@ -381,25 +380,22 @@ def main() -> None:
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     # The driver captures only a short tail of stdout, so the final line must
     # stay compact (<200 chars): headline scalar only. The full per-query map
-    # goes to stderr and BENCH_DETAIL.json for humans and the judge — and,
-    # since r10 (VERDICT r9 item 3), ALSO to stdout as a second single-line
-    # JSON (`per_query_wall`) printed BEFORE the compact contract line, so a
-    # driver that reads more than the tail can populate its per-query
-    # comparison without touching the existing contract.
+    # goes to stderr and BENCH_DETAIL.json for humans — and ALSO to stdout
+    # as a single-line JSON (`per_query_wall`) printed BEFORE the compact
+    # contract line, so a driver that reads more than the tail can populate
+    # its per-query comparison without touching the existing contract.
     detail = {
         "metric": "headline_queries_total_wall",
-        # protocol 2 = the r8 redefinition: one-shot *_build rows live in
-        # the separate "builds" section and are EXCLUDED from "value"
-        # (pre-r8 rounds folded them in). The explicit version keeps
-        # cross-round tooling from silently comparing the two
-        # definitions under the unchanged metric name.
+        # protocol 2: one-shot *_build rows live in the separate "builds"
+        # section and are EXCLUDED from "value" (protocol 1 folded them
+        # in). The explicit version keeps tooling from silently comparing
+        # the two definitions under the unchanged metric name.
         "protocol": 2,
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        # r8 protocol (VERDICT r7 items 5+6): builds are single cold
-        # samples (high variance, excluded from the total and from gate
-        # ratios); the canary is the constant-work tenancy reference —
+        # builds are single cold samples (high variance, excluded from the
+        # total and from gate ratios); the canary is the constant-work tenancy reference —
         # min as the scalar, the interleaved series for load-over-time
         "builds": builds,
         "canary_matmul_sec": min(canary_samples),
@@ -418,9 +414,8 @@ def main() -> None:
                 json.dump(detail, f, indent=1)
         except OSError as e:
             print(f"# BENCH_DETAIL.json write failed: {e}", file=sys.stderr)
-    # r10 (VERDICT r9 item 3): per-query timings as their own stdout line.
-    # Additions-only — the compact contract line stays LAST so tail-capture
-    # drivers keep parsing exactly what they parsed before.
+    # per-query timings as their own stdout line; the compact contract
+    # line stays LAST so tail-capture drivers parse exactly that line.
     print(
         json.dumps(
             {

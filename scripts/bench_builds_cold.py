@@ -1,10 +1,9 @@
-"""Cold-sample protocol for the six one-shot ``*_build`` bench rows
-(VERDICT r7 item 6): each build is timed in a FRESH subprocess (fresh
-JVM, fresh per-process model cache), min-of-N across subprocesses, so
-the number is a true cold build — bench.py's in-process samples are
-single-shot by construction (a second call hits the memoized cache and
-times nothing) and PERF.md round-7 measured them swinging 3.8→20.3 s
-under co-tenant load.
+"""Cold-sample protocol for the one-shot ``*_build`` bench rows (PERF.md,
+Builds): each build is timed in a FRESH subprocess (fresh JVM, fresh
+per-process model cache), min-of-N across subprocesses, so the number is
+a true cold build — bench.py's in-process samples are single-shot by
+construction (a second call hits the memoized cache and times nothing)
+and one of them measured swinging 3.8→20.3 s under co-tenant load.
 
 Wall cost: ~(JVM startup + build) × 6 builds × N samples; startup is
 excluded from the timed span (the subprocess times the build only and

@@ -2,9 +2,8 @@
 
     python scripts/dump_plans.py <out_dir> <suffix> name1 [name2 ...]
 
-Writes <out_dir>/<name>_<suffix>.txt per query — the before/after plan
-artifacts the optimization rounds commit under plans/rNN/ (the judge
-checks structural claims against these files)."""
+Writes <out_dir>/<name>_<suffix>.txt per query: run it before and after a
+plan change and diff the two files to check a structural claim."""
 
 from __future__ import annotations
 

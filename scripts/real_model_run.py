@@ -1,4 +1,4 @@
-"""Opt-in REAL-model run (VERDICT r6 item 7) — retire the residual risk of
+"""Opt-in REAL-model run — retire the residual risk of
 the two import-gated seams that CI only exercises through deterministic
 fakes:
 
@@ -14,7 +14,7 @@ environment with the model stack:
     python scripts/real_model_run.py
 
 It prints one JSON line with dims/norms/wall per seam — paste (or append)
-into PERF.md's "real-model run" section. In an environment missing the
+into PERF.md's "Real-model run" section. In an environment missing the
 stack it exits 2 with the seams' own NotImplementedError messages, which is
 the honest outcome: the seams refuse to fake.
 """

@@ -1,4 +1,4 @@
-"""Scale-curve validation (VERDICT r4 item 6).
+"""Scale-curve validation.
 
 Synthesizes a ~10x blow-up of the sf0.1 `documents` / `embeddings` /
 `events` tables (the driver fixtures cap at sf0.1) and runs the heaviest
@@ -9,7 +9,7 @@ cannot:
    curve means a join whose candidate volume is not bounded by design);
 2. no plan flips shape between scales (the warn-grade audit shapes from
    tests/test_plan_audit.py must be identical at 1x and 10x — the class
-   of bug the round-4 sparse-cosine AQE single-partition coalesce was).
+   of bug an AQE single-partition coalesce of the sparse-cosine join was).
 
 Blow-up construction — "10 disjoint shards", not "10 identical copies",
 so candidate structure replicates instead of exploding quadratically:

@@ -3,9 +3,9 @@
 The CI gate (tests/test_queries_oracle.py) runs the full registry at
 sf0.01 — the driver's correctness scale. This sweep repeats it at
 sf0.001, where tiny-corpus edges live: empty candidate sets, invariant
-bars that stop being satisfiable (round-7 find: copurchase_ppr_expansion's
-concentration bar exceeded total mass at 40 nodes), degenerate group
-counts. Run once per round after registry changes:
+bars that stop being satisfiable (copurchase_ppr_expansion's
+concentration bar once exceeded total mass at 40 nodes), degenerate group
+counts. Run after registry changes:
 
     python scripts/sweep_sf0001.py
 

@@ -181,39 +181,3 @@ def test_mega_cluster_is_sharded_within_memory_bound(spark):
     assert a == b
 
 
-def test_sharded_search_recall_on_mega_cluster(spark):
-    """Fan-out search over the sharded export must reach the same recall
-    bar the unsharded search is held to (recall@5 >= 0.7 on >= 80% of
-    queries vs brute force)."""
-    import pandas as pd
-
-    from vector_db_spark.operators.hnsw_export import hnsw_sharded_search
-
-    rng = np.random.default_rng(11)
-    n = 300
-    pdf = pd.DataFrame(
-        {
-            "cluster_id": np.zeros(n, dtype=np.int64),
-            "vec_id": np.arange(n, dtype=np.int64),
-            "embedding": [rng.normal(size=8).tolist() for _ in range(n)],
-        }
-    )
-    emb = spark.createDataFrame(pdf)
-    g = export_partition_hnsw(emb, m=6, ef_construction=40, max_group=80)
-    rows = g.collect()
-    assert len({r.shard for r in rows}) == 4  # genuinely sharded
-    vectors = {
-        int(r.vec_id): np.array(r.embedding, dtype=np.float64)
-        for r in emb.collect()
-    }
-    ids = sorted(vectors)
-    X = np.array([vectors[i] for i in ids])
-    hits = 0
-    for q in ids[:15]:
-        d = np.sqrt(((X - vectors[q]) ** 2).sum(axis=1))
-        order = np.lexsort((ids, np.round(d, 6)))
-        truth = {ids[i] for i in order[:5]}
-        got = set(hnsw_sharded_search(rows, vectors, vectors[q], 5, ef=40))
-        if len(truth & got) / 5 >= 0.7:
-            hits += 1
-    assert hits >= 0.8 * 15, hits

@@ -445,82 +445,6 @@ def test_cooccurrence_uncapped_matches_plain_pairs(spark):
     assert got == {(5, 6), (5, 7), (6, 7)}
 
 
-def test_k_core_matches_peeling_reference(spark):
-    import random
-    from collections import defaultdict
-
-    from vector_db_spark.operators.knn_graph import k_core
-
-    def ref_k_core(edges, k):
-        adj = defaultdict(set)
-        for a, b in edges:
-            if a != b:
-                adj[a].add(b)
-                adj[b].add(a)
-        changed = True
-        while changed:
-            changed = False
-            for v in list(adj):
-                if len(adj[v]) < k:
-                    for u in adj[v]:
-                        adj[u].discard(v)
-                    del adj[v]
-                    changed = True
-        return set(adj)
-
-    rng = random.Random(17)
-    edges = list({(rng.randrange(40), rng.randrange(40)) for _ in range(140)})
-    df = spark.createDataFrame(edges, "src long, dst long")
-    for k in (2, 3, 4):
-        got = {r["id"] for r in k_core(df, k).collect()}
-        assert got == ref_k_core(edges, k), k
-
-
-def test_k_core_known_graph(spark):
-    from vector_db_spark.operators.knn_graph import k_core
-
-    # K4 plus a pendant chain: 3-core = exactly the K4
-    edges = [(a, b) for a in range(4) for b in range(4) if a < b]
-    edges += [(3, 10), (10, 11)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    assert {r["id"] for r in k_core(df, 3).collect()} == {0, 1, 2, 3}
-    assert {r["id"] for r in k_core(df, 1).collect()} == {0, 1, 2, 3, 10, 11}
-
-
-def test_label_propagation_matches_reference_and_finds_cliques(spark):
-    from collections import Counter, defaultdict
-
-    from vector_db_spark.operators.knn_graph import label_propagation
-
-    def ref_lpa(edges, n_iter):
-        adj = defaultdict(set)
-        for a, b in edges:
-            if a != b:
-                adj[a].add(b)
-                adj[b].add(a)
-        labels = {v: v for v in adj}
-        for _ in range(n_iter):
-            new = {}
-            for v in adj:
-                votes = Counter(labels[u] for u in adj[v])
-                top = max(votes.items(), key=lambda kv: (kv[1], -kv[0]))
-                new[v] = top[0]
-            labels = new
-        return labels
-
-    # two 5-cliques joined by one bridge edge
-    c1 = [(a, b) for a in range(5) for b in range(5) if a < b]
-    c2 = [(a + 10, b + 10) for a, b in c1]
-    edges = c1 + c2 + [(4, 10)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["id"]: r["label"] for r in label_propagation(df, n_iter=5).collect()}
-    assert got == ref_lpa(edges, 5)
-    # the two cliques resolve to two communities
-    assert len({got[v] for v in range(5)}) == 1
-    assert len({got[v + 10] for v in range(5)}) == 1
-    assert got[0] != got[10]
-
-
 def test_link_prediction_known_graph(spark):
     from vector_db_spark.operators.knn_graph import link_prediction_jaccard
 
@@ -586,45 +510,6 @@ def test_link_prediction_large_routes_match_default(spark, force_large, scorer):
         with force_large(*sites):
             got = fn(df, top_n=10, sources=sources)
         assert sorted(map(tuple, got.collect())) == want and want
-
-
-def test_core_numbers_match_reference(spark):
-    import random
-    from collections import defaultdict
-
-    from vector_db_spark.operators.knn_graph import core_numbers
-
-    def ref_coreness(edges):
-        adj = defaultdict(set)
-        for a, b in edges:
-            if a != b:
-                adj[a].add(b)
-                adj[b].add(a)
-        core = {}
-        deg = {v: len(ns) for v, ns in adj.items()}
-        remaining = dict(adj)
-        k = 0
-        while remaining:
-            k_nodes = [v for v in remaining if deg[v] <= k]
-            if not k_nodes:
-                k += 1
-                continue
-            for v in k_nodes:
-                core[v] = k
-                for u in remaining[v]:
-                    if u in remaining:
-                        deg[u] -= 1
-                        remaining[u].discard(v)
-                del remaining[v]
-                deg.pop(v, None)
-        return core
-
-    rng = random.Random(23)
-    edges = list({(rng.randrange(30), rng.randrange(30)) for _ in range(120)})
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["id"]: r["core"] for r in core_numbers(df).collect()}
-    assert got == ref_coreness(edges)
 
 
 # --- deterministic random walks ----------------------------------------------

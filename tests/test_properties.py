@@ -358,41 +358,6 @@ def test_heavy_hitters_exact_on_random_streams(items, frac):
     assert got == want
 
 
-# --- sketch algebra laws (KMV / CMS) ----------------------------------------
-
-
-def test_kmv_union_is_associative_and_commutative(spark):
-    from vector_db_spark.operators.sketches import kmv_merge, kmv_sketch
-
-    segs = [
-        spark.createDataFrame([(i,) for i in range(lo, hi)], "v long")
-        for lo, hi in [(0, 700), (400, 1100), (900, 1500)]
-    ]
-    k = 64
-    sks = [kmv_sketch(s, "v", k=k) for s in segs]
-
-    def hashes(sk):
-        return sorted(r.kmv_hash for r in sk.collect())
-
-    left = kmv_merge(kmv_merge(sks[0].union(sks[1]), k=k).union(sks[2]), k=k)
-    right = kmv_merge(sks[0].union(kmv_merge(sks[1].union(sks[2]), k=k)), k=k)
-    flat = kmv_merge(sks[0].union(sks[1]).union(sks[2]), k=k)
-    assert hashes(left) == hashes(right) == hashes(flat)
-
-
-def test_cms_merge_is_order_invariant(spark):
-    from vector_db_spark.operators.sketches import cms_merge, cms_sketch
-
-    segs = [
-        spark.createDataFrame([(f"w{i % m}",) for i in range(n)], "t string")
-        for m, n in [(30, 300), (50, 500), (20, 200)]
-    ]
-    sks = [cms_sketch(s, "t", depth=4, width=64) for s in segs]
-    a = cms_merge(sks[0].union(sks[1]).union(sks[2]))
-    b = cms_merge(sks[2].union(sks[0]).union(sks[1]))
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 @settings(**SETTINGS)
 @given(
     probes=st.lists(

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vector_db_spark.operators.knn_graph import edge_support, k_truss
+from vector_db_spark.operators.knn_graph import _edge_support, edge_support, k_truss
 from vector_db_spark.parallel import overlap_map
 
 
@@ -65,13 +65,13 @@ def test_edge_support_string_ids_fall_back_to_wedge(spark):
 def test_edge_support_assume_canonical_matches_default(spark):
     g = _triangle_graph(spark)
     canon = (
-        g.select(F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
+        g.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
     a = _support_map(edge_support(g))
-    b = _support_map(edge_support(canon, assume_canonical=True, n_edges=canon.count()))
+    b = _support_map(_edge_support(canon, canon.count()))
     assert a == b
 
 

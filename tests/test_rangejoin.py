@@ -5,10 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vector_db_spark.operators.rangejoin import (
-    interval_overlap_join,
-    point_in_interval_join,
-)
+from vector_db_spark.operators.rangejoin import point_in_interval_join
 
 
 def _points(spark):
@@ -58,28 +55,6 @@ def test_point_in_interval_with_keys(spark):
     assert sorted((r.pid, r.iid) for r in got.collect()) == sorted(
         (r.pid, r.iid) for r in brute.collect()
     )
-
-
-def test_interval_overlap_matches_brute(spark):
-    left = spark.createDataFrame(
-        [(1, 0, 500), (2, 120, 130), (3, 400, 401), (4, 600, 700)],
-        "lid long, ls long, le long",
-    )
-    right = spark.createDataFrame(
-        [(10, 90, 450), (20, 499, 650), (30, 700, 800)],
-        "rid long, rs long, re long",
-    )
-    got = interval_overlap_join(
-        left, right, left_start="ls", left_end="le",
-        right_start="rs", right_end="re", bucket=100,
-    )
-    brute = left.crossJoin(right).filter(
-        (F.col("ls") < F.col("re")) & (F.col("rs") < F.col("le"))
-    )
-    got_pairs = [(r.lid, r.rid) for r in got.collect()]
-    assert sorted(got_pairs) == sorted((r.lid, r.rid) for r in brute.collect())
-    # pair (1,10) shares 4 buckets — still emitted once
-    assert len(got_pairs) == len(set(got_pairs))
 
 
 def test_timestamp_columns(spark):

@@ -144,7 +144,7 @@ def test_lsh_bucket_scale_knobs(spark, sf_smoke):
 
 
 def test_derive_lsh_geometry_laws():
-    """The corpus-derived geometry rule (SCALE.md round-5): h tracks
+    """The corpus-derived geometry rule (SCALE.md, Guards and bounds): h tracks
     log2(n/target) so expected bucket size is scale-free; L grows with h
     so the analytic near-dup recall 1-(1-p^h)^L holds its floor; fixture
     scale collapses to the oracle-pinned (4, 4)."""

@@ -3,10 +3,8 @@ lifecycle and the quantile digest's rank-error guarantee.
 
 The digest's contract is *rank* accuracy — for any q, the true rank of
 the returned estimate lies within ±2/max_centroids of q (one compression
-level at build, one at merge). Tests pin that bound on skewed data, under
-repartitioning, and across a persisted day-segment rollup — the exact
-lifecycle the 100 TB posture sells (summaries persisted once, history
-never rescanned)."""
+level at build, one at merge). Tests pin that bound on skewed data and
+under repartitioning."""
 
 from __future__ import annotations
 
@@ -19,7 +17,6 @@ from vector_db_spark.operators.sketches import (
     digest_quantiles,
     hll_rollup,
     hll_segment_sketches,
-    merge_digests,
     quantile_digest,
 )
 
@@ -103,19 +100,6 @@ def test_digest_exact_for_small_groups(spark):
     assert row.est == 49.0
 
 
-def test_merge_digests_day_rollup(spark, tmp_path, skewed):
-    df, vals, _ = skewed
-    daily = quantile_digest(
-        df.withColumn("day", F.col("g")), "x", ["day"], max_centroids=256
-    )
-    path = str(tmp_path / "daily_digests")
-    daily.write.parquet(path)  # persisted summary table — the whole point
-    reopened = spark.read.parquet(path)
-    total = merge_digests(reopened.drop("day"), [], max_centroids=256)
-    (row,) = digest_quantiles(total, [0.9]).collect()
-    assert _rank_err(vals, row.est, 0.9) <= 0.03  # 3 levels
-
-
 # --- HLL lifecycle -----------------------------------------------------------
 
 
@@ -167,40 +151,6 @@ def test_hll_merge_is_batch_boundary_stable(spark):
     assert abs(b.distinct_est - 777) <= 0.03 * 777
 
 
-def test_digest_maintenance_stream_rollup(spark, tmp_path, sf_correctness):
-    """Streamed per-batch digests, merged, answer within the 3-level
-    rank-error bound of the exact batch quantile."""
-    import os
-
-    from vector_db_spark.io import load_table
-    from vector_db_spark.streaming.ingest import digest_maintenance_stream
-
-    ev = load_table(spark, sf_correctness, "events")
-    src = str(tmp_path / "src")
-    ev.repartition(4).write.parquet(src)
-    digests = str(tmp_path / "digests")
-    q = digest_maintenance_stream(
-        spark,
-        src,
-        digests,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_centroids=256,
-    )
-    q.awaitTermination()
-
-    merged = merge_digests(spark.read.parquet(digests), ["event_type"], max_centroids=256)
-    out = digest_quantiles(merged, [0.5], ["event_type"]).collect()
-    assert len(out) > 0
-    vals = {
-        r.event_type: [v.value for v in ev.filter(F.col("event_type") == r.event_type).select("value").collect()]
-        for r in out
-    }
-    import numpy as np
-
-    for r in out:
-        assert _rank_err(np.array(vals[r.event_type]), r.est, 0.5) <= 0.03, r.event_type
-
-
 # --- KMV (theta) sketches ----------------------------------------------------
 
 
@@ -208,15 +158,14 @@ def _kmv_imports():
     from vector_db_spark.operators.sketches import (
         kmv_distinct_estimate,
         kmv_intersect_estimate,
-        kmv_merge,
         kmv_sketch,
     )
 
-    return kmv_sketch, kmv_merge, kmv_distinct_estimate, kmv_intersect_estimate
+    return kmv_sketch, kmv_distinct_estimate, kmv_intersect_estimate
 
 
 def test_kmv_sketch_is_layout_invariant(spark):
-    kmv_sketch, _, _, _ = _kmv_imports()
+    kmv_sketch, _, _ = _kmv_imports()
     df = spark.createDataFrame([(i % 500, "g") for i in range(2000)], "v long, g string")
     a = sorted(r.kmv_hash for r in kmv_sketch(df.coalesce(1), "v", ["g"], k=64).collect())
     b = sorted(r.kmv_hash for r in kmv_sketch(df.repartition(16), "v", ["g"], k=64).collect())
@@ -224,31 +173,15 @@ def test_kmv_sketch_is_layout_invariant(spark):
 
 
 def test_kmv_sparse_mode_is_exact(spark):
-    kmv_sketch, _, kmv_distinct_estimate, _ = _kmv_imports()
+    kmv_sketch, kmv_distinct_estimate, _ = _kmv_imports()
     df = spark.createDataFrame([(i % 37, "g") for i in range(300)], "v long, g string")
     sk = kmv_sketch(df, "v", ["g"], k=256)
     (r,) = kmv_distinct_estimate(sk, ["g"], k=256).collect()
     assert r.n_hashes == 37 and r.distinct_est == 37.0
 
 
-def test_kmv_merge_equals_sketch_of_union(spark):
-    kmv_sketch, kmv_merge, _, _ = _kmv_imports()
-    seg_a = spark.createDataFrame([(i, "g") for i in range(0, 800)], "v long, g string")
-    seg_b = spark.createDataFrame([(i, "g") for i in range(400, 1200)], "v long, g string")
-    k = 64
-    merged = kmv_merge(
-        kmv_sketch(seg_a, "v", ["g"], k=k).union(kmv_sketch(seg_b, "v", ["g"], k=k)),
-        ["g"],
-        k=k,
-    )
-    direct = kmv_sketch(seg_a.union(seg_b), "v", ["g"], k=k)
-    assert sorted(r.kmv_hash for r in merged.collect()) == sorted(
-        r.kmv_hash for r in direct.collect()
-    )
-
-
 def test_kmv_estimate_within_bound_dense(spark):
-    kmv_sketch, _, kmv_distinct_estimate, _ = _kmv_imports()
+    kmv_sketch, kmv_distinct_estimate, _ = _kmv_imports()
     n = 5000
     df = spark.createDataFrame([(i, "g") for i in range(n)], "v long, g string")
     sk = kmv_sketch(df, "v", ["g"], k=128)
@@ -257,7 +190,7 @@ def test_kmv_estimate_within_bound_dense(spark):
 
 
 def test_kmv_intersection_disjoint_and_identical(spark):
-    kmv_sketch, _, kmv_distinct_estimate, kmv_intersect_estimate = _kmv_imports()
+    kmv_sketch, kmv_distinct_estimate, kmv_intersect_estimate = _kmv_imports()
     a = spark.createDataFrame([(i,) for i in range(0, 3000)], "v long")
     b = spark.createDataFrame([(i,) for i in range(3000, 6000)], "v long")
     k = 128
@@ -271,7 +204,7 @@ def test_kmv_intersection_disjoint_and_identical(spark):
 
 
 def test_kmv_intersection_half_overlap_bound(spark):
-    kmv_sketch, _, _, kmv_intersect_estimate = _kmv_imports()
+    kmv_sketch, _, kmv_intersect_estimate = _kmv_imports()
     a = spark.createDataFrame([(i,) for i in range(0, 4000)], "v long")
     b = spark.createDataFrame([(i,) for i in range(2000, 6000)], "v long")
     (r,) = kmv_intersect_estimate(kmv_sketch(a, "v", k=256), kmv_sketch(b, "v", k=256), k=256).collect()
@@ -282,13 +215,13 @@ def test_kmv_intersection_half_overlap_bound(spark):
 
 
 def _cms_imports():
-    from vector_db_spark.operators.sketches import cms_estimate, cms_merge, cms_sketch
+    from vector_db_spark.operators.sketches import cms_estimate, cms_sketch
 
-    return cms_sketch, cms_merge, cms_estimate
+    return cms_sketch, cms_estimate
 
 
 def test_cms_never_underestimates_and_is_exact_when_sparse(spark):
-    cms_sketch, _, cms_estimate = _cms_imports()
+    cms_sketch, cms_estimate = _cms_imports()
     rows = [("a",)] * 50 + [("b",)] * 20 + [("c",)] * 1
     df = spark.createDataFrame(rows, "t string")
     sk = cms_sketch(df, "t", depth=4, width=256)
@@ -298,21 +231,8 @@ def test_cms_never_underestimates_and_is_exact_when_sparse(spark):
     assert got == {"a": 50, "b": 20, "c": 1, "absent": 0}
 
 
-def test_cms_merge_equals_sketch_of_union(spark):
-    cms_sketch, cms_merge, _ = _cms_imports()
-    seg1 = spark.createDataFrame([(f"w{i % 40}",) for i in range(500)], "t string")
-    seg2 = spark.createDataFrame([(f"w{i % 70}",) for i in range(700)], "t string")
-    merged = cms_merge(
-        cms_sketch(seg1, "t", depth=4, width=128).union(
-            cms_sketch(seg2, "t", depth=4, width=128)
-        )
-    )
-    direct = cms_sketch(seg1.union(seg2), "t", depth=4, width=128)
-    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, direct.collect()))
-
-
 def test_cms_overestimate_bounded_under_collisions(spark):
-    cms_sketch, _, cms_estimate = _cms_imports()
+    cms_sketch, cms_estimate = _cms_imports()
     # 2000 distinct items into width=64: collisions guaranteed
     n = 4000
     df = spark.createDataFrame([(f"w{i % 2000}",) for i in range(n)], "t string")
@@ -324,7 +244,7 @@ def test_cms_overestimate_bounded_under_collisions(spark):
 
 
 def test_cms_grouped_segments(spark):
-    cms_sketch, _, cms_estimate = _cms_imports()
+    cms_sketch, cms_estimate = _cms_imports()
     df = spark.createDataFrame(
         [("d1", "x")] * 5 + [("d2", "x")] * 9, "day string, t string"
     )
@@ -337,45 +257,6 @@ def test_cms_grouped_segments(spark):
         for day in ("d1", "d2")
     }
     assert per_day == {"d1": 5, "d2": 9}
-
-
-def test_cms_maintenance_stream_exactly_once(spark, tmp_path, sf_smoke):
-    """Replay corrupts ADDING counters unless the sink is idempotent: the
-    lost-checkpoint worst case must leave the merged CMS identical to the
-    batch sketch of the whole stream."""
-    import time
-
-    from vector_db_spark.io import load_table
-    from vector_db_spark.operators.sketches import cms_merge, cms_sketch
-    from vector_db_spark.operators.versioned import VersionedTable
-    from vector_db_spark.streaming.ingest import cms_maintenance_stream
-
-    ev = load_table(spark, sf_smoke, "events")
-    src = str(tmp_path / "src")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(src)
-    time.sleep(1.1)
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    def run(ck):
-        q = cms_maintenance_stream(
-            spark, src, str(tmp_path / "tab"),
-            checkpoint_dir=str(tmp_path / ck), depth=4, width=128,
-        )
-        q.awaitTermination()
-
-    run("c1")
-    run("c1")       # same checkpoint: no new epochs
-    run("c-lost")   # lost checkpoint: full replay, must be absorbed
-
-    vt = VersionedTable(spark, str(tmp_path / "tab"))
-    merged = cms_merge(vt.read().drop("day"))
-    direct = cms_sketch(
-        ev.withColumn("day", F.to_date("ts")), "event_type", depth=4, width=128
-    )
-    direct_merged = cms_merge(direct.drop("day"))
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, direct_merged.collect())
-    )
 
 
 def test_cms_join_size_exact_when_sparse(spark):

@@ -257,10 +257,6 @@ def test_zone_map_pruning_skips_disjoint_files(spark, vt):
     assert len(vt.pruned_files("id", 10, 20)) == 1
     assert len(vt.pruned_files("id", 500, 600)) == 0
     assert len(vt.pruned_files("id", 50, 1050)) == 2
-    got = vt.read_pruned("id", 10, 20).filter((F.col("id") >= 10) & (F.col("id") <= 20))
-    assert got.count() == 11
-    # disjoint range: pruned read is empty without touching data
-    assert vt.read_pruned("id", 500, 600).count() == 0
 
 
 def test_zone_maps_survive_merge_and_carry_over(spark, vt):
@@ -280,7 +276,6 @@ def test_files_without_stats_are_conservatively_read(spark, vt):
     vt.append(_df(spark, 1000, 1100).coalesce(1))
     # stat-less file must always be kept
     assert len(vt.pruned_files("id", 5000, 6000)) == 1
-    assert vt.read_pruned("id", 0, 10).count() >= 100
 
 
 def test_compact_preserves_rows_and_history(spark, vt):
@@ -575,21 +570,6 @@ def test_zorder_compact_enables_multidim_pruning(spark, tmp_path):
     assert vt.read().count() == 20000
 
 
-def test_timestamp_as_of(spark, vt):
-    import time
-
-    v0 = vt.append(_df(spark, 0, 10))
-    t_between = time.time()
-    time.sleep(0.02)
-    v1 = vt.append(_df(spark, 10, 30))
-    assert vt.version_at(t_between) == v0
-    assert vt.version_at(time.time()) == v1
-    assert vt.read_asof(t_between).count() == 10
-    assert vt.read_asof(time.time()).count() == 30
-    with pytest.raises(ValueError, match="no version"):
-        vt.version_at(0.0)
-
-
 def test_merge_probe_is_zone_pruned(spark, vt):
     """With zone maps on the merge key, the matched-key probe must open
     only files whose key zone overlaps the source batch — a small merge
@@ -613,67 +593,6 @@ def test_merge_probe_is_zone_pruned(spark, vt):
     assert got[1005] == "UPD" and got[1500] == "NEW"
     assert got[0] == "r0" and got[2000] == "r2000"
     assert len(got) == 301
-
-
-def test_appended_rows_change_feed(spark, vt):
-    vt.append(_df(spark, 0, 10))                 # v0
-    vt.append(_df(spark, 10, 30))                # v1
-    vt.append(_df(spark, 30, 35))                # v2
-    feed = vt.appended_rows(0)                   # (v0, v2]
-    got = {(r.id, r._commit_version) for r in feed.collect()}
-    assert {i for i, _ in got} == set(range(10, 35))
-    assert {v for _, v in got} == {1, 2}
-    assert vt.appended_rows(1).count() == 5
-    assert vt.appended_rows(2).count() == 0      # empty feed, schema intact
-    assert "_commit_version" in vt.appended_rows(2).columns
-
-
-def test_appended_rows_refuses_rewrites(spark, vt):
-    vt.append(_df(spark, 0, 10))
-    vt.delete_where(F.col("id") == 3)
-    vt.append(_df(spark, 10, 20))
-    with pytest.raises(ValueError, match="append-only"):
-        vt.appended_rows(0)
-    # a range past the rewrite works
-    assert vt.appended_rows(1).count() == 10
-
-
-def test_appended_rows_spans_schema_evolution(spark, vt):
-    vt.append(_df(spark, 0, 5))
-    vt.append(spark.createDataFrame([(50, "n", 0.9)], "id long, s string, score double"))
-    feed = vt.appended_rows(0)
-    assert "score" in feed.columns and feed.count() == 1
-
-
-def test_change_feed_drives_incremental_index_refresh(spark, vt, sf_smoke):
-    """Composition: the append-only change feed is exactly what an
-    incremental IVF refresh consumes — assigning ONLY the fed rows gives
-    the same clusters a full re-assignment would give them."""
-    from vector_db_spark.io import load_table
-    from vector_db_spark.operators.ivf import assign_to_centroids
-
-    emb = load_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
-    a = emb.filter(F.col("vec_id") < 300)
-    b = emb.filter(F.col("vec_id").between(300, 399))
-    vt.append(a)
-    v_indexed = vt.current_version()
-    vt.append(b)
-
-    cents = [
-        (0, [0.0] * 32),
-        (1, [1.0] * 32),
-        (2, [-1.0] * 32),
-    ]
-    feed = vt.appended_rows(v_indexed).select("vec_id", "embedding")
-    inc = assign_to_centroids(feed, cents, id_col="vec_id", vec_col="embedding")
-    full = assign_to_centroids(
-        vt.read().select("vec_id", "embedding"), cents,
-        id_col="vec_id", vec_col="embedding",
-    ).filter(F.col("vec_id") >= 300)
-    assert feed.count() == 100
-    assert sorted(map(tuple, inc.select("vec_id", "cluster_id").collect())) == sorted(
-        map(tuple, full.select("vec_id", "cluster_id").collect())
-    )
 
 
 def test_concurrent_writers_all_commits_land(spark, vt):
@@ -761,10 +680,6 @@ def test_date_zone_maps_survive_process_restart(spark, tmp_path):
     fresh = VersionedTable(spark, str(tmp_path / "dz"))  # cold cache
     pruned = fresh.pruned_files("d", dt.date(2024, 1, 1), dt.date(2024, 1, 2))
     assert 0 < len(pruned) < len(fresh._snapshot(fresh.current_version())["files"])
-    rows = fresh.read_pruned("d", dt.date(2024, 1, 1), dt.date(2024, 1, 2)).filter(
-        F.col("d").between("2024-01-01", "2024-01-02")
-    )
-    assert rows.count() == 2
 
 
 def test_merge_into_emptied_snapshot_appends(spark, vt):

@@ -131,7 +131,7 @@ class VectorDBService:
 
     # -- index build (V10) -----------------------------------------------------
 
-    def build_index(self, k: int = 10, max_iter: int = 20, seed: int = 42) -> None:
+    def build_index(self, k: int = 10, seed: int = 42) -> None:
         IVFIndex.build(
             self.spark,
             self.nodes.df().select("id", "embedding"),
@@ -139,7 +139,6 @@ class VectorDBService:
             self.index_path,
             id_col="id",
             vec_col="embedding",
-            max_iter=max_iter,
             seed=seed,
         )
 

@@ -33,8 +33,9 @@ def tracked_cache(df: DataFrame, key: str, storage_level=None) -> DataFrame:
     spills to local disk rather than dropping blocks): pass
     ``StorageLevel.DISK_ONLY`` for a
     materialization that must never compete with downstream execution
-    memory (e.g. an edge set that gates a wedge join — the wave-11 OOM was
-    memory-resident blocks fighting the join's execution pool; disk-only
+    memory (e.g. an edge set that gates a wedge join — at the ×100
+    co-occurrence corpus memory-resident blocks fighting the join's
+    execution pool OOMed; disk-only
     blocks cost a local read instead, usually served by the OS page
     cache)."""
     prev = _TRACKED.pop(key, None)

@@ -35,9 +35,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Plain ``spark.read.parquet`` so Catalyst gets
     full pushdown/pruning; no schema inference cost (Parquet is self-described).
 
-    ``events.ts`` has been materialized by the driver as TIMESTAMP(NANOS)
-    in some rounds (which Spark's reader rejects → read nanos as long and
-    truncate to micros) and as TIMESTAMP_NTZ in others. Both are normalized
+    Fixture writers materialize ``events.ts`` as TIMESTAMP(NANOS) (which
+    Spark's reader rejects → read nanos as long and truncate to micros) or
+    as TIMESTAMP_NTZ. Both are normalized
     to plain TIMESTAMP here: the engine pins the session timezone to UTC
     (session.py), so the NTZ→LTZ cast is value-identical to how every
     naive-timestamp consumer (DuckDB, pandas) reads the same file, and
@@ -99,10 +99,10 @@ def write_clustered(
     """Partitioned write with the key shuffle IN FRONT: a bare
     ``write.partitionBy(key)`` makes every writer task emit a file into
     every key directory — tasks × k part files, invisible at k=10 and
-    measured fatal at derived k (SCALE.md wave-6: ~57 k files at k=1789,
-    a 22.9 s cold search spent LISTING them). One hash repartition on the
-    key routes each key's rows to exactly one task, so file count is
-    O(k) at any corpus size and writer parallelism is
+    measured fatal at derived k (~57 k files at k=1789, a 22.9 s cold
+    search spent LISTING them; SCALE.md, Guards and bounds). One hash
+    repartition on the key routes each key's rows to exactly one task, so
+    file count is O(k) at any corpus size and writer parallelism is
     min(num_partitions, distinct keys)."""
     n = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
@@ -110,7 +110,7 @@ def write_clustered(
     df.repartition(n, key).write.mode(mode).partitionBy(key).parquet(path)
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Spread a narrow input across the cluster before compute-heavy
     stages (hashing, distance math, encoding).
 
@@ -119,7 +119,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     are already wide, so this only ever scales UP (round-robin, one cheap
     shuffle of the narrow input) and is a no-op on well-partitioned data.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -187,7 +187,7 @@ def decontaminate_ngrams(
     so it is deduplicated and **broadcast**, and the training shingle
     stream is probed map-side — no corpus-sized shuffle at all. That
     smallness is size-routed (``vector_db_spark.route``; a suite that
-    grows with the corpus is the wave-14c trap): past
+    grows with the corpus would broadcast a corpus-sized set): past
     ``_MAX_BROADCAST_SHINGLES`` the join runs un-hinted. The test
     shingles are CACHED first, so the probe materializes the
     explode+distinct once and the join reuses it. Returns every

@@ -26,7 +26,7 @@ Layout at ``<path>/``:
   This is the corpus-sized artifact (≈ n× the token stream); the probe
   cuts it to candidate docs with a semi-join before any aggregation.
 
-**Bucketed layout** (r9): every store is written hash-clustered into
+**Bucketed layout**: every store is written hash-clustered into
 ``n_buckets`` directory partitions (``__bucket = pmod(xxhash64(key),
 n_buckets)`` + ``partitionBy``), keyed by what the probe joins on —
 shingles by the id column (the candidate-doc semi-join key), bands by
@@ -43,8 +43,8 @@ filter works in any regime (a catalog bucket spec prunes only via
 bucket-join planning). Correctness is layout-independent: a matching
 row's join key hashes to a probed bucket by construction.
 
-Pruning economics (wave-16 measured the naive form REGRESSING before
-these two rules existed): with K probe keys over B buckets the
+Pruning economics (measured: without the rules below, naive pruning
+REGRESSES): with K probe keys over B buckets the
 expected hit fraction is 1 − e^(−K/B), so membership pruning only pays
 in the **absolute-small-batch regime** K ≲ B — which is exactly the
 index's motivating shape (hourly micro-batches against a huge corpus).
@@ -127,7 +127,8 @@ class DedupIndex:
         self.n_hashes: int = p["n_hashes"]
         self.n_bands: int = p["n_bands"]
         self.prefix_tokens: int | None = p["prefix_tokens"]
-        # absent in pre-r9 indexes -> unbucketed layout, probes full-scan
+        # absent in indexes written before bucketing -> unbucketed layout,
+        # probes full-scan
         self.n_buckets: int | None = p.get("n_buckets")
         # absent -> layout v1 (no __txn partition level): readable, but
         # append-frozen (see module docstring)

@@ -94,7 +94,7 @@ def _search_layer(
         if best and d > -best[0][0] and len(best) >= ef:
             break
         # one vectorized distance evaluation for ALL unvisited neighbors of
-        # the popped node (r9: the per-neighbor numpy call dominated the
+        # the popped node (a per-neighbor numpy call would dominate the
         # build's Python time). Each row of the batch is the same
         # contiguous float64 reduction the scalar form computed, so the
         # distances — and therefore the graph — are bit-identical; pushes
@@ -252,7 +252,7 @@ def shard_component_stats(
     level-0 connected component per (cluster, shard) graph, plus the
     shard's node count.
 
-    r9 optimization: every (cluster, shard) graph is INDEPENDENT and
+    Every (cluster, shard) graph is INDEPENDENT and
     bounded at ``max_group`` (``HNSW_MAX_GROUP`` = 8192) nodes by the exporter's
     mega-cluster guard, so connectivity is computed by a local union-find
     inside ONE Arrow task per shard — one shuffle total — instead of
@@ -307,35 +307,6 @@ def shard_component_stats(
         .groupBy(partition_col, "shard")
         .applyInPandas(stats, schema)
     )
-
-
-def hnsw_sharded_search(
-    graph_rows: list,
-    vectors: dict[int, np.ndarray],
-    query: np.ndarray,
-    k: int,
-    *,
-    ef: int = 50,
-) -> list[int]:
-    """Serving-side fan-out over a SHARDED cluster export: run
-    :func:`hnsw_graph_search` independently on each shard's graph and
-    merge the per-shard results by true distance (ties by id) — the same
-    probe-union a serving tier already performs across clusters, applied
-    one level down. Rows must carry the ``shard`` column the exporter
-    emits; an unsharded cluster (single shard 0) degenerates to the plain
-    search."""
-    by_shard: dict[int, list] = {}
-    for r in graph_rows:
-        by_shard.setdefault(getattr(r, "shard", 0), []).append(r)
-    cand: set[int] = set()
-    for rows in by_shard.values():
-        ids = {r.src_id for r in rows}
-        vecs = {i: vectors[i] for i in ids if i in vectors}
-        cand.update(hnsw_graph_search(rows, vecs, query, k, ef=ef))
-    scored = sorted(
-        (float(np.sqrt(((vectors[i] - query) ** 2).sum())), i) for i in cand
-    )
-    return [i for _, i in scored[:k]]
 
 
 def hnsw_graph_search(

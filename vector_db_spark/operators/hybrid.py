@@ -257,8 +257,8 @@ def percolate(
 
     The distinct-term set is size-routed (``vector_db_spark.route``; the
     probe IS the vocabulary fetch). Past the bound — multi-tenant
-    subscription tables growing with the corpus (SCALE.md wave-14b's
-    true matching-volume shape) — doc tokens explode distinct and the
+    subscription tables growing with the corpus (the true
+    matching-volume shape) — doc tokens explode distinct and the
     term/arity joins run un-hinted, so Catalyst/AQE broadcast the
     subscription side while it fits and shuffle past that, instead of
     building a plan literal of unbounded width on the driver. Both

@@ -14,7 +14,8 @@ themselves, so they are exact at any corpus size.
 
 Scoring reproduces ``hybrid.bm25_topk`` bit-for-bit: per-term tf columns
 pivot out of the postings (fixed column order ⇒ fixed float-addition
-order), the same Robertson +1 idf, the same round-6 + id tie-break. The
+order), the same Robertson +1 idf, the same 6-digit rounding + id
+tie-break. The
 two paths returning identical rows is pinned by test and by the DuckDB
 oracle of `inverted_bm25_search`.
 
@@ -72,7 +73,8 @@ class InvertedIndex:
         # O(n_buckets) files, not tasks x n_buckets: the tf aggregation
         # shuffles on (tok, doc_id), so without a bucket shuffle every
         # writer task would emit a file into every bucket dir (the
-        # SCALE.md wave-6 small-files trap, measured on the IVF corpus)
+        # small-files trap measured on the IVF corpus; SCALE.md, Guards
+        # and bounds)
         from vector_db_spark.io import write_clustered
 
         write_clustered(

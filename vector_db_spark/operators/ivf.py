@@ -155,8 +155,8 @@ class IVFIndex:
     @staticmethod
     def derive_k(n: int) -> int:
         """Corpus-derived cluster count — the IVF twin of
-        ``similarity.derive_lsh_geometry`` (round-6 self-deriving-knob
-        policy): ``k ≈ 4·√n`` (the FAISS IVF guidance: per-probe scan
+        ``similarity.derive_lsh_geometry`` (SCALE.md, Guards and bounds):
+        ``k ≈ 4·√n`` (the FAISS IVF guidance: per-probe scan
         volume n/k then shrinks as √n while the broadcast centroid table
         stays k×dim ≈ kilobytes), floored so every centroid keeps at
         least ~``MIN_POINTS_PER_CLUSTER`` training points (below that

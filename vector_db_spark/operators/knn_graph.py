@@ -297,8 +297,8 @@ def _undirected_edges(
     ``assume_canonical=True`` skips the normalize+distinct pass for inputs
     that are canonical BY CONSTRUCTION (``cooccurrence_edges`` output:
     src < dst, already distinct) — the redundant ``.distinct()`` here was
-    a full extra shuffle of the edge set per orientation (r9 optimization:
-    the budget-audit ladder paid it once per rung)."""
+    a full extra shuffle of the edge set per orientation, paid once per
+    rung of the budget-audit ladder."""
     if assume_canonical:
         return edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
     return (
@@ -318,8 +318,8 @@ def _apply_degree_orientation(und: DataFrame) -> DataFrame:
     pairs-of-out-edges wedge volume is O(m^1.5) instead of a hub's deg².
 
     References ``und`` three times (degree agg via a and b, plus the
-    reorientation join). Measured at the ×100 co-occurrence corpus
-    (SCALE.md wave-11): materializing ``und`` — whether pinned
+    reorientation join). Measured at the ×100 co-occurrence corpus:
+    materializing ``und`` — whether pinned
     (localCheckpoint) or cache→unpersist — is ~2× SLOWER end-to-end than
     letting the three references recompute: the re-reads are
     shuffle-bounded (Spark re-serves the edge build's shuffle files),
@@ -380,8 +380,8 @@ def _checkpoint_oriented(
     deliberately does NOT materialize the intermediate undirected edge set,
     although the orientation references it three times: both pinning it
     (localCheckpoint) and a cache→orient→unpersist lifecycle MEASURED ~2×
-    slower end-to-end at the ×100 co-occurrence corpus (83-91 s vs 46 s,
-    SCALE.md wave-11) — the three references are shuffle-bounded re-reads
+    slower end-to-end at the ×100 co-occurrence corpus (83-91 s vs 46 s)
+    — the three references are shuffle-bounded re-reads
     Spark largely serves from existing shuffle files, while materialized
     blocks compete with the downstream wedge join's execution memory. One
     checkpoint of the FINAL oriented set (consumed 3-5× by every caller's
@@ -401,11 +401,11 @@ def cooccurrence_edges(
     assume_distinct_pairs: bool = False,
 ) -> DataFrame:
     """``(src, dst)`` distinct undirected co-occurrence edges (``src < dst``):
-    items are linked when they share a basket — with the two explicit volume
-    throttles the wave-10 scale run prescribed for dense co-occurrence
-    graphs (SCALE.md: the ×100 co-purchase graph reaches 9.97 B wedge rows
-    under ANY exact orientation; at that density the only honest fix is to
-    cut volume explicitly, not to die in shuffle spill implicitly):
+    items are linked when they share a basket — with two explicit volume
+    throttles for dense co-occurrence graphs (the ×100 co-purchase graph
+    reaches 9.97 B wedge rows under ANY exact orientation; at that density
+    the only honest fix is to cut volume explicitly, not to die in shuffle
+    spill implicitly):
 
     - ``max_item_df`` — drop items occurring in more than this many baskets
       (the hub cut; the same posting-list throttle ``sparse_cosine_pairs``
@@ -474,7 +474,7 @@ def cooccurrence_wedge_audit(
     (degree, id) orientation — NOT the pairs-of-out-edges ``Σ deg⁺(v)²``
     (a different wedge algorithm whose bill this operator would
     over-state on exactly the hub-skewed graphs the caps exist for).
-    This is wave-10's budget-audit idea wired as an operator: it costs
+    This is the wedge budget audit as an operator: it costs
     O(edges) — one edge materialization + two degree aggregations — so a
     pipeline can price the O(wedges) join BEFORE running it instead of
     discovering the bill in shuffle spill."""
@@ -488,7 +488,7 @@ def cooccurrence_wedge_audit(
     )
     # cooccurrence_edges output is canonical by construction (src < dst,
     # distinct) — skip the redundant normalize+distinct shuffle inside the
-    # orientation (r9: the budget-audit ladder paid that pass per rung)
+    # orientation (the budget-audit ladder would pay that pass per rung)
     return wedge_audit_from_edges(e, assume_canonical=True)
 
 
@@ -558,8 +558,8 @@ def derive_cooccurrence_caps(
 ) -> dict:
     """Pick the most permissive ``(max_item_df, max_basket_size)`` pair on
     ``ladder`` whose exact wedge audit fits ``wedge_budget`` — the
-    knob-from-budget derivation SCALE.md wave-10 prescribed ("trade
-    exactness explicitly rather than dying implicitly"), same pattern as
+    knob-from-budget derivation ("trade exactness explicitly rather than
+    dying implicitly"; SCALE.md, Guards and bounds), same pattern as
     the corpus-derived LSH geometry and the df-quantile cut.
 
     Walks ``ladder`` in order (loosest first), paying one O(edges) audit
@@ -608,7 +608,7 @@ def derive_cooccurrence_caps(
         # executors with the next rung's tasks (guide §2.6); results are
         # assembled in ladder order, so the first-fit selection below is
         # byte-identical to the sequential walk. overlap_map wraps each
-        # rung in inheritable_thread_target (pinned-thread mode, ADVICE r9)
+        # rung in inheritable_thread_target (pinned-thread mode)
         from vector_db_spark.parallel import overlap_map
 
         audits = overlap_map(_audit_one, ladder, max_workers=3)
@@ -630,7 +630,7 @@ def derive_cooccurrence_caps(
     return {"chosen": chosen, "ladder": audits}
 
 
-# Closing-stage router (r9 optimization): below this many ORIENTED edges
+# Closing-stage router: below this many ORIENTED edges
 # the adjacency table (one array row per out-vertex, Σ sizes = n_edges
 # longs ≈ 16 B/edge ≈ 64 MB at the bound) is broadcast and each edge
 # (a, b) counts |N⁺(a) ∩ N⁺(b)| map-side — the wedge stream is never
@@ -651,7 +651,7 @@ def _close_triangles(e: DataFrame, n_edges: int) -> DataFrame:
     exact count (every triangle x→y→z under the orientation is found
     exactly once: as z ∈ N⁺(x)∩N⁺(y) at edge (x,y), or as the closed
     wedge x→y→z). The intersect route additionally requires integral id
-    types (r10, ADVICE r9): the ~16 B/entry broadcast estimate behind
+    types: the ~16 B/entry broadcast estimate behind
     ``_INTERSECT_MAX_EDGES`` holds for fixed-width ids only — string ids
     can be arbitrarily wide, so they take the wedge shape at any count."""
     if _integral_ids(e, ("a", "b")) and route.small(
@@ -722,11 +722,11 @@ def triangle_count(
 
     On degree-UNIFORM graphs no orientation shrinks the volume:
     Σ deg⁺² ≈ n·(d/2)² regardless (measured: the ×100 co-purchase graph
-    is 9.97 B wedges under either order — SCALE.md wave-10 — a quantity
-    that needs cluster-wide spill, not a better exponent; the formula
-    predicts it exactly).
+    is 9.97 B wedges under either order — a quantity that needs
+    cluster-wide spill, not a better exponent; the formula predicts it
+    exactly).
 
-    r9 optimization: the closing stage is routed by the materialized edge
+    The closing stage is routed by the materialized edge
     count (see :func:`_close_triangles`) — under ``_INTERSECT_MAX_EDGES``
     the 49 M-row wedge stream at sf0.1 is replaced by a broadcast
     adjacency-intersect that never shuffles wedges at all; past the bound
@@ -757,13 +757,13 @@ def triangle_count_with_audit(
 ) -> DataFrame:
     """Preflight-priced exact triangle count: ONE materialization of the
     (degree, id)-oriented edge set serves BOTH the wedge audit and the
-    triangle close — the r9 replacement for audit-then-recompute (the
-    pre-r9 uncapped query built the edge set twice: once for the lineage
-    audit, once for ``triangle_count``'s checkpoint).
+    triangle close, instead of auditing and then recomputing (which
+    builds the edge set twice: once for the lineage audit, once for
+    ``triangle_count``'s checkpoint).
 
     The materialization is **DISK_ONLY** (via :func:`tracked_cache`), so
     the refusal path stays refusal-safe at the scale the audit exists to
-    price: wave-11's OOM was a MEMORY_AND_DISK checkpoint competing with
+    price: at the ×100 corpus a MEMORY_AND_DISK checkpoint OOMed competing with
     the wedge join's execution memory; a disk-only block competes with
     nothing (the ×100 uncapped set is ~2 GB of long pairs on local disk,
     and the audit that reads it is two keyed counts + one scalar join).
@@ -818,99 +818,6 @@ def triangle_count_with_audit(
     )
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    *,
-    max_iter: int = 100,
-) -> DataFrame:
-    """(id): the nodes of the k-core — the maximal subgraph where every
-    node keeps degree ≥ k — by iterative peeling: drop sub-k-degree nodes,
-    recompute degrees on the induced subgraph, repeat until stable. The
-    standard corpus-graph densifier (keep only well-connected duplicates /
-    co-citation hubs before expensive per-component work).
-
-    Per iteration: one degree aggregation + two semi-joins to induce the
-    subgraph — O(E) each, O(peeling-depth) iterations (≤ max degree, in
-    practice a handful); lineage flattened per round via localCheckpoint.
-    Convergence is detected by node-count fixpoint — the count is the same
-    job that materializes the checkpoint, not an extra pass."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    e = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev_n = -1
-    for _ in range(max_iter):
-        deg = e.groupBy("src").agg(F.count("*").alias("d"))
-        keep = deg.filter(F.col("d") >= k).select("src").localCheckpoint(eager=True)
-        n = keep.count()
-        if n == prev_n:
-            break
-        prev_n = n
-        e = (
-            e.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    return keep.select(F.col("src").alias("id"))
-
-
-def label_propagation(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    *,
-    n_iter: int = 10,
-) -> DataFrame:
-    """(id, label): community detection by synchronous label propagation —
-    every round each node adopts the most frequent label among its
-    neighbors (ties → smallest label), starting from self-labels. The
-    deterministic synchronous variant: no randomized visit order, so
-    results are a pure function of the graph (reruns and engines agree;
-    tests pin exact equality with a single-node reference). Synchronous
-    LPA can oscillate on bipartite-ish structures — the fixed iteration
-    cap is the standard remedy; communities are whatever the final
-    assignment is, as with every LPA.
-
-    Per round: one edge⋈label join + one (node, label) count + one argmax
-    window per node — all keyed shuffles, O(E) volume; lineage flattened
-    per round."""
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    e = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = e.select("src").distinct().localCheckpoint(eager=True)
-    labels = nodes.select("src", F.col("src").cast("long").alias("label"))
-    w = Window.partitionBy("src").orderBy(F.col("c").desc(), F.col("label").asc())
-    for _ in range(n_iter):
-        votes = (
-            e.join(labels.select(F.col("src").alias("dst"), "label"), "dst")
-            .groupBy("src", "label")
-            .agg(F.count("*").alias("c"))
-        )
-        best = (
-            votes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("src", "label")
-        )
-        labels = (
-            nodes.join(best, "src", "left")
-            .select("src", F.coalesce("label", F.col("src").cast("long")).alias("label"))
-            .localCheckpoint(eager=True)
-        )
-    return labels.select(F.col("src").alias("id"), "label")
-
-
 # past this many nodes the per-node degree table stops riding broadcast
 # hints in the link predictors: a billion-node graph must shuffle its
 # degree join, not replicate a node-sized table to every executor
@@ -931,9 +838,9 @@ def _symmetric_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     """Materialized symmetric closure of an undirected edge list: both
     directions of every distinct edge, loops dropped.
 
-    r9 shape: dedup on the CANONICAL (least, greatest) form first, then
-    union the reverse — the distinct shuffles half the rows of the old
-    union-then-distinct, and the two union branches share the distinct's
+    Dedup on the CANONICAL (least, greatest) form first, then union the
+    reverse — the distinct shuffles half the rows of a union-then-distinct,
+    and the two union branches share the distinct's
     exchange (ReusedExchange), so the dedup aggregation's shuffle runs
     once. Output set is identical: the symmetric closure of the same
     undirected edge set (canonical rows and their reverses cannot
@@ -1013,8 +920,8 @@ def link_prediction_jaccard(
     # existing-edge removal: with a target scope, every candidate pair has
     # a ∈ S, so only the S-sourced slice of e can match — the broadcast
     # semi-filter cuts the anti-join's edge side from |E| rows to
-    # Σ_{a∈S} deg(a) map-side over the checkpointed e (r9; the unscoped
-    # form still anti-joins the full edge set)
+    # Σ_{a∈S} deg(a) map-side over the checkpointed e (the unscoped form
+    # anti-joins the full edge set)
     e_ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     if sources is not None:
         e_ab = e_ab.join(F.broadcast(src_ids), "a", "left_semi")
@@ -1078,7 +985,7 @@ def link_prediction_adamic_adar(
             F.round(F.lit(1.0) / F.log(F.col("dm")), 12).cast("decimal(28,12)")
         ).alias("__aa"),
     )
-    # same S-sourced anti-join cut as link_prediction_jaccard (r9)
+    # same S-sourced anti-join cut as link_prediction_jaccard
     e_ab = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     if sources is not None:
         e_ab = e_ab.join(F.broadcast(src_ids), "a", "left_semi")
@@ -1093,44 +1000,6 @@ def link_prediction_adamic_adar(
             F.round(F.col("__aa").cast("double"), 6).alias("aa_score"),
         )
     )
-
-
-def core_numbers(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    *,
-    max_k: int = 16,
-) -> DataFrame:
-    """(id, core): each node's coreness — the largest k for which it
-    survives the k-core peel. Computed by running :func:`k_core` for
-    ascending k until the core empties (≤ max_k): O(k_max) peel sequences,
-    each O(E)-per-iteration; fine for the moderate k_max of similarity
-    graphs (a bounded-degree k-NN graph has coreness ≤ its degree m).
-    For social-scale k_max, the one-pass distributed peeling that tracks
-    per-node removal rounds is the documented upgrade path."""
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    nodes = (
-        e.select("src").union(e.select(F.col("dst").alias("src"))).distinct()
-    )
-    result = nodes.select(F.col("src").alias("id"), F.lit(0).alias("core"))
-    for k in range(1, max_k + 1):
-        members = k_core(e, k, "src", "dst")
-        n = members.count()
-        if n == 0:
-            break
-        result = (
-            result.join(members.withColumnRenamed("id", "__m"),
-                        result["id"] == F.col("__m"), "left")
-            .select(
-                "id",
-                F.when(F.col("__m").isNotNull(), F.lit(k))
-                .otherwise(F.col("core"))
-                .alias("core"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return result
 
 
 def random_walks(
@@ -1167,8 +1036,8 @@ def random_walks(
     adjacency table is localCheckpoint(eager=True)-pinned so the edge
     lineage (a k-NN join for the registered walk queries) is evaluated
     exactly once, not once per step. The pinned blocks are freed when the
-    returned DataFrame is GC'd (ADVICE r9 noted the API became eager)."""
-    # adjacency pinned ONCE (r9): unpinned, each step's join — and each
+    returned DataFrame is GC'd."""
+    # adjacency pinned ONCE: unpinned, each step's join — and each
     # step's re-evaluation under the final union — recomputed the full
     # edge lineage (for the registered walk queries that lineage is a
     # k-NN join). Node-sized, capped at max_degree neighbors per row.
@@ -1199,16 +1068,14 @@ def random_walks(
                     F.col("__nbrs"), (F.pmod(h, F.size("__nbrs")) + 1).cast("int")
                 ).alias("node"),
             )
-            # per-step pin, LAZY, kept after re-measurement (r10, VERDICT r9
-            # item 1): with the adjacency pinned the per-step join plans as a
-            # BroadcastHashJoin CHAIN with no exchange in the frontier
-            # lineage, so WITHOUT this pin the union's later branches re-run
-            # (and re-broadcast) every earlier step — O(length²) driver
-            # round-trips; exchange reuse cannot dedupe a chain that has no
-            # exchange. Quiet-window interleaved A/B (canary 0.13-0.20,
-            # min-of-6, both orders): pinned 1.44 s vs unpinned 2.10 s vs
-            # pre-r9 lazy-adjacency 2.05 s. The r9→r9-driver "regression"
-            # VERDICT flagged was tenancy (3.4× canary gap), not this pin.
+            # per-step pin, LAZY: with the adjacency pinned the per-step
+            # join plans as a BroadcastHashJoin CHAIN with no exchange in the
+            # frontier lineage, so WITHOUT this pin the union's later
+            # branches re-run (and re-broadcast) every earlier step —
+            # O(length²) driver round-trips; exchange reuse cannot dedupe a
+            # chain that has no exchange. Quiet-window interleaved A/B
+            # (canary 0.13-0.20, min-of-6, both orders): pinned 1.44 s vs
+            # unpinned 2.10 s vs 2.05 s with a lazy adjacency.
             .localCheckpoint(eager=False)
         )
         out = out.unionByName(frontier.select("start", F.lit(i).alias("step"), "node"))
@@ -1375,14 +1242,14 @@ def node2vec_walks(
     NOTE (eager at call time): building the walk runs ONE Spark job — the
     projected edge list is localCheckpoint(eager=True)-pinned so the edge
     lineage (a k-NN join for the registered walk queries) is evaluated
-    exactly once. r9 instead pinned the two DERIVED tables (capped
-    adjacency + t-adjacency marks) as two independent eager jobs, each of
-    which re-ran the full edge build; pinning the one table both derive
-    from halves that cost and drops a scheduler round-trip (r10). The
+    exactly once. Pinning the two DERIVED tables (capped adjacency +
+    t-adjacency marks) instead would take two independent eager jobs, each
+    re-running the full edge build; pinning the one table both derive
+    from halves that cost and saves a scheduler round-trip. The
     derived aggregations stay lazy: inside the consuming action each is
     one exchange over the pinned edge blocks, computed once and re-read
     by every step via exchange reuse. Pinned blocks are freed when the
-    returned DataFrame is GC'd (ADVICE r9)."""
+    returned DataFrame is GC'd."""
     inv_p, inv_q = 1.0 / p, 1.0 / q
     e = edges.select(
         F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
@@ -1442,11 +1309,10 @@ def node2vec_walks(
                 F.first("node").alias("node"),
             )
             .select("start", F.col("node").alias("prev"), F.col("__next").alias("node"))
-            # per-step pin, LAZY, kept after re-measurement (r10, VERDICT r9
-            # item 1 — see random_walks): quiet-window interleaved A/B
-            # (canary 0.13-0.20, min-of-6, both orders) put edge-pin+step-pin
-            # at 2.27 s vs 3.06 s without the step pin and 4.69 s for the
-            # pre-r9 fully-lazy shape. The flagged r9 slowdown was tenancy.
+            # per-step pin, LAZY (see random_walks): quiet-window interleaved
+            # A/B (canary 0.13-0.20, min-of-6, both orders) put
+            # edge-pin+step-pin at 2.27 s vs 3.06 s without the step pin and
+            # 4.69 s for the fully-lazy shape.
             .localCheckpoint(eager=False)
         )
         out = out.unionByName(frontier.select("start", F.lit(i).alias("step"), "node"))
@@ -1487,9 +1353,9 @@ def personalized_pagerank(
     deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
     ed = e.join(deg, "src").localCheckpoint(eager=True)
     # source AND dangling flags resolved ONCE into the checkpointed node
-    # table (off the materialized edge set) — the pre-r9 per-iteration
-    # dangling anti-join against the UNPINNED deg recomputed the full
-    # edge build every round
+    # table (off the materialized edge set) — a per-iteration dangling
+    # anti-join against the UNPINNED deg would recompute the full edge
+    # build every round
     node_df = (
         node_df.join(src_set.withColumn("__is_s", F.lit(True)), "src", "left")
         .join(
@@ -1542,14 +1408,14 @@ def personalized_pagerank(
     return ranks.select(F.col("src").alias("id"), "rank")
 
 
-# support-close router (r10, VERDICT r9 item 4): below this many CANONICAL
+# support-close router: below this many CANONICAL
 # (a<b) edges the UNDIRECTED adjacency — 2·n_edges entries ≈ 16 B/entry ≈
 # 64 MB at the bound — is broadcast twice and each edge computes its own
 # support map-side as |N(a) ∩ N(b)|: the wedge stream is never built OR
 # shuffled, and the explode + keyed recount of the wedge form disappears
 # entirely (per-edge support IS the intersect size). Past the bound, or
 # for non-integral id types whose collected adjacency bytes the edge
-# count does not bound (ADVICE r9), the audited wedge shape runs.
+# count does not bound, the audited wedge shape runs.
 _SUPPORT_INTERSECT_MAX_EDGES = 2_000_000
 
 _INTEGRAL_TYPES = ("byte", "short", "integer", "long")
@@ -1559,48 +1425,39 @@ def _integral_ids(df: DataFrame, cols: tuple[str, str]) -> bool:
     """True when every id column is a fixed-width integral type — the
     precondition for the edge-COUNT broadcast bounds (~16 B/entry): string
     ids can be arbitrarily wide, so the intersect routes fall back to the
-    wedge shape for them (ADVICE r9, knn_graph.py:727)."""
+    wedge shape for them."""
     by_name = {f.name: f.dataType.typeName() for f in df.schema.fields}
     return all(by_name.get(c) in _INTEGRAL_TYPES for c in cols)
 
 
-def edge_support(
-    edges: DataFrame,
-    *,
-    assume_canonical: bool = False,
-    n_edges: int | None = None,
-) -> DataFrame:
+def edge_support(edges: DataFrame) -> DataFrame:
     """(a, b, support): per-edge triangle count of an undirected graph
     (a<b normalized).
 
-    Routed by edge count (r10): under ``_SUPPORT_INTERSECT_MAX_EDGES``
+    Routed by edge count: under ``_SUPPORT_INTERSECT_MAX_EDGES``
     integral-id edges, support(a,b) = |N(a) ∩ N(b)| over a broadcast
     undirected adjacency — zero wedge materialization, zero shuffle past
     the adjacency aggregation. Past the bound: the classic oriented
     wedge-close shape of :func:`triangle_count`, where each found triangle
     (x<y<z) credits all three of its edges — one explode + one keyed count
     after the close. Both routes return the identical exact table (pinned
-    by tests/test_r10_optimizations.py).
-
-    ``assume_canonical=True`` (k_truss peel): the input is already
-    (a<b)-normalized ``src<dst``, distinct, and materialized — skip the
-    normalize + distinct exchange and the redundant localCheckpoint.
-    ``n_edges``: the caller's known edge count (the peel counts every
-    round anyway); when omitted the materialized set is counted — cheap,
-    the blocks are pinned."""
-    if assume_canonical:
-        e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    else:
-        e = (
-            edges.select(
-                F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True)
+    by tests/test_r10_optimizations.py)."""
+    e = (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
-    if n_edges is None:
-        n_edges = e.count()
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return _edge_support(e, e.count())
+
+
+def _edge_support(e: DataFrame, n_edges: int) -> DataFrame:
+    """:func:`edge_support` over ``e``, which must already be the canonical
+    edge set: columns ``(a, b)`` with ``a < b``, distinct, materialized,
+    and ``n_edges`` rows. The k-truss peel holds exactly that set every
+    round, so it skips the normalize + distinct exchange and the count."""
     if _integral_ids(e, ("a", "b")) and route.small(
         n_edges, _SUPPORT_INTERSECT_MAX_EDGES, "knn_graph.edge_support"
     ):
@@ -1673,10 +1530,9 @@ def k_truss(edges: DataFrame, k: int, *, max_iter: int = 30) -> DataFrame:
     below the intersect bound one broadcast-adjacency map-side pass, past
     it the wedge volume Σ deg⁺² of the current subgraph (the same bound as
     triangle_count, with the same low→high orientation mitigation);
-    lineage is cut per round. The peel normalizes ONCE and hands
-    ``edge_support`` its known per-round edge count (r10): the old shape
-    re-ran the normalize + distinct + checkpoint inside every round's
-    support pass on edges that were already canonical and pinned."""
+    lineage is cut per round. The peel normalizes ONCE and hands the
+    support pass its canonical, pinned edges and their known count, so no
+    round repeats the normalize + distinct + checkpoint."""
     if k < 2:
         raise ValueError("k-truss needs k >= 2")
     cur = (
@@ -1688,8 +1544,9 @@ def k_truss(edges: DataFrame, k: int, *, max_iter: int = 30) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     n_prev = cur.count()
+    as_ab = (F.col("src").alias("a"), F.col("dst").alias("b"))
     for _ in range(max_iter):
-        sup = edge_support(cur, assume_canonical=True, n_edges=n_prev)
+        sup = _edge_support(cur.select(*as_ab), n_prev)
         cur = (
             sup.filter(F.col("support") >= k - 2)
             .select(F.col("a").alias("src"), F.col("b").alias("dst"))
@@ -1700,7 +1557,7 @@ def k_truss(edges: DataFrame, k: int, *, max_iter: int = 30) -> DataFrame:
             break
         n_prev = n
     return (
-        edge_support(cur, assume_canonical=True, n_edges=n_prev)
+        _edge_support(cur.select(*as_ab), n_prev)
         .withColumnRenamed("a", "src")
         .withColumnRenamed("b", "dst")
     )

@@ -1,27 +1,19 @@
-"""Range joins: point-in-interval and interval-overlap, bucketized.
+"""Point-in-interval range join, bucketized.
 
-The reference has no temporal surface at all; these are north-star
-extensions (brief: "as-of join, range join") for event/telemetry pipelines.
-A naive range join is an inequality theta-join — Spark would plan a
-broadcast nested loop (or refuse), O(n·m) compares at 100 TB. The
+The reference has no temporal surface; this serves event/telemetry
+pipelines. A naive range join is an inequality theta-join — Spark would
+plan a broadcast nested loop (or refuse), O(n·m) compares at 100 TB. The
 scale-correct shape is **bucketization**: quantize time into fixed-width
 buckets, explode each interval over the buckets it covers, and equi-join on
 (keys…, bucket) so the shuffle is hash-partitioned and each task compares
 only bucket-local pairs. The exact predicate then filters inside the
-bucket:
-
-- *point-in-interval*: a point lives in exactly one bucket, so every
-  matching (point, interval) pair surfaces exactly once — no dedupe.
-- *interval-overlap*: a pair can share many buckets; it is kept only in
-  the first bucket both sides cover, ``max(floor(start_l/w),
-  floor(start_r/w))`` — overlapping intervals both contain the later of
-  the two starts, so that bucket always exists and is unique. No
-  ``distinct`` shuffle.
+bucket. A point lives in exactly one bucket, so every matching
+(point, interval) pair surfaces exactly once — no dedupe.
 
 Pick ``bucket`` near the typical interval length: too small explodes the
 interval side by (length/bucket) rows; too large packs unrelated rows into
-one bucket and the exact filter does the work. Both joins accept optional
-equi-``keys`` that become part of the join key (per-device, per-user…).
+one bucket and the exact filter does the work. Optional equi-``keys``
+become part of the join key (per-device, per-user…).
 """
 
 from __future__ import annotations
@@ -73,58 +65,6 @@ def point_in_interval_join(
         p.join(i, [*keys, "__bucket"])
         .filter(
             (F.col(start_col) <= F.col(point_col)) & (F.col(point_col) < F.col(end_col))
-        )
-        .drop("__bucket")
-    )
-
-
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_start: str,
-    left_end: str,
-    right_start: str,
-    right_end: str,
-    keys: list[str] | None = None,
-    bucket: str | int = "1 hour",
-) -> DataFrame:
-    """Pairs of overlapping intervals (half-open overlap:
-    ``l.start < r.end AND r.start < l.end``), each pair exactly once —
-    deduped by keeping it only in the first bucket both intervals cover,
-    not by a ``distinct`` over the pair volume."""
-    width = _width_seconds(bucket) if isinstance(bucket, str) else bucket
-    keys = keys or []
-    l = left.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                _bucket_of(_line(left, left_start), width),
-                _bucket_of(_line(left, left_end), width),
-            )
-        ),
-    )
-    r = right.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                _bucket_of(_line(right, right_start), width),
-                _bucket_of(_line(right, right_end), width),
-            )
-        ),
-    )
-    # by-name exprs resolve against the joined result; type checks use the
-    # original inputs' schemas
-    first_shared = F.greatest(
-        _bucket_of(_line(left, left_start), width),
-        _bucket_of(_line(right, right_start), width),
-    )
-    return (
-        l.join(r, [*keys, "__bucket"])
-        .filter(
-            (F.col(left_start) < F.col(right_end))
-            & (F.col(right_start) < F.col(left_end))
-            & (F.col("__bucket") == first_shared)
         )
         .drop("__bucket")
     )

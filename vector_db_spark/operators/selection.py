@@ -115,14 +115,14 @@ def greedy_max_coverage(
                 )
                 # broadcast: the covered set is bounded by k picks × one
                 # document's elements — k-bounded at ANY corpus scale, so
-                # the anti-join never shuffles the candidate incidence (r9).
+                # the anti-join never shuffles the candidate incidence.
                 # The bound is APPLICATION-level, not enforced here: k is
                 # small by contract (exemplar selection) and a "document"
                 # is a bounded shingle/element set; a caller whose per-id
                 # element sets are huge must not use the greedy exact
                 # selector in the first place (its per-round collect of the
-                # argmax already assumes bounded rows). ADVICE r9 reviewed:
-                # documented bound chosen over a limit-probe — the probe
+                # argmax already assumes bounded rows). A documented bound
+                # rather than a limit-probe: the probe
                 # would add one extra job per round on a set whose size the
                 # caller controls directly via k.
                 cand = cand.join(F.broadcast(covered), elem_col, "left_anti")

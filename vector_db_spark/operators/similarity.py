@@ -62,8 +62,9 @@ def derive_lsh_geometry(
     multiprobe: bool = False,
     strict: bool = False,
 ) -> tuple[int, int]:
-    """Corpus-derived LSH geometry ``(n_tables, n_bits)`` — the SCALE.md
-    round-5 rule of thumb made executable instead of documented:
+    """Corpus-derived LSH geometry ``(n_tables, n_bits)`` — the bucket-size
+    rule of thumb made executable instead of documented (SCALE.md,
+    Guards and bounds):
 
     - ``n_bits``: h ≈ ⌈log₂(n / target_bucket_size)⌉ — per-table
       in-bucket candidate volume is Σ bucket² ≈ n²/2^h, so holding
@@ -321,7 +322,7 @@ def lsh_search(
 
     ``n_tables``/``n_bits`` default to the oracle-pinned literals (the
     fixture-scale geometry); at corpus scale pass
-    ``derive_lsh_geometry(n)`` — SCALE.md measured the fixed h=4 as
+    ``derive_lsh_geometry(n)`` — the fixed h=4 measured as
     "unusable by construction" at 200 k vectors (16 buckets/table ⇒
     ~L·n/16 candidates per query)."""
     cbuckets = hyperplane_lsh_buckets(
@@ -385,8 +386,8 @@ def sparse_cosine_pairs(
       single-domain corpus, but a sharded / multi-domain corpus pushes
       every per-shard term's df below any fixed fraction of the GLOBAL
       N and the cut silently stops cutting (measured at 100×:
-      the "cut" variant degenerated to the 645 s full-volume join,
-      SCALE.md round-5). Pass ``None`` to disable.
+      the "cut" variant degenerated to the 645 s full-volume join).
+      Pass ``None`` to disable.
     - ``max_df`` — absolute ceiling, corpus-size-independent.
     - ``join_volume_budget`` — the scale-honest knob: derive the
       absolute ceiling FROM the measured df distribution as the largest
@@ -411,7 +412,7 @@ def sparse_cosine_pairs(
     × ≤10⁴ shared terms per pair ≪ 2⁶³) — and only the final cosine
     divides in doubles.
 
-    Returns ``(doc_a, doc_b, cos_sim)``, doc_a < doc_b, round-6."""
+    Returns ``(doc_a, doc_b, cos_sim)``, doc_a < doc_b, rounded to 6 digits."""
     # tf is the pivot of the whole plan (feeds df, N, weights, norms and
     # BOTH join sides): cache it so the corpus tokenization+aggregation
     # runs once, not once per consumer — it is O(docs × distinct terms)

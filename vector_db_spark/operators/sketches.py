@@ -13,8 +13,8 @@ scale-correct shape is **incremental sketch maintenance**:
    counts (Spark's built-in DataSketches HLL — ``hll_sketch_agg``), a
    bounded centroid digest per group for quantiles. One aggregation over
    the new segment only; persisted as an ordinary Parquet table.
-2. **Merge at question time** — any span's answer is a merge of its
-   segments' summaries (``hll_union_agg`` / centroid re-compression).
+2. **Merge at question time** — any span's distinct count is a merge of
+   its segments' HLL sketches (``hll_rollup`` → ``hll_union_agg``).
    The merge input is O(segments × groups) kilobyte rows — independent
    of corpus row count. History is never rescanned.
 
@@ -147,29 +147,6 @@ def quantile_digest(
     return partials.groupBy().applyInPandas(lambda key, pdf: merge((), pdf), schema)
 
 
-def merge_digests(digests: DataFrame, by: Sequence[str], *, max_centroids: int = 512) -> DataFrame:
-    """Roll digest rows (e.g. one per day) up to ``by`` — same re-compression
-    the build's merge phase uses, so error adds one level (≤ 1/max_centroids
-    rank shift). Input is summary rows only."""
-    by = list(by)
-    key_fields = ", ".join(f"`{c}` {t}" for c, t in digests.select(*by).dtypes)
-    schema = (key_fields + ", " if key_fields else "") + (
-        "means array<double>, weights array<double>"
-    )
-
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        v = np.concatenate([np.asarray(x, dtype=np.float64) for x in pdf["means"]])
-        w = np.concatenate([np.asarray(x, dtype=np.float64) for x in pdf["weights"]])
-        m, wm = _compress(v, w, max_centroids)
-        row = {c: [k] for c, k in zip(by, key)}
-        row["means"], row["weights"] = [m], [wm]
-        return pd.DataFrame(row)
-
-    if by:
-        return digests.groupBy(*by).applyInPandas(merge, schema)
-    return digests.groupBy().applyInPandas(lambda key, pdf: merge((), pdf), schema)
-
-
 def digest_quantiles(
     digest: DataFrame, qs: Sequence[float], by: Sequence[str] = ()
 ) -> DataFrame:
@@ -279,26 +256,6 @@ def kmv_sketch(
     )
     return (
         cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
-def kmv_merge(sketches: DataFrame, by: Sequence[str] = (), *, k: int = 256) -> DataFrame:
-    """Union of KMV sketches (e.g. per-day segments → a span): concat the
-    hash rows, dedup, keep each group's k smallest. Input is sketch rows
-    (≤ k per group per segment), never raw data."""
-    from pyspark.sql import Window
-
-    by = list(by)
-    w = (
-        Window.partitionBy(*by).orderBy("kmv_hash")
-        if by
-        else Window.partitionBy(F.lit(1)).orderBy("kmv_hash")
-    )
-    return (
-        sketches.dropDuplicates(by + ["kmv_hash"])
-        .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .drop("__rn")
     )
@@ -453,13 +410,6 @@ def cms_sketch(
         .groupBy(*by, "d", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
-
-
-def cms_merge(sketches: DataFrame, by: Sequence[str] = ()) -> DataFrame:
-    """Merge segment sketches (linear: counters add). One keyed sum over
-    sketch rows only; merged == sketch-of-union exactly (deterministic
-    hashing), which tests pin."""
-    return sketches.groupBy(*list(by), "d", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_estimate(

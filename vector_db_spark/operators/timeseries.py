@@ -19,7 +19,7 @@ supplies the four canonical shapes:
   deviation): exact interpolated percentiles, two tiny aggregations, flag
   computation map-side.
 
-Scale posture (SCALE.md): every operator here shuffles ON THE SERIES KEY
+Scale posture: every operator here shuffles ON THE SERIES KEY
 exactly once (plus O(groups)-row broadcast joins for the stats forms);
 nothing materializes pairs, nothing collects the corpus. ``resample_ffill``
 output volume is grid-bounded (keys × buckets), which the caller controls
@@ -368,7 +368,7 @@ def lagged_cross_correlation(
     (missing buckets = 0 via a ``sequence()`` spine), so every Pearson
     ingredient (n, Σa, Σb, Σab, Σa², Σb²) is exact integer arithmetic —
     the only floating math is the final closed-form division, identical
-    in any engine; round-6 output.
+    in any engine; output rounded to 6 digits.
 
     Scale: raw events collapse to O(buckets) rows in ONE map-side-partial
     aggregation; the grid spine, the lag shift (an equi-join of the grid

@@ -295,8 +295,8 @@ class VersionedTable:
         import base64
 
         # positions depend on each bitmap's own geometry (bitmaps record
-        # [b64, n_bits, n_hashes] since r5 — probing an old bitmap with a
-        # reconfigured geometry read the wrong bits); legacy bare-string
+        # [b64, n_bits, n_hashes] — probing a bitmap with a reconfigured
+        # geometry would read the wrong bits); legacy bare-string
         # bitmaps fall back to the current config they were built under
         pos_cache: dict[tuple[int, int], list[int]] = {}
 
@@ -360,20 +360,6 @@ class VersionedTable:
                 continue
             keep.append(f)
         return keep
-
-    def read_pruned(
-        self, col: str, lo=None, hi=None, *, version: int | None = None
-    ) -> DataFrame:
-        """Zone-map-pruned read: only overlapping files reach the scan.
-        The predicate itself must still be applied by the caller (zones
-        bound, they don't filter rows) — same contract as Parquet
-        row-group pruning one level up."""
-        files = self.pruned_files(col, lo, hi, version=version)
-        if not files:
-            return self.read(version).limit(0)
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, f) for f in files]
-        )
 
     def txn_version(self, txn_id: str) -> int | None:
         """Version that committed ``txn_id``, or None. The sink-side
@@ -454,7 +440,7 @@ class VersionedTable:
             "remove": remove,
             "n_files": len(files),
             "n_rows": n_rows,
-            "ts": _time.time(),  # commit wall clock: TIMESTAMP AS OF support
+            "ts": _time.time(),  # commit wall clock, recorded in the log
         }
         if txn_id is not None:
             manifest["txn_id"] = txn_id
@@ -973,60 +959,6 @@ class VersionedTable:
         return self.spark.read.option("mergeSchema", "true").parquet(
             *[os.path.join(self.path, f) for f in m["files"]]
         )
-
-    def appended_rows(
-        self, from_version: int, to_version: int | None = None
-    ) -> DataFrame:
-        """Append-only change feed: the rows landed by ``append`` commits
-        in ``(from_version, to_version]``, each tagged with its
-        ``_commit_version`` — what an incremental consumer (downstream
-        index refresh, feature backfill, CDC fan-out) reads instead of
-        re-scanning the table. Reads ONLY the delta manifests' added
-        files; cost is O(new data), independent of table size.
-
-        Non-append commits in the range (delete/merge/compact/rollback)
-        raise: their adds are rewrites, not new rows — row-level change
-        capture across those goes through :meth:`diff`."""
-        head = self.current_version()
-        if head is None:
-            raise ValueError("empty table")
-        to_version = head if to_version is None else to_version
-        out: DataFrame | None = None
-        for v in range(from_version + 1, to_version + 1):
-            m = self._read_manifest(v)
-            if m["op"] != "append":
-                raise ValueError(
-                    f"version {v} is op={m['op']!r}: the append-only change feed "
-                    "cannot represent rewrites — use diff() across it"
-                )
-            if not m.get("add"):
-                continue
-            part = self._read_paths(
-                [os.path.join(self.path, f) for f in m["add"]]
-            ).withColumn("_commit_version", F.lit(v))
-            out = part if out is None else out.unionByName(part, allowMissingColumns=True)
-        if out is None:
-            df = self.read(to_version if to_version <= head else head)
-            return df.limit(0).withColumn("_commit_version", F.lit(0))
-        return out
-
-    def version_at(self, ts: float) -> int:
-        """Greatest version committed at or before wall-clock ``ts`` (the
-        Delta `TIMESTAMP AS OF` resolution rule). Commit times come from
-        the manifests; versions written before this field existed sort as
-        time 0 (always eligible). Raises if ``ts`` predates the log."""
-        best = None
-        for v in self._versions():
-            if float(self._read_manifest(v).get("ts", 0.0)) <= ts:
-                best = v
-        if best is None:
-            raise ValueError(f"no version committed at or before {ts}")
-        return best
-
-    def read_asof(self, ts: float) -> DataFrame:
-        """Snapshot as of wall-clock ``ts`` — time travel addressed by
-        timestamp instead of version number."""
-        return self.read(self.version_at(ts))
 
     def diff(self, old_version: int, new_version: int, keys: list[str]) -> DataFrame:
         """CDC changeset between two snapshots — time travel composed with

@@ -12,8 +12,7 @@ pool, cancellation scope — are NOT inherited by plain ``threading`` /
 ``ThreadPoolExecutor`` threads. ``overlap_map`` wraps every task with
 :func:`pyspark.inheritable_thread_target`, the documented way to launch
 driver threads so the submitting thread's properties carry over and the
-matching JVM thread state is cleaned up when the Python thread exits
-(ADVICE r9, vector_db_spark/queries/indexing.py:546)."""
+matching JVM thread state is cleaned up when the Python thread exits."""
 
 from __future__ import annotations
 

@@ -1,5 +1,5 @@
-"""Corpus-curation + hybrid-retrieval queries (round-3 north-star
-extensions): within-doc repetition, boilerplate detection, train/test
+"""Corpus-curation + hybrid-retrieval queries: within-doc repetition,
+boilerplate detection, train/test
 decontamination, PII scrubbing, mixture resampling, unigram-LM scoring,
 BM25+vector hybrid search, and radius (range) vector search.
 
@@ -168,7 +168,7 @@ def decontaminate_multi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # the exact form prices corpus×|benchmark| cosine evaluations before any
-# scoring (SCALE.md wave-14c: ~1.4M cosines/s/core at dim 64, so this
+# scoring (measured ~1.4M cosines/s/core at dim 64, so this
 # budget caps the exact path at ~35 s of single-core work — the blocked
 # twin takes over past it). sf0.1 bills ~107 k pairs, sf0.01 ~6.8 k.
 _EDECON_PAIR_BUDGET = 50_000_000
@@ -199,12 +199,12 @@ def embedding_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``decontaminate_ngrams``) misses. Broadcast-exact: the benchmark side
     is small by nature, the corpus never shuffles.
 
-    Preflight-then-score (VERDICT r7 item 3, the triangles template,
+    Preflight-then-score (the triangles template,
     queries/relational.py part_cooccurrence_triangles): the corpus×|B|
     cosine bill is counted BEFORE any scoring and passed to the operator
     as ``pair_budget`` — an over-budget call raises naming the bill and
-    the blocked alternative (wave-14c measured why: 763 s when the suite
-    scales with the corpus vs 6.1 s blocked), never an hours-long
+    the blocked alternative (measured: 763 s when the suite scales with
+    the corpus vs 6.1 s blocked), never an hours-long
     surprise. The audit facts ride the result rows (``pair_bill``,
     ``within_budget``) so the oracle checks the preflight arithmetic,
     not just the verdicts."""
@@ -670,7 +670,6 @@ def percolate_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # subscriptions per corpus: one two-term conjunction per 64 docs (floor 8),
 # built from the corpus's top document-frequency tokens — deterministic,
 # oracle-replayable, and the match volume genuinely scales with the corpus
-# (wave-14b's finding, now registered instead of script-only)
 _PERC_SCALE_DOCS_PER_SUB = 64
 _PERC_SCALE_MIN_SUBS = 8
 
@@ -695,9 +694,8 @@ FROM hits h JOIN ar USING (query_id) WHERE h.got = ar.need
 """,
 )
 def percolate_scaled_subscriptions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percolation whose SUBSCRIPTION side scales with the corpus (VERDICT
-    r7 item 7 — wave-14b's true matching-volume curve as a registered,
-    oracled row instead of a script-only measurement): one two-term
+    """Percolation whose SUBSCRIPTION side scales with the corpus (the
+    true matching-volume curve as a registered, oracled row): one two-term
     conjunctive subscription per 64 corpus documents (floor 8), built
     from the corpus's own top document-frequency tokens (rank 2i, 2i+1
     pair up; ties broken by token), so both the stored-query table AND
@@ -707,8 +705,8 @@ def percolate_scaled_subscriptions(spark: SparkSession, sf_dir: str) -> DataFram
     ``percolate``'s size-routed vocabulary picks the physical plan:
     literal map-side intersect at this geometry, un-hinted joins once a
     blown-up corpus pushes the derived vocabulary past the literal
-    threshold (measured in SCALE.md wave-15: ×100 corpus ⇒ ×100
-    subscriptions ⇒ exactly ×100 matches at 3.1× wall, routed plan)."""
+    threshold (measured: ×100 corpus ⇒ ×100 subscriptions ⇒ exactly ×100
+    matches at 3.1× wall, routed plan)."""
     from pyspark.sql import Window
 
     from vector_db_spark.functions.text import tokens
@@ -767,7 +765,7 @@ def event_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-flight shuffle-key diagnostics (operators/profiling.py) on the
     sessionization key: one O(1)-output job answering "how skewed is
     user_id, and what salt fan-out levels it?" — the number every skew
-    mitigation in SCALE.md takes as input."""
+    mitigation takes as input."""
     from vector_db_spark.operators.profiling import key_skew_report
 
     ev = load_table(spark, sf_dir, "events")

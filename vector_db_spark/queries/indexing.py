@@ -520,13 +520,13 @@ def _hnsw_invariant_stats(emb: DataFrame, *, m: int, cache_key: str) -> DataFram
     completeness, M/2M degree caps, and ≥ 90 % of each shard's nodes in
     one level-0 component.
 
-    r9 optimization: connectivity uses the per-shard local union-find
+    Connectivity uses the per-shard local union-find
     (``shard_component_stats``) — (cluster, shard) graphs are independent
     and bounded at ``HNSW_MAX_GROUP`` nodes by the exporter, so one Arrow
-    task per shard replaces the ~log(n)-round distributed hash-min loop
+    task per shard does what a ~log(n)-round distributed hash-min loop
     (each round: two joins + aggregation + eager checkpoint + convergence
-    count) that dominated both hnsw bench rows. Identical component
-    sizes, identical battery booleans."""
+    count) would otherwise do, and that loop dominated both hnsw bench
+    rows. Identical component sizes, identical battery booleans."""
     from vector_db_spark.operators.hnsw_export import (
         export_partition_hnsw,
         shard_component_stats,
@@ -587,8 +587,8 @@ def hnsw_export_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition HNSW export (operators/hnsw_export.py) validated by
     invariant projection — see :func:`_hnsw_invariant_stats`. Partitioned
     by the fixture ``label`` column (FIXED 10-way): kept for oracle
-    stability, but the 10-way parallelism is the measured 22× scale trap
-    (SCALE.md wave-5) — the scale-safe registered artifact is
+    stability, but the 10-way parallelism is a measured 22× scale trap
+    (74 s at 200 k vectors) — the scale-safe registered artifact is
     ``hnsw_export_derived_k`` below."""
     emb = load_table(spark, sf_dir, "embeddings").withColumnRenamed(
         "label", "cluster_id"
@@ -614,10 +614,10 @@ GROUP BY 1, 6
 )
 def hnsw_export_derived_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW export with CORPUS-DERIVED partition count — the scale-safe
-    form of ``hnsw_export_stats`` (VERDICT r6 item 3): k follows
+    form of ``hnsw_export_stats``: k follows
     ``IVFIndex.derive_k`` (k ≈ 4√n, floored at ~39 points/cluster), so
     per-cluster kernel work is O((n/k)²) ≈ O(n/16) with k-way
-    parallelism — the wave-6 measured shape (derived k=1789 → 9.16 s at
+    parallelism — the measured shape (derived k=1789 → 9.16 s at
     200 k vectors vs 74 s at pinned k=10). Partitioning here is a
     deterministic md5 shard of the id so the DuckDB oracle replays the
     EXACT partition membership and the derived k itself (kmeans clusters

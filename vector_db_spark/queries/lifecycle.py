@@ -145,8 +145,8 @@ SELECT (SELECT count(*) FROM customer)::BIGINT AS rows_total,
 """,
 )
 def versioned_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-layout services audited end to end (operators/versioned.py
-    round-4 additions): per-file Bloom filters (point-lookup file
+    """Data-layout services audited end to end (operators/versioned.py):
+    per-file Bloom filters (point-lookup file
     skipping — `pruned_files_eq`/`read_point`) and Z-order compaction
     (multi-dimensional zone-map pruning — `compact(zorder_by=...)`).
     Facts: exact point-lookup and 2-D box-probe row counts (the layout

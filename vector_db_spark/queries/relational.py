@@ -563,10 +563,10 @@ def incremental_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- triangle counting over the part co-occurrence graph ----------------------
 
 
-# the wave-11 demo budget: ≈12 GB of wedge shuffle at 24 B/row — a one-box
-# bill. The uncapped sf0.1 graph audits at 49.2 M wedges (fits); the ×100
-# blow-up audits at 4.92 B (raises with the priced message instead of a
-# 118 GB spill death).
+# one box's wedge budget: ≈12 GB of wedge shuffle at 24 B/row. The
+# uncapped sf0.1 graph audits at 49.2 M wedges (fits); the ×100 blow-up
+# audits at 4.92 B (raises with the priced message instead of a 118 GB
+# spill death).
 _COOC_UNCAPPED_WEDGE_BUDGET = 500_000_000
 
 
@@ -608,24 +608,22 @@ def part_cooccurrence_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     order) — graph analytics over a join-derived edge list, value-checked
     end to end, UNCAPPED semantics.
 
-    Preflight-then-join (VERDICT r6 item 4): before the O(wedges) join
+    Preflight-then-join: before the O(wedges) join
     runs, the O(edges) wedge audit (``cooccurrence_wedge_audit``) prices
     it — Σ indeg·outdeg under the same (degree, id) orientation, the
     join's exact shuffle row count. Over budget ⇒ ``ValueError`` naming
     the bill and the capped alternative (``cooccurrence_capped_triangles``
     / ``derive_cooccurrence_caps``), never an implicit spill death: the
-    ×100 blow-up audits at 4.92 B wedges ≈ 118 GB shuffle (SCALE.md
-    wave-11) and raises here in O(edges) time. The audit facts ride the
+    ×100 blow-up audits at 4.92 B wedges ≈ 118 GB shuffle (SCALE.md,
+    Guards and bounds) and raises here in O(edges) time. The audit facts ride the
     result row (``n_wedges``, ``within_budget``) so the oracle checks the
     preflight arithmetic, not just the count.
 
-    r9 optimization: ONE materialization of the oriented edge set now
-    serves BOTH the audit and the triangle close
-    (``triangle_count_with_audit`` — DISK_ONLY, so the refusal path never
-    competes with execution memory; the pre-r9 shape built the edge set
-    twice, once per consumer, and paid a redundant normalize+distinct
-    inside each orientation). Same audit arithmetic, same refusal-before-
-    spill contract, same result row."""
+    ONE materialization of the oriented edge set serves BOTH the audit
+    and the triangle close (``triangle_count_with_audit`` — DISK_ONLY, so
+    the refusal path never competes with execution memory), instead of
+    building the edge set once per consumer with a redundant
+    normalize+distinct inside each orientation."""
     from vector_db_spark.operators.knn_graph import (
         cooccurrence_edges,
         triangle_count_with_audit,
@@ -671,13 +669,14 @@ FROM n
 """,
 )
 def cooccurrence_capped_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The wave-10 mitigation ladder, wired (SCALE.md: the uncapped ×100
-    co-purchase graph is 9.97 B wedge rows under ANY exact orientation —
-    cluster-sized spill one box cannot hold): build the co-occurrence edge
-    list through operators/knn_graph.py cooccurrence_edges with BOTH
-    explicit throttles — hub cut (item df ≤ {_COOC_MAX_DF}) and
-    deterministic basket cap ({_COOC_MAX_BASKET} smallest part ids per
-    order) — then count triangles exactly on the capped graph. The cut is
+    """The wedge-volume mitigation, wired (SCALE.md, Guards and bounds:
+    the uncapped ×100 co-purchase graph is 9.97 B wedge rows under ANY
+    exact orientation — cluster-sized spill one box cannot hold): build
+    the co-occurrence edge list through operators/knn_graph.py
+    cooccurrence_edges with BOTH explicit throttles — hub cut
+    (item df ≤ {_COOC_MAX_DF}) and deterministic basket cap
+    ({_COOC_MAX_BASKET} smallest part ids per order) — then count
+    triangles exactly on the capped graph. The cut is
     deterministic, so the oracle replays it item-for-item; the exactness
     trade is explicit in the knobs, never an implicit OOM."""
     from vector_db_spark.operators.knn_graph import cooccurrence_edges, triangle_count
@@ -691,7 +690,7 @@ def cooccurrence_capped_triangles(spark: SparkSession, sf_dir: str) -> DataFrame
         max_basket_size=_COOC_MAX_BASKET,
     )
     # cooccurrence_edges output is canonical (src < dst, distinct): skip
-    # the orientation's redundant normalize+distinct shuffle (r9)
+    # the orientation's redundant normalize+distinct shuffle
     return triangle_count(edges, assume_canonical=True)
 
 
@@ -764,8 +763,8 @@ def cooccurrence_budget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     full ladder (all chosen=false), exactly as the oracle does — the
     refusal behavior belongs to the strict operator API, not to an audit
     report. The oracle replays all four audits and the selection rule
-    value-for-value. This is the production answer to wave-10's measured
-    death: price the join from the audit BEFORE running it."""
+    value-for-value. This is the production answer to the ×100 graph's
+    measured spill death: price the join from the audit BEFORE running it."""
     from vector_db_spark.operators.knn_graph import derive_cooccurrence_caps
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -909,9 +908,9 @@ def copurchase_ppr_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a.l_partkey") != F.col("b.l_partkey"))
         .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
         .distinct()
-        # pinned ONCE (r9): the edge list feeds five consumers (PPR's
+        # pinned ONCE: the edge list feeds five consumers (PPR's
         # node/degree/edge tables, the hop-1/hop-2 locality probes, and
-        # the node count) — unpinned, each action recomputed the lineitem
+        # the node count) — unpinned, each action would recompute the lineitem
         # self-join + distinct from scratch
         .localCheckpoint(eager=True)
     )
@@ -940,7 +939,7 @@ def copurchase_ppr_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concentration bar: 5× the seeds' uniform share, CAPPED at the 0.15
     # teleport-mass floor — the uncapped bar exceeds 1.0 (unsatisfiable)
     # once n_nodes < 5·n_seeds (sf0.001: 40 nodes ⇒ bar 1.25; found by
-    # the round-7 sf0.001 parity sweep). PPR with restart β=0.15 holds
+    # an sf0.001 parity sweep). PPR with restart β=0.15 holds
     # seed mass ≥ β analytically (π = β·s + (1−β)Pᵀπ), so the capped bar
     # is feasible at every scale while staying 5× uniform wherever that
     # is the tighter test (n_nodes ≥ 334).

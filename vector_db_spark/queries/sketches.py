@@ -166,7 +166,7 @@ def kmv_orderkey_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isin("A", "R")
     )
-    # shared key across both KMV queries, DELIBERATELY (PERF.md r6): every
+    # shared key across both KMV queries, DELIBERATELY: every
     # invocation builds a fresh lineage, so the cache is cold per sweep no
     # matter the key layout — one key = one resident block, and the bench
     # rows carry the honest cold-build cost (~1.9-2.6 s at sf0.1).
@@ -179,12 +179,12 @@ def kmv_orderkey_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         sk.filter(F.col("l_returnflag") == "R"),
         k=K,
     )
-    # ALL exact ground truth from ONE partial-aggregated pass (r10, VERDICT
-    # r9 item 6): per-orderkey flag presence, then a single-row aggregate
-    # carrying both per-flag distinct counts AND the intersection — where
-    # the old shape ran a per-flag countDistinct (expand + 2 exchanges)
-    # PLUS two more distincts and an equi-join for the intersection, this
-    # is one map-side-combined exchange keyed on l_orderkey. Values
+    # ALL exact ground truth from ONE partial-aggregated pass: per-orderkey
+    # flag presence, then a single-row aggregate carrying both per-flag
+    # distinct counts AND the intersection — where a per-flag countDistinct
+    # (expand + 2 exchanges) PLUS two more distincts and an equi-join for
+    # the intersection would take three exchanges, this is one
+    # map-side-combined exchange keyed on l_orderkey. Values
     # identical: has_a over distinct keys IS |A|, has_a AND has_r IS |A∩R|.
     flags = li.groupBy("l_orderkey").agg(
         F.max(F.col("l_returnflag") == "A").alias("has_a"),
@@ -447,14 +447,13 @@ def kmv_orderkey_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = sk.filter(F.col("l_returnflag") == "A")
     r = sk.filter(F.col("l_returnflag") == "R")
-    # BOTH exact direction counts from ONE partial-aggregated pass (r10,
-    # VERDICT r9 item 6): per-orderkey flag presence, then a single-row
-    # aggregate — where the old shape cached the distinct (flag, key) pairs
-    # and re-shuffled them through one anti-join PER direction (3 exchanges
-    # + resident cache blocks), this is one map-side-combined exchange keyed
-    # on l_orderkey, and the second direction rides the same shuffle via
-    # exchange reuse. Values identical: has_a AND NOT has_r over distinct
-    # keys IS |A \\ R|.
+    # BOTH exact direction counts from ONE partial-aggregated pass:
+    # per-orderkey flag presence, then a single-row aggregate — where
+    # caching the distinct (flag, key) pairs and re-shuffling them through
+    # one anti-join PER direction would take 3 exchanges + resident cache
+    # blocks, this is one map-side-combined exchange keyed on l_orderkey,
+    # and the second direction rides the same shuffle via exchange reuse.
+    # Values identical: has_a AND NOT has_r over distinct keys IS |A \\ R|.
     flags = li.groupBy("l_orderkey").agg(
         F.max(F.col("l_returnflag") == "A").alias("has_a"),
         F.max(F.col("l_returnflag") == "R").alias("has_r"),

@@ -55,7 +55,7 @@ def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_first_seen_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-seen via the DEFAULT native path: ``first_seen_stream``
     (``dropDuplicatesWithinWatermark`` — JVM state store, no Python
-    state exchange; the wave-7 110 s Python floor retired). The
+    state exchange, so no 110 s Python-state floor at 100×). The
     surviving ROW per key is arrival-order-dependent, so the
     engine-checkable projection is the KEY SET — exactly one survivor
     per (user_id, event_type), which the oracle reproduces as DISTINCT."""

@@ -1154,7 +1154,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_dup_pairs(docs, hamming_max=3, n_bands=4)
 
 
-# --- round-4 closing additions: containment / multi-probe / sparse cosine ------
+# --- containment / multi-probe / sparse cosine ---------------------------------
 
 @register(
     "containment_near_dup",
@@ -1236,8 +1236,8 @@ def ann_lsh_multiprobe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Posting-join volume budget (rows) for the benched df-cut variant: the
 # ceiling is DERIVED from the measured df histogram as the largest D with
 # Σ_{{df≤D}} df² ≤ budget — so the join volume stays bounded at ANY corpus
-# size/sharding, where a relative frac cut stops cutting (SCALE.md r5:
-# 645 s degeneration at 100×). 500k bites at sf0.01 (total 761k) and
+# size/sharding, where a relative frac cut stops cutting (measured: 645 s
+# degeneration at 100×). 500k bites at sf0.01 (total 761k) and
 # sf0.1 (total 73.2M) alike, so the derivation itself is oracle-exercised.
 _TFIDF_CUT_BUDGET = 500_000
 
@@ -1281,10 +1281,10 @@ def tfidf_cosine_pairs_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-tuned TF-IDF bigram cosine pairs: the df ceiling is
     DERIVED from the measured df distribution under a fixed posting-join
     volume budget (Σ df² ≤ 500k rows) instead of a relative fraction —
-    the round-5 scale lesson wired into the default: a fixed
+    the scale lesson wired into the default: a fixed
     ``max_df_frac`` stops cutting on a sharded/multi-domain corpus
     (every per-shard df falls below frac·global-N; measured 645 s
-    degeneration at 100×, SCALE.md), while the budget form bounds the
+    degeneration at 100×), while the budget form bounds the
     join volume itself at any corpus size. The derivation (df histogram
     → cumulative Σ df² → largest admissible ceiling) is exact integer
     arithmetic reproduced verbatim in the oracle's hist/cum/ceil CTEs.
@@ -1402,7 +1402,8 @@ def token_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor — the classic phrase-discovery signal (which word pairs stick
     together far beyond chance). Two token-stream aggregations (both
     map-side partial) + a broadcast unigram join; every probability is a
-    ratio of exact counts, so PMI is engine-exact after round-6. The
+    ratio of exact counts, so PMI is engine-exact once rounded to 6
+    digits. The
     rank window runs over the pair AGGREGATE (vocab², tiny), never the
     corpus."""
     docs = load_table(spark, sf_dir, "documents")

@@ -818,7 +818,7 @@ def graph_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     neg = tracked_cache(sample_non_edges(edges, n_per_node=5), "q.vector.negsamp.neg")
     n_pairs = neg.count()
-    # audit-job consolidation (r9): the per-source quota facts collapse to
+    # audit-job consolidation: the per-source quota facts collapse to
     # ONE aggregation over the cached draw (present-source count + bad-quota
     # count in a single job, vs three separate count actions), the overlap
     # recount stops at the first violation (the row only carries the
@@ -828,7 +828,7 @@ def graph_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row per candidate — so set equality ⇔ no one-sided row).
     # the four audit facts are independent reads of the two caches
     # materialized by the count above — overlap them from the driver pool
-    # (guide §2.6, r10): the invariance replay (a full second draw) is the
+    # (guide §2.6): the invariance replay (a full second draw) is the
     # long pole and the three cheap probes backfill its stage tails. Each
     # closure returns a scalar; assembly order below is fixed, so the row
     # is byte-identical to the sequential walk.

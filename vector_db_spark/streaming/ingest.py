@@ -51,8 +51,8 @@ _EVENTS_SCHEMA_TMPL = (
 
 def read_events_stream(spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """Stream the events table from a parquet directory, normalizing ``ts``
-    to a plain (UTC-session) TIMESTAMP. The driver has materialized ``ts``
-    differently across rounds — TIMESTAMP(NANOS) (arrives as long nanos
+    to a plain (UTC-session) TIMESTAMP. Fixture writers materialize ``ts``
+    in several physical types — TIMESTAMP(NANOS) (arrives as long nanos
     under the legacy conf), TIMESTAMP_NTZ micros, or plain TIMESTAMP — so
     the physical type is probed from the parquet footer (a metadata-only
     batch read, no data scan) and the stream schema derived from it, same
@@ -153,12 +153,12 @@ def first_seen_stream(
     exchange) and is evicted once the watermark passes a key's last
     sighting, so state is bounded on a perpetual stream.
 
-    Why native and not ``applyInPandasWithState``: a 100× run (SCALE.md
-    wave-7) measured the Python stateful form at 110 s for 10 M events /
+    Why native and not ``applyInPandasWithState``: a 100× run measured
+    the Python stateful form at 110 s for 10 M events /
     750 k keys — ~90 k row-visits/s through the Arrow state boundary,
     unchanged under the RocksDB provider — while this native form does
-    the same first-seen filtering inside the JVM (wave-13 measured it at
-    the stream_hourly_counts cost class, not the Python-state class).
+    the same first-seen filtering inside the JVM (measured at the
+    stream_hourly_counts cost class, not the Python-state class).
 
     Semantics note: the surviving row per key is the first to ARRIVE
     (arrival order == event-time order only when the source replays in
@@ -408,85 +408,6 @@ def sketch_maintenance_stream(
             ["event_type", "day"],
         )
         seg.write.mode("append").parquet(sketch_path)
-
-    return (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def digest_maintenance_stream(
-    spark: SparkSession,
-    source_dir: str,
-    digest_path: str,
-    *,
-    value_col: str = "value",
-    by: tuple[str, ...] = ("event_type",),
-    max_centroids: int = 512,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-):
-    """Quantile-digest twin of :func:`sketch_maintenance_stream`: each
-    micro-batch is reduced to per-group centroid digests
-    (operators/sketches.py) appended to a summary table; any span's
-    quantiles come from ``merge_digests`` + ``digest_quantiles`` over
-    summary rows. One extra merge level vs the batch build ⇒ rank error
-    ≤ 3/max_centroids. Returns the StreamingQuery."""
-    from vector_db_spark.operators.sketches import quantile_digest
-
-    events = read_events_stream(spark, source_dir, max_files_per_trigger)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        quantile_digest(
-            batch_df, value_col, list(by), max_centroids=max_centroids
-        ).write.mode("append").parquet(digest_path)
-
-    return (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def cms_maintenance_stream(
-    spark: SparkSession,
-    source_dir: str,
-    table_path: str,
-    *,
-    checkpoint_dir: str,
-    item_col: str = "event_type",
-    depth: int = 4,
-    width: int = 1024,
-    max_files_per_trigger: int = 1,
-):
-    """Incremental Count-Min maintenance with an exactly-once sink.
-
-    Where HLL registers are replay-IDEMPOTENT (union = register max, so
-    ``sketch_maintenance_stream`` can blind-append), Count-Min counters
-    ADD — a replayed micro-batch double-counts. So the segment rows land
-    in a :class:`VersionedTable` with the epoch id as the transaction id:
-    replays are absorbed by the manifest log, and the merged frequency
-    answer is a pure function of the source stream under any crash.
-    Per-day segment rows (≤ depth×width per day) merge via
-    ``cms_merge`` at question time — history is never rescanned."""
-    from vector_db_spark.operators.sketches import cms_sketch
-    from vector_db_spark.operators.versioned import VersionedTable
-
-    table = VersionedTable(spark, table_path)
-    events = read_events_stream(spark, source_dir, max_files_per_trigger)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        seg = cms_sketch(
-            batch_df.withColumn("day", F.to_date("ts")),
-            item_col,
-            ["day"],
-            depth=depth,
-            width=width,
-        )
-        table.append(seg, txn_id=f"cms:{epoch_id}")
 
     return (
         events.writeStream.foreachBatch(sink)
