@@ -151,22 +151,6 @@ def test_delete_documents_removes_from_store_and_index(spark, tmp_path):
     assert got.count() == 3
 
 
-def test_insert_documents_preserves_evolved_columns(spark, service):
-    """A docs batch carrying an extra column beyond (content, metadata)
-    lands in the store with the column intact — and earlier rows read it
-    as null (VERDICT r4 item 7, service path)."""
-    docs = spark.createDataFrame(
-        [("Purple Grape", {"kind": "fruit"}, "batch-7")],
-        "content string, metadata map<string,string>, ingest_tag string",
-    )
-    assert service.insert_documents(docs) == 1
-    rows = {r.content: r for r in service.nodes.df().collect()}
-    assert rows["Purple Grape"].ingest_tag == "batch-7"
-    assert rows["Red Apple"].ingest_tag is None
-    # ids stayed dense max+1
-    assert sorted(r.id for r in rows.values()) == [1, 2, 3, 4, 5]
-
-
 def test_unreadable_index_raises_instead_of_going_exact(spark, service):
     """A present but unreadable index is not an absent one: search and
     insert raise rather than silently running exact search or leaving the

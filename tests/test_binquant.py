@@ -99,36 +99,6 @@ def test_bq_recall_floor_vs_exact(spark, sf_correctness):
     assert recall >= 0.5, recall
 
 
-def test_bqindex_roundtrip_and_codes_only_scan(spark, sf_correctness, tmp_path):
-    """Persisted BQIndex: open-from-disk search equals inline bq_search,
-    and the codes FileScan reads only (id, words) — the float column never
-    appears in its ReadSchema (the 1/32-scan claim, plan-pinned)."""
-    from vector_db_spark.operators.binquant import BQIndex
-
-    emb = spark.read.parquet(f"{sf_correctness}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    path = str(tmp_path / "bq")
-    BQIndex.build(spark, emb, path, dim=64)
-    idx = BQIndex.open(spark, path)
-    assert (idx.dim, idx.threshold, idx.id_col) == (64, 0.0, "vec_id")
-
-    got = idx.search(queries, emb, 5, refine=4)
-    want = bq_search(emb, queries, 5, dim=64, refine=4)
-    as_set = lambda df: {(r.query_id, r.neighbor_id, r.dist, r.rank) for r in df.collect()}
-    assert as_set(got) == as_set(want)
-
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    codes_scans = [
-        seg.splitlines()[0]
-        for seg in plan.split("FileScan parquet")
-        if "words" in seg.splitlines()[0]
-    ]
-    assert codes_scans, "expected a FileScan over the persisted codes table"
-    assert "embedding" not in codes_scans[0].split("ReadSchema")[-1]
-
-
 def test_bq_search_edge_cases(spark):
     rng = np.random.default_rng(1)
     mat = rng.standard_normal((6, 64)).astype(np.float32)

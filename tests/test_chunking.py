@@ -3,9 +3,8 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from vector_db_spark.operators.chunking import chunk_documents, search_hits_to_docs
+from vector_db_spark.operators.chunking import chunk_documents
 
 
 def _docs(spark, texts):
@@ -56,22 +55,3 @@ def test_chunk_plan_is_shuffle_free(spark):
     df = _docs(spark, ["hello world " * 50])
     plan = chunk_documents(df, size=64, overlap=16)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_search_hits_to_docs_grouping(spark):
-    hits = spark.createDataFrame(
-        [
-            (1, 10, 0.9),
-            (1, 10, 0.7),
-            (1, 20, 0.8),
-            (2, 10, 0.5),
-        ],
-        "query_id long, doc_id long, score double",
-    )
-    out = {
-        (r.query_id, r.doc_id): (r.best_score, r.n_chunk_hits)
-        for r in search_hits_to_docs(hits).collect()
-    }
-    assert out[(1, 10)] == (0.9, 2)
-    assert out[(1, 20)] == (0.8, 1)
-    assert out[(2, 10)] == (0.5, 1)

@@ -1,15 +1,11 @@
-"""Exactly-once corpus maintenance: DedupIndex txn appends and the
-foreachBatch probe → accept → append pipeline
-(streaming/maintenance.py) under checkpoint loss and mid-write crashes.
+"""Exactly-once corpus maintenance: DedupIndex txn appends under replay
+and mid-write crashes.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import time
-
-from pyspark.sql import functions as F
 
 
 def _docs(spark, rows):
@@ -80,156 +76,3 @@ def test_dedup_index_txn_append_is_idempotent_and_heals_partial_writes(
     frozen = DedupIndex(spark, str(tmp_path / "idx"))
     with pytest.raises(ValueError, match="append-frozen"):
         frozen.append(batch)
-
-
-def test_dedup_index_compact_folds_fragments_and_survives_crashes(
-    spark, tmp_path
-):
-    """compact() collapses the per-epoch ``__txn`` fragments to one
-    consolidated partition per bucket: fewer files, identical probe
-    answers, and a replayed pre-compaction epoch still no-ops on its
-    kept marker. Crash windows heal on reopen: an incomplete sibling
-    rolls back, a finished sibling with the live dir renamed away
-    completes forward."""
-    from vector_db_spark.operators.dedup_index import DedupIndex
-
-    idx = DedupIndex.build(
-        spark,
-        _docs(spark, [(i, _text(i)) for i in range(8)]),
-        str(tmp_path / "idx"),
-        n_buckets=4,
-    )
-    for e in range(3):  # three daily epochs
-        idx.append(
-            _docs(spark, [(10 + 2 * e, _text(10 + 2 * e)),
-                          (11 + 2 * e, _text(11 + 2 * e))]),
-            txn_id=f"epoch{e}",
-        )
-    probe_batch = _docs(spark, [(99, _text(12)), (100, _text(100))])
-
-    def key(df):
-        return sorted(map(tuple, df.collect()), key=lambda t: t[0])
-
-    def n_files(store):
-        return sum(
-            len([f for f in files if f.endswith(".parquet")])
-            for _, _, files in os.walk(str(tmp_path / "idx" / store))
-        )
-
-    want = key(idx.probe(probe_batch))
-    before = {s: n_files(s) for s in ("fingerprints", "bands", "shingles")}
-    idx.compact()
-    after = {s: n_files(s) for s in ("fingerprints", "bands", "shingles")}
-    assert all(after[s] < before[s] for s in after), (before, after)
-    assert key(idx.probe(probe_batch)) == want
-    n_fp = idx.fingerprints().count()
-    assert n_fp == 14
-    # a pre-compaction epoch replay must still no-op on its kept marker
-    idx.append(_docs(spark, [(12, _text(12)), (13, _text(13))]),
-               txn_id="epoch1")
-    assert idx.fingerprints().count() == n_fp
-
-    # crash window 1: sibling written but swap never started -> reopen
-    # discards it (the live store is authoritative)
-    sh = str(tmp_path / "idx" / "shingles")
-    shutil.copytree(sh, sh + ".compacting")
-    reopened = DedupIndex(spark, str(tmp_path / "idx"))
-    assert not os.path.isdir(sh + ".compacting")
-    assert key(reopened.probe(probe_batch)) == want
-
-    # crash window 2: live dir renamed away, finished sibling present ->
-    # reopen completes the swap forward
-    shutil.copytree(sh, sh + ".compacting")
-    os.rename(sh, sh + ".retired")
-    reopened = DedupIndex(spark, str(tmp_path / "idx"))
-    assert os.path.isdir(sh)
-    assert not os.path.isdir(sh + ".retired")
-    assert key(reopened.probe(probe_batch)) == want
-
-    # crash window 3: live dir renamed away, sibling INCOMPLETE (no
-    # _SUCCESS) -> reopen rolls back to the retired copy
-    shutil.copytree(sh, sh + ".compacting")
-    os.remove(os.path.join(sh + ".compacting", "_SUCCESS"))
-    os.rename(sh, sh + ".retired")
-    reopened = DedupIndex(spark, str(tmp_path / "idx"))
-    assert os.path.isdir(sh)
-    assert key(reopened.probe(probe_batch)) == want
-
-
-def test_dedup_maintenance_stream_exactly_once(spark, tmp_path):
-    """End-to-end daily-maintenance shape: two arriving files, duplicates
-    rejected against the persisted index (including docs accepted one
-    epoch earlier), accepted docs and their signatures committed exactly
-    once — surviving a full checkpoint loss (every epoch replays with
-    the same epoch ids)."""
-    from vector_db_spark.operators.dedup_index import DedupIndex
-    from vector_db_spark.operators.versioned import VersionedTable
-    from vector_db_spark.streaming.maintenance import dedup_maintenance_stream
-
-    seed = _docs(spark, [(i, _text(i)) for i in range(10)])
-    idx_path = str(tmp_path / "idx")
-    DedupIndex.build(spark, seed, idx_path, n_buckets=8)
-
-    src = str(tmp_path / "src")
-    # file A: 10..14 new; 15, 16 are exact copies of seed docs 0, 1
-    _docs(
-        spark,
-        [(i, _text(i)) for i in range(10, 15)] + [(15, _text(0)), (16, _text(1))],
-    ).coalesce(1).write.parquet(src)
-    time.sleep(1.1)  # distinct modTime -> deterministic file order
-    # file B: 17 copies doc 10 (accepted in epoch 0 -> the index append
-    # must be visible across epochs); 18 is new
-    _docs(spark, [(17, _text(10)), (18, _text(18))]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    corpus_path = str(tmp_path / "corpus")
-    audit_path = str(tmp_path / "audit")
-
-    def run(ckpt):
-        q = dedup_maintenance_stream(
-            spark,
-            src,
-            idx_path,
-            corpus_path,
-            schema="doc_id long, text string",
-            checkpoint_dir=str(tmp_path / ckpt),
-            audit_path=audit_path,
-            max_files_per_trigger=1,
-        )
-        q.awaitTermination()
-
-    run("ckpt")
-    corpus = VersionedTable(spark, corpus_path)
-    accepted = {r.doc_id for r in corpus.read().collect()}
-    assert accepted == {10, 11, 12, 13, 14, 18}
-    n_versions = len(corpus.history())
-    assert n_versions == 2  # one atomic corpus version per epoch
-
-    idx = DedupIndex(spark, idx_path)
-    assert idx.fingerprints().count() == 16  # 10 seed + 6 accepted
-    audit = VersionedTable(spark, audit_path)
-    rows = audit.read().collect()
-    assert len(rows) == 9  # one verdict per incoming doc
-    verdicts = {r.doc_id: (r.is_new, r.dup_exact_of) for r in rows}
-    assert verdicts[15] == (False, 0) and verdicts[16] == (False, 1)
-    assert verdicts[17] == (False, 10)  # deduped against epoch-0 acceptance
-    assert all(verdicts[i][0] for i in (10, 11, 12, 13, 14, 18))
-
-    # same checkpoint: offsets committed, nothing replays
-    run("ckpt")
-    assert corpus.read().count() == 6 and len(corpus.history()) == n_versions
-
-    # WORST CASE: checkpoint lost entirely -> every epoch replays with
-    # the same ids; markers + txn logs must absorb all of it
-    run("ckpt-lost")
-    assert {r.doc_id for r in corpus.read().collect()} == accepted
-    assert len(corpus.history()) == n_versions
-    assert idx.fingerprints().count() == 16  # no double-indexed signatures
-    assert idx.shingles().select("doc_id").distinct().count() == 16
-    assert audit.read().count() == 9
-
-    # the maintained index answers like a fresh build over seed+accepted
-    probe = idx.probe(_docs(spark, [(99, _text(12)), (100, _text(100))]))
-    got = {r.doc_id: (r.is_new, r.dup_exact_of) for r in probe.collect()}
-    assert got[99] == (False, 12) and got[100][0] is True

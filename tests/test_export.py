@@ -1,7 +1,5 @@
-"""Deterministic shard export (operators/export.py): placement math,
-manifest audit facts, and the writer's partition-layout invariance — the
-shard files' row order must be a pure function of content, never of how
-the input happened to be partitioned."""
+"""Deterministic shard export (operators/export.py): placement math and
+manifest audit facts."""
 
 from __future__ import annotations
 
@@ -13,7 +11,6 @@ from vector_db_spark.operators.export import (
     hex_value,
     shard_manifest,
     shard_plan,
-    write_shards,
 )
 
 
@@ -53,45 +50,3 @@ def test_manifest_counts_and_checksum(spark):
         assert m["n_rows"] == len(mine)
         assert m["checksum"] == sum(int(r["row_fp"][:8], 16) for r in mine)
         assert m["head_id"] == min(mine, key=lambda r: r["shuffle_key"])["doc_id"]
-
-
-def test_write_shards_order_is_partition_invariant(spark, tmp_path):
-    docs = _docs(spark, 100)
-    orders = []
-    for parts in (3, 11):
-        out = str(tmp_path / f"exp{parts}")
-        write_shards(shard_plan(docs.repartition(parts), n_shards=4), out, n_shards=4)
-        back = spark.read.parquet(out)
-        per_shard = {}
-        for sid in range(4):
-            # file order == dataframe order for a single-file shard dir
-            pdf = back.filter(F.col("shard_id") == sid).toPandas()
-            per_shard[sid] = list(pdf["doc_id"])
-        orders.append(per_shard)
-    assert orders[0] == orders[1]
-    # within-shard order is the shuffle order, not id order
-    assert any(orders[0][s] != sorted(orders[0][s]) for s in range(4))
-
-
-def test_write_shards_jsonl_roundtrip(spark, sf_smoke, tmp_path):
-    """JSONL export: same shard layout as parquet, rows read back intact
-    (the format LLM training loaders consume directly)."""
-    from vector_db_spark.io import load_table
-    from vector_db_spark.operators.export import shard_plan, write_shards
-
-    docs = load_table(spark, sf_smoke, "documents").limit(50)
-    plan = shard_plan(docs, n_shards=4)
-    out = str(tmp_path / "jsonl_shards")
-    write_shards(plan, out, n_shards=4, fmt="jsonl")
-    back = spark.read.json(out)
-    assert back.count() == 50
-    assert {r.shard_id for r in back.select("shard_id").distinct().collect()} <= set(range(4))
-    # content survives the round trip
-    want = {r.doc_id for r in docs.select("doc_id").collect()}
-    got = {r.doc_id for r in back.select("doc_id").collect()}
-    assert got == want
-
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown fmt"):
-        write_shards(plan, out, n_shards=4, fmt="csvx")

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from vector_db_spark.io import load_table
 from vector_db_spark.operators.hybrid import bm25_topk
 from vector_db_spark.operators.inverted import InvertedIndex
@@ -66,23 +64,3 @@ def test_absent_term_scores_zero_and_drops(spark, sf_smoke, tmp_path_factory):
     assert [(r.doc_id, r.kw_rank) for r in mixed.collect()] == [
         (r.doc_id, r.kw_rank) for r in only.collect()
     ]
-
-
-def test_incremental_add_equals_rebuild(spark, sf_smoke, tmp_path_factory):
-    """Search results after add() must equal a from-scratch build on the
-    union — tf/df/dl are per-doc facts, n_docs/avgdl exact sums."""
-    docs = load_table(spark, sf_smoke, "documents")
-    half_a = docs.filter(F.col("doc_id") % 2 == 0)
-    half_b = docs.filter(F.col("doc_id") % 2 == 1)
-
-    p_inc = str(tmp_path_factory.mktemp("inc"))
-    idx = InvertedIndex.build(spark, half_a, p_inc, n_buckets=16)
-    idx.add(half_b)
-
-    p_full = str(tmp_path_factory.mktemp("full"))
-    full = InvertedIndex.build(spark, docs, p_full, n_buckets=16)
-
-    assert (idx.n_docs, idx.avgdl) == (full.n_docs, full.avgdl)
-    a = [(r.doc_id, r.bm25, r.kw_rank) for r in idx.bm25_search(TERMS, k=20).collect()]
-    b = [(r.doc_id, r.bm25, r.kw_rank) for r in full.bm25_search(TERMS, k=20).collect()]
-    assert a == b and len(a) == 20

@@ -115,226 +115,3 @@ def test_persistence_reopen(spark, sf_smoke, index):
     reopened = IVFPQIndex(spark, index.path)
     res = reopened.search(_queries(spark, sf_smoke, 3), k=1, n_probe=1).collect()
     assert len(res) == 3
-
-
-def test_add_then_delete_lifecycle(spark, sf_smoke, tmp_path):
-    """add appends to BOTH tables (corpus + codes) and the new vectors are
-    immediately searchable; delete removes them from both, partition-
-    targeted (IVF's lifecycle contract, extended to the compressed side)."""
-    emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFPQIndex.build(
-        spark, emb, str(tmp_path / "idx"), k_coarse=4, n_chunks=8, k_codes=16
-    )
-    n0 = idx.codes().count()
-    new = emb.filter(F.col("vec_id") < 2).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    idx.add(new)
-    assert idx.codes().count() == n0 + 2
-    assert idx.corpus().count() == n0 + 2
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.lit(0).alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    ids = {r.neighbor_id for r in idx.search(q, k=2, n_probe=1, refine=4).collect()}
-    assert ids == {0, 1_000_000}  # both zero-distance copies, id tie-break
-    idx.delete([1_000_000, 1_000_001])
-    assert idx.codes().count() == n0
-    assert idx.corpus().count() == n0
-    ids2 = {r.neighbor_id for r in idx.search(q, k=2, n_probe=1, refine=4).collect()}
-    assert all(i < 1_000_000 for i in ids2)
-
-
-def test_delete_pair_atomicity_precommit_crash(spark, sf_smoke, tmp_path):
-    """Crash window BETWEEN the two plan writes (codes plan durable, corpus
-    plan not): the pair never committed — recover() must DISCARD both
-    stagings (including the planned codes tmp), leaving both tables on the
-    old side of the delete. A recover that replayed the codes plan alone
-    would leave ids searchable in corpus but absent from codes — the
-    permanent inconsistency the r6 ADVICE flagged."""
-    from vector_db_spark.operators.staging import write_swap_plan
-    from vector_db_spark.io import write_clustered
-    import os
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFPQIndex.build(
-        spark, emb, str(tmp_path / "idx"), k_coarse=4, n_chunks=8, k_codes=16
-    )
-    n0 = idx.codes().count()
-    victim = [int(idx.codes().first().vec_id)]
-    clusters = [
-        r.cluster_id
-        for r in idx.codes()
-        .filter(F.col("vec_id").isin(victim))
-        .select("cluster_id")
-        .distinct()
-        .collect()
-    ]
-    # reproduce delete()'s staging exactly, then "crash" before the corpus
-    # plan (the pair commit point) is written
-    for sub, df in (("corpus", idx.corpus()), ("codes", idx.codes())):
-        table = os.path.join(idx.path, sub)
-        remaining = df.filter(
-            F.col("cluster_id").isin(clusters) & ~F.col("vec_id").isin(victim)
-        )
-        write_clustered(remaining, table.rstrip("/") + ".tmp-delete")
-    write_swap_plan(
-        spark, os.path.join(idx.path, "codes").rstrip("/") + ".tmp-delete",
-        clusters, [],
-    )
-    got = idx.recover()
-    assert got.get("codes.tmp-delete") == "discarded"
-    # both tables untouched: the victim survives in BOTH
-    assert idx.codes().filter(F.col("vec_id").isin(victim)).count() == 1
-    assert idx.corpus().filter(F.col("vec_id").isin(victim)).count() == 1
-    assert idx.codes().count() == n0 and idx.corpus().count() == n0
-    # tmp dirs gone — read path is clean
-    assert not os.path.exists(os.path.join(idx.path, "codes.tmp-delete"))
-    assert not os.path.exists(os.path.join(idx.path, "corpus.tmp-delete"))
-
-
-def test_delete_pair_atomicity_postcommit_crash(spark, sf_smoke, tmp_path):
-    """Crash AFTER both plans are written but before either swap executes:
-    the pair committed — recover() must drive BOTH tables forward to the
-    deleted state."""
-    from vector_db_spark.operators.staging import write_swap_plan
-    from vector_db_spark.io import write_clustered
-    import os
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFPQIndex.build(
-        spark, emb, str(tmp_path / "idx"), k_coarse=4, n_chunks=8, k_codes=16
-    )
-    n0 = idx.codes().count()
-    victim = [int(idx.codes().first().vec_id)]
-    clusters = [
-        r.cluster_id
-        for r in idx.codes()
-        .filter(F.col("vec_id").isin(victim))
-        .select("cluster_id")
-        .distinct()
-        .collect()
-    ]
-    for sub, df in (("corpus", idx.corpus()), ("codes", idx.codes())):
-        table = os.path.join(idx.path, sub)
-        remaining = df.filter(
-            F.col("cluster_id").isin(clusters) & ~F.col("vec_id").isin(victim)
-        )
-        tmp = table.rstrip("/") + ".tmp-delete"
-        write_clustered(remaining, tmp)
-        write_swap_plan(spark, tmp, clusters, [])
-    got = idx.recover()
-    assert got.get("codes.tmp-delete") == "completed"
-    assert got.get("corpus.tmp-delete") == "completed"
-    assert idx.codes().filter(F.col("vec_id").isin(victim)).count() == 0
-    assert idx.corpus().filter(F.col("vec_id").isin(victim)).count() == 0
-    assert idx.codes().count() == n0 - 1 and idx.corpus().count() == n0 - 1
-
-
-def test_recover_completes_legacy_mid_execution_codes_swap(spark, sf_smoke, tmp_path):
-    """A codes staging dir WITH a plan that already holds old-cluster_id=
-    dirs was mid-execution under the legacy per-table protocol (its corpus
-    half had fully swapped) — those dirs are the only copies of retired
-    live data. recover() must complete that swap FORWARD; force-deleting
-    it would permanently lose codes clusters the corpus still has."""
-    import os
-
-    from vector_db_spark.operators.staging import write_swap_plan
-    from vector_db_spark.io import write_clustered
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFPQIndex.build(
-        spark, emb, str(tmp_path / "idx"), k_coarse=4, n_chunks=8, k_codes=16
-    )
-    n0 = idx.codes().count()
-    victim = [int(idx.codes().first().vec_id)]
-    clusters = [
-        r.cluster_id
-        for r in idx.codes()
-        .filter(F.col("vec_id").isin(victim))
-        .select("cluster_id")
-        .distinct()
-        .collect()
-    ]
-    codes_table = os.path.join(idx.path, "codes")
-    tmp = codes_table.rstrip("/") + ".tmp-delete"
-    remaining = idx.codes().filter(
-        F.col("cluster_id").isin(clusters) & ~F.col("vec_id").isin(victim)
-    )
-    write_clustered(remaining, tmp)
-    write_swap_plan(spark, tmp, clusters, [])
-    # simulate execute_swap's first rename: live dir moved INTO staging
-    c = clusters[0]
-    os.rename(
-        os.path.join(codes_table, f"cluster_id={c}"),
-        os.path.join(tmp, f"old-cluster_id={c}"),
-    )
-    got = idx.recover()
-    assert got.get("codes.tmp-delete") == "completed"
-    assert idx.codes().filter(F.col("vec_id").isin(victim)).count() == 0
-    assert idx.codes().count() == n0 - 1
-    assert not os.path.exists(tmp)
-
-
-def test_recover_completes_legacy_committed_unexecuted_codes_swap(
-    spark, sf_smoke, tmp_path
-):
-    """Legacy per-table state with the plan written but execution NOT yet
-    started (no old-cluster_id= dirs) and no corpus staging dir (legacy's
-    corpus half had fully swapped and reclaimed its tmp): the codes plan
-    is committed legacy work — recover() must drive it forward, not
-    classify it as pre-commit pair staging and delete it (which would
-    leave deleted ids searchable in codes forever)."""
-    import os
-
-    from vector_db_spark.operators.staging import write_swap_plan
-    from vector_db_spark.io import write_clustered
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFPQIndex.build(
-        spark, emb, str(tmp_path / "idx"), k_coarse=4, n_chunks=8, k_codes=16
-    )
-    n0 = idx.codes().count()
-    victim = [int(idx.codes().first().vec_id)]
-    clusters = [
-        r.cluster_id
-        for r in idx.codes()
-        .filter(F.col("vec_id").isin(victim))
-        .select("cluster_id")
-        .distinct()
-        .collect()
-    ]
-    codes_table = os.path.join(idx.path, "codes")
-    tmp = codes_table.rstrip("/") + ".tmp-delete"
-    remaining = idx.codes().filter(
-        F.col("cluster_id").isin(clusters) & ~F.col("vec_id").isin(victim)
-    )
-    write_clustered(remaining, tmp)
-    write_swap_plan(spark, tmp, clusters, [])
-    # no corpus tmp, no old- dirs: the committed-but-unexecuted legacy state
-    got = idx.recover()
-    assert got.get("codes.tmp-delete") == "completed"
-    assert idx.codes().filter(F.col("vec_id").isin(victim)).count() == 0
-    assert idx.codes().count() == n0 - 1
-    assert not os.path.exists(tmp)
-
-
-def test_add_encodes_like_build(spark, sf_smoke, tmp_path):
-    """build encodes from the in-memory model and add from the persisted
-    tables: a copy added under a new id must land in its original's
-    cluster with its original's codes."""
-    emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFPQIndex.build(
-        spark, emb, str(tmp_path / "idx"), k_coarse=4, n_chunks=8, k_codes=16
-    )
-    offset = 1_000_000
-    idx.add(
-        emb.filter(F.col("vec_id") < 20).select(
-            (F.col("vec_id") + offset).alias("vec_id"), "embedding"
-        )
-    )
-    rows = idx.codes().collect()
-    by_id = {r.vec_id: (r.cluster_id, list(r.codes)) for r in rows}
-    copies = {i - offset: v for i, v in by_id.items() if i >= offset}
-    assert sorted(copies) == list(range(20))
-    for orig, got in copies.items():
-        assert got == by_id[orig], orig

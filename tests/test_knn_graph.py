@@ -9,9 +9,8 @@ from pyspark.sql import functions as F
 from vector_db_spark.io import load_table
 from vector_db_spark.operators.ivf import IVFIndex
 from vector_db_spark.operators.knn_graph import (
-    connected_components,
+    components_from_edges,
     graph_connectivity,
-    graph_connectivity_distributed,
     knn_graph,
 )
 
@@ -70,19 +69,30 @@ def test_mega_cluster_salt_split(spark):
     assert graph_connectivity(g) >= 0.9
 
 
+def _components(graph):
+    """Hash-min component labels of an adjacency-shaped graph."""
+    edges = graph.select(F.col("vec_id").alias("src"), F.explode("neighbors").alias("dst"))
+    return {
+        r.id: r.component
+        for r in components_from_edges(edges, nodes=graph.select("vec_id")).collect()
+    }
+
+
 def test_distributed_connectivity_agrees_with_bfs(spark, graph):
     """Pregel-style hash-min result == driver BFS, on the real fixture
     graph and on a deliberately disconnected one."""
-    assert abs(graph_connectivity_distributed(graph) - graph_connectivity(graph)) < 1e-9
+    # hash-min labels each component by its min member id, so the min-id
+    # node's component is the one labelled min(ids)
+    comps = _components(graph)
+    reach = sum(c == min(comps) for c in comps.values()) / len(comps)
+    assert abs(reach - graph_connectivity(graph)) < 1e-9
 
     two_islands = spark.createDataFrame(
         [(0, [1]), (1, [0]), (10, [11, 12]), (11, [10]), (12, [10])],
         "vec_id long, neighbors array<bigint>",
     )
     assert graph_connectivity(two_islands) == 0.4
-    assert graph_connectivity_distributed(two_islands) == 0.4
-    comps = {r.vec_id: r.component for r in connected_components(two_islands).collect()}
-    assert comps == {0: 0, 1: 0, 10: 10, 11: 10, 12: 10}
+    assert _components(two_islands) == {0: 0, 1: 0, 10: 10, 11: 10, 12: 10}
 
 
 def test_components_long_path_converges_logarithmically(spark):
@@ -735,14 +745,17 @@ def test_edge_support_and_ktruss_match_reference(spark):
                 return es
             es = keep
 
-    from vector_db_spark.operators.knn_graph import edge_support, k_truss
+    from vector_db_spark.operators.knn_graph import _edge_support, k_truss
 
     clique = [(a, b) for a in range(5) for b in range(a + 1, 5)]
     extra = [(4, 10), (10, 11), (11, 4), (11, 20), (20, 21)]
     edges = clique + extra
     df = spark.createDataFrame(edges, "src long, dst long")
 
-    sup = {(r.a, r.b): r.support for r in edge_support(df).collect()}
+    canon = df.select(
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    ).distinct()
+    sup = {(r.a, r.b): r.support for r in _edge_support(canon, canon.count()).collect()}
     assert sup[(0, 1)] == 3 and sup[(20, 21)] == 0 and sup[(4, 10)] == 1
 
     for k in (3, 4, 5):

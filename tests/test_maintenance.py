@@ -1,67 +1,7 @@
-"""Small-file compaction: data-identical, file count reduced, partition
-layout preserved."""
+"""Incremental aggregate maintenance: merging a delta equals a full
+recompute."""
 
 from __future__ import annotations
-
-import os
-
-from pyspark.sql import functions as F
-
-from vector_db_spark.io import load_table
-from vector_db_spark.operators.maintenance import compact_parquet
-
-
-def _file_count(root):
-    n = 0
-    for dirpath, _dirs, files in os.walk(root):
-        n += sum(1 for f in files if not f.startswith(("_", ".")) and not f.endswith(".crc"))
-    return n
-
-
-def test_compact_flat_table(spark, sf_smoke, tmp_path):
-    path = str(tmp_path / "nodes")
-    docs = load_table(spark, sf_smoke, "documents")
-    for _ in range(3):  # 3 fragmented appends
-        docs.repartition(8).write.mode("append").parquet(path)
-    before_rows = spark.read.parquet(path).count()
-    before_sum = spark.read.parquet(path).agg(F.sum("doc_id")).collect()[0][0]
-    assert _file_count(path) == 24
-
-    stats = compact_parquet(spark, path)
-    assert stats["partitions_compacted"] == 1
-    assert stats["files_after"] < stats["files_before"] == 24
-    assert _file_count(path) == stats["files_after"] == 1  # tiny table → 1 file
-    after = spark.read.parquet(path)
-    assert after.count() == before_rows
-    assert after.agg(F.sum("doc_id")).collect()[0][0] == before_sum
-
-
-def test_compact_partitioned_corpus(spark, sf_smoke, tmp_path):
-    path = str(tmp_path / "corpus")
-    emb = load_table(spark, sf_smoke, "embeddings").withColumn(
-        "cluster_id", (F.col("vec_id") % 4).cast("int")
-    )
-    for _ in range(3):  # micro-batch-shaped fragmented appends
-        emb.repartition(4).write.mode("append").partitionBy("cluster_id").parquet(path)
-    before = spark.read.parquet(path)
-    before_rows = before.count()
-    before_per_cluster = {
-        r.cluster_id: r.n
-        for r in before.groupBy("cluster_id").agg(F.count("*").alias("n")).collect()
-    }
-
-    stats = compact_parquet(spark, path, partition_col="cluster_id")
-    assert stats["partitions_compacted"] == 4
-    assert stats["files_after"] == 4  # one file per cluster at this size
-    after = spark.read.parquet(path)
-    assert after.count() == before_rows
-    assert {
-        r.cluster_id: r.n
-        for r in after.groupBy("cluster_id").agg(F.count("*").alias("n")).collect()
-    } == before_per_cluster
-    # idempotent: a second pass finds nothing to do
-    again = compact_parquet(spark, path, partition_col="cluster_id")
-    assert again["partitions_compacted"] == 0
 
 
 def test_merge_agg_delta_equals_full_recompute(spark):

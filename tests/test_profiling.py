@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vector_db_spark.operators.curation import per_group_quantile_cut, per_group_top_frac
+from vector_db_spark.operators.curation import per_group_top_frac
 from vector_db_spark.operators.evalmetrics import truncation_overlap
 from vector_db_spark.operators.profiling import key_skew_report
 
@@ -68,23 +68,6 @@ def test_per_group_top_frac_tie_prefers_smaller_id(spark):
     )
     out = per_group_top_frac(df, "g", "s", 0.3).collect()  # ceil(0.9) = 1 row
     assert [r.doc_id for r in out] == [1]
-
-
-def test_per_group_quantile_cut_matches_exact_within_bound(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(3)
-    rows = [
-        (i, "g" + str(i % 2), float(v))
-        for i, v in enumerate(rng.lognormal(0, 1, 4000))
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, g string, s double")
-    kept = per_group_quantile_cut(df, "g", "s", 0.25, max_centroids=256)
-    for g in ("g0", "g1"):
-        n = df.filter(F.col("g") == g).count()
-        k = kept.filter(F.col("g") == g).count()
-        # boundary within the digest's rank-error bound (±2/256 + slack)
-        assert abs(k / n - 0.25) <= 0.02, g
 
 
 # --- truncation audit --------------------------------------------------------

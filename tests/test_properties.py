@@ -149,7 +149,7 @@ def test_euclidean_column_matches_numpy(vecs):
 def test_connected_components_matches_union_find(edges, n_nodes):
     """Pregel-style hash-min labels == plain union-find on random graphs
     (self-loops and out-of-range neighbors dropped)."""
-    from vector_db_spark.operators.knn_graph import connected_components
+    from vector_db_spark.operators.knn_graph import components_from_edges
 
     spark = _get_spark()
     adj: dict[int, list[int]] = {i: [] for i in range(n_nodes)}
@@ -160,7 +160,11 @@ def test_connected_components_matches_union_find(edges, n_nodes):
         [(i, sorted(set(ns))) for i, ns in adj.items()],
         "vec_id long, neighbors array<bigint>",
     )
-    got = {r.vec_id: r.component for r in connected_components(graph).collect()}
+    edges = graph.select(F.col("vec_id").alias("src"), F.explode("neighbors").alias("dst"))
+    got = {
+        r.id: r.component
+        for r in components_from_edges(edges, nodes=graph.select("vec_id")).collect()
+    }
 
     parent = list(range(n_nodes))
 

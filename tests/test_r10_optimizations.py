@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from vector_db_spark.operators.knn_graph import _edge_support, edge_support, k_truss
+from vector_db_spark.operators.knn_graph import _edge_support, k_truss
 from vector_db_spark.parallel import overlap_map
 
 
@@ -30,13 +30,29 @@ def _support_map(df):
     return {(r.a, r.b): r.support for r in df.collect()}
 
 
+def _canonical(g):
+    """The canonical edge set ``_edge_support`` takes: (a, b) with a < b,
+    loops dropped, distinct, materialized."""
+    return (
+        g.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _support(g):
+    canon = _canonical(g)
+    return _edge_support(canon, canon.count())
+
+
 def test_edge_support_intersect_route_matches_wedge_route(spark, force_large):
     g = _triangle_graph(spark)
     # small graph: default routing takes the broadcast-intersect close;
     # forcing the route takes the wedge shape — identical table
-    fast = _support_map(edge_support(g))
+    fast = _support_map(_support(g))
     with force_large("knn_graph.edge_support"):
-        slow = _support_map(edge_support(g))
+        slow = _support_map(_support(g))
     assert fast == slow
     assert fast == {
         (1, 2): 1, (2, 3): 2, (1, 3): 1, (2, 4): 1, (3, 4): 1, (4, 5): 0,
@@ -45,9 +61,9 @@ def test_edge_support_intersect_route_matches_wedge_route(spark, force_large):
 
 def test_edge_support_schema_identical_across_routes(spark, force_large):
     g = _triangle_graph(spark)
-    fast = edge_support(g)
+    fast = _support(g)
     with force_large("knn_graph.edge_support"):
-        slow = edge_support(g)
+        slow = _support(g)
     assert fast.schema == slow.schema
 
 
@@ -56,23 +72,10 @@ def test_edge_support_string_ids_fall_back_to_wedge(spark):
     # hold, so the wedge shape must run — and still be correct
     rows = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]
     g = spark.createDataFrame(rows, "src string, dst string")
-    sup = {(r.a, r.b): r.support for r in edge_support(g).collect()}
+    sup = {(r.a, r.b): r.support for r in _support(g).collect()}
     assert sup == {("a", "b"): 1, ("b", "c"): 1, ("a", "c"): 1, ("c", "d"): 0}
-    plan = edge_support(g)._jdf.queryExecution().executedPlan().toString()
+    plan = _support(g)._jdf.queryExecution().executedPlan().toString()
     assert "array_intersect" not in plan
-
-
-def test_edge_support_assume_canonical_matches_default(spark):
-    g = _triangle_graph(spark)
-    canon = (
-        g.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    a = _support_map(edge_support(g))
-    b = _support_map(_edge_support(canon, canon.count()))
-    assert a == b
 
 
 def test_k_truss_peel_unchanged_by_routing(spark):

@@ -92,44 +92,7 @@ def test_zero_vector_is_not_a_free_slot(spark, table):
     assert table.get(10).count() == 1  # survives an unrelated rewrite
 
 
-def test_schema_evolution_append_and_upsert(spark, table):
-    """An evolved-schema batch (new 'lang' column) flows through append
-    AND upsert without column loss; pre-evolution rows read the new
-    column as null (VERDICT r4 item 7)."""
-    evolved = spark.createDataFrame(
-        [
-            (10, [1.0, 1.0, 0.0, 0.0], "Yellow Pear", {"kind": "fruit"}, "en"),
-            (2, [0.0, 2.0, 0.0, 0.0], "Grüner Apfel", {"kind": "fruit"}, "de"),
-        ],
-        "id long, embedding array<float>, content string, "
-        "metadata map<string,string>, lang string",
-    )
-    table.upsert(evolved)
-    got = {r.id: r for r in table.df().collect()}
-    assert set(got) == {1, 2, 3, 10}
-    assert "lang" in table.df().columns
-    assert got[10].lang == "en"
-    assert got[2].lang == "de" and got[2].content == "Grüner Apfel"
-    assert got[1].lang is None and got[3].lang is None  # pre-evolution rows
-
-    # a second evolution (another new column) appends cleanly on top
-    evolved2 = spark.createDataFrame(
-        [(11, [0.0, 0.0, 1.0, 1.0], "Old Bike", {"kind": "vehicle"}, 1987)],
-        "id long, embedding array<float>, content string, "
-        "metadata map<string,string>, year int",
-    )
-    table.append(evolved2)
-    got = {r.id: r for r in table.df().collect()}
-    assert got[11].year == 1987 and got[11].lang is None
-    assert got[10].lang == "en" and got[10].year is None
-    # core surface still works post-evolution
-    assert table.get(11).count() == 1
-    assert table.size() == 5
-    table.delete([10])
-    assert {r.id for r in table.all_ids().collect()} == {1, 2, 3, 11}
-
-
-def test_missing_core_column_raises(spark, table):
+def test_missing_core_column_raises(spark, table, tmp_path):
     bad = spark.createDataFrame(
         [(20, [1.0, 0.0, 0.0, 0.0], "No Meta")],
         "id long, embedding array<float>, content string",
@@ -137,30 +100,57 @@ def test_missing_core_column_raises(spark, table):
     with pytest.raises(ValueError, match="missing core columns"):
         table.append(bad)
 
+    # a column outside the node schema is rejected by name, never dropped
+    extra = spark.createDataFrame(
+        [(20, [1.0, 0.0, 0.0, 0.0], "Yellow Pear", {"kind": "fruit"}, "en")],
+        "id long, embedding array<float>, content string, "
+        "metadata map<string,string>, lang string",
+    )
+    with pytest.raises(ValueError, match="outside the node schema.*'lang'"):
+        table.append(extra)
+    with pytest.raises(ValueError, match="outside the node schema.*'lang'"):
+        table.upsert(extra)
+    assert table.size() == 3
 
-def test_evolved_column_type_clash_raises_and_preserves_corpus(spark, table):
-    """Two batches evolving the SAME column with different types: the
-    second write must fail loudly (a silent append would poison every
-    later mergeSchema read), and the table must stay fully readable."""
-    b1 = spark.createDataFrame(
-        [(20, [1.0, 0.0, 0.0, 0.0], "tagged int", {"k": "v"}, 7)],
-        "id long, embedding array<float>, content string, "
-        "metadata map<string,string>, tag int",
+    from vector_db_spark.api import VectorDBService
+
+    svc = VectorDBService(spark, str(tmp_path / "svc"), dim=4)
+    docs = spark.createDataFrame(
+        [("Purple Grape", {"kind": "fruit"}, "batch-7")],
+        "content string, metadata map<string,string>, ingest_tag string",
     )
-    table.append(b1)
-    b2 = spark.createDataFrame(
-        [(21, [0.0, 1.0, 0.0, 0.0], "tagged str", {"k": "v"}, "seven")],
-        "id long, embedding array<float>, content string, "
-        "metadata map<string,string>, tag string",
+    with pytest.raises(ValueError, match="outside the node schema.*'ingest_tag'"):
+        svc.insert_documents(docs)
+    assert not svc.nodes.exists()
+
+
+def test_open_reads_with_the_fixed_schema_and_no_spark_job(spark, table):
+    """Opening an existing table pins NODE_SCHEMA: its df() starts no
+    Spark job (a schema-inferring read runs a footer-merge job)."""
+    sc = spark.sparkContext
+
+    def jobs_of(group, make_df):
+        sc.setJobGroup(group, group)
+        try:
+            df = make_df()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, sc.statusTracker().getJobIdsForGroup(group)
+
+    # the probe sees the job an inferring read starts
+    _, control = jobs_of(
+        "node-open-merge",
+        lambda: spark.read.option("mergeSchema", "true").parquet(table.path),
     )
-    with pytest.raises(ValueError, match="evolved column 'tag'"):
-        table.append(b2)
-    with pytest.raises(ValueError, match="evolved column 'tag'"):
-        table.upsert(b2)
-    # corpus intact and readable, including the first evolution
-    got = {r.id: r for r in table.df().collect()}
-    assert set(got) == {1, 2, 3, 20}
-    assert got[20].tag == 7
+    assert control
+    df, jobs = jobs_of("node-open", lambda: NodeTable(spark, table.path).df())
+    assert jobs == []
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in NODE_SCHEMA
+    ]
+    assert df.count() == 3
 
 
 def test_exists_is_a_filesystem_check(spark, tmp_path):
@@ -220,7 +210,7 @@ def test_upsert_rejects_duplicate_batch_ids(spark, table):
     """Two rows with one id in a single upsert batch would both survive the
     anti-join and permanently break id uniqueness — there is no
     deterministic last-write order on a DataFrame, so the batch is
-    rejected loudly (same contract as VersionedTable.merge)."""
+    rejected loudly."""
     batch = _nodes(
         spark,
         [

@@ -1,25 +1,88 @@
-"""Every public def in ``vector_db_spark/`` is named by code outside
+"""Every public def and method in ``vector_db_spark/`` is used by code outside
 ``tests/``: the rest of the package, ``bench.py``, ``__spark_entry__.py``,
-``perfbench/`` or ``scripts/``. A def only tests name is surface nothing
-ships; delete it with its tests, or allowlist it below with its reason."""
+``perfbench/`` or ``scripts/``. A def only tests use is surface nothing
+ships; delete it with its tests, or allowlist it below, by qualified name,
+with its reason.
+
+Only names in code count (``ast.Name``, ``ast.Attribute`` and import
+aliases), never a word in a comment or docstring. A module function ``f``
+is used when code names ``f`` outside ``f``'s own body. A method ``C.m`` is
+used when code accesses ``.m`` outside ``C.m``'s own body, in a file that
+defines ``C``, names ``C`` or imports ``C``'s module. A use inside a def
+that is itself unused does not count."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
-import re
-from collections import Counter
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "vector_db_spark"
 
 ALLOWED = {
-    "remote_embed": "the reference's HTTP embedding client (SURVEY E3)",
-    "all_ids": "the reference's list-all-ids call (SURVEY S5)",
-    "idf_weights": "the reference BM25 IDF formula the hybrid tests compare against",
-    "hnsw_graph_search": "the recall check that shows an exported HNSW graph is navigable",
-    "assert_scales": "the plan-audit contract helper the plan tests call",
+    "vector_db_spark.functions.embedding.remote_embed":
+        "the reference's HTTP embedding client (SURVEY E3)",
+    "vector_db_spark.storage.NodeTable.all_ids":
+        "the reference's list-all-ids call (SURVEY S5)",
+    "vector_db_spark.operators.hybrid.idf_weights":
+        "the reference BM25 IDF formula the hybrid tests compare against",
+    "vector_db_spark.operators.hnsw_export.hnsw_graph_search":
+        "the recall check that shows an exported HNSW graph is navigable",
+    "vector_db_spark.plans.assert_scales":
+        "the plan-audit contract helper the plan tests call",
+    "vector_db_spark.operators.pq.PQModel.decode":
+        "the reconstruction the OPQ tests measure distortion through",
+    "vector_db_spark.operators.knn_graph.graph_connectivity":
+        "the driver BFS the distributed kNN-graph components are checked against",
+    "vector_db_spark.route.force_large":
+        "the test seam that pins a route site to its large branch",
 }
+
+
+def _module(f: pathlib.Path) -> str:
+    parts = f.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+class _Scan(ast.NodeVisitor):
+    """The names one file uses in code, each with the defs enclosing it,
+    and the modules it imports."""
+
+    def __init__(self) -> None:
+        self.names: list[tuple[str, tuple[ast.AST, ...]]] = []
+        self.attrs: list[tuple[str, tuple[ast.AST, ...]]] = []
+        self.modules: set[str] = set()
+        self._defs: tuple[ast.AST, ...] = ()
+
+    def visit_FunctionDef(self, node):
+        outer, self._defs = self._defs, self._defs + (node,)
+        self.generic_visit(node)
+        self._defs = outer
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_Name(self, node):
+        self.names.append((node.id, self._defs))
+
+    def visit_Attribute(self, node):
+        self.names.append((node.attr, self._defs))
+        self.attrs.append((node.attr, self._defs))
+        self.generic_visit(node)
+
+    def visit_Import(self, node):
+        for a in node.names:
+            self.modules.add(a.name)
+            self.names += [(p, self._defs) for p in a.name.split(".")]
+            if a.asname:
+                self.names.append((a.asname, self._defs))
+
+    def visit_ImportFrom(self, node):
+        self.modules.add(node.module)
+        for a in node.names:
+            self.modules.add(f"{node.module}.{a.name}")
+            self.names.append((a.name, self._defs))
+            if a.asname:
+                self.names.append((a.asname, self._defs))
 
 
 def _registered(d: ast.FunctionDef) -> bool:
@@ -31,45 +94,88 @@ def _registered(d: ast.FunctionDef) -> bool:
 
 
 def _public_defs(tree: ast.Module, local_classes: set[str]):
-    """Public module-level functions and methods of module-level classes.
-    Methods of a class that extends a class from outside the package
-    (a PySpark data source, an exception) are hooks its framework calls."""
+    """``(class or None, def)`` for public module-level functions and
+    methods of module-level classes. Methods of a class that extends a
+    class from outside the package (a PySpark data source, an exception)
+    are hooks its framework calls."""
     for node in tree.body:
         if isinstance(node, ast.FunctionDef):
-            yield node
+            yield None, node
         elif isinstance(node, ast.ClassDef) and all(
             isinstance(b, ast.Name) and b.id in local_classes for b in node.bases
         ):
-            yield from (n for n in node.body if isinstance(n, ast.FunctionDef))
+            yield from (
+                (node, n) for n in node.body if isinstance(n, ast.FunctionDef)
+            )
 
 
-def test_no_public_def_is_named_only_by_tests():
+def _unused_public_defs() -> dict[str, str]:
+    """Qualified name -> ``file:line`` of every public def or method that
+    no code outside ``tests/`` uses."""
     package = sorted(PACKAGE.rglob("*.py"))
     others = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
     others += sorted((ROOT / "perfbench").rglob("*.py"))
     others += sorted((ROOT / "scripts").rglob("*.py"))
 
-    named: Counter = Counter()
-    for f in package + others:
-        named.update(re.findall(r"[A-Za-z_]\w*", f.read_text()))
-
-    trees = {f: ast.parse(f.read_text(), str(f)) for f in package}
-    local_classes = {
-        n.name for t in trees.values() for n in t.body if isinstance(n, ast.ClassDef)
-    }
-    defs: dict[str, list[str]] = {}
+    trees = {f: ast.parse(f.read_text(), str(f)) for f in package + others}
+    scans = {}
     for f, tree in trees.items():
-        for d in _public_defs(tree, local_classes):
-            if not d.name.startswith("_") and not _registered(d):
-                defs.setdefault(d.name, []).append(f"{f.relative_to(ROOT)}:{d.lineno}")
+        scans[f] = _Scan()
+        scans[f].visit(tree)
+    named = {f: {n for n, _ in s.names} for f, s in scans.items()}
+    local_classes = {
+        n.name
+        for f in package
+        for n in trees[f].body
+        if isinstance(n, ast.ClassDef)
+    }
 
-    # each ``def name`` is one mention of the name; any further one is a use
-    unused = sorted(
-        f"{where} {name}"
-        for name, wheres in defs.items()
-        for where in wheres
-        if named[name] <= len(wheres) and name not in ALLOWED
-    )
-    assert not unused, "public defs named only by tests:\n" + "\n".join(unused)
-    stale = sorted(n for n in ALLOWED if n not in defs or named[n] > len(defs[n]))
+    # (qualified name, file, def, class or None) of every checked def
+    checked = []
+    for f in package:
+        mod = _module(f)
+        for cls, d in _public_defs(trees[f], local_classes):
+            if not d.name.startswith("_") and not _registered(d):
+                qual = f"{mod}.{cls.name}.{d.name}" if cls else f"{mod}.{d.name}"
+                checked.append((qual, f, d, cls))
+
+    # a use counts only from live code: outside every checked def, or
+    # inside checked defs already found used (or allowlisted). Growing the
+    # live set to a fixpoint reports a cluster of defs that only call each
+    # other whole.
+    nodes = {d for _, _, d, _ in checked}
+    live = {d for q, _, d, _ in checked if q in ALLOWED}
+    while True:
+        def used(name, uses, body) -> bool:
+            return any(
+                n == name
+                and body not in defs
+                and all(e in live for e in defs if e in nodes)
+                for n, defs in uses
+            )
+
+        unused = {}
+        for qual, f, d, cls in checked:
+            if cls is None:
+                hit = any(used(d.name, s.names, d) for s in scans.values())
+            else:
+                mod = _module(f)
+                hit = any(
+                    used(d.name, s.attrs, d)
+                    for g, s in scans.items()
+                    if g == f or mod in s.modules or cls.name in named[g]
+                )
+            if not hit:
+                unused[qual] = (f"{f.relative_to(ROOT)}:{d.lineno}", d)
+        grown = {d for q, _, d, _ in checked if q not in unused or q in ALLOWED}
+        if grown == live:
+            return {q: where for q, (where, _) in unused.items()}
+        live = grown
+
+
+def test_no_public_def_is_named_only_by_tests():
+    unused = _unused_public_defs()
+    bad = sorted(f"{where} {q}" for q, where in unused.items() if q not in ALLOWED)
+    assert not bad, "public defs used only by tests:\n" + "\n".join(bad)
+    stale = sorted(q for q in ALLOWED if q not in unused)
     assert not stale, f"allowlist entries that are used elsewhere or gone: {stale}"

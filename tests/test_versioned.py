@@ -27,16 +27,7 @@ def test_append_and_time_travel(spark, vt):
     assert vt.read(v0).count() == 100
     assert vt.read(v1).count() == 150
     assert vt.read().count() == 150  # head
-    hist = vt.history()
-    assert [h["version"] for h in hist] == [0, 1]
-    assert [h["n_rows"] for h in hist] == [100, 150]
-
-
-def test_overwrite_replaces_snapshot_keeps_history(spark, vt):
-    vt.append(_df(spark, 0, 50))
-    v1 = vt.overwrite(_df(spark, 0, 10))
-    assert vt.read(v1).count() == 10
-    assert vt.read(0).count() == 50  # old snapshot still readable
+    assert [vt._read_manifest(v)["n_rows"] for v in (0, 1)] == [100, 150]
 
 
 def test_delete_where_rewrites_only_hit_files(spark, vt):
@@ -70,11 +61,11 @@ def test_delete_where_no_match_is_metadata_only(spark, vt):
 
 def test_rollback_restores_without_erasing(spark, vt):
     vt.append(_df(spark, 0, 100))
-    vt.overwrite(_df(spark, 0, 1))  # the "bad" commit
+    vt.delete_where(F.col("id") >= 1)  # the "bad" commit
     v2 = vt.rollback(0)
     assert vt.read().count() == 100
     assert vt.read(1).count() == 1  # bad version still inspectable
-    assert vt.history()[-1]["op"] == "rollback:0" and v2 == 2
+    assert vt._read_manifest(v2)["op"] == "rollback:0" and v2 == 2
 
 
 def test_commit_conflict_rebases_append_on_new_head(spark, vt):
@@ -119,7 +110,7 @@ def test_append_retries_and_rebases_after_losing_race(spark, vt, monkeypatch):
 
 def test_vacuum_keeps_retained_versions_readable(spark, vt):
     vt.append(_df(spark, 0, 100))
-    vt.overwrite(_df(spark, 0, 10))
+    vt.delete_where(F.col("id") >= 10)
     vt.append(_df(spark, 10, 30))
     out = vt.vacuum(keep_last=2, min_age_seconds=0)
     assert out["removed_versions"] == 1 and out["removed_files"] >= 1
@@ -136,7 +127,7 @@ def test_readers_never_see_uncommitted_data(spark, vt):
     assert vt.read().count() == 10  # invisible until a manifest commits
 
 
-# --- txn-id idempotent appends & exactly-once streaming ingest ---------------
+# --- txn-id idempotent appends ------------------------------------------------
 
 
 def test_append_txn_id_is_idempotent(spark, vt):
@@ -144,104 +135,9 @@ def test_append_txn_id_is_idempotent(spark, vt):
     v_again = vt.append(_df(spark, 0, 10), txn_id="batch:0")  # the replay
     assert v_again == v
     assert vt.read().count() == 10
-    assert len(vt.history()) == 1
+    assert vt.current_version() == v  # the replay committed nothing
     assert vt.append(_df(spark, 10, 20), txn_id="batch:1") == v + 1
     assert vt.read().count() == 20
-
-
-def test_versioned_ingest_stream_exactly_once(spark, tmp_path):
-    import time
-
-    from vector_db_spark.streaming.ingest import versioned_ingest_stream
-
-    src, tab = str(tmp_path / "src"), str(tmp_path / "tab")
-    schema = "id long, s string"
-    _df(spark, 0, 50).coalesce(1).write.parquet(src)
-    time.sleep(1.1)  # distinct modTime -> deterministic file order
-    _df(spark, 50, 80).coalesce(1).write.mode("append").parquet(src)
-
-    def run(ckpt):
-        q = versioned_ingest_stream(
-            spark, src, tab, schema=schema,
-            checkpoint_dir=str(tmp_path / ckpt), max_files_per_trigger=1,
-        )
-        q.awaitTermination()
-
-    run("ckpt")
-    vt = VersionedTable(spark, tab)
-    assert vt.read().count() == 80
-    n_versions = len(vt.history())
-    assert n_versions == 2  # one atomic version per micro-batch
-
-    # same checkpoint: source offsets already committed, nothing replays
-    run("ckpt")
-    assert vt.read().count() == 80 and len(vt.history()) == n_versions
-
-    # WORST CASE: checkpoint lost entirely -> every epoch replays with the
-    # same epoch ids; the txn log must absorb all of it
-    run("ckpt-lost")
-    assert vt.read().count() == 80 and len(vt.history()) == n_versions
-
-    # snapshot-per-batch lineage: version 0 is exactly the first file
-    assert vt.read(0).count() == 50
-
-
-# --- merge (upsert) ----------------------------------------------------------
-
-
-def test_merge_updates_and_inserts(spark, vt):
-    vt.append(_df(spark, 0, 10))
-    src = spark.createDataFrame(
-        [(5, "UPDATED"), (6, "ALSO"), (100, "NEW")], "id long, s string"
-    )
-    vt.merge(src, "id")
-    got = {r.id: r.s for r in vt.read().collect()}
-    assert len(got) == 11
-    assert got[5] == "UPDATED" and got[6] == "ALSO" and got[100] == "NEW"
-    assert got[0] == "r0"  # untouched row intact
-    # pre-merge snapshot still time-travels
-    assert {r.s for r in vt.read(0).collect()} == {f"r{i}" for i in range(10)}
-
-
-def test_merge_prunes_untouched_files(spark, vt):
-    vt.append(_df(spark, 0, 100).coalesce(1))
-    vt.append(_df(spark, 100, 200).coalesce(1))
-    before = vt._snapshot(vt.current_version())["files"]
-    src = spark.createDataFrame([(150, "X")], "id long, s string")
-    v = vt.merge(src, "id")
-    after = vt._snapshot(v)["files"]
-    # file holding ids 0..99 carries over by reference
-    assert sum(1 for f in before if f in after) == 1
-    assert vt.read().count() == 200
-    assert {r.s for r in vt.read().filter(F.col("id") == 150).collect()} == {"X"}
-
-
-def test_merge_insert_only_and_update_only(spark, vt):
-    vt.append(_df(spark, 0, 10))
-    src = spark.createDataFrame([(5, "U"), (50, "N")], "id long, s string")
-    vt.merge(src, "id", update=False)  # insert-only: 5 keeps r5
-    got = {r.id: r.s for r in vt.read().collect()}
-    assert got[5] == "r5" and got[50] == "N" and len(got) == 11
-    vt.merge(
-        spark.createDataFrame([(5, "U2"), (99, "NOPE")], "id long, s string"),
-        "id",
-        insert=False,
-    )  # update-only: 99 not inserted
-    got = {r.id: r.s for r in vt.read().collect()}
-    assert got[5] == "U2" and 99 not in got and len(got) == 11
-
-
-def test_merge_rejects_duplicate_source_keys(spark, vt):
-    vt.append(_df(spark, 0, 5))
-    src = spark.createDataFrame([(1, "a"), (1, "b")], "id long, s string")
-    with pytest.raises(ValueError, match="duplicate merge keys"):
-        vt.merge(src, "id")
-
-
-def test_merge_into_empty_table_inserts(spark, vt):
-    src = _df(spark, 0, 7)
-    vt.merge(src, "id")
-    assert vt.read().count() == 7
 
 
 # --- zone maps (manifest-level data skipping) & compaction -------------------
@@ -263,7 +159,7 @@ def test_zone_maps_survive_merge_and_carry_over(spark, vt):
     vt.set_stats_cols(["id"])
     vt.append(_df(spark, 0, 100).coalesce(1))
     vt.append(_df(spark, 1000, 1100).coalesce(1))
-    vt.merge(spark.createDataFrame([(1050, "X")], "id long, s string"), "id")
+    vt.delete_where(F.col("id") == 1050)  # copy-on-write, like a merge
     m = vt._snapshot(vt.current_version())
     # every listed file still has stats: carried for untouched, fresh for rewritten
     assert set(m["stats"]) == set(m["files"])
@@ -295,7 +191,7 @@ def test_compact_preserves_rows_and_history(spark, vt):
     assert set(snap["stats"]) == set(snap["files"]) and len(snap["files"]) == 1
 
 
-# --- schema evolution & version diff -----------------------------------------
+# --- schema evolution -------------------------------------------------------
 
 
 def test_schema_evolution_appends_new_column(spark, vt):
@@ -310,27 +206,9 @@ def test_schema_evolution_appends_new_column(spark, vt):
     assert got[100] == 0.5 and got[0] is None  # old rows read NULL
 
 
-def test_diff_between_versions(spark, vt):
-    vt.append(_df(spark, 0, 5))
-    vt.merge(
-        spark.createDataFrame([(2, "CHANGED"), (50, "NEW")], "id long, s string"), "id"
-    )
-    vt.delete_where(F.col("id") == 4)
-    d = {(r.op, r.id) for r in vt.diff(0, vt.current_version(), ["id"]).collect()}
-    assert d == {("U", 2), ("I", 50), ("D", 4)}
-
-
-def test_diff_across_schema_evolution(spark, vt):
-    vt.append(_df(spark, 0, 3))
-    vt.append(spark.createDataFrame([(50, "n", 0.9)], "id long, s string, score double"))
-    d = {(r.op, r.id) for r in vt.diff(0, vt.current_version(), ["id"]).collect()}
-    # old rows now carry a NULL score column -> unchanged (null==null safe), new row is I
-    assert d == {("I", 50)}
-
-
 def test_vacuum_min_age_protects_inflight_writers(spark, vt):
     vt.append(_df(spark, 0, 10))
-    vt.overwrite(_df(spark, 0, 5))
+    vt.delete_where(F.col("id") >= 5)
     # a writer mid-flight: data landed, manifest not yet committed
     _df(spark, 900, 950).write.parquet(os.path.join(vt.data_dir, "txn-inflight"))
     out = vt.vacuum(keep_last=1, min_age_seconds=3600)
@@ -360,29 +238,6 @@ def test_delete_where_preserves_evolved_columns(spark, vt):
     assert "score" in out.columns
     got = {r.id: r.score for r in out.collect()}
     assert got[100] == 0.5 and 101 not in got and got[0] is None
-
-
-def test_merge_preserves_evolved_columns(spark, vt):
-    vt.append(_df(spark, 0, 5))
-    vt.append(spark.createDataFrame([(100, "r100", 0.5)], "id long, s string, score double"))
-    # source predates the evolved column: updated/inserted rows align in NULL,
-    # the untouched evolved row keeps its value
-    vt.merge(spark.createDataFrame([(2, "CHANGED"), (200, "NEW")], "id long, s string"), "id")
-    out = vt.read()
-    assert "score" in out.columns
-    got = {r.id: (r.s, r.score) for r in out.collect()}
-    assert got[100] == ("r100", 0.5)
-    assert got[2] == ("CHANGED", None) and got[200] == ("NEW", None)
-
-
-def test_merge_hitting_evolved_file_keeps_score_column(spark, vt):
-    vt.append(_df(spark, 0, 5))
-    vt.append(spark.createDataFrame([(100, "r100", 0.5), (101, "r101", 0.7)], "id long, s string, score double"))
-    # update a key INSIDE the evolved file: its survivors must keep score
-    vt.merge(spark.createDataFrame([(101, "UPD")], "id long, s string"), "id")
-    got = {r.id: (r.s, r.score) for r in vt.read().collect()}
-    assert got[100] == ("r100", 0.5)   # survivor of the rewritten evolved file
-    assert got[101] == ("UPD", None)   # updated from evolved-column-less source
 
 
 def test_txn_idempotence_survives_vacuum(spark, vt):
@@ -570,31 +425,6 @@ def test_zorder_compact_enables_multidim_pruning(spark, tmp_path):
     assert vt.read().count() == 20000
 
 
-def test_merge_probe_is_zone_pruned(spark, vt):
-    """With zone maps on the merge key, the matched-key probe must open
-    only files whose key zone overlaps the source batch — a small merge
-    into a key-clustered table never scans disjoint files."""
-    vt.set_stats_cols(["id"])
-    vt.append(_df(spark, 0, 100).coalesce(1))
-    vt.append(_df(spark, 1000, 1100).coalesce(1))
-    vt.append(_df(spark, 2000, 2100).coalesce(1))
-    calls = []
-    orig = vt._read_paths
-    vt._read_paths = lambda paths: (calls.append(list(paths)), orig(paths))[1]
-    v = vt.merge(
-        spark.createDataFrame([(1005, "UPD"), (1500, "NEW")], "id long, s string"),
-        "id",
-    )
-    vt._read_paths = orig
-    # first read is the probe: only the middle file's zone overlaps
-    # [1005, 1500]
-    assert len(calls[0]) == 1 and "txn-" in calls[0][0]
-    got = {r.id: r.s for r in vt.read(v).collect()}
-    assert got[1005] == "UPD" and got[1500] == "NEW"
-    assert got[0] == "r0" and got[2000] == "r2000"
-    assert len(got) == 301
-
-
 def test_concurrent_writers_all_commits_land(spark, vt):
     """Two REAL threads racing appends through the O_EXCL protocol: every
     commit must land exactly once, versions are gapless, and the final
@@ -682,18 +512,6 @@ def test_date_zone_maps_survive_process_restart(spark, tmp_path):
     assert 0 < len(pruned) < len(fresh._snapshot(fresh.current_version())["files"])
 
 
-def test_merge_into_emptied_snapshot_appends(spark, vt):
-    """merge() after a delete-all must behave as insert-all, not crash on
-    a zero-path read (read() itself raises on an empty version — that
-    pre-existing contract is unchanged)."""
-    vt.append(_df(spark, 0, 10))
-    vt.delete_where(F.lit(True))
-    with pytest.raises(ValueError, match="empty"):
-        vt.read()
-    vt.merge(_df(spark, 0, 4), "id")
-    assert vt.read().count() == 4
-
-
 def test_bloom_geometry_change_keeps_old_bitmaps_correct(spark, vt):
     vt.set_bloom_cols(["id"], n_bits=2048, n_hashes=3)
     vt.append(_df(spark, 0, 50))
@@ -721,7 +539,7 @@ def test_rollback_to_reclaimed_files_raises(spark, vt):
     (Rolling back past vacuumed MANIFESTS already raises at the snapshot
     read — this pins the files-gone-manifest-present window.)"""
     vt.append(_df(spark, 0, 10))
-    vt.overwrite(_df(spark, 0, 5))
+    vt.delete_where(F.col("id") >= 5)
     m0 = vt._snapshot(0)
     os.remove(os.path.join(vt.path, m0["files"][0]))  # simulate vacuum
     with pytest.raises(ValueError, match="vacuumed"):
@@ -737,29 +555,13 @@ def test_per_file_row_counts_ride_the_manifest(spark, vt):
     assert sum(m["stats"][f]["__rows"] for f in m["files"]) == 20
 
 
-def test_merge_persists_source_only_evolved_column(spark, vt):
-    """A merge batch carrying a NEW column must evolve the schema forward
-    (as append+mergeSchema would), not silently project it away: updated
-    and inserted rows keep their values, untouched rows read as NULL."""
-    vt.append(_df(spark, 0, 10))
-    src = spark.createDataFrame(
-        [(5, "upd5", 0.9), (100, "new100", 0.1)], "id long, s string, score double"
-    )
-    vt.merge(src, "id")
-    got = {r.id: (r.s, r.score) for r in vt.read().collect()}
-    assert got[5] == ("upd5", 0.9)
-    assert got[100] == ("new100", 0.1)
-    assert got[0] == ("r0", None)  # untouched row: evolved column is NULL
-    assert len(got) == 11
-
-
 def test_rollback_retries_after_losing_race(spark, vt, monkeypatch):
-    """Rollback is base-independent like overwrite: a lost commit race must
-    retry verbatim, not abort an operational restore."""
+    """Rollback is base-independent: a lost commit race must retry
+    verbatim, not abort an operational restore."""
     import json
 
     vt.append(_df(spark, 0, 10))
-    vt.overwrite(_df(spark, 0, 5))
+    vt.delete_where(F.col("id") >= 5)
     real = vt._try_commit
     state = {"raced": False}
 

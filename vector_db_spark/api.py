@@ -55,7 +55,7 @@ class VectorDBService:
     def _has_corpus(self) -> bool:
         """True iff the node-table path holds data files. Deliberately a
         FILESYSTEM check, not a try/read: a corpus that exists but fails
-        to read (e.g. incompatible evolved-column types) must RAISE on
+        to read (e.g. a corrupt part file) must RAISE on
         the next operation — swallowing the error here would route the
         next insert to init() and silently overwrite the whole corpus.
         Delegates to NodeTable.exists(), i.e. io.has_data_files."""
@@ -78,10 +78,10 @@ class VectorDBService:
         (indexing_service.py:77-89). Returns the number inserted."""
         embedded = docs.withColumn("embedding", self.embedder(F.col("content")))
         n = embedded.count()
+        # the docs' other columns go through too, so the node table's
+        # schema check rejects them instead of dropping them silently
         core = [f.name for f in NODE_SCHEMA.fields]
-        # evolved metadata columns beyond the core schema ride along — the
-        # storage layer reads with mergeSchema, so nothing is dropped
-        extras = [c for c in embedded.columns if c not in core]
+        others = [c for c in embedded.columns if c not in core]
         if self._has_corpus():
             self.nodes.append_with_ids(
                 embedded.select(
@@ -89,7 +89,7 @@ class VectorDBService:
                     "embedding",
                     "content",
                     "metadata",
-                    *extras,
+                    *others,
                 ),
                 batch_count=n,  # already counted above — skip the probe
             )
@@ -103,7 +103,7 @@ class VectorDBService:
                     "embedding",
                     "content",
                     "metadata",
-                    *extras,
+                    *others,
                 )
             )
         idx = self._index()
@@ -121,13 +121,15 @@ class VectorDBService:
         rewrite, storage.py delete semantics) and, when an index exists,
         the IVF partitions holding those vectors (partition-targeted
         rewrite, IVFIndex.delete) — store and index can never disagree
-        about membership. Returns the number actually removed."""
-        n_before = self.nodes.size()
+        about membership. Returns the number actually removed: the rows
+        whose id is in ``node_ids``, counted before the delete (ids are
+        unique, so that is the drop in table size)."""
+        n = self.nodes.df().filter(F.col("id").isin(node_ids)).count()
         self.nodes.delete(node_ids)
         idx = self._index()
         if idx is not None:
             idx.delete(node_ids)
-        return n_before - self.nodes.size()
+        return n
 
     # -- index build (V10) -----------------------------------------------------
 

@@ -160,113 +160,3 @@ def bq_search(
     )
     return nearest_k(exact, k)
 
-
-class BQIndex:
-    """Persisted binary-quantization index: the packed sign codes as an
-    at-rest Parquet table (32× smaller than the float column), plus a
-    one-row meta table (dim, threshold) so reopening needs no corpus scan.
-
-    The search first pass reads ONLY ``(id, words)`` from the codes table
-    (plan-pinned in tests/test_binquant.py: the float column never appears
-    in the codes FileScan's ReadSchema); the float vectors are touched for
-    the k·refine candidate rows alone, fetched from whatever table owns
-    them via a broadcast candidate probe."""
-
-    def __init__(self, spark, path: str, *, dim: int, threshold: float,
-                 id_col: str = "vec_id", word_col: str = "words"):
-        self.spark = spark
-        self.path = path
-        self.dim = dim
-        self.threshold = threshold
-        self.id_col = id_col
-        self.word_col = word_col
-
-    @property
-    def _codes_path(self) -> str:
-        return self.path.rstrip("/") + "/codes"
-
-    @classmethod
-    def build(
-        cls,
-        spark,
-        corpus: DataFrame,
-        path: str,
-        *,
-        dim: int,
-        threshold: float = 0.0,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> "BQIndex":
-        codes = bq_encode(
-            corpus, dim=dim, vec_col=vec_col, id_col=id_col, threshold=threshold
-        )
-        codes.write.mode("overwrite").parquet(path.rstrip("/") + "/codes")
-        spark.createDataFrame(
-            [(int(dim), float(threshold), id_col)],
-            "dim int, threshold double, id_col string",
-        ).write.mode("overwrite").parquet(path.rstrip("/") + "/meta")
-        return cls(spark, path, dim=dim, threshold=threshold, id_col=id_col)
-
-    @classmethod
-    def open(cls, spark, path: str) -> "BQIndex":
-        meta = spark.read.parquet(path.rstrip("/") + "/meta").collect()[0]
-        return cls(
-            spark, path, dim=int(meta.dim), threshold=float(meta.threshold),
-            id_col=meta.id_col,
-        )
-
-    def codes(self) -> DataFrame:
-        return self.spark.read.parquet(self._codes_path)
-
-    def search(
-        self,
-        queries: DataFrame,
-        corpus: DataFrame,
-        k: int = 10,
-        *,
-        refine: int = 4,
-        metric: str = "euclidean",
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_vec",
-        vec_col: str = "embedding",
-        round_to: int = 6,
-    ) -> DataFrame:
-        """Hamming first pass over the PERSISTED codes scan, exact re-rank
-        against ``corpus`` (the table owning the float vectors). Same
-        result contract as :func:`bq_search` over the same rows."""
-        qcodes = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("__qv"),
-            binarize_expr(query_vec_col, dim=self.dim, threshold=self.threshold).alias(
-                "__qw"
-            ),
-        )
-        scored = self.codes().crossJoin(
-            F.broadcast(qcodes.select("query_id", "__qw"))
-        ).select(
-            "query_id",
-            F.col(self.id_col).alias("neighbor_id"),
-            hamming_expr(self.word_col, "__qw").alias("hamming"),
-        )
-        cands = top_k_per_group(
-            scored,
-            ["query_id"],
-            [F.col("hamming").asc(), F.col("neighbor_id").asc()],
-            k * refine,
-        ).select("query_id", "neighbor_id", "hamming")
-        exact = (
-            corpus.select(
-                F.col(self.id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
-            )
-            .join(F.broadcast(cands), "neighbor_id")
-            .join(F.broadcast(qcodes.select("query_id", "__qv")), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(METRICS[metric](F.col("__qv"), F.col("__cv")), round_to).alias(
-                    "dist"
-                ),
-                "hamming",
-            )
-        )
-        return nearest_k(exact, k)

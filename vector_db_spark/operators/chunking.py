@@ -17,9 +17,9 @@ Scale posture:
   incremental re-chunking of changed docs upserts cleanly and the chunk
   table can be partitioned/bucketed by ``doc_id`` to co-locate with the
   parent table for join-free doc regrouping.
-- **search→doc regroup** is one aggregation keyed on the doc id already
-  present on every chunk row: max-score per (query, doc). At 100 TB the
-  chunk table is the big side; the grouping reuses the search output's
+- **search→doc regroup** (``queries/chunking.py``) is one aggregation
+  keyed on the doc id already present on every chunk row: best distance
+  per (query, doc). At 100 TB the chunk table is the big side; the grouping reuses the search output's
   partitioning (k·queries rows, tiny) — never a second corpus scan.
 
 Deterministic character math throughout, so a SQL oracle (DuckDB
@@ -95,19 +95,3 @@ def chunk_oracle_sql(
         f") s"
     )
 
-
-def search_hits_to_docs(
-    hits: DataFrame,
-    *,
-    query_col: str = "query_id",
-    doc_col: str = "doc_id",
-    score_col: str = "score",
-) -> DataFrame:
-    """Regroup chunk-level search hits to document granularity: best
-    chunk score per (query, doc) plus how many chunks of the doc hit.
-    Input is the (small) k·queries search output — one aggregation, no
-    corpus access."""
-    return hits.groupBy(query_col, doc_col).agg(
-        F.max(score_col).alias("best_score"),
-        F.count("*").alias("n_chunk_hits"),
-    )

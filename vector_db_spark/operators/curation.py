@@ -470,31 +470,6 @@ def per_group_top_frac(
     ).drop("__rk", "__n")
 
 
-def per_group_quantile_cut(
-    docs: DataFrame,
-    group_col: str,
-    score_col: str,
-    frac: float,
-    *,
-    max_centroids: int = 512,
-) -> DataFrame:
-    """The sort-free, corpus-scale form of :func:`per_group_top_frac`:
-    per-group score threshold from a mergeable quantile digest
-    (operators/sketches.py — raw scores never shuffle), broadcast back,
-    filter map-side. Keeps ≈ the top ``frac`` of each group, boundary
-    accuracy within the digest's rank-error bound (±2/max_centroids of
-    exact — pinned in tests/test_curation.py)."""
-    from vector_db_spark.operators.sketches import digest_quantiles, quantile_digest
-
-    dig = quantile_digest(docs, score_col, [group_col], max_centroids=max_centroids)
-    thr = digest_quantiles(dig, [1.0 - frac], [group_col]).select(
-        group_col, F.col("est").alias("__thr")
-    )
-    return docs.join(F.broadcast(thr), group_col).filter(
-        F.col(score_col) >= F.col("__thr")
-    ).drop("__thr")
-
-
 def group_sample_fixed_k(
     docs: DataFrame,
     group_col: str,

@@ -133,8 +133,6 @@ class DedupIndex:
         # absent -> layout v1 (no __txn partition level): readable, but
         # append-frozen (see module docstring)
         self.layout: int = p.get("layout", 1)
-        for store_path, _ in self._stores():  # heal any crashed compaction
-            self._recover_compaction(store_path)
 
     # -- paths ------------------------------------------------------------
 
@@ -316,48 +314,6 @@ class DedupIndex:
                 json.dump({"txn_id": txn_id}, f)
             os.replace(tmp, marker)
 
-    def compact(self) -> None:
-        """Fold every store's per-txn fragments into one consolidated txn
-        partition per bucket — the small-file answer for an index fed by
-        per-epoch appends (a year of daily epochs is 365 fragment files
-        per bucket per store; probes list and open all of them). Rows,
-        buckets, and probe answers are unchanged; only the ``__txn``
-        level collapses.
-
-        Runs from the maintenance scheduler, not concurrently with an
-        appender (the single-live-writer contract every table format
-        has). Committed-txn markers are kept: they are the replay-
-        detection record, so a replayed epoch whose data was folded into
-        the consolidated partition still no-ops on its marker instead of
-        re-adding rows beside the compacted copy — the same reason
-        ``VersionedTable.vacuum`` carries retired txn_ids forward.
-
-        Crash safety per store, without pinning a corpus-sized frame:
-        the consolidated copy is written to a ``.compacting`` sibling
-        (reads the live dir, writes elsewhere — no read-write cycle),
-        then swapped in with two renames. Every crash window is healed
-        by :meth:`_recover_compaction` (run on open and before each
-        compact): a finished sibling (its ``_SUCCESS`` present) with the
-        live dir already renamed away completes FORWARD; anything less
-        rolls back to the live data — compaction is re-runnable, the
-        live store is never the only unguarded copy."""
-        if self.layout < 2:
-            raise ValueError(
-                "this index uses the append-frozen v1 directory layout; "
-                "rebuild it with DedupIndex.build to enable compaction"
-            )
-        import shutil
-        import uuid
-
-        txn = f"compact-{uuid.uuid4().hex[:12]}"
-        for path, key_col in self._stores():
-            self._recover_compaction(path)
-            tmp, retired = path + ".compacting", path + ".retired"
-            self._store_write(self._read(path), key_col, tmp, txn, overwrite=True)
-            os.rename(path, retired)
-            os.rename(tmp, path)
-            shutil.rmtree(retired)
-
     def _size_of(self, path: str) -> int:
         """Total data bytes under one store, cached per handle (appends
         through this handle grow the store past the cached value, which
@@ -370,29 +326,6 @@ class DedupIndex:
                         total += os.path.getsize(os.path.join(root, name))
             self._store_bytes[path] = total
         return self._store_bytes[path]
-
-    def _stores(self) -> list[tuple[str, str]]:
-        """(path, probe-join key) for the three signature stores."""
-        return [
-            (self.fingerprints_path, "fingerprint"),
-            (self.bands_path, "band_key"),
-            (self.shingles_path, self.id_col),
-        ]
-
-    def _recover_compaction(self, path: str) -> None:
-        """Heal a crashed :meth:`compact` swap for one store. Idempotent;
-        called on open and before compacting."""
-        import shutil
-
-        tmp, retired = path + ".compacting", path + ".retired"
-        if not os.path.isdir(path) and os.path.isdir(retired):
-            if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-                os.rename(tmp, path)  # swap was mid-flight: finish forward
-            else:
-                os.rename(retired, path)  # incomplete copy: roll back
-        for leftover in (tmp, retired):
-            if os.path.isdir(path) and os.path.isdir(leftover):
-                shutil.rmtree(leftover)
 
     # -- tables -------------------------------------------------------------
 

@@ -22,10 +22,7 @@ properties the plain writer doesn't give:
 
 Scale posture: shard assignment, shuffle key and row fingerprint are all
 map-side md5 expressions inside whole-stage codegen. The manifest is one
-partial-aggregated ``groupBy(shard_id)`` (N rows out). The writer is one
-``repartition(shard_id) + sortWithinPartitions`` — exactly the shuffle the
-export semantically requires and no more; shard count scales with the
-cluster, bounding per-task sort volume at corpus/N.
+partial-aggregated ``groupBy(shard_id)`` (N rows out).
 """
 
 from __future__ import annotations
@@ -90,32 +87,6 @@ def shard_manifest(plan: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
         .select("shard_id", "n_rows", "checksum", F.col("head_id").cast("long"))
     )
-
-
-def write_shards(
-    plan: DataFrame, path: str, *, n_shards: int, fmt: str = "parquet"
-) -> None:
-    """Materialize the export: one directory per shard (Hive
-    ``shard_id=K``), rows in shuffle-key order within each file. The
-    repartition keys on ``shard_id`` so each task writes whole shards;
-    ``maxRecordsPerFile`` (session conf) splits oversized shards into
-    ordered file sequences without breaking determinism.
-
-    ``fmt``: ``parquet`` (columnar, the analytics default) or ``jsonl``
-    (newline-delimited JSON — the training-data interchange format most
-    LLM loaders consume directly). Same layout, same determinism."""
-    writer = (
-        plan.repartition(n_shards, "shard_id")
-        .sortWithinPartitions("shard_id", "shuffle_key")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-    )
-    if fmt == "parquet":
-        writer.parquet(path)
-    elif fmt == "jsonl":
-        writer.json(path)
-    else:
-        raise ValueError(f"unknown fmt {fmt!r}; choose 'parquet' or 'jsonl'")
 
 
 def rendezvous_shard(

@@ -50,17 +50,15 @@ class InvertedIndex:
     # -- build -----------------------------------------------------------------
 
     @classmethod
-    def _write(
+    def build(
         cls,
         spark: SparkSession,
         docs: DataFrame,
         path: str,
         *,
-        id_col: str,
-        text_col: str,
-        n_buckets: int,
-        mode: str,
-        prev: dict | None,
+        id_col: str = "doc_id",
+        text_col: str = "text",
+        n_buckets: int = 64,
     ) -> "InvertedIndex":
         toks = tokens(text_col)
         postings = (
@@ -78,74 +76,26 @@ class InvertedIndex:
         from vector_db_spark.io import write_clustered
 
         write_clustered(
-            postings, os.path.join(path, "postings"), mode=mode, key="bucket"
+            postings, os.path.join(path, "postings"), mode="overwrite", key="bucket"
         )
         doclens = docs.select(
             F.col(id_col).alias("doc_id"), F.size(toks).cast("double").alias("dl")
         )
-        doclens.write.mode(mode).parquet(os.path.join(path, "doclens"))
+        doclens.write.mode("overwrite").parquet(os.path.join(path, "doclens"))
         stats = docs.agg(
             F.count("*").cast("double").alias("n_docs"),
             F.sum(F.size(toks)).cast("double").alias("sum_dl"),
         ).collect()[0]
-        n_docs = stats["n_docs"] + (prev["n_docs"] if prev else 0.0)
-        sum_dl = stats["sum_dl"] + (prev.get("sum_dl", 0.0) if prev else 0.0)
         with open(os.path.join(path, "stats.json"), "w") as fh:
             json.dump(
                 {
-                    "n_docs": n_docs,
-                    "sum_dl": sum_dl,
-                    "avgdl": sum_dl / n_docs,
+                    "n_docs": stats["n_docs"],
+                    "avgdl": stats["sum_dl"] / stats["n_docs"],
                     "n_buckets": n_buckets,
                 },
                 fh,
             )
         return cls(spark, path)
-
-    @classmethod
-    def build(
-        cls,
-        spark: SparkSession,
-        docs: DataFrame,
-        path: str,
-        *,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        n_buckets: int = 64,
-    ) -> "InvertedIndex":
-        return cls._write(
-            spark, docs, path,
-            id_col=id_col, text_col=text_col, n_buckets=n_buckets,
-            mode="overwrite", prev=None,
-        )
-
-    def add(
-        self,
-        docs: DataFrame,
-        *,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-    ) -> "InvertedIndex":
-        """Incremental document addition: new posting/doclen files append
-        into the SAME bucket partition dirs (cost O(new docs), the
-        existing postings are never rewritten or read), and the global
-        stats update from the exact running ``sum_dl``. Searches after
-        ``add`` equal a from-scratch rebuild bit-for-bit (pinned by
-        test) because tf/df/dl are per-doc facts and n_docs/avgdl are
-        exact sums. Caller contract: new ids only (re-adding a doc
-        double-counts — delete support would need a tombstone table,
-        the VersionedTable pattern)."""
-        with open(os.path.join(self.path, "stats.json")) as fh:
-            prev = json.load(fh)
-        if "sum_dl" not in prev:  # stats written by an older build
-            prev["sum_dl"] = prev["n_docs"] * prev["avgdl"]
-        out = self._write(
-            self.spark, docs, self.path,
-            id_col=id_col, text_col=text_col, n_buckets=self.n_buckets,
-            mode="append", prev=prev,
-        )
-        self.n_docs, self.avgdl = out.n_docs, out.avgdl
-        return self
 
     # -- serving ---------------------------------------------------------------
 

@@ -147,7 +147,7 @@ class IVFIndex:
         # a committed-but-unfinished maintenance swap can have clusters
         # missing from the live layout; reading through it would be
         # silently wrong, not slow (two cheap fs.exists in the common case)
-        self._assert_no_pending_swap()
+        assert_no_pending_swap(self.spark, self.corpus_path, self._SWAP_TMPS)
         return self.spark.read.parquet(self.corpus_path)
 
     # -- build (reference ivf.py:49-85) ---------------------------------------
@@ -251,7 +251,7 @@ class IVFIndex:
 
     # -- delete (reference ivf.py:119-136) -------------------------------------
 
-    # -- staged-swap protocol (operators/staging.py, shared with IVFPQ) ---------
+    # -- staged-swap protocol (operators/staging.py) ---------------------------
 
     _SWAP_TMPS = (".tmp-delete", ".tmp-refresh")
 
@@ -263,10 +263,6 @@ class IVFIndex:
         clusters missing from the live layout, and a read that silently
         skipped them would be wrong, not slow. Idempotent; safe anytime."""
         return recover_staged(self.spark, self.corpus_path, self._SWAP_TMPS)
-
-    def _assert_no_pending_swap(self, table: str | None = None) -> None:
-        """Raise while ``table`` (default: the corpus) has a planned swap."""
-        assert_no_pending_swap(self.spark, table or self.corpus_path, self._SWAP_TMPS)
 
     def delete(self, ids: list[int]) -> None:
         """Rewrite only the partitions that contain the deleted ids — never

@@ -9,10 +9,9 @@ vectors) and owns only what the composition adds.
 Reused, not copied:
 
 - **coarse layer** — an :class:`~vector_db_spark.operators.ivf.IVFIndex`
-  over the same ``<path>``: its ``centroids/`` and ``corpus/`` readers
-  (with the pending-swap guard), ``assign``, the probe ranking
-  (``probe_join``), the one centroid-table writer and the cluster
-  statistics (``index.ivf.stats()``);
+  over the same ``<path>``: its ``centroids/`` and ``corpus/`` readers,
+  the probe ranking (``probe_join``), the one centroid-table writer and
+  the cluster statistics (``index.ivf.stats()``);
 - **codec** — a :class:`~vector_db_spark.operators.pq.PQModel` over the
   same ``<path>``: the one codebook writer and tensor reader, and the one
   PQ encode kernel :func:`~vector_db_spark.operators.pq.encode_chunks`.
@@ -20,8 +19,7 @@ Reused, not copied:
 Added here:
 
 - the ``codes/`` table (``vec_id``, ``codes`` partitioned by
-  ``cluster_id``) — the compressed corpus, the only thing ADC scans —
-  with its add/delete kept in step with ``corpus/`` (a paired staged swap);
+  ``cluster_id``) — the compressed corpus, the only thing ADC scans;
 - the **residual** step: codebooks are trained on, and vectors encoded as,
   ``x − centroid(x)``. Within a probed cluster vectors share their
   centroid, so quantizing the residual spends the whole codebook budget on
@@ -95,7 +93,6 @@ class IVFPQIndex:
         return os.path.join(self.path, "codes")
 
     def codes(self) -> DataFrame:
-        self.ivf._assert_no_pending_swap(self.codes_path)
         return self.spark.read.parquet(self.codes_path)
 
     def corpus(self) -> DataFrame:
@@ -123,126 +120,6 @@ class IVFPQIndex:
                 )
 
         return assigned.mapInPandas(enc, f"{id_col} long, codes array<int>, cluster_id int")
-
-    # -- lifecycle: incremental add / partition-targeted delete ----------------
-
-    def add(self, new_vectors: DataFrame) -> None:
-        """Incremental add (mirrors ``IVFIndex.add``; reference
-        ivf.py:87-117): coarse-assign, append to the partitioned corpus,
-        residual-encode the same rows against the persisted model, append
-        to the codes table. Cold partitions are never touched; the
-        codebooks are NOT retrained (FAISS semantics — retrain by
-        rebuilding when drift matters)."""
-        assigned = self.ivf.assign(
-            new_vectors.select(self.id_col, self.vec_col)
-        ).select(self.id_col, self.vec_col, "cluster_id")
-        assigned = assigned.cache()  # feeds both writes; tiny (one add batch)
-        write_clustered(assigned, self.ivf.corpus_path, mode="append")
-        codes = self._encode(
-            assigned, self.ivf.centroid_matrix(), self.pq.codebook_tensor()
-        )
-        write_clustered(codes, self.codes_path, mode="append")
-        assigned.unpersist()
-
-    _SWAP_TMPS = (".tmp-delete",)
-
-    def recover(self) -> dict:
-        """Complete (or discard) any interrupted staged delete swap as a
-        PAIR. The corpus plan is the pair's single commit point (see
-        :meth:`delete` for the ordering that makes this sound): if the
-        corpus staging dir carries a plan, BOTH swaps are driven forward
-        (the codes plan was durably written earlier, so it exists); if
-        not, both staging dirs are discarded — a codes plan without a
-        corpus plan never touched a live table and must not be replayed
-        alone, or the pair would diverge."""
-        from vector_db_spark.operators.staging import (
-            _hadoop_fs,
-            execute_swap,
-            read_swap_plan,
-            recover_staged,
-        )
-
-        corpus_table = os.path.join(self.path, "corpus")
-        codes_table = os.path.join(self.path, "codes")
-        out: dict[str, str] = {}
-        for suffix in self._SWAP_TMPS:
-            corpus_tmp = corpus_table.rstrip("/") + suffix
-            codes_tmp = codes_table.rstrip("/") + suffix
-            if read_swap_plan(self.spark, corpus_tmp) is not None:
-                # pair committed: drive both forward (idempotent)
-                execute_swap(self.spark, codes_table, codes_tmp)
-                execute_swap(self.spark, corpus_table, corpus_tmp)
-                out[f"corpus{suffix}"] = out[f"codes{suffix}"] = "completed"
-            else:
-                # No corpus plan. A PLANNED codes tmp here is one of two
-                # states, disambiguated by whether a corpus STAGING dir
-                # exists: under the pair protocol delete() stages BOTH
-                # tmps before writing either plan, so corpus-tmp-present
-                # means pre-commit pair staging (discard both); corpus-
-                # tmp-ABSENT can only be the legacy per-table protocol
-                # (its corpus half had already fully swapped and removed
-                # its tmp) — that codes plan is COMMITTED legacy work
-                # and must be driven forward, whether or not execution
-                # started (old-cluster_id= dirs inside the tmp are the
-                # only copies of retired live data; deleting them
-                # destroys clusters the corpus still has).
-                jpath, fs = _hadoop_fs(self.spark, codes_tmp)
-                if fs.exists(jpath(codes_tmp)):
-                    has_plan = read_swap_plan(self.spark, codes_tmp) is not None
-                    legacy_committed = has_plan and not fs.exists(
-                        jpath(corpus_tmp)
-                    )
-                    if legacy_committed:
-                        execute_swap(self.spark, codes_table, codes_tmp)
-                        out[f"codes{suffix}"] = "completed"
-                    else:
-                        fs.delete(jpath(codes_tmp), True)
-                        out[f"codes{suffix}"] = "discarded"
-                got = recover_staged(self.spark, corpus_table, (suffix,))
-                out.update({f"corpus{k}": v for k, v in got.items()})
-        return out
-
-    def delete(self, ids: list[int]) -> None:
-        """Partition-targeted delete across BOTH tables (corpus + codes)
-        via the staged-swap protocol (operators/staging.py) — same contract
-        as ``IVFIndex.delete``: cold clusters untouched, fully-emptied
-        cluster directories retired (not left stale), and a crash at any
-        point either never touched a live table or replays forward through
-        :meth:`recover` — live data is never deleted before its
-        replacement is in place.
-
-        Pair atomicity: BOTH tables are staged before either plan is
-        written; the codes plan lands first and the corpus plan is the
-        pair's commit point. A crash before the corpus plan → both
-        stagings discarded (old pair intact); after → :meth:`recover`
-        replays both forward. The two tables can never settle on
-        different sides of the delete."""
-        from vector_db_spark.operators.staging import execute_swap, write_swap_plan
-
-        self.recover()
-        affected = (
-            self.codes()
-            .filter(F.col(self.id_col).isin(ids))
-            .select("cluster_id")
-            .distinct()
-            .collect()
-        )
-        clusters = [r.cluster_id for r in affected]
-        if not clusters:
-            return
-        tables = {}
-        for sub, df in (("corpus", self.corpus()), ("codes", self.codes())):
-            table = os.path.join(self.path, sub)
-            remaining = df.filter(
-                F.col("cluster_id").isin(clusters) & ~F.col(self.id_col).isin(ids)
-            )
-            tmp = table.rstrip("/") + ".tmp-delete"
-            write_clustered(remaining, tmp)
-            tables[sub] = (table, tmp)
-        write_swap_plan(self.spark, tables["codes"][1], clusters, [])
-        write_swap_plan(self.spark, tables["corpus"][1], clusters, [])  # commit
-        execute_swap(self.spark, *tables["codes"])
-        execute_swap(self.spark, *tables["corpus"])
 
     # -- build ----------------------------------------------------------------
 

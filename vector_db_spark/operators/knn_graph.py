@@ -232,40 +232,12 @@ def components_from_edges(
     return labels.select(F.col("src").alias("id"), F.col("comp").alias("component"))
 
 
-def connected_components(
-    graph: DataFrame, id_col: str = "vec_id", max_iter: int = 50
-) -> DataFrame:
-    """(id, component) for an adjacency-shaped graph ``(id, neighbors
-    array)`` — explodes to an edge list and delegates to
-    :func:`components_from_edges` (isolated nodes keep their own label).
-    Agreement with the driver BFS is pinned in tests/test_knn_graph.py."""
-    edges = graph.select(F.col(id_col).alias("src"), F.explode("neighbors").alias("dst"))
-    comp = components_from_edges(edges, nodes=graph.select(id_col), max_iter=max_iter)
-    return comp.select(F.col("id").alias(id_col), "component")
-
-
-def graph_connectivity_distributed(graph: DataFrame, id_col: str = "vec_id") -> float:
-    """Corpus-scale version of :func:`graph_connectivity`: fraction of
-    nodes sharing the min-id node's component, computed without ever
-    collecting edges (two scalar aggregates over ``connected_components``)."""
-    comp = connected_components(graph, id_col)
-    # hash-min labels every component by its min member id, so the min-id
-    # start node's component is exactly the global min label
-    row = (
-        comp.groupBy("component")
-        .agg(F.count("*").alias("sz"))
-        .agg(F.sum("sz").alias("n"), F.min_by("sz", "component").alias("reach"))
-        .collect()[0]
-    )
-    return 1.0 if not row.n else row.reach / row.n
-
-
 def graph_connectivity(graph: DataFrame, id_col: str = "vec_id") -> float:
     """Fraction of nodes reachable from the min-id node by undirected BFS —
     the reference's structural invariant (tests/indexing/
     test_hnsw.py:155-185 demands ≥ 0.9). Driver-side BFS over the edge
-    list; test/fixture-scale only — pipelines must use
-    :func:`graph_connectivity_distributed`."""
+    list; test/fixture-scale only — the reference check the graph tests
+    apply to built graphs."""
     edges = graph.select(id_col, F.explode("neighbors").alias("dst")).collect()
     adj: dict[int, set[int]] = {}
     for r in edges:
@@ -1430,9 +1402,11 @@ def _integral_ids(df: DataFrame, cols: tuple[str, str]) -> bool:
     return all(by_name.get(c) in _INTEGRAL_TYPES for c in cols)
 
 
-def edge_support(edges: DataFrame) -> DataFrame:
-    """(a, b, support): per-edge triangle count of an undirected graph
-    (a<b normalized).
+def _edge_support(e: DataFrame, n_edges: int) -> DataFrame:
+    """(a, b, support): per-edge triangle count over ``e``, which must
+    already be the canonical edge set: columns ``(a, b)`` with ``a < b``,
+    distinct, materialized, and ``n_edges`` rows. The k-truss peel holds
+    exactly that set every round.
 
     Routed by edge count: under ``_SUPPORT_INTERSECT_MAX_EDGES``
     integral-id edges, support(a,b) = |N(a) ∩ N(b)| over a broadcast
@@ -1442,22 +1416,6 @@ def edge_support(edges: DataFrame) -> DataFrame:
     (x<y<z) credits all three of its edges — one explode + one keyed count
     after the close. Both routes return the identical exact table (pinned
     by tests/test_r10_optimizations.py)."""
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    return _edge_support(e, e.count())
-
-
-def _edge_support(e: DataFrame, n_edges: int) -> DataFrame:
-    """:func:`edge_support` over ``e``, which must already be the canonical
-    edge set: columns ``(a, b)`` with ``a < b``, distinct, materialized,
-    and ``n_edges`` rows. The k-truss peel holds exactly that set every
-    round, so it skips the normalize + distinct exchange and the count."""
     if _integral_ids(e, ("a", "b")) and route.small(
         n_edges, _SUPPORT_INTERSECT_MAX_EDGES, "knn_graph.edge_support"
     ):

@@ -1,6 +1,6 @@
 """Staged partition-swap protocol for plain-Parquet partitioned tables.
 
-The index maintenance ops (IVF/IVFPQ delete, IVF refresh) rewrite a subset
+The IVF index maintenance ops (delete, refresh) rewrite a subset
 of ``cluster_id=N`` partition directories. Plain Parquet has no manifest, so
 atomicity comes from a small filesystem protocol instead:
 

@@ -34,7 +34,7 @@ Design (all public knowledge):
 - Commit = exclusive creation (O_EXCL) of the next manifest file: exactly
   one writer wins each version number; a loser gets
   :class:`CommitConflict` and re-validates against the new head —
-  ``append`` re-derives its base, ``overwrite``/``rollback`` retry
+  ``append`` re-derives its base, ``rollback`` retries
   verbatim, a conflicted ``delete_where`` must re-scan (optimistic
   concurrency — the local-FS/HDFS form; on an object store the same
   protocol rides a conditional PUT / put-if-absent).
@@ -67,7 +67,7 @@ from pyspark.sql import functions as F
 _MANIFEST_DIR = "_manifest"
 _DATA_DIR = "data"
 
-# sentinel: "this commit is base-independent" (overwrite/rollback)
+# sentinel: "this commit is base-independent" (rollback)
 _ANY_BASE = object()
 
 
@@ -205,13 +205,6 @@ class VersionedTable:
         vs = self._versions()
         return vs[-1] if vs else None
 
-    def history(self) -> list[dict]:
-        """Commit log, oldest first: ``{version, op, n_files, n_rows}``."""
-        return [
-            {k: m[k] for k in ("version", "op", "n_files", "n_rows")}
-            for m in (self._read_manifest(v) for v in self._versions())
-        ]
-
     # -- file statistics (manifest-level zone maps) ---------------------------
 
     def set_stats_cols(self, cols: Sequence[str]) -> None:
@@ -333,14 +326,12 @@ class VersionedTable:
             [os.path.join(self.path, f) for f in files]
         ).filter(F.col(col) == value)
 
-    def pruned_files(
-        self, col: str, lo=None, hi=None, *, version: int | None = None
-    ) -> list[str]:
-        """Files of ``version`` whose [min, max] zone for ``col`` overlaps
-        [lo, hi] — decided entirely from the manifest (no footer reads).
-        Files without recorded stats (written before ``set_stats_cols``,
-        or all-NULL zones) are conservatively kept."""
-        v = self.current_version() if version is None else version
+    def pruned_files(self, col: str, lo=None, hi=None) -> list[str]:
+        """Files of the current version whose [min, max] zone for ``col``
+        overlaps [lo, hi] — decided entirely from the manifest (no footer
+        reads). Files without recorded stats (written before
+        ``set_stats_cols``, or all-NULL zones) are conservatively kept."""
+        v = self.current_version()
         if v is None:
             raise ValueError("empty table")
         # zones are stored in canonical (json-stable) form — date/timestamp
@@ -405,16 +396,15 @@ class VersionedTable:
         AND readers can never observe a half-written manifest. Losing
         raises :class:`CommitConflict` — the CALLER decides whether its
         file list is still valid against the new head (append re-derives
-        its base; overwrite/rollback retry verbatim; a conflicting
-        delete/merge must re-scan).
+        its base; rollback retries verbatim; a conflicting delete must
+        re-scan).
 
         ``base_version`` closes the lost-update window: a caller whose
         file list was derived from snapshot N passes ``base_version=N``,
         and the commit is refused when the head has since moved — without
         it, a commit that landed between the caller's snapshot read and
         this claim would have its files silently diffed away as
-        ``remove`` entries. Base-independent ops (overwrite, rollback)
-        omit it."""
+        ``remove`` entries. The base-independent rollback omits it."""
         os.makedirs(self.manifest_dir, exist_ok=True)
         head = self.current_version()
         if base_version is not _ANY_BASE and head != base_version:
@@ -431,8 +421,6 @@ class VersionedTable:
         new_files = set(files)
         add = sorted(new_files - base_files)
         remove = sorted(base_files - new_files)
-        import time as _time
-
         manifest = {
             "version": version,
             "op": op,
@@ -440,7 +428,6 @@ class VersionedTable:
             "remove": remove,
             "n_files": len(files),
             "n_rows": n_rows,
-            "ts": _time.time(),  # commit wall clock, recorded in the log
         }
         if txn_id is not None:
             manifest["txn_id"] = txn_id
@@ -549,7 +536,7 @@ class VersionedTable:
         back = self.spark.read.parquet(out)
         stats_cols = [c for c in self.stats_cols() if c in back.columns]
         # per-file row counts are ALWAYS recorded (stats key "__rows"):
-        # they make delete/merge's carried-over row total a manifest-only
+        # they make delete's carried-over row total a manifest-only
         # sum instead of an O(table) recount scan
         aggs = [F.count("*").alias("__n")]
         for c in stats_cols:
@@ -671,16 +658,6 @@ class VersionedTable:
                 continue
         raise CommitConflict(f"append lost {retries} consecutive commit races")
 
-    def overwrite(self, df: DataFrame, *, retries: int = 5) -> int:
-        """Overwrite is base-independent — a lost race retries verbatim."""
-        files, n, pend = self._write_files(df)
-        for _ in range(retries):
-            try:
-                return self._try_commit(files, "overwrite", n, pending=pend)
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"overwrite lost {retries} consecutive commit races")
-
     def delete_where(self, cond: Column) -> int:
         """Copy-on-write delete: prune to the files that contain matching
         rows (one filtered scan collecting distinct ``input_file_name`` —
@@ -718,124 +695,6 @@ class VersionedTable:
             base_version=prev,
         )
 
-    def merge(
-        self,
-        source: DataFrame,
-        key: str,
-        *,
-        update: bool = True,
-        insert: bool = True,
-    ) -> int:
-        """MERGE (upsert) with copy-on-write file pruning: rows of
-        ``source`` whose ``key`` exists in the table replace the stored
-        row (``update``); unmatched source rows append (``insert``).
-
-        Only files that contain a matched key are rewritten — the same
-        ``input_file_name`` pruning as :meth:`delete_where`, so a merge
-        touching one hot shard's worth of keys rewrites one shard, not
-        the table. The matched-key probe broadcasts the source keys
-        (a merge batch is small relative to the table by definition;
-        corpus-sized source = overwrite). Duplicate keys WITHIN source
-        are rejected — ambiguous-merge semantics differ per engine, so
-        this surface refuses rather than guesses.
-
-        When the merge key has zone maps (:meth:`set_stats_cols`), the
-        probe scan itself is PRE-pruned from the manifest: only files
-        whose [min, max] zone for the key overlaps the source batch's
-        [min, max] are opened at all, so merging a small batch into a
-        key-clustered 100 TB table scans the overlapping shard, not the
-        table. Untouched files' rows never leave disk."""
-        prev = self.current_version()
-        if prev is None:
-            if not insert:
-                raise ValueError("empty table")
-            return self.append(source)
-        dup = source.groupBy(key).count().filter(F.col("count") > 1).limit(1).collect()
-        if dup:
-            raise ValueError(f"source has duplicate merge keys, e.g. {key}={dup[0][0]!r}")
-        m = self._snapshot(prev)
-        if not m["files"]:
-            # a delete-all left an empty snapshot: same semantics as the
-            # empty-table case (there is nothing to match against)
-            if not insert:
-                raise ValueError("empty table")
-            return self.append(source)
-        # zone-pruned probe: files whose key zone cannot contain any source
-        # key are carried over without being opened
-        probe_files = list(m["files"])
-        if key in self.stats_cols():
-            b = source.agg(
-                F.min(key).alias("lo"), F.max(key).alias("hi")
-            ).collect()[0]
-            if b["lo"] is not None:
-                probe_files = self.pruned_files(key, b["lo"], b["hi"], version=prev)
-        current = [os.path.join(self.path, f) for f in m["files"]]
-        probe_paths = [os.path.join(self.path, f) for f in probe_files]
-        df = (
-            self._read_paths(probe_paths).withColumn("__file", F.input_file_name())
-            if probe_paths
-            else self._read_paths(current).limit(0).withColumn(
-                "__file", F.input_file_name()
-            )
-        )
-        keys = source.select(key)
-        matched = df.join(F.broadcast(keys), key, "left_semi")
-        hit_files = {
-            self._rel_file(r["__file"])
-            for r in matched.select("__file").distinct().collect()
-        }
-        keep = [f for f in m["files"] if f not in hit_files]
-        # matched keys = table keys ∩ source keys — bounded by the merge
-        # batch, so every probe below broadcasts THIS set, never the hit
-        # files' full key column (hit files can hold 500M rows; their key
-        # set is not broadcast-sized, the batch's is)
-        matched_keys = matched.select(key).distinct()
-        new_parts: list[DataFrame] = []
-        if hit_files:
-            hit_df = self._read_paths(
-                [os.path.join(self.path, f) for f in sorted(hit_files)]
-            )
-            survivors = hit_df.join(F.broadcast(keys), key, "left_anti")
-            updated = (
-                source.join(F.broadcast(matched_keys), key, "left_semi")
-                if update
-                else hit_df.join(F.broadcast(keys), key, "left_semi")
-            )
-            new_parts += [survivors, updated]
-        if insert:
-            new_parts.append(source.join(F.broadcast(matched_keys), key, "left_anti"))
-        # merged-snapshot column set: deriving cols from a plain read would
-        # pick one txn dir's schema and drop evolved columns from the commit.
-        # Parts missing an evolved column (e.g. source predates it) align
-        # in as typed NULLs — same semantics as reading their files would.
-        # SOURCE-only columns evolve the schema forward (snapshot cols
-        # first, new source cols appended) — projecting every part to the
-        # snapshot's set alone would silently drop a column the same batch
-        # routed through append()+mergeSchema would have persisted.
-        snap_dtypes = self._read_paths(current).dtypes
-        snap_names = {c for c, _ in snap_dtypes}
-        all_dtypes = snap_dtypes + [
-            (c, t) for c, t in source.dtypes if c not in snap_names
-        ]
-        cols = [c for c, _ in all_dtypes]
-        combined = None
-        for part in new_parts:
-            for c, t in all_dtypes:
-                if c not in part.columns:
-                    part = part.withColumn(c, F.lit(None).cast(t))
-            part = part.select(*cols)
-            combined = part if combined is None else combined.unionByName(part)
-        if combined is None:
-            return self._try_commit(
-                m["files"], "merge", m["n_rows"], base_version=prev
-            )
-        new_files, n_new, pend = self._write_files(combined)
-        kept_rows = self._kept_rows(m, keep)
-        return self._try_commit(
-            keep + new_files, "merge", kept_rows + n_new, pending=pend,
-            base_version=prev,
-        )
-
     def rollback(self, version: int) -> int:
         """Restore an old snapshot as a NEW commit (history is never
         erased; the bad versions stay inspectable).
@@ -857,8 +716,8 @@ class VersionedTable:
                 f"vacuumed data file(s), e.g. {missing[0]!r}"
             )
         # the restored files' zones may be absent from the current head —
-        # re-seed them from the target snapshot. Like overwrite, a rollback
-        # is base-independent (it restores a fixed file list regardless of
+        # re-seed them from the target snapshot. A rollback is
+        # base-independent (it restores a fixed file list regardless of
         # what the loser of the race committed), so a lost commit race
         # retries verbatim — the module contract at the top of this file.
         for _ in range(5):
@@ -959,24 +818,6 @@ class VersionedTable:
         return self.spark.read.option("mergeSchema", "true").parquet(
             *[os.path.join(self.path, f) for f in m["files"]]
         )
-
-    def diff(self, old_version: int, new_version: int, keys: list[str]) -> DataFrame:
-        """CDC changeset between two snapshots — time travel composed with
-        ``operators.scd.snapshot_diff``: (op I/U/D, *keys, new-side values)
-        answering "what changed between version A and B" from the log.
-        Versions may span schema evolution: a column absent from one side
-        is aligned in as NULL, so adding a populated column surfaces as U
-        rows rather than an analysis error."""
-        from vector_db_spark.operators.scd import snapshot_diff
-
-        old_df, new_df = self.read(old_version), self.read(new_version)
-        for c, t in new_df.dtypes:
-            if c not in old_df.columns:
-                old_df = old_df.withColumn(c, F.lit(None).cast(t))
-        for c, t in old_df.dtypes:
-            if c not in new_df.columns:
-                new_df = new_df.withColumn(c, F.lit(None).cast(t))
-        return snapshot_diff(old_df, new_df, keys)
 
     # -- maintenance ----------------------------------------------------------
 

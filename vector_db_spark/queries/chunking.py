@@ -83,8 +83,7 @@ def chunk_semantic_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hits = knn_join(queries, embedded.select("vec_id", "embedding"), CHUNK_TOP_K,
                     impl="batch")
-    # regroup chunk hits to docs: best (min) distance + hit arity per doc —
-    # the lower-is-better twin of operators.chunking.search_hits_to_docs
+    # regroup chunk hits to docs: best (min) distance + hit arity per doc
     w = Window.partitionBy("query_id").orderBy(
         F.col("best_dist").asc(), F.col("doc_id").asc()
     )

@@ -1535,8 +1535,7 @@ def value_percentile_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     before mixing heterogeneous score scales). SQL-standard percent_rank
     over a unique (value, id) order — engine-identical; one key shuffle.
     At corpus scale the sort-free twin is the digest-threshold form
-    (operators/sketches.quantile_digest), same trade as
-    per_group_quantile_cut."""
+    (operators/sketches.quantile_digest)."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "error")
     )

@@ -450,8 +450,8 @@ def incremental_dedup_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with every stage's count conserved and exactly-once checked. The
 # pieces each have their own oracled rows (incremental_dedup_indexed,
 # node_table_crud_audit, versioned_lifecycle_audit, ivf_*); this row
-# proves the COMPOSITION: one pass of the streaming maintenance sink
-# (streaming/maintenance.py dedup_maintenance_stream) run inline.
+# proves the COMPOSITION: probe -> accept -> epoch-txn'd append to the
+# corpus VersionedTable and the DedupIndex, replayed once, run inline.
 
 _MAINT_AUDIT_CACHE: dict[str, tuple] = {}
 

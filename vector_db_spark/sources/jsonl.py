@@ -1,9 +1,7 @@
 """``vdb_jsonl`` — batch DataSource over a directory of JSONL shards.
 
-Round-trips the shard layout written by
-:func:`vector_db_spark.operators.export.write_shards` (and by this
-module's own writer): a directory of ``*.jsonl`` files, one JSON object
-per line. The reference's closest analogue is the HTTP document-ingest
+Round-trips the shard layout this module's own writer produces: a
+directory of ``*.jsonl`` files, one JSON object per line. The reference's closest analogue is the HTTP document-ingest
 boundary (reference api/app.py:119-160) — rows enter/leave the engine as
 JSON records; here that boundary is a planned, partition-parallel scan
 instead of a request loop.

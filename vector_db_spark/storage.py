@@ -12,15 +12,16 @@ DataFrame:
   are new Parquet files; 100 TB is just more files.
 - The "embedding all zeros = free slot" heuristic (storage.py:183-196),
   which misclassifies a legitimate zero vector, is NOT replicated —
-  deletions are explicit anti-join rewrites (or Delta deletes when
-  available).
+  deletions are explicit anti-join rewrites.
 - Content/metadata truncation at 10 KB / 5 KB (storage.py:217-222) is NOT
   replicated — Parquet strings are unbounded.
 - ``get_next_id`` = max+1 (storage.py:276-280) has a distributed equivalent
   for batch appends: ``max(id) + row_number over the new batch``.
 
 Schema (SURVEY.md §1.5): ``id long, embedding array<float>, content string,
-metadata map<string,string>``.
+metadata map<string,string>`` — the one fixed row type; per-document
+attributes live in ``metadata``. Reads pin this schema, so opening the
+table starts no Spark job.
 """
 
 from __future__ import annotations
@@ -58,24 +59,11 @@ class NodeTable:
         self.spark = spark
         self.path = path
         self.dim = dim
-        # instance-local merged-schema cache: mergeSchema reads every part
-        # footer, and df() sits on every hot-path op — merge once, reuse
-        # until this instance writes (external writers bypass the cache;
-        # reopen the NodeTable to observe their columns)
-        self._schema_cache: T.StructType | None = None
 
     # -- reads ---------------------------------------------------------------
 
     def df(self) -> DataFrame:
-        # mergeSchema: batches may carry EVOLVED columns beyond NODE_SCHEMA
-        # (appended after the table was created); the union schema surfaces
-        # them with nulls for pre-evolution files. Core column types stay
-        # stable because every write path normalizes them via _validate.
-        if self._schema_cache is not None:
-            return self.spark.read.schema(self._schema_cache).parquet(self.path)
-        out = self.spark.read.option("mergeSchema", "true").parquet(self.path)
-        self._schema_cache = out.schema
-        return out
+        return self.spark.read.schema(NODE_SCHEMA).parquet(self.path)
 
     def exists(self) -> bool:
         return has_data_files(self.path)
@@ -107,30 +95,22 @@ class NodeTable:
 
     def _validate(self, nodes: DataFrame) -> DataFrame:
         """Dimension check on write (reference mmap_vector_store.py:100-107),
-        plus core-schema normalization: the four NODE_SCHEMA columns must be
-        present and are cast to their canonical types (so mergeSchema reads
-        never see type drift); EVOLVED extra columns pass through intact."""
+        plus schema normalization: the batch must carry exactly the four
+        NODE_SCHEMA columns, which are cast to their canonical types and
+        put in schema order. A column outside NODE_SCHEMA is rejected, not
+        dropped: per-document attributes belong in ``metadata``."""
         missing = [f.name for f in NODE_SCHEMA.fields if f.name not in nodes.columns]
         if missing:
             raise ValueError(f"nodes batch is missing core columns {missing}")
-        nodes = nodes.withColumns(
-            {f.name: F.col(f.name).cast(f.dataType) for f in NODE_SCHEMA.fields}
+        unknown = [c for c in nodes.columns if c not in NODE_SCHEMA.fieldNames()]
+        if unknown:
+            raise ValueError(
+                f"nodes batch has columns outside the node schema {unknown}; "
+                "put per-document attributes in metadata"
+            )
+        nodes = nodes.select(
+            [F.col(f.name).cast(f.dataType) for f in NODE_SCHEMA.fields]
         )
-        # evolved columns must keep a stable type across batches: a clash
-        # would poison every later mergeSchema read (and a silent cast
-        # could null out data) — fail THIS write instead
-        core = {f.name for f in NODE_SCHEMA.fields}
-        extras = {f.name: f.dataType for f in nodes.schema.fields if f.name not in core}
-        if extras and self.exists():
-            persisted = {f.name: f.dataType for f in self.df().schema.fields}
-            for name, dt in extras.items():
-                if name in persisted and persisted[name] != dt:
-                    raise ValueError(
-                        f"evolved column {name!r} arrives as {dt.simpleString()} "
-                        f"but the table already stores it as "
-                        f"{persisted[name].simpleString()}; changing an evolved "
-                        "column's type is not supported"
-                    )
         if self.dim is not None:
             nodes = nodes.withColumn(
                 "__dim_ok",
@@ -147,13 +127,11 @@ class NodeTable:
 
     def init(self, nodes: DataFrame) -> None:
         self._validate(nodes).write.mode("overwrite").parquet(self.path)
-        self._schema_cache = None
 
     def append(self, nodes: DataFrame) -> None:
         """Append-only insert (reference save at storage.py:198-230). Caller
         guarantees new ids; use :meth:`upsert` otherwise."""
         self._validate(nodes).write.mode("append").parquet(self.path)
-        self._schema_cache = None
 
     def append_with_ids(self, nodes: DataFrame, *, batch_count: int | None = None) -> None:
         """Assign ids ``max(existing)+row_number`` to id-less rows — the
@@ -194,9 +172,7 @@ class NodeTable:
                 .withColumn("id", (F.col("__rowno") + F.lit(start)).cast("long"))
                 .drop("__ord", "__rowno")
             )
-        core = [f.name for f in NODE_SCHEMA.fields]
-        extras = [c for c in withids.columns if c not in core]
-        self.append(withids.select(core + extras))
+        self.append(withids)
 
     def upsert(self, nodes: DataFrame) -> None:
         """INSERT OR REPLACE (reference storage.py:377-400 SQLite path; L4
@@ -208,7 +184,7 @@ class NodeTable:
         # anti-join and permanently break id uniqueness (get() returning 2
         # rows, delete/append id arithmetic on a non-unique key). There is
         # no deterministic "last write wins" on an unordered DataFrame, so
-        # reject loudly — same contract as VersionedTable.merge.
+        # reject loudly.
         dup = (
             nodes.groupBy("id").agg(F.count("*").alias("__n")).filter(F.col("__n") > 1)
         )
@@ -218,12 +194,7 @@ class NodeTable:
                 "upsert batch contains duplicate ids (no deterministic "
                 f"last-write order on a DataFrame): {[r['id'] for r in dup_rows]}"
             )
-        existing = self.df()
-        # allowMissingColumns: either side may carry evolved columns the
-        # other predates — absent cells become null, nothing is dropped
-        merged = existing.join(nodes.select("id"), "id", "left_anti").unionByName(
-            nodes, allowMissingColumns=True
-        )
+        merged = self.df().join(nodes.select("id"), "id", "left_anti").unionByName(nodes)
         self._rewrite(merged)
 
     def delete(self, node_ids: list[int]) -> None:
@@ -234,9 +205,8 @@ class NodeTable:
     def _rewrite(self, df: DataFrame) -> None:
         tmp = self.path.rstrip("/") + ".tmp"
         df.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.option("mergeSchema", "true").parquet(tmp)
+        final = self.spark.read.schema(NODE_SCHEMA).parquet(tmp)
         final.write.mode("overwrite").parquet(self.path)
-        self._schema_cache = None
         # best-effort cleanup of the staging dir
         try:
             import shutil

@@ -211,59 +211,9 @@ def ingest_stream(
         # deliberately NOT io.write_clustered here: a per-micro-batch
         # shuffle buys nothing when the batch is already small, and
         # streaming appends accumulate files per EPOCH regardless — file
-        # count is owned by the compaction pass
-        # (operators/maintenance.compact_parquet), the standard
+        # count is owned by a separate compaction pass, the standard
         # streaming-sink hygiene, not by the ingest hot path.
         assigned.write.mode("append").partitionBy("cluster_id").parquet(sink_path)
-
-    return (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def versioned_ingest_stream(
-    spark: SparkSession,
-    source_dir: str,
-    table_path: str,
-    *,
-    schema: str,
-    checkpoint_dir: str,
-    transform=None,
-    txn_prefix: str = "ingest",
-    max_files_per_trigger: int = 1,
-):
-    """Exactly-once streaming ingest into a :class:`VersionedTable`.
-
-    ``foreachBatch`` is at-least-once: a crash between the sink's write
-    and the checkpoint's epoch commit replays the epoch, and a blind
-    ``mode("append")`` sink (``ingest_stream`` above) would duplicate it.
-    Here the sink is ``VersionedTable.append(txn_id=f"{prefix}:{epoch}")``
-    — the epoch id is stamped into the manifest log, so a replayed epoch
-    finds its transaction already committed and becomes a no-op. End to
-    end: source offsets tracked by the checkpoint, sink idempotent on the
-    epoch id ⇒ exactly-once table contents under any crash/replay.
-
-    Readers additionally get snapshot isolation per micro-batch: each
-    epoch is one atomic version, so "the table as of batch N" is a
-    time-travel read — the lineage a training-data pipeline wants.
-
-    ``transform`` (optional batch_df → df) runs inside the batch before
-    the commit (cleaning, embedding, assignment)."""
-    from vector_db_spark.operators.versioned import VersionedTable
-
-    table = VersionedTable(spark, table_path)
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        df = transform(batch_df) if transform is not None else batch_df
-        table.append(df, txn_id=f"{txn_prefix}:{epoch_id}")
 
     return (
         src.writeStream.foreachBatch(sink)
