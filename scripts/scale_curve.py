@@ -32,7 +32,6 @@ Other tables are hard-linked unchanged. Usage:
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import shutil

@@ -5,6 +5,7 @@ short-circuit, health, persistence across 'restarts'."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from vector_db_spark.api import VectorDBService
@@ -78,6 +79,10 @@ def test_incremental_insert_updates_index(spark, service):
     )
     service.insert_documents(more)
     assert service.health()["index_vectors"] == 5
+    # the index holds exactly the stored ids
+    stored = sorted(r.id for r in service.nodes.all_ids().collect())
+    indexed = sorted(r.id for r in service._index().corpus().select("id").collect())
+    assert indexed == stored == [1, 2, 3, 4, 5]
     top = [r for r in service.search(["Purple Plum"], top_k=1, n_probe=2).collect() if r.rank == 1][0]
     assert top.content == "Purple Plum"
     assert top.distance < 1e-6
@@ -149,6 +154,45 @@ def test_delete_documents_removes_from_store_and_index(spark, tmp_path):
     )
     got = idx.search(q, k=3, n_probe=3)
     assert got.count() == 3
+
+    # an emptied store numbers from 1 again, like a new one
+    svc.delete_documents([r.id for r in svc.nodes.all_ids().collect()])
+    assert svc.nodes.size() == 0
+    assert svc.insert_documents(docs.limit(1)) == 1
+    assert [r.id for r in svc.nodes.all_ids().collect()] == [1]
+    assert [r.id for r in idx.corpus().select("id").collect()] == [1]
+
+
+def test_insert_embeds_each_document_once(spark, tmp_path):
+    """The embedder runs once per inserted document, into a new store and
+    into an indexed one: the batch is materialized once, and the index is
+    fed the rows that were written."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from vector_db_spark.functions.embedding import _stub_vec
+
+    embedded = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf(T.ArrayType(T.FloatType()))
+    def counting_embedder(texts: pd.Series) -> pd.Series:
+        embedded.add(len(texts))
+        return texts.map(lambda t: _stub_vec(t, 8))
+
+    svc = VectorDBService(spark, str(tmp_path / "svc"), dim=8, embedder=counting_embedder)
+
+    def docs(tag, n):
+        return spark.createDataFrame(
+            [(f"{tag} document {i}", {"tag": tag}) for i in range(n)],
+            "content string, metadata map<string,string>",
+        )
+
+    assert svc.insert_documents(docs("first", 12)) == 12
+    assert embedded.value == 12
+    svc.build_index(k=2)
+    assert svc.insert_documents(docs("second", 5)) == 5
+    assert embedded.value == 12 + 5
+    assert svc.health()["index_vectors"] == 17
 
 
 def test_unreadable_index_raises_instead_of_going_exact(spark, service):

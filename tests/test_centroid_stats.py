@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
-
 from vector_db_spark.operators.centroid_stats import (
     assign_batch,
     centroid_stats,

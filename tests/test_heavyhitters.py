@@ -7,8 +7,6 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-from pyspark.sql import functions as F
-
 from vector_db_spark.operators.heavyhitters import _mg_candidates, heavy_hitters
 
 

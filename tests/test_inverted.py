@@ -3,8 +3,6 @@ corpus-scan scorer, partition-pruned posting reads, stats exactness."""
 
 from __future__ import annotations
 
-import os
-
 from vector_db_spark.io import load_table
 from vector_db_spark.operators.hybrid import bm25_topk
 from vector_db_spark.operators.inverted import InvertedIndex

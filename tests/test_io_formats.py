@@ -4,9 +4,6 @@ and bucketed tables enable shuffle-free joins."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from vector_db_spark.io import load_table
 
 

@@ -70,11 +70,13 @@ def test_mega_cluster_salt_split(spark):
 
 
 def _components(graph):
-    """Hash-min component labels of an adjacency-shaped graph."""
+    """Hash-min component labels of an adjacency-shaped graph; a self-loop
+    per node keeps nodes without neighbors as singletons."""
     edges = graph.select(F.col("vec_id").alias("src"), F.explode("neighbors").alias("dst"))
+    loops = graph.select(F.col("vec_id").alias("src"), F.col("vec_id").alias("dst"))
     return {
         r.id: r.component
-        for r in components_from_edges(edges, nodes=graph.select("vec_id")).collect()
+        for r in components_from_edges(edges.unionByName(loops)).collect()
     }
 
 
@@ -95,19 +97,20 @@ def test_distributed_connectivity_agrees_with_bfs(spark, graph):
     assert _components(two_islands) == {0: 0, 1: 0, 10: 10, 11: 10, 12: 10}
 
 
-def test_components_long_path_converges_logarithmically(spark):
+def test_components_long_path_converges_logarithmically(spark, monkeypatch):
     """A 200-link path has diameter 200: pure label propagation needs
-    ~200 rounds, so max_iter=20 proves the pointer-shortcutting rounds
+    ~200 rounds, so a 20-round cap proves the pointer-shortcutting rounds
     are O(log n). Labels must be the exact min member id (0)."""
-    from vector_db_spark.operators.knn_graph import components_from_edges
+    from vector_db_spark.operators import knn_graph as kg
 
+    monkeypatch.setattr(kg, "_MAX_ITER", 20)
     n = 200
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "src long, dst long"
     )
     comp = {
         r.id: r.component
-        for r in components_from_edges(edges, max_iter=20).collect()
+        for r in components_from_edges(edges).collect()
     }
     assert comp == {i: 0 for i in range(n + 1)}
 
@@ -136,21 +139,20 @@ def test_components_random_graph_matches_union_find(spark):
 
     from vector_db_spark.operators.knn_graph import components_from_edges
 
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    edges = spark.createDataFrame(raw, "src long, dst long")
-    got = {
-        r.id: r.component
-        for r in components_from_edges(edges, nodes=nodes).collect()
-    }
+    # a self-loop per node keeps the isolated ones as singletons
+    loops = [(i, i) for i in range(n)]
+    edges = spark.createDataFrame(raw + loops, "src long, dst long")
+    got = {r.id: r.component for r in components_from_edges(edges).collect()}
     assert got == want
 
 
-def test_components_nonconvergence_raises(spark):
-    from vector_db_spark.operators.knn_graph import components_from_edges
+def test_components_nonconvergence_raises(spark, monkeypatch):
+    from vector_db_spark.operators import knn_graph as kg
 
+    monkeypatch.setattr(kg, "_MAX_ITER", 2)
     edges = spark.createDataFrame([(i, i + 1) for i in range(40)], "src long, dst long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        components_from_edges(edges, max_iter=2)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        components_from_edges(edges)
 
 
 def test_tiny_cluster_graceful(spark):

@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from vector_db_spark.operators.pca import PCAModel, fit_pca
+from vector_db_spark.operators.pca import fit_pca
 
 
 def _data(n=300, d=16, seed=7):

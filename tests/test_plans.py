@@ -7,7 +7,6 @@ pruning, and aggregations keep map-side partial phases."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from vector_db_spark.io import load_table

@@ -161,9 +161,10 @@ def test_connected_components_matches_union_find(edges, n_nodes):
         "vec_id long, neighbors array<bigint>",
     )
     edges = graph.select(F.col("vec_id").alias("src"), F.explode("neighbors").alias("dst"))
+    loops = graph.select(F.col("vec_id").alias("src"), F.col("vec_id").alias("dst"))
     got = {
         r.id: r.component
-        for r in components_from_edges(edges, nodes=graph.select("vec_id")).collect()
+        for r in components_from_edges(edges.unionByName(loops)).collect()
     }
 
     parent = list(range(n_nodes))

@@ -178,7 +178,8 @@ def test_shard_component_stats_matches_hash_min(spark):
     edges = l0.select(
         F.col("src_id").alias("src"), F.explode("neighbors").alias("dst")
     )
-    comp = components_from_edges(edges, nodes=l0.select("src_id").distinct())
+    loops = l0.select(F.col("src_id").alias("src"), F.col("src_id").alias("dst"))
+    comp = components_from_edges(edges.unionByName(loops))
     want_rows = (
         l0.select("cluster_id", "shard", F.col("src_id").alias("id"))
         .distinct()

@@ -28,8 +28,6 @@ def test_remote_embed_with_injected_transport(spark):
 
 
 def test_expectations_catch_planted_violations(spark):
-    from pyspark.sql import functions as F
-
     from vector_db_spark.operators.quality import (
         expect_foreign_key,
         expect_in_range,

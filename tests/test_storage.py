@@ -92,6 +92,19 @@ def test_zero_vector_is_not_a_free_slot(spark, table):
     assert table.get(10).count() == 1  # survives an unrelated rewrite
 
 
+def _jobs_of(spark, group, fn):
+    """``fn()``'s result and the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_missing_core_column_raises(spark, table, tmp_path):
     bad = spark.createDataFrame(
         [(20, [1.0, 0.0, 0.0, 0.0], "No Meta")],
@@ -119,33 +132,30 @@ def test_missing_core_column_raises(spark, table, tmp_path):
         [("Purple Grape", {"kind": "fruit"}, "batch-7")],
         "content string, metadata map<string,string>, ingest_tag string",
     )
-    with pytest.raises(ValueError, match="outside the node schema.*'ingest_tag'"):
-        svc.insert_documents(docs)
+
+    def insert():
+        with pytest.raises(ValueError, match="outside the node schema.*'ingest_tag'"):
+            svc.insert_documents(docs)
+
+    # rejected from the column names alone, before any count or embedding
+    _, jobs = _jobs_of(spark, "insert-extra-column", insert)
+    assert jobs == []
     assert not svc.nodes.exists()
 
 
 def test_open_reads_with_the_fixed_schema_and_no_spark_job(spark, table):
     """Opening an existing table pins NODE_SCHEMA: its df() starts no
     Spark job (a schema-inferring read runs a footer-merge job)."""
-    sc = spark.sparkContext
-
-    def jobs_of(group, make_df):
-        sc.setJobGroup(group, group)
-        try:
-            df = make_df()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return df, sc.statusTracker().getJobIdsForGroup(group)
-
     # the probe sees the job an inferring read starts
-    _, control = jobs_of(
+    _, control = _jobs_of(
+        spark,
         "node-open-merge",
         lambda: spark.read.option("mergeSchema", "true").parquet(table.path),
     )
     assert control
-    df, jobs = jobs_of("node-open", lambda: NodeTable(spark, table.path).df())
+    df, jobs = _jobs_of(
+        spark, "node-open", lambda: NodeTable(spark, table.path).df()
+    )
     assert jobs == []
     assert [(f.name, f.dataType) for f in df.schema] == [
         (f.name, f.dataType) for f in NODE_SCHEMA
@@ -193,8 +203,8 @@ def test_append_with_ids_large_batch_routes_distributed(spark, table, force_larg
 
 
 def test_append_with_ids_max_id_zero_not_treated_as_empty(spark, tmp_path):
-    """A table whose max id is 0 must hand out 1 next — the falsy-zero
-    `or -1` idiom would mint a duplicate id 0."""
+    """A table whose max id is 0 hands out 1 next, not a duplicate 0; an
+    emptied or missing table hands out 1 too."""
     from vector_db_spark.storage import NodeTable
 
     t = NodeTable(spark, str(tmp_path / "zero"), dim=4)
@@ -204,6 +214,19 @@ def test_append_with_ids_max_id_zero_not_treated_as_empty(spark, tmp_path):
     )
     ids = sorted(r.id for r in t.all_ids().collect())
     assert ids == [0, 1]
+
+    # an emptied table numbers from 1, like a missing one
+    t.delete(ids)
+    t.append_with_ids(
+        _nodes(spark, [(-1, [0.0, 0.0, 1.0, 0.0], "third", {})]).drop("id")
+    )
+    assert [r.id for r in t.all_ids().collect()] == [1]
+    missing = NodeTable(spark, str(tmp_path / "missing"), dim=4)
+    n, written = missing.append_with_ids(
+        _nodes(spark, [(-1, [0.0, 0.0, 0.0, 1.0], "fourth", {})]).drop("id")
+    )
+    assert n == 1 and [r.id for r in written.collect()] == [1]
+    assert [r.id for r in missing.all_ids().collect()] == [1]
 
 
 def test_upsert_rejects_duplicate_batch_ids(spark, table):

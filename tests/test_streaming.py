@@ -4,10 +4,8 @@ handling (SURVEY.md §2.8)."""
 
 from __future__ import annotations
 
-import os
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 from vector_db_spark.streaming.ingest import (
@@ -212,8 +210,6 @@ def test_percolation_over_doc_stream(spark, tmp_path):
     table through foreachBatch — the union of per-batch alerts must equal
     the batch percolation over all docs (alerts are per-doc pure, so
     commit boundaries cannot change them)."""
-    import os
-
     from vector_db_spark.operators.hybrid import percolate
     from vector_db_spark.streaming.ingest import query_serving_stream
 

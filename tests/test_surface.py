@@ -9,7 +9,9 @@ aliases), never a word in a comment or docstring. A module function ``f``
 is used when code names ``f`` outside ``f``'s own body. A method ``C.m`` is
 used when code accesses ``.m`` outside ``C.m``'s own body, in a file that
 defines ``C``, names ``C`` or imports ``C``'s module. A use inside a def
-that is itself unused does not count."""
+that is itself unused does not count.
+
+Every imported name is used, too (``test_no_unused_imports``)."""
 
 from __future__ import annotations
 
@@ -179,3 +181,53 @@ def test_no_public_def_is_named_only_by_tests():
     assert not bad, "public defs used only by tests:\n" + "\n".join(bad)
     stale = sorted(q for q in ALLOWED if q not in unused)
     assert not stale, f"allowlist entries that are used elsewhere or gone: {stale}"
+
+
+def _unused_imports(f: pathlib.Path) -> list[str]:
+    """``file:line name`` of every name ``f`` imports and never uses. A
+    use is a name in code or in a string annotation. Imports from
+    ``__future__``, imports inside a ``try:`` body (availability probes)
+    and names listed in ``__all__`` are exempt."""
+    tree = ast.parse(f.read_text(), str(f))
+    probes = {
+        id(n) for t in ast.walk(tree) if isinstance(t, ast.Try)
+        for stmt in t.body for n in ast.walk(stmt)
+    }
+    used = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            used.add(n.id)
+        elif isinstance(n, ast.Assign) and any(
+            getattr(t, "id", None) == "__all__" for t in n.targets
+        ):
+            used |= {e.value for e in n.value.elts}
+        ann = getattr(n, "annotation", None) or getattr(n, "returns", None)
+        if isinstance(ann, ast.AST):
+            used |= {
+                m.id
+                for c in ast.walk(ann)
+                if isinstance(c, ast.Constant) and isinstance(c.value, str)
+                for m in ast.walk(ast.parse(c.value, mode="eval"))
+                if isinstance(m, ast.Name)
+            }
+    return [
+        f"{f.relative_to(ROOT)}:{n.lineno} {bound}"
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        and id(n) not in probes
+        and getattr(n, "module", None) != "__future__"
+        for a in n.names
+        if (bound := a.asname or a.name.split(".")[0]) not in used
+    ]
+
+
+def test_no_unused_imports():
+    """Every imported name is used. ``__init__.py`` files are exempt:
+    their imports re-export names or register queries."""
+    files = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    for d in ("vector_db_spark", "tests", "scripts"):
+        files += sorted((ROOT / d).rglob("*.py"))
+    bad = [
+        b for f in files if f.name != "__init__.py" for b in _unused_imports(f)
+    ]
+    assert not bad, "unused imports:\n" + "\n".join(bad)

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from vector_db_spark.functions.embedding import embed_column, stub_embedder
+from vector_db_spark.functions.embedding import embed_column
 from vector_db_spark.functions.text import shingles, tokens, winnow_fingerprints
 from vector_db_spark.io import load_table
 from vector_db_spark.operators.dedup import (
@@ -92,14 +92,11 @@ def test_dedup_retain_best_transitive_chain(spark):
 
 
 def test_components_from_edges_min_label(spark):
+    # self-loops make 5 and 99 singleton components
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (5, 5)], "src long, dst long"
+        [(1, 2), (2, 3), (10, 11), (5, 5), (99, 99)], "src long, dst long"
     )
-    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 5, 10, 11, 99)], "id long")
-    comp = {
-        r.id: r.component
-        for r in components_from_edges(edges, nodes=nodes).collect()
-    }
+    comp = {r.id: r.component for r in components_from_edges(edges).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 5: 5, 10: 10, 11: 10, 99: 99}
 
 

@@ -8,7 +8,7 @@ boundaries):
 
 | reference endpoint | here |
 |---|---|
-| ``POST /embed`` insert (app.py:119-160): embed → next id → storage save → incremental index insert | :meth:`insert_documents`: embed UDF → max+row_number ids → NodeTable append → centroid-assign append to the IVF corpus |
+| ``POST /embed`` insert (app.py:119-160): embed → next id → storage save → incremental index insert | :meth:`insert_documents`: embed UDF → ``NodeTable.append_with_ids`` (max+row_number ids, one materialized copy, append) → the written rows centroid-assigned and appended to the IVF corpus |
 | ``POST /search`` (app.py:165-233): embed query → metadata filter → ANN search → format | :meth:`search`: embed → Catalyst predicate filter (pushed down, not post-hoc like the reference's hnsw filter_ids) → IVF n_probe search (or exact brute force) → join content/metadata |
 | ``GET /health`` (app.py:107-116) | :meth:`health` |
 | service startup / index load-on-start (app.py:42-101, L3) | the constructor — index state is Parquet, "loading" is ``spark.read`` |
@@ -29,7 +29,7 @@ from vector_db_spark.functions.embedding import stub_embedder
 from vector_db_spark.io import has_data_files
 from vector_db_spark.operators.ivf import IVFIndex
 from vector_db_spark.operators.knn import knn_join
-from vector_db_spark.storage import NODE_SCHEMA, NodeTable
+from vector_db_spark.storage import NodeTable
 
 
 class VectorDBService:
@@ -52,68 +52,30 @@ class VectorDBService:
 
     # -- startup state (L3) ---------------------------------------------------
 
-    def _has_corpus(self) -> bool:
-        """True iff the node-table path holds data files. Deliberately a
-        FILESYSTEM check, not a try/read: a corpus that exists but fails
-        to read (e.g. a corrupt part file) must RAISE on
-        the next operation — swallowing the error here would route the
-        next insert to init() and silently overwrite the whole corpus.
-        Delegates to NodeTable.exists(), i.e. io.has_data_files."""
-        return self.nodes.exists()
-
     def _index(self) -> IVFIndex | None:
-        """The IVF index iff its centroid table holds data files — the same
-        filesystem check as :meth:`_has_corpus`, so a present but unreadable
-        index raises on its next read instead of turning search exact and
-        leaving inserts out of the index."""
+        """The IVF index iff its centroid table holds data files — a
+        filesystem check (``io.has_data_files``), not a try/read, so a
+        present but unreadable index raises on its next read instead of
+        turning search exact and leaving inserts out of the index."""
         idx = IVFIndex(self.spark, self.index_path, id_col="id", vec_col="embedding")
         return idx if has_data_files(idx.centroids_path) else None
 
     # -- write path (POST /embed) ---------------------------------------------
 
     def insert_documents(self, docs: DataFrame) -> int:
-        """``docs``: (content string, metadata map<string,string>). Embeds,
-        assigns dense ids (max+1 semantics, storage.py:276-280), persists,
-        and incrementally extends the IVF index when one exists
-        (indexing_service.py:77-89). Returns the number inserted."""
-        embedded = docs.withColumn("embedding", self.embedder(F.col("content")))
-        n = embedded.count()
-        # the docs' other columns go through too, so the node table's
-        # schema check rejects them instead of dropping them silently
-        core = [f.name for f in NODE_SCHEMA.fields]
-        others = [c for c in embedded.columns if c not in core]
-        if self._has_corpus():
-            self.nodes.append_with_ids(
-                embedded.select(
-                    F.lit(None).cast("long").alias("id"),
-                    "embedding",
-                    "content",
-                    "metadata",
-                    *others,
-                ),
-                batch_count=n,  # already counted above — skip the probe
-            )
-        else:
-            from pyspark.sql import Window
-
-            w = Window.orderBy(F.monotonically_increasing_id())
-            self.nodes.init(
-                embedded.select(
-                    F.row_number().over(w).cast("long").alias("id"),
-                    "embedding",
-                    "content",
-                    "metadata",
-                    *others,
-                )
-            )
+        """``docs``: (content string, metadata map<string,string>); any
+        other column is rejected before a Spark job runs. Embeds once,
+        numbers and appends through :meth:`NodeTable.append_with_ids`
+        (ids ``max(id)+1`` onwards, from 1 on an empty store —
+        storage.py:276-280), and extends the IVF index, when one exists,
+        with exactly the rows written (indexing_service.py:77-89).
+        Returns the number inserted."""
+        n, written = self.nodes.append_with_ids(
+            docs.withColumn("embedding", self.embedder(F.col("content")))
+        )
         idx = self._index()
         if idx is not None:
-            new_ids = (
-                self.nodes.df()
-                .join(idx.corpus().select(F.col("id")), "id", "left_anti")
-                .select("id", "embedding")
-            )
-            idx.add(new_ids)
+            idx.add(written.select("id", "embedding"))
         return n
 
     def delete_documents(self, node_ids: list[int]) -> int:
@@ -236,7 +198,7 @@ class VectorDBService:
 
     def health(self) -> dict:
         idx = self._index()
-        n = self.nodes.size() if self._has_corpus() else 0
+        n = self.nodes.size() if self.nodes.exists() else 0
         out = {"status": "healthy", "storage_nodes": n, "index": idx is not None}
         if idx is not None:
             stats = idx.stats().collect()[0]

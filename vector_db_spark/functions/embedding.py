@@ -24,7 +24,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 

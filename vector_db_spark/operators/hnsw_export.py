@@ -37,7 +37,6 @@ corpus already has.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd

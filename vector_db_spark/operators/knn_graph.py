@@ -151,20 +151,19 @@ def knn_graph(
     )
 
 
+# label-propagation rounds before components_from_edges refuses; with
+# pointer shortcutting convergence is O(log n) rounds
+_MAX_ITER = 50
+
+
 def components_from_edges(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    *,
-    nodes: DataFrame | None = None,
-    max_iter: int = 50,
+    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
 ) -> DataFrame:
-    """(id, component) from an undirected edge list by hash-min label
-    propagation WITH pointer shortcutting — the shared Pregel-style core
-    behind graph connectivity AND duplicate-cluster grouping
-    (operators/dedup.py). ``nodes`` is an optional one-column DataFrame
-    of every node id; ids absent from ``edges`` become singleton
-    components. Defaults to edge endpoints.
+    """(id, component) over the edge endpoints of an undirected edge list
+    by hash-min label propagation WITH pointer shortcutting — the shared
+    Pregel-style core behind graph connectivity AND duplicate-cluster
+    grouping (operators/dedup.py). A self-loop ``(i, i)`` makes ``i`` a
+    singleton component.
 
     Each iteration every node adopts the minimum label in its closed
     neighborhood, then follows its label's label
@@ -174,11 +173,11 @@ def components_from_edges(
     alone needs O(diameter) rounds — a 10k-link near-dup chain would
     need 10k rounds; with shortcutting label depth collapses
     geometrically and convergence is O(log n) rounds (pinned on a long
-    path in tests/test_knn_graph.py), so ``max_iter=50`` covers any
-    component that fits on hardware. Per round: two joins + one
+    path in tests/test_knn_graph.py), so ``_MAX_ITER`` = 50 rounds cover
+    any component that fits on hardware. Per round: two joins + one
     aggregation; ``localCheckpoint`` keeps lineage O(1).
 
-    Raises RuntimeError if ``max_iter`` rounds pass without a fixpoint —
+    Raises RuntimeError if ``_MAX_ITER`` rounds pass without a fixpoint —
     unconverged labels split one component into several, which silently
     corrupts every downstream consumer (dedup survivor groups, DBSCAN
     clusters), so refusing is the only safe behavior."""
@@ -188,13 +187,10 @@ def components_from_edges(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if nodes is None:
-        nodes = edges.select("src").distinct()
-    else:
-        id_col = nodes.columns[0]
-        nodes = nodes.select(F.col(id_col).alias("src")).distinct()
-    labels = nodes.select("src", F.col("src").cast("long").alias("comp"))
-    for it in range(max_iter):
+    labels = edges.select("src").distinct().select(
+        "src", F.col("src").cast("long").alias("comp")
+    )
+    for _ in range(_MAX_ITER):
         nbr = (
             edges.join(labels.select(F.col("src").alias("dst"), "comp"), "dst")
             .groupBy("src")
@@ -225,9 +221,9 @@ def components_from_edges(
             break
     else:
         raise RuntimeError(
-            f"components_from_edges did not converge in {max_iter} rounds "
+            f"components_from_edges did not converge in {_MAX_ITER} rounds "
             "(with shortcutting this means a pathological input, not a "
-            "large diameter); raise max_iter explicitly if intended"
+            "large diameter)"
         )
     return labels.select(F.col("src").alias("id"), F.col("comp").alias("component"))
 

@@ -91,7 +91,6 @@ def global_row_number(
 
     ``order_cols`` must be a total order (add a tiebreak id) or the
     numbering is partition-dependent."""
-    import pandas as pd
     from pyspark import TaskContext
 
     n_parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism

@@ -272,14 +272,12 @@ class VersionedTable:
             for i in range(n_hashes)
         ]
 
-    def pruned_files_eq(
-        self, col: str, value, *, version: int | None = None
-    ) -> list[str]:
-        """Files of ``version`` whose bloom for ``col`` might contain
-        ``value`` — decided from the manifest alone. Files without a
-        recorded bloom are conservatively kept; a kept file is a maybe,
+    def pruned_files_eq(self, col: str, value) -> list[str]:
+        """Files of the current version whose bloom for ``col`` might
+        contain ``value`` — decided from the manifest alone. Files without
+        a recorded bloom are conservatively kept; a kept file is a maybe,
         a dropped file is a guarantee."""
-        v = self.current_version() if version is None else version
+        v = self.current_version()
         if v is None:
             raise ValueError("empty table")
         cfg = self.bloom_config()
@@ -315,13 +313,13 @@ class VersionedTable:
                 keep.append(f)
         return keep
 
-    def read_point(self, col: str, value, *, version: int | None = None) -> DataFrame:
-        """Bloom-pruned point lookup: only possibly-matching files reach
-        the scan; the equality predicate is still applied (blooms bound,
-        they don't filter rows)."""
-        files = self.pruned_files_eq(col, value, version=version)
+    def read_point(self, col: str, value) -> DataFrame:
+        """Bloom-pruned point lookup on the current version: only
+        possibly-matching files reach the scan; the equality predicate is
+        still applied (blooms bound, they don't filter rows)."""
+        files = self.pruned_files_eq(col, value)
         if not files:
-            return self.read(version).limit(0).filter(F.col(col) == value)
+            return self.read().limit(0).filter(F.col(col) == value)
         return self._read_paths(
             [os.path.join(self.path, f) for f in files]
         ).filter(F.col(col) == value)

@@ -93,21 +93,26 @@ class NodeTable:
 
     # -- writes --------------------------------------------------------------
 
-    def _validate(self, nodes: DataFrame) -> DataFrame:
-        """Dimension check on write (reference mmap_vector_store.py:100-107),
-        plus schema normalization: the batch must carry exactly the four
-        NODE_SCHEMA columns, which are cast to their canonical types and
-        put in schema order. A column outside NODE_SCHEMA is rejected, not
-        dropped: per-document attributes belong in ``metadata``."""
-        missing = [f.name for f in NODE_SCHEMA.fields if f.name not in nodes.columns]
+    @staticmethod
+    def _check_columns(columns: list[str]) -> None:
+        """The batch must carry exactly the four NODE_SCHEMA columns. A
+        column outside NODE_SCHEMA is rejected, not dropped: per-document
+        attributes belong in ``metadata``."""
+        missing = [f.name for f in NODE_SCHEMA.fields if f.name not in columns]
         if missing:
             raise ValueError(f"nodes batch is missing core columns {missing}")
-        unknown = [c for c in nodes.columns if c not in NODE_SCHEMA.fieldNames()]
+        unknown = [c for c in columns if c not in NODE_SCHEMA.fieldNames()]
         if unknown:
             raise ValueError(
                 f"nodes batch has columns outside the node schema {unknown}; "
                 "put per-document attributes in metadata"
             )
+
+    def _validate(self, nodes: DataFrame) -> DataFrame:
+        """Dimension check on write (reference mmap_vector_store.py:100-107),
+        plus schema normalization: the columns are checked, cast to their
+        canonical types and put in schema order."""
+        self._check_columns(nodes.columns)
         nodes = nodes.select(
             [F.col(f.name).cast(f.dataType) for f in NODE_SCHEMA.fields]
         )
@@ -133,30 +138,26 @@ class NodeTable:
         guarantees new ids; use :meth:`upsert` otherwise."""
         self._validate(nodes).write.mode("append").parquet(self.path)
 
-    def append_with_ids(self, nodes: DataFrame, *, batch_count: int | None = None) -> None:
-        """Assign ids ``max(existing)+row_number`` to id-less rows — the
-        distributed form of get_next_id (storage.py:276-280).
+    def append_with_ids(self, nodes: DataFrame) -> tuple[int, DataFrame]:
+        """Number an id-less batch ``start..start+n-1`` and append it — the
+        distributed form of get_next_id (storage.py:276-280) and the
+        service's one ingest path. ``start`` is ``max(id) + 1``, or 1 when
+        the table is missing or empty. Returns ``(n, written)``: the batch
+        count and the rows as written. The columns are checked before any
+        Spark job; the numbered batch is materialized once, so the
+        dimension check, the write and ``written`` read one copy and the
+        batch's lineage (an embedding UDF) runs once.
 
-        Ingest-shaped batches (size-routed, ``vector_db_spark.route``)
-        take one global window over the NEW BATCH only — a single task,
-        fine at that size. Larger batches route through
-        ``global_row_number`` (range repartition + per-partition offsets),
-        so a corpus-sized id-less load never funnels through one task;
-        the order key is a content digest (ties only between identical
-        rows, whose numbering is interchangeable — the id block is
-        ``start..start+n-1`` either way). ``batch_count``: callers that
-        already counted the batch (insert_documents counts it to report n
-        inserted) pass it here so the size probe doesn't re-evaluate the
-        batch lineage — which can embed every document a second time."""
-        max_id = self.df().agg(F.max("id")).collect()[0][0]
-        # explicit None test: `or -1` would misread a legitimate max id of
-        # 0 as "empty table" and hand out a duplicate id 0
-        start = (max_id if max_id is not None else -1) + 1
-        if batch_count is not None:
-            small = route.small(batch_count, _MAX_WINDOW_ID_BATCH, "storage.id_batch")
-        else:
-            small = route.fits(nodes, _MAX_WINDOW_ID_BATCH, "storage.id_batch")
-        if small:
+        Batches within the size route take one global window over the new
+        batch only — a single task, fine at that size. Larger ones go
+        through ``global_row_number`` (range repartition + per-partition
+        offsets), ordered by a content digest: ties only between identical
+        rows, whose numbering is interchangeable."""
+        self._check_columns([c for c in nodes.columns if c != "id"] + ["id"])
+        n = nodes.count()
+        max_id = self.df().agg(F.max("id")).collect()[0][0] if self.exists() else None
+        start = (max_id or 0) + 1  # a max id of 0 gives 1 as well
+        if route.small(n, _MAX_WINDOW_ID_BATCH, "storage.id_batch"):
             w = Window.orderBy(F.monotonically_increasing_id())
             withids = nodes.withColumn(
                 "id", F.row_number().over(w) + F.lit(start - 1)
@@ -172,7 +173,9 @@ class NodeTable:
                 .withColumn("id", (F.col("__rowno") + F.lit(start)).cast("long"))
                 .drop("__ord", "__rowno")
             )
-        self.append(withids)
+        written = self._validate(withids.localCheckpoint(eager=True))
+        written.write.mode("append").parquet(self.path)
+        return n, written
 
     def upsert(self, nodes: DataFrame) -> None:
         """INSERT OR REPLACE (reference storage.py:377-400 SQLite path; L4
