@@ -35,6 +35,26 @@ def sf_correctness() -> str:
 
 
 @pytest.fixture(scope="session")
+def jobs_of(spark):
+    """``jobs_of(group, fn)``: ``fn()``'s result and the ids of the Spark
+    jobs it started, read from the status tracker under job group
+    ``group`` once the listener bus has drained."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def force_large():
     """``route.force_large(*sites)`` that also proves the pin took: on a
     clean exit every named site (with no names, at least one site) must

@@ -5,7 +5,9 @@ short-circuit, health, persistence across 'restarts'."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from vector_db_spark.api import VectorDBService
@@ -158,6 +160,9 @@ def test_delete_documents_removes_from_store_and_index(spark, tmp_path):
     # an emptied store numbers from 1 again, like a new one
     svc.delete_documents([r.id for r in svc.nodes.all_ids().collect()])
     assert svc.nodes.size() == 0
+    # the emptied index still opens: no clusters, no hits
+    assert svc.health()["index_clusters"] == 0
+    assert svc.search(["doc number 5"], top_k=3).count() == 0
     assert svc.insert_documents(docs.limit(1)) == 1
     assert [r.id for r in svc.nodes.all_ids().collect()] == [1]
     assert [r.id for r in idx.corpus().select("id").collect()] == [1]
@@ -216,5 +221,24 @@ def test_unreadable_index_raises_instead_of_going_exact(spark, service):
         [("Yellow Banana", {"kind": "fruit"})],
         "content string, metadata map<string,string>",
     )
-    with pytest.raises(Py4JJavaError, match="parquet"):
+    with pytest.raises(pa.ArrowInvalid, match="parquet"):
         service.insert_documents(more)
+
+
+def test_failed_centroid_rewrite_keeps_the_index(service, monkeypatch):
+    """A refresh whose centroid write fails leaves the old centroid table
+    in place: the index stays present, with the centroids it had."""
+    import pyarrow.parquet as pq
+
+    service.build_index(k=2)
+    before = service._index().centroid_matrix()
+
+    def fail(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", fail)
+    with pytest.raises(OSError, match="disk full"):
+        service.refresh_index()
+    idx = service._index()
+    assert idx is not None
+    assert np.array_equal(idx.centroid_matrix(), before)

@@ -5,6 +5,7 @@ brute force, incremental add, delete, persistence."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -125,6 +126,12 @@ def test_persistence_reopen(spark, sf_smoke, index):
     """Index state is just Parquet: a fresh handle sees identical search
     results (reference pickle round-trip, test_ivf.py save/load)."""
     reopened = IVFIndex(spark, index.path)
+    # every centroid-table row sits at its cluster_id in the matrix
+    rows = pq.read_table(reopened.centroids_path).to_pylist()
+    matrix = reopened.centroid_matrix()
+    assert len(rows) == matrix.shape[0] == K_CLUSTERS
+    for r in rows:
+        assert np.array_equal(matrix[r["cluster_id"]], r["centroid"])
     qs = _queries(spark, sf_smoke, 3)
     a = sorted(map(tuple, index.search(qs, k=3, n_probe=2).collect()))
     b = sorted(map(tuple, reopened.search(qs, k=3, n_probe=2).collect()))

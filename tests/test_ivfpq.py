@@ -39,9 +39,9 @@ def test_codes_conservation(spark, sf_smoke, index):
     agree on the partitioning (reference invariant test_ivf.py:44)."""
     total = load_table(spark, sf_smoke, "embeddings").count()
     assert index.codes().count() == total
-    assert index.corpus().count() == total
+    assert index.ivf.corpus().count() == total
     code_parts = {r.cluster_id for r in index.codes().select("cluster_id").distinct().collect()}
-    corpus_parts = {r.cluster_id for r in index.corpus().select("cluster_id").distinct().collect()}
+    corpus_parts = {r.cluster_id for r in index.ivf.corpus().select("cluster_id").distinct().collect()}
     assert code_parts == corpus_parts
     assert len(code_parts) <= K_COARSE
 
@@ -115,3 +115,26 @@ def test_persistence_reopen(spark, sf_smoke, index):
     reopened = IVFPQIndex(spark, index.path)
     res = reopened.search(_queries(spark, sf_smoke, 3), k=1, n_probe=1).collect()
     assert len(res) == 3
+
+
+def test_index_readers_start_no_spark_job(spark, sf_smoke, index, tmp_path, jobs_of):
+    """Data tables open with the schema their writer fixed and model
+    tables are read on the driver, so no index reader starts a Spark job."""
+    from vector_db_spark.operators.opq import OPQModel
+
+    emb = load_table(spark, sf_smoke, "embeddings").filter(F.col("vec_id") < 200)
+    opq = OPQModel.train(spark, emb, str(tmp_path / "opq"), n_chunks=8, k=4)
+    # the probe sees the footer job a schema-inferring read starts
+    _, control = jobs_of("index-read-inferred", lambda: spark.read.parquet(index.codes_path))
+    assert control
+    readers = {
+        "centroids": index.ivf.centroids,
+        "corpus": index.ivf.corpus,
+        "codes": index.codes,
+        "centroid_matrix": index.ivf.centroid_matrix,
+        "codebook_tensor": index.pq.codebook_tensor,
+        "rotation": opq.rotation,
+    }
+    for name, read in readers.items():
+        _, jobs = jobs_of(f"index-read-{name}", read)
+        assert jobs == [], name

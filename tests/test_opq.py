@@ -6,6 +6,7 @@ the balanced allocation spreads variance across chunks."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -68,7 +69,11 @@ def test_reopen_from_path(spark, opq):
     model, emb, path = opq
     reopened = OPQModel(spark, path)
     assert np.array_equal(reopened.rotation(), model.rotation())
-    assert reopened.pq.codebooks().count() == 8 * 16
+    rows = pq.read_table(reopened.pq.codebooks_path).to_pylist()
+    assert len(rows) == 8 * 16
+    tensor = reopened.pq.codebook_tensor()
+    for r in rows:
+        assert np.array_equal(tensor[r["chunk_idx"], r["code"]], r["centroid"])
 
 
 def _mean_recall(model, queries, emb, codes, k=10) -> float:

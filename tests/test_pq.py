@@ -4,6 +4,7 @@ shapes, validation, encode) plus ADC search quality."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +20,16 @@ def model(spark, sf_smoke, tmp_path_factory):
     return PQModel.train(spark, emb, path, n_chunks=8, k=16)
 
 
+def _codebook_rows(model) -> list[dict]:
+    """The codebook file's rows, read with pyarrow; each one must sit at
+    its (chunk_idx, code) in ``codebook_tensor()``."""
+    rows = pq.read_table(model.codebooks_path).to_pylist()
+    tensor = model.codebook_tensor()
+    for r in rows:
+        assert np.array_equal(tensor[r["chunk_idx"], r["code"]], r["centroid"])
+    return rows
+
+
 def test_dim_not_divisible_raises(spark, tmp_path):
     """Reference pq.py:39-46 validation."""
     df = spark.createDataFrame(
@@ -30,9 +41,10 @@ def test_dim_not_divisible_raises(spark, tmp_path):
 
 def test_codebook_shape(model):
     """m chunks × k codes, centroids of subspace dim (pq.py:98-100)."""
-    rows = model.codebooks().collect()
+    rows = _codebook_rows(model)
     assert len(rows) == 8 * 16
-    assert all(len(r.centroid) == 8 for r in rows)
+    assert all(len(r["centroid"]) == 8 for r in rows)
+    assert model.codebook_tensor().shape == (8, 16, 8)
 
 
 def test_encode_shape_and_range(spark, sf_smoke, model):
@@ -47,7 +59,7 @@ def test_encode_shape_and_range(spark, sf_smoke, model):
 
 def test_encode_centroid_roundtrip(spark, model):
     """A vector equal to chunk-centroids must encode to those codes."""
-    cb = {(r.chunk_idx, r.code): r.centroid for r in model.codebooks().collect()}
+    cb = {(r["chunk_idx"], r["code"]): r["centroid"] for r in _codebook_rows(model)}
     target = [c for ch in range(8) for c in cb[(ch, 5)]]
     df = spark.createDataFrame(
         [(7, [float(x) for x in target])], "vec_id long, embedding array<float>"

@@ -92,20 +92,7 @@ def test_zero_vector_is_not_a_free_slot(spark, table):
     assert table.get(10).count() == 1  # survives an unrelated rewrite
 
 
-def _jobs_of(spark, group, fn):
-    """``fn()``'s result and the ids of the Spark jobs it started."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, sc.statusTracker().getJobIdsForGroup(group)
-
-
-def test_missing_core_column_raises(spark, table, tmp_path):
+def test_missing_core_column_raises(spark, table, tmp_path, jobs_of):
     bad = spark.createDataFrame(
         [(20, [1.0, 0.0, 0.0, 0.0], "No Meta")],
         "id long, embedding array<float>, content string",
@@ -138,24 +125,21 @@ def test_missing_core_column_raises(spark, table, tmp_path):
             svc.insert_documents(docs)
 
     # rejected from the column names alone, before any count or embedding
-    _, jobs = _jobs_of(spark, "insert-extra-column", insert)
+    _, jobs = jobs_of("insert-extra-column", insert)
     assert jobs == []
     assert not svc.nodes.exists()
 
 
-def test_open_reads_with_the_fixed_schema_and_no_spark_job(spark, table):
+def test_open_reads_with_the_fixed_schema_and_no_spark_job(spark, table, jobs_of):
     """Opening an existing table pins NODE_SCHEMA: its df() starts no
     Spark job (a schema-inferring read runs a footer-merge job)."""
     # the probe sees the job an inferring read starts
-    _, control = _jobs_of(
-        spark,
+    _, control = jobs_of(
         "node-open-merge",
         lambda: spark.read.option("mergeSchema", "true").parquet(table.path),
     )
     assert control
-    df, jobs = _jobs_of(
-        spark, "node-open", lambda: NodeTable(spark, table.path).df()
-    )
+    df, jobs = jobs_of("node-open", lambda: NodeTable(spark, table.path).df())
     assert jobs == []
     assert [(f.name, f.dataType) for f in df.schema] == [
         (f.name, f.dataType) for f in NODE_SCHEMA

@@ -59,9 +59,7 @@ def test_ingest_checkpoint_resume_no_duplicates(spark, tmp_path):
     src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
     vecs = [(i, [float(i), 0.0]) for i in range(10)]
     spark.createDataFrame(vecs, "vec_id long, embedding array<float>").coalesce(2).write.parquet(src)
-    cents = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [9.0, 0.0])], "cluster_id int, centroid array<double>"
-    )
+    cents = [(0, [0.0, 0.0]), (1, [9.0, 0.0])]
     from vector_db_spark.operators.ivf import assign_to_centroids
 
     def run():

@@ -11,7 +11,7 @@ boundaries):
 | ``POST /embed`` insert (app.py:119-160): embed → next id → storage save → incremental index insert | :meth:`insert_documents`: embed UDF → ``NodeTable.append_with_ids`` (max+row_number ids, one materialized copy, append) → the written rows centroid-assigned and appended to the IVF corpus |
 | ``POST /search`` (app.py:165-233): embed query → metadata filter → ANN search → format | :meth:`search`: embed → Catalyst predicate filter (pushed down, not post-hoc like the reference's hnsw filter_ids) → IVF n_probe search (or exact brute force) → join content/metadata |
 | ``GET /health`` (app.py:107-116) | :meth:`health` |
-| service startup / index load-on-start (app.py:42-101, L3) | the constructor — index state is Parquet, "loading" is ``spark.read`` |
+| service startup / index load-on-start (app.py:42-101, L3) | the constructor — index state is Parquet, read per request (the centroid file on the driver, the corpus by ``spark.read`` with its fixed schema) |
 
 Online single-query serving is explicitly out of scope for a Spark engine
 (BASELINE.json north star); a "query" here is a row in a query table, and

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,7 +35,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Plain ``spark.read.parquet`` so Catalyst gets
-    full pushdown/pruning; no schema inference cost (Parquet is self-described).
+    full pushdown/pruning; the schema is inferred from the file footers,
+    which costs a Spark job per read (a read given a schema runs none).
 
     Fixture writers materialize ``events.ts`` as TIMESTAMP(NANOS) (which
     Spark's reader rejects → read nanos as long and truncate to micros) or
@@ -72,20 +75,24 @@ def has_data_files(path: str) -> bool:
     )
 
 
-def write_small_parquet(path: str, table) -> None:
-    """Overwrite ``path`` with one Parquet file holding a driver-side
-    pyarrow Table — for index state that is small by definition (k×dim
-    centroids, PQ codebooks). Skips a full Spark job (scheduler + commit
-    protocol) for data that never left the driver; ``spark.read.parquet``
-    reads the result exactly like a Spark-written table."""
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        shutil.rmtree(path)
+def write_small_parquet(path: str, table: pa.Table) -> None:
+    """Replace ``path``'s one Parquet file with a driver-side pyarrow
+    Table — for index state that is small by definition (k×dim centroids,
+    PQ codebooks, the OPQ rotation) — skipping a Spark job for data that
+    never left the driver. The file is written under a hidden name (which
+    Spark and :func:`has_data_files` skip) and renamed over the old one,
+    so a failed write leaves the old table. :func:`read_small_parquet`
+    reads it back."""
     os.makedirs(path, exist_ok=True)
-    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    tmp = os.path.join(path, ".part-00000.parquet.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, "part-00000.parquet"))
+
+
+def read_small_parquet(path: str) -> pa.Table:
+    """The pyarrow Table :func:`write_small_parquet` wrote at ``path`` —
+    read on the driver, with no Spark job."""
+    return pq.read_table(os.path.join(path, "part-00000.parquet"))
 
 
 def write_clustered(

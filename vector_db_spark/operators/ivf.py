@@ -9,7 +9,7 @@ indexing/ivf.py``) Spark-first:
 | ``add``: argmin over centroids, append to list (ivf.py:87-117) | broadcast-centroid argmin join → append to the partitioned table |
 | ``delete``: remove id from all lists (ivf.py:119-136) | dynamic partition overwrite of only the affected clusters |
 | ``search``: rank centroids, scan n_probe lists, exact top-k (ivf.py:138-199) | probe ranking via broadcast centroid join → semi-join on ``cluster_id`` (partition pruning) → exact distance → windowed top-k |
-| pickle persistence (ivf.py:217-241)         | Parquet centroid table + partitioned corpus; "loading" is ``spark.read`` |
+| pickle persistence (ivf.py:217-241)         | Parquet centroid table (read on the driver) + partitioned corpus (``spark.read`` with its fixed schema) |
 
 Scale posture (SURVEY.md §7): only the k×dim centroid table is ever
 broadcast/collected; the corpus is never collected; hot-cluster skew is
@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import math
 import os
-from collections.abc import Sequence
+from collections.abc import Iterable, Sequence
 
 import numpy as np
 import pyarrow as pa
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from vector_db_spark import route
 from vector_db_spark.functions.distance import METRICS, euclidean
-from vector_db_spark.io import write_clustered, write_small_parquet
+from vector_db_spark.io import read_small_parquet, write_clustered, write_small_parquet
 from vector_db_spark.operators.kmeans import DEFAULT_SAMPLE_CAP, train_centroids
 from vector_db_spark.operators.staging import (
     assert_no_pending_swap,
@@ -48,11 +48,13 @@ from vector_db_spark.operators.topk import nearest_k, top_k_per_group
 MIN_POINTS_PER_CLUSTER = 39
 # past this many query rows the probe table is joined un-hinted
 _MAX_BROADCAST_QUERIES = 10_000
+# the centroid table's types, as IVFIndex.write_centroids writes them
+CENTROID_SCHEMA = "cluster_id int, centroid array<double>"
 
 
 def assign_to_centroids(
     df: DataFrame,
-    centroids: DataFrame | list[tuple[int, list[float]]],
+    centroids: Iterable[tuple[int, Sequence[float]]],
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -71,14 +73,10 @@ def assign_to_centroids(
     to the broadcast-join + min_by form — still one shuffle-free broadcast
     join plus a groupBy on the (narrow) id.
 
-    ``centroids`` may be the (cluster_id, centroid) table or a plain
-    ``[(cluster_id, centroid), ...]`` list — the build path already holds
-    the centers in memory and skips a pointless DataFrame round-trip."""
-    if isinstance(centroids, DataFrame):
-        rows = centroids.select("cluster_id", "centroid").collect()  # k×dim only
-        rows = [(int(r.cluster_id), list(r.centroid)) for r in rows]
-    else:
-        rows = [(int(c), list(v)) for c, v in centroids]
+    ``centroids`` is a ``[(cluster_id, centroid), ...]`` sequence already
+    on the driver (the build's fitted centers, or ``enumerate`` over
+    :meth:`IVFIndex.centroid_matrix`), so the assignment starts no job."""
+    rows = [(int(c), list(v)) for c, v in centroids]
 
     if sum(len(v) for _, v in rows) <= 65536:
         # one F.expr over a generated SQL string: a single py4j call no
@@ -99,10 +97,7 @@ def assign_to_centroids(
             "cluster_id", F.expr(f"array_min(array({structs})).cluster_id")
         )
 
-    if not isinstance(centroids, DataFrame):
-        centroids = df.sparkSession.createDataFrame(
-            rows, "cluster_id int, centroid array<double>"
-        )
+    centroids = df.sparkSession.createDataFrame(rows, CENTROID_SCHEMA)
     dist = euclidean(vec_col, "centroid")
     if round_to is not None:
         dist = F.round(dist, round_to)
@@ -124,6 +119,8 @@ class IVFIndex:
         self.path = path
         self.id_col = id_col
         self.vec_col = vec_col
+        # the corpus table's types: its writers cast to them (_typed), corpus() reads them
+        self.corpus_schema = f"{id_col} long, {vec_col} array<float>, cluster_id int"
 
     # -- paths ----------------------------------------------------------------
 
@@ -136,19 +133,28 @@ class IVFIndex:
         return os.path.join(self.path, "corpus")
 
     def centroids(self) -> DataFrame:
-        return self.spark.read.parquet(self.centroids_path)
+        return self.spark.read.schema(CENTROID_SCHEMA).parquet(self.centroids_path)
 
     def centroid_matrix(self) -> np.ndarray:
-        """(k, dim) float64; row i is cluster i (k×dim — small by definition)."""
-        rows = sorted(self.centroids().collect(), key=lambda r: r.cluster_id)
-        return np.array([r.centroid for r in rows], dtype=np.float64)
+        """(k, dim) float64; row i is cluster i (k×dim — small by
+        definition), read on the driver with no Spark job."""
+        t = read_small_parquet(self.centroids_path)
+        order = np.argsort(t.column("cluster_id").to_numpy())
+        return np.array(t.column("centroid").to_pylist(), dtype=np.float64)[order]
 
     def corpus(self) -> DataFrame:
         # a committed-but-unfinished maintenance swap can have clusters
         # missing from the live layout; reading through it would be
         # silently wrong, not slow (two cheap fs.exists in the common case)
         assert_no_pending_swap(self.spark, self.corpus_path, self._SWAP_TMPS)
-        return self.spark.read.parquet(self.corpus_path)
+        return self.spark.read.schema(self.corpus_schema).parquet(self.corpus_path)
+
+    def _typed(self, vectors: DataFrame) -> DataFrame:
+        """(id, vector) cast to the types of ``corpus_schema``."""
+        return vectors.select(
+            F.col(self.id_col).cast("long").alias(self.id_col),
+            F.col(self.vec_col).cast("array<float>").alias(self.vec_col),
+        )
 
     # -- build (reference ivf.py:49-85) ---------------------------------------
 
@@ -201,9 +207,9 @@ class IVFIndex:
             corpus, vec_col, k, max_iter=max_iter, seed=seed,
             sample_cap=max(DEFAULT_SAMPLE_CAP, MIN_POINTS_PER_CLUSTER * k),
         )
+        index = cls(spark, path, id_col=id_col, vec_col=vec_col)
         assigned = assign_to_centroids(
-            corpus.select(id_col, vec_col), list(enumerate(centers)),
-            id_col=id_col, vec_col=vec_col,
+            index._typed(corpus), enumerate(centers), id_col=id_col, vec_col=vec_col
         )
         # O(k) files, not tasks × k — see write_clustered; parallelism
         # scales with k so a derived-k build keeps its writers busy
@@ -211,10 +217,7 @@ class IVFIndex:
             int(assigned.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
             min(k, 2048),
         )
-        write_clustered(
-            assigned, os.path.join(path, "corpus"), num_partitions=n_shuffle
-        )
-        index = cls(spark, path, id_col=id_col, vec_col=vec_col)
+        write_clustered(assigned, index.corpus_path, num_partitions=n_shuffle)
         index.write_centroids(centers)
         return index
 
@@ -239,15 +242,12 @@ class IVFIndex:
     def assign(self, vectors: DataFrame) -> DataFrame:
         """Nearest-centroid assignment (ivf.py:109-110's numpy argmin)."""
         return assign_to_centroids(
-            vectors, self.centroids(), id_col=self.id_col, vec_col=self.vec_col
+            vectors, enumerate(self.centroid_matrix()),
+            id_col=self.id_col, vec_col=self.vec_col,
         )
 
     def add(self, new_vectors: DataFrame) -> None:
-        write_clustered(
-            self.assign(new_vectors).select(self.id_col, self.vec_col, "cluster_id"),
-            self.corpus_path,
-            mode="append",
-        )
+        write_clustered(self.assign(self._typed(new_vectors)), self.corpus_path, mode="append")
 
     # -- delete (reference ivf.py:119-136) -------------------------------------
 

@@ -68,7 +68,7 @@ class IVFPQIndex:
       residual-space, ``m × k_codes`` rows, the :class:`PQModel` table.
     - ``codes/``      (vec_id long, codes array<int>) partitioned by
       ``cluster_id`` — the compressed corpus, the only thing ADC scans.
-    - ``corpus/``     (vec_id long, embedding, cluster_id) partitioned by
+    - ``corpus/``     (vec_id long, embedding array<float>) partitioned by
       ``cluster_id`` — raw vectors (the :class:`IVFIndex` corpus), touched
       only by the re-rank join.
     """
@@ -87,16 +87,15 @@ class IVFPQIndex:
         self.vec_col = vec_col
         self.ivf = IVFIndex(spark, path, id_col=id_col, vec_col=vec_col)
         self.pq = PQModel(spark, path, id_col=id_col, vec_col=vec_col)
+        # the codes table's types: _encode writes them, codes() reads them
+        self.codes_schema = f"{id_col} long, codes array<int>, cluster_id int"
 
     @property
     def codes_path(self) -> str:
         return os.path.join(self.path, "codes")
 
     def codes(self) -> DataFrame:
-        return self.spark.read.parquet(self.codes_path)
-
-    def corpus(self) -> DataFrame:
-        return self.ivf.corpus()
+        return self.spark.read.schema(self.codes_schema).parquet(self.codes_path)
 
     def _encode(
         self, assigned: DataFrame, centroids: np.ndarray, tensor: np.ndarray
@@ -119,7 +118,7 @@ class IVFPQIndex:
                     {id_col: pdf[id_col].values, "codes": list(codes), "cluster_id": cid}
                 )
 
-        return assigned.mapInPandas(enc, f"{id_col} long, codes array<int>, cluster_id int")
+        return assigned.mapInPandas(enc, self.codes_schema)
 
     # -- build ----------------------------------------------------------------
 
@@ -177,14 +176,13 @@ class IVFPQIndex:
         # 3. distributed assign + write raw corpus partitioned by cluster
         index = cls(spark, path, id_col=id_col, vec_col=vec_col)
         assigned = assign_to_centroids(
-            corpus.select(id_col, vec_col), list(enumerate(centers)),
-            id_col=id_col, vec_col=vec_col,
+            index.ivf._typed(corpus), enumerate(centers), id_col=id_col, vec_col=vec_col
         )
         write_clustered(assigned, index.ivf.corpus_path)
 
         # 4. residual-encode in ONE Arrow pass over the just-written corpus
         #    (reading it back avoids recomputing the assignment lineage)
-        codes = index._encode(index.corpus(), centers, tensor)
+        codes = index._encode(index.ivf.corpus(), centers, tensor)
         write_clustered(codes, index.codes_path)
 
         # 5. model state as engine-readable Parquet (no pickle — reference
@@ -261,7 +259,7 @@ class IVFPQIndex:
             F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")
         )
         exact = (
-            self.corpus()
+            self.ivf.corpus()
             .select(F.col(self.id_col).alias("neighbor_id"), self.vec_col)
             .join(F.broadcast(adc_top.select("query_id", "neighbor_id")), "neighbor_id")
             .join(F.broadcast(qside), "query_id")

@@ -37,6 +37,7 @@ import os
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from vector_db_spark.io import read_small_parquet, write_small_parquet
 from vector_db_spark.operators.pca import fit_pca
 from vector_db_spark.operators.pq import PQModel
 
@@ -86,13 +87,11 @@ class OPQModel:
         return os.path.join(self.path, "rotation")
 
     def rotation(self) -> np.ndarray:
-        """(d, d) orthogonal matrix — the only collect, d² doubles."""
-        rows = self.spark.read.parquet(self.rotation_path).collect()
-        d = len(rows)
-        R = np.zeros((d, d), dtype=np.float64)
-        for r in rows:
-            R[r.row_idx] = r.row
-        return R
+        """(d, d) orthogonal matrix — d² doubles, read on the driver with
+        no Spark job; row i is the row with ``row_idx`` i."""
+        t = read_small_parquet(self.rotation_path)
+        order = np.argsort(t.column("row_idx").to_numpy())
+        return np.array(t.column("row").to_pylist(), dtype=np.float64)[order]
 
     # -- train ----------------------------------------------------------------
 
@@ -111,8 +110,6 @@ class OPQModel:
         seed: int = 42,
     ) -> "OPQModel":
         import pyarrow as pa
-
-        from vector_db_spark.io import write_small_parquet
 
         dim = len(corpus.select(vec_col).first()[0])
         pca = fit_pca(corpus, vec_col, m=dim)

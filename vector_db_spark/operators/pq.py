@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from vector_db_spark import route
-from vector_db_spark.io import write_small_parquet
+from vector_db_spark.io import read_small_parquet, write_small_parquet
 from vector_db_spark.operators.kmeans import collect_sample, kmeans_fit
 from vector_db_spark.operators.topk import nearest_k
 
@@ -64,19 +64,15 @@ class PQModel:
     def codebooks_path(self) -> str:
         return os.path.join(self.path, "codebooks")
 
-    def codebooks(self) -> DataFrame:
-        return self.spark.read.parquet(self.codebooks_path)
-
     def codebook_tensor(self) -> np.ndarray:
-        """(m, k, sub) float64 tensor — the only thing ever collected."""
-        rows = self.codebooks().collect()
-        m = max(r.chunk_idx for r in rows) + 1
-        k = max(r.code for r in rows) + 1
-        sub = len(rows[0].centroid)
-        t = np.zeros((m, k, sub), dtype=np.float64)
-        for r in rows:
-            t[r.chunk_idx, r.code] = r.centroid
-        return t
+        """(m, k, sub) float64 tensor, read on the driver with no Spark job;
+        each row lands at its (chunk_idx, code)."""
+        t = read_small_parquet(self.codebooks_path)
+        chunk, code = t.column("chunk_idx").to_numpy(), t.column("code").to_numpy()
+        words = np.array(t.column("centroid").to_pylist(), dtype=np.float64)
+        tensor = np.zeros((chunk.max() + 1, code.max() + 1, words.shape[1]))
+        tensor[chunk, code] = words
+        return tensor
 
     def write_codebooks(self, tensor: np.ndarray) -> None:
         """The codebook table's one writer: one (chunk_idx, code, centroid)

@@ -97,11 +97,10 @@ def stream_ingest_cluster_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus), and the final corpus must match the batch assignment exactly —
     commit boundaries don't change semantics."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # materialize the (k × dim) centroid table once — foreachBatch re-executes
+    # collect the (k × dim) centroid table once — foreachBatch re-executes
     # referenced lineage per micro-batch, and the index state is loaded once
     # in the path this models (reference indexing_service.py:56-67)
-    cents = tracked_cache(_centroids_arrays(spark, sf_dir), "q.stream.ingest.cents")
-    cents.count()
+    cents = [(r.cluster_id, r.centroid) for r in _centroids_arrays(spark, sf_dir).collect()]
     work = tempfile.mkdtemp(prefix="ingest_")
     src, sink, ckpt = (os.path.join(work, d) for d in ("src", "sink", "ckpt"))
     emb.select("vec_id", "embedding").repartition(4).write.parquet(src)
