@@ -201,7 +201,7 @@ def test_ivf_search_big_query_side_drops_broadcast_hint(
 ):
     """On its large branch the probe join must carry no forced broadcast
     hint (Catalyst decides from real stats); results on the forced route
-    match the hinted fast path exactly."""
+    match the driver-probed fast path exactly."""
     from pyspark.sql import functions as F
 
     from vector_db_spark.io import load_table
@@ -216,15 +216,26 @@ def test_ivf_search_big_query_side_drops_broadcast_hint(
     with force_large("ivf.probe"):
         routed = idx.search(queries, k=5, n_probe=3)
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, routed.collect()))
-    # the centroid-side broadcast (O(k x dim), intentional) remains; the
-    # PROBE-side hint must be gone — one hint in the routed plan, two in
-    # the serving-shaped fast path
-    routed_logical = routed._jdf.queryExecution().optimizedPlan().toString()
+    # the fast path ranks probes on the driver: no join, so no hint at all
     fast_logical = fast._jdf.queryExecution().optimizedPlan().toString()
-    assert routed_logical.count("strategy=broadcast") < fast_logical.count(
-        "strategy=broadcast"
-    )
-    assert routed_logical.count("strategy=broadcast") >= 1  # centroids stay hinted
+    assert "strategy=broadcast" not in fast_logical
+    # the routed path keeps the centroid-side hint (O(k x dim), intentional)
+    # on the centroid cross join; the probe-to-corpus join carries none
+    routed_logical = routed._jdf.queryExecution().optimizedPlan().toString()
+    hinted = [ln for ln in routed_logical.splitlines() if "strategy=broadcast" in ln]
+    assert hinted, "the centroid cross join lost its broadcast hint"
+    assert all("Join Cross" in ln for ln in hinted), hinted
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "cosine", "dot"])
+def test_driver_probes_match_sql_probe_join(spark, sf_smoke, index, force_large, metric):
+    """The driver-ranked probe plan and batch kernel return exactly the
+    rows of the SQL probe join and SQL distance, under every metric."""
+    qs = _queries(spark, sf_smoke, 8)
+    fast = sorted(map(tuple, index.search(qs, k=5, n_probe=3, metric=metric).collect()))
+    with force_large("ivf.probe"):
+        routed = index.search(qs, k=5, n_probe=3, metric=metric)
+    assert sorted(map(tuple, routed.collect())) == fast and len(fast) == 40
 
 
 def test_derive_k_rule():

@@ -5,6 +5,8 @@ brute force with exact re-rank, ADC-only path, persistence."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -101,12 +103,52 @@ def test_search_unhinted_probe_join_matches_default(
     spark, sf_smoke, index, force_large, refine
 ):
     """IVF-PQ search over the probe join's un-hinted large branch returns
-    the default (broadcast-hinted) route's rows."""
+    the default (driver-probed) route's rows."""
     qs = _queries(spark, sf_smoke, 6)
     want = sorted(map(tuple, index.search(qs, k=5, n_probe=3, refine=refine).collect()))
     with force_large("ivf.probe"):
         got = index.search(qs, k=5, n_probe=3, refine=refine)
     assert sorted(map(tuple, got.collect())) == want and len(want) == 30
+
+
+def test_adc_ties_cut_by_id_on_every_layout(spark, tmp_path, force_large):
+    """Vectors stored twice under distinct ids get identical codes, so
+    exactly equal ADC distances. A batch's cut must keep the lower id of a
+    boundary-tied pair (the global (dist, id) top-k cannot bring back a
+    row a batch dropped), so the ADC result is the same at 1 and at 8
+    shuffle partitions and on the SQL probe join."""
+    twin = 1000
+    base = np.random.default_rng(3).normal(size=(80, 16)).astype(np.float32)
+    rows = [(i + off, v.tolist()) for off in (0, twin) for i, v in enumerate(base)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    index = IVFPQIndex.build(
+        spark, emb, str(tmp_path / "twins"), k_coarse=4, n_chunks=4, k_codes=8
+    )
+    queries = spark.createDataFrame(
+        pd.DataFrame({"query_id": np.arange(12, dtype=np.int64), "query_vec": list(base[:12])}),
+        "query_id long, query_vec array<float>",
+    )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def run(partitions):
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        try:
+            res = index.search(queries, k=3, n_probe=2, refine=None).collect()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", before)
+        return sorted(map(tuple, res))
+
+    want = run(1)
+    assert len(want) == 36
+    # top-3 of tied pairs: the third row is the lower id of its pair
+    for q in range(12):
+        ids = [r[1] for r in sorted((r for r in want if r[0] == q), key=lambda r: (r[2], r[1]))]
+        assert ids[2] < twin, (q, ids)
+    assert run(8) == want
+    with force_large("ivf.probe"):
+        assert run(1) == want
+        assert run(8) == want
 
 
 def test_persistence_reopen(spark, sf_smoke, index):

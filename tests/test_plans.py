@@ -2,14 +2,27 @@
 
 These tests read `.explain`-style plan strings and pin the properties that
 matter at 100 TB: filters reach the Parquet scan, projections prune
-columns, dimension joins broadcast, the IVF probe join triggers partition
-pruning, and aggregations keep map-side partial phases."""
+columns, dimension joins broadcast, IVF and IVF-PQ searches read only the
+probed clusters, and aggregations keep map-side partial phases.
+
+An IVF or IVF-PQ search within its query-side bound ranks the probe plan
+on the driver, so its corpus or codes scan carries a static
+``cluster_id IN (probed clusters)`` partition filter, its DataFrame is
+built with no Spark job, and it runs in a bounded number of jobs; past the
+bound the SQL probe join prunes the scan dynamically."""
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from vector_db_spark.io import load_table
+from vector_db_spark.operators.ivf import IVFIndex
+from vector_db_spark.operators.ivfpq import IVFPQIndex
 from vector_db_spark.queries import all_queries
 
 QUERIES = all_queries()
@@ -48,18 +61,85 @@ def test_dim_joins_broadcast_in_snowflake(spark, sf_smoke):
     assert plan.count("BroadcastHashJoin") >= 3
 
 
-def test_ivf_probe_join_prunes_partitions(spark, sf_smoke, tmp_path):
-    """IVF search: the corpus scan carries dynamic pruning on cluster_id —
-    the distributed form of 'scan only the probed inverted lists'."""
-    from vector_db_spark.operators.ivf import IVFIndex
+N_PROBE = 2
 
+
+@pytest.fixture(scope="module")
+def indexes(spark, sf_smoke, tmp_path_factory):
+    """An IVF and an IVF-PQ index over the smoke embeddings, 8 clusters."""
     emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFIndex.build(spark, emb, 8, str(tmp_path / "ivf"))
-    q = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    ).limit(2)
-    plan = plan_of(idx.search(q, k=3, n_probe=2))
-    assert "dynamicpruning" in plan.lower() or "PartitionFilters: [" in plan
+    base = tmp_path_factory.mktemp("plans")
+    ivf = IVFIndex.build(spark, emb, 8, str(base / "ivf"))
+    ivfpq = IVFPQIndex.build(
+        spark, emb, str(base / "ivfpq"), k_coarse=8, n_chunks=8, k_codes=16
+    )
+    return ivf, ivfpq
+
+
+def _serving_queries(spark, sf_smoke, n):
+    """The first ``n`` corpus vectors as a pandas-built query table (a
+    local relation, as a serving request is: fetching it starts no job)
+    and as a float64 matrix."""
+    rows = (
+        load_table(spark, sf_smoke, "embeddings")
+        .filter(F.col("vec_id") < n).orderBy("vec_id").collect()
+    )
+    mat = np.array([r.embedding for r in rows], dtype=np.float64)
+    pdf = pd.DataFrame(
+        {"query_id": np.arange(n, dtype=np.int64), "query_vec": list(mat.astype(np.float32))}
+    )
+    return spark.createDataFrame(pdf, "query_id long, query_vec array<float>"), mat
+
+
+def _scan_partition_filters(plan: str, column: str) -> str:
+    """The PartitionFilters of the one FileScan whose read schema has
+    ``column``, attribute ids dropped: ``[cluster_id IN (0,3)]``."""
+    scans = [
+        seg.split("\n")[0]
+        for seg in plan.split("FileScan parquet")
+        if f"{column}:array" in seg.split("\n")[0]
+    ]
+    assert len(scans) == 1, scans
+    filters = scans[0].split("PartitionFilters: ")[1].split("]")[0] + "]"
+    return re.sub(r"#\d+", "", filters)
+
+
+def _in_list(union) -> str:
+    return f"[cluster_id IN ({','.join(map(str, union))})]"
+
+
+def test_ivf_probe_join_prunes_partitions(spark, sf_smoke, indexes, force_large):
+    """IVF search reads only the probed inverted lists: within the query
+    bound the corpus scan's partition filter is exactly the union of the
+    driver-ranked probe plan; past it the SQL probe join prunes the scan
+    dynamically."""
+    idx, _ = indexes
+    q, mat = _serving_queries(spark, sf_smoke, 2)
+    union = np.unique(IVFIndex.rank_probes(idx.centroid_matrix(), mat, N_PROBE))
+    plan = plan_of(idx.search(q, k=3, n_probe=N_PROBE))
+    assert _scan_partition_filters(plan, "embedding") == _in_list(union)
+    assert 0 < len(union) < 8
+    with force_large("ivf.probe"):
+        routed = plan_of(idx.search(q, k=3, n_probe=N_PROBE))
+    assert "dynamicpruning" in routed.lower()
+
+
+def test_ivf_searches_build_with_no_job_and_run_in_few(spark, sf_smoke, indexes, jobs_of):
+    """Building either search's DataFrame for a serving-shaped request
+    starts no Spark job (the probe fetch reads a local relation and the
+    model tables are read on the driver). Running it starts at most 2
+    (IVF: the kernel's scan and the top-k) or 5 (IVF-PQ: ADC top-k,
+    candidate broadcast, exact re-rank) jobs."""
+    ivf, ivfpq = indexes
+    q, _ = _serving_queries(spark, sf_smoke, 4)
+    for name, search, bound in [
+        ("ivf", lambda: ivf.search(q, k=5, n_probe=N_PROBE), 2),
+        ("ivfpq", lambda: ivfpq.search(q, k=5, n_probe=N_PROBE, refine=4), 5),
+    ]:
+        df, built = jobs_of(f"build-{name}", search)
+        assert built == [], name
+        rows, ran = jobs_of(f"run-{name}", df.collect)
+        assert len(rows) == 20 and 0 < len(ran) <= bound, (name, ran)
 
 
 def test_aggregation_has_partial_phase(spark, sf_smoke):
@@ -93,21 +173,14 @@ def test_empty_relation_propagates(spark, sf_smoke):
     assert "LocalRelation <empty>" in optimized_of(df) or "Empty" in optimized_of(df)
 
 
-def test_ivfpq_codes_scan_prunes_columns_and_partitions(spark, sf_smoke, tmp_path):
+def test_ivfpq_codes_scan_prunes_columns_and_partitions(spark, sf_smoke, indexes):
     """IVFPQ ADC: the compressed-corpus scan reads ONLY ids+codes (never the
-    raw embedding column — the point of PQ at 100 TB) and carries dynamic
-    pruning on cluster_id from the probe join."""
-    from vector_db_spark.operators.ivfpq import IVFPQIndex
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    idx = IVFPQIndex.build(
-        spark, emb, str(tmp_path / "ivfpq"), k_coarse=8, n_chunks=8, k_codes=16
-    )
-    q = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    ).limit(2)
-    plan = plan_of(idx.search(q, k=3, n_probe=2, refine=None))
-    assert "dynamicpruning" in plan.lower() or "PartitionFilters: [" in plan
+    raw embedding column — the point of PQ at 100 TB) and only the probed
+    clusters: its partition filter is exactly the probe plan's union."""
+    _, idx = indexes
+    q, mat = _serving_queries(spark, sf_smoke, 2)
+    union = np.unique(IVFIndex.rank_probes(idx.ivf.centroid_matrix(), mat, N_PROBE))
+    plan = plan_of(idx.search(q, k=3, n_probe=N_PROBE, refine=None))
     codes_scans = [
         seg.split("\n")[0]
         for seg in plan.split("FileScan parquet")
@@ -115,6 +188,7 @@ def test_ivfpq_codes_scan_prunes_columns_and_partitions(spark, sf_smoke, tmp_pat
     ]
     assert codes_scans, "expected a FileScan over the codes table"
     assert "embedding" not in codes_scans[0].split("ReadSchema")[1]
+    assert _scan_partition_filters(plan, "codes") == _in_list(union)
 
 
 def test_range_join_is_equi_join_not_theta(spark, sf_smoke):

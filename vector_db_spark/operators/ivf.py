@@ -8,11 +8,12 @@ indexing/ivf.py``) Spark-first:
 | ``build_index``: scipy ``kmeans2`` + Python inverted lists (ivf.py:49-85) | bounded-sample k-means++/Lloyd (operators.kmeans) + distributed broadcast-argmin assignment; "inverted list" = the corpus written ``partitionBy("cluster_id")`` — probing a cluster IS partition pruning |
 | ``add``: argmin over centroids, append to list (ivf.py:87-117) | broadcast-centroid argmin join → append to the partitioned table |
 | ``delete``: remove id from all lists (ivf.py:119-136) | dynamic partition overwrite of only the affected clusters |
-| ``search``: rank centroids, scan n_probe lists, exact top-k (ivf.py:138-199) | probe ranking via broadcast centroid join → semi-join on ``cluster_id`` (partition pruning) → exact distance → windowed top-k |
+| ``search``: rank centroids, scan n_probe lists, exact top-k (ivf.py:138-199) | probe plan ranked on the driver over the centroid matrix → one corpus scan with a static ``cluster_id IN (probed)`` partition filter → k-NN batch kernel scoring each cluster's rows against the queries that probe it (partial top-k per batch) → global top-k; past ``_MAX_BROADCAST_QUERIES`` query rows, ``probe_join`` (windowed top-n_probe over the broadcast centroid cross join, un-hinted join on ``cluster_id``) and a SQL distance |
 | pickle persistence (ivf.py:217-241)         | Parquet centroid table (read on the driver) + partitioned corpus (``spark.read`` with its fixed schema) |
 
-Scale posture (SURVEY.md §7): only the k×dim centroid table is ever
-broadcast/collected; the corpus is never collected; hot-cluster skew is
+Scale posture (SURVEY.md §7): only the k×dim centroid table and at most
+``_MAX_BROADCAST_QUERIES`` query rows are ever broadcast/collected; the
+corpus is never collected; hot-cluster skew is
 handled by AQE (skew-join enabled in the session factory). HNSW itself is
 deliberately not ported — a sequential mutable-graph build is anti-Spark
 (SURVEY.md §2.3 V5); IVF delivers the same capability (tunable-recall ANN)
@@ -34,6 +35,7 @@ from vector_db_spark import route
 from vector_db_spark.functions.distance import METRICS, euclidean
 from vector_db_spark.io import read_small_parquet, write_clustered, write_small_parquet
 from vector_db_spark.operators.kmeans import DEFAULT_SAMPLE_CAP, train_centroids
+from vector_db_spark.operators.knn import _batch_score, _numpy_distances
 from vector_db_spark.operators.staging import (
     assert_no_pending_swap,
     execute_swap,
@@ -46,7 +48,7 @@ from vector_db_spark.operators.topk import nearest_k, top_k_per_group
 # signal rather than noise — shared by derive_k's floor and build()'s
 # sample-cap guard so the two can never drift apart
 MIN_POINTS_PER_CLUSTER = 39
-# past this many query rows the probe table is joined un-hinted
+# past this many query rows a search ranks and joins its probes in SQL
 _MAX_BROADCAST_QUERIES = 10_000
 # the centroid table's types, as IVFIndex.write_centroids writes them
 CENTROID_SCHEMA = "cluster_id int, centroid array<double>"
@@ -394,12 +396,20 @@ class IVFIndex:
         round_to: int | None = 6,
         allowed_ids: DataFrame | None = None,
     ) -> DataFrame:
-        """n_probe search: rank centroids per query (ivf.py:170-171's argsort
-        as a windowed top-n_probe over the broadcast centroid join), then an
-        equi-join on ``cluster_id`` against the partitioned corpus — Catalyst
-        turns the tiny probe side into dynamic partition pruning, the
-        distributed form of "only scan the probed inverted lists"
-        (ivf.py:174-178) — then exact distances and a per-query top-k.
+        """n_probe search (ivf.py:170-178): each query's ``n_probe``
+        nearest clusters, exact distances over their rows only, then a
+        per-query top-k by (dist, neighbor id).
+
+        The query side is size-routed (``vector_db_spark.route``, site
+        ``ivf.probe``) by one bounded fetch, which is also the read of the
+        queries. Within ``_MAX_BROADCAST_QUERIES`` rows the probes are
+        ranked on the driver (:meth:`rank_probes`), the corpus is read once
+        with a static ``cluster_id IN (probed clusters)`` partition filter
+        — "only scan the probed inverted lists" as partition pruning — and
+        the k-NN batch kernel scores each cluster's rows against only the
+        queries that probe it, emitting a partial top-k per batch. Past the
+        bound the queries stay distributed: :meth:`probe_join` ranks and
+        joins them in SQL and the distance is a SQL expression.
 
         ``allowed_ids`` (one column named like ``id_col``) pre-filters the
         candidate set — metadata-filtered search (reference F2,
@@ -407,19 +417,53 @@ class IVFIndex:
         filtered search still returns k results when k matches exist."""
         if metric not in METRICS:
             raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
+        qrows = route.fetch(
+            queries.select(query_id_col, query_vec_col), _MAX_BROADCAST_QUERIES, "ivf.probe"
+        )
         corpus = self.corpus()
         if allowed_ids is not None:
             corpus = corpus.join(allowed_ids, self.id_col, "left_semi")
-        cand = self.probe_join(
-            queries, corpus, n_probe, metric=metric, query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-        )
-        scored = cand.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(self.id_col).alias("neighbor_id"),
-            METRICS[metric](F.col(query_vec_col), F.col(self.vec_col)).alias("dist"),
-        )
+        if qrows is None:
+            cand = self.probe_join(
+                queries, corpus, n_probe, metric=metric, query_id_col=query_id_col,
+                query_vec_col=query_vec_col,
+            )
+            scored = cand.select(
+                F.col(query_id_col).alias("query_id"),
+                F.col(self.id_col).alias("neighbor_id"),
+                METRICS[metric](F.col(query_vec_col), F.col(self.vec_col)).alias("dist"),
+            )
+        else:
+            cents = self.centroid_matrix()
+            # reshape: an empty query side still has the centroids' width
+            qmat = np.array([r[1] for r in qrows], dtype=np.float64).reshape(
+                len(qrows), cents.shape[1]
+            )
+            probes = self.rank_probes(cents, qmat, n_probe, metric)
+            scored = _batch_score(
+                qrows,
+                corpus.filter(F.col("cluster_id").isin(np.unique(probes).tolist())),
+                k, metric=metric, id_col=self.id_col, vec_col=self.vec_col,
+                round_to=round_to, probes=probes,
+            )
         return nearest_k(scored, k, round_to)
+
+    @staticmethod
+    def rank_probes(
+        centroids: np.ndarray, queries: np.ndarray, n_probe: int, metric: str = "euclidean"
+    ) -> np.ndarray:
+        """(q, n_probe) cluster ids: row i is query i's ``n_probe`` nearest
+        clusters, nearest first (ivf.py:170-171's argsort, on the driver).
+        ``centroids`` is :meth:`centroid_matrix` (row c is cluster c), so
+        distance ties go to the lower cluster_id, as in :meth:`probe_join`.
+
+        Probes are ranked by the SAME metric as final scoring: a euclidean
+        probe under metric="dot" would aim at the L2-nearest centroids
+        while the max-inner-product neighbors live in large-norm clusters
+        far away in L2 — deterministically missing the true top-k whenever
+        n_probe < n_clusters."""
+        dists = _numpy_distances(metric, centroids, queries)  # (k, q)
+        return np.argsort(dists, axis=0, kind="stable")[:n_probe].T
 
     def probe_join(
         self,
@@ -431,24 +475,16 @@ class IVFIndex:
         query_id_col: str = "query_id",
         query_vec_col: str = "query_vec",
     ) -> DataFrame:
-        """Each query's ``n_probe`` nearest clusters (ivf.py:170-171's
-        argsort as a windowed top-n_probe over the broadcast centroid join),
-        joined to the cluster-partitioned ``table`` on ``cluster_id`` — the
-        scan reads only the probed partitions.
-
-        Probe ranking uses the SAME metric as final scoring: a euclidean
-        probe under metric="dot" would aim at the L2-nearest centroids
-        while the max-inner-product neighbors live in large-norm clusters
-        far away in L2 — deterministically missing the true top-k
-        whenever n_probe < n_clusters (for "cosine" the registered path
-        normalizes first, where the two orders coincide; this guards the
-        direct-API caller on raw vectors). Ranking ascending by
-        METRICS[metric] is nearest-under-that-metric by construction
-        (dot is registered negated).
-
-        The probe side is size-routed (``vector_db_spark.route``): past
-        ``_MAX_BROADCAST_QUERIES`` query rows the join runs un-hinted (a
-        shuffle on ``cluster_id`` against the cluster-partitioned table)."""
+        """The large-query-side probe: each query's ``n_probe`` nearest
+        clusters as a windowed top-n_probe over the broadcast centroid join
+        (ordered by (distance under ``metric``, cluster_id), the order of
+        :meth:`rank_probes`), joined to the cluster-partitioned ``table`` on
+        ``cluster_id``. Searches take it only past their
+        ``_MAX_BROADCAST_QUERIES`` route, so the probe table is joined
+        un-hinted (Catalyst/AQE pick the strategy; the scan can still prune
+        dynamically). Ranking ascending by METRICS[metric] is
+        nearest-under-that-metric by construction (dot is registered
+        negated)."""
         probes = top_k_per_group(
             queries.crossJoin(F.broadcast(self.centroids())).withColumn(
                 "__cdist", METRICS[metric](F.col(query_vec_col), F.col("centroid"))
@@ -457,8 +493,7 @@ class IVFIndex:
             [F.col("__cdist").asc(), F.col("cluster_id").asc()],
             n_probe,
         ).select(query_id_col, query_vec_col, "cluster_id")
-        small = route.fits(queries, _MAX_BROADCAST_QUERIES, "ivf.probe")
-        return (F.broadcast(probes) if small else probes).join(table, "cluster_id")
+        return probes.join(table, "cluster_id")
 
     # -- stats (reference ivf.py:201-215) ----------------------------------------
 

@@ -10,8 +10,9 @@ Reused, not copied:
 
 - **coarse layer** — an :class:`~vector_db_spark.operators.ivf.IVFIndex`
   over the same ``<path>``: its ``centroids/`` and ``corpus/`` readers,
-  the probe ranking (``probe_join``), the one centroid-table writer and
-  the cluster statistics (``index.ivf.stats()``);
+  the probe ranking (``rank_probes`` on the driver, ``probe_join`` past
+  the query-side bound), the one centroid-table writer and the cluster
+  statistics (``index.ivf.stats()``);
 - **codec** — a :class:`~vector_db_spark.operators.pq.PQModel` over the
   same ``<path>``: the one codebook writer and tensor reader, and the one
   PQ encode kernel :func:`~vector_db_spark.operators.pq.encode_chunks`.
@@ -25,13 +26,20 @@ Added here:
   centroid, so quantizing the residual spends the whole codebook budget on
   the local neighborhood — Jégou et al., "Product Quantization for Nearest
   Neighbor Search" (TPAMI 2011), §IV.A (IVFADC);
-- the per-(query, cluster) **ADC kernel**: one lookup table over the
-  residual query ``q − c`` per probed cluster, a partial top-k inside each
+- the **ADC kernel**: one lookup table over the residual query ``q − c``
+  per (query, probed cluster), a (dist, id) partial top-k inside each
   Arrow batch, then a global exact top-k and an optional exact re-rank of
-  ``refine × k`` candidates against the raw corpus.
+  ``refine × k`` candidates against the raw corpus. Search has two
+  branches, routed on the query side like ``IVFIndex.search``: within
+  the bound the queries are collected, the probe plan is ranked on the
+  driver and the codes scan is statically pruned to the probed clusters,
+  whose rows each batch scores against only the queries that probe them;
+  past it the SQL probe join feeds the kernel (query, cluster) groups.
 
 At 100 TB: the only driver-side state is (k×dim centroids) + (m×k×sub
-codebooks); training samples are capped; encode/search are single Arrow
+codebooks) + at most ``_MAX_BROADCAST_QUERIES`` query rows (no LUT is
+built on the driver: at that bound q × n_probe LUTs could reach
+gigabytes); training samples are capped; encode/search are single Arrow
 passes over partition-pruned scans (the ADC scan reads only the ids+codes
 columns: m×4 bytes per vector instead of dim×4); the re-rank join touches
 refine×k rows per query.
@@ -47,16 +55,48 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vector_db_spark import route
 from vector_db_spark.functions.distance import euclidean
 from vector_db_spark.io import write_clustered
-from vector_db_spark.operators.ivf import IVFIndex, assign_to_centroids
+from vector_db_spark.operators.ivf import _MAX_BROADCAST_QUERIES, IVFIndex, assign_to_centroids
 from vector_db_spark.operators.kmeans import (
     DEFAULT_SAMPLE_CAP,
     collect_sample,
     kmeans_fit,
 )
+from vector_db_spark.operators.knn import _BATCH_SCHEMA, _partial_topk, _probe_plan
 from vector_db_spark.operators.pq import PQModel, encode_chunks
 from vector_db_spark.operators.topk import nearest_k
+
+
+def _adc_top(
+    resid: np.ndarray,
+    tensor: np.ndarray,
+    codes: pd.Series,
+    ids: pd.Series,
+    qids: np.ndarray,
+    kk: int,
+) -> pd.DataFrame:
+    """The ADC kernel over one cluster's rows: an (m, k_codes) lookup table
+    per residual query ``q − c`` (the rows of ``resid``), each row's
+    distance the root of its m summed lookups, then each query's top-``kk``
+    by (dist, id) through ``knn._partial_topk``."""
+    m, _, sub = tensor.shape
+    codes = np.array(codes.tolist(), dtype=np.int64)  # (n, m)
+    ids = ids.to_numpy(dtype=np.int64)
+    lut = ((resid.reshape(-1, m, 1, sub) - tensor) ** 2).sum(axis=3)  # (q, m, k_codes)
+    d2 = np.zeros((len(qids), len(ids)))
+    for j in range(m):
+        d2 += lut[:, j, codes[:, j]]
+    idx, dists = _partial_topk(np.sqrt(d2.T), ids, kk, None)
+    take = idx.shape[0]
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(qids[None, :], take, axis=0).ravel(),
+            "neighbor_id": ids[idx].ravel(),
+            "dist": np.take_along_axis(dists, idx, axis=0).ravel(),
+        }
+    )
 
 
 class IVFPQIndex:
@@ -208,46 +248,29 @@ class IVFPQIndex:
         ``refine × k`` candidates per query and a raw-vector join re-ranks
         them exactly (distances then match brute force on the recalled set).
 
-        The probe join is size-routed like ``IVFIndex.probe_join``; its
-        un-hinted large branch is safe here because the ADC kernel's
-        per-batch (query, cluster) cuts are fixed by the global top-k."""
+        Routed like :meth:`IVFIndex.search` (site ``ivf.probe``, one bounded
+        fetch of the queries). Within ``_MAX_BROADCAST_QUERIES`` query rows
+        the probes are ranked on the driver and the codes table is read once
+        with a static ``cluster_id IN (probed clusters)`` partition filter;
+        the ADC kernel builds each (query, probed cluster) LUT from the
+        broadcast queries, centroids and codebooks. Past the bound,
+        :meth:`IVFIndex.probe_join` joins the queries to the codes in SQL
+        and the kernel builds one LUT per (query, cluster) group of the
+        joined rows. Both kernels cut each batch to each query's ADC
+        candidates (``refine × k``, or ``k``) by (dist, id), the global
+        top-k's order, so of rows tied on ADC distance (identical codes) the
+        lower ids are kept whatever the batch layout."""
         fetch = k * refine if refine else k
-        # the (tiny) probe table is broadcast into every codes partition —
-        # no shuffle of the codes side; DPP prunes unprobed clusters
-        cand = self.ivf.probe_join(
-            queries, self.codes(), n_probe, query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
+        qrows = route.fetch(
+            queries.select(query_id_col, query_vec_col), _MAX_BROADCAST_QUERIES, "ivf.probe"
         )
-        bc = self.spark.sparkContext.broadcast(
-            (self.ivf.centroid_matrix(), self.pq.codebook_tensor())
-        )
-        id_col, qid, qvec, kk = self.id_col, query_id_col, query_vec_col, fetch
-
-        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cents, t = bc.value
-            m, kcodes, s = t.shape
-            rng = np.arange(m)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                # one LUT per (query, cluster) group: residual q − c
-                for (q, cid), g in pdf.groupby([qid, "cluster_id"], sort=False):
-                    qv = np.asarray(g[qvec].iloc[0], dtype=np.float64)
-                    r = (qv - cents[cid]).reshape(m, s)
-                    lut = ((r[:, None, :] - t) ** 2).sum(axis=2)  # (m, kcodes)
-                    codes = np.array(g["codes"].tolist(), dtype=np.int64)  # (n, m)
-                    d = np.sqrt(lut[rng[None, :], codes].sum(axis=1))  # (n,)
-                    take = min(kk, d.shape[0])
-                    idx = np.argpartition(d, take - 1)[:take]
-                    yield pd.DataFrame(
-                        {
-                            "query_id": np.full(take, q, dtype=np.int64),
-                            "neighbor_id": g[id_col].to_numpy(dtype=np.int64)[idx],
-                            "dist": d[idx],
-                        }
-                    )
-
-        scored = cand.mapInPandas(score, "query_id long, neighbor_id long, dist double")
+        cents, tensor = self.ivf.centroid_matrix(), self.pq.codebook_tensor()
+        if qrows is None:
+            scored = self._adc_joined(
+                queries, n_probe, fetch, cents, tensor, query_id_col, query_vec_col
+            )
+        else:
+            scored = self._adc_probed(qrows, n_probe, fetch, cents, tensor)
         adc_top = nearest_k(scored, fetch).drop("rank")
         if not refine:
             return nearest_k(adc_top, k, round_to)
@@ -270,3 +293,59 @@ class IVFPQIndex:
             )
         )
         return nearest_k(exact, k, round_to)
+
+    def _adc_probed(
+        self, qrows: list, n_probe: int, fetch: int, cents: np.ndarray, tensor: np.ndarray
+    ) -> DataFrame:
+        """ADC candidates for collected (id, vec) queries: a driver-side
+        probe plan, then one pass over the probed clusters' codes."""
+        qids = np.array([r[0] for r in qrows], dtype=np.int64)
+        # reshape: an empty query side still has the centroids' width
+        qmat = np.array([r[1] for r in qrows], dtype=np.float64).reshape(
+            len(qrows), cents.shape[1]
+        )
+        plan = _probe_plan(IVFIndex.rank_probes(cents, qmat, n_probe))
+        bc = self.spark.sparkContext.broadcast((qids, qmat, cents, tensor, plan))
+        id_col = self.id_col
+
+        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            ids, mat, cents, t, plan = bc.value
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                cl = pdf["cluster_id"].to_numpy()
+                for c in np.unique(cl):
+                    rows, qs = cl == c, plan[c]
+                    yield _adc_top(
+                        mat[qs] - cents[c], t, pdf["codes"][rows], pdf[id_col][rows],
+                        ids[qs], fetch,
+                    )
+
+        codes = self.codes().filter(F.col("cluster_id").isin(list(plan)))
+        return codes.mapInPandas(score, _BATCH_SCHEMA)
+
+    def _adc_joined(
+        self, queries: DataFrame, n_probe: int, fetch: int, cents: np.ndarray,
+        tensor: np.ndarray, qid: str, qvec: str,
+    ) -> DataFrame:
+        """ADC candidates for a query table too big to collect: the SQL
+        probe join, then one LUT per (query, cluster) group of its rows."""
+        cand = self.ivf.probe_join(
+            queries, self.codes(), n_probe, query_id_col=qid, query_vec_col=qvec
+        )
+        bc = self.spark.sparkContext.broadcast((cents, tensor))
+        id_col = self.id_col
+
+        def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            cents, t = bc.value
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                for (q, cid), g in pdf.groupby([qid, "cluster_id"], sort=False):
+                    qv = np.asarray(g[qvec].iloc[0], dtype=np.float64)
+                    yield _adc_top(
+                        (qv - cents[cid])[None, :], t, g["codes"], g[id_col],
+                        np.array([q], dtype=np.int64), fetch,
+                    )
+
+        return cand.mapInPandas(score, _BATCH_SCHEMA)

@@ -19,7 +19,9 @@ Two physical strategies, same results:
   against all queries vectorized (BLAS) and emits only the per-batch top-k
   per query, so the shuffle carries at most ``k * n_queries * n_batches``
   rows into the final exact top-k — a map-side partial top-k, the same idea
-  as Spark's TakeOrderedAndProject but per query group.
+  as Spark's TakeOrderedAndProject but per query group. Given an IVF probe
+  plan (``IVFIndex.search``), the same kernel scores each cluster's rows
+  against only the queries that probe that cluster.
 
 Distances are rounded (default 6 dp) and ties broken by neighbor id, making
 the result set deterministic and engine-independent.
@@ -166,6 +168,17 @@ def _partial_topk(
     return idx, dists
 
 
+def _probe_plan(probes: np.ndarray) -> dict[int, np.ndarray]:
+    """An IVF probe plan: cluster id → the ascending row numbers of the
+    queries that probe it, from a (q, n_probe) array of probed clusters."""
+    q, n = probes.shape
+    flat = probes.ravel()
+    order = np.argsort(flat, kind="stable")
+    clusters, starts = np.unique(flat[order], return_index=True)
+    rows = np.repeat(np.arange(q), n)[order]
+    return dict(zip(clusters.tolist(), np.split(rows, starts[1:])))
+
+
 def _batch_score(
     qrows: list,
     corpus: DataFrame,
@@ -175,35 +188,51 @@ def _batch_score(
     id_col: str,
     vec_col: str,
     round_to: int | None = 6,
+    probes: np.ndarray | None = None,
 ) -> DataFrame:
     """Map-side scored + partially-top-k'd (query, neighbor, dist) triples.
-    ``qrows`` is the already-collected (id, vec) query side — knn_join's
-    size guard did the bounded fetch."""
+    ``qrows`` is the already-collected (id, vec) query side — the caller's
+    size guard did the bounded fetch.
+
+    ``probes`` is an IVF probe plan: a (q, n_probe) array whose row i holds
+    the clusters ``qrows[i]`` probes. ``corpus`` then carries
+    ``cluster_id``, and each batch scores a cluster's rows only against the
+    queries that probe that cluster (rows of unprobed clusters score
+    against none)."""
     if not qrows:
         return corpus.sparkSession.createDataFrame([], _BATCH_SCHEMA)
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    bc = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
+    plan = None if probes is None else _probe_plan(probes)
+    bc = corpus.sparkSession.sparkContext.broadcast((qids, qmat, plan))
+    cols = [id_col, vec_col] + ([] if plan is None else ["cluster_id"])
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat = bc.value
+        ids, mat, plan = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
             cvecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             cids = pdf[id_col].to_numpy(dtype=np.int64)
-            dists = _numpy_distances(metric, cvecs, mat)  # (n, q)
-            idx, dists = _partial_topk(dists, cids, k, round_to)
-            kk = idx.shape[0]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(ids[None, :], kk, axis=0).ravel(),
-                    "neighbor_id": cids[idx].ravel(),
-                    "dist": np.take_along_axis(dists, idx, axis=0).ravel(),
-                }
-            )
+            if plan is None:
+                groups = [(slice(None), slice(None))]
+            else:
+                cl = pdf["cluster_id"].to_numpy()
+                groups = [(cl == c, plan[c]) for c in np.unique(cl) if c in plan]
+            for rows, qs in groups:
+                gids = cids[rows]
+                dists = _numpy_distances(metric, cvecs[rows], mat[qs])  # (n, q)
+                idx, dists = _partial_topk(dists, gids, k, round_to)
+                kk = idx.shape[0]
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.repeat(ids[qs][None, :], kk, axis=0).ravel(),
+                        "neighbor_id": gids[idx].ravel(),
+                        "dist": np.take_along_axis(dists, idx, axis=0).ravel(),
+                    }
+                )
 
-    return corpus.select(id_col, vec_col).mapInPandas(score, _BATCH_SCHEMA)
+    return corpus.select(*cols).mapInPandas(score, _BATCH_SCHEMA)
 
 
 def knn_self(
