@@ -5,6 +5,8 @@ short-circuit, health, persistence across 'restarts'."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -168,10 +170,10 @@ def test_delete_documents_removes_from_store_and_index(spark, tmp_path):
     assert [r.id for r in idx.corpus().select("id").collect()] == [1]
 
 
-def test_insert_embeds_each_document_once(spark, tmp_path):
+def test_insert_embeds_each_document_once(spark, tmp_path, force_large):
     """The embedder runs once per inserted document, into a new store and
-    into an indexed one: the batch is materialized once, and the index is
-    fed the rows that were written."""
+    into an indexed one, on either id-numbering branch: the batch is
+    materialized once, and the index is fed the rows that were written."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -198,6 +200,12 @@ def test_insert_embeds_each_document_once(spark, tmp_path):
     assert svc.insert_documents(docs("second", 5)) == 5
     assert embedded.value == 12 + 5
     assert svc.health()["index_vectors"] == 17
+    # the distributed numbering reads the same checkpointed batch
+    with force_large("storage.id_batch"):
+        assert svc.insert_documents(docs("third", 40)) == 40
+    assert embedded.value == 12 + 5 + 40
+    assert svc.health()["index_vectors"] == 57
+    assert sorted(r.id for r in svc.nodes.all_ids().collect()) == list(range(1, 58))
 
 
 def test_unreadable_index_raises_instead_of_going_exact(spark, service):
@@ -241,3 +249,35 @@ def test_failed_centroid_rewrite_keeps_the_index(service, monkeypatch):
     idx = service._index()
     assert idx is not None
     assert np.array_equal(idx.centroid_matrix(), before)
+
+
+def test_service_writes_start_few_jobs(spark, tmp_path, jobs_of):
+    """An insert into an indexed store starts at most 6 Spark jobs and a
+    delete at most 5. A delete of ids that do not exist starts only its
+    two probes (node table and index) and rewrites no file."""
+    svc = VectorDBService(spark, str(tmp_path / "svc"), dim=8)
+
+    def docs(tag, n):
+        return spark.createDataFrame(
+            [(f"{tag} document {i}", {"k": str(i % 3)}) for i in range(n)],
+            "content string, metadata map<string,string>",
+        )
+
+    def files():
+        return sorted(
+            os.path.join(d, f)
+            for d, _, names in os.walk(svc.base_path)
+            for f in names
+        )
+
+    svc.insert_documents(docs("first", 60))
+    svc.build_index(k=3)
+    n, jobs = jobs_of("svc-insert-indexed", lambda: svc.insert_documents(docs("second", 20)))
+    assert n == 20 and 0 < len(jobs) <= 6, jobs
+    n, jobs = jobs_of("svc-delete-indexed", lambda: svc.delete_documents([3, 30, 70]))
+    assert n == 3 and 0 < len(jobs) <= 5, jobs
+    before = files()
+    n, jobs = jobs_of("svc-delete-missing", lambda: svc.delete_documents([500, 501]))
+    assert n == 0 and 0 < len(jobs) <= 2, jobs
+    assert files() == before
+    assert svc.health()["storage_nodes"] == svc.health()["index_vectors"] == 77

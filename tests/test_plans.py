@@ -189,6 +189,10 @@ def test_ivfpq_codes_scan_prunes_columns_and_partitions(spark, sf_smoke, indexes
     assert codes_scans, "expected a FileScan over the codes table"
     assert "embedding" not in codes_scans[0].split("ReadSchema")[1]
     assert _scan_partition_filters(plan, "codes") == _in_list(union)
+    # the exact re-rank reads the raw corpus of the same probed clusters
+    reranked = plan_of(idx.search(q, k=3, n_probe=N_PROBE, refine=4))
+    assert _scan_partition_filters(reranked, "codes") == _in_list(union)
+    assert _scan_partition_filters(reranked, "embedding") == _in_list(union)
 
 
 def test_range_join_is_equi_join_not_theta(spark, sf_smoke):

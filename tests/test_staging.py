@@ -196,3 +196,83 @@ def test_ivf_reads_refuse_pending_swap_and_recover(spark, sf_smoke, tmp_path):
     assert got == {".tmp-delete": "completed"}
     assert idx.corpus().count() == expect
     assert idx.corpus().filter(F.col("vec_id").isin(victims)).count() == 0
+
+
+def _node_rows(table):
+    return sorted((r.id, r.content) for r in table.df().collect())
+
+
+def _move(src_dir, name, dst_dir, dst_name=None):
+    """Rename a data file and its checksum, as the Hadoop rename does."""
+    os.rename(os.path.join(src_dir, name), os.path.join(dst_dir, dst_name or name))
+    crc = f".{name}.crc"
+    if os.path.exists(os.path.join(src_dir, crc)):
+        os.rename(
+            os.path.join(src_dir, crc), os.path.join(dst_dir, f".{dst_name or name}.crc")
+        )
+
+
+def test_node_table_delete_recovers_from_every_crash_point(spark, tmp_path, monkeypatch):
+    """NodeTable.delete through the staged swap, cut at each prefix of its
+    rename sequence: before the commit point recovery lands on the
+    untouched table, after it on the exact final rows; while a plan is
+    pending, df() refuses to read."""
+    from vector_db_spark import storage
+    from vector_db_spark.storage import NODE_SCHEMA, NodeTable
+
+    def fresh(name):
+        t = NodeTable(spark, str(tmp_path / name), dim=2)
+        rows = [(i, [float(i), 1.0], f"doc {i}", {}) for i in range(1, 13)]
+        t.init(spark.createDataFrame(rows[:8], NODE_SCHEMA).coalesce(1))
+        t.append(spark.createDataFrame(rows[8:], NODE_SCHEMA).coalesce(1))
+        return t
+
+    class Crash(Exception):
+        pass
+
+    def crash(*args, **kwargs):
+        raise Crash
+
+    # crash before the commit point: staged files, no plan
+    t = fresh("pre-commit")
+    before = _node_rows(t)
+    monkeypatch.setattr(storage, "write_plan", crash)
+    with pytest.raises(Crash):
+        t.delete([2, 10])
+    monkeypatch.undo()
+    tmp = t.path + ".tmp-rewrite"
+    assert os.path.isdir(tmp) and read_swap_plan(spark, tmp) is None
+    assert _node_rows(t) == before  # never touched the live table
+    assert t.recover() == {".tmp-rewrite": "discarded"}
+    assert _node_rows(t) == before and not os.path.exists(tmp)
+
+    want = [(i, f"doc {i}") for i in range(1, 13) if i not in (2, 10)]
+
+    def retire_one(t, tmp, plan):
+        _move(t.path, plan["retire"][0], tmp, "old-" + plan["retire"][0])
+
+    def retire_all(t, tmp, plan):
+        for name in plan["retire"]:
+            _move(t.path, name, tmp, "old-" + name)
+
+    def add_all(t, tmp, plan):
+        retire_all(t, tmp, plan)
+        for name in plan["add"]:
+            _move(tmp, name, t.path)
+
+    for cut in (lambda t, tmp, plan: None, retire_one, retire_all, add_all):
+        t = fresh(f"cut-{cut.__name__}")
+        monkeypatch.setattr(storage, "execute_swap", crash)
+        with pytest.raises(Crash):
+            t.delete([2, 10])
+        monkeypatch.undo()
+        tmp = t.path + ".tmp-rewrite"
+        plan = read_swap_plan(spark, tmp)
+        assert len(plan["retire"]) == 2 and len(plan["add"]) == 1
+        cut(t, tmp, plan)
+        with pytest.raises(RuntimeError, match="interrupted maintenance swap"):
+            t.df()
+        assert t.recover() == {".tmp-rewrite": "completed"}
+        assert _node_rows(t) == want, cut.__name__
+        assert not os.path.exists(tmp)
+        assert t.recover() == {}

@@ -4,6 +4,10 @@ tests/inference/test_mmap_vector_store.py:29-385) on Parquet."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -229,3 +233,52 @@ def test_upsert_rejects_duplicate_batch_ids(spark, table):
         table.upsert(batch)
     # the table is untouched by the rejected batch
     assert table.size() == 3
+
+
+def test_max_id_reads_footers_with_no_spark_job(spark, table, tmp_path, jobs_of):
+    """The next id comes from the Parquet footers on the driver: no Spark
+    job. A row group with rows but no id statistics raises instead of
+    guessing, and so does the insert that needs the next id."""
+    got, jobs = jobs_of("node-max-id", table._max_id)
+    assert got == 3 and jobs == []
+    assert NodeTable(spark, str(tmp_path / "missing"))._max_id() is None
+
+    bare = NodeTable(spark, str(tmp_path / "bare"), dim=4)
+    os.makedirs(bare.path)
+    pq.write_table(
+        pa.table({"id": pa.array([7], pa.int64()), "embedding": [[1.0, 0.0, 0.0, 0.0]],
+                  "content": ["x"], "metadata": pa.array([[("k", "v")]],
+                                                          pa.map_(pa.string(), pa.string()))}),
+        os.path.join(bare.path, "part-00000.parquet"),
+        write_statistics=False,
+    )
+    assert bare.size() == 1
+    with pytest.raises(ValueError, match="no id statistics"):
+        bare._max_id()
+    with pytest.raises(ValueError, match="no id statistics"):
+        bare.append_with_ids(
+            _nodes(spark, [(-1, [0.0, 1.0, 0.0, 0.0], "y", {})]).drop("id")
+        )
+    assert bare.size() == 1
+
+
+def test_delete_rewrites_only_the_files_holding_the_ids(spark, table):
+    """A delete swaps out only the data files that held the ids, replaced
+    by one file of their survivors; other files are untouched, and a
+    delete that matches nothing writes nothing."""
+
+    def data_files():
+        return sorted(f for f in os.listdir(table.path) if f.startswith("part-"))
+
+    table.append(_nodes(spark, [(10, [0, 0, 0, 1], "Blue Bike", {})]).coalesce(1))
+    before = data_files()
+    (cold,) = [
+        f for f in before
+        if pq.read_table(os.path.join(table.path, f)).column("id").to_pylist() == [10]
+    ]
+    assert table.delete([1, 3]) == 2
+    after = data_files()
+    assert cold in after
+    assert {r.id for r in table.df().collect()} == {2, 10}
+    assert table.delete([99]) == 0
+    assert data_files() == after

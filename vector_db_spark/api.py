@@ -8,7 +8,7 @@ boundaries):
 
 | reference endpoint | here |
 |---|---|
-| ``POST /embed`` insert (app.py:119-160): embed → next id → storage save → incremental index insert | :meth:`insert_documents`: embed UDF → ``NodeTable.append_with_ids`` (max+row_number ids, one materialized copy, append) → the written rows centroid-assigned and appended to the IVF corpus |
+| ``POST /embed`` insert (app.py:119-160): embed → next id → storage save → incremental index insert | :meth:`insert_documents`: embed UDF → ``NodeTable.append_with_ids`` (next id from the Parquet footers; the batch fetched once to the driver, numbered and dimension-checked there, and appended as one file) → the written rows centroid-assigned and appended to the IVF corpus |
 | ``POST /search`` (app.py:165-233): embed query → metadata filter → ANN search → format | :meth:`search`: embed → Catalyst predicate filter (pushed down, not post-hoc like the reference's hnsw filter_ids) → IVF n_probe search (or exact brute force) → join content/metadata |
 | ``GET /health`` (app.py:107-116) | :meth:`health` |
 | service startup / index load-on-start (app.py:42-101, L3) | the constructor — index state is Parquet, read per request (the centroid file on the driver, the corpus by ``spark.read`` with its fixed schema) |
@@ -66,8 +66,8 @@ class VectorDBService:
         """``docs``: (content string, metadata map<string,string>); any
         other column is rejected before a Spark job runs. Embeds once,
         numbers and appends through :meth:`NodeTable.append_with_ids`
-        (ids ``max(id)+1`` onwards, from 1 on an empty store —
-        storage.py:276-280), and extends the IVF index, when one exists,
+        (ids from one past the largest stored id, from 1 on an empty store
+        — storage.py:276-280), and extends the IVF index, when one exists,
         with exactly the rows written (indexing_service.py:77-89).
         Returns the number inserted."""
         n, written = self.nodes.append_with_ids(
@@ -79,15 +79,14 @@ class VectorDBService:
         return n
 
     def delete_documents(self, node_ids: list[int]) -> int:
-        """DELETE by id across BOTH stores: the node table (anti-join
-        rewrite, storage.py delete semantics) and, when an index exists,
-        the IVF partitions holding those vectors (partition-targeted
-        rewrite, IVFIndex.delete) — store and index can never disagree
-        about membership. Returns the number actually removed: the rows
-        whose id is in ``node_ids``, counted before the delete (ids are
+        """DELETE by id across BOTH stores: the node table (only the data
+        files holding those ids are rewritten, :meth:`NodeTable.delete`)
+        and, when an index exists, the IVF partitions holding those vectors
+        (:meth:`IVFIndex.delete`); both swap their rewrites in through the
+        staged-swap protocol (operators/staging.py). Returns the number
+        actually removed: the ids ``NodeTable.delete`` matched (ids are
         unique, so that is the drop in table size)."""
-        n = self.nodes.df().filter(F.col("id").isin(node_ids)).count()
-        self.nodes.delete(node_ids)
+        n = self.nodes.delete(node_ids)
         idx = self._index()
         if idx is not None:
             idx.delete(node_ids)

@@ -7,7 +7,7 @@ indexing/ivf.py``) Spark-first:
 |---------------------------------------------|------|
 | ``build_index``: scipy ``kmeans2`` + Python inverted lists (ivf.py:49-85) | bounded-sample k-means++/Lloyd (operators.kmeans) + distributed broadcast-argmin assignment; "inverted list" = the corpus written ``partitionBy("cluster_id")`` — probing a cluster IS partition pruning |
 | ``add``: argmin over centroids, append to list (ivf.py:87-117) | broadcast-centroid argmin join → append to the partitioned table |
-| ``delete``: remove id from all lists (ivf.py:119-136) | dynamic partition overwrite of only the affected clusters |
+| ``delete``: remove id from all lists (ivf.py:119-136) | staged rewrite of only the affected clusters' partitions, swapped in by ``operators/staging.py`` |
 | ``search``: rank centroids, scan n_probe lists, exact top-k (ivf.py:138-199) | probe plan ranked on the driver over the centroid matrix → one corpus scan with a static ``cluster_id IN (probed)`` partition filter → k-NN batch kernel scoring each cluster's rows against the queries that probe it (partial top-k per batch) → global top-k; past ``_MAX_BROADCAST_QUERIES`` query rows, ``probe_join`` (windowed top-n_probe over the broadcast centroid cross join, un-hinted join on ``cluster_id``) and a SQL distance |
 | pickle persistence (ivf.py:217-241)         | Parquet centroid table (read on the driver) + partitioned corpus (``spark.read`` with its fixed schema) |
 
@@ -279,13 +279,12 @@ class IVFIndex:
         deleted before its replacement is in place."""
         self.recover()
         corpus = self.corpus()
-        affected = (
-            corpus.filter(F.col(self.id_col).isin(ids))
-            .select("cluster_id")
-            .distinct()
-            .collect()
+        # one row per matched id (at most len(ids)), deduped on the driver
+        # instead of by a distinct shuffle
+        clusters = sorted(
+            {r.cluster_id for r in corpus.filter(F.col(self.id_col).isin(ids))
+             .select("cluster_id").collect()}
         )
-        clusters = [r.cluster_id for r in affected]
         if not clusters:
             return
         remaining = corpus.filter(

@@ -250,9 +250,9 @@ class IVFPQIndex:
 
         Routed like :meth:`IVFIndex.search` (site ``ivf.probe``, one bounded
         fetch of the queries). Within ``_MAX_BROADCAST_QUERIES`` query rows
-        the probes are ranked on the driver and the codes table is read once
-        with a static ``cluster_id IN (probed clusters)`` partition filter;
-        the ADC kernel builds each (query, probed cluster) LUT from the
+        the probes are ranked on the driver and the codes table, and the raw
+        corpus the re-rank reads, carry a static ``cluster_id IN (probed
+        clusters)`` partition filter; the ADC kernel builds each (query, probed cluster) LUT from the
         broadcast queries, centroids and codebooks. Past the bound,
         :meth:`IVFIndex.probe_join` joins the queries to the codes in SQL
         and the kernel builds one LUT per (query, cluster) group of the
@@ -265,24 +265,33 @@ class IVFPQIndex:
             queries.select(query_id_col, query_vec_col), _MAX_BROADCAST_QUERIES, "ivf.probe"
         )
         cents, tensor = self.ivf.centroid_matrix(), self.pq.codebook_tensor()
+        corpus = self.ivf.corpus()
         if qrows is None:
             scored = self._adc_joined(
                 queries, n_probe, fetch, cents, tensor, query_id_col, query_vec_col
             )
+            qside = queries.select(
+                F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")
+            )
         else:
-            scored = self._adc_probed(qrows, n_probe, fetch, cents, tensor)
+            scored, probed = self._adc_probed(qrows, n_probe, fetch, cents, tensor)
+            # every candidate lives in a probed cluster: the re-rank scan is
+            # pruned like the codes scan, and its query side is the fetch
+            corpus = corpus.filter(F.col("cluster_id").isin(probed))
+            qside = self.spark.createDataFrame(
+                pd.DataFrame({"query_id": [r[0] for r in qrows],
+                              "__qv": [r[1] for r in qrows]}),
+                "query_id long, __qv array<double>",
+            )
         adc_top = nearest_k(scored, fetch).drop("rank")
         if not refine:
             return nearest_k(adc_top, k, round_to)
 
         # exact re-rank: refine×k candidate rows per query — broadcast the
         # (tiny) candidate list so the raw corpus is streamed, never
-        # shuffled, and its scan can prune on the candidates' clusters
-        qside = queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")
-        )
+        # shuffled
         exact = (
-            self.ivf.corpus()
+            corpus
             .select(F.col(self.id_col).alias("neighbor_id"), self.vec_col)
             .join(F.broadcast(adc_top.select("query_id", "neighbor_id")), "neighbor_id")
             .join(F.broadcast(qside), "query_id")
@@ -296,9 +305,10 @@ class IVFPQIndex:
 
     def _adc_probed(
         self, qrows: list, n_probe: int, fetch: int, cents: np.ndarray, tensor: np.ndarray
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, list[int]]:
         """ADC candidates for collected (id, vec) queries: a driver-side
-        probe plan, then one pass over the probed clusters' codes."""
+        probe plan, then one pass over the probed clusters' codes. Returns
+        the candidates and the probed cluster ids."""
         qids = np.array([r[0] for r in qrows], dtype=np.int64)
         # reshape: an empty query side still has the centroids' width
         qmat = np.array([r[1] for r in qrows], dtype=np.float64).reshape(
@@ -321,8 +331,9 @@ class IVFPQIndex:
                         ids[qs], fetch,
                     )
 
-        codes = self.codes().filter(F.col("cluster_id").isin(list(plan)))
-        return codes.mapInPandas(score, _BATCH_SCHEMA)
+        probed = list(plan)
+        codes = self.codes().filter(F.col("cluster_id").isin(probed))
+        return codes.mapInPandas(score, _BATCH_SCHEMA), probed
 
     def _adc_joined(
         self, queries: DataFrame, n_probe: int, fetch: int, cents: np.ndarray,

@@ -1,32 +1,35 @@
-"""Staged partition-swap protocol for plain-Parquet partitioned tables.
+"""Staged swap protocol for plain-Parquet tables: the one crash-safe
+rewrite path of both stores.
 
-The IVF index maintenance ops (delete, refresh) rewrite a subset
-of ``cluster_id=N`` partition directories. Plain Parquet has no manifest, so
-atomicity comes from a small filesystem protocol instead:
+Two tables rewrite part of themselves in place: the IVF corpus (index
+delete and refresh replace ``cluster_id=N`` partition directories) and the
+node table (``NodeTable.delete``/``upsert`` replace the data files that
+hold the affected ids). Plain Parquet has no manifest, so atomicity comes
+from a small filesystem protocol instead:
 
-1. stage the rewritten partitions under ``<table>.tmp-<op>`` (a normal
-   partitioned Spark write);
+1. stage the new data under ``<table>.tmp-<op>`` (a normal Spark write);
 2. durably record the intended mutation as ``.swap-plan.json`` inside the
    staging dir — the plan's presence is the COMMIT POINT: a staging dir
    without a plan has never touched the live table (safe to discard), one
    with a plan is resumable to completion;
 3. execute the plan with existence-guarded renames only — live data is
    NEVER deleted before its replacement is durably in place (a retired
-   partition is renamed INTO the staging dir, not deleted), and the staging
+   entry is renamed INTO the staging dir, not deleted), and the staging
    dir is removed only after every rename has landed.
 
 A crash at any point is recovered by re-running :func:`execute_swap`
 (every step is idempotent: each rename is guarded by what already exists).
 Readers must refuse to read THROUGH a committed-but-unfinished swap —
-clusters may be missing from the live layout, and a silently-partial read
-is wrong, not slow — hence :func:`assert_no_pending_swap` on the read path
+data may be missing from the live layout, and a silently-partial read is
+wrong, not slow — hence :func:`assert_no_pending_swap` on the read path
 and recover-on-entry in every mutating op.
 
-Plan shape: ``{"swap": [cluster ids whose staged dir REPLACES the live
-dir; a missing staged dir means the whole cluster was deleted and the live
-dir is retired], "move": [cluster ids whose staged part files are renamed
-INTO the existing live dir — append-shaped, task-uuid file names cannot
-collide]}``.
+Plan shape: ``{"retire": [top-level live entries (partition dirs or data
+files) renamed to ``old-<name>`` inside the staging dir], "add": [paths
+relative to the staging dir, renamed to the same path in the table]}``.
+Retires run before adds, so a partition dir that is both retired and
+added is replaced. Staged file names carry the writing job's uuid, so an
+added file never collides with a live one.
 """
 
 from __future__ import annotations
@@ -43,22 +46,38 @@ def _hadoop_fs(spark, table_path: str):
     return jpath, fs
 
 
-def write_swap_plan(
-    spark, tmp: str, swap_clusters: list[int], move_clusters: list[int]
-) -> None:
+def staged_part_files(spark, tmp: str, subdir: str = "") -> list[str]:
+    """The data files a Spark write left in ``tmp/subdir``, relative to
+    ``tmp``."""
+    jpath, fs = _hadoop_fs(spark, tmp)
+    names = [st.getPath().getName() for st in fs.listStatus(jpath(os.path.join(tmp, subdir)))]
+    return sorted(os.path.join(subdir, n) for n in names if n.startswith("part-"))
+
+
+def write_plan(spark, tmp: str, retire: list[str], add: list[str]) -> None:
     """Write the plan atomically (staged file + rename) — the commit point."""
     jpath, fs = _hadoop_fs(spark, tmp)
-    payload = json.dumps(
-        {
-            "swap": sorted(int(c) for c in swap_clusters),
-            "move": sorted(int(c) for c in move_clusters),
-        }
-    ).encode()
+    payload = json.dumps({"retire": sorted(retire), "add": sorted(add)}).encode()
     staged = jpath(os.path.join(tmp, SWAP_PLAN + ".tmp"))
     out = fs.create(staged, True)
     out.write(bytearray(payload))
     out.close()
     fs.rename(staged, jpath(os.path.join(tmp, SWAP_PLAN)))
+
+
+def write_swap_plan(
+    spark, tmp: str, swap_clusters: list[int], move_clusters: list[int]
+) -> None:
+    """The plan of a cluster-partitioned table: each ``swap`` cluster's live
+    dir is retired and its staged dir, when there is one, takes its place
+    (no staged dir: the whole cluster was deleted); each ``move`` cluster's
+    staged part files are renamed INTO its live dir (append-shaped)."""
+    jpath, fs = _hadoop_fs(spark, tmp)
+    swap = [f"cluster_id={int(c)}" for c in swap_clusters]
+    add = [d for d in swap if fs.exists(jpath(os.path.join(tmp, d)))]
+    for c in move_clusters:
+        add += staged_part_files(spark, tmp, f"cluster_id={int(c)}")
+    write_plan(spark, tmp, swap, add)
 
 
 def read_swap_plan(spark, tmp: str) -> dict | None:
@@ -81,31 +100,18 @@ def execute_swap(spark, table_path: str, tmp: str) -> None:
     if plan is None:
         return
     jpath, fs = _hadoop_fs(spark, table_path)
-    for c in plan["swap"]:
-        src = jpath(os.path.join(tmp, f"cluster_id={c}"))
-        dst = jpath(os.path.join(table_path, f"cluster_id={c}"))
-        old = jpath(os.path.join(tmp, f"old-cluster_id={c}"))
-        if fs.exists(src):
-            if fs.exists(dst):
-                fs.rename(dst, old)  # out of the way, still durable
-            fs.rename(src, dst)
-        elif fs.exists(dst) and not fs.exists(old):
-            # whole-cluster removal: no staged replacement — retire the live
-            # dir by MOVING it into staging (reclaimed with tmp at the very
-            # end, never deleted before)
-            fs.rename(dst, old)
-        # src absent and dst already new (or absent) → cluster already done
-    for c in plan.get("move", ()):
-        srcdir = jpath(os.path.join(tmp, f"cluster_id={c}"))
-        if not fs.exists(srcdir):
-            continue  # already moved by a previous attempt
-        dstdir_s = os.path.join(table_path, f"cluster_id={c}")
-        fs.mkdirs(jpath(dstdir_s))
-        for st in fs.listStatus(srcdir):
-            name = st.getPath().getName()
-            if name.startswith("part-"):
-                fs.rename(st.getPath(), jpath(os.path.join(dstdir_s, name)))
-        fs.delete(srcdir, True)
+    for name in plan["retire"]:
+        live = jpath(os.path.join(table_path, name))
+        old = jpath(os.path.join(tmp, "old-" + name))
+        # once retired, a live entry of this name can only be its replacement
+        if fs.exists(live) and not fs.exists(old):
+            fs.rename(live, old)  # out of the way, still durable
+    for rel in plan["add"]:
+        src = jpath(os.path.join(tmp, rel))
+        if fs.exists(src):  # absent: landed in an earlier attempt
+            dst = os.path.join(table_path, rel)
+            fs.mkdirs(jpath(os.path.dirname(dst)))
+            fs.rename(src, jpath(dst))
     fs.delete(jpath(tmp), True)
 
 
@@ -133,7 +139,7 @@ def assert_no_pending_swap(spark, table_path: str, suffixes: tuple[str, ...]) ->
         tmp = table_path.rstrip("/") + suffix
         if fs.exists(jpath(tmp)) and read_swap_plan(spark, tmp) is not None:
             raise RuntimeError(
-                f"interrupted maintenance swap at {tmp!r}: clusters may be "
-                "missing from the live layout — call .recover() on the index "
-                "before reading"
+                f"interrupted maintenance swap at {tmp!r}: data may be "
+                "missing from the live layout — call .recover() on the "
+                "table or index before reading"
             )

@@ -11,12 +11,15 @@ DataFrame:
 - The preallocated capacity bound (storage.py:183-186) disappears: appends
   are new Parquet files; 100 TB is just more files.
 - The "embedding all zeros = free slot" heuristic (storage.py:183-196),
-  which misclassifies a legitimate zero vector, is NOT replicated —
-  deletions are explicit anti-join rewrites.
+  which misclassifies a legitimate zero vector, is NOT replicated — a
+  delete or upsert rewrites only the data files that hold the affected
+  ids, without those rows, and swaps them in through the staged-swap
+  protocol (operators/staging.py) that the IVF corpus uses too.
 - Content/metadata truncation at 10 KB / 5 KB (storage.py:217-222) is NOT
   replicated — Parquet strings are unbounded.
-- ``get_next_id`` = max+1 (storage.py:276-280) has a distributed equivalent
-  for batch appends: ``max(id) + row_number over the new batch``.
+- ``get_next_id`` = max+1 (storage.py:276-280) reads the max from the data
+  files' Parquet footers on the driver (row-group statistics of ``id``,
+  O(files), no Spark job); a batch append numbers its rows from there.
 
 Schema (SURVEY.md §1.5): ``id long, embedding array<float>, content string,
 metadata map<string,string>`` — the one fixed row type; per-document
@@ -26,12 +29,24 @@ table starts no Spark job.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from vector_db_spark import route
 from vector_db_spark.io import has_data_files
+from vector_db_spark.operators.staging import (
+    assert_no_pending_swap,
+    execute_swap,
+    recover_staged,
+    staged_part_files,
+    write_plan,
+)
 
 NODE_SCHEMA = T.StructType(
     [
@@ -41,19 +56,28 @@ NODE_SCHEMA = T.StructType(
         T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
+_ARROW_SCHEMA = to_arrow_schema(NODE_SCHEMA)
 
-# past this many id-less rows the numbering runs distributed
-# (operators/packing.global_row_number) instead of one single-task window
-_MAX_WINDOW_ID_BATCH = 100_000
+# past this many id-less rows a batch is numbered distributed
+# (operators/packing.global_row_number) instead of on the driver. The
+# driver holds each row twice, as a Row and in the Arrow table it writes:
+# at 384-d (the real-model embedder) the Row's list of Python floats is
+# 384 × (24 + 8) B ≈ 12 KB and the Arrow copy 384 × 4 B ≈ 1.5 KB, so
+# 10,000 rows are ≈ 140 MB; at the service's 64-d default ≈ 23 MB. Content
+# and metadata strings add their own size on top.
+_MAX_DRIVER_ID_BATCH = 10_000
 
 
 class NodeTable:
     """A vector corpus at a Parquet path, with the reference's CRUD surface.
 
-    Writes rewrite or append immutable files; reads are plain DataFrames so
-    every downstream operator gets Catalyst pushdown. Nothing here ever
-    collects the corpus.
+    Writes append immutable files or swap in rewritten ones; reads are
+    plain DataFrames so every downstream operator gets Catalyst pushdown.
+    Nothing here ever collects the corpus.
     """
+
+    # the staging dir of delete/upsert (operators/staging.py)
+    _SWAP_TMPS = (".tmp-rewrite",)
 
     def __init__(self, spark: SparkSession, path: str, dim: int | None = None):
         self.spark = spark
@@ -63,6 +87,12 @@ class NodeTable:
     # -- reads ---------------------------------------------------------------
 
     def df(self) -> DataFrame:
+        # a committed-but-unfinished rewrite can have rows missing from the
+        # live files; a read through it would be silently wrong. The table
+        # is a local path (see has_data_files), so the common case is one
+        # os.path.exists instead of a JVM filesystem round trip
+        if os.path.exists(self.path.rstrip("/") + self._SWAP_TMPS[0]):
+            assert_no_pending_swap(self.spark, self.path, self._SWAP_TMPS)
         return self.spark.read.schema(NODE_SCHEMA).parquet(self.path)
 
     def exists(self) -> bool:
@@ -91,6 +121,34 @@ class NodeTable:
             df = df.filter(F.col("metadata")[k] == v)
         return df
 
+    def _max_id(self) -> int | None:
+        """The largest id, from the row-group statistics in the data files'
+        Parquet footers: read on the driver, one footer per file, no Spark
+        job. None for a missing or empty table. A row group holding rows
+        but no ``id`` statistics raises — a guessed next id could reuse a
+        live one. Callers :meth:`recover` first: a pending swap can hold
+        the largest id outside the live files."""
+        if not os.path.isdir(self.path):
+            return None
+        best = None
+        for name in sorted(os.listdir(self.path)):
+            if name.startswith((".", "_")):
+                continue
+            md = pq.read_metadata(os.path.join(self.path, name))
+            col = [md.schema.column(j).path for j in range(md.num_columns)].index("id")
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                stats = rg.column(col).statistics
+                if stats is None or not stats.has_min_max:
+                    raise ValueError(
+                        f"{name}: row group {g} has no id statistics; "
+                        "the next id cannot be read from the footers"
+                    )
+                best = stats.max if best is None else max(best, stats.max)
+        return best
+
     # -- writes --------------------------------------------------------------
 
     @staticmethod
@@ -108,6 +166,12 @@ class NodeTable:
                 "put per-document attributes in metadata"
             )
 
+    def _dim_error(self, node_id, embedding) -> ValueError:
+        return ValueError(
+            f"embedding dimension mismatch: expected {self.dim}, "
+            f"got {len(embedding)} for id {node_id}"
+        )
+
     def _validate(self, nodes: DataFrame) -> DataFrame:
         """Dimension check on write (reference mmap_vector_store.py:100-107),
         plus schema normalization: the columns are checked, cast to their
@@ -117,71 +181,91 @@ class NodeTable:
             [F.col(f.name).cast(f.dataType) for f in NODE_SCHEMA.fields]
         )
         if self.dim is not None:
-            nodes = nodes.withColumn(
-                "__dim_ok",
-                F.col("embedding").isNull() | (F.size("embedding") == self.dim),
-            )
-            bad = nodes.filter(~F.col("__dim_ok")).limit(1).collect()
-            if bad:
-                raise ValueError(
-                    f"embedding dimension mismatch: expected {self.dim}, "
-                    f"got {len(bad[0]['embedding'])} for id {bad[0]['id']}"
+            bad = (
+                nodes.filter(
+                    F.col("embedding").isNotNull() & (F.size("embedding") != self.dim)
                 )
-            nodes = nodes.drop("__dim_ok")
+                .limit(1)
+                .collect()
+            )
+            if bad:
+                raise self._dim_error(bad[0]["id"], bad[0]["embedding"])
         return nodes
 
     def init(self, nodes: DataFrame) -> None:
+        self.recover()
         self._validate(nodes).write.mode("overwrite").parquet(self.path)
 
     def append(self, nodes: DataFrame) -> None:
         """Append-only insert (reference save at storage.py:198-230). Caller
         guarantees new ids; use :meth:`upsert` otherwise."""
+        self.recover()
         self._validate(nodes).write.mode("append").parquet(self.path)
 
     def append_with_ids(self, nodes: DataFrame) -> tuple[int, DataFrame]:
         """Number an id-less batch ``start..start+n-1`` and append it — the
         distributed form of get_next_id (storage.py:276-280) and the
-        service's one ingest path. ``start`` is ``max(id) + 1``, or 1 when
-        the table is missing or empty. Returns ``(n, written)``: the batch
-        count and the rows as written. The columns are checked before any
-        Spark job; the numbered batch is materialized once, so the
-        dimension check, the write and ``written`` read one copy and the
-        batch's lineage (an embedding UDF) runs once.
+        service's one ingest path. ``start`` is one past :meth:`_max_id`
+        (the footers' max), or 1 when the table is missing or empty.
+        Returns ``(n, written)``: the batch size and the rows as written.
+        The columns are checked before any Spark job.
 
-        Batches within the size route take one global window over the new
-        batch only — a single task, fine at that size. Larger ones go
+        The batch is materialized once, by an eager local checkpoint: one
+        job computes every partition (and its lineage, an embedding UDF),
+        whichever branch runs next. A lazy checkpoint would also compute
+        each partition once, but split over the probe's first take job and
+        the checkpoint's fill job. One bounded fetch (route site
+        ``storage.id_batch``) is the size probe and the read: within
+        ``_MAX_DRIVER_ID_BATCH`` rows they are numbered in fetch order and
+        dimension-checked on the driver, and ``written`` is the one-partition
+        driver-side table that is appended. Larger batches are numbered
         through ``global_row_number`` (range repartition + per-partition
         offsets), ordered by a content digest: ties only between identical
         rows, whose numbering is interchangeable."""
         self._check_columns([c for c in nodes.columns if c != "id"] + ["id"])
-        n = nodes.count()
-        max_id = self.df().agg(F.max("id")).collect()[0][0] if self.exists() else None
-        start = (max_id or 0) + 1  # a max id of 0 gives 1 as well
-        if route.small(n, _MAX_WINDOW_ID_BATCH, "storage.id_batch"):
-            w = Window.orderBy(F.monotonically_increasing_id())
-            withids = nodes.withColumn(
-                "id", F.row_number().over(w) + F.lit(start - 1)
+        self.recover()
+        start = (self._max_id() or 0) + 1  # a max id of 0 gives 1 as well
+        batch = nodes.select(
+            [F.col(f.name).cast(f.dataType) for f in NODE_SCHEMA.fields if f.name != "id"]
+        ).localCheckpoint(eager=True)
+        rows = route.fetch(batch, _MAX_DRIVER_ID_BATCH, "storage.id_batch")
+        if rows is not None:
+            n = len(rows)
+            emb = [r["embedding"] for r in rows]
+            if self.dim is not None:
+                for i, e in enumerate(emb):
+                    if e is not None and len(e) != self.dim:
+                        raise self._dim_error(start + i, e)
+            table = pa.Table.from_pydict(
+                {
+                    "id": range(start, start + n),
+                    "embedding": emb,
+                    "content": [r["content"] for r in rows],
+                    "metadata": [r["metadata"] for r in rows],
+                },
+                schema=_ARROW_SCHEMA,
             )
+            written = self.spark.createDataFrame(table, NODE_SCHEMA).coalesce(1)
         else:
             from vector_db_spark.operators.packing import global_row_number
 
-            keyed = nodes.withColumn(
-                "__ord", F.md5(F.to_json(F.struct(*nodes.columns)))
-            )
+            keyed = batch.withColumn("__ord", F.md5(F.to_json(F.struct(*batch.columns))))
             withids = (
                 global_row_number(keyed, ["__ord"], out_col="__rowno")
                 .withColumn("id", (F.col("__rowno") + F.lit(start)).cast("long"))
                 .drop("__ord", "__rowno")
             )
-        written = self._validate(withids.localCheckpoint(eager=True))
+            written = self._validate(withids.localCheckpoint(eager=True))
+            n = written.count()
         written.write.mode("append").parquet(self.path)
         return n, written
 
     def upsert(self, nodes: DataFrame) -> None:
         """INSERT OR REPLACE (reference storage.py:377-400 SQLite path; L4
-        idempotent insert at hnsw.py:152-155): anti-join out the replaced
-        ids, union the new rows, rewrite. With a Delta/Iceberg sink this is
-        a MERGE; on plain Parquet it is a rewrite."""
+        idempotent insert at hnsw.py:152-155): the files holding replaced
+        ids are rewritten without them, the new rows are staged beside
+        them, and both swap in through :meth:`_swap_in`. With a
+        Delta/Iceberg sink this is a MERGE."""
         nodes = self._validate(nodes)
         # a batch with duplicate ids would append BOTH rows after the
         # anti-join and permanently break id uniqueness (get() returning 2
@@ -197,23 +281,74 @@ class NodeTable:
                 "upsert batch contains duplicate ids (no deterministic "
                 f"last-write order on a DataFrame): {[r['id'] for r in dup_rows]}"
             )
-        merged = self.df().join(nodes.select("id"), "id", "left_anti").unionByName(nodes)
-        self._rewrite(merged)
+        self.recover()
+        files = []
+        if self.exists():
+            hits = (
+                self.df().select("id", F.input_file_name().alias("f"))
+                .join(nodes.select("id"), "id", "left_semi")
+                .select("f").distinct().collect()
+            )
+            files = self._file_names(hits)
+        staged = nodes
+        if files:
+            staged = (
+                self._read_files(files)
+                .join(nodes.select("id"), "id", "left_anti")
+                .unionByName(nodes)
+            )
+        self._swap_in(staged, files)
 
-    def delete(self, node_ids: list[int]) -> None:
+    def delete(self, node_ids: list[int]) -> int:
         """Tombstone-free delete (reference storage.py:286-306 zeroes the
-        slot; here the row is simply absent after rewrite)."""
-        self._rewrite(self.df().filter(~F.col("id").isin(node_ids)))
+        slot; here the row is absent after the swap). One collect of the
+        matched rows' file names — at most ``len(node_ids)`` rows, no
+        ``distinct`` shuffle — names the files to rewrite; only their survivors are written, as
+        one file, and swapped in. Returns the number of ids matched (ids
+        are unique, so the number of rows removed); a delete that matches
+        nothing writes nothing."""
+        self.recover()
+        if not self.exists():
+            return 0
+        hits = (
+            self.df().filter(F.col("id").isin(node_ids))
+            .select(F.input_file_name().alias("f")).collect()
+        )
+        if not hits:
+            return 0
+        files = self._file_names(hits)
+        survivors = self._read_files(files).filter(~F.col("id").isin(node_ids))
+        self._swap_in(survivors.coalesce(1), files)
+        return len(hits)
 
-    def _rewrite(self, df: DataFrame) -> None:
-        tmp = self.path.rstrip("/") + ".tmp"
-        df.write.mode("overwrite").parquet(tmp)
-        final = self.spark.read.schema(NODE_SCHEMA).parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path)
-        # best-effort cleanup of the staging dir
-        try:
-            import shutil
+    # -- staged swap (operators/staging.py) ------------------------------------
 
-            shutil.rmtree(tmp)
-        except OSError:
-            pass
+    def recover(self) -> dict:
+        """Complete (or discard) an interrupted delete/upsert swap. Called
+        on entry by every write; :meth:`df` RAISES while a planned swap is
+        pending. Idempotent; safe anytime."""
+        return recover_staged(self.spark, self.path, self._SWAP_TMPS)
+
+    @staticmethod
+    def _file_names(hits: list) -> list[str]:
+        """The data-file names in collected ``input_file_name`` URIs (the
+        part-file names Spark writes need no URI decoding)."""
+        return sorted({r.f.rsplit("/", 1)[-1] for r in hits})
+
+    def _read_files(self, names: list[str]) -> DataFrame:
+        return self.spark.read.schema(NODE_SCHEMA).parquet(
+            *[os.path.join(self.path, n) for n in names]
+        )
+
+    def _swap_in(self, staged: DataFrame, retire: list[str]) -> None:
+        """Write ``staged`` under the staging dir, then commit a plan that
+        retires the live data files named ``retire`` and adds the staged
+        files that hold rows, and run it."""
+        tmp = self.path.rstrip("/") + self._SWAP_TMPS[0]
+        staged.write.mode("overwrite").parquet(tmp)
+        add = [
+            f for f in staged_part_files(self.spark, tmp)
+            if pq.read_metadata(os.path.join(tmp, f)).num_rows > 0
+        ]
+        write_plan(self.spark, tmp, retire, add)
+        execute_swap(self.spark, self.path, tmp)
