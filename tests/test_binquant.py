@@ -74,7 +74,16 @@ def test_self_hamming_zero_and_search_self_hit(spark):
     queries = df.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = bq_search(df, queries, 5, dim=64, refine=4).collect()
+    # a k-NN result carries no Hamming distance: each hit's comes from the
+    # codes of its two vectors (the queries are corpus rows)
+    words = bq_encode(df, dim=64)
+    out = (
+        bq_search(df, queries, 5, dim=64, refine=4)
+        .join(words.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
+        .join(words.select(F.col("vec_id").alias("query_id"), F.col("words").alias("qw")), "query_id")
+        .withColumn("hamming", hamming_expr("words", "qw"))
+        .collect()
+    )
     by_q = {}
     for r in out:
         by_q.setdefault(r.query_id, []).append(r)

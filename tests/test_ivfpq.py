@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from vector_db_spark.io import load_table
+from vector_db_spark.io import load_table, write_clustered
 from vector_db_spark.operators.ivfpq import IVFPQIndex
 from vector_db_spark.operators.knn import knn_join
 
@@ -149,6 +149,34 @@ def test_adc_ties_cut_by_id_on_every_layout(spark, tmp_path, force_large):
     with force_large("ivf.probe"):
         assert run(1) == want
         assert run(8) == want
+
+
+def test_adc_cut_breaks_rounding_ties_by_id(spark, tmp_path, force_large):
+    """Two code words 1e-8 apart give ADC distances that round to the same
+    value, so the k-NN order puts the lower id first. The higher id sits
+    on the nearer word: a cut by unrounded distance would keep it."""
+    index = IVFPQIndex(spark, str(tmp_path / "hand"))
+    write_clustered(
+        spark.createDataFrame([(1, [1.0, 0.0], 0), (2, [1.0, 0.0], 0)], index.ivf.corpus_schema),
+        index.ivf.corpus_path,
+    )
+    write_clustered(
+        spark.createDataFrame([(1, [1], 0), (2, [0], 0)], index.codes_schema),
+        index.codes_path,
+    )
+    index.ivf.write_centroids([[0.0, 0.0]])
+    index.pq.write_codebooks(np.array([[[1.0, 0.0], [1.0 + 1e-8, 0.0]]]))  # (m, k, sub)
+    queries = spark.createDataFrame(
+        pd.DataFrame({"query_id": [0], "query_vec": [[0.0, 0.0]]}),
+        "query_id long, query_vec array<float>",
+    )
+
+    def top():
+        return [tuple(r) for r in index.search(queries, k=1, n_probe=1, refine=None).collect()]
+
+    assert top() == [(0, 1, 1.0, 1)]
+    with force_large("ivf.probe"):
+        assert top() == [(0, 1, 1.0, 1)]
 
 
 def test_persistence_reopen(spark, sf_smoke, index):

@@ -7,45 +7,77 @@ import logging
 import pathlib
 import re
 
+import pyarrow as pa
+from pyspark.sql import Row
+from pyspark.sql.types import LongType, StructField, StructType
+
 from vector_db_spark import route
 from vector_db_spark.parallel import overlap_map
 
 
 class _Rows:
-    """A DataFrame stand-in of ``n`` rows that records every action run."""
+    """A DataFrame stand-in of ``n`` rows, local (collected with no job)
+    or not, that records every action run."""
 
-    def __init__(self, n: int, actions: list[str] | None = None):
+    schema = StructType([StructField("id", LongType())])
+
+    def __init__(self, n: int, actions: list[str] | None = None, local: bool = False):
         self.n = n
+        self.local = local
         self.actions = [] if actions is None else actions
 
     def limit(self, k: int) -> "_Rows":
-        return _Rows(min(self.n, k), self.actions)
+        return _Rows(min(self.n, k), self.actions, self.local)
 
     def count(self) -> int:
         self.actions.append("count")
         return self.n
 
-    def collect(self) -> list[int]:
+    def collect(self) -> list[Row]:
         self.actions.append("collect")
-        return list(range(self.n))
+        return [Row(id=i) for i in range(self.n)]
+
+    def toArrow(self) -> pa.Table:
+        self.actions.append("toArrow")
+        return pa.table({"id": pa.array(range(self.n), pa.int64())})
 
 
 def test_exactly_bound_rows_is_small(spark):
     df = spark.range(5)
     assert route.small(5, 5, "t") and not route.small(6, 5, "t")
     assert route.fits(df, 5, "t") and not route.fits(df, 4, "t")
-    assert [r.id for r in route.fetch(df, 5, "t")] == list(range(5))
+    assert route.fetch(df, 5, "t").column("id").to_pylist() == list(range(5))
     assert route.fetch(df, 4, "t") is None
 
 
-def test_fetch_is_the_probe():
-    df = _Rows(3)
-    assert route.fetch(df, 3, "t") == [0, 1, 2]
-    assert df.actions == ["collect"]  # the rows come from the probe itself
-    big = _Rows(10)
-    assert route.fetch(big, 3, "t") is None and big.actions == ["collect"]
+def test_fetch_is_the_probe(monkeypatch):
+    """One action per fetch: a local plan is collected, any other plan is
+    read through Arrow (one job, where collect's take runs two)."""
+    monkeypatch.setattr(route, "_is_local", lambda df: df.local)
+    for local, action in ((True, "collect"), (False, "toArrow")):
+        df = _Rows(3, local=local)
+        assert route.fetch(df, 3, "t").column("id").to_pylist() == [0, 1, 2]
+        assert df.actions == [action]  # the rows come from the probe itself
+        big = _Rows(10, local=local)
+        assert route.fetch(big, 3, "t") is None and big.actions == [action]
     counted = _Rows(10)
     assert not route.fits(counted, 3, "t") and counted.actions == ["count"]
+
+
+def test_fetch_is_one_job(spark, jobs_of):
+    """A multi-partition input is fetched in one job, a pandas-built one in
+    none, and both give the rows ``collect`` gives."""
+    import pandas as pd
+
+    spread = spark.range(100, numPartitions=4).selectExpr(
+        "id", "map('k', cast(id as string)) AS m", "array(cast(id AS float)) AS v"
+    ).localCheckpoint(eager=True)
+    local = spark.createDataFrame(pd.DataFrame({"id": range(5)})).select("id")
+    for df, n_jobs in ((spread, 1), (local, 0)):
+        table, jobs = jobs_of(f"route-fetch-{n_jobs}", lambda df=df: route.fetch(df, 1000, "t"))
+        assert len(jobs) == n_jobs
+        want = [r.asDict() for r in df.collect()]
+        assert table.equals(pa.Table.from_pylist(want, schema=table.schema))
 
 
 def test_force_large_pins_every_or_named_sites(spark):

@@ -111,15 +111,18 @@ def _public_defs(tree: ast.Module, local_classes: set[str]):
             )
 
 
+def _outside_package() -> list[pathlib.Path]:
+    """The code outside the package and ``tests/`` that uses it."""
+    files = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    files += sorted((ROOT / "perfbench").rglob("*.py"))
+    return files + sorted((ROOT / "scripts").rglob("*.py"))
+
+
 def _unused_public_defs() -> dict[str, str]:
     """Qualified name -> ``file:line`` of every public def or method that
     no code outside ``tests/`` uses."""
     package = sorted(PACKAGE.rglob("*.py"))
-    others = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
-    others += sorted((ROOT / "perfbench").rglob("*.py"))
-    others += sorted((ROOT / "scripts").rglob("*.py"))
-
-    trees = {f: ast.parse(f.read_text(), str(f)) for f in package + others}
+    trees = {f: ast.parse(f.read_text(), str(f)) for f in package + _outside_package()}
     scans = {}
     for f, tree in trees.items():
         scans[f] = _Scan()
@@ -231,3 +234,104 @@ def test_no_unused_imports():
         b for f in files if f.name != "__init__.py" for b in _unused_imports(f)
     ]
     assert not bad, "unused imports:\n" + "\n".join(bad)
+
+
+
+# Search options that no code outside tests sets, each with the reason it
+# stays. Every other option with one value in use is a constant.
+OPTIONS_ALLOWED = {
+    "vector_db_spark.operators.ivf.IVFIndex.build.max_iter":
+        "the Lloyd budget of the quantizer fit, beside its seed",
+    "vector_db_spark.operators.ivf.IVFIndex.search.metric":
+        "probes rank under the search metric (rank_probes), which a "
+        "cosine or dot corpus needs; knn_join takes the same metrics",
+    "vector_db_spark.operators.ivfpq.IVFPQIndex.build.vec_col":
+        "the corpus vector column, set beside id_col as on IVFIndex.build",
+    "vector_db_spark.operators.binquant.bq_search.metric":
+        "the exact re-rank's metric: sign codes also rank cosine neighbors",
+    "vector_db_spark.operators.similarity.lsh_search.n_tables":
+        "corpus-scale geometry from derive_lsh_geometry(n); the fixture "
+        "default is measured unusable at 200 k vectors",
+    "vector_db_spark.operators.similarity.lsh_search.n_bits":
+        "corpus-scale geometry from derive_lsh_geometry(n), with n_tables",
+}
+
+# the modules whose public defs' options need callers; a def name narrows
+# a module to that def
+OPTION_SCOPE = {
+    "vector_db_spark.operators.knn": None,
+    "vector_db_spark.operators.ivf": None,
+    "vector_db_spark.operators.ivfpq": None,
+    "vector_db_spark.operators.pq": None,
+    "vector_db_spark.operators.opq": None,
+    "vector_db_spark.operators.binquant": None,
+    "vector_db_spark.operators.rerank": None,
+    "vector_db_spark.operators.topk": None,
+    "vector_db_spark.operators.similarity": "lsh_search",
+}
+
+
+def _defaulted(d: ast.FunctionDef, method: bool) -> list[tuple[str, int | None]]:
+    """``(name, positional index or None)`` of every parameter of ``d``
+    that has a default. A method's positions do not count its bound first
+    parameter (``self`` or ``cls``)."""
+    pos = d.args.posonlyargs + d.args.args
+    static = any(getattr(dec, "id", None) == "staticmethod" for dec in d.decorator_list)
+    pos = pos if static or not method else pos[1:]
+    first = len(pos) - len(d.args.defaults)
+    return [(a.arg, i) for i, a in enumerate(pos) if i >= first] + [
+        (a.arg, None)
+        for a, default in zip(d.args.kwonlyargs, d.args.kw_defaults)
+        if default is not None
+    ]
+
+
+def _unset_options() -> dict[str, str]:
+    """Qualified ``def.option`` -> ``file:line`` of every defaulted
+    parameter of an ``OPTION_SCOPE`` def that no call outside ``tests/``
+    passes, by keyword or by position. A call is matched by the name it
+    calls (``f(...)`` or ``x.f(...)``): index and model objects are passed
+    around untyped, so only a call on a class by name (``C.f(...)``) is
+    traced to its class."""
+    package = sorted(PACKAGE.rglob("*.py"))
+    trees = {f: ast.parse(f.read_text(), str(f)) for f in package + _outside_package()}
+    local_classes = {
+        n.name for f in package for n in trees[f].body if isinstance(n, ast.ClassDef)
+    }
+    # called name -> (class the call names or None, call)
+    calls: dict[str, list[tuple[str | None, ast.Call]]] = {}
+    for tree in trees.values():
+        for c in ast.walk(tree):
+            if isinstance(c, ast.Call) and isinstance(c.func, ast.Attribute):
+                owner = getattr(c.func.value, "id", None)
+                owner = owner if owner in local_classes else None
+                calls.setdefault(c.func.attr, []).append((owner, c))
+            elif isinstance(c, ast.Call) and isinstance(c.func, ast.Name):
+                calls.setdefault(c.func.id, []).append((None, c))
+
+    unset = {}
+    for f in package:
+        mod = _module(f)
+        if mod not in OPTION_SCOPE:
+            continue
+        for cls, d in _public_defs(trees[f], local_classes):
+            if d.name.startswith("_") or OPTION_SCOPE[mod] not in (None, d.name):
+                continue
+            qual = f"{mod}.{cls.name}.{d.name}" if cls else f"{mod}.{d.name}"
+            for name, i in _defaulted(d, cls is not None):
+                if not any(
+                    any(kw.arg == name for kw in c.keywords) or (i is not None and i < len(c.args))
+                    for owner, c in calls.get(d.name, [])
+                    if owner in (None, cls and cls.name)
+                ):
+                    unset[f"{qual}.{name}"] = f"{f.relative_to(ROOT)}:{d.lineno}"
+    return unset
+
+
+def test_search_options_have_callers():
+    """A search option exists only while code outside tests sets it."""
+    unset = _unset_options()
+    bad = sorted(f"{where} {q}" for q, where in unset.items() if q not in OPTIONS_ALLOWED)
+    assert not bad, "options no caller outside tests sets:\n" + "\n".join(bad)
+    stale = sorted(q for q in OPTIONS_ALLOWED if q not in unset)
+    assert not stale, f"option allowlist entries that are set elsewhere or gone: {stale}"

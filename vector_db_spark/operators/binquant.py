@@ -34,25 +34,27 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vector_db_spark import route
 from vector_db_spark.functions.distance import METRICS
+from vector_db_spark.operators.knn import _MAX_BATCH_QUERIES
 from vector_db_spark.operators.topk import nearest_k, top_k_per_group
 
 WORD_BITS = 32  # 32-bit words: overflow-free in every engine's BIGINT math
 
 
-def binarize_expr(vec_col: Column | str, *, dim: int, threshold: float = 0.0) -> Column:
+def binarize_expr(vec_col: Column | str, *, dim: int) -> Column:
     """float vector → ``array<bigint>`` of ceil(dim/32) packed sign words.
 
     Bit j of the vector maps into word ``j // 32`` MSB-first
     (``acc*2 + bit`` fold in 64-bit math — a 32-bit word never touches
     the accumulator's sign bit, so ANSI overflow checks stay happy in
-    every engine), missing tail dims pad as 0 bits. Strict
-    ``x > threshold`` so the 0.0 boundary is unambiguous.
+    every engine), missing tail dims pad as 0 bits. Strict ``x > 0`` so
+    the 0.0 boundary is unambiguous.
     """
     v = (F.col(vec_col) if isinstance(vec_col, str) else vec_col).cast("array<double>")
     n_words = math.ceil(dim / WORD_BITS)
     pad = n_words * WORD_BITS - dim
-    bits = F.transform(v, lambda x: (x > threshold).cast("bigint"))
+    bits = F.transform(v, lambda x: (x > 0.0).cast("bigint"))
     if pad:
         bits = F.concat(bits, F.array_repeat(F.lit(0).cast("bigint"), pad))
     # bits let-bound so the threshold pass runs once per row, not once per
@@ -84,19 +86,10 @@ def hamming_expr(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def bq_encode(
-    df: DataFrame,
-    *,
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    word_col: str = "words",
-    threshold: float = 0.0,
-) -> DataFrame:
-    """(id, words) — the 32×-compressed at-rest table."""
-    return df.select(
-        F.col(id_col), binarize_expr(vec_col, dim=dim, threshold=threshold).alias(word_col)
-    )
+def bq_encode(df: DataFrame, *, dim: int) -> DataFrame:
+    """(vec_id, words) — the 32×-compressed at-rest table of a
+    (vec_id, embedding) corpus."""
+    return df.select("vec_id", binarize_expr("embedding", dim=dim).alias("words"))
 
 
 def bq_search(
@@ -107,35 +100,30 @@ def bq_search(
     dim: int,
     refine: int = 4,
     metric: str = "euclidean",
-    threshold: float = 0.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    round_to: int = 6,
 ) -> DataFrame:
-    """Two-phase binary search: Hamming top-``k*refine`` candidates over
-    packed sign codes, then exact ``metric`` re-rank of the candidates.
-
-    Returns ``(query_id, neighbor_id, dist, rank)`` — same contract as
-    :func:`~vector_db_spark.operators.knn.knn_join`. The first pass scans
+    """Two-phase binary search over a (vec_id, embedding) corpus: Hamming
+    top-``k*refine`` candidates over packed sign codes, then exact
+    ``metric`` re-rank of the candidates, as the k-NN result contract
+    (``operators/topk.py``; the same as
+    :func:`~vector_db_spark.operators.knn.knn_join`). The first pass scans
     only the codes projection; float vectors are fetched for candidates
     via a broadcast semi-structure (candidate set is k·refine·n_queries
     rows — tiny by construction).
+
+    The query side is broadcast-hinted while it is within
+    ``knn._MAX_BATCH_QUERIES`` rows (route site ``bq.queries``); past
+    that it joins un-hinted.
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
-    codes = bq_encode(
-        corpus, dim=dim, vec_col=vec_col, id_col=id_col, threshold=threshold
-    )
+    small = route.fits(queries, _MAX_BATCH_QUERIES, "bq.queries")
+    hint = F.broadcast if small else (lambda d: d)
     qcodes = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("__qv"),
-        binarize_expr(query_vec_col, dim=dim, threshold=threshold).alias("__qw"),
+        "query_id", "query_vec", binarize_expr("query_vec", dim=dim).alias("__qw")
     )
-    scored = codes.crossJoin(F.broadcast(qcodes.select("query_id", "__qw"))).select(
+    scored = bq_encode(corpus, dim=dim).crossJoin(hint(qcodes.select("query_id", "__qw"))).select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         hamming_expr("words", "__qw").alias("hamming"),
     )
     cands = top_k_per_group(
@@ -143,20 +131,16 @@ def bq_search(
         ["query_id"],
         [F.col("hamming").asc(), F.col("neighbor_id").asc()],
         k * refine,
-    ).select("query_id", "neighbor_id", "hamming")
+    ).select("query_id", "neighbor_id")
     # exact re-rank: candidates ⋈ float vectors (broadcast the tiny side)
     exact = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
+        corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
         .join(F.broadcast(cands), "neighbor_id")
-        .join(F.broadcast(qcodes.select("query_id", "__qv")), "query_id")
+        .join(hint(qcodes.select("query_id", "query_vec")), "query_id")
         .select(
             "query_id",
             "neighbor_id",
-            F.round(METRICS[metric](F.col("__qv"), F.col("__cv")), round_to).alias(
-                "dist"
-            ),
-            "hamming",
+            METRICS[metric](F.col("query_vec"), F.col("embedding")).alias("dist"),
         )
     )
     return nearest_k(exact, k)
-

@@ -274,7 +274,7 @@ def percolate(
     )
     small = probe is not None
     if small:
-        vocab = sorted({r["tok"] for r in probe})
+        vocab = sorted(probe.column("tok").to_pylist())
         matched = docs.select(
             F.col(id_col),
             F.explode(

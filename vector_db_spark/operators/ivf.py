@@ -8,11 +8,11 @@ indexing/ivf.py``) Spark-first:
 | ``build_index``: scipy ``kmeans2`` + Python inverted lists (ivf.py:49-85) | bounded-sample k-means++/Lloyd (operators.kmeans) + distributed broadcast-argmin assignment; "inverted list" = the corpus written ``partitionBy("cluster_id")`` — probing a cluster IS partition pruning |
 | ``add``: argmin over centroids, append to list (ivf.py:87-117) | broadcast-centroid argmin join → append to the partitioned table |
 | ``delete``: remove id from all lists (ivf.py:119-136) | staged rewrite of only the affected clusters' partitions, swapped in by ``operators/staging.py`` |
-| ``search``: rank centroids, scan n_probe lists, exact top-k (ivf.py:138-199) | probe plan ranked on the driver over the centroid matrix → one corpus scan with a static ``cluster_id IN (probed)`` partition filter → k-NN batch kernel scoring each cluster's rows against the queries that probe it (partial top-k per batch) → global top-k; past ``_MAX_BROADCAST_QUERIES`` query rows, ``probe_join`` (windowed top-n_probe over the broadcast centroid cross join, un-hinted join on ``cluster_id``) and a SQL distance |
+| ``search``: rank centroids, scan n_probe lists, exact top-k (ivf.py:138-199) | probe plan ranked on the driver over the centroid matrix → one corpus scan with a static ``cluster_id IN (probed)`` partition filter → k-NN batch kernel scoring each cluster's rows against the queries that probe it (partial top-k per batch) → global top-k; past ``knn._MAX_BATCH_QUERIES`` query rows, ``probe_join`` (windowed top-n_probe over the broadcast centroid cross join, un-hinted join on ``cluster_id``) and a SQL distance |
 | pickle persistence (ivf.py:217-241)         | Parquet centroid table (read on the driver) + partitioned corpus (``spark.read`` with its fixed schema) |
 
 Scale posture (SURVEY.md §7): only the k×dim centroid table and at most
-``_MAX_BROADCAST_QUERIES`` query rows are ever broadcast/collected; the
+``knn._MAX_BATCH_QUERIES`` query rows are ever broadcast/collected; the
 corpus is never collected; hot-cluster skew is
 handled by AQE (skew-join enabled in the session factory). HNSW itself is
 deliberately not ported — a sequential mutable-graph build is anti-Spark
@@ -31,11 +31,15 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from vector_db_spark import route
 from vector_db_spark.functions.distance import METRICS, euclidean
 from vector_db_spark.io import read_small_parquet, write_clustered, write_small_parquet
 from vector_db_spark.operators.kmeans import DEFAULT_SAMPLE_CAP, train_centroids
-from vector_db_spark.operators.knn import _batch_score, _numpy_distances
+from vector_db_spark.operators.knn import (
+    _batch_score,
+    _fetch_queries,
+    _no_hits,
+    _numpy_distances,
+)
 from vector_db_spark.operators.staging import (
     assert_no_pending_swap,
     execute_swap,
@@ -48,8 +52,6 @@ from vector_db_spark.operators.topk import nearest_k, top_k_per_group
 # signal rather than noise — shared by derive_k's floor and build()'s
 # sample-cap guard so the two can never drift apart
 MIN_POINTS_PER_CLUSTER = 39
-# past this many query rows a search ranks and joins its probes in SQL
-_MAX_BROADCAST_QUERIES = 10_000
 # the centroid table's types, as IVFIndex.write_centroids writes them
 CENTROID_SCHEMA = "cluster_id int, centroid array<double>"
 
@@ -390,18 +392,15 @@ class IVFIndex:
         n_probe: int = 10,
         *,
         metric: str = "euclidean",
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_vec",
-        round_to: int | None = 6,
         allowed_ids: DataFrame | None = None,
     ) -> DataFrame:
         """n_probe search (ivf.py:170-178): each query's ``n_probe``
-        nearest clusters, exact distances over their rows only, then a
-        per-query top-k by (dist, neighbor id).
+        nearest clusters, exact distances over their rows only, then the
+        k-NN result contract (``operators/topk.py``).
 
         The query side is size-routed (``vector_db_spark.route``, site
         ``ivf.probe``) by one bounded fetch, which is also the read of the
-        queries. Within ``_MAX_BROADCAST_QUERIES`` rows the probes are
+        queries. Within ``knn._MAX_BATCH_QUERIES`` rows the probes are
         ranked on the driver (:meth:`rank_probes`), the corpus is read once
         with a static ``cluster_id IN (probed clusters)`` partition filter
         — "only scan the probed inverted lists" as partition pruning — and
@@ -416,36 +415,26 @@ class IVFIndex:
         filtered search still returns k results when k matches exist."""
         if metric not in METRICS:
             raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
-        qrows = route.fetch(
-            queries.select(query_id_col, query_vec_col), _MAX_BROADCAST_QUERIES, "ivf.probe"
-        )
+        q = _fetch_queries(queries, "ivf.probe")
         corpus = self.corpus()
         if allowed_ids is not None:
             corpus = corpus.join(allowed_ids, self.id_col, "left_semi")
-        if qrows is None:
-            cand = self.probe_join(
-                queries, corpus, n_probe, metric=metric, query_id_col=query_id_col,
-                query_vec_col=query_vec_col,
-            )
-            scored = cand.select(
-                F.col(query_id_col).alias("query_id"),
+        if q is None:
+            scored = self.probe_join(queries, corpus, n_probe, metric=metric).select(
+                "query_id",
                 F.col(self.id_col).alias("neighbor_id"),
-                METRICS[metric](F.col(query_vec_col), F.col(self.vec_col)).alias("dist"),
+                METRICS[metric](F.col("query_vec"), F.col(self.vec_col)).alias("dist"),
             )
+        elif not len(q[0]):
+            return _no_hits(self.spark)
         else:
-            cents = self.centroid_matrix()
-            # reshape: an empty query side still has the centroids' width
-            qmat = np.array([r[1] for r in qrows], dtype=np.float64).reshape(
-                len(qrows), cents.shape[1]
-            )
-            probes = self.rank_probes(cents, qmat, n_probe, metric)
+            probes = self.rank_probes(self.centroid_matrix(), q[1], n_probe, metric)
             scored = _batch_score(
-                qrows,
+                *q,
                 corpus.filter(F.col("cluster_id").isin(np.unique(probes).tolist())),
-                k, metric=metric, id_col=self.id_col, vec_col=self.vec_col,
-                round_to=round_to, probes=probes,
+                k, metric=metric, id_col=self.id_col, vec_col=self.vec_col, probes=probes,
             )
-        return nearest_k(scored, k, round_to)
+        return nearest_k(scored, k)
 
     @staticmethod
     def rank_probes(
@@ -465,33 +454,26 @@ class IVFIndex:
         return np.argsort(dists, axis=0, kind="stable")[:n_probe].T
 
     def probe_join(
-        self,
-        queries: DataFrame,
-        table: DataFrame,
-        n_probe: int,
-        *,
-        metric: str = "euclidean",
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_vec",
+        self, queries: DataFrame, table: DataFrame, n_probe: int, *, metric: str = "euclidean"
     ) -> DataFrame:
         """The large-query-side probe: each query's ``n_probe`` nearest
         clusters as a windowed top-n_probe over the broadcast centroid join
         (ordered by (distance under ``metric``, cluster_id), the order of
         :meth:`rank_probes`), joined to the cluster-partitioned ``table`` on
         ``cluster_id``. Searches take it only past their
-        ``_MAX_BROADCAST_QUERIES`` route, so the probe table is joined
+        ``knn._MAX_BATCH_QUERIES`` route, so the probe table is joined
         un-hinted (Catalyst/AQE pick the strategy; the scan can still prune
         dynamically). Ranking ascending by METRICS[metric] is
         nearest-under-that-metric by construction (dot is registered
         negated)."""
         probes = top_k_per_group(
             queries.crossJoin(F.broadcast(self.centroids())).withColumn(
-                "__cdist", METRICS[metric](F.col(query_vec_col), F.col("centroid"))
+                "__cdist", METRICS[metric](F.col("query_vec"), F.col("centroid"))
             ),
-            [query_id_col],
+            ["query_id"],
             [F.col("__cdist").asc(), F.col("cluster_id").asc()],
             n_probe,
-        ).select(query_id_col, query_vec_col, "cluster_id")
+        ).select("query_id", "query_vec", "cluster_id")
         return probes.join(table, "cluster_id")
 
     # -- stats (reference ivf.py:201-215) ----------------------------------------

@@ -14,8 +14,9 @@ Reused, not copied:
   the query-side bound), the one centroid-table writer and the cluster
   statistics (``index.ivf.stats()``);
 - **codec** — a :class:`~vector_db_spark.operators.pq.PQModel` over the
-  same ``<path>``: the one codebook writer and tensor reader, and the one
-  PQ encode kernel :func:`~vector_db_spark.operators.pq.encode_chunks`.
+  same ``<path>``: the one codebook writer and tensor reader, the one
+  PQ encode kernel :func:`~vector_db_spark.operators.pq.encode_chunks` and
+  the one ADC kernel ``pq._adc_top``.
 
 Added here:
 
@@ -26,9 +27,10 @@ Added here:
   centroid, so quantizing the residual spends the whole codebook budget on
   the local neighborhood — Jégou et al., "Product Quantization for Nearest
   Neighbor Search" (TPAMI 2011), §IV.A (IVFADC);
-- the **ADC kernel**: one lookup table over the residual query ``q − c``
-  per (query, probed cluster), a (dist, id) partial top-k inside each
-  Arrow batch, then a global exact top-k and an optional exact re-rank of
+- the **ADC scan**: the shared ADC kernel (``pq._adc_top``) given the
+  residual query ``q − c`` per (query, probed cluster), a (dist, id)
+  partial top-k inside each Arrow batch, then a global exact top-k and an
+  optional exact re-rank of
   ``refine × k`` candidates against the raw corpus. Search has two
   branches, routed on the query side like ``IVFIndex.search``: within
   the bound the queries are collected, the probe plan is ranked on the
@@ -37,7 +39,7 @@ Added here:
   past it the SQL probe join feeds the kernel (query, cluster) groups.
 
 At 100 TB: the only driver-side state is (k×dim centroids) + (m×k×sub
-codebooks) + at most ``_MAX_BROADCAST_QUERIES`` query rows (no LUT is
+codebooks) + at most ``knn._MAX_BATCH_QUERIES`` query rows (no LUT is
 built on the driver: at that bound q × n_probe LUTs could reach
 gigabytes); training samples are capped; encode/search are single Arrow
 passes over partition-pruned scans (the ADC scan reads only the ids+codes
@@ -55,48 +57,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_db_spark import route
 from vector_db_spark.functions.distance import euclidean
 from vector_db_spark.io import write_clustered
-from vector_db_spark.operators.ivf import _MAX_BROADCAST_QUERIES, IVFIndex, assign_to_centroids
+from vector_db_spark.operators.ivf import IVFIndex, assign_to_centroids
 from vector_db_spark.operators.kmeans import (
     DEFAULT_SAMPLE_CAP,
     collect_sample,
     kmeans_fit,
 )
-from vector_db_spark.operators.knn import _BATCH_SCHEMA, _partial_topk, _probe_plan
-from vector_db_spark.operators.pq import PQModel, encode_chunks
+from vector_db_spark.operators.knn import _BATCH_SCHEMA, _fetch_queries, _no_hits, _probe_plan
+from vector_db_spark.operators.pq import PQModel, _adc_top, encode_chunks
 from vector_db_spark.operators.topk import nearest_k
 
-
-def _adc_top(
-    resid: np.ndarray,
-    tensor: np.ndarray,
-    codes: pd.Series,
-    ids: pd.Series,
-    qids: np.ndarray,
-    kk: int,
-) -> pd.DataFrame:
-    """The ADC kernel over one cluster's rows: an (m, k_codes) lookup table
-    per residual query ``q − c`` (the rows of ``resid``), each row's
-    distance the root of its m summed lookups, then each query's top-``kk``
-    by (dist, id) through ``knn._partial_topk``."""
-    m, _, sub = tensor.shape
-    codes = np.array(codes.tolist(), dtype=np.int64)  # (n, m)
-    ids = ids.to_numpy(dtype=np.int64)
-    lut = ((resid.reshape(-1, m, 1, sub) - tensor) ** 2).sum(axis=3)  # (q, m, k_codes)
-    d2 = np.zeros((len(qids), len(ids)))
-    for j in range(m):
-        d2 += lut[:, j, codes[:, j]]
-    idx, dists = _partial_topk(np.sqrt(d2.T), ids, kk, None)
-    take = idx.shape[0]
-    return pd.DataFrame(
-        {
-            "query_id": np.repeat(qids[None, :], take, axis=0).ravel(),
-            "neighbor_id": ids[idx].ravel(),
-            "dist": np.take_along_axis(dists, idx, axis=0).ravel(),
-        }
-    )
+# every sample and k-means fit of a build derives from this seed
+_SEED = 42
 
 
 class IVFPQIndex:
@@ -174,8 +148,6 @@ class IVFPQIndex:
         k_codes: int = 16,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
-        max_iter: int = 20,
-        seed: int = 42,
     ) -> "IVFPQIndex":
         """Coarse quantizer and residual codebooks from one bounded sample,
         then corpus, codes and — last — the two model tables."""
@@ -185,8 +157,8 @@ class IVFPQIndex:
         sub = dim // n_chunks
 
         # 1. coarse quantizer on a bounded sample (one collect, capped)
-        x = collect_sample(corpus, vec_col, DEFAULT_SAMPLE_CAP, seed)
-        centers = kmeans_fit(x, k_coarse, max_iter=max_iter, seed=seed)
+        x = collect_sample(corpus, vec_col, DEFAULT_SAMPLE_CAP, _SEED)
+        centers = kmeans_fit(x, k_coarse, seed=_SEED)
 
         # 2. residual codebooks: the SAME sample re-used — assign each
         #    sampled vector to its center, train per-subspace k-means on the
@@ -198,15 +170,14 @@ class IVFPQIndex:
         # stays O(k_codes), not O(corpus sample)
         cap = 256 * k_codes
         if resid.shape[0] > cap:
-            pick = np.random.default_rng(seed).choice(resid.shape[0], cap, replace=False)
+            pick = np.random.default_rng(_SEED).choice(resid.shape[0], cap, replace=False)
             resid = resid[pick]
         tensor = np.stack(
             [
                 kmeans_fit(
                     resid[:, c * sub : (c + 1) * sub].astype(np.float32),
                     k_codes,
-                    max_iter=max_iter,
-                    seed=seed + 1 + c,
+                    seed=_SEED + 1 + c,
                     n_init=2,
                 )
                 for c in range(n_chunks)
@@ -234,58 +205,46 @@ class IVFPQIndex:
     # -- search ---------------------------------------------------------------
 
     def search(
-        self,
-        queries: DataFrame,
-        k: int = 5,
-        n_probe: int = 4,
-        *,
-        refine: int | None = 4,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_vec",
-        round_to: int | None = 6,
+        self, queries: DataFrame, k: int = 5, n_probe: int = 4, *, refine: int | None = 4
     ) -> DataFrame:
-        """ADC n_probe search; with ``refine`` set, the ADC pass returns
+        """ADC n_probe search, as the k-NN result contract
+        (``operators/topk.py``); with ``refine`` set, the ADC pass returns
         ``refine × k`` candidates per query and a raw-vector join re-ranks
         them exactly (distances then match brute force on the recalled set).
 
         Routed like :meth:`IVFIndex.search` (site ``ivf.probe``, one bounded
-        fetch of the queries). Within ``_MAX_BROADCAST_QUERIES`` query rows
+        fetch of the queries). Within ``knn._MAX_BATCH_QUERIES`` query rows
         the probes are ranked on the driver and the codes table, and the raw
         corpus the re-rank reads, carry a static ``cluster_id IN (probed
-        clusters)`` partition filter; the ADC kernel builds each (query, probed cluster) LUT from the
+        clusters)`` partition filter; the ADC kernel
+        (``pq._adc_top``) builds each (query, probed cluster) LUT from the
         broadcast queries, centroids and codebooks. Past the bound,
         :meth:`IVFIndex.probe_join` joins the queries to the codes in SQL
-        and the kernel builds one LUT per (query, cluster) group of the
-        joined rows. Both kernels cut each batch to each query's ADC
-        candidates (``refine × k``, or ``k``) by (dist, id), the global
-        top-k's order, so of rows tied on ADC distance (identical codes) the
-        lower ids are kept whatever the batch layout."""
+        and the same kernel builds one LUT per (query, cluster) group of the
+        joined rows. Both cut each batch to each query's ADC candidates
+        (``refine × k``, or ``k``) by rounded dist and id, the global
+        top-k's order, so of rows tied on ADC distance the lower ids are
+        kept whatever the batch layout."""
         fetch = k * refine if refine else k
-        qrows = route.fetch(
-            queries.select(query_id_col, query_vec_col), _MAX_BROADCAST_QUERIES, "ivf.probe"
-        )
+        q = _fetch_queries(queries, "ivf.probe")
         cents, tensor = self.ivf.centroid_matrix(), self.pq.codebook_tensor()
         corpus = self.ivf.corpus()
-        if qrows is None:
-            scored = self._adc_joined(
-                queries, n_probe, fetch, cents, tensor, query_id_col, query_vec_col
-            )
-            qside = queries.select(
-                F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("__qv")
-            )
+        if q is None:
+            scored = self._adc_joined(queries, n_probe, fetch, cents, tensor)
+            qside = queries.select("query_id", "query_vec")
+        elif not len(q[0]):
+            return _no_hits(self.spark)
         else:
-            scored, probed = self._adc_probed(qrows, n_probe, fetch, cents, tensor)
+            scored, probed = self._adc_probed(*q, n_probe, fetch, cents, tensor)
             # every candidate lives in a probed cluster: the re-rank scan is
             # pruned like the codes scan, and its query side is the fetch
             corpus = corpus.filter(F.col("cluster_id").isin(probed))
             qside = self.spark.createDataFrame(
-                pd.DataFrame({"query_id": [r[0] for r in qrows],
-                              "__qv": [r[1] for r in qrows]}),
-                "query_id long, __qv array<double>",
+                pd.DataFrame({"query_id": q[0], "query_vec": list(q[1])}),
+                "query_id long, query_vec array<double>",
             )
-        adc_top = nearest_k(scored, fetch).drop("rank")
         if not refine:
-            return nearest_k(adc_top, k, round_to)
+            return nearest_k(scored, k)
 
         # exact re-rank: refine×k candidate rows per query — broadcast the
         # (tiny) candidate list so the raw corpus is streamed, never
@@ -293,27 +252,24 @@ class IVFPQIndex:
         exact = (
             corpus
             .select(F.col(self.id_col).alias("neighbor_id"), self.vec_col)
-            .join(F.broadcast(adc_top.select("query_id", "neighbor_id")), "neighbor_id")
+            .join(F.broadcast(nearest_k(scored, fetch).select("query_id", "neighbor_id")),
+                  "neighbor_id")
             .join(F.broadcast(qside), "query_id")
             .select(
                 "query_id",
                 "neighbor_id",
-                euclidean("__qv", self.vec_col).alias("dist"),
+                euclidean("query_vec", self.vec_col).alias("dist"),
             )
         )
-        return nearest_k(exact, k, round_to)
+        return nearest_k(exact, k)
 
     def _adc_probed(
-        self, qrows: list, n_probe: int, fetch: int, cents: np.ndarray, tensor: np.ndarray
+        self, qids: np.ndarray, qmat: np.ndarray, n_probe: int, fetch: int,
+        cents: np.ndarray, tensor: np.ndarray,
     ) -> tuple[DataFrame, list[int]]:
-        """ADC candidates for collected (id, vec) queries: a driver-side
-        probe plan, then one pass over the probed clusters' codes. Returns
-        the candidates and the probed cluster ids."""
-        qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        # reshape: an empty query side still has the centroids' width
-        qmat = np.array([r[1] for r in qrows], dtype=np.float64).reshape(
-            len(qrows), cents.shape[1]
-        )
+        """ADC candidates for fetched queries: a driver-side probe plan,
+        then one pass over the probed clusters' codes. Returns the
+        candidates and the probed cluster ids."""
         plan = _probe_plan(IVFIndex.rank_probes(cents, qmat, n_probe))
         bc = self.spark.sparkContext.broadcast((qids, qmat, cents, tensor, plan))
         id_col = self.id_col
@@ -336,14 +292,11 @@ class IVFPQIndex:
         return codes.mapInPandas(score, _BATCH_SCHEMA), probed
 
     def _adc_joined(
-        self, queries: DataFrame, n_probe: int, fetch: int, cents: np.ndarray,
-        tensor: np.ndarray, qid: str, qvec: str,
+        self, queries: DataFrame, n_probe: int, fetch: int, cents: np.ndarray, tensor: np.ndarray
     ) -> DataFrame:
         """ADC candidates for a query table too big to collect: the SQL
         probe join, then one LUT per (query, cluster) group of its rows."""
-        cand = self.ivf.probe_join(
-            queries, self.codes(), n_probe, query_id_col=qid, query_vec_col=qvec
-        )
+        cand = self.ivf.probe_join(queries, self.codes(), n_probe)
         bc = self.spark.sparkContext.broadcast((cents, tensor))
         id_col = self.id_col
 
@@ -352,8 +305,8 @@ class IVFPQIndex:
             for pdf in batches:
                 if pdf.empty:
                     continue
-                for (q, cid), g in pdf.groupby([qid, "cluster_id"], sort=False):
-                    qv = np.asarray(g[qvec].iloc[0], dtype=np.float64)
+                for (q, cid), g in pdf.groupby(["query_id", "cluster_id"], sort=False):
+                    qv = np.asarray(g["query_vec"].iloc[0], dtype=np.float64)
                     yield _adc_top(
                         (qv - cents[cid])[None, :], t, g["codes"], g[id_col],
                         np.array([q], dtype=np.int64), fetch,

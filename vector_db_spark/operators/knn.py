@@ -23,8 +23,12 @@ Two physical strategies, same results:
   plan (``IVFIndex.search``), the same kernel scores each cluster's rows
   against only the queries that probe that cluster.
 
-Distances are rounded (default 6 dp) and ties broken by neighbor id, making
-the result set deterministic and engine-independent.
+Both return the k-NN result contract of ``operators/topk.py``: queries in
+as ``(query_id, query_vec)``, ``(query_id, neighbor_id, dist, rank)`` out,
+``dist`` rounded to ``topk.DECIMALS`` and ties broken by neighbor id, so the
+result set is deterministic and engine-independent. The query side of every
+vector search is bounded by the one ``_MAX_BATCH_QUERIES`` and read by the
+one :func:`_fetch_queries`.
 """
 
 from __future__ import annotations
@@ -38,10 +42,12 @@ from pyspark.sql import functions as F
 
 from vector_db_spark import route
 from vector_db_spark.functions.distance import METRICS
-from vector_db_spark.operators.topk import nearest_k
+from vector_db_spark.operators.topk import DECIMALS, nearest_k
 
 _BATCH_SCHEMA = "query_id long, neighbor_id long, dist double"
-# past this many query rows the query side is neither collected nor hinted
+_RESULT_SCHEMA = _BATCH_SCHEMA + ", rank int"
+# past this many query rows a search's query side is neither collected nor
+# broadcast-hinted: the one bound of every vector search's query side
 _MAX_BATCH_QUERIES = 10_000
 # filtered search brute-forces the survivors up to this many allowed ids
 _EXACT_MAX_ALLOWED = 100_000
@@ -71,26 +77,41 @@ def _numpy_distances(metric: str, corpus: np.ndarray, queries: np.ndarray) -> np
     raise ValueError(f"unknown metric {metric!r}")
 
 
+def _fetch_queries(queries: DataFrame, site: str) -> tuple[np.ndarray, np.ndarray] | None:
+    """The query side as ``(qids, qmat)``, int64 ids and a float64
+    (q, dim) matrix, when it has at most ``_MAX_BATCH_QUERIES`` rows, else
+    None. One bounded fetch (route site ``site``) is both the size probe
+    and the read of the queries."""
+    table = route.fetch(queries.select("query_id", "query_vec"), _MAX_BATCH_QUERIES, site)
+    if table is None:
+        return None
+    return (
+        table.column("query_id").to_numpy().astype(np.int64),
+        np.array(table.column("query_vec").to_pylist(), dtype=np.float64),
+    )
+
+
+def _no_hits(spark) -> DataFrame:
+    """The k-NN result of an empty query side."""
+    return spark.createDataFrame([], _RESULT_SCHEMA)
+
+
 def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
     *,
     metric: str = "euclidean",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     impl: str = "batch",
-    round_to: int | None = 6,
 ) -> DataFrame:
-    """Exact k nearest corpus rows per query row.
-
-    Returns columns ``(query_id, neighbor_id, dist, rank)``. The corpus
-    side is never collected and may be arbitrarily large. The query side
-    is size-routed (``vector_db_spark.route``): past ``_MAX_BATCH_QUERIES``
-    rows either impl runs the distributed join WITHOUT a broadcast hint
-    (Catalyst/AQE pick the strategy).
+    """Exact k nearest corpus rows per query row, as the k-NN result
+    contract (``operators/topk.py``). The corpus side is never collected
+    and may be arbitrarily large. The query side is size-routed
+    (``vector_db_spark.route``, site ``knn.queries``): past
+    ``_MAX_BATCH_QUERIES`` rows either impl runs the distributed join
+    WITHOUT a broadcast hint (Catalyst/AQE pick the strategy).
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
@@ -99,55 +120,36 @@ def knn_join(
     # the batch path needs the rows anyway, so its probe is the fetch; the
     # sql path only counts ids instead of shipping vectors it would discard
     if impl == "batch":
-        qrows = route.fetch(
-            queries.select(query_id_col, query_vec_col),
-            _MAX_BATCH_QUERIES,
-            "knn.queries",
-        )
-        small = qrows is not None
-        if not small:
-            impl = "sql"  # query side too big to collect: stay distributed
+        q = _fetch_queries(queries, "knn.queries")
+        if q is not None:
+            if not len(q[0]):
+                return _no_hits(corpus.sparkSession)
+            scored = _batch_score(*q, corpus, k, metric=metric, id_col=id_col, vec_col=vec_col)
+            return nearest_k(scored, k)
+        small = False  # query side too big to collect: stay distributed
     else:
-        qrows = None
-        small = route.fits(
-            queries.select(query_id_col), _MAX_BATCH_QUERIES, "knn.queries"
-        )
-    if impl == "sql":
-        qside = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("__qv"),
-        )
-        if small:
-            qside = F.broadcast(qside)
-        scored = corpus.crossJoin(qside).select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            METRICS[metric](F.col("__qv"), F.col(vec_col)).alias("dist"),
-        )
-    else:
-        scored = _batch_score(
-            qrows, corpus, k,
-            metric=metric,
-            id_col=id_col, vec_col=vec_col, round_to=round_to,
-        )
-
-    # for impl="batch" the rounding is a no-op (the kernel already rounds
-    # before selecting), kept so both impls share one output expression
-    return nearest_k(scored, k, round_to)
+        small = route.fits(queries.select("query_id"), _MAX_BATCH_QUERIES, "knn.queries")
+    qside = queries.select("query_id", "query_vec")
+    if small:
+        qside = F.broadcast(qside)
+    scored = corpus.crossJoin(qside).select(
+        "query_id",
+        F.col(id_col).alias("neighbor_id"),
+        METRICS[metric](F.col("query_vec"), F.col(vec_col)).alias("dist"),
+    )
+    return nearest_k(scored, k)
 
 
-def _partial_topk(
-    dists: np.ndarray, cids: np.ndarray, k: int, round_to: int | None
-) -> tuple[np.ndarray, np.ndarray]:
+def _partial_topk(dists: np.ndarray, cids: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     """Per-query top-k within one batch under the FINAL ordering
-    (rounded dist, neighbor id) — ``(idx (k, q), rounded dists (n, q))``.
+    (dist rounded to ``topk.DECIMALS``, neighbor id) — ``(idx (k, q),
+    rounded dists (n, q))``.
 
     Rounding must happen *before* selection: an unrounded argpartition can
     cut a candidate that ties at the boundary after rounding yet wins the
     id tiebreak globally, making the result depend on partition layout.
     lexsort keys are (secondary=id, primary=dist) per numpy convention."""
-    if round_to is not None:
-        dists = np.round(dists, round_to)
+    dists = np.round(dists, DECIMALS)
     n, nq = dists.shape
     kk = min(k, n)
     # vectorized O(n) cut across ALL queries at once; per-query work below
@@ -168,6 +170,19 @@ def _partial_topk(
     return idx, dists
 
 
+def _topk_frame(qids: np.ndarray, cids: np.ndarray, dists: np.ndarray, k: int) -> pd.DataFrame:
+    """The (query_id, neighbor_id, dist) rows of each query's
+    :func:`_partial_topk` over one batch's (n, q) ``dists``."""
+    idx, dists = _partial_topk(dists, cids, k)
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(qids[None, :], idx.shape[0], axis=0).ravel(),
+            "neighbor_id": cids[idx].ravel(),
+            "dist": np.take_along_axis(dists, idx, axis=0).ravel(),
+        }
+    )
+
+
 def _probe_plan(probes: np.ndarray) -> dict[int, np.ndarray]:
     """An IVF probe plan: cluster id → the ascending row numbers of the
     queries that probe it, from a (q, n_probe) array of probed clusters."""
@@ -180,29 +195,23 @@ def _probe_plan(probes: np.ndarray) -> dict[int, np.ndarray]:
 
 
 def _batch_score(
-    qrows: list,
+    qids: np.ndarray,
+    qmat: np.ndarray,
     corpus: DataFrame,
     k: int,
     *,
     metric: str,
     id_col: str,
     vec_col: str,
-    round_to: int | None = 6,
     probes: np.ndarray | None = None,
 ) -> DataFrame:
-    """Map-side scored + partially-top-k'd (query, neighbor, dist) triples.
-    ``qrows`` is the already-collected (id, vec) query side — the caller's
-    size guard did the bounded fetch.
+    """Map-side scored + partially-top-k'd (query, neighbor, dist) triples
+    of the already-fetched query side (:func:`_fetch_queries`).
 
     ``probes`` is an IVF probe plan: a (q, n_probe) array whose row i holds
-    the clusters ``qrows[i]`` probes. ``corpus`` then carries
-    ``cluster_id``, and each batch scores a cluster's rows only against the
-    queries that probe that cluster (rows of unprobed clusters score
-    against none)."""
-    if not qrows:
-        return corpus.sparkSession.createDataFrame([], _BATCH_SCHEMA)
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
+    the clusters query i probes. ``corpus`` then carries ``cluster_id``,
+    and each batch scores a cluster's rows only against the queries that
+    probe that cluster (rows of unprobed clusters score against none)."""
     plan = None if probes is None else _probe_plan(probes)
     bc = corpus.sparkSession.sparkContext.broadcast((qids, qmat, plan))
     cols = [id_col, vec_col] + ([] if plan is None else ["cluster_id"])
@@ -220,17 +229,8 @@ def _batch_score(
                 cl = pdf["cluster_id"].to_numpy()
                 groups = [(cl == c, plan[c]) for c in np.unique(cl) if c in plan]
             for rows, qs in groups:
-                gids = cids[rows]
                 dists = _numpy_distances(metric, cvecs[rows], mat[qs])  # (n, q)
-                idx, dists = _partial_topk(dists, gids, k, round_to)
-                kk = idx.shape[0]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(ids[qs][None, :], kk, axis=0).ravel(),
-                        "neighbor_id": gids[idx].ravel(),
-                        "dist": np.take_along_axis(dists, idx, axis=0).ravel(),
-                    }
-                )
+                yield _topk_frame(ids[qs], cids[rows], dists, k)
 
     return corpus.select(*cols).mapInPandas(score, _BATCH_SCHEMA)
 
@@ -263,7 +263,6 @@ def adaptive_filtered_knn(
     *,
     allowed_ids: DataFrame,
     n_probe: int = 10,
-    metric: str = "euclidean",
 ) -> DataFrame:
     """Selectivity-adaptive filtered search — the pre-filter/post-filter
     planning decision every production vector store makes, as a library
@@ -281,26 +280,15 @@ def adaptive_filtered_knn(
       (``IVFIndex.search(allowed_ids=...)``) keeps the scan sublinear at
       ANN-grade recall.
 
-    The regime is picked from the actual survivor count — one cheap
-    aggregate over the (already narrow) id column, the same runtime
-    statistic AQE re-plans on. ``_EXACT_MAX_ALLOWED`` is per-cluster-budget
-    shaped: survivors within it cost one bounded batch-kernel pass.
-    Both branches emit identical schemas with rounded-distance/id-tiebreak
-    determinism, so the choice never changes *what* is returned for the
-    selective regime, only how.
+    The regime is picked by a bounded probe of the survivors (route site
+    ``knn.filtered_exact``): at most ``_EXACT_MAX_ALLOWED + 1`` ids are
+    counted, never the whole filter. ``_EXACT_MAX_ALLOWED`` is
+    per-cluster-budget shaped: survivors within it cost one bounded
+    batch-kernel pass. Both branches return the k-NN result contract, so
+    the choice never changes *what* is returned for the selective regime,
+    only how.
     """
-    n_allowed = allowed_ids.count()  # narrow column, cheap aggregate
-    if route.small(n_allowed, _EXACT_MAX_ALLOWED, "knn.filtered_exact"):
+    if route.fits(allowed_ids, _EXACT_MAX_ALLOWED, "knn.filtered_exact"):
         corpus = index.corpus().join(F.broadcast(allowed_ids), index.id_col, "left_semi")
-        return knn_join(
-            queries,
-            corpus,
-            k,
-            metric=metric,
-            id_col=index.id_col,
-            vec_col=index.vec_col,
-            impl="batch",
-        )
-    return index.search(
-        queries, k, n_probe, metric=metric, allowed_ids=allowed_ids
-    )
+        return knn_join(queries, corpus, k, id_col=index.id_col, vec_col=index.vec_col)
+    return index.search(queries, k, n_probe, allowed_ids=allowed_ids)

@@ -104,15 +104,13 @@ class OPQModel:
         *,
         n_chunks: int = 8,
         k: int = 16,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        max_iter: int = 20,
-        seed: int = 42,
     ) -> "OPQModel":
+        """Rotation, then PQ codebooks of the rotated (vec_id, embedding)
+        corpus."""
         import pyarrow as pa
 
-        dim = len(corpus.select(vec_col).first()[0])
-        pca = fit_pca(corpus, vec_col, m=dim)
+        dim = len(corpus.select("embedding").first()[0])
+        pca = fit_pca(corpus, "embedding", m=dim)
         perm = balanced_dim_allocation(pca.explained_var, n_chunks)
         R = np.ascontiguousarray(pca.components[perm])  # (d, d) orthogonal
         write_small_parquet(
@@ -124,18 +122,9 @@ class OPQModel:
                 }
             ),
         )
-        model = cls(spark, path, id_col=id_col, vec_col=vec_col)
-        rotated = model.rotate(corpus)
+        model = cls(spark, path)
         PQModel.train(
-            spark,
-            rotated,
-            os.path.join(path, "pq"),
-            n_chunks=n_chunks,
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            max_iter=max_iter,
-            seed=seed,
+            spark, model.rotate(corpus), os.path.join(path, "pq"), n_chunks=n_chunks, k=k
         )
         return model
 
@@ -167,27 +156,9 @@ class OPQModel:
     def encode(self, df: DataFrame) -> DataFrame:
         return self.pq.encode(self.rotate(df))
 
-    def adc_search(
-        self,
-        queries: DataFrame,
-        codes_df: DataFrame,
-        top_k: int = 5,
-        *,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_vec",
-        round_to: int | None = 6,
-    ) -> DataFrame:
+    def adc_search(self, queries: DataFrame, codes_df: DataFrame, top_k: int = 5) -> DataFrame:
         """ADC k-NN over OPQ codes: rotate the (small) query side, then
         delegate — the codes scan is identical to plain PQ's (ids+codes
         only, m bytes/vector)."""
-        rq = self.rotate(
-            queries.select(query_id_col, query_vec_col), vec_col=query_vec_col
-        )
-        return self.pq.adc_search(
-            rq,
-            codes_df,
-            top_k,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            round_to=round_to,
-        )
+        rq = self.rotate(queries.select("query_id", "query_vec"), vec_col="query_vec")
+        return self.pq.adc_search(rq, codes_df, top_k)

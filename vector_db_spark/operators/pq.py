@@ -14,7 +14,8 @@ inference/pq.py``) Spark-first:
 Plus ADC (asymmetric distance) search, the natural follow-on the reference
 lacks: per query build an (m,k) lookup table of subspace distances, then a
 corpus pass scores each code word by m table gathers — the scan reads only
-the (tiny) code column, never the raw vectors.
+the (tiny) code column, never the raw vectors. The gather is
+:func:`_adc_top`, the one ADC kernel of PQ and IVF-PQ search.
 
 Validation mirrors pq.py:39-46: dimension must divide evenly into chunks.
 """
@@ -31,13 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from vector_db_spark import route
 from vector_db_spark.io import read_small_parquet, write_small_parquet
 from vector_db_spark.operators.kmeans import collect_sample, kmeans_fit
+from vector_db_spark.operators.knn import _BATCH_SCHEMA, _fetch_queries, _no_hits, _topk_frame
 from vector_db_spark.operators.topk import nearest_k
-
-# past this many query rows ADC search builds its LUTs distributed
-_MAX_BATCH_QUERIES = 10_000
 
 
 def encode_chunks(x: np.ndarray, tensor: np.ndarray) -> np.ndarray:
@@ -49,6 +47,28 @@ def encode_chunks(x: np.ndarray, tensor: np.ndarray) -> np.ndarray:
     # (n, m, k) squared distances per subspace, then argmin
     d2 = ((chunks[:, :, None, :] - tensor[None, :, :, :]) ** 2).sum(axis=3)
     return d2.argmin(axis=2).astype(np.int32)
+
+
+def _adc_top(
+    resid: np.ndarray,
+    tensor: np.ndarray,
+    codes: pd.Series,
+    ids: pd.Series,
+    qids: np.ndarray,
+    kk: int,
+) -> pd.DataFrame:
+    """The ADC kernel, shared by PQ and IVF-PQ search: an (m, k_codes)
+    lookup table per query residual (the rows of ``resid``: the query
+    itself for plain PQ, ``q − c`` within IVF-PQ's cluster c), each code
+    row's distance the root of its m summed lookups, then each query's
+    top-``kk`` under the k-NN result order through ``knn._partial_topk``."""
+    m, _, sub = tensor.shape
+    codes = np.array(codes.tolist(), dtype=np.int64)  # (n, m)
+    lut = ((resid.reshape(-1, m, 1, sub) - tensor) ** 2).sum(axis=3)  # (q, m, k_codes)
+    d2 = np.zeros((len(qids), len(codes)))
+    for j in range(m):
+        d2 += lut[:, j, codes[:, j]]
+    return _topk_frame(qids, ids.to_numpy(dtype=np.int64), np.sqrt(d2.T), kk)
 
 
 class PQModel:
@@ -102,12 +122,10 @@ class PQModel:
         *,
         n_chunks: int = 8,
         k: int = 16,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        max_iter: int = 20,
-        seed: int = 42,
     ) -> "PQModel":
-        dim = len(corpus.select(vec_col).first()[0])
+        """Codebooks of a (vec_id, embedding) corpus from one bounded
+        sample."""
+        dim = len(corpus.select("embedding").first()[0])
         if dim % n_chunks != 0:
             raise ValueError(
                 f"embedding dim {dim} not divisible into {n_chunks} chunks"
@@ -117,14 +135,15 @@ class PQModel:
         # reference's ProcessPoolExecutor parallelism collapses into
         # m in-driver numpy fits on slices of the same array); encode /
         # search stay fully distributed against the broadcast tensor
-        x = collect_sample(corpus, vec_col, seed=seed)
+        seed = 42
+        x = collect_sample(corpus, "embedding", seed=seed)
         tensor = np.stack(
             [
-                kmeans_fit(x[:, c * sub : (c + 1) * sub], k, max_iter=max_iter, seed=seed + c)
+                kmeans_fit(x[:, c * sub : (c + 1) * sub], k, seed=seed + c)
                 for c in range(n_chunks)
             ]
         )  # (m, k, sub)
-        model = cls(spark, path, id_col=id_col, vec_col=vec_col)
+        model = cls(spark, path)
         model.write_codebooks(tensor)
         return model
 
@@ -170,95 +189,37 @@ class PQModel:
 
     # -- ADC search -------------------------------------------------------------
 
-    def adc_search(
-        self,
-        queries: DataFrame,
-        codes_df: DataFrame,
-        top_k: int = 5,
-        *,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_vec",
-        round_to: int | None = 6,
-    ) -> DataFrame:
-        """Asymmetric-distance k-NN over PQ codes: per query an (m,k) LUT of
-        subspace squared distances, then each corpus row costs m gathers —
-        the scan touches only ids+codes (m*4 bytes/vector instead of dim*4),
-        which is the point of PQ at 100 TB.
+    def adc_search(self, queries: DataFrame, codes_df: DataFrame, top_k: int = 5) -> DataFrame:
+        """Asymmetric-distance k-NN over PQ codes, as the k-NN result
+        contract (``operators/topk.py``): each corpus row costs m lookups
+        in its query's (m, k) LUT of subspace squared distances — the scan
+        touches only ids+codes (m*4 bytes/vector instead of dim*4), which
+        is the point of PQ at 100 TB.
 
-        The query side is collected and its LUTs broadcast while it is
-        within ``_MAX_BATCH_QUERIES`` rows (``vector_db_spark.route``);
-        past that the search routes to :meth:`_adc_search_join` — LUTs
-        computed distributed per query row, distances via a JVM-side
-        gather join."""
-        qrows = route.fetch(
-            queries.select(query_id_col, query_vec_col),
-            _MAX_BATCH_QUERIES,
-            "pq.queries",
-        )
-        if qrows is None:
-            return self._adc_search_join(
-                queries,
-                codes_df,
-                top_k,
-                query_id_col=query_id_col,
-                query_vec_col=query_vec_col,
-                round_to=round_to,
-            )
-        if not qrows:
-            return codes_df.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, dist double"
-            )
-        tensor = self.codebook_tensor()
-        m, k, sub = tensor.shape
-        qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qmat = np.array([r[1] for r in qrows], dtype=np.float64).reshape(-1, m, sub)
-        # (q, m, k) lookup tables
-        luts = ((qmat[:, :, None, :] - tensor[None, :, :, :]) ** 2).sum(axis=3)
-        bc = self.spark.sparkContext.broadcast((qids, luts))
+        The query side is collected and broadcast while it is within
+        ``knn._MAX_BATCH_QUERIES`` rows (route site ``pq.queries``), and
+        each Arrow batch of codes is scored by :func:`_adc_top`, the ADC
+        kernel IVF-PQ shares, with the query as its residual. Past that the
+        search routes to :meth:`_adc_search_join` — LUTs computed
+        distributed per query row, distances via a JVM-side gather join."""
+        q = _fetch_queries(queries, "pq.queries")
+        if q is None:
+            return self._adc_search_join(queries, codes_df, top_k)
+        if not len(q[0]):
+            return _no_hits(self.spark)
+        bc = self.spark.sparkContext.broadcast((*q, self.codebook_tensor()))
         id_col = self.id_col
-        kk = top_k
-
-        rt = round_to
 
         def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from vector_db_spark.operators.knn import _partial_topk
-
-            ids, tables = bc.value  # (q,), (q, m, k)
+            qids, qmat, t = bc.value
             for pdf in batches:
-                if pdf.empty:
-                    continue
-                codes = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (n, m)
-                cids = pdf[id_col].to_numpy(dtype=np.int64)
-                # dists[n, q] = sum_m tables[q, m, codes[n, m]]
-                gathered = tables[:, np.arange(codes.shape[1])[None, :], codes]  # (q, n, m)
-                dists = np.sqrt(gathered.sum(axis=2)).T  # (n, q)
-                # select under the final (rounded dist, id) order — an
-                # unrounded cut can lose a boundary tie that wins globally
-                idx, dists = _partial_topk(dists, cids, kk, rt)
-                take = idx.shape[0]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(ids[None, :], take, axis=0).ravel(),
-                        "neighbor_id": cids[idx].ravel(),
-                        "dist": np.take_along_axis(dists, idx, axis=0).ravel(),
-                    }
-                )
+                if not pdf.empty:
+                    yield _adc_top(qmat, t, pdf["codes"], pdf[id_col], qids, top_k)
 
-        scored = codes_df.select(id_col, "codes").mapInPandas(
-            score, "query_id long, neighbor_id long, dist double"
-        )
-        return nearest_k(scored, top_k, round_to)
+        scored = codes_df.select(id_col, "codes").mapInPandas(score, _BATCH_SCHEMA)
+        return nearest_k(scored, top_k)
 
-    def _adc_search_join(
-        self,
-        queries: DataFrame,
-        codes_df: DataFrame,
-        top_k: int,
-        *,
-        query_id_col: str = "query_id",
-        query_vec_col: str = "query_vec",
-        round_to: int | None = 6,
-    ) -> DataFrame:
+    def _adc_search_join(self, queries: DataFrame, codes_df: DataFrame, top_k: int) -> DataFrame:
         """Fully distributed ADC: the per-query (m·k) LUT is computed by a
         vectorized Pandas UDF *on the query table* (one Arrow batch per
         partition — never collected), and the corpus scan gathers
@@ -278,10 +239,7 @@ class PQModel:
             luts = ((q[:, :, None, :] - t[None, :, :, :]) ** 2).sum(axis=3)  # (n, m, k)
             return pd.Series(list(luts.reshape(len(vecs), m * k)))
 
-        qside = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            lut_flat(F.col(query_vec_col)).alias("__lut"),
-        )
+        qside = queries.select("query_id", lut_flat(F.col("query_vec")).alias("__lut"))
         dist2 = F.aggregate(
             F.sequence(F.lit(0), F.lit(m - 1)),
             F.lit(0.0),
@@ -295,4 +253,4 @@ class PQModel:
             .crossJoin(qside)
             .select("query_id", "neighbor_id", F.sqrt(dist2).alias("dist"))
         )
-        return nearest_k(scored, top_k, round_to)
+        return nearest_k(scored, top_k)

@@ -28,6 +28,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from vector_db_spark.operators.topk import DECIMALS
+
 _OUT_SCHEMA = (
     "query_id long, neighbor_id long, mmr_rank int, mmr_score double, rel double"
 )
@@ -55,24 +57,14 @@ def _mmr_pick(
     return picked
 
 
-def mmr_rerank(
-    candidates: DataFrame,
-    k: int = 10,
-    *,
-    lam: float = 0.5,
-    query_col: str = "query_id",
-    id_col: str = "neighbor_id",
-    rel_col: str = "rel",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> DataFrame:
+def mmr_rerank(candidates: DataFrame, k: int = 10, *, lam: float = 0.5) -> DataFrame:
     """Diversified top-``k`` per query from a bounded candidate set.
 
-    ``candidates`` columns: (query_col, id_col, rel_col — higher is more
-    relevant, vec_col — candidate embedding). Returns ``(query_id,
+    ``candidates`` columns: (query_id, neighbor_id, rel — higher is more
+    relevant, embedding — the candidate's vector). Returns ``(query_id,
     neighbor_id, mmr_rank, mmr_score, rel)`` with ``mmr_rank`` in pick
-    order (1-based). Candidate-candidate similarity is cosine over
-    ``vec_col``.
+    order (1-based) and scores rounded to ``topk.DECIMALS``.
+    Candidate-candidate similarity is cosine over ``embedding``.
     """
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -80,26 +72,26 @@ def mmr_rerank(
             return pd.DataFrame(
                 columns=["query_id", "neighbor_id", "mmr_rank", "mmr_score", "rel"]
             )
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+        pdf = pdf.sort_values("neighbor_id", kind="mergesort")
+        V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
         norms = np.linalg.norm(V, axis=1, keepdims=True)
         norms[norms == 0.0] = 1.0
         U = V / norms
         sims = U @ U.T
-        rel = pdf[rel_col].to_numpy(dtype=np.float64)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
+        rel = pdf["rel"].to_numpy(dtype=np.float64)
+        ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
         order = _mmr_pick(rel, sims, ids, k, lam)
         red = np.zeros(len(rel))
         rows = []
         for rank, j in enumerate(order, start=1):
-            score = round(lam * rel[j] - (1.0 - lam) * red[j], round_to)
+            score = round(lam * rel[j] - (1.0 - lam) * red[j], DECIMALS)
             rows.append(
                 (
-                    int(pdf[query_col].iloc[0]),
+                    int(pdf["query_id"].iloc[0]),
                     int(ids[j]),
                     rank,
                     score,
-                    round(float(rel[j]), round_to),
+                    round(float(rel[j]), DECIMALS),
                 )
             )
             red = np.maximum(red, np.round(sims[:, j], 9))
@@ -108,7 +100,7 @@ def mmr_rerank(
         )
 
     return (
-        candidates.select(query_col, id_col, rel_col, vec_col)
-        .groupBy(query_col)
+        candidates.select("query_id", "neighbor_id", "rel", "embedding")
+        .groupBy("query_id")
         .applyInPandas(kernel, _OUT_SCHEMA)
     )

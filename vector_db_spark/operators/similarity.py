@@ -20,8 +20,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from vector_db_spark import route
 from vector_db_spark.caching import tracked_cache
-from vector_db_spark.functions.distance import METRICS, dot_product
+from vector_db_spark.functions.distance import dot_product, euclidean
+from vector_db_spark.operators.knn import _MAX_BATCH_QUERIES
 from vector_db_spark.operators.topk import nearest_k
 
 DIM = 64
@@ -304,59 +306,56 @@ def lsh_search(
     corpus: DataFrame,
     k: int = 5,
     *,
-    metric: str = "euclidean",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int | None = 6,
     multiprobe: bool = False,
     n_tables: int = N_TABLES,
     n_bits: int = N_BITS,
 ) -> DataFrame:
-    """ANN top-k within the union of the query's L buckets. With
-    ``multiprobe=True`` each query additionally probes every bucket one
-    bit-flip away in each table (``expand_probe_buckets``) — ~(1+h)× the
-    candidate volume for strictly higher recall, corpus-side storage
-    unchanged.
+    """ANN top-k by euclidean distance within the union of the query's L
+    buckets over a (vec_id, embedding) corpus, as the k-NN result contract
+    (``operators/topk.py``). With ``multiprobe=True`` each query
+    additionally probes every bucket one bit-flip away in each table
+    (``expand_probe_buckets``) — ~(1+h)× the candidate volume for strictly
+    higher recall, corpus-side storage unchanged.
 
     ``n_tables``/``n_bits`` default to the oracle-pinned literals (the
     fixture-scale geometry); at corpus scale pass
     ``derive_lsh_geometry(n)`` — the fixed h=4 measured as
     "unusable by construction" at 200 k vectors (16 buckets/table ⇒
-    ~L·n/16 candidates per query)."""
+    ~L·n/16 candidates per query).
+
+    The query side is broadcast-hinted while it is within
+    ``knn._MAX_BATCH_QUERIES`` rows (route site ``lsh.queries``); past
+    that it joins un-hinted."""
+    hint = (
+        F.broadcast
+        if route.fits(queries, _MAX_BATCH_QUERIES, "lsh.queries")
+        else (lambda d: d)
+    )
     cbuckets = hyperplane_lsh_buckets(
-        corpus, vec_col, id_col, n_tables=n_tables, n_bits=n_bits
+        corpus, "embedding", "vec_id", n_tables=n_tables, n_bits=n_bits
     )
     qbuckets = hyperplane_lsh_buckets(
-        queries, query_vec_col, query_id_col, n_tables=n_tables, n_bits=n_bits
-    ).withColumnRenamed(query_id_col, "query_id")
+        queries, "query_vec", "query_id", n_tables=n_tables, n_bits=n_bits
+    )
     if multiprobe:
         qbuckets = expand_probe_buckets(qbuckets)
     # dedup collisions on bare (query_id, neighbor_id) ids — carrying the
     # query vector through the distinct would shuffle the float arrays as
     # part of the grouping key; the vectors re-attach afterwards (query
-    # side broadcast, corpus side equi-join)
+    # side hinted like the buckets, corpus side equi-join)
     cand_ids = (
-        F.broadcast(qbuckets)
+        hint(qbuckets)
         .join(cbuckets, ["table_idx", "bucket"])
-        .select("query_id", F.col(id_col).alias("neighbor_id"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()  # a pair can collide in several tables
     )
     cand = cand_ids.join(
-        corpus.select(F.col(id_col).alias("neighbor_id"), vec_col), "neighbor_id"
-    ).join(
-        F.broadcast(
-            queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col))
-        ),
-        "query_id",
-    )
+        corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding"), "neighbor_id"
+    ).join(hint(queries.select("query_id", "query_vec")), "query_id")
     scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        METRICS[metric](F.col(query_vec_col), F.col(vec_col)).alias("dist"),
+        "query_id", "neighbor_id", euclidean("query_vec", "embedding").alias("dist")
     )
-    return nearest_k(scored, k, round_to)
+    return nearest_k(scored, k)
 
 
 def sparse_cosine_pairs(

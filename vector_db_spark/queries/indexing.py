@@ -144,7 +144,7 @@ def ivf_det_search(
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(euclidean("query_vec", "embedding"), 6).alias("dist"),
+            euclidean("query_vec", "embedding").alias("dist"),
         )
     )
     return nearest_k(cand, top_k)

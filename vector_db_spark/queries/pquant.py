@@ -146,9 +146,7 @@ def pq_adc_search_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     dists = chunk_dists.groupBy("query_id", "neighbor_id").agg(
-        F.round(
-            F.sqrt(F.sum(F.expr("CAST(sqd AS DECIMAL(18,9))")).cast("double")), 6
-        ).alias("dist")
+        F.sqrt(F.sum(F.expr("CAST(sqd AS DECIMAL(18,9))")).cast("double")).alias("dist")
     )
     return nearest_k(dists, TOP_K)
 

@@ -149,16 +149,25 @@ def bq_hamming_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates. The oracle recomputes the Hamming distance from UNPACKED
     per-dimension sign disagreement - hash equality proves the packed
     popcount path bit-exact."""
-    from vector_db_spark.operators.binquant import bq_search
+    from vector_db_spark.operators.binquant import (
+        binarize_expr,
+        bq_encode,
+        bq_search,
+        hamming_expr,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _BQ_N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = bq_search(emb, queries, TOP_K, dim=64, refine=_BQ_REFINE)
-    return out.select(
-        "query_id", "neighbor_id", "dist", F.col("hamming").cast("long").alias("hamming"),
-        "rank",
+    # a k-NN result carries no Hamming distance: each hit's comes from the
+    # same packed codes the first pass ranked
+    words = bq_encode(emb, dim=64).withColumnRenamed("vec_id", "neighbor_id")
+    qwords = queries.select("query_id", binarize_expr("query_vec", dim=64).alias("__qw"))
+    return out.join(words, "neighbor_id").join(qwords, "query_id").select(
+        "query_id", "neighbor_id", "dist",
+        hamming_expr("words", "__qw").cast("long").alias("hamming"), "rank",
     )
 
 

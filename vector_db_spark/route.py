@@ -4,7 +4,8 @@ Catalyst/AQE plan the joins; the engine only decides whether an input is
 small enough to collect or broadcast-hint, or must take its large-input
 branch. Smallness is probed, never trusted: the probe is
 ``limit(bound + 1)`` (O(bound), never a full count), and a collect-shaped
-probe IS the fetch, so rows are read once. Past the bound the large branch
+probe IS the fetch (:func:`fetch`, one Spark job at most), so rows are
+read once. Past the bound the large branch
 degrades to a longer distributed job instead of a driver OOM or the
 broadcast ceiling. Each bound is a named constant at its call site.
 
@@ -18,7 +19,9 @@ from __future__ import annotations
 import logging
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Row
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 log = logging.getLogger("vector_db_spark.route")
 
@@ -40,10 +43,30 @@ def fits(df: DataFrame, bound: int, site: str) -> bool:
     return small(df.limit(bound + 1).count(), bound, site)
 
 
-def fetch(df: DataFrame, bound: int, site: str) -> list[Row] | None:
-    """The rows of ``df`` when there are at most ``bound``, else None."""
-    rows = df.limit(bound + 1).collect()
-    return rows if small(len(rows), bound, site) else None
+def _is_local(df: DataFrame) -> bool:
+    """True when the optimizer folds ``df`` into a driver-side relation
+    (a pandas-built table, projected or limited, is one): its ``collect``
+    starts no Spark job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def fetch(df: DataFrame, bound: int, site: str) -> pa.Table | None:
+    """The rows of ``df`` as an Arrow table when there are at most
+    ``bound``, else None, in at most one Spark job. ``collect`` of a limit
+    runs Spark's incremental take (one partition, then the rest: two jobs
+    on a multi-partition input), so a plan that is not local is read with
+    ``toArrow``, one job over every partition, and its rows never become
+    Python objects; a local plan is collected with no job."""
+    head = df.limit(bound + 1)
+    if _is_local(head):
+        table = pa.Table.from_pylist(
+            [r.asDict(recursive=True) for r in head.collect()],
+            schema=to_arrow_schema(head.schema),
+        )
+    else:
+        table = head.toArrow()
+    return table if small(table.num_rows, bound, site) else None
 
 
 @contextmanager

@@ -31,7 +31,9 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,11 +62,10 @@ _ARROW_SCHEMA = to_arrow_schema(NODE_SCHEMA)
 
 # past this many id-less rows a batch is numbered distributed
 # (operators/packing.global_row_number) instead of on the driver. The
-# driver holds each row twice, as a Row and in the Arrow table it writes:
-# at 384-d (the real-model embedder) the Row's list of Python floats is
-# 384 × (24 + 8) B ≈ 12 KB and the Arrow copy 384 × 4 B ≈ 1.5 KB, so
-# 10,000 rows are ≈ 140 MB; at the service's 64-d default ≈ 23 MB. Content
-# and metadata strings add their own size on top.
+# driver holds the batch as the Arrow table it fetched and writes: at 384-d
+# (the real-model embedder) 384 × 4 B ≈ 1.5 KB a row, so 10,000 rows are
+# ≈ 15 MB; at the service's 64-d default ≈ 2.6 MB. Content and metadata
+# strings add their own size on top.
 _MAX_DRIVER_ID_BATCH = 10_000
 
 
@@ -212,40 +213,33 @@ class NodeTable:
 
         The batch is materialized once, by an eager local checkpoint: one
         job computes every partition (and its lineage, an embedding UDF),
-        whichever branch runs next. A lazy checkpoint would also compute
-        each partition once, but split over the probe's first take job and
-        the checkpoint's fill job. One bounded fetch (route site
-        ``storage.id_batch``) is the size probe and the read: within
-        ``_MAX_DRIVER_ID_BATCH`` rows they are numbered in fetch order and
-        dimension-checked on the driver, and ``written`` is the one-partition
-        driver-side table that is appended. Larger batches are numbered
-        through ``global_row_number`` (range repartition + per-partition
-        offsets), ordered by a content digest: ties only between identical
-        rows, whose numbering is interchangeable."""
+        whichever branch runs next. One bounded fetch (route site
+        ``storage.id_batch``, one job) is the size probe and the read:
+        within ``_MAX_DRIVER_ID_BATCH`` rows the fetched Arrow table is
+        numbered in fetch order and dimension-checked on the driver, and
+        ``written`` is that one-partition table, which is appended. Larger
+        batches are numbered through ``global_row_number`` (range
+        repartition + per-partition offsets), ordered by a content digest:
+        ties only between identical rows, whose numbering is
+        interchangeable."""
         self._check_columns([c for c in nodes.columns if c != "id"] + ["id"])
         self.recover()
         start = (self._max_id() or 0) + 1  # a max id of 0 gives 1 as well
         batch = nodes.select(
             [F.col(f.name).cast(f.dataType) for f in NODE_SCHEMA.fields if f.name != "id"]
         ).localCheckpoint(eager=True)
-        rows = route.fetch(batch, _MAX_DRIVER_ID_BATCH, "storage.id_batch")
-        if rows is not None:
-            n = len(rows)
-            emb = [r["embedding"] for r in rows]
+        table = route.fetch(batch, _MAX_DRIVER_ID_BATCH, "storage.id_batch")
+        if table is not None:
+            n = table.num_rows
             if self.dim is not None:
-                for i, e in enumerate(emb):
-                    if e is not None and len(e) != self.dim:
-                        raise self._dim_error(start + i, e)
-            table = pa.Table.from_pydict(
-                {
-                    "id": range(start, start + n),
-                    "embedding": emb,
-                    "content": [r["content"] for r in rows],
-                    "metadata": [r["metadata"] for r in rows],
-                },
-                schema=_ARROW_SCHEMA,
-            )
-            written = self.spark.createDataFrame(table, NODE_SCHEMA).coalesce(1)
+                emb = table.column("embedding")
+                # a null embedding has no length to check
+                lens = pc.list_value_length(emb).fill_null(self.dim).to_numpy()
+                bad = np.flatnonzero(lens != self.dim)
+                if bad.size:
+                    raise self._dim_error(start + int(bad[0]), emb[int(bad[0])].as_py())
+            table = table.add_column(0, "id", pa.array(range(start, start + n), pa.int64()))
+            written = self.spark.createDataFrame(table.cast(_ARROW_SCHEMA), NODE_SCHEMA).coalesce(1)
         else:
             from vector_db_spark.operators.packing import global_row_number
 
