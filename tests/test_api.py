@@ -120,21 +120,6 @@ def test_refresh_index_after_drifting_inserts(spark, service):
     assert hits.count() == 3
 
 
-def test_search_diversify_mmr(service):
-    """diversify=λ: same arity contract, MMR pick order, and the first
-    pick stays the pure-relevance winner (λ-weighted greedy degeneracy)."""
-    plain = service.search(["Red Apple"], top_k=2).collect()
-    div = service.search(["Red Apple"], top_k=2, diversify=0.5).collect()
-    assert len(div) == 2
-    assert sorted(r.rank for r in div) == [1, 2]
-    top_plain = [r for r in plain if r.rank == 1][0]
-    top_div = [r for r in div if r.rank == 1][0]
-    assert top_div.id == top_plain.id  # first MMR pick = relevance argmax
-    assert top_div.content == "Red Apple"
-    # distances still true distances (self-match ~0)
-    assert top_div.distance <= 1e-6
-
-
 def test_delete_documents_removes_from_store_and_index(spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -3,8 +3,8 @@ and rendezvous sharding (operators/export.py).
 
 Pins the exactness laws that make the designs work at scale:
 merge(stats(A), stats(B)) == stats(A ∪ B) bit-for-bit (incremental ==
-full recompute), routing against current centroids, and the rendezvous
-minimal-disruption property (moves only to the new shard, ~1/(N+1)).
+full recompute) and the rendezvous minimal-disruption property (moves
+only to the new shard, ~1/(N+1)).
 """
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from __future__ import annotations
 import random
 
 from vector_db_spark.operators.centroid_stats import (
-    assign_batch,
     centroid_stats,
     centroids_from_stats,
     merge_centroid_stats,
@@ -47,17 +46,6 @@ def test_centroid_is_exact_mean(spark):
         for r in centroids_from_stats(centroid_stats(_vecs(spark, rows))).collect()
     }
     assert cents == {(0, 0): 2.0, (0, 1): 4.0, (1, 0): 10.0, (1, 1): 0.0}
-
-
-def test_assign_batch_routes_to_nearest(spark):
-    cents = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [10.0, 10.0])], "cluster_id int, centroid array<double>"
-    )
-    batch = spark.createDataFrame(
-        [(7, [1.0, 1.0]), (8, [9.0, 9.0])], "vec_id long, embedding array<double>"
-    )
-    got = {r.vec_id: r.cluster_id for r in assign_batch(batch, cents).collect()}
-    assert got == {7: 0, 8: 1}
 
 
 def test_empty_batch_update_is_noop(spark):

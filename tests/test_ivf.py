@@ -238,6 +238,42 @@ def test_driver_probes_match_sql_probe_join(spark, sf_smoke, index, force_large,
     assert sorted(map(tuple, routed.collect())) == fast and len(fast) == 40
 
 
+def test_centroid_rankings_break_rounding_ties_by_cluster_id(spark, force_large):
+    """Every centroid ranking orders by (distance rounded to
+    ``topk.DECIMALS``, cluster_id). Cluster 1 sits 1e-8 nearer the origin
+    than cluster 0, so the two distances round equal and cluster 0 wins:
+    in both size forms of ``assign_to_centroids``, in ``rank_probes`` and
+    in the SQL probe ranking. A vector clearly nearest cluster 2 goes
+    there."""
+    from vector_db_spark.operators.ivf import assign_to_centroids, probe_search
+
+    cents = np.array([[1.0, 0.0], [1.0 - 1e-8, 0.0], [10.0, 10.0]])
+    want = {7: 0, 8: 2}
+
+    def assign(dim):  # past 65,536 centroid floats the broadcast form runs
+        pad = [0.0] * (dim - 2)
+        vecs = spark.createDataFrame(
+            [(7, [0.0, 0.0] + pad), (8, [9.0, 9.0] + pad)], "vec_id long, embedding array<double>"
+        )
+        got = assign_to_centroids(vecs, [(c, list(v) + pad) for c, v in enumerate(cents)])
+        return {r.vec_id: r.cluster_id for r in got.collect()}
+
+    assert assign(2) == want and assign(65536 // 3 + 1) == want
+    ranked = IVFIndex.rank_probes(cents, np.array([[0.0, 0.0], [9.0, 9.0]]), 1)
+    assert ranked[:, 0].tolist() == [0, 2]
+
+    # one corpus row per cluster: with n_probe=1 the hit names the probe
+    corpus = spark.createDataFrame(
+        [(c, [5.0, 0.0], c) for c in range(3)],
+        "vec_id long, embedding array<double>, cluster_id int",
+    )
+    queries = spark.createDataFrame([(0, [0.0, 0.0])], "query_id long, query_vec array<double>")
+    hits = [tuple(r) for r in probe_search(queries, corpus, cents, 1, 1).collect()]
+    with force_large("ivf.probe"):
+        routed = probe_search(queries, corpus, cents, 1, 1)
+    assert [tuple(r) for r in routed.collect()] == hits == [(0, 0, 5.0, 1)]
+
+
 def test_derive_k_rule():
     """Corpus-derived cluster count: 4*sqrt(n) capped by the 39-points-
     per-centroid training floor; monotone in n; >=1 always."""

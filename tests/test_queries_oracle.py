@@ -5,6 +5,8 @@ the rest of ``bench.py``'s headline rows, under the same oracle discipline."""
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 import pytest
 
 from bench import HEADLINE
@@ -39,9 +41,22 @@ def test_extra_tier_is_benched():
     assert sorted(set(EXTRA_QUERIES) - set(HEADLINE)) == []
 
 
-@pytest.mark.parametrize("name", sorted(ALL_ORACLES))
-def test_oracle_parity(spark, sf_correctness, con, name):
-    df = ALL_QUERIES[name](spark, sf_correctness)
+# queries also checked with route sites pinned to their large branch: the
+# route must not change the result
+FORCED = {
+    "ivf_search_det": ("ivf.probe",),
+    "ivf_search_cosine_det": ("ivf.probe",),
+}
+
+
+@pytest.mark.parametrize(
+    "name, sites",
+    [pytest.param(n, (), id=n) for n in sorted(ALL_ORACLES)]
+    + [pytest.param(n, s, id=f"{n}@{','.join(s)}") for n, s in sorted(FORCED.items())],
+)
+def test_oracle_parity(spark, sf_correctness, con, force_large, name, sites):
+    with force_large(*sites) if sites else nullcontext():
+        df = ALL_QUERIES[name](spark, sf_correctness)
     assert_parity(df, con, ALL_ORACLES[name], name)
 
 

@@ -29,9 +29,8 @@ class _Rows:
     def limit(self, k: int) -> "_Rows":
         return _Rows(min(self.n, k), self.actions, self.local)
 
-    def count(self) -> int:
-        self.actions.append("count")
-        return self.n
+    def select(self, *cols) -> "_Rows":
+        return self
 
     def collect(self) -> list[Row]:
         self.actions.append("collect")
@@ -50,9 +49,10 @@ def test_exactly_bound_rows_is_small(spark):
     assert route.fetch(df, 4, "t") is None
 
 
-def test_fetch_is_the_probe(monkeypatch):
+def test_fetch_is_the_probe(spark, monkeypatch):
     """One action per fetch: a local plan is collected, any other plan is
-    read through Arrow (one job, where collect's take runs two)."""
+    read through Arrow (one job, where collect's take runs two). A size
+    probe is the same fetch."""
     monkeypatch.setattr(route, "_is_local", lambda df: df.local)
     for local, action in ((True, "collect"), (False, "toArrow")):
         df = _Rows(3, local=local)
@@ -61,12 +61,13 @@ def test_fetch_is_the_probe(monkeypatch):
         big = _Rows(10, local=local)
         assert route.fetch(big, 3, "t") is None and big.actions == [action]
     counted = _Rows(10)
-    assert not route.fits(counted, 3, "t") and counted.actions == ["count"]
+    assert not route.fits(counted, 3, "t") and counted.actions == ["toArrow"]
 
 
 def test_fetch_is_one_job(spark, jobs_of):
-    """A multi-partition input is fetched in one job, a pandas-built one in
-    none, and both give the rows ``collect`` gives."""
+    """A multi-partition input is fetched, or probed by ``fits``, in one
+    job, a pandas-built one in none, and a fetch gives the rows ``collect``
+    gives."""
     import pandas as pd
 
     spread = spark.range(100, numPartitions=4).selectExpr(
@@ -78,6 +79,8 @@ def test_fetch_is_one_job(spark, jobs_of):
         assert len(jobs) == n_jobs
         want = [r.asDict() for r in df.collect()]
         assert table.equals(pa.Table.from_pylist(want, schema=table.schema))
+        fits, jobs = jobs_of(f"route-fits-{n_jobs}", lambda df=df: route.fits(df, 1000, "t"))
+        assert fits and len(jobs) == n_jobs
 
 
 def test_force_large_pins_every_or_named_sites(spark):
@@ -95,7 +98,8 @@ def test_force_large_pins_every_or_named_sites(spark):
     assert route.small(0, 10, "x")
 
 
-def test_decision_record_names_site_value_bound_choice(caplog):
+def test_decision_record_names_site_value_bound_choice(spark, caplog, monkeypatch):
+    monkeypatch.setattr(route, "_is_local", lambda df: df.local)
     with caplog.at_level(logging.DEBUG, logger="vector_db_spark.route"):
         route.small(7, 5, "s")
         route.fits(_Rows(2), 5, "f")

@@ -142,7 +142,7 @@ def test_streaming_embed_ingest_equals_batch(spark, tmp_path):
 
     def embed_assign(batch):
         emb = embed_column(batch, "text", dim=16)
-        return assign_to_centroids(emb, centers, id_col="doc_id", round_to=6)
+        return assign_to_centroids(emb, centers, id_col="doc_id")
 
     src, sink, ckpt = (str(tmp_path / d) for d in ("src", "sink", "ckpt"))
     ddf.repartition(4).write.parquet(src)

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "vector_db_spark"
@@ -268,6 +269,10 @@ OPTION_SCOPE = {
     "vector_db_spark.operators.rerank": None,
     "vector_db_spark.operators.topk": None,
     "vector_db_spark.operators.similarity": "lsh_search",
+    "vector_db_spark.api": None,
+    "vector_db_spark.storage": None,
+    "vector_db_spark.operators.kmeans": None,
+    "vector_db_spark.operators.centroid_stats": None,
 }
 
 
@@ -335,3 +340,18 @@ def test_search_options_have_callers():
     assert not bad, "options no caller outside tests sets:\n" + "\n".join(bad)
     stale = sorted(q for q in OPTIONS_ALLOWED if q not in unset)
     assert not stale, f"option allowlist entries that are set elsewhere or gone: {stale}"
+
+
+def test_no_centroid_ranking_outside_ivf():
+    """One mechanism per concern: every ranking of vectors against a
+    broadcast centroid table (a cross join of one) lives in
+    ``operators/ivf.py``, under its one centroid order."""
+    ranking = re.compile(r"\.crossJoin\(\s*F\.broadcast\(\s*[\w.]*cent")
+    offenders = [
+        f"{f.relative_to(ROOT)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for f in sorted(PACKAGE.rglob("*.py"))
+        if f != PACKAGE / "operators" / "ivf.py"
+        for text in [f.read_text()]
+        for m in ranking.finditer(text)
+    ]
+    assert offenders == []

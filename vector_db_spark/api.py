@@ -9,7 +9,7 @@ boundaries):
 | reference endpoint | here |
 |---|---|
 | ``POST /embed`` insert (app.py:119-160): embed → next id → storage save → incremental index insert | :meth:`insert_documents`: embed UDF → ``NodeTable.append_with_ids`` (next id from the Parquet footers; the batch fetched once to the driver, numbered and dimension-checked there, and appended as one file) → the written rows centroid-assigned and appended to the IVF corpus |
-| ``POST /search`` (app.py:165-233): embed query → metadata filter → ANN search → format | :meth:`search`: embed → Catalyst predicate filter (pushed down, not post-hoc like the reference's hnsw filter_ids) → IVF n_probe search (or exact brute force) → join content/metadata |
+| ``POST /search`` (app.py:165-233): embed query → metadata filter → ANN search → format | :meth:`search`: embed → Catalyst predicate filter (pushed down, not post-hoc like the reference's hnsw filter_ids) → IVF n_probe search (exact brute force while no index exists) → join content/metadata |
 | ``GET /health`` (app.py:107-116) | :meth:`health` |
 | service startup / index load-on-start (app.py:42-101, L3) | the constructor — index state is Parquet, read per request (the centroid file on the driver, the corpus by ``spark.read`` with its fixed schema) |
 
@@ -125,34 +125,26 @@ class VectorDBService:
         *,
         metadata_filter: dict[str, str] | None = None,
         n_probe: int = 10,
-        exact: bool = False,
-        diversify: float | None = None,
     ) -> DataFrame:
         """Returns (query_id, id, content, metadata, distance, rank) — the
         reference's response rows (app.py:214-227). ``query_id`` indexes
         into ``query_texts``. Filter semantics are the reference's F1+F2:
-        every metadata pair must match, applied BEFORE the search.
-
-        ``diversify`` (extension beyond the reference): an MMR λ in
-        (0, 1] — the first pass over-fetches 4×k candidates and a greedy
-        maximal-marginal-relevance pass picks the final k, trading
-        relevance against novelty (operators/rerank.py). ``rank`` is then
-        the MMR pick order and ``distance`` still the true distance."""
+        every metadata pair must match, applied BEFORE the search. With no
+        index the search is exact (brute force over the filtered store)."""
         queries = self.spark.createDataFrame(
             [(i, t) for i, t in enumerate(query_texts)], "query_id long, content string"
         ).withColumn("query_vec", self.embedder(F.col("content"))).select(
             "query_id", "query_vec"
         )
-        fetch_k = top_k if diversify is None else 4 * top_k
         corpus = (
             self.nodes.filter_by_metadata(metadata_filter)
             if metadata_filter
             else self.nodes.df()
         )
         idx = self._index()
-        if exact or idx is None:
+        if idx is None:
             hits = knn_join(
-                queries, corpus.select("id", "embedding"), fetch_k,
+                queries, corpus.select("id", "embedding"), top_k,
                 id_col="id", vec_col="embedding", impl="batch",
             )
         elif metadata_filter:
@@ -166,26 +158,10 @@ class VectorDBService:
             from vector_db_spark.operators.knn import adaptive_filtered_knn
 
             hits = adaptive_filtered_knn(
-                queries, idx, fetch_k, allowed_ids=corpus.select("id"), n_probe=n_probe
+                queries, idx, top_k, allowed_ids=corpus.select("id"), n_probe=n_probe
             )
         else:
-            hits = idx.search(queries, fetch_k, n_probe)
-        if diversify is not None:
-            from vector_db_spark.operators.rerank import mmr_rerank
-
-            cands = hits.join(
-                self.nodes.df().select(F.col("id").alias("neighbor_id"), "embedding"),
-                "neighbor_id",
-            ).select(
-                "query_id", "neighbor_id", "dist",
-                (1.0 / (1.0 + F.col("dist"))).alias("rel"), "embedding",
-            )
-            picked = mmr_rerank(cands, top_k, lam=diversify)
-            hits = picked.join(
-                cands.select("query_id", "neighbor_id", "dist"),
-                ["query_id", "neighbor_id"],
-            ).select("query_id", "neighbor_id", "dist",
-                     F.col("mmr_rank").alias("rank"))
+            hits = idx.search(queries, top_k, n_probe)
         return (
             hits.withColumnRenamed("neighbor_id", "id")
             .join(self.nodes.df().select("id", "content", "metadata"), "id")

@@ -17,8 +17,10 @@ statistics with DECIMAL sums, and the centroid is the derived ratio.
   sum over stats rows only — the same design point as the HLL/CMS/KMV
   segment sketches.
 - The update assigns new vectors against the CURRENT centroids (the
-  reference's add semantics) and then folds them in; both steps are
-  plain SQL, which the registry oracle reproduces end to end.
+  reference's add semantics) with ``ivf.assign_to_centroids``, the
+  package's one nearest-centroid rule, and then folds them in: the
+  stats are plain SQL aggregations, which the registry oracle reproduces
+  end to end.
 
 At 100 TB: stats maintenance is one map-side aggregation per batch over
 the batch only; centroid derivation touches k×dim rows. Re-clustering
@@ -29,29 +31,23 @@ open.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from vector_db_spark.functions.distance import euclidean
 
 _SUM_DEC = "decimal(28,9)"
 
 
-def centroid_stats(
-    assigned: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    cluster_col: str = "cluster_id",
-) -> DataFrame:
-    """(cluster_id, dim_idx, sum_val DECIMAL, n) from vectors that
-    already carry a cluster assignment — one map-side-combinable
+def centroid_stats(assigned: DataFrame) -> DataFrame:
+    """(cluster_id, dim_idx, sum_val DECIMAL, n) from ``embedding`` vectors
+    that already carry a ``cluster_id`` — one map-side-combinable
     aggregation over the batch."""
     return (
         assigned.select(
-            cluster_col,
-            F.posexplode(F.col(vec_col).cast("array<double>")).alias("dim_idx", "v"),
+            "cluster_id",
+            F.posexplode(F.col("embedding").cast("array<double>")).alias("dim_idx", "v"),
         )
-        .groupBy(cluster_col, "dim_idx")
+        .groupBy("cluster_id", "dim_idx")
         .agg(
             F.sum(F.col("v").cast(_SUM_DEC)).alias("sum_val"),
             F.count("*").alias("n"),
@@ -64,45 +60,29 @@ def merge_centroid_stats(*stats: DataFrame) -> DataFrame:
     out = stats[0]
     for s in stats[1:]:
         out = out.unionByName(s)
-    cluster_col = [c for c in out.columns if c not in ("dim_idx", "sum_val", "n")][0]
-    return out.groupBy(cluster_col, "dim_idx").agg(
+    return out.groupBy("cluster_id", "dim_idx").agg(
         F.sum("sum_val").alias("sum_val"), F.sum("n").alias("n")
     )
 
 
-def centroids_from_stats(stats: DataFrame, *, cluster_col: str = "cluster_id") -> DataFrame:
+def centroids_from_stats(stats: DataFrame) -> DataFrame:
     """(cluster_id, dim_idx, centroid_val): the derived mean — one exact
     decimal division cast to double, identical in any engine."""
     return stats.select(
-        cluster_col,
+        "cluster_id",
         "dim_idx",
         (F.col("sum_val").cast("double") / F.col("n")).alias("centroid_val"),
     )
 
 
-def assign_batch(
-    batch: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign new vectors to the CURRENT centroids (broadcast argmin —
-    the reference's ``add`` routing, reference ivf.py:109-110) so their
-    stats can be folded in. ``centroids`` is ``(cluster_id, centroid
-    array<double>)``; distances rounded to 6dp for cross-engine ties."""
-    scored = batch.select(id_col, vec_col).crossJoin(F.broadcast(centroids)).select(
-        id_col,
-        vec_col,
-        "cluster_id",
-        F.round(euclidean(vec_col, "centroid"), 6).alias("__cd"),
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg(F.min(F.struct("__cd", "cluster_id", vec_col)).alias("__m"))
-        .select(
-            id_col,
-            F.col(f"__m.{vec_col}").alias(vec_col),
-            F.col("__m.cluster_id").alias("cluster_id"),
-        )
-    )
+def collect_centroids(centroids: DataFrame) -> np.ndarray:
+    """The (k, dim) float64 matrix of a :func:`centroids_from_stats`
+    table, row c = cluster c (as ``IVFIndex.centroid_matrix`` gives): one
+    collect of k×dim values. Cluster ids must be 0..k-1."""
+    t = centroids.select("cluster_id", "dim_idx", "centroid_val").toArrow()
+    c, d = (t.column(n).to_numpy().astype(np.int64) for n in ("cluster_id", "dim_idx"))
+    out = np.empty((c.max() + 1, d.max() + 1))
+    if len(c) != out.size:
+        raise ValueError("cluster ids must be 0..k-1, each with every dimension")
+    out[c, d] = t.column("centroid_val").to_numpy()
+    return out

@@ -6,10 +6,18 @@ indexing/ivf.py``) Spark-first:
 | reference                                   | here |
 |---------------------------------------------|------|
 | ``build_index``: scipy ``kmeans2`` + Python inverted lists (ivf.py:49-85) | bounded-sample k-means++/Lloyd (operators.kmeans) + distributed broadcast-argmin assignment; "inverted list" = the corpus written ``partitionBy("cluster_id")`` — probing a cluster IS partition pruning |
-| ``add``: argmin over centroids, append to list (ivf.py:87-117) | broadcast-centroid argmin join → append to the partitioned table |
+| ``add``: argmin over centroids, append to list (ivf.py:87-117) | :func:`assign_to_centroids` (a map-side min over literal (dist, cluster_id) structs; a broadcast cross join past 65,536 centroid floats) → append to the partitioned table |
 | ``delete``: remove id from all lists (ivf.py:119-136) | staged rewrite of only the affected clusters' partitions, swapped in by ``operators/staging.py`` |
-| ``search``: rank centroids, scan n_probe lists, exact top-k (ivf.py:138-199) | probe plan ranked on the driver over the centroid matrix → one corpus scan with a static ``cluster_id IN (probed)`` partition filter → k-NN batch kernel scoring each cluster's rows against the queries that probe it (partial top-k per batch) → global top-k; past ``knn._MAX_BATCH_QUERIES`` query rows, ``probe_join`` (windowed top-n_probe over the broadcast centroid cross join, un-hinted join on ``cluster_id``) and a SQL distance |
+| ``search``: rank centroids, scan n_probe lists, exact top-k (ivf.py:138-199) | :func:`probe_search` over the centroid matrix and a ``cluster_id``-tagged corpus: probe plan ranked on the driver (:meth:`IVFIndex.rank_probes`) → one corpus scan with a static ``cluster_id IN (probed)`` partition filter → k-NN batch kernel scoring each cluster's rows against the queries that probe it (partial top-k per batch) → global top-k; past ``knn._MAX_BATCH_QUERIES`` query rows, :func:`probe_join` (the SQL ranking :func:`nearest_centroids`, un-hinted join on ``cluster_id``) and a SQL distance |
 | pickle persistence (ivf.py:217-241)         | Parquet centroid table (read on the driver) + partitioned corpus (``spark.read`` with its fixed schema) |
+
+One centroid order: every ranking of vectors against centroids in the
+package lives here — :func:`assign_to_centroids` (two size forms),
+:meth:`IVFIndex.rank_probes` (driver) and :func:`nearest_centroids` (SQL,
+behind :func:`probe_join`) — and each orders by distance rounded to
+``topk.DECIMALS``, then the lower cluster_id: the k-NN contract's rule, so
+the driver plan, the forced-large plan and a SQL oracle pick the same
+clusters.
 
 Scale posture (SURVEY.md §7): only the k×dim centroid table and at most
 ``knn._MAX_BATCH_QUERIES`` query rows are ever broadcast/collected; the
@@ -28,10 +36,10 @@ from collections.abc import Iterable, Sequence
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_db_spark.functions.distance import METRICS, euclidean
+from vector_db_spark.functions.distance import METRICS
 from vector_db_spark.io import read_small_parquet, write_clustered, write_small_parquet
 from vector_db_spark.operators.kmeans import DEFAULT_SAMPLE_CAP, train_centroids
 from vector_db_spark.operators.knn import (
@@ -46,7 +54,7 @@ from vector_db_spark.operators.staging import (
     recover_staged,
     write_swap_plan,
 )
-from vector_db_spark.operators.topk import nearest_k, top_k_per_group
+from vector_db_spark.operators.topk import DECIMALS, nearest_k, top_k_per_group
 
 # k-means needs ~this many training points per centroid to place it on
 # signal rather than noise — shared by derive_k's floor and build()'s
@@ -62,56 +70,151 @@ def assign_to_centroids(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int | None = None,
 ) -> DataFrame:
-    """Nearest-centroid assignment (reference ivf.py:109-110 argmin).
+    """Nearest-centroid assignment (reference ivf.py:109-110 argmin) under
+    the one centroid order: distance rounded to ``topk.DECIMALS``, ties to
+    the lower cluster_id.
 
     The centroid table is k×dim — small by definition — so it is inlined
     as a literal array of (dist, cluster_id) structs and the argmin becomes
     ``array_min`` per row: a pure map-side expression, ZERO shuffle. At
     100 TB this is the difference between a narrow stage and shuffling the
-    whole corpus through a window. Ties break on lowest cluster_id via
-    struct ordering, identical to the former (dist, cluster_id) sort.
+    whole corpus through a window. Struct ordering compares the rounded
+    dist, then cluster_id.
 
-    For very large codebooks (k×dim beyond sane codegen size) it falls back
-    to the broadcast-join + min_by form — still one shuffle-free broadcast
-    join plus a groupBy on the (narrow) id.
+    Past 65,536 centroid floats (beyond sane codegen size) it is
+    :func:`nearest_centroids` with n = 1: one broadcast cross join and a
+    window on the id.
 
     ``centroids`` is a ``[(cluster_id, centroid), ...]`` sequence already
     on the driver (the build's fitted centers, or ``enumerate`` over
     :meth:`IVFIndex.centroid_matrix`), so the assignment starts no job."""
-    rows = [(int(c), list(v)) for c, v in centroids]
+    rows = [(int(c), [float(x) for x in v]) for c, v in centroids]
 
-    if sum(len(v) for _, v in rows) <= 65536:
-        # one F.expr over a generated SQL string: a single py4j call no
-        # matter how many centroids (building k Column trees of lambda
-        # expressions costs seconds of driver round-trips)
-        def dist_sql(center) -> str:
-            arr = "array(" + ",".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in center) + ")"
-            d = (
-                f"sqrt(aggregate(zip_with(CAST(`{vec_col}` AS array<double>), {arr}, "
-                "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, v) -> acc + v))"
-            )
-            return f"round({d}, {round_to})" if round_to is not None else d
-
-        structs = ",".join(
-            f"named_struct('dist', {dist_sql(v)}, 'cluster_id', {c})" for c, v in rows
-        )
-        return df.withColumn(
-            "cluster_id", F.expr(f"array_min(array({structs})).cluster_id")
+    if sum(len(v) for _, v in rows) > 65536:
+        return nearest_centroids(
+            df, _centroid_table(df.sparkSession, rows), 1, key=id_col, vec_col=vec_col
         )
 
-    centroids = df.sparkSession.createDataFrame(rows, CENTROID_SCHEMA)
-    dist = euclidean(vec_col, "centroid")
-    if round_to is not None:
-        dist = F.round(dist, round_to)
-    scored = df.crossJoin(F.broadcast(centroids)).withColumn("__dist", dist)
-    w = Window.partitionBy(id_col).orderBy(F.col("__dist").asc(), F.col("cluster_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__dist", "centroid")
+    # one F.expr over a generated SQL string: a single py4j call no matter
+    # how many centroids (building k Column trees of lambda expressions
+    # costs seconds of driver round-trips)
+    def dist_sql(center) -> str:
+        arr = "array(" + ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in center) + ")"
+        return (
+            f"round(sqrt(aggregate(zip_with(CAST(`{vec_col}` AS array<double>), {arr}, "
+            f"(x, y) -> (x - y) * (x - y)), 0.0D, (acc, v) -> acc + v)), {DECIMALS})"
+        )
+
+    structs = ",".join(
+        f"named_struct('dist', {dist_sql(v)}, 'cluster_id', {c})" for c, v in rows
     )
+    return df.withColumn("cluster_id", F.expr(f"array_min(array({structs})).cluster_id"))
+
+
+def _centroid_table(
+    spark: SparkSession, centroids: Iterable[tuple[int, Sequence[float]]]
+) -> DataFrame:
+    """A driver-side ``[(cluster_id, centroid), ...]`` as a centroid table."""
+    return spark.createDataFrame(
+        [(int(c), [float(x) for x in v]) for c, v in centroids], CENTROID_SCHEMA
+    )
+
+
+def nearest_centroids(
+    df: DataFrame,
+    centroids: DataFrame,
+    n: int,
+    *,
+    key: str,
+    vec_col: str,
+    metric: str = "euclidean",
+) -> DataFrame:
+    """The SQL centroid ranking: each row of ``df`` (one per ``key``) once
+    for each of its ``n`` nearest clusters, with their ``cluster_id``.
+    ``centroids`` is a (cluster_id, centroid) table, broadcast into a cross
+    join; the order is the one every ranker here uses, the distance under
+    ``metric`` rounded to ``topk.DECIMALS``, then cluster_id (dot is
+    registered negated, so ascending is nearest under every metric)."""
+    scored = df.crossJoin(F.broadcast(centroids)).withColumn(
+        "__cdist", F.round(METRICS[metric](F.col(vec_col), F.col("centroid")), DECIMALS)
+    )
+    return top_k_per_group(
+        scored, [key], [F.col("__cdist").asc(), F.col("cluster_id").asc()], n
+    ).drop("centroid", "__cdist", "rank")
+
+
+def probe_join(
+    queries: DataFrame,
+    table: DataFrame,
+    centroids: np.ndarray,
+    n_probe: int,
+    *,
+    metric: str = "euclidean",
+) -> DataFrame:
+    """The large-query-side probe: each query's ``n_probe`` nearest
+    clusters (:func:`nearest_centroids` over the (k, dim) ``centroids``),
+    joined to the cluster-partitioned ``table`` on ``cluster_id``.
+    Searches take it only past their ``knn._MAX_BATCH_QUERIES`` route, so
+    the probe table is joined un-hinted (Catalyst/AQE pick the strategy;
+    the scan can still prune dynamically)."""
+    probes = nearest_centroids(
+        queries.select("query_id", "query_vec"),
+        _centroid_table(queries.sparkSession, enumerate(centroids)),
+        n_probe,
+        key="query_id",
+        vec_col="query_vec",
+        metric=metric,
+    )
+    return probes.join(table, "cluster_id")
+
+
+def probe_search(
+    queries: DataFrame,
+    corpus: DataFrame,
+    centroids: np.ndarray,
+    k: int,
+    n_probe: int,
+    *,
+    metric: str = "euclidean",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """n_probe search (ivf.py:170-178) of a ``corpus`` tagged with
+    ``cluster_id`` against the (k, dim) ``centroids`` (row c is cluster c):
+    each query's ``n_probe`` nearest clusters, exact distances over their
+    rows only, then the k-NN result contract (``operators/topk.py``).
+
+    The query side is size-routed (``vector_db_spark.route``, site
+    ``ivf.probe``) by one bounded fetch, which is also the read of the
+    queries. Within ``knn._MAX_BATCH_QUERIES`` rows the probes are ranked
+    on the driver (:meth:`IVFIndex.rank_probes`), the corpus is filtered to
+    ``cluster_id IN (probed clusters)`` — on a partitioned corpus, "only
+    scan the probed inverted lists" as partition pruning — and the k-NN
+    batch kernel scores each cluster's rows against only the queries that
+    probe it, emitting a partial top-k per batch. Past the bound the
+    queries stay distributed: :func:`probe_join` ranks and joins them in
+    SQL and the distance is a SQL expression. Both rank by the one
+    centroid order, so the route never changes the result."""
+    if metric not in METRICS:
+        raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
+    q = _fetch_queries(queries, "ivf.probe")
+    if q is None:
+        scored = probe_join(queries, corpus, centroids, n_probe, metric=metric).select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            METRICS[metric](F.col("query_vec"), F.col(vec_col)).alias("dist"),
+        )
+    elif not len(q[0]):
+        return _no_hits(corpus.sparkSession)
+    else:
+        probes = IVFIndex.rank_probes(centroids, q[1], n_probe, metric)
+        scored = _batch_score(
+            *q,
+            corpus.filter(F.col("cluster_id").isin(np.unique(probes).tolist())),
+            k, metric=metric, id_col=id_col, vec_col=vec_col, probes=probes,
+        )
+    return nearest_k(scored, k)
 
 
 class IVFIndex:
@@ -394,47 +497,21 @@ class IVFIndex:
         metric: str = "euclidean",
         allowed_ids: DataFrame | None = None,
     ) -> DataFrame:
-        """n_probe search (ivf.py:170-178): each query's ``n_probe``
-        nearest clusters, exact distances over their rows only, then the
-        k-NN result contract (``operators/topk.py``).
-
-        The query side is size-routed (``vector_db_spark.route``, site
-        ``ivf.probe``) by one bounded fetch, which is also the read of the
-        queries. Within ``knn._MAX_BATCH_QUERIES`` rows the probes are
-        ranked on the driver (:meth:`rank_probes`), the corpus is read once
-        with a static ``cluster_id IN (probed clusters)`` partition filter
-        — "only scan the probed inverted lists" as partition pruning — and
-        the k-NN batch kernel scores each cluster's rows against only the
-        queries that probe it, emitting a partial top-k per batch. Past the
-        bound the queries stay distributed: :meth:`probe_join` ranks and
-        joins them in SQL and the distance is a SQL expression.
+        """:func:`probe_search` over this index: the centroid matrix read
+        on the driver and the corpus, whose ``cluster_id`` filter is
+        partition pruning.
 
         ``allowed_ids`` (one column named like ``id_col``) pre-filters the
         candidate set — metadata-filtered search (reference F2,
         app.py:184-199) as a semi-join BEFORE distances and top-k, so a
         filtered search still returns k results when k matches exist."""
-        if metric not in METRICS:
-            raise ValueError(f"unknown metric {metric!r}; choose from {sorted(METRICS)}")
-        q = _fetch_queries(queries, "ivf.probe")
         corpus = self.corpus()
         if allowed_ids is not None:
             corpus = corpus.join(allowed_ids, self.id_col, "left_semi")
-        if q is None:
-            scored = self.probe_join(queries, corpus, n_probe, metric=metric).select(
-                "query_id",
-                F.col(self.id_col).alias("neighbor_id"),
-                METRICS[metric](F.col("query_vec"), F.col(self.vec_col)).alias("dist"),
-            )
-        elif not len(q[0]):
-            return _no_hits(self.spark)
-        else:
-            probes = self.rank_probes(self.centroid_matrix(), q[1], n_probe, metric)
-            scored = _batch_score(
-                *q,
-                corpus.filter(F.col("cluster_id").isin(np.unique(probes).tolist())),
-                k, metric=metric, id_col=self.id_col, vec_col=self.vec_col, probes=probes,
-            )
-        return nearest_k(scored, k)
+        return probe_search(
+            queries, corpus, self.centroid_matrix(), k, n_probe,
+            metric=metric, id_col=self.id_col, vec_col=self.vec_col,
+        )
 
     @staticmethod
     def rank_probes(
@@ -442,39 +519,17 @@ class IVFIndex:
     ) -> np.ndarray:
         """(q, n_probe) cluster ids: row i is query i's ``n_probe`` nearest
         clusters, nearest first (ivf.py:170-171's argsort, on the driver).
-        ``centroids`` is :meth:`centroid_matrix` (row c is cluster c), so
-        distance ties go to the lower cluster_id, as in :meth:`probe_join`.
+        ``centroids`` is a (k, dim) matrix whose row c is cluster c, so a
+        stable sort of the rounded distances sends ties to the lower
+        cluster_id: the order of :func:`nearest_centroids`.
 
         Probes are ranked by the SAME metric as final scoring: a euclidean
-        probe under metric="dot" would aim at the L2-nearest centroids
-        while the max-inner-product neighbors live in large-norm clusters
-        far away in L2 — deterministically missing the true top-k whenever
+        probe under metric="dot" would aim at the L2-nearest centroids while
+        the max-inner-product neighbors live in large-norm clusters far away
+        in L2 — deterministically missing the true top-k whenever
         n_probe < n_clusters."""
-        dists = _numpy_distances(metric, centroids, queries)  # (k, q)
+        dists = np.round(_numpy_distances(metric, centroids, queries), DECIMALS)  # (k, q)
         return np.argsort(dists, axis=0, kind="stable")[:n_probe].T
-
-    def probe_join(
-        self, queries: DataFrame, table: DataFrame, n_probe: int, *, metric: str = "euclidean"
-    ) -> DataFrame:
-        """The large-query-side probe: each query's ``n_probe`` nearest
-        clusters as a windowed top-n_probe over the broadcast centroid join
-        (ordered by (distance under ``metric``, cluster_id), the order of
-        :meth:`rank_probes`), joined to the cluster-partitioned ``table`` on
-        ``cluster_id``. Searches take it only past their
-        ``knn._MAX_BATCH_QUERIES`` route, so the probe table is joined
-        un-hinted (Catalyst/AQE pick the strategy; the scan can still prune
-        dynamically). Ranking ascending by METRICS[metric] is
-        nearest-under-that-metric by construction (dot is registered
-        negated)."""
-        probes = top_k_per_group(
-            queries.crossJoin(F.broadcast(self.centroids())).withColumn(
-                "__cdist", METRICS[metric](F.col("query_vec"), F.col("centroid"))
-            ),
-            ["query_id"],
-            [F.col("__cdist").asc(), F.col("cluster_id").asc()],
-            n_probe,
-        ).select("query_id", "query_vec", "cluster_id")
-        return probes.join(table, "cluster_id")
 
     # -- stats (reference ivf.py:201-215) ----------------------------------------
 

@@ -10,8 +10,9 @@ Reused, not copied:
 
 - **coarse layer** — an :class:`~vector_db_spark.operators.ivf.IVFIndex`
   over the same ``<path>``: its ``centroids/`` and ``corpus/`` readers,
-  the probe ranking (``rank_probes`` on the driver, ``probe_join`` past
-  the query-side bound), the one centroid-table writer and the cluster
+  the centroid rankings (``assign_to_centroids``; ``rank_probes`` on the
+  driver, also for the training sample's nearest center; ``probe_join``
+  past the query-side bound), the one centroid-table writer and the cluster
   statistics (``index.ivf.stats()``);
 - **codec** — a :class:`~vector_db_spark.operators.pq.PQModel` over the
   same ``<path>``: the one codebook writer and tensor reader, the one
@@ -59,7 +60,7 @@ from pyspark.sql import functions as F
 
 from vector_db_spark.functions.distance import euclidean
 from vector_db_spark.io import write_clustered
-from vector_db_spark.operators.ivf import IVFIndex, assign_to_centroids
+from vector_db_spark.operators.ivf import IVFIndex, assign_to_centroids, probe_join
 from vector_db_spark.operators.kmeans import (
     DEFAULT_SAMPLE_CAP,
     collect_sample,
@@ -163,8 +164,7 @@ class IVFPQIndex:
         # 2. residual codebooks: the SAME sample re-used — assign each
         #    sampled vector to its center, train per-subspace k-means on the
         #    residuals (no second scan of the corpus)
-        d2 = ((x[:, None, :].astype(np.float64) - centers[None, :, :]) ** 2).sum(axis=2)
-        resid = x.astype(np.float64) - centers[d2.argmin(axis=1)]
+        resid = x.astype(np.float64) - centers[IVFIndex.rank_probes(centers, x, 1)[:, 0]]
         # codebook fits need ~256 training points per centroid (the FAISS
         # heuristic) — cap the per-subspace sample so driver-side training
         # stays O(k_codes), not O(corpus sample)
@@ -219,7 +219,7 @@ class IVFPQIndex:
         clusters)`` partition filter; the ADC kernel
         (``pq._adc_top``) builds each (query, probed cluster) LUT from the
         broadcast queries, centroids and codebooks. Past the bound,
-        :meth:`IVFIndex.probe_join` joins the queries to the codes in SQL
+        ``ivf.probe_join`` joins the queries to the codes in SQL
         and the same kernel builds one LUT per (query, cluster) group of the
         joined rows. Both cut each batch to each query's ADC candidates
         (``refine × k``, or ``k``) by rounded dist and id, the global
@@ -296,7 +296,7 @@ class IVFPQIndex:
     ) -> DataFrame:
         """ADC candidates for a query table too big to collect: the SQL
         probe join, then one LUT per (query, cluster) group of its rows."""
-        cand = self.ivf.probe_join(queries, self.codes(), n_probe)
+        cand = probe_join(queries, self.codes(), cents, n_probe)
         bc = self.spark.sparkContext.broadcast((cents, tensor))
         id_col = self.id_col
 

@@ -9,11 +9,12 @@ data-parallel plan. What a Spark pipeline CAN produce at scale is the
 neighbors.
 
 Construction: every vector joins the groups of its ``n_probe`` nearest
-IVF clusters (multi-probe membership — the cross-cluster bridges that a
-single-cluster build lacks), each group runs an exact in-memory kNN inside
-``applyInPandas`` (group size is bounded by cluster size × n_probe), and a
-final per-vector merge keeps the m nearest across groups. Memory per task
-is (group_size × dim) floats regardless of corpus size.
+IVF clusters (multi-probe membership, ranked by ``ivf.nearest_centroids``
+— the cross-cluster bridges that a single-cluster build lacks), each
+group runs an exact in-memory kNN inside ``applyInPandas`` (group size is
+bounded by cluster size × n_probe), and a final per-vector merge keeps
+the m nearest across groups. Memory per task is (group_size × dim) floats
+regardless of corpus size.
 
 Output schema matches the reference's adjacency shape
 (``InternalNode.neighbors``, hnsw.py:23-28): ``(id, neighbors array<long>)``.
@@ -30,7 +31,7 @@ from pyspark.sql import functions as F
 
 from vector_db_spark import route
 from vector_db_spark.caching import tracked_cache
-from vector_db_spark.functions.distance import euclidean
+from vector_db_spark.operators.ivf import nearest_centroids
 
 
 MAX_GROUP = 4096  # kernel memory ≈ max_group² doubles ≈ 128 MiB — fits a task
@@ -44,14 +45,13 @@ def knn_graph(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cluster_col: str = "cluster_id",
     max_group: int = MAX_GROUP,
     salt_rounds: int = 2,
 ) -> DataFrame:
     """(id, neighbors): each vector's m nearest, exact within the union of
     its n_probe nearest clusters.
 
-    ``corpus`` must carry ``cluster_col`` (an IVF corpus). With
+    ``corpus`` must carry ``cluster_id`` (an IVF corpus). With
     ``centroids`` given, multi-probe membership adds cross-cluster edges;
     without it, a single-cluster build (n_probe forced to 1).
 
@@ -65,22 +65,16 @@ def knn_graph(
     approximate (neighbors found within shared shards only); normal-sized
     clusters are untouched and exact."""
     if centroids is not None and n_probe > 1:
-        scored = corpus.select(id_col, vec_col).crossJoin(F.broadcast(centroids)).withColumn(
-            "__d", euclidean(vec_col, "centroid")
-        )
-        w = Window.partitionBy(id_col).orderBy(F.col("__d").asc(), F.col(cluster_col).asc())
-        member = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n_probe)
-            .select(id_col, vec_col, cluster_col)
+        member = nearest_centroids(
+            corpus.select(id_col, vec_col), centroids, n_probe, key=id_col, vec_col=vec_col
         )
     else:
-        member = corpus.select(id_col, vec_col, cluster_col)
+        member = corpus.select(id_col, vec_col, "cluster_id")
 
     # mega-cluster guard: k-row size table, broadcast back onto members
-    sizes = member.groupBy(cluster_col).agg(F.count("*").alias("__gsz"))
+    sizes = member.groupBy("cluster_id").agg(F.count("*").alias("__gsz"))
     member = (
-        member.join(F.broadcast(sizes), cluster_col)
+        member.join(F.broadcast(sizes), "cluster_id")
         .withColumn(
             "__nsplit",
             F.greatest(F.lit(1), F.ceil(F.col("__gsz") / max_group)).cast("int"),
@@ -96,7 +90,7 @@ def knn_graph(
         .withColumn(
             "__salt", F.pmod(F.xxhash64(F.col(id_col), F.col("__round")), F.col("__nsplit"))
         )
-        .select(id_col, vec_col, cluster_col, "__round", "__salt")
+        .select(id_col, vec_col, "cluster_id", "__round", "__salt")
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -123,7 +117,7 @@ def knn_graph(
         dist = np.take_along_axis(d2, idx, axis=1).ravel()
         return pd.DataFrame({id_col: src, "neighbor_id": dst, "dist": np.sqrt(dist)})
 
-    edges = member.groupBy(cluster_col, "__round", "__salt").applyInPandas(
+    edges = member.groupBy("cluster_id", "__round", "__salt").applyInPandas(
         build, f"{id_col} long, neighbor_id long, dist double"
     )
     # merge across groups: per vector keep the m nearest distinct neighbors

@@ -11,6 +11,11 @@ quantization) takes its queries as ``(query_id, query_vec)`` and returns
 lower ``neighbor_id``. The rounding rule lives here; the batch kernels'
 partial top-k (``knn._partial_topk``) applies the same constant before it
 cuts, so a local cut never drops a row the global order keeps.
+
+The same rule orders centroids: every nearest-centroid ranking
+(``ivf.assign_to_centroids``, ``IVFIndex.rank_probes``,
+``ivf.nearest_centroids``) ranks by distance rounded to ``DECIMALS``, ties
+to the lower ``cluster_id``.
 """
 
 from __future__ import annotations

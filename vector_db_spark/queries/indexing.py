@@ -2,9 +2,11 @@
 
 - **Deterministic variants** (oracle-checked): centroids are per-label mean
   vectors — a clustering both engines compute bit-identically (decimal-exact
-  per-dimension averages). These exercise the *plan shape* of IVF build /
-  assign / n_probe search: explode→aggregate→rebuild, broadcast argmin
-  assignment, probe-pruned candidate join, exact top-k.
+  per-dimension averages). They run the engine's own code: label means
+  from ``operators.centroid_stats``, assignment by
+  ``ivf.assign_to_centroids`` and the probe search ``IVFIndex.search``
+  runs (``ivf.probe_search``), so the oracles check the package's one
+  centroid order.
 - **k-means variants** (invariant-projection oracles + recall tests in
   tests/test_ivf.py): the trainer is the bounded-sample k-means++/Lloyd
   fit (operators.kmeans). No SQL oracle can reproduce the centroids (SURVEY.md §7 risk 2), so
@@ -16,15 +18,26 @@ from __future__ import annotations
 
 import tempfile
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from vector_db_spark.functions.distance import euclidean
+from vector_db_spark.functions.distance import l2_norm
 from vector_db_spark.functions.text import tokens
 from vector_db_spark.caching import tracked_cache
 from vector_db_spark.io import load_table
-from vector_db_spark.operators.ivf import MIN_POINTS_PER_CLUSTER, IVFIndex
-from vector_db_spark.operators.topk import nearest_k, top_k_per_group
+from vector_db_spark.operators.centroid_stats import (
+    centroid_stats,
+    centroids_from_stats,
+    collect_centroids,
+    merge_centroid_stats,
+)
+from vector_db_spark.operators.ivf import (
+    MIN_POINTS_PER_CLUSTER,
+    IVFIndex,
+    assign_to_centroids,
+    probe_search,
+)
 from vector_db_spark.queries import register
 
 DIM = 64
@@ -60,94 +73,39 @@ _ASSIGN_SQL = f"""
 """
 
 
-def _centroids_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(cluster_id, dim_idx, centroid_val): per-label mean, decimal-exact."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return (
-        emb.select(
-            F.col("label").alias("cluster_id"),
-            F.posexplode(F.col("embedding").cast("array<double>")).alias("dim_idx", "v"),
-        )
-        .groupBy("cluster_id", "dim_idx")
-        .agg(
-            (
-                F.sum(F.expr("CAST(v AS DECIMAL(18,9))")).cast("double") / F.count("*")
-            ).alias("centroid_val")
-        )
+def _label_means(vectors: DataFrame) -> DataFrame:
+    """(cluster_id, dim_idx, centroid_val): each ``label``'s mean
+    ``embedding``, decimal-exact (operators.centroid_stats)."""
+    return centroids_from_stats(
+        centroid_stats(vectors.select(F.col("label").alias("cluster_id"), "embedding"))
     )
 
 
-def _centroids_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(cluster_id, centroid array<double>) rebuilt in dimension order."""
-    flat = _centroids_flat(spark, sf_dir)
-    return flat.groupBy("cluster_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim_idx", "centroid_val"))),
-            lambda s: s.centroid_val,
-        ).alias("centroid")
-    )
-
-
-def _assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cluster_id): broadcast-centroid argmin (IVF add path V11)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = _centroids_arrays(spark, sf_dir)
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cluster_id",
-        F.round(euclidean("embedding", "centroid"), 6).alias("cdist"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cdist").asc(), F.col("cluster_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cluster_id")
-    )
+def _label_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
+    """(k, dim) per-label mean matrix of ``embeddings``; row c is label c."""
+    return collect_centroids(_label_means(load_table(spark, sf_dir, "embeddings")))
 
 
 # --- V10 build: the centroid table itself ------------------------------------
 
 @register("ivf_centroids_det", oracle=f"SELECT * FROM ({_CENT_FLAT_SQL})")
 def ivf_centroids_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _centroids_flat(spark, sf_dir)
+    return _label_means(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- V13 n_probe search (+V8 top-k), fully deterministic ------------------------
 
-def ivf_det_search(
-    queries: DataFrame,
-    cents: DataFrame,
-    assign: DataFrame,
-    emb: DataFrame,
-    *,
-    n_probe: int = N_PROBE,
-    top_k: int = TOP_K,
-) -> DataFrame:
-    """The deterministic IVF read path as one plan: probe ranking →
-    cluster-membership join (the partition-pruning join in the persisted
-    index) → exact distance → per-query top-k. Shared by the batch query
-    and the micro-batch serving stream (same answers per batch — commit
-    boundaries don't change search semantics)."""
-    probes = top_k_per_group(
-        queries.crossJoin(F.broadcast(cents)).withColumn(
-            "cdist", F.round(euclidean("query_vec", "centroid"), 6)
-        ),
-        ["query_id"],
-        [F.col("cdist").asc(), F.col("cluster_id").asc()],
-        n_probe,
-    ).select("query_id", "query_vec", "cluster_id")
-
-    cand = (
-        F.broadcast(probes)
-        .join(assign, "cluster_id")
-        .join(emb.select("vec_id", "embedding"), "vec_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            euclidean("query_vec", "embedding").alias("dist"),
-        )
-    )
-    return nearest_k(cand, top_k)
+def _probe_search_det(emb: DataFrame) -> DataFrame:
+    """The deterministic IVF read path over ``emb`` (vec_id, label,
+    embedding): label-mean centroids, nearest-centroid assignment, then the
+    engine's probe search (``ivf.probe_search``) for the first
+    ``N_QUERIES`` vectors."""
+    cents = collect_centroids(_label_means(emb))
+    queries = emb.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    ).filter(F.col("query_id") < N_QUERIES)
+    corpus = assign_to_centroids(emb.select("vec_id", "embedding"), enumerate(cents))
+    return probe_search(queries, corpus, cents, TOP_K, N_PROBE)
 
 
 @register(
@@ -184,13 +142,7 @@ SELECT query_id, neighbor_id, dist, rank::INTEGER AS rank FROM (
 """,
 )
 def ivf_search_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    ).filter(F.col("query_id") < N_QUERIES)
-    return ivf_det_search(
-        queries, _centroids_arrays(spark, sf_dir), _assign(spark, sf_dir), emb
-    )
+    return _probe_search_det(load_table(spark, sf_dir, "embeddings"))
 
 
 # --- k-means variants, oracle-checked by invariant projection -----------------
@@ -485,7 +437,10 @@ def cluster_topic_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Embedding clustering and keyword extraction in one verified plan —
     two aggregations over the exploded token stream, windowed top-k."""
     docs = load_table(spark, sf_dir, "documents")
-    assign = _assign(spark, sf_dir)
+    assign = assign_to_centroids(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+        enumerate(_label_centroids(spark, sf_dir)),
+    )
     toks = (
         docs.join(assign, docs.doc_id == assign.vec_id)
         .select("cluster_id", F.explode(tokens("text")).alias("term"))
@@ -719,46 +674,10 @@ def ivf_search_cosine_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     Distances reported are unit-sphere euclidean (monotone in cosine)."""
     emb = load_table(spark, sf_dir, "embeddings")
     dv = F.col("embedding").cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(F.transform(dv, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
-    nemb = emb.select(
-        "vec_id", "label", F.transform(dv, lambda x: x / norm).alias("embedding")
-    )
-    # deterministic per-label centroids of the NORMALIZED corpus
-    # (decimal-exact per-dim means, same discipline as _centroids_flat)
-    flat = (
-        nemb.select("label", F.posexplode("embedding").alias("dim_idx", "v"))
-        .groupBy(F.col("label").alias("cluster_id"), "dim_idx")
-        .agg(
-            (
-                F.sum(F.col("v").cast("decimal(18,9)")).cast("double") / F.count("*")
-            ).alias("centroid_val")
-        )
-    )
-    cents = flat.groupBy("cluster_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim_idx", "centroid_val"))),
-            lambda s: s.centroid_val,
-        ).alias("centroid")
-    )
-    scored = nemb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cluster_id",
-        F.round(euclidean("embedding", "centroid"), 6).alias("cdist"),
-    )
-    # argmin as a partial-aggregated struct-min (lexicographic (cdist,
-    # cluster_id) == the window's (dist asc, id asc) tie-break) — map-side
-    # combine shrinks the shuffle k-fold vs a per-vec_id window
-    assign = (
-        scored.groupBy("vec_id")
-        .agg(F.min(F.struct("cdist", "cluster_id")).alias("__m"))
-        .select("vec_id", F.col("__m.cluster_id").alias("cluster_id"))
-    )
-    queries = nemb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    ).filter(F.col("query_id") < N_QUERIES)
-    return ivf_det_search(queries, cents, assign, nemb)
+    # the norm is an argument, so it is computed once per row (inside the
+    # lambda it would be recomputed per element)
+    unit = F.zip_with(dv, F.array_repeat(l2_norm(dv), F.size(dv)), lambda x, n: x / n)
+    return _probe_search_det(emb.select("vec_id", "label", unit.alias("embedding")))
 
 
 # --- incremental centroid maintenance (sufficient statistics) ----------------
@@ -810,30 +729,16 @@ def ivf_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf.py:87-117 — which never updates its centroids; this closes that
     drift gap) and folded in. The oracle reproduces stats → centroids →
     assignment → merge end to end; dims 0-5 keep the row count bounded."""
-    from vector_db_spark.operators.centroid_stats import (
-        assign_batch,
-        centroid_stats,
-        centroids_from_stats,
-        merge_centroid_stats,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") % 5 < 4)
     new = emb.filter(F.col("vec_id") % 5 == 4)
     ostats = centroid_stats(
         old.select(F.col("label").alias("cluster_id"), "embedding")
     )
-    ocent = (
-        centroids_from_stats(ostats)
-        .groupBy("cluster_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim_idx", "centroid_val"))),
-                lambda s: s.centroid_val,
-            ).alias("centroid")
-        )
+    ocent = collect_centroids(centroids_from_stats(ostats))
+    nstats = centroid_stats(
+        assign_to_centroids(new.select("vec_id", "embedding"), enumerate(ocent))
     )
-    nstats = centroid_stats(assign_batch(new, ocent))
     merged = merge_centroid_stats(ostats, nstats)
     return (
         centroids_from_stats(merged)

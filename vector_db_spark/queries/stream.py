@@ -14,11 +14,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from vector_db_spark.caching import tracked_cache
 from vector_db_spark.io import load_table
-from vector_db_spark.operators.ivf import assign_to_centroids
+from vector_db_spark.operators.ivf import assign_to_centroids, probe_search
 from vector_db_spark.queries import register
-from vector_db_spark.queries.indexing import _centroids_arrays
+from vector_db_spark.queries.indexing import _label_centroids
 from vector_db_spark.streaming.ingest import (
     first_seen_stream,
     hourly_counts_stream,
@@ -100,7 +99,7 @@ def stream_ingest_cluster_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect the (k × dim) centroid table once — foreachBatch re-executes
     # referenced lineage per micro-batch, and the index state is loaded once
     # in the path this models (reference indexing_service.py:56-67)
-    cents = [(r.cluster_id, r.centroid) for r in _centroids_arrays(spark, sf_dir).collect()]
+    cents = list(enumerate(_label_centroids(spark, sf_dir)))
     work = tempfile.mkdtemp(prefix="ingest_")
     src, sink, ckpt = (os.path.join(work, d) for d in ("src", "sink", "ckpt"))
     emb.select("vec_id", "embedding").repartition(4).write.parquet(src)
@@ -109,7 +108,7 @@ def stream_ingest_cluster_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         src,
         sink,
-        lambda batch: assign_to_centroids(batch, cents, round_to=6),
+        lambda batch: assign_to_centroids(batch, cents),
         schema="vec_id long, embedding array<float>",
         checkpoint_dir=ckpt,
         max_files_per_trigger=1,
@@ -183,15 +182,13 @@ def stream_query_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain batch search over the same queries — serving answers are a pure
     function of (query, index state); commit boundaries change latency,
     never results."""
-    from vector_db_spark.queries.indexing import _assign, ivf_det_search
     from vector_db_spark.streaming.ingest import query_serving_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # static index state, materialized once (foreachBatch re-executes
-    # referenced lineage per micro-batch otherwise)
-    cents = tracked_cache(_centroids_arrays(spark, sf_dir), "q.stream.serve.cents")
-    assign = tracked_cache(_assign(spark, sf_dir), "q.stream.serve.assign")
-    cents.count(), assign.count()
+    # static index state: the (k × dim) centroids on the driver, and the
+    # corpus tagged with its nearest centroid, a map-side expression
+    cents = _label_centroids(spark, sf_dir)
+    corpus = assign_to_centroids(emb.select("vec_id", "embedding"), enumerate(cents))
 
     work = tempfile.mkdtemp(prefix="serve_")
     src, sink, ckpt = (os.path.join(work, d) for d in ("src", "sink", "ckpt"))
@@ -203,9 +200,7 @@ def stream_query_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         src,
         sink,
-        lambda batch: ivf_det_search(
-            batch, cents, assign, emb, n_probe=_SERVE_N_PROBE, top_k=_SERVE_TOP_K
-        ),
+        lambda batch: probe_search(batch, corpus, cents, _SERVE_TOP_K, _SERVE_N_PROBE),
         schema="query_id long, query_vec array<float>",
         checkpoint_dir=ckpt,
         max_files_per_trigger=1,

@@ -3,9 +3,10 @@
 Catalyst/AQE plan the joins; the engine only decides whether an input is
 small enough to collect or broadcast-hint, or must take its large-input
 branch. Smallness is probed, never trusted: the probe is
-``limit(bound + 1)`` (O(bound), never a full count), and a collect-shaped
-probe IS the fetch (:func:`fetch`, one Spark job at most), so rows are
-read once. Past the bound the large branch
+``limit(bound + 1)`` (O(bound), never a full count) read by :func:`fetch`
+in one Spark job at most, none on a local plan. A collect-shaped probe IS
+the fetch, so rows are read once; a size-only probe (:func:`fits`) fetches
+one literal column. Past the bound the large branch
 degrades to a longer distributed job instead of a driver OOM or the
 broadcast ceiling. Each bound is a named constant at its call site.
 
@@ -21,6 +22,7 @@ from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 log = logging.getLogger("vector_db_spark.route")
@@ -39,8 +41,10 @@ def small(n: int, bound: int, site: str) -> bool:
 
 
 def fits(df: DataFrame, bound: int, site: str) -> bool:
-    """True when ``df`` has at most ``bound`` rows (one bounded count)."""
-    return small(df.limit(bound + 1).count(), bound, site)
+    """True when ``df`` has at most ``bound`` rows: :func:`fetch` of a
+    one-literal projection, so one Spark job at most and none on a local
+    plan (a bounded ``count`` runs two either way)."""
+    return fetch(df.select(F.lit(True)), bound, site) is not None
 
 
 def _is_local(df: DataFrame) -> bool:

@@ -238,7 +238,7 @@ def query_serving_stream(
     against the STATIC index state and the (query_id, neighbor_id, dist,
     rank) response rows appended to the results sink. ``search_batch`` is
     a (queries_df) -> hits_df function (e.g. a closure over
-    ``IVFIndex.search`` or the deterministic probe plan).
+    ``IVFIndex.search`` or ``ivf.probe_search``).
 
     The serving contract this encodes: answers are a pure function of
     (query, index state) — micro-batch boundaries change latency, never
